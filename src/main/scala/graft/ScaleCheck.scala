@@ -455,13 +455,7 @@ object ScaleCheck {
     // target/scaleN dir would silently keep the OLD generation's data and
     // the measurement would contradict the documented methodology
     val scaledDir = s"target/scale$scale-g4"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Defaults.localSession(cpus.toInt)
     // surface the per-round convergence log (`graft.cc round=N changed=M
     // ms=T`) — rounds-to-convergence at 1x vs SCALEx is the evidence that
     // the iteration count, not just per-round cost, stays flat
@@ -636,16 +630,10 @@ object StreamScaleCheck {
     // Same semantics, same progress metrics — memoryUsedBytes then
     // reports the RocksDB memtable+cache footprint, not row bytes.
     val provider = sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "hdfs")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", 8) // state stores = stores x partitions
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-    if (provider == "rocksdb") builder.config(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Defaults.localSession(cpus.toInt, 8, // state stores = stores x partitions
+      if (provider != "rocksdb") Map.empty
+      else Map("spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
 
     // time-sliced feed: K equal event-time slices of the SCALEx table,
     // one file each, modification times ascending so the file source

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -10,15 +9,7 @@ object Verify {
     // the driver always passes exactly two args = run everything)
     val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // events.ts is TIMESTAMP_NTZ; queries cast it to (ltz) timestamp,
-      // exact only under a pinned UTC session timezone
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Defaults.localSession(cpus.toInt)
     new java.io.File(outDir).mkdirs()
     // A failing query must be LOUD: round 9's broken gapfill_resample just
     // vanished from the correctness report (125/126 entries, zero failures

@@ -143,54 +143,50 @@ object MaskFunctions {
 
   // --- F4: date masking — whole-day jitter in (-range, +range) ------------
 
-  def maskDate(codec: Codec, passphrase: Array[Byte])(range: Int, deterministic: Boolean, value: Date): Date = {
-    if (value == null) return null
-    require(range > 0, s"mask_date range must be positive, got $range")
-    val offsetDays = (hashLongOf(codec, passphrase, deterministic, value.toString) % range).toInt
-    Date.valueOf(value.toLocalDate.plusDays(offsetDays))
-  }
-
   def maskLocalDate(codec: Codec, passphrase: Array[Byte])(
       range: Int, deterministic: Boolean, value: java.time.LocalDate): java.time.LocalDate = {
     if (value == null) return null
     require(range > 0, s"mask_date range must be positive, got $range")
-    // LocalDate.toString == java.sql.Date.toString (ISO yyyy-MM-dd), so the
-    // hash input — and therefore the jitter — matches the java.sql.Date path.
     val offsetDays = (hashLongOf(codec, passphrase, deterministic, value.toString) % range).toInt
     value.plusDays(offsetDays)
   }
 
   // --- F5: timestamp masking — shifts whole days, preserves time-of-day ---
 
-  /** The hash input for timestamp masking: the UTC wall-clock rendered in
-    * java.sql.Timestamp's format. A bare `value.toString` renders in the
-    * JVM DEFAULT timezone, so two deployments with different default TZs
-    * would hash different strings for the same instant and produce
-    * different "deterministic" masks — breaking cross-system join-key
-    * stability. Routing the UTC LocalDateTime through Timestamp.valueOf
-    * reproduces toString's exact format while pinning the zone: on a
-    * UTC-default JVM (the reference deployment norm and this harness) the
-    * bytes are identical to the old behavior. */
-  private def utcTimestampString(i: java.time.Instant): String =
-    Timestamp.valueOf(java.time.LocalDateTime.ofInstant(i, java.time.ZoneOffset.UTC)).toString
-
-  def maskTimestamp(codec: Codec, passphrase: Array[Byte])(
-      range: Int, deterministic: Boolean, value: Timestamp): Timestamp = {
-    if (value == null) return null
-    require(range > 0, s"mask_timestamp range must be positive, got $range")
-    val offsetDays = (hashLongOf(codec, passphrase, deterministic, utcTimestampString(value.toInstant)) % range).toInt
-    Timestamp.from(value.toInstant.plus(offsetDays.toLong, ChronoUnit.DAYS))
+  /** The hash input for timestamp masking: the UTC wall clock in
+    * java.sql.Timestamp's `toString` format (`yyyy-mm-dd hh:mm:ss.f`, the
+    * fraction without trailing zeros, `.0` when whole), written directly.
+    * Rendering through the JVM DEFAULT timezone instead — `value.toString`,
+    * or `Timestamp.valueOf` on the UTC wall clock, which shifts wall clocks
+    * inside a DST gap of that zone — would make two deployments with
+    * different default TZs hash different strings for the same instant and
+    * produce different "deterministic" masks, breaking cross-system
+    * join-key stability. */
+  private[functions] def utcTimestampString(i: java.time.Instant): String = {
+    val t = java.time.LocalDateTime.ofInstant(i, java.time.ZoneOffset.UTC)
+    def pad(v: Int, width: Int): String = { val d = Integer.toString(v); "0" * (width - d.length) + d }
+    val fraction = pad(t.getNano, 9).reverse.dropWhile(_ == '0').reverse
+    s"${pad(t.getYear, 4)}-${pad(t.getMonthValue, 2)}-${pad(t.getDayOfMonth, 2)} " +
+      s"${pad(t.getHour, 2)}:${pad(t.getMinute, 2)}:${pad(t.getSecond, 2)}.${if (fraction.isEmpty) "0" else fraction}"
   }
 
   def maskInstant(codec: Codec, passphrase: Array[Byte])(
       range: Int, deterministic: Boolean, value: java.time.Instant): java.time.Instant = {
     if (value == null) return null
     require(range > 0, s"mask_timestamp range must be positive, got $range")
-    // same UTC Timestamp rendering as maskTimestamp so outputs agree with
-    // the Timestamp-typed UDF regardless of the session's java8API flag
     val offsetDays = (hashLongOf(codec, passphrase, deterministic, utcTimestampString(value)) % range).toInt
     value.plus(offsetDays.toLong, ChronoUnit.DAYS)
   }
+
+  /** `java.sql` views of [[maskLocalDate]] / [[maskInstant]] for callers
+    * that hold `java.sql` values (the perfbench mask checks); the SQL
+    * functions bind `java.time` values directly. */
+  def maskDate(codec: Codec, passphrase: Array[Byte])(range: Int, deterministic: Boolean, value: Date): Date =
+    if (value == null) null else Date.valueOf(maskLocalDate(codec, passphrase)(range, deterministic, value.toLocalDate))
+
+  def maskTimestamp(codec: Codec, passphrase: Array[Byte])(
+      range: Int, deterministic: Boolean, value: Timestamp): Timestamp =
+    if (value == null) null else Timestamp.from(maskInstant(codec, passphrase)(range, deterministic, value.toInstant))
 
   // --- F6: decimal masking — additive jitter in (-range, +range) ----------
 

@@ -1,7 +1,5 @@
 package graft.functions
 
-import org.apache.spark.sql.SparkSession
-
 import graft.codec.Codec
 
 /** Hash-indexed realistic pseudonymization over localized vocabularies —
@@ -111,19 +109,5 @@ object Vocab {
       12, "abcdefghijklmnopqrstuvwxyz", None, deterministic, value)
     val domain = pick(codec, passphrase)(locale, "free_email", deterministic, value)
     s"$local@$domain"
-  }
-
-  /** Registers:
-    *   mask_name(category STRING, deterministic BOOL, value STRING) -> STRING
-    *   mask_email(deterministic BOOL, value STRING) -> STRING
-    */
-  def register(spark: SparkSession, codec: Codec, passphrase: Array[Byte], locale: String = "en-AU"): Unit = {
-    import org.apache.spark.sql.functions.udf
-    spark.udf.register("mask_name",
-      udf((category: String, deterministic: Boolean, value: String) =>
-        pick(codec, passphrase)(locale, category, deterministic, value)).asNondeterministic())
-    spark.udf.register("mask_email",
-      udf((deterministic: Boolean, value: String) =>
-        maskEmail(codec, passphrase)(deterministic, value, locale)).asNondeterministic())
   }
 }

@@ -24,7 +24,9 @@ class GraftExtensionsSpec extends AnyFunSuite {
       assert(captured.keySet === Set(
         "mask_string", "mask_string_alphabet", "mask_string_alphabet_format",
         "mask_date", "mask_timestamp", "mask_decimal", "mask_name", "mask_email",
-        "mask_fpe", "unmask_fpe", "graft_url_host", "graft_url_domain",
+        "mask_string_det", "mask_date_det", "mask_timestamp_det", "mask_decimal_det",
+        "mask_fpe", "unmask_fpe", "mask_fpe_number", "unmask_fpe_number",
+        "mask_fpe_date", "unmask_fpe_date", "graft_url_host", "graft_url_domain",
         "graft_url_canonical",
         "graft_dot", "graft_simhash64", "graft_quality", "graft_lang",
         "graft_langid", "graft_fingerprint", "graft_hash_bucket",

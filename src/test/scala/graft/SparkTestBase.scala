@@ -4,17 +4,7 @@ import org.apache.spark.sql.SparkSession
 
 /** Shared local SparkSession for suites (one JVM, sequential sbt tests). */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = Defaults.localSession(4, 4, Map("spark.app.name" -> "graft-test"))
 
   /** 64-char test passphrase (any deployment ships its own via env). */
   val passphrase: Array[Byte] = ("graft-test-passphrase-0123456789" * 2).getBytes

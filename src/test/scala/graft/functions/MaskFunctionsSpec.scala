@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.sql.{Date, Timestamp}
+import java.time.{Instant, LocalDate}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -59,28 +59,23 @@ class MaskFunctionsSpec extends AnyFunSuite {
   }
 
   test("mask_date: null-preserving, jitter within (-range, range), deterministic") {
-    val f = MaskFunctions.maskDate(codec, passphrase) _
+    val f = MaskFunctions.maskLocalDate(codec, passphrase) _
     assert(f(14, true, null) === null)
-    val d = Date.valueOf("2016-12-18")
+    val d = LocalDate.parse("2016-12-18")
     val masked = f(14, true, d)
-    val delta = masked.toLocalDate.toEpochDay - d.toLocalDate.toEpochDay
-    assert(math.abs(delta) < 14)
+    assert(math.abs(masked.toEpochDay - d.toEpochDay) < 14)
     assert(f(14, true, d) === masked)
-    // java.time path must agree with the java.sql path
-    val viaLocal = MaskFunctions.maskLocalDate(codec, passphrase)(14, true, d.toLocalDate)
-    assert(viaLocal === masked.toLocalDate)
   }
 
-  test("mask_timestamp: preserves time-of-day, jitter bounded, java8 path agrees") {
-    val f = MaskFunctions.maskTimestamp(codec, passphrase) _
+  test("mask_timestamp: preserves time-of-day, whole-day jitter bounded") {
+    val f = MaskFunctions.maskInstant(codec, passphrase) _
     assert(f(14, true, null) === null)
-    val ts = Timestamp.valueOf("2016-12-18 21:46:54.0")
+    val ts = Instant.parse("2016-12-18T21:46:54Z")
     val masked = f(14, true, ts)
-    val deltaMillis = masked.getTime - ts.getTime
+    val deltaMillis = masked.toEpochMilli - ts.toEpochMilli
     assert(deltaMillis % (24L * 3600 * 1000) === 0, "whole-day shift expected")
     assert(math.abs(deltaMillis / (24L * 3600 * 1000)) < 14)
-    val viaInstant = MaskFunctions.maskInstant(codec, passphrase)(14, true, ts.toInstant)
-    assert(viaInstant === masked.toInstant)
+    assert(f(14, true, ts) === masked)
   }
 
   test("mask_decimal: additive jitter within (-range, range), scale from value") {
@@ -131,22 +126,27 @@ class MaskFunctionsSpec extends AnyFunSuite {
   }
 
   test("timestamp masks are identical under different JVM default timezones") {
-    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2024-03-05T22:30:00Z"))
+    val ts = Instant.parse("2024-03-05T22:30:00Z")
     val saved = java.util.TimeZone.getDefault
     try {
       java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
-      val utc = MaskFunctions.maskTimestamp(codec, passphrase)(30, true, ts)
+      val utc = MaskFunctions.maskInstant(codec, passphrase)(30, true, ts)
       java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("America/New_York"))
-      val ny = MaskFunctions.maskTimestamp(codec, passphrase)(30, true, ts)
+      val ny = MaskFunctions.maskInstant(codec, passphrase)(30, true, ts)
       assert(utc === ny, "same instant must mask identically regardless of JVM default TZ")
+      // a UTC wall clock inside the JVM zone's spring-forward gap
+      val gap = Instant.parse("2024-03-10T02:30:00Z")
+      val nyGap = MaskFunctions.maskInstant(codec, passphrase)(30, true, gap)
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
+      assert(MaskFunctions.maskInstant(codec, passphrase)(30, true, gap) === nyGap)
     } finally java.util.TimeZone.setDefault(saved)
   }
 
   test("non-positive mask ranges fail with a named error, not ArithmeticException") {
-    val ts = java.sql.Timestamp.from(java.time.Instant.parse("2024-03-05T22:30:00Z"))
-    val d = java.sql.Date.valueOf("2024-03-05")
-    intercept[IllegalArgumentException] { MaskFunctions.maskTimestamp(codec, passphrase)(0, true, ts) }
-    intercept[IllegalArgumentException] { MaskFunctions.maskDate(codec, passphrase)(0, true, d) }
+    val ts = Instant.parse("2024-03-05T22:30:00Z")
+    val d = LocalDate.parse("2024-03-05")
+    intercept[IllegalArgumentException] { MaskFunctions.maskInstant(codec, passphrase)(0, true, ts) }
+    intercept[IllegalArgumentException] { MaskFunctions.maskLocalDate(codec, passphrase)(0, true, d) }
     intercept[IllegalArgumentException] {
       MaskFunctions.maskDecimal(codec, passphrase)(java.math.BigDecimal.ZERO, true, new java.math.BigDecimal("1.0"))
     }

@@ -1,6 +1,6 @@
 package graft.functions
 
-import java.sql.{Date, Timestamp}
+import java.time.{Instant, LocalDate}
 
 import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
@@ -40,23 +40,40 @@ class MaskPropertySpec extends AnyFunSuite {
 
   test("mask_date: |offset| < range for any date and range") {
     val g = Gen.zip(
-      Gen.choose(-20000L, 40000L).map(d => Date.valueOf(java.time.LocalDate.ofEpochDay(d))),
+      Gen.choose(-20000L, 40000L).map(LocalDate.ofEpochDay),
       Gen.choose(1, 10000))
     for ((d, range) <- samples(g)) {
-      val m = MaskFunctions.maskDate(codec, passphrase)(range, true, d)
-      val delta = m.toLocalDate.toEpochDay - d.toLocalDate.toEpochDay
+      val m = MaskFunctions.maskLocalDate(codec, passphrase)(range, true, d)
+      val delta = m.toEpochDay - d.toEpochDay
       assert(math.abs(delta) < range, s"date=$d range=$range delta=$delta")
     }
   }
 
   test("mask_timestamp: whole-day shift, |offset| < range") {
-    val g = Gen.zip(Gen.choose(0L, 4102444800000L).map(new Timestamp(_)), Gen.choose(1, 1000))
+    val g = Gen.zip(Gen.choose(0L, 4102444800000L).map(Instant.ofEpochMilli), Gen.choose(1, 1000))
     for ((ts, range) <- samples(g)) {
-      val m = MaskFunctions.maskTimestamp(codec, passphrase)(range, true, ts)
-      val deltaMs = m.getTime - ts.getTime
+      val m = MaskFunctions.maskInstant(codec, passphrase)(range, true, ts)
+      val deltaMs = m.toEpochMilli - ts.toEpochMilli
       assert(deltaMs % 86400000L === 0, s"ts=$ts")
       assert(math.abs(deltaMs / 86400000L) < range, s"ts=$ts range=$range")
     }
+  }
+
+  test("timestamp hash input is java.sql.Timestamp's rendering of the UTC wall clock") {
+    // 0001-01-01 .. 9999-12-31 in micros, plus whole seconds and millis
+    val g = Gen.oneOf(
+      Gen.choose(-62135596800000000L, 253402300799999999L).map(us =>
+        Instant.ofEpochSecond(Math.floorDiv(us, 1000000L), Math.floorMod(us, 1000000L) * 1000L)),
+      Gen.choose(-62135596800L, 253402300799L).map(Instant.ofEpochSecond(_)),
+      Gen.choose(-62135596800000L, 253402300799999L).map(Instant.ofEpochMilli))
+    val saved = java.util.TimeZone.getDefault
+    try {
+      java.util.TimeZone.setDefault(java.util.TimeZone.getTimeZone("UTC"))
+      for (i <- samples(g, 200)) {
+        val viaSql = java.sql.Timestamp.valueOf(java.time.LocalDateTime.ofInstant(i, java.time.ZoneOffset.UTC))
+        assert(MaskFunctions.utcTimestampString(i) === viaSql.toString, s"instant=$i")
+      }
+    } finally java.util.TimeZone.setDefault(saved)
   }
 
   test("mask_decimal: |jitter| < range, deterministic") {

@@ -49,15 +49,10 @@ class VocabSpec extends AnyFunSuite {
       assert(au.indexOf(vAu) === us.indexOf(vUs), s"$cat index routing")
       assert(vAu !== vUs, s"$cat must differ across locales")
     }
-    // registration under en-US routes both UDFs to the en-US lists
-    val spark = SparkTestBase.spark
-    Vocab.register(spark, codec, pp, locale = "en-US")
-    val row = spark.sql(
-      "SELECT mask_name('last_name', true, 'Smith') AS ln, mask_email(true, 'bob@example.com') AS em")
-      .collect()(0)
-    assert(Vocab.list("en-US", "last_name").contains(row.getString(0)))
-    assert(row.getString(1).matches("[a-z]{12}@(aol|outlook|icloud)\\.com"), row.getString(1))
-    Vocab.register(spark, codec, pp) // restore the default for later suites
+    // the en-US locale routes both picks and emails to the en-US lists
+    assert(Vocab.list("en-US", "last_name").contains(p("en-US", "last_name", true, "Smith")))
+    val em = Vocab.maskEmail(codec, pp)(true, "bob@example.com", "en-US")
+    assert(em.matches("[a-z]{12}@(aol|outlook|icloud)\\.com"), em)
   }
 
   test("classpath resource vocab replaces the synthetic list (deployment override)") {
@@ -76,7 +71,7 @@ class VocabSpec extends AnyFunSuite {
 
   test("mask_name / mask_email over SQL") {
     val spark = SparkTestBase.spark
-    Vocab.register(spark, codec, pp)
+    MaskUdfs.register(spark, codec, pp)
     val row = spark.sql(
       """SELECT mask_name('last_name', true, 'Smith') AS ln,
         |       mask_email(true, 'bob@example.com') AS em,

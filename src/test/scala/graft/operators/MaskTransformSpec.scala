@@ -162,7 +162,7 @@ class MaskTransformSpec extends AnyFunSuite {
   test("mask_fpe composes as a metadata treatment (FPE joins the O1/O2 pipeline)") {
     // treatments are SQL templates, so the FF1 function needs NO operator
     // change to ride the metadata-driven masking stage — this pins that
-    graft.functions.Fpe.register(spark, SparkTestBase.passphrase)
+    MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
     val schema = StructType(Seq(
       StructField("pan", StringType, nullable = true,
         mkMeta("mask_fpe('0123456789', 'pan', ${value})"))))
