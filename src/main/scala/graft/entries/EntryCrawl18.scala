@@ -147,7 +147,7 @@ private[graft] trait EntryCrawl18 { this: EntryCore =>
     * ([[graft.operators.Cdc.ingestNovel]]): a day-0 chunk store (ids ≡
     * 0 mod 3), then the FULL corpus re-arrives as a batch and only
     * never-seen chunks are admitted. Plan shape: the batch's distinct
-    * chunk set broadcasts against one partition-pruned store scan —
+    * chunk set broadcasts against one flat store scan —
     * store never shuffles (the [[graft.operators.Frontier]]
     * discipline, bloomless by design: a CAS batch is mostly novel).
     * PINNED-CONTRACT oracle: re-arrived documents must contribute ZERO

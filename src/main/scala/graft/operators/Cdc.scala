@@ -35,7 +35,9 @@ import org.apache.spark.sql.functions._
   *
   * Chunk identity is FNV-1a 64 over the chunk bytes (public domain) —
   * the store key for a chunk-level CAS; collisions only weaken dedup,
-  * never correctness, because a CAS confirm compares bytes.
+  * never correctness, because a CAS confirm compares bytes. The CAS
+  * index ([[writeChunkStore]], [[ingestNovel]]) is a flat parquet file
+  * set of distinct (hash, size) rows.
   *
   * Scale shape: pure per-row kernel (no shuffle, no UDF — the codegen'd
   * [[graft.plans.CdcExpressions]] wraps it); the emitted rows are
@@ -108,47 +110,43 @@ object Cdc {
     h
   }
 
-  /** Number of hash partitions in a chunk store. */
-  val StoreChunks = 64
-
-  /** (hash, size) of a chunk-index frame, distinct by hash, keyed for
-    * the store layout: `part = pmod(hash, 64)` — the same
-    * chunk-partitioned parquet discipline as [[Frontier]]'s url store. */
+  /** (hash, size) of a chunk-index frame, distinct by hash. */
   private def distinctChunks(chunks: DataFrame): DataFrame =
     chunks.select(col("hash").cast("long").as("hash"),
         col("size").cast("long").as("size"))
       .groupBy("hash").agg(max(col("size")).as("size"))
-      .withColumn("part", pmod(col("hash"), lit(StoreChunks.toLong)))
 
-  /** Build the chunk CAS index from a (hash, size) chunk frame — the
-    * store a content-addressed blob store keeps next to its chunk data:
-    * one row per distinct chunk hash, parquet-partitioned by
-    * `pmod(hash, 64)`. (Unlike [[Frontier]] there is no Bloom sidecar:
-    * a frontier probe is mostly NEGATIVE — the bloom short-circuits
-    * store I/O — while a CAS ingest batch is mostly NOVEL chunks whose
-    * confirm join must run anyway, so a prefilter buys one scan it
-    * would spend itself.) */
-  def writeChunkStore(chunks: DataFrame, path: String,
-                      filesPerPartition: Int = 1): Unit =
-    graft.sources.Sinks.writePartitioned(
-      distinctChunks(chunks), path, Seq("part"), filesPerPartition)
+  /** Build or replace the chunk CAS index at `path` from a (hash, size)
+    * chunk frame — the store a content-addressed blob store keeps next to
+    * its chunk data: one row per distinct chunk hash in a flat parquet
+    * file set. Any store already at `path` is replaced, never merged.
+    * The store is not partitioned: an ingest batch of a few hundred
+    * chunks touches every hash bucket anyway, so a layout keyed by hash
+    * prunes nothing and only multiplies files and directory listings.
+    * (Unlike [[Frontier]] there is no Bloom sidecar: a frontier probe is
+    * mostly NEGATIVE — the bloom short-circuits store I/O — while a CAS
+    * ingest batch is mostly NOVEL chunks whose confirm join must run
+    * anyway, so a prefilter buys one scan it would spend itself.) */
+  def writeChunkStore(chunks: DataFrame, path: String): Unit =
+    distinctChunks(chunks).write.mode("overwrite").parquet(path)
 
   /** EXACT novel chunks of a batch against the store, and append them —
     * the per-batch CAS ingest step: only bytes of never-seen chunks are
     * stored/shipped; re-arriving content costs index rows only. Plan
-    * shape: the batch's DISTINCT (hash, size) set BROADCASTS against
-    * ONE store scan (left_anti on (part, hash) — partition-pruned by
-    * the batch's parts); the store is never shuffled, never grouped,
-    * and novelty is exact. Returns the novel (hash, size) frame AFTER
-    * appending it (eagerly materialized — the caller's counts and the
-    * store agree). */
+    * shape: the batch's DISTINCT (hash, size) set BROADCASTS against ONE
+    * full store scan (inner join on hash, then left_anti of the batch
+    * against the hits); the store is never shuffled, never grouped, and
+    * novelty is exact. The novel rows are appended as they are
+    * partitioned, so an append writes at most one file per partition of
+    * the novel set; an all-seen batch writes none. Returns the novel
+    * (hash, size) frame AFTER appending it (eagerly materialized — the
+    * caller's counts and the store agree). */
   def ingestNovel(spark: SparkSession, path: String,
                   batchChunks: DataFrame): DataFrame = {
     val b = distinctChunks(batchChunks)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val store = spark.read.schema("hash LONG, size LONG, part BIGINT").parquet(path)
-    val seen = store.join(broadcast(b.select(col("part"), col("hash"))),
-        Seq("part", "hash"))
+    val store = spark.read.schema("hash LONG, size LONG").parquet(path)
+    val seen = store.join(broadcast(b.select(col("hash"))), Seq("hash"))
       .select(col("hash")).distinct()
     // eager localCheckpoint BEFORE the append: the append refreshes any
     // cache whose plan reads the store path (recacheByPath), which would
@@ -157,19 +155,8 @@ object Cdc {
     // truncates lineage so the novel set is pinned
     val novelExact = b.join(broadcast(seen), Seq("hash"), "left_anti")
       .localCheckpoint(eager = true)
-    // repartition on `part` before the append: a plain partitionBy write
-    // fans every task across every live part value — measured 32 tasks x
-    // 64 parts = ~2048 five-row files per ingest at sf0.1, and the NEXT
-    // ingest's store scan paid the listing+footers (6.0 s -> the file
-    // explosion was the whole cost; guide §6 small-files). After the
-    // shuffle each part's rows sit in one task: <= 64 files per append.
-    // An all-seen batch (novel empty) skips the append job outright —
-    // the store is byte-identical either way.
-    if (!novelExact.isEmpty)
-      novelExact.repartition(col("part"))
-        .write.mode("append").partitionBy("part").parquet(path)
-    Partitioning.releaseAfterUse(
-      novelExact.select(col("hash"), col("size")), b)
+    if (!novelExact.isEmpty) novelExact.write.mode("append").parquet(path)
+    Partitioning.releaseAfterUse(novelExact, b)
   }
 
   /** Static entry point for generated code: array of (offset, size,

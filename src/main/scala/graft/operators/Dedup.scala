@@ -809,7 +809,8 @@ object Dedup {
     * upstream. */
   def addSignatureBatch(path: String, sigs: DataFrame): Unit =
     // chunk layout before the append — one file per chunk dir instead of
-    // one per (task x chunk); same fix as Cdc.ingestNovel / InvertedIndex
+    // one per (task x chunk), so later store scans list and open fewer
+    // small files
     chunked64(sigs).repartition(col("chunk"))
       .write.mode("append").partitionBy("chunk").parquet(path)
 

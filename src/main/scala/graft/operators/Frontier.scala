@@ -169,9 +169,9 @@ object Frontier {
         merged.writeTo(bos)
         writeChunkBloom(spark, path, k, bos.toByteArray)
       }
-      // lay out by chunk before the append (the Cdc.ingestNovel small-files
-      // fix): unpartitioned, every task opened a file per chunk dir it
-      // touched — 32 tasks x 64 chunks of litter per markSeen batch
+      // lay out by chunk before the append: without it every task opens a
+      // file in every chunk dir it touches — up to 32 tasks x 64 chunks of
+      // small files per markSeen batch, which every later probe re-lists
       c.repartition(col("chunk")).write.mode("append").partitionBy("chunk").parquet(path)
     } finally c.unpersist(blocking = false)
   }

@@ -126,7 +126,7 @@ object InvertedIndex {
       // lay out by the partition column before the append: without it every
       // write task opens a file in every bucket dir it touches (32 tasks x
       // up to 64 dirs per batch) and every later store scan pays the
-      // listing — the Cdc.ingestNovel small-files fix applied here
+      // listing and footer reads of those small files
       .repartition(col("tb"))
       .write.mode("append").partitionBy("tb").parquet(path)
     // stats swap via temp-write + rename (advisor r15 #2): mode

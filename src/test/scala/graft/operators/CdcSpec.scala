@@ -81,24 +81,74 @@ class CdcSpec extends AnyFunSuite {
     assert(sizes(bytes(257, 9L)).sum === 257)
   }
 
+  private def withStore[A](body: String => A): A = {
+    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
+      s"cdc_store_spec_${System.nanoTime()}")
+    try body(dir.getAbsolutePath)
+    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+  }
+
+  private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  private def dataFiles(path: String): Int =
+    new java.io.File(path).listFiles().count(_.getName.endsWith(".parquet"))
+
   test("chunk store: exact novelty, append correctness, idempotent re-ingest") {
     import spark.implicits._
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"cdc_store_spec_${System.nanoTime()}").getAbsolutePath
     def frame(hs: (Long, Long)*) = hs.toSeq.toDF("hash", "size")
-    Cdc.writeChunkStore(frame(1L -> 100L, 2L -> 200L, 65L -> 300L), path)
-    // 65 % 64 == 1 % 64: same store partition, distinct hashes must both live
-    val novel = Cdc.ingestNovel(spark, path, frame(2L -> 200L, 3L -> 50L, 129L -> 70L))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    assert(novel.toSeq === Seq(3L -> 50L, 129L -> 70L)) // 2 was seen
-    // re-ingesting the same batch finds nothing: the append landed
-    val again = Cdc.ingestNovel(spark, path, frame(2L -> 200L, 3L -> 50L, 129L -> 70L))
-    assert(again.count() === 0)
-    // the store remains a set: all five distinct hashes, no duplicates
-    val store = spark.read.parquet(path)
-    assert(store.select("hash").distinct().count() === 5)
-    assert(store.count() === 5)
-    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(path))
+    withStore { path =>
+      Cdc.writeChunkStore(frame(1L -> 100L, 2L -> 200L, 65L -> 300L), path)
+      // 65 % 64 == 1 % 64 (and 129 likewise): hashes that collide under a
+      // modular bucketing must still be told apart
+      val novel = sortedRows(Cdc.ingestNovel(spark, path,
+        frame(2L -> 200L, 3L -> 50L, 129L -> 70L)))
+      assert(novel === Seq(3L -> 50L, 129L -> 70L)) // 2 was seen
+      // re-ingesting the same batch finds nothing: the append landed, and
+      // an all-seen batch writes no file
+      val files = dataFiles(path)
+      val again = Cdc.ingestNovel(spark, path, frame(2L -> 200L, 3L -> 50L, 129L -> 70L))
+      assert(again.count() === 0)
+      assert(dataFiles(path) === files)
+      // a flat file set: no partition directories
+      assert(new java.io.File(path).listFiles().forall(!_.isDirectory))
+      // the store remains a set: all five distinct hashes, no duplicates
+      val store = spark.read.parquet(path)
+      assert(store.select("hash").distinct().count() === 5)
+      assert(store.count() === 5)
+    }
+  }
+
+  test("chunk store: writeChunkStore replaces an existing store") {
+    import spark.implicits._
+    withStore { path =>
+      Cdc.writeChunkStore(Seq(1L -> 10L, 2L -> 20L).toDF("hash", "size"), path)
+      Cdc.writeChunkStore(Seq(3L -> 30L).toDF("hash", "size"), path)
+      assert(sortedRows(spark.read.parquet(path)) === Seq(3L -> 30L))
+    }
+  }
+
+  test("chunk store: novel set does not depend on spark.sql.shuffle.partitions") {
+    import spark.implicits._
+    val day0 = (0L until 300L).map(h => (h * 7919L) -> (h % 50)).toDF("hash", "size")
+    val batch = (150L until 600L).flatMap(h => Seq((h * 7919L) -> (h % 50), (h * 7919L) -> 3L))
+      .toDF("hash", "size")
+    val key = "spark.sql.shuffle.partitions"
+    val saved = spark.conf.get(key)
+    def novelAt(partitions: Int): (Seq[(Long, Long)], Seq[(Long, Long)]) =
+      withStore { path =>
+        spark.conf.set(key, partitions.toLong)
+        Cdc.writeChunkStore(day0, path)
+        val novel = sortedRows(Cdc.ingestNovel(spark, path, batch))
+        (novel, sortedRows(spark.read.parquet(path)))
+      }
+    try {
+      val (novel1, store1) = novelAt(1)
+      val (novel8, store8) = novelAt(8)
+      assert(novel1.size === 300)
+      assert(novel1 === novel8)
+      assert(store1 === store8)
+    } finally spark.conf.set(key, saved)
   }
 
   test("expression path: codegen column agrees with the kernel; null-safe") {
