@@ -40,7 +40,7 @@ object ScaleCheck {
     "keyword_tfidf", "label_vote",
     // round-10: the iterative operator — per-round driver synchronization is
     // exactly where super-linear cost would hide (rounds must stay flat,
-    // per-round cost linear); graft.cc round logs are enabled below
+    // per-round cost linear); graft.fixpoint round logs are enabled below
     "dedup_components", "dedup_drop",
     // round-10 operators over the scaled documents table
     "weighted_sample", "fim_transform", "length_buckets",
@@ -456,9 +456,10 @@ object ScaleCheck {
     // the measurement would contradict the documented methodology
     val scaledDir = s"target/scale$scale-g4"
     val spark = Defaults.localSession(cpus.toInt)
-    // surface the per-round convergence log (`graft.cc round=N changed=M
-    // ms=T`) — rounds-to-convergence at 1x vs SCALEx is the evidence that
-    // the iteration count, not just per-round cost, stays flat
+    // surface the per-round convergence log (`graft.fixpoint op=cc
+    // round=N metric=M ms=T`) — rounds-to-convergence at 1x vs SCALEx is
+    // the evidence that the iteration count, not just per-round cost,
+    // stays flat
     org.apache.logging.log4j.core.config.Configurator.setLevel(
       "graft.operators", org.apache.logging.log4j.Level.INFO)
     graft.Defaults.registerAll(spark)

@@ -903,7 +903,7 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
       .select(col("x.vec_id").as("id_a"), col("x.nbr_id").as("id_b"))
       .where(col("id_a") < col("id_b"))
     // unpersist EXPLICITLY, not via releaseAfterUse (advisor r18):
-    // connectedComponentsStar returns a localCheckpoint-truncated frame, so
+    // connectedComponentsStar returns a checkpoint-truncated frame, so
     // the final agg's analyzed plan is an Aggregate over LogicalRDD with no
     // subtree matching the persisted edges — a listener keyed on the result
     // can never fire, and every action that DOES read the edges runs inside

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * against that min table, one distinct — all shuffles EDGE-set-sized,
   * never pair-quadratic; the edge set only shrinks or stays (edges point
   * at minima, duplicates collapse in the distinct). Lineage is truncated
-  * per round (localCheckpoint, same rationale as min-label CC's).
+  * per round by [[Fixpoint]], the driver min-label CC shares.
   *
   * Convergence is verified, not assumed: the loop stops when a full
   * round leaves the edge multiset unchanged (count + anti-join — an
@@ -40,37 +40,24 @@ import org.apache.spark.sql.functions._
   * returns a silently split component. */
 object CcStar {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** (id, component) labels for every node appearing in `pairs`
     * (columns id_a, id_b), component = the component's minimum id.
     *
-    * @param reliableCheckpoint same contract as
-    *        [[Dedup.connectedComponents]]: truncate per-round lineage with
-    *        `checkpoint(true)` against `sparkContext.getCheckpointDir`
-    *        instead of `localCheckpoint`. Local blocks die with their
-    *        executor — fine single-process, but on a real cluster one lost
-    *        executor aborts the whole contraction.
+    * Per-round checkpoints follow [[Fixpoint]]'s policy: reliable when
+    * the context has a checkpoint dir, local otherwise.
+    *
     * @param validate run the three post-convergence labeling checks (no
     *        split edges, one label per node, labels are component minima).
     *        Fail-loud is the DEFAULT — a wrong labeling throws, never
     *        returns — but the checks cost three extra edge/label-sized
     *        joins+aggregates after convergence (~2× the post-convergence
     *        wall at 100 TB edges, SCALING.md cc_star_validate row); a
-    *        caller who has just validated the same pipeline may opt out,
-    *        mirroring how `reliableCheckpoint` is opt-in (verdict r13
-    *        ask #5). Labels are identical either way — the flag skips
-    *        verification, never changes the computation (asserted in
-    *        CcStarSpec). */
+    *        caller who has just validated the same pipeline may opt out
+    *        (verdict r13 ask #5). Labels are identical either way — the
+    *        flag skips verification, never changes the computation
+    *        (asserted in CcStarSpec). */
   def connectedComponentsStar(pairs: DataFrame, maxIter: Int = 30,
-                              reliableCheckpoint: Boolean = false,
                               validate: Boolean = true): DataFrame = {
-    val spark = pairs.sparkSession
-    if (reliableCheckpoint) require(spark.sparkContext.getCheckpointDir.isDefined,
-      "reliableCheckpoint=true needs sparkContext.setCheckpointDir(...) first")
-    def truncate(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
-
     def sym(e: DataFrame): DataFrame =
       e.select(explode(array(
         struct(col("u").as("s"), col("v").as("t")),
@@ -98,40 +85,19 @@ object CcStar {
       smaller.unionByName(self).where(col("u") =!= col("v")).distinct()
     }
 
-    var e = truncate(pairs
+    val e0 = Fixpoint.checkpoint(pairs
       .select(col("id_a").cast("long").as("u"), col("id_b").cast("long").as("v"))
       .where(col("u").isNotNull && col("v").isNotNull && col("u") =!= col("v"))
       .distinct())
-    var iter = 0
-    var converged = false
-    var nCur = e.count()
-    // the round's edge count RIDES the checkpoint materialization as a
-    // CollectMetrics observation (the Convergence.Latched pattern shared
-    // with min-label CC / LPA) — a separate count() job per round doubled
-    // the driver's per-round job count for a number the checkpoint job
-    // already knows
-    val conv = new Convergence.Latched(spark, "ccstar")
-    while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
-      val (next, nNext) = conv.observedRound(
-        obsName => truncate(smallStar(largeStar(e))
-          .observe(obsName, count(lit(1)).as("n_edges"))),
-        df => df.count())
-      // unchanged SET <=> equal counts and no new edge (both frames are
-      // post-distinct sets, so one anti-join direction suffices)
-      val nNew = next.join(e, Seq("u", "v"), "left_anti").count()
-      converged = nNew == 0 && nNext == nCur
-      log.info(s"graft.ccstar round=$iter edges=$nNext newEdges=$nNew " +
-        s"ms=${(System.nanoTime() - t0) / 1000000}")
-      e = next
-      nCur = nNext
-      iter += 1
-    }
-    log.info(s"graft.ccstar converged=$converged rounds=$iter")
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponentsStar did not converge within $maxIter rounds — " +
-        "star contraction is O(log^2 n); hitting this bound means the edge " +
-        "set is not shrinking (inspect graft.ccstar round logs)")
+    // the round's edge count rides the checkpoint job; unchanged SET <=>
+    // equal counts and no new edge (both frames are post-distinct sets, so
+    // one anti-join direction suffices, and it only runs on equal counts)
+    val e = Fixpoint.run("ccstar", e0, maxIter, count(lit(1)), initMetric = e0.count())(
+      cur => smallStar(largeStar(cur))) { (nPrev, nNext, prev, next) =>
+      nNext == nPrev && next.join(prev, Seq("u", "v"), "left_anti").count() == 0
+    }.orThrow("connectedComponentsStar", "star contraction is O(log^2 n); " +
+      "hitting this bound means the edge set is not shrinking (inspect the " +
+      "graft.fixpoint op=ccstar round logs)")
 
     // converged edge set is a star forest (u -> center); centers label
     // themselves
@@ -143,7 +109,7 @@ object CcStar {
     if (!validate) return labelsLazy
     // the label frame feeds all three checks AND the caller — materialize
     // it once instead of replaying the union+distinct per consumer
-    val labels = labelsLazy.localCheckpoint(eager = false)
+    val labels = Fixpoint.checkpoint(labelsLazy, eager = false)
     // the three checks are independent counts over node/edge-sized frames;
     // collecting them as ONE 1-row action (instead of three count() jobs)
     // pays one driver round-trip for all three — same protocol the checks

@@ -15,8 +15,6 @@ import org.apache.spark.sql.functions._
   */
 object Dedup {
 
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
-
   /** Character n-gram shingle set (codegen'd builtins only). */
   private def shingleArr(textCol: String, n: Int): Column =
     // NB sequence(1, 0) DESCENDS in Spark - short texts must yield an empty
@@ -117,34 +115,16 @@ object Dedup {
     *   - rounds 2+ join edges against only the FRONTIER (labels that changed
     *     last round), which shrinks geometrically — a label that stopped
     *     changing can send no new minimum;
-    *   - each round is EXACTLY one job: the eager checkpoint materializes
-    *     the stepped labels, and the convergence signal rides that same job
-    *     as a `Dataset.observe` / CollectMetrics observation
-    *     (`sum(when(changed,1))`) — no per-round count job (the r9 design,
-    *     whose per-job fixed cost dominated CC wall clock), no accumulator
-    *     UDF (the r8 design, which broke whole-stage codegen on the hottest
-    *     projection). Exactly-once per successful action by construction;
-    *   - per-round changed counts, rounds-to-convergence, and per-round
-    *     wall (`graft.cc round=N changed=M ms=T`) are logged so a run that
+    *   - each round is EXACTLY one job: [[Fixpoint]] checkpoints the
+    *     stepped labels eagerly and the changed-label count rides that same
+    *     job as an observed metric;
+    *   - rounds, per-round changed counts and walls are logged
+    *     (`graft.fixpoint op=cc round=N metric=M ms=T`) so a run that
     *     converges slowly is diagnosable from the driver log.
-    *
-    * @param reliableCheckpoint truncate lineage with `checkpoint(true)`
-    *        against `sparkContext.getCheckpointDir` instead of
-    *        `localCheckpoint`. Local checkpoint blocks die with their
-    *        executor — fine single-process, but on a real cluster one lost
-    *        executor aborts the whole iteration, so set a reliable dir. */
-  def connectedComponents(pairs: DataFrame, maxIter: Int = 20,
-                          reliableCheckpoint: Boolean = false): DataFrame = {
+    * Checkpoints are reliable when the context has a checkpoint dir (see
+    * [[Fixpoint]]). */
+  def connectedComponents(pairs: DataFrame, maxIter: Int = 20): DataFrame = {
     val spark = pairs.sparkSession
-    if (reliableCheckpoint) require(spark.sparkContext.getCheckpointDir.isDefined,
-      "reliableCheckpoint=true needs sparkContext.setCheckpointDir(...) first")
-    // checkpoint per round: an iterative self-join DOUBLES the logical plan
-    // each iteration (the step plan contains the previous labels plan twice)
-    // — without lineage truncation the tree grows 2^iters and the driver
-    // OOMs analyzing it. Eager checkpoints cap the plan at one round; local
-    // blocks are reclaimed by the context cleaner.
-    def truncate(df: DataFrame): DataFrame =
-      if (reliableCheckpoint) df.checkpoint(true) else df.localCheckpoint(true)
     // both directions from ONE scan: a union of two selects would compute
     // the (potentially expensive) upstream pair pipeline twice. Pairs arrive
     // deduplicated (unordered, id_a < id_b) from every pair generator here,
@@ -156,47 +136,28 @@ object Dedup {
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .repartition(n, col("dst"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    var labels = truncate(edges.select(col("src").as("id")).distinct()
-      .select(col("id"), col("id").as("component"), lit(true).as("changed")))
-    var iter = 0
-    var converged = false
-    // the convergence signal RIDES the checkpoint materialization as a
-    // CollectMetrics observation read through a latched
-    // QueryExecutionListener — one job per round, no UDF, whole-stage
-    // codegen intact (plumbing shared with LabelProp via [[Convergence]])
-    val conv = new Convergence.Latched(spark, "cc")
-    while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
-      val frontier = labels.where(col("changed")).select(col("id"), col("component"))
-      val msgs = edges.join(frontier, edges("dst") === frontier("id"))
-        .groupBy(col("src")).agg(min(col("component")).as("neighbor_min"))
-      val (stepped, changed) = conv.observedRound(
-        obsName => truncate(labels.join(msgs, labels("id") === msgs("src"), "left")
+    val result = try {
+      val init = Fixpoint.checkpoint(edges.select(col("src").as("id")).distinct()
+        .select(col("id"), col("id").as("component"), lit(true).as("changed")))
+      Fixpoint.run("cc", init, maxIter, count(when(col("changed"), 1))) { labels =>
+        val frontier = labels.where(col("changed")).select(col("id"), col("component"))
+        val msgs = edges.join(frontier, edges("dst") === frontier("id"))
+          .groupBy(col("src")).agg(min(col("component")).as("neighbor_min"))
+        labels.join(msgs, labels("id") === msgs("src"), "left")
           .select(labels("id"),
             least(labels("component"), coalesce(col("neighbor_min"), labels("component"))).as("component"),
             (coalesce(col("neighbor_min"), labels("component")) < labels("component")).as("changed"))
-          // count, not sum: sum over an EMPTY label frame is NULL, which
-          // the helper's null-metric guard would otherwise special-case
-          .observe(obsName, count(when(col("changed"), 1)).as("n_changed"))),
-        df => df.where(col("changed")).count())
-      labels = stepped
-      log.info(s"graft.cc round=$iter changed=$changed ms=${(System.nanoTime() - t0) / 1000000}")
-      converged = changed == 0
-      iter += 1
-    }
-    log.info(s"graft.cc converged=$converged rounds=$iter")
-    edges.unpersist(false)
-    labels = labels.select(col("id"), col("component"))
+      } { (_, changed, _, _) => changed == 0 }
+    } finally edges.unpersist(false)
     // partial labels are WRONG labels: a component wider than maxIter hops
     // would silently split. Near-dup graphs are tiny-diameter, so hitting
     // this means the input is not the pair set this operator is for —
     // deep (path-shaped) graphs belong to [[CcStar.connectedComponentsStar]],
     // whose contraction depth is O(log² n) regardless of diameter.
-    if (!converged) throw new IllegalStateException(
-      s"connectedComponents did not converge within $maxIter rounds - " +
-        "the pair graph has a longer path than expected; raise maxIter, or " +
-        "use CcStar.connectedComponentsStar for deep (high-diameter) graphs")
-    labels
+    result.orThrow("connectedComponents", "the pair graph has a longer path " +
+        "than expected; raise maxIter, or use CcStar.connectedComponentsStar " +
+        "for deep (high-diameter) graphs")
+      .select(col("id"), col("component"))
   }
 
   /** Operational dedup report: the cluster-size histogram of a near-dup

@@ -21,17 +21,15 @@ import org.apache.spark.sql.functions._
   * filtering both endpoints against the node-sized survivor frame, then
   * one repartition restoring the node layout for the next round — the
   * edge list moves at most twice per round and shrinks monotonically.
-  * The convergence signal (live edge count) RIDES the round's eager
-  * checkpoint as a CollectMetrics observation ([[Convergence.Latched]] —
-  * third user of the shared plumbing), so each round is exactly one job.
+  * Rounds run on [[Fixpoint]]: the convergence signal (live edge count)
+  * RIDES the round's eager checkpoint as an observed metric, so each
+  * round is exactly one job.
   * Batch peeling converges in rounds bounded by the peeling-cascade
   * depth, not node count (each round removes every currently
   * sub-threshold node at once); `maxIter` bounds pathological chains
   * LOUDLY, like connectedComponents — a truncated peel is a WRONG core.
   */
 object KCore {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Nodes of the k-core with their within-core degree: (node:long,
     * core_deg:long), empty when no k-core exists. `edges` needs
@@ -41,44 +39,26 @@ object KCore {
   def kcore(edges: DataFrame, k: Int, maxIter: Int = 50): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(maxIter >= 1, "maxIter must be >= 1")
-    val spark = edges.sparkSession
     val e0 = Partitioning.spread(edges.select(
       col("src").cast("long").as("src"), col("dst").cast("long").as("dst")))
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
-    var live = e0.select(col("src").as("node"), col("dst").as("nbr"))
+    val init = Fixpoint.checkpoint(e0.select(col("src").as("node"), col("dst").as("nbr"))
       .union(e0.select(col("dst").as("node"), col("src").as("nbr")))
       .distinct()
-      .repartition(col("node"))
-      .localCheckpoint(eager = true)
+      .repartition(col("node")))
 
-    var prevEdges = -1L
-    var iter = 0
-    var converged = false
-    val conv = new Convergence.Latched(spark, "kcore")
-    while (!converged && iter < maxIter) {
-      val t0 = System.nanoTime()
+    val core = Fixpoint.run("kcore", init, maxIter, count(lit(1))) { live =>
       val keep = live.groupBy(col("node")).agg(count(lit(1)).as("deg"))
         .where(col("deg") >= k).select(col("node"))
-      val (stepped, nLive) = conv.observedRound(
-        obsName => live
-          .join(keep, Seq("node"), "left_semi")
-          .join(keep.withColumnRenamed("node", "nbr"), Seq("nbr"), "left_semi")
-          .select(col("node"), col("nbr"))
-          .repartition(col("node"))
-          .observe(obsName, count(lit(1)).as("n_live"))
-          .localCheckpoint(eager = true),
-        df => df.count())
-      live = stepped
-      iter += 1
-      log.info(s"graft.kcore round=$iter edges=$nLive ms=${(System.nanoTime() - t0) / 1000000}")
-      converged = nLive == prevEdges || nLive == 0L
-      prevEdges = nLive
-    }
-    // a truncated peel silently reports a SUPER-graph of the k-core —
-    // sub-threshold nodes would survive. Fail loudly instead.
-    if (!converged) throw new IllegalStateException(
-      s"kcore did not converge within $maxIter rounds - the peeling cascade " +
-        "is longer than expected; raise maxIter")
-    live.groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
+      live
+        .join(keep, Seq("node"), "left_semi")
+        .join(keep.withColumnRenamed("node", "nbr"), Seq("nbr"), "left_semi")
+        .select(col("node"), col("nbr"))
+        .repartition(col("node"))
+    } { (prevEdges, nLive, _, _) => nLive == prevEdges || nLive == 0L }
+      // a truncated peel silently reports a SUPER-graph of the k-core —
+      // sub-threshold nodes would survive. Fail loudly instead.
+      .orThrow("kcore", "the peeling cascade is longer than expected; raise maxIter")
+    core.groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
   }
 }

@@ -27,11 +27,10 @@ import org.apache.spark.sql.functions._
   * round reuses that layout, so only the node-sized label frame moves),
   * then one (node, label)-keyed count with map-side partial aggregation,
   * then the argmax as a single lexicographic struct max — never a
-  * per-node window sort. Each round eagerly localCheckpoints the
-  * node-sized label frame (the iterative-self-join lineage guard shared
-  * with [[Dedup.connectedComponents]]) and the round's changed-label
-  * count rides that same job as a CollectMetrics observation
-  * ([[Convergence.Latched]]), so the loop EXITS EARLY at a fixed point:
+  * per-node window sort. Rounds run on [[Fixpoint]], the driver shared
+  * with [[Dedup.connectedComponents]]: each round eagerly checkpoints the
+  * node-sized label frame and the round's changed-label count rides that
+  * same job as an observed metric, so the loop EXITS EARLY at a fixed point:
   * a synchronous round that changes zero labels is a fixed point of the
   * update map, every later round is identical, and the stop round is a
   * pure function of the edge set — determinism intact. Oscillating
@@ -39,8 +38,6 @@ import org.apache.spark.sql.functions._
   * `iters` budget, as documented above.
   */
 object LabelProp {
-
-  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
   /** Labels after `iters` synchronous rounds (or the fixed point, if one
     * is reached sooner): (node:long, label:long).
@@ -54,7 +51,6 @@ object LabelProp {
   def communities(edges: DataFrame, nodes: DataFrame, nodeCol: String = "node",
                   iters: Int = 5): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
-    val spark = edges.sparkSession
     val n = nodes.select(col(s"`$nodeCol`").cast("long").as("node"))
       .where(col("node").isNotNull)
     val e0 = Partitioning.spread(edges.select(
@@ -62,18 +58,15 @@ object LabelProp {
       .where(col("src").isNotNull && col("dst").isNotNull && col("src") =!= col("dst"))
     // symmetrize, dedup, and lay out by the JOIN side (nbr) once; every
     // round's join then reuses this exchange and only labels move
-    val sym = e0.select(col("src").as("node"), col("dst").as("nbr"))
+    val sym = Fixpoint.checkpoint(e0.select(col("src").as("node"), col("dst").as("nbr"))
       .union(e0.select(col("dst").as("node"), col("src").as("nbr")))
       .distinct()
-      .repartition(col("nbr"))
-      .localCheckpoint(eager = false)
+      .repartition(col("nbr")), eager = false)
 
-    var labels = n.select(col("node"), col("node").as("label"))
-    var round = 0
-    var fixedPoint = false
-    val conv = new Convergence.Latched(spark, "lpa")
-    while (round < iters && !fixedPoint) {
-      val t0 = System.nanoTime()
+    // an exhausted budget is the documented oscillation case, not an error
+    Fixpoint.run("lpa", n.select(col("node"), col("node").as("label")), iters,
+      count(when(col("__changed"), 1))) { prev =>
+      val labels = prev.select(col("node"), col("label"))
       val votes = sym.join(labels.withColumnRenamed("node", "nbr"), Seq("nbr"))
         .groupBy(col("node"), col("label"))
         .agg(count(lit(1)).as("cnt"))
@@ -87,22 +80,12 @@ object LabelProp {
       // they never change), so diffing against the previous round's label
       // is exact; labels has n's node set as an invariant, so joining it
       // instead of n is the same frame plus the old label
-      val (stepped, changed) = conv.observedRound(
-        obsName => labels.select(col("node"), col("label").as("__old"))
-          .join(winner, Seq("node"), "left")
-          .select(col("node"),
-            coalesce(col("label"), col("node")).as("label"),
-            (coalesce(col("label"), col("node")) =!= col("__old")).as("__changed"))
-          .observe(obsName, count(when(col("__changed"), 1)).as("n_changed"))
-          .localCheckpoint(eager = true),
-        df => df.where(col("__changed")).count())
-      labels = stepped.select(col("node"), col("label"))
-      round += 1
-      log.info(s"graft.lpa round=$round changed=$changed ms=${(System.nanoTime() - t0) / 1000000}")
-      fixedPoint = changed == 0
-    }
-    log.info(s"graft.lpa fixedPoint=$fixedPoint rounds=$round budget=$iters")
-    labels
+      labels.select(col("node"), col("label").as("__old"))
+        .join(winner, Seq("node"), "left")
+        .select(col("node"),
+          coalesce(col("label"), col("node")).as("label"),
+          (coalesce(col("label"), col("node")) =!= col("__old")).as("__changed"))
+    } { (_, changed, _, _) => changed == 0 }.frame.select(col("node"), col("label"))
   }
 
   /** EXACT integer Newman modularity of a labeling over an undirected

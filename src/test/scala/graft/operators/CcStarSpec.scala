@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.GraftTestHooks
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -116,20 +117,22 @@ class CcStarSpec extends AnyFunSuite {
     assert(labelsOf(CcStar.incrementalComponents(day0, batch)) === labelsOf(day0))
   }
 
-  test("reliable checkpointing produces the same labels (and demands a checkpoint dir)") {
-    val spark = graft.SparkTestBase.spark
+  test("reliable checkpointing produces the same labels") {
     val pairs = chain(40)
-    val prior = Option(spark.sparkContext.getCheckpointDir.orNull)
-    if (prior.isEmpty) {
-      intercept[IllegalArgumentException](
-        CcStar.connectedComponentsStar(pairs, reliableCheckpoint = true))
+    val local = labelsOf(CcStar.connectedComponentsStar(pairs))
+    GraftTestHooks.withCheckpointDir(spark.sparkContext) { dir =>
+      assert(labelsOf(CcStar.connectedComponentsStar(pairs)) == local)
+      assert(GraftTestHooks.filesUnder(dir) > 0, "no checkpoint files were written")
     }
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ccstar-ckpt-").toString
-    spark.sparkContext.setCheckpointDir(dir)
-    try {
-      val reliable = labelsOf(CcStar.connectedComponentsStar(pairs, reliableCheckpoint = true))
-      assert(reliable == labelsOf(CcStar.connectedComponentsStar(pairs)))
-    } finally prior.foreach(spark.sparkContext.setCheckpointDir)
+  }
+
+  test("incrementalComponents checkpoints reliably under a checkpoint dir, same rows") {
+    val day0 = CcStar.connectedComponentsStar(chain(10))
+    val batch = chain(5, base = 9L).unionByName(Seq((100L, 101L)).toDF("id_a", "id_b"))
+    val local = CcStar.incrementalComponents(day0, batch).collect().toSet
+    GraftTestHooks.withCheckpointDir(spark.sparkContext) { dir =>
+      assert(CcStar.incrementalComponents(day0, batch).collect().toSet == local)
+      assert(GraftTestHooks.filesUnder(dir) > 0, "no checkpoint files were written")
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.GraftTestHooks
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -167,12 +168,23 @@ class DedupSpec extends AnyFunSuite {
 
   test("connectedComponents with reliable checkpoints matches the local path") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-chk").toString
-    spark.sparkContext.setCheckpointDir(dir)
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L)).toDF("id_a", "id_b")
-    val comp = Dedup.connectedComponents(pairs, reliableCheckpoint = true)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val comp = GraftTestHooks.withCheckpointDir(spark.sparkContext) { _ =>
+      Dedup.connectedComponents(pairs).collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    }
     assert(comp === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
+  }
+
+  test("connectedComponents on a 10-node chain runs a pinned number of jobs") {
+    import spark.implicits._
+    // the changed count rides each round's checkpoint; AQE runs each
+    // shuffle stage as its own job, so the figure is a pin, not a formula —
+    // any extra per-round action (a count() per round) raises it
+    val chain = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val (comp, jobs) = GraftTestHooks.countJobs(spark.sparkContext)(
+      Dedup.connectedComponents(chain).collect())
+    assert(comp.map(_.getLong(1)).distinct.toSeq === Seq(0L))
+    assert(jobs === 53)
   }
 
   test("incremental near-dedup flags exactly the new docs duplicating the corpus") {
@@ -358,32 +370,14 @@ class DedupSpec extends AnyFunSuite {
       .toDF("id_a", "id_b")
     val expected = Dedup.connectedComponents(pairs)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // without a configured dir the cluster path must fail loudly up front
-    // (must run before this test sets one — the shared context keeps it)
-    if (spark.sparkContext.getCheckpointDir.isEmpty) {
-      val e = intercept[IllegalArgumentException](
-        Dedup.connectedComponents(pairs, reliableCheckpoint = true))
-      assert(e.getMessage.contains("setCheckpointDir"))
-    }
-    val dir = java.nio.file.Files.createTempDirectory("graft-cc-ckpt").toFile
-    val prev = spark.sparkContext.getCheckpointDir
-    try {
-      spark.sparkContext.setCheckpointDir(dir.getAbsolutePath)
-      val labels = Dedup.connectedComponents(pairs, reliableCheckpoint = true)
+    GraftTestHooks.withCheckpointDir(spark.sparkContext) { dir =>
+      val labels = Dedup.connectedComponents(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(labels === expected)
       assert(expected === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L,
         20L -> 20L, 21L -> 20L, 22L -> 20L, 23L -> 20L))
       // reliable checkpoints materialize under the configured dir
-      def files(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(files) else Seq(f)
-      assert(files(dir).nonEmpty, "no checkpoint files were written")
-    } finally {
-      prev.foreach(spark.sparkContext.setCheckpointDir)
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory) f.listFiles().foreach(rm); f.delete()
-      }
-      rm(dir)
+      assert(GraftTestHooks.filesUnder(dir) > 0, "no checkpoint files were written")
     }
   }
 }

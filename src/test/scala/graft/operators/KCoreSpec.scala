@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.GraftTestHooks
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -30,13 +31,15 @@ class KCoreSpec extends AnyFunSuite {
     sym.groupBy(_._1).view.mapValues(_.size.toLong).toMap
   }
 
+  // 4-clique {0,1,2,3} + a path 3-10-11-12 hanging off it; k=3 keeps
+  // exactly the clique (each clique node has degree 3 inside it) and
+  // peels the path node-by-node-batch
+  private val triangleChain =
+    (for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)) ++
+      Seq((3L, 10L), (10L, 11L), (11L, 12L))
+
   test("triangle chain: the clique survives, the tail peels in cascade") {
-    // 4-clique {0,1,2,3} + a path 3-10-11-12 hanging off it; k=3 keeps
-    // exactly the clique (each clique node has degree 3 inside it) and
-    // peels the path node-by-node-batch
-    val clique = for (a <- 0L to 3L; b <- 0L to 3L if a < b) yield (a, b)
-    val tail = Seq((3L, 10L), (10L, 11L), (11L, 12L))
-    val edges = clique ++ tail
+    val edges = triangleChain
     val got = core(edges, k = 3)
     assert(got === scalarKcore(edges, 3))
     assert(got.keySet === Set(0L, 1L, 2L, 3L))
@@ -68,5 +71,29 @@ class KCoreSpec extends AnyFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the triangle 0-1-2 survives at k=2 with degree exactly 2 each
     assert(got === Map(0L -> 2L, 1L -> 2L, 2L -> 2L))
+  }
+
+  test("triangle chain runs a pinned number of jobs") {
+    // the live edge count rides each round's checkpoint; AQE runs each
+    // shuffle stage as its own job, so the figure is a pin, not a formula —
+    // any extra per-round action (a count() per round) raises it
+    val (got, jobs) = GraftTestHooks.countJobs(spark.sparkContext)(core(triangleChain, k = 3))
+    assert(got.keySet === Set(0L, 1L, 2L, 3L))
+    assert(jobs === 16)
+  }
+
+  test("a peel cut short by maxIter fails loudly") {
+    import spark.implicits._
+    val e = intercept[IllegalStateException](
+      KCore.kcore(triangleChain.toDF("src", "dst"), k = 3, maxIter = 1).collect())
+    assert(e.getMessage.contains("did not converge"))
+  }
+
+  test("checkpoints reliably under a checkpoint dir, same rows as the local run") {
+    val local = core(triangleChain, k = 3)
+    GraftTestHooks.withCheckpointDir(spark.sparkContext) { dir =>
+      assert(core(triangleChain, k = 3) === local)
+      assert(GraftTestHooks.filesUnder(dir) > 0, "no checkpoint files were written")
+    }
   }
 }

@@ -1,5 +1,6 @@
 package graft.operators
 
+import org.apache.spark.GraftTestHooks
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -14,6 +15,10 @@ class LabelPropSpec extends AnyFunSuite {
     LabelProp.communities(edges.toDF("src", "dst"), nodes.toDF("node"), iters = iters)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
   }
+
+  /** Two disjoint triangles: one labeling round, then a fixed point. */
+  private val twoTriangles = Seq((0L, 1L), (1L, 2L), (2L, 0L), (10L, 11L), (11L, 12L), (12L, 10L))
+  private val twoTriangleNodes = Seq(0L, 1L, 2L, 10L, 11L, 12L)
 
   /** Scalar synchronous-LPA reference with the same tie rule. */
   private def scalarLpa(edges: Seq[(Long, Long)], nodes: Seq[Long], iters: Int): Map[Long, Long] = {
@@ -102,19 +107,20 @@ class LabelPropSpec extends AnyFunSuite {
     // budget must therefore run ~2 rounds of jobs, not 50. Each round is
     // at least one job (the eager checkpoint), so an early exit is visible
     // as a job count far below the budget. Labels must match the full run.
-    val edges = Seq((0L, 1L), (1L, 2L), (2L, 0L), (10L, 11L), (11L, 12L), (12L, 10L))
-    val nodes = Seq(0L, 1L, 2L, 10L, 11L, 12L)
-    var jobs = 0
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs += 1
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // the listener bus is async: a late event could undercount, never
-    // overcount — and undercounting only strengthens the assertion below
-    val got = try labelsOf(edges, nodes, iters = 50)
-    finally spark.sparkContext.removeSparkListener(listener)
-    assert(got === scalarLpa(edges, nodes, iters = 50))
+    val (got, jobs) = GraftTestHooks.countJobs(spark.sparkContext)(
+      labelsOf(twoTriangles, twoTriangleNodes, iters = 50))
+    assert(got === scalarLpa(twoTriangles, twoTriangleNodes, iters = 50))
     assert(jobs < 25, s"expected an early exit well under the 50-round budget, saw $jobs jobs")
+    // the exact count (AQE runs each shuffle stage as its own job, so this
+    // is a pin, not a formula): any extra per-round action raises it
+    assert(jobs === 20)
+  }
+
+  test("checkpoints reliably under a checkpoint dir, same rows as the local run") {
+    val local = labelsOf(twoTriangles, twoTriangleNodes, iters = 50)
+    GraftTestHooks.withCheckpointDir(spark.sparkContext) { dir =>
+      assert(labelsOf(twoTriangles, twoTriangleNodes, iters = 50) === local)
+      assert(GraftTestHooks.filesUnder(dir) > 0, "no checkpoint files were written")
+    }
   }
 }
