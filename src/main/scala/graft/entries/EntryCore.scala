@@ -33,11 +33,6 @@ private[graft] trait EntryCore {
   }
 
 
-  private[graft] def maskMeta(treatments: String*): Metadata =
-    new MetadataBuilder().putMetadata("mask",
-      new MetadataBuilder().putStringArray("treatments", treatments.toArray).build()).build()
-
-
   /** Star-contraction CC on a planted DEEP graph (verdict r12 ask #4):
     * every 1000-id block contributes a diameter-50 duplicate chain
     * (consecutive-id pairs where both endpoints exist), the path shape

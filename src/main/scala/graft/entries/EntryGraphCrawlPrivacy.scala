@@ -522,9 +522,9 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
         .select(lit(phase).as("phase"), col("n_classes"), col("min_class_size"),
           col("rows_below_k"), col("all_k_ok"), col("all_l_ok"))
     val tagged = cust.select(
-      cust("c_name").as("c_name", maskMeta("'suppressed'")),
+      cust("c_name").as("c_name", MaskTransform.treatmentsMetadata("'suppressed'")),
       cust("nat").as("nat",
-        maskMeta("cast(${value} as long) - pmod(cast(${value} as long), 10)")),
+        MaskTransform.treatmentsMetadata("cast(${value} as long) - pmod(cast(${value} as long), 10)")),
       cust("seg"), cust("bal_cents"))
     report(cust, "before")
       .unionAll(report(graft.operators.MaskTransform(tagged), "after"))

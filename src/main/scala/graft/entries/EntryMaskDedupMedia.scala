@@ -158,9 +158,10 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     val customer = graft.operators.Partitioning.spread(table(spark, dir, "customer"))
     val tagged = customer.select(
       customer("c_custkey"),
-      customer("c_name").as("c_name", maskMeta("mask_string(16, true, ${value})")),
+      customer("c_name").as("c_name", MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")),
       customer("c_acctbal").as("c_acctbal",
-        maskMeta("mask_decimal(CAST(2.00 AS DECIMAL(4,2)), true, CAST(${value} AS DECIMAL(12,2)))")),
+        MaskTransform.treatmentsMetadata(
+          "mask_decimal(CAST(2.00 AS DECIMAL(4,2)), true, CAST(${value} AS DECIMAL(12,2)))")),
       customer("c_acctbal").as("c_acctbal_orig"),
       customer("c_mktsegment"))
     MaskTransform(tagged)
@@ -242,7 +243,7 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     val customer = graft.operators.Partitioning.spread(table(spark, dir, "customer"))
     customer.select(
       customer("c_custkey"),
-      customer("c_name").as("c_name", maskMeta("mask_string(16, true, ${value})")),
+      customer("c_name").as("c_name", MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")),
       customer("c_nationkey"),
       customer("c_acctbal"),
       customer("c_mktsegment"))
@@ -354,8 +355,8 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     val good =
       """{"name": "s", "description": "d", "inputView": "in", "outputView": "out",
         |"persist": true, "params": {"a": "b"}}""".stripMargin
-    val badErrs = graft.operators.StageConfig.parseJson(bad).left.getOrElse(Nil)
-    val goodStage = graft.operators.StageConfig.parseJson(good).toOption
+    val badErrs = graft.operators.StageConfig.parseHocon(bad).left.getOrElse(Nil)
+    val goodStage = graft.operators.StageConfig.parseHocon(good).toOption
     // same contract through the HOCON path: a reference-style .conf parses
     // clean; typed wrongness accumulates (mixed-type environments + unknown
     // key = exactly 2 errors)

@@ -1554,7 +1554,7 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
   private[graft] def qMaskStream(spark: SparkSession, dir: String): DataFrame = {
     Defaults.registerAll(spark)
     val schema = spark.read.parquet(s"$dir/customer.parquet").schema
-    val treatments = maskMeta("mask_string(16, true, upper(${value}))")
+    val treatments = MaskTransform.treatmentsMetadata("mask_string(16, true, upper(${value}))")
     def tag(df: DataFrame): DataFrame = df
       .where(col("c_custkey") % 10 === 0)
       .select(col("c_custkey"), col("c_name").as("c_name", treatments))

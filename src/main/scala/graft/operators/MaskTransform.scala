@@ -4,7 +4,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, expr}
-import org.apache.spark.sql.types.{DataType, DecimalType}
+import org.apache.spark.sql.types.{DataType, DecimalType, Metadata, MetadataBuilder}
 import org.apache.spark.storage.StorageLevel
 
 /** Metadata-driven masking projection — the reference's one relational
@@ -47,7 +47,7 @@ object MaskTransform {
   /** Backtick-quoted identifier with embedded backticks ESCAPED (doubled,
     * Spark's convention) — a bare s"`$name`" interpolation turns a column
     * named a`b into malformed or mis-resolving SQL. */
-  private def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
+  private[operators] def quoted(name: String): String = "`" + name.replace("`", "``") + "`"
 
   /** Compose the treatment templates for one column into a single SQL
     * expression string (textual fold, `${value}` substitution).
@@ -63,6 +63,12 @@ object MaskTransform {
       val current = if (state.isEmpty) quoted(columnName) else s"($state)"
       treatment.replace(Placeholder, current)
     }
+
+  /** Column metadata `{"mask": {"treatments": [...]}}` carrying the given
+    * treatment templates — the format [[apply]] reads. */
+  def treatmentsMetadata(treatments: String*): Metadata =
+    new MetadataBuilder().putMetadata(MaskKey,
+      new MetadataBuilder().putStringArray(TreatmentsKey, treatments.toArray).build()).build()
 
   /** The masking projection as Column trees; pure, lazy, no side effects. */
   def apply(df: DataFrame): DataFrame = {
@@ -107,12 +113,9 @@ object MaskTransform {
       spark: org.apache.spark.sql.SparkSession,
       inputView: String,
       outputView: String,
-      persist: Boolean = false,
-      storageLevel: StorageLevel = StorageLevel.MEMORY_AND_DISK_SER,
-      immutableViews: Boolean = false): (DataFrame, Map[String, Any]) = {
+      persist: Boolean = false): (DataFrame, Map[String, Any]) = {
     val outputDF = apply(spark.table(inputView))
-    if (immutableViews) outputDF.createTempView(outputView)
-    else outputDF.createOrReplaceTempView(outputView)
+    outputDF.createOrReplaceTempView(outputView)
 
     var detail = Map[String, Any]("inputView" -> inputView, "outputView" -> outputView)
     if (!outputDF.isStreaming) {
@@ -125,7 +128,7 @@ object MaskTransform {
       detail += ("numPartitions" -> outputDF.rdd.getNumPartitions)
       if (persist) {
         val start = System.currentTimeMillis()
-        outputDF.persist(storageLevel)
+        outputDF.persist(StorageLevel.MEMORY_AND_DISK_SER)
         val records = outputDF.count()
         val elapsed = System.currentTimeMillis() - start
         detail += ("records" -> records)

@@ -19,18 +19,15 @@ import org.apache.spark.sql.functions._
   *
   * min/max are reported as STRINGS so one report schema covers every
   * column type. Integral and string columns render identically on any
-  * engine; floating-point, timestamp, date, and decimal columns are
-  * excluded by default — ALL of them have engine-specific string
-  * rendering (float formatting, timestamp fraction-trimming and zone
-  * suffixes, decimal trailing-zero policy), and suppressing only floats
-  * would quietly reintroduce the divergence for the others. Pass
-  * `includeFloatMinMax = true` only for human eyes, not for cross-engine
-  * comparison.
+  * engine; floating-point, timestamp, date, and decimal columns report
+  * null — ALL of them have engine-specific string rendering (float
+  * formatting, timestamp fraction-trimming and zone suffixes, decimal
+  * trailing-zero policy), and suppressing only floats would quietly
+  * reintroduce the divergence for the others.
   */
 object Profile {
 
-  def profileColumns(df: DataFrame, cols: Seq[String], exact: Boolean = true,
-                     includeFloatMinMax: Boolean = false): DataFrame = {
+  def profileColumns(df: DataFrame, cols: Seq[String], exact: Boolean = true): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     cols.foreach { c =>
       require(df.columns.contains(c), s"no such column: $c")
@@ -56,9 +53,9 @@ object Profile {
       Seq(
         count(when(v.isNull, 1)).as(s"__null_$c"),
         (if (exact) countDistinct(v) else approx_count_distinct(v)).as(s"__dist_$c"),
-        (if (nonPortableRendering(c) && !includeFloatMinMax) lit(null).cast("string")
+        (if (nonPortableRendering(c)) lit(null).cast("string")
          else min(v).cast("string")).as(s"__min_$c"),
-        (if (nonPortableRendering(c) && !includeFloatMinMax) lit(null).cast("string")
+        (if (nonPortableRendering(c)) lit(null).cast("string")
          else max(v).cast("string")).as(s"__max_$c"))
     }
     val wide = df.agg(count(lit(1)).as("__n"), aggs: _*)

@@ -521,8 +521,8 @@ object Similarity {
     * (2^bits), so unrelated-pair collisions — each bit agrees with prob
     * 1/2 — produce ~n²/2^bits candidates per band: QUADRATIC in corpus
     * size no matter the constant (measured: 10x data -> 48x shuffle bytes
-    * at the old fixed 8 bits; SCALING.md r9). `autoTune` (default) sizes
-    * the bands from the data instead:
+    * at the old fixed 8 bits; SCALING.md r9). The bands are therefore
+    * sized from the data:
     *   - bits per band ~ log2(n / targetOccupancy): expected bucket
     *     occupancy stays constant, so candidates grow ~linearly;
     *   - wider bands admit fewer TRUE pairs too (a true pair at cosine t
@@ -533,13 +533,10 @@ object Similarity {
     *     the price of linear shuffle, and the right trade at 100 TB
     *     (for billion-vector corpora prefer [[ivfTopK]]'s inverted-file
     *     shape; hyperplane LSH pair mining is for the <=hundreds-of-
-    *     millions dedup sweep).
-    * `autoTune = false` keeps the explicit (nBits, bitsPerBand, seeds)
-    * banding for callers pinning a published index layout. */
+    *     millions dedup sweep). */
   def cosinePairsLsh(df: DataFrame, idCol: String, embCol: String, threshold: Double,
-                     nBits: Int = 64, bitsPerBand: Int = 8, seeds: Seq[Long] = Seq(42L, 1337L),
-                     maxBucket: Int = 1024, autoTune: Boolean = true,
-                     targetOccupancy: Int = 4, missTarget: Double = 1e-4): DataFrame = {
+                     maxBucket: Int = 1024, targetOccupancy: Int = 4,
+                     missTarget: Double = 1e-4): DataFrame = {
     val spark = df.sparkSession
 
     val base = Partitioning.spread(
@@ -560,45 +557,32 @@ object Similarity {
     }
     val dim = head.getInt(1)
 
-    val bandedAll = if (autoTune) {
-      val bits = math.max(8, math.min(48,
-        math.ceil(math.log(math.max(nRows.toDouble / targetOccupancy, 2.0)) / math.log(2.0)).toInt))
-      val pBit = 1.0 - math.acos(math.min(threshold, 0.9999)) / math.Pi
-      val pBand = math.pow(pBit, bits)
-      val bands = math.max(4, math.min(64,
-        math.ceil(math.log(missTarget) / math.log(1.0 - pBand)).toInt))
-      log.info(s"graft.embed_lsh autoTune n=$nRows bits=$bits bands=$bands pBand=$pBand")
-      // independent hyperplane set per band, all signatures in ONE narrow
-      // projection (an array of codegen'd sign-projection expressions)
-      val sigCols = (0 until bands).map { b =>
-        signatureCol(hyperplanes(bits, dim, 0x9E3779B97F4A7C15L * (b + 1)), col("emb"))
-      }
-      base.select(col("vec_id"), posexplode(array(sigCols: _*)))
-        .select(col("vec_id"), col("pos").as("band"), col("col").as("bucket"))
-    } else {
-      val bands = nBits / bitsPerBand
-      seeds.zipWithIndex.map { case (seed, t) =>
-        val planes = hyperplanes(nBits, dim, seed)
-        val mask = (1L << bitsPerBand) - 1
-        base.select(col("vec_id"), signatureCol(planes, col("emb")).as("sig"))
-          .select(col("vec_id"),
-            posexplode(expr(
-              s"transform(sequence(0, ${bands - 1}), b -> shiftright(sig, b * $bitsPerBand) & $mask)")))
-          .select(col("vec_id"), (col("pos") + t * bands).as("band"), col("col").as("bucket"))
-      }.reduce(_ union _)
+    val bits = math.max(8, math.min(48,
+      math.ceil(math.log(math.max(nRows.toDouble / targetOccupancy, 2.0)) / math.log(2.0)).toInt))
+    val pBit = 1.0 - math.acos(math.min(threshold, 0.9999)) / math.Pi
+    val pBand = math.pow(pBit, bits)
+    val bands = math.max(4, math.min(64,
+      math.ceil(math.log(missTarget) / math.log(1.0 - pBand)).toInt))
+    log.info(s"graft.embed_lsh n=$nRows bits=$bits bands=$bands pBand=$pBand")
+    // independent hyperplane set per band, all signatures in ONE narrow
+    // projection (an array of codegen'd sign-projection expressions)
+    val sigCols = (0 until bands).map { b =>
+      signatureCol(hyperplanes(bits, dim, 0x9E3779B97F4A7C15L * (b + 1)), col("emb"))
     }
+    val bandedAll = base.select(col("vec_id"), posexplode(array(sigCols: _*)))
+      .select(col("vec_id"), col("pos").as("band"), col("col").as("bucket"))
 
     // Skew guard. Real embedding distributions concentrate in a few hub
     // directions, so bucket sizes are heavy-tailed no matter how many
     // hyperplane bits slice the space — and candidate pairs grow with the
     // SQUARE of bucket size (measured before this cap was tightened: 30x
     // data -> 500x verify bytes, all from a handful of near-cap buckets).
-    // In auto mode the cap follows the tuned occupancy: a bucket tens of
-    // times over the expected occupancy is a hub direction whose pairs are
-    // overwhelmingly below threshold; a true near-dup pair inside one
-    // still has every OTHER band to surface through, the standard
-    // multi-band recall argument (same shape as Dedup.minhashPairs).
-    val effMaxBucket = if (autoTune) math.min(maxBucket, 32 * targetOccupancy) else maxBucket
+    // The cap follows the tuned occupancy: a bucket tens of times over the
+    // expected occupancy is a hub direction whose pairs are overwhelmingly
+    // below threshold; a true near-dup pair inside one still has every
+    // OTHER band to surface through, the standard multi-band recall
+    // argument (same shape as Dedup.minhashPairs).
+    val effMaxBucket = math.min(maxBucket, 32 * targetOccupancy)
     val candidates = bandedAll.groupBy("band", "bucket")
       .agg(collect_list("vec_id").as("ids"))
       .where(size(col("ids")) > 1 && size(col("ids")) <= effMaxBucket)

@@ -1,6 +1,9 @@
 package graft.operators
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.MetadataBuilder
 import org.apache.spark.storage.StorageLevel
 
@@ -13,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * The reference reads HOCON through the host framework; the engine core
   * accepts HOCON directly ([[Hocon]] — so a reference user's existing
   * `.conf` files with comments, unquoted keys and substitutions migrate
-  * unchanged), strict JSON (parsed with Spark's bundled json4s), or an
-  * already-parsed map — the validation contract is the same on every path.
+  * unchanged, and a JSON document is HOCON too) or an already-parsed map —
+  * the validation contract is the same on every path.
   *
   * Beyond the single stage, [[runPipeline]] is the host-runner analog: the
   * reference's driver accepts a `{"stages": [...]}` document and walks the
@@ -36,6 +39,10 @@ object StageConfig {
     def stageType: String
     def name: String
     def environments: Seq[String]
+
+    /** Environment gate: an empty list means run everywhere. */
+    def runsIn(activeEnvironment: String): Boolean =
+      environments.isEmpty || environments.contains(activeEnvironment)
   }
 
   case class MaskStage(
@@ -105,95 +112,82 @@ object StageConfig {
     def stageType: String = "ParquetLoad"
   }
 
-  val ExpectedKeys: Set[String] =
-    Set("type", "name", "description", "environments", "inputView", "outputView", "persist", "params")
+  /** Accumulating field reader over one stage's config map. Each read
+    * records its key and, on a bad value, its error plus a stand-in value;
+    * [[result]] turns every key nobody read into `Unknown option '<k>'.`
+    * (`type` is always accepted). `name`, `description` and `environments`
+    * are common to every stage type and read first. Error strings are part
+    * of the stage_config_errors oracle contract — do not reword. */
+  private final class Fields(config: Map[String, Any]) {
+    private val read = mutable.Set("type")
+    private val errors = mutable.ListBuffer.empty[String]
 
-  private val ExpectedKeysByType: Map[String, Set[String]] = Map(
-    "MaskDataTransform" -> ExpectedKeys,
-    "ParquetExtract" -> Set("type", "name", "description", "environments", "inputURI", "outputView", "persist", "numPartitions"),
-    "DelimitedExtract" -> Set("type", "name", "description", "environments", "inputURI", "outputView", "persist", "header", "numPartitions"),
-    "MetadataTransform" -> Set("type", "name", "description", "environments", "inputView", "outputView", "persist", "treatments"),
-    "SQLTransform" -> Set("type", "name", "description", "environments", "sql", "outputView", "persist", "sqlParams"),
-    "ParquetLoad" -> Set("type", "name", "description", "environments", "inputView", "outputURI", "numPartitions"))
+    def field[A](key: String, fallback: A)(check: Option[Any] => Either[String, A]): A = {
+      read += key
+      check(config.get(key)).fold({ e => errors += e; fallback }, identity)
+    }
 
-  // ---- field validators (shared by every stage parser; error strings are
-  // part of the stage_config_errors oracle contract — do not reword) ----
-
-  private def requiredString(config: Map[String, Any], key: String): Either[String, String] =
-    config.get(key) match {
+    def requiredString(key: String): String = field(key, "") {
       case Some(s: String) if s.nonEmpty => Right(s)
       case Some(_) => Left(s"'$key' must be a non-empty string.")
       case None => Left(s"Missing required attribute '$key'.")
     }
 
-  private def optionalString(config: Map[String, Any], key: String): Either[String, Option[String]] =
-    config.get(key) match {
-      case Some(s: String) => Right(Some(s))
-      case Some(_) => Left(s"'$key' must be a string.")
-      case None => Right(None)
-    }
-
-  private def optionalBool(config: Map[String, Any], key: String, default: Boolean): Either[String, Boolean] =
-    config.get(key) match {
+    def bool(key: String): Boolean = field(key, false) {
       case Some(b: Boolean) => Right(b)
       case Some(s: String) if s == "true" || s == "false" => Right(s.toBoolean)
       case Some(_) => Left(s"'$key' must be a boolean.")
-      case None => Right(default)
+      case None => Right(false)
     }
 
-  private def optionalInt(config: Map[String, Any], key: String): Either[String, Option[Int]] =
-    (config.get(key) match {
-      case Some(i: Int) => Right(Some(i))
-      case Some(l: Long) if l.isValidInt => Right(Some(l.toInt))
-      case Some(b: BigInt) if b.isValidInt => Right(Some(b.toInt))
-      // all-digit strings can still overflow Int (the Long/BigInt cases
-      // guard with isValidInt; an unguarded toInt would escape as a raw
-      // NumberFormatException, breaking the accumulated-errors contract)
-      case Some(s: String) if s.forall(_.isDigit) && s.nonEmpty =>
-        scala.util.Try(s.toInt).toOption match {
-          case Some(i) => Right(Some(i))
-          case None => Left(s"'$key' must be an integer.")
-        }
-      case Some(_) => Left(s"'$key' must be an integer.")
+    /** Validate-everything-up-front: a non-positive partition count would
+      * otherwise fail MID-pipeline at repartition() after earlier stages
+      * already ran and published views. */
+    def positiveInt(key: String): Option[Int] = field(key, Option.empty[Int]) { v =>
+      (v match {
+        case Some(i: Int) => Right(Some(i))
+        case Some(l: Long) if l.isValidInt => Right(Some(l.toInt))
+        // all-digit strings can still overflow Int; an unguarded toInt
+        // would escape as a raw NumberFormatException
+        case Some(s: String) if s.forall(_.isDigit) && s.toIntOption.isDefined => Right(s.toIntOption)
+        case Some(_) => Left(s"'$key' must be an integer.")
+        case None => Right(None)
+      }).filterOrElse(_.forall(_ > 0), s"'$key' must be a positive integer.")
+    }
+
+    /** HOCON types unquoted scalars (days = 14 -> Long); coerce scalars to
+      * strings like typesafe-config's getString so reference-style .conf
+      * files migrate unchanged — only nested objects/arrays/nulls reject. */
+    def stringMap(key: String, ifEmpty: Option[String] = None): Map[String, String] =
+      field(key, Map.empty[String, String]) { v =>
+        (v match {
+          case Some(m: Map[_, _]) if m.values.forall {
+            case _: String | _: Boolean | _: Long | _: Int | _: Double => true
+            case _ => false
+          } => Right(m.map { case (k, v) => k.toString -> v.toString })
+          case Some(_) => Left(s"'$key' must be an object of scalar values.")
+          case None => Right(Map.empty[String, String])
+        }).filterOrElse(m => m.nonEmpty || ifEmpty.isEmpty, ifEmpty.get)
+      }
+
+    val name: String = requiredString("name")
+    val description: Option[String] = field("description", Option.empty[String]) {
+      case Some(s: String) => Right(Some(s))
+      case Some(_) => Left("'description' must be a string.")
       case None => Right(None)
-    }).flatMap {
-      // validate-everything-up-front: a non-positive partition count would
-      // otherwise fail MID-pipeline at repartition() after earlier stages
-      // already ran and published views
-      case Some(i) if i <= 0 => Left(s"'$key' must be a positive integer.")
-      case ok => Right(ok)
     }
-
-  /** HOCON types unquoted scalars (days = 14 -> Long); coerce scalars to
-    * strings like typesafe-config's getString so reference-style .conf
-    * files migrate unchanged — only nested objects/arrays/nulls reject. */
-  private def stringMap(config: Map[String, Any], key: String): Either[String, Map[String, String]] = {
-    def scalar(v: Any): Boolean = v match {
-      case _: String | _: Boolean | _: Long | _: Int | _: Double => true
-      case _: BigInt | _: BigDecimal => true // json4s types JSON numbers this way
-      case _ => false
-    }
-    config.get(key) match {
-      case Some(m: Map[_, _]) if m.values.forall(scalar) =>
-        Right(m.map { case (k, v) => k.toString -> v.toString })
-      case Some(_) => Left(s"'$key' must be an object of scalar values.")
-      case None => Right(Map.empty)
-    }
-  }
-
-  private def environmentsList(config: Map[String, Any]): Either[String, Seq[String]] =
-    config.get("environments") match {
+    val environments: Seq[String] = field("environments", Seq.empty[String]) {
       case Some(xs: Seq[_]) if xs.forall(_.isInstanceOf[String]) => Right(xs.map(_.toString))
       case Some(_) => Left("'environments' must be an array of strings.")
       case None => Right(Nil)
     }
 
-  private def unknownKeys(config: Map[String, Any], expected: Set[String]): List[String] =
-    config.keySet.diff(expected).toList.sorted.map(k => s"Unknown option '$k'.")
-
-  private def collect[A](parts: (Either[String, Any])*)(errors0: List[String])(build: => A): Either[List[String], A] = {
-    val errors = errors0 ++ parts.collect { case Left(e) => e }
-    if (errors.nonEmpty) Left(errors) else Right(build)
+    /** The stage built from the fields read so far, or every error: unknown
+      * keys first (sorted), then field errors in read order. */
+    def result[A](stage: A): Either[List[String], A] = {
+      val all = config.keySet.diff(read).toList.sorted.map(k => s"Unknown option '$k'.") ++ errors
+      if (all.isEmpty) Right(stage) else Left(all)
+    }
   }
 
   /** Parse a HOCON (or JSON — HOCON is a superset) stage document with the
@@ -207,126 +201,46 @@ object StageConfig {
   def parseHoconFile(path: String): Either[List[String], MaskStage] =
     Hocon.parseFile(path).flatMap(parse)
 
-  def parseJson(json: String): Either[List[String], MaskStage] =
-    jsonToMap(json).flatMap(parse)
-
-  private def jsonToMap(json: String): Either[List[String], Map[String, Any]] = {
-    import org.json4s._
-    import org.json4s.jackson.JsonMethods
-
-    // mixed-type arrays/objects must survive the conversion so the typed
-    // validators can REJECT them ('environments': [123] has to reach
-    // environmentsList as Seq(123L), not be silently filtered to Nil)
-    def toAny(v: JValue): Any = v match {
-      case JString(s) => s
-      case JBool(b) => b
-      case JObject(o) => o.map { case (k, pv) => k -> toAny(pv) }.toMap
-      case JArray(a) => a.map(toAny)
-      case JNull => null
-      case other => other.values
-    }
-
-    JsonMethods.parseOpt(json) match {
-      case Some(JObject(fields)) =>
-        Right(fields.map { case (k, v) => k -> toAny(v) }.toMap)
-      case _ => Left(List("stage config must be a JSON object"))
-    }
-  }
-
-  /** Validate a parsed MaskDataTransform config map. Accumulates every
-    * error. */
+  /** Validate a parsed single-stage MaskDataTransform config map. A `type`
+    * other than MaskDataTransform is an error (absent means
+    * MaskDataTransform). Accumulates every error. */
   def parse(config: Map[String, Any]): Either[List[String], MaskStage] = {
-    val name = requiredString(config, "name")
-    val description = optionalString(config, "description")
-    val environments = environmentsList(config)
-    val inputView = requiredString(config, "inputView")
-    val outputView = requiredString(config, "outputView")
-    val persist = optionalBool(config, "persist", default = false)
-    val params = stringMap(config, "params")
-    collect(name, description, environments, inputView, outputView, persist, params)(
-      unknownKeys(config, ExpectedKeys)) {
-      MaskStage(
-        name.toOption.get, description.toOption.get, environments.toOption.get,
-        inputView.toOption.get, outputView.toOption.get, persist.toOption.get, params.toOption.get)
+    val f = new Fields(config)
+    f.field("type", ()) {
+      case None | Some("MaskDataTransform") => Right(())
+      case Some(other) => Left(s"'type' must be MaskDataTransform, not '$other'.")
     }
-  }
-
-  private def parseExtract(stageType: String, config: Map[String, Any]): Either[List[String], ExtractStage] = {
-    val name = requiredString(config, "name")
-    val description = optionalString(config, "description")
-    val environments = environmentsList(config)
-    val inputURI = requiredString(config, "inputURI")
-    val outputView = requiredString(config, "outputView")
-    val persist = optionalBool(config, "persist", default = false)
-    val header = optionalBool(config, "header", default = false)
-    val numPartitions = optionalInt(config, "numPartitions")
-    collect(name, description, environments, inputURI, outputView, persist, header, numPartitions)(
-      unknownKeys(config, ExpectedKeysByType(stageType))) {
-      ExtractStage(stageType, name.toOption.get, description.toOption.get, environments.toOption.get,
-        inputURI.toOption.get, outputView.toOption.get, persist.toOption.get,
-        header.toOption.get, numPartitions.toOption.get)
-    }
-  }
-
-  private def parseMetadata(config: Map[String, Any]): Either[List[String], MetadataStage] = {
-    val name = requiredString(config, "name")
-    val description = optionalString(config, "description")
-    val environments = environmentsList(config)
-    val inputView = requiredString(config, "inputView")
-    val outputView = requiredString(config, "outputView")
-    val persist = optionalBool(config, "persist", default = false)
-    val treatments = stringMap(config, "treatments").flatMap {
-      case m if m.isEmpty => Left("'treatments' must map at least one column to a treatment expression.")
-      case m => Right(m)
-    }
-    collect(name, description, environments, inputView, outputView, persist, treatments)(
-      unknownKeys(config, ExpectedKeysByType("MetadataTransform"))) {
-      MetadataStage(name.toOption.get, description.toOption.get, environments.toOption.get,
-        inputView.toOption.get, outputView.toOption.get, persist.toOption.get, treatments.toOption.get)
-    }
-  }
-
-  private def parseSql(config: Map[String, Any]): Either[List[String], SqlStage] = {
-    val name = requiredString(config, "name")
-    val description = optionalString(config, "description")
-    val environments = environmentsList(config)
-    val sql = requiredString(config, "sql")
-    val outputView = requiredString(config, "outputView")
-    val persist = optionalBool(config, "persist", default = false)
-    val sqlParams = stringMap(config, "sqlParams")
-    collect(name, description, environments, sql, outputView, persist, sqlParams)(
-      unknownKeys(config, ExpectedKeysByType("SQLTransform"))) {
-      SqlStage(name.toOption.get, description.toOption.get, environments.toOption.get,
-        sql.toOption.get, outputView.toOption.get, persist.toOption.get, sqlParams.toOption.get)
-    }
-  }
-
-  private def parseLoad(config: Map[String, Any]): Either[List[String], LoadStage] = {
-    val name = requiredString(config, "name")
-    val description = optionalString(config, "description")
-    val environments = environmentsList(config)
-    val inputView = requiredString(config, "inputView")
-    val outputURI = requiredString(config, "outputURI")
-    val numPartitions = optionalInt(config, "numPartitions")
-    collect(name, description, environments, inputView, outputURI, numPartitions)(
-      unknownKeys(config, ExpectedKeysByType("ParquetLoad"))) {
-      LoadStage(name.toOption.get, description.toOption.get, environments.toOption.get,
-        inputView.toOption.get, outputURI.toOption.get, numPartitions.toOption.get)
-    }
+    f.result(MaskStage(f.name, f.description, f.environments,
+      f.requiredString("inputView"), f.requiredString("outputView"), f.bool("persist"),
+      f.stringMap("params")))
   }
 
   /** Dispatch on the `type` key. A stage with no `type` is a
     * MaskDataTransform (the single-stage entry points never required one,
     * and that behavior is kept). */
-  def parseStage(config: Map[String, Any]): Either[List[String], PipelineStage] =
+  def parseStage(config: Map[String, Any]): Either[List[String], PipelineStage] = {
+    lazy val f = new Fields(config)
     config.getOrElse("type", "MaskDataTransform") match {
       case "MaskDataTransform" => parse(config)
-      case t @ ("ParquetExtract" | "DelimitedExtract") => parseExtract(t.toString, config)
-      case "MetadataTransform" => parseMetadata(config)
-      case "SQLTransform" => parseSql(config)
-      case "ParquetLoad" => parseLoad(config)
+      case t @ ("ParquetExtract" | "DelimitedExtract") =>
+        f.result(ExtractStage(t.toString, f.name, f.description, f.environments,
+          f.requiredString("inputURI"), f.requiredString("outputView"), f.bool("persist"),
+          t == "DelimitedExtract" && f.bool("header"), f.positiveInt("numPartitions")))
+      case "MetadataTransform" =>
+        f.result(MetadataStage(f.name, f.description, f.environments,
+          f.requiredString("inputView"), f.requiredString("outputView"), f.bool("persist"),
+          f.stringMap("treatments",
+            ifEmpty = Some("'treatments' must map at least one column to a treatment expression."))))
+      case "SQLTransform" =>
+        f.result(SqlStage(f.name, f.description, f.environments,
+          f.requiredString("sql"), f.requiredString("outputView"), f.bool("persist"),
+          f.stringMap("sqlParams")))
+      case "ParquetLoad" =>
+        f.result(LoadStage(f.name, f.description, f.environments,
+          f.requiredString("inputView"), f.requiredString("outputURI"), f.positiveInt("numPartitions")))
       case other => Left(List(s"Unknown stage type '$other'."))
     }
+  }
 
   /** Parse a `{"stages": [...]}` pipeline document (HOCON or JSON). EVERY
     * stage is validated; errors accumulate across stages, each prefixed
@@ -361,9 +275,7 @@ object StageConfig {
   /** Parse (HOCON or JSON), validate, and execute one stage against a
     * session in one step. */
   def run(spark: SparkSession, conf: String): Either[List[String], DataFrame] =
-    parseHocon(conf).map { stage =>
-      MaskTransform.runStage(spark, stage.inputView, stage.outputView, stage.persist)._1
-    }
+    parseHocon(conf).map(executeStage(spark, _))
 
   /** Environment-gated execution — the host-dataflow semantics the
     * `environments` key exists for: a stage whose list does not contain the
@@ -373,8 +285,7 @@ object StageConfig {
   def runIfEnvironment(spark: SparkSession, conf: String,
                        activeEnvironment: String): Either[List[String], Option[DataFrame]] =
     parseHocon(conf).map { stage =>
-      if (stage.environments.nonEmpty && !stage.environments.contains(activeEnvironment)) None
-      else Some(MaskTransform.runStage(spark, stage.inputView, stage.outputView, stage.persist)._1)
+      Option.when(stage.runsIn(activeEnvironment))(executeStage(spark, stage))
     }
 
   /** The multi-stage pipeline runner — the `{"stages": [...]}` host loop.
@@ -403,20 +314,16 @@ object StageConfig {
     parsePipelineFile(path).map(executePipeline(spark, _, activeEnvironment))
 
   private def executePipeline(spark: SparkSession, stages: List[PipelineStage],
-                              activeEnvironment: String): Option[DataFrame] = {
-    var last: Option[DataFrame] = None
-    stages.zipWithIndex.foreach { case (stage, i) =>
-      val gatedIn = stage.environments.isEmpty || stage.environments.contains(activeEnvironment)
-      if (gatedIn) {
-        try last = Some(executeStage(spark, stage))
+                              activeEnvironment: String): Option[DataFrame] =
+    stages.zipWithIndex.foldLeft(Option.empty[DataFrame]) {
+      case (last, (stage, _)) if !stage.runsIn(activeEnvironment) => last
+      case (_, (stage, i)) =>
+        try Some(executeStage(spark, stage))
         catch {
           case scala.util.control.NonFatal(e) => throw new RuntimeException(
             s"stage $i ('${stage.name}', ${stage.stageType}) failed: ${e.getMessage}", e)
         }
-      }
     }
-    last
-  }
 
   /** Publish a frame as `outputView`; `persist` materializes it eagerly
     * (MEMORY_AND_DISK_SER + count — the reference's persist contract) so
@@ -446,13 +353,12 @@ object StageConfig {
       val missing = s.treatments.keySet.diff(df.columns.toSet)
       require(missing.isEmpty,
         s"treatments name columns not in '${s.inputView}': ${missing.toList.sorted.mkString(", ")}")
-      val projected = df.columns.map { c =>
-        s.treatments.get(c) match {
-          case Some(t) =>
-            val meta = new MetadataBuilder().putMetadata("mask",
-              new MetadataBuilder().putStringArray("treatments", Array(t)).build()).build()
-            df(s"`$c`").as(c, meta)
-          case None => df(s"`$c`")
+      // the mask key goes on top of the column's other metadata
+      val projected = df.schema.fields.map { f =>
+        val c = col(MaskTransform.quoted(f.name))
+        s.treatments.get(f.name).fold(c) { t =>
+          c.as(f.name, new MetadataBuilder().withMetadata(f.metadata)
+            .withMetadata(MaskTransform.treatmentsMetadata(t)).build())
         }
       }
       publish(df.select(projected.toIndexedSeq: _*), s.outputView, s.persist)

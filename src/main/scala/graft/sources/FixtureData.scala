@@ -4,7 +4,7 @@ import java.time.{LocalDateTime, ZoneOffset}
 import java.time.format.DateTimeFormatter
 import java.util.Locale
 
-import org.apache.spark.sql.types.{Metadata, MetadataBuilder}
+import graft.operators.MaskTransform
 
 /** Deterministic synthetic fixture in the SHAPE of the reference's
   * end-to-end test data (userdata.csv + userdata.json,
@@ -86,10 +86,6 @@ object FixtureData {
     path.toString
   }
 
-  private def maskMeta(treatments: String*): Metadata =
-    new MetadataBuilder().putMetadata("mask",
-      new MetadataBuilder().putStringArray("treatments", treatments.toArray).build()).build()
-
   /** Typing specs mirroring the reference schema's field list, types,
     * formatters, and mask treatments (userdata.json: username mask_string;
     * birth_date dd/MM/uuuu + MONTH truncation; create_date two verbose
@@ -98,19 +94,20 @@ object FixtureData {
     val nulls = Seq("", "null")
     Seq(
       TypedSource.ColumnSpec("username", "string", trim = true, nullableValues = nulls,
-        metadata = maskMeta("mask_string(16, true, ${value})")),
+        metadata = MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")),
       TypedSource.ColumnSpec("city", "string", trim = true, nullableValues = nulls),
       TypedSource.ColumnSpec("last_name", "string", trim = true, nullableValues = nulls),
       TypedSource.ColumnSpec("birth_date", "date", trim = true, nullableValues = nulls,
         formatters = Seq("dd/MM/uuuu"),
-        metadata = maskMeta("date_trunc('MONTH', ${value})")),
+        metadata = MaskTransform.treatmentsMetadata("date_trunc('MONTH', ${value})")),
       TypedSource.ColumnSpec("zip_code", "string", trim = true, nullableValues = nulls),
       TypedSource.ColumnSpec("create_date", "timestamp", trim = true, nullableValues = nulls,
         formatters = Seq(
           "EEE MMM dd uuuu HH:mm:ss 'GMT'ZZZ '(Australian Eastern Daylight Time)'",
           "EEE MMM dd uuuu HH:mm:ss 'GMT'ZZZ '(Australian Eastern Standard Time)'"),
         timezoneId = Some("UTC"),
-        metadata = maskMeta("date_trunc('HOUR', ${value})", "mask_timestamp(14, true, ${value})")),
+        metadata = MaskTransform.treatmentsMetadata(
+          "date_trunc('HOUR', ${value})", "mask_timestamp(14, true, ${value})")),
       TypedSource.ColumnSpec("first_name", "string", trim = true, nullableValues = nulls),
       TypedSource.ColumnSpec("state", "string", trim = true, nullableValues = nulls),
       TypedSource.ColumnSpec("user_id", "integer", trim = true, nullableValues = nulls),

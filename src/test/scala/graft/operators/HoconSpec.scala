@@ -238,10 +238,10 @@ class HoconSpec extends AnyFunSuite {
   }
 
   test("json path coerces scalar params and rejects nested ones (advisor r5)") {
-    val Right(s) = StageConfig.parseJson(
+    val Right(s) = StageConfig.parseHocon(
       """{"name":"s","inputView":"a","outputView":"b","params":{"n":32}}"""): @unchecked
     assert(s.params === Map("n" -> "32"))
-    val Left(errs) = StageConfig.parseJson(
+    val Left(errs) = StageConfig.parseHocon(
       """{"name":"s","environments":[123],"inputView":"a","outputView":"b","params":{"n":[1]}}"""): @unchecked
     assert(errs.exists(_.contains("'environments' must be an array of strings")))
     assert(errs.exists(_.contains("'params' must be an object of scalar values")))

@@ -6,26 +6,22 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
 import graft.functions.MaskUdfs
+import graft.operators.MaskTransform.treatmentsMetadata
 
 class MaskTransformSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
 
-  private def mkMeta(treatments: String*): Metadata =
-    new MetadataBuilder().putMetadata(
-      MaskTransform.MaskKey,
-      new MetadataBuilder().putStringArray(MaskTransform.TreatmentsKey, treatments.toArray).build()).build()
-
   private def fixture() = {
     MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
     val schema = StructType(Seq(
-      StructField("first_name", StringType, nullable = true, mkMeta("mask_string(16, true, ${value})")),
+      StructField("first_name", StringType, nullable = true, treatmentsMetadata("mask_string(16, true, ${value})")),
       StructField("plain", StringType, nullable = true,
         new MetadataBuilder().putBoolean("pii", false).build()),
       StructField("create_date", TimestampType, nullable = true,
-        mkMeta("date_trunc('HOUR', ${value})", "mask_timestamp(14, true, ${value})")),
+        treatmentsMetadata("date_trunc('HOUR', ${value})", "mask_timestamp(14, true, ${value})")),
       StructField("balance", DecimalType(6, 2), nullable = true,
-        mkMeta("mask_decimal(CAST(5.00 AS DECIMAL(4,2)), true, ${value})"))))
+        treatmentsMetadata("mask_decimal(CAST(5.00 AS DECIMAL(4,2)), true, ${value})"))))
     val rows = Seq(
       Row("Alice", "keep-1", java.sql.Timestamp.valueOf("2016-12-18 21:46:54"), new java.math.BigDecimal("96.37")),
       Row("Bob", "keep-2", java.sql.Timestamp.valueOf("2017-01-02 03:04:05"), new java.math.BigDecimal("10.00")),
@@ -106,7 +102,7 @@ class MaskTransformSpec extends AnyFunSuite {
   test("backquote-needing column names survive (Q5 fix)") {
     MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
     val schema = StructType(Seq(
-      StructField("weird name-col", StringType, nullable = true, mkMeta("mask_string(16, true, ${value})"))))
+      StructField("weird name-col", StringType, nullable = true, treatmentsMetadata("mask_string(16, true, ${value})"))))
     val df = spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("v1"))), schema)
     val out = MaskTransform(df).collect()
     assert(out(0).getString(0).length === 16)
@@ -165,7 +161,7 @@ class MaskTransformSpec extends AnyFunSuite {
     MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
     val schema = StructType(Seq(
       StructField("pan", StringType, nullable = true,
-        mkMeta("mask_fpe('0123456789', 'pan', ${value})"))))
+        treatmentsMetadata("mask_fpe('0123456789', 'pan', ${value})"))))
     val rows = Seq(Row("4111-1111-1111-1111"), Row("12"), Row(null: String))
     val out = MaskTransform(
       spark.createDataFrame(spark.sparkContext.parallelize(rows, 1), schema)).collect()
@@ -180,9 +176,7 @@ class MaskTransformSpec extends AnyFunSuite {
 
   test("empty treatments array fails naming the field, not with a bare ParseException") {
     import spark.implicits._
-    val meta = new org.apache.spark.sql.types.MetadataBuilder()
-      .putMetadata("mask", new org.apache.spark.sql.types.MetadataBuilder()
-        .putStringArray("treatments", Array.empty).build()).build()
+    val meta = treatmentsMetadata()
     val df = Seq("x").toDF("c").select(org.apache.spark.sql.functions.col("c").as("c", meta))
     val e = intercept[Exception] { MaskTransform(df) }
     assert(e.getMessage.contains("'c'") && e.getMessage.contains("empty"))

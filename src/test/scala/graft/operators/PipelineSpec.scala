@@ -153,4 +153,53 @@ class PipelineSpec extends AnyFunSuite {
     assert(spark.table("pl5_csv").rdd.getNumPartitions === 2)
     Seq("pl5_csv", "pl5_up").foreach(spark.catalog.dropTempView)
   }
+
+  test("MetadataTransform adds the mask key on top of a column's other metadata") {
+    graft.functions.MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
+    val comment = new MetadataBuilder().putString("comment", "pii").build()
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(1L, "alice"), Row(2L, "bob"))),
+      StructType(Seq(StructField("id", LongType),
+        StructField("secret", StringType, nullable = true, comment))))
+      .createOrReplaceTempView("plm_raw")
+    val conf =
+      """stages = [
+        |  { type = MetadataTransform, name = meta, inputView = plm_raw, outputView = plm_typed,
+        |    treatments { secret = "mask_string(16, true, ${value})" } }
+        |  { type = MaskDataTransform, name = mask, inputView = plm_typed, outputView = plm_masked }
+        |]""".stripMargin
+    val Right(Some(df)) = StageConfig.runPipeline(spark, conf, "test"): @unchecked
+    val meta = df.schema("secret").metadata
+    assert(meta.getString("comment") === "pii")
+    assert(meta.getMetadata(MaskTransform.MaskKey).getStringArray(MaskTransform.TreatmentsKey).toSeq ===
+      Seq("mask_string(16, true, ${value})"))
+    assert(df.collect().map(_.getString(1)).forall(_.length === 16))
+    Seq("plm_raw", "plm_typed", "plm_masked").foreach(spark.catalog.dropTempView)
+  }
+
+  test("file entry points: a .conf including a shared stage fragment runs end to end") {
+    publishRaw("plf_raw")
+    val dir = java.nio.file.Files.createTempDirectory("graft_plf")
+    val fragment = java.nio.file.Files.writeString(dir.resolve("mask_stage.conf"),
+      """type = MaskDataTransform
+        |name = "shared mask"
+        |inputView = plf_typed
+        |outputView = plf_masked
+        |""".stripMargin)
+    val main = java.nio.file.Files.writeString(dir.resolve("pipeline.conf"),
+      """stages = [
+        |  { type = MetadataTransform, name = meta, inputView = plf_raw, outputView = plf_typed,
+        |    treatments { secret = "mask_string(16, true, ${value})" } }
+        |  { include "mask_stage.conf" }
+        |]""".stripMargin)
+    val Right(stage) = StageConfig.parseHoconFile(fragment.toString): @unchecked
+    assert(stage.name === "shared mask" && stage.outputView === "plf_masked")
+    val Right(stages) = StageConfig.parsePipelineFile(main.toString): @unchecked
+    assert(stages.map(_.stageType) === List("MetadataTransform", "MaskDataTransform"))
+    val Right(Some(df)) = StageConfig.runPipelineFile(spark, main.toString, "test"): @unchecked
+    val masked = df.collect().map(_.getString(1))
+    assert(masked.length === 3 && masked.forall(_.length === 16) && !masked.contains("alice"))
+    Seq("plf_raw", "plf_typed", "plf_masked").foreach(spark.catalog.dropTempView)
+    Seq(fragment, main, dir).foreach(java.nio.file.Files.delete)
+  }
 }

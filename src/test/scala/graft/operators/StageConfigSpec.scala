@@ -7,7 +7,7 @@ import graft.SparkTestBase
 class StageConfigSpec extends AnyFunSuite {
 
   test("valid config parses to a typed stage with defaults") {
-    val Right(stage) = StageConfig.parseJson(
+    val Right(stage) = StageConfig.parseHocon(
       """{"type":"MaskDataTransform","name":"mask","environments":["test"],
         |"inputView":"in_v","outputView":"out_v"}""".stripMargin): @unchecked
     assert(stage.name === "mask")
@@ -16,7 +16,7 @@ class StageConfigSpec extends AnyFunSuite {
   }
 
   test("errors accumulate: unknown keys + every missing field reported at once") {
-    val Left(errors) = StageConfig.parseJson(
+    val Left(errors) = StageConfig.parseHocon(
       """{"typo":"x","another":"y","persist":"maybe"}"""): @unchecked
     assert(errors.exists(_.contains("Unknown option 'typo'")))
     assert(errors.exists(_.contains("Unknown option 'another'")))
@@ -28,8 +28,16 @@ class StageConfigSpec extends AnyFunSuite {
   }
 
   test("non-object json is rejected") {
-    assert(StageConfig.parseJson("[1,2,3]").isLeft)
-    assert(StageConfig.parseJson("not json").isLeft)
+    assert(StageConfig.parseHocon("[1,2,3]").isLeft)
+    assert(StageConfig.parseHocon("not json").isLeft)
+  }
+
+  test("a single-stage document declaring another stage type is rejected") {
+    val Left(errors) = StageConfig.parseHocon(
+      "type = ParquetLoad\nname = x\ninputView = a\noutputView = b"): @unchecked
+    assert(errors === List("'type' must be MaskDataTransform, not 'ParquetLoad'."))
+    val Right(_) = StageConfig.parseHocon(
+      "type = MaskDataTransform\nname = x\ninputView = a\noutputView = b"): @unchecked
   }
 
   test("environments gate: stage skipped when active env not listed, run when it is") {
@@ -37,8 +45,7 @@ class StageConfigSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     graft.functions.MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
-    val meta = new MetadataBuilder().putMetadata("mask",
-      new MetadataBuilder().putStringArray("treatments", Array("mask_string(16, true, ${value})")).build()).build()
+    val meta = MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")
     val schema = StructType(Seq(StructField("secret", StringType, nullable = true, meta)))
     spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("sensitive"))), schema)
       .createOrReplaceTempView("env_in")
@@ -54,11 +61,64 @@ class StageConfigSpec extends AnyFunSuite {
     val cfg2 = """{"name":"mask","inputView":"env_in","outputView":"env_out2"}"""
     assert(StageConfig.runIfEnvironment(spark, cfg2, "anything").toOption.get.isDefined)
     // malformed environments accumulates an error
-    val Left(errs) = StageConfig.parseJson(
+    val Left(errs) = StageConfig.parseHocon(
       """{"name":"m","environments":"prod","inputView":"a","outputView":"b"}"""): @unchecked
     assert(errs.exists(_.contains("'environments' must be an array of strings")))
     spark.catalog.dropTempView("env_out")
     spark.catalog.dropTempView("env_out2")
+  }
+
+  test("golden error lists: every stage type reports the same strings in the same order") {
+    // one config per stage type with an unknown key, a wrongly typed field
+    // and a missing required field; unknown keys come first (sorted), then
+    // field errors in the type's field order
+    val cases = Seq(
+      """{ type = MaskDataTransform, name = "", description = [x], environments = prod,
+        |  outputView = b, persist = maybe, params = 5, zeta = 1, alpha = 2 }""".stripMargin -> Seq(
+        "stage 0 (unnamed): Unknown option 'alpha'.",
+        "stage 0 (unnamed): Unknown option 'zeta'.",
+        "stage 0 (unnamed): 'name' must be a non-empty string.",
+        "stage 0 (unnamed): 'description' must be a string.",
+        "stage 0 (unnamed): 'environments' must be an array of strings.",
+        "stage 0 (unnamed): Missing required attribute 'inputView'.",
+        "stage 0 (unnamed): 'persist' must be a boolean.",
+        "stage 0 (unnamed): 'params' must be an object of scalar values."),
+      """{ type = ParquetExtract, name = p, inputURI = 7, persist = 1, numPartitions = 0,
+        |  header = true, extra = x }""".stripMargin -> Seq(
+        "stage 0 ('p'): Unknown option 'extra'.",
+        "stage 0 ('p'): Unknown option 'header'.",
+        "stage 0 ('p'): 'inputURI' must be a non-empty string.",
+        "stage 0 ('p'): Missing required attribute 'outputView'.",
+        "stage 0 ('p'): 'persist' must be a boolean.",
+        "stage 0 ('p'): 'numPartitions' must be a positive integer."),
+      """{ type = DelimitedExtract, name = d, environments = [a, 2], outputView = v,
+        |  header = yes, numPartitions = many, inputUri = x }""".stripMargin -> Seq(
+        "stage 0 ('d'): Unknown option 'inputUri'.",
+        "stage 0 ('d'): 'environments' must be an array of strings.",
+        "stage 0 ('d'): Missing required attribute 'inputURI'.",
+        "stage 0 ('d'): 'header' must be a boolean.",
+        "stage 0 ('d'): 'numPartitions' must be an integer."),
+      """{ type = MetadataTransform, name = t, outputView = [b], treatments {},
+        |  params { a = b } }""".stripMargin -> Seq(
+        "stage 0 ('t'): Unknown option 'params'.",
+        "stage 0 ('t'): Missing required attribute 'inputView'.",
+        "stage 0 ('t'): 'outputView' must be a non-empty string.",
+        "stage 0 ('t'): 'treatments' must map at least one column to a treatment expression."),
+      """{ type = SQLTransform, description = 3, sql = "SELECT 1", persist = "true",
+        |  sqlParams = [x], inputView = a }""".stripMargin -> Seq(
+        "stage 0 (unnamed): Unknown option 'inputView'.",
+        "stage 0 (unnamed): Missing required attribute 'name'.",
+        "stage 0 (unnamed): 'description' must be a string.",
+        "stage 0 (unnamed): Missing required attribute 'outputView'.",
+        "stage 0 (unnamed): 'sqlParams' must be an object of scalar values."),
+      """{ type = ParquetLoad, name = l, inputView = a, numPartitions = 99999999999,
+        |  persist = true }""".stripMargin -> Seq(
+        "stage 0 ('l'): Unknown option 'persist'.",
+        "stage 0 ('l'): Missing required attribute 'outputURI'.",
+        "stage 0 ('l'): 'numPartitions' must be an integer."))
+    cases.foreach { case (stage, expected) =>
+      assert(StageConfig.parsePipeline(s"stages = [ $stage ]") === Left(expected.toList), stage)
+    }
   }
 
   test("run executes the configured stage end to end") {
@@ -66,8 +126,7 @@ class StageConfigSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     import org.apache.spark.sql.Row
     graft.functions.MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
-    val meta = new MetadataBuilder().putMetadata("mask",
-      new MetadataBuilder().putStringArray("treatments", Array("mask_string(16, true, ${value})")).build()).build()
+    val meta = MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")
     val schema = StructType(Seq(StructField("secret", StringType, nullable = true, meta)))
     spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("sensitive"))), schema)
       .createOrReplaceTempView("sc_in")

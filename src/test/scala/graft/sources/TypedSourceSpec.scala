@@ -4,15 +4,12 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
+import graft.operators.MaskTransform
 // (typo'd-spec guard test appended at the bottom of this suite)
 
 class TypedSourceSpec extends AnyFunSuite {
 
   private lazy val spark = SparkTestBase.spark
-
-  private def maskMeta(treatments: String*): Metadata =
-    new MetadataBuilder().putMetadata("mask",
-      new MetadataBuilder().putStringArray("treatments", treatments.toArray).build()).build()
 
   // messy raw rows mirroring the SHAPE of the reference's userdata fixture
   // (padded strings, dd/MM/uuuu dates, explicit null markers) — data is ours
@@ -27,7 +24,7 @@ class TypedSourceSpec extends AnyFunSuite {
 
   private val specs = Seq(
     TypedSource.ColumnSpec("first_name", "string", trim = true, nullableValues = Seq("NULL", ""),
-      metadata = maskMeta("mask_string(16, true, ${value})")),
+      metadata = MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")),
     TypedSource.ColumnSpec("registered", "date", trim = true, nullableValues = Seq(""),
       formatters = Seq("dd/MM/uuuu")),
     TypedSource.ColumnSpec("created_at", "timestamp", nullableValues = Seq(""),

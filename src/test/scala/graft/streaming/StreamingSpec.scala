@@ -194,9 +194,7 @@ class StreamingSpec extends AnyFunSuite {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     graft.functions.MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
-    val meta = new org.apache.spark.sql.types.MetadataBuilder().putMetadata("mask",
-      new org.apache.spark.sql.types.MetadataBuilder()
-        .putStringArray("treatments", Array("mask_string(16, true, ${value})")).build()).build()
+    val meta = graft.operators.MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")
     val input = MemoryStream[(Long, String)]
     input.toDF().select(col("_1").as("id"), col("_2").as("name", meta))
       .createOrReplaceTempView("mask_stream_in")
@@ -405,8 +403,7 @@ class StreamingSpec extends AnyFunSuite {
     import org.apache.spark.sql.types._
     graft.functions.MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
     val input = MemoryStream[String]
-    val meta = new MetadataBuilder().putMetadata("mask",
-      new MetadataBuilder().putStringArray("treatments", Array("mask_string(16, true, ${value})")).build()).build()
+    val meta = graft.operators.MaskTransform.treatmentsMetadata("mask_string(16, true, ${value})")
     val tagged = input.toDF().select(col("value").as("name", meta))
     val masked = graft.operators.MaskTransform(tagged)
     assert(masked.isStreaming, "masking must not break streaming")
