@@ -1,566 +1,123 @@
 package graft.operators
 
-import scala.collection.mutable
+import java.io.File
+import java.net.URL
 
-/** Minimal HOCON parser for stage configs.
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.typesafe.config._
+
+/** Stage documents are HOCON, parsed by Typesafe Config — the library the
+  * reference's host framework hands each stage its `Config` from (reference
+  * `MaskDataTransform.scala:52-59`), so graft accepts exactly the
+  * documents the reference accepts. This object only adapts the result to
+  * the plain tree [[StageConfig]] validates: objects become `Map`, lists
+  * `List`, whole numbers `Long`.
   *
-  * The reference's config surface is Typesafe-Config HOCON
-  * (/root/reference/src/main/scala/ai/tripl/arc/transform/MaskDataTransform.scala:52-59)
-  * — users hold `.conf` files with comments, unquoted keys and
-  * substitutions, none of which strict JSON accepts. Spark does not bundle
-  * typesafe-config, so this implements the subset those files actually use,
-  * per the public HOCON spec:
+  * Three policies sit on top of Typesafe's defaults:
+  *  - [[parse]] has no file to resolve against, so any `include` there is
+  *    an error naming [[parseFile]] (Typesafe would skip it silently);
+  *  - `include url(...)`, or a bare include naming a URL, is an error: the
+  *    config parser does no network I/O;
+  *  - every unresolved `${...}` is reported, not only the first one.
   *
-  *  - `//` and `#` comments
-  *  - braceless root object; `=` or `:` key separators; a separator may be
-  *    omitted before `{`
-  *  - newline OR comma as element separator in objects and arrays
-  *  - unquoted keys, dotted key paths (`a.b.c = v` nests), quoted keys
-  *    (`"a.b"` stays literal)
-  *  - quoted strings with the JSON escapes, unquoted strings to end of line
-  *  - triple-quoted (`"""..."""`) raw strings, Python-style: newlines kept,
-  *    no escape processing; in a run of four or more closing quotes the
-  *    delimiter is the LAST three and earlier quotes are content (spec's
-  *    multi-line string rule)
-  *  - numbers (long/double), `true`/`false`/`null`
-  *  - duplicate keys: last wins, except two objects which deep-merge
-  *  - `${path}` / `${?path}` substitutions, resolved against the document
-  *    first and the process environment second; unresolvable `${path}` is an
-  *    error, unresolvable `${?path}` disappears (its key is dropped, or it
-  *    contributes an empty string inside a concatenation)
-  *  - string value concatenation of literal and substitution parts
-  *
-  *  - `include` directives — `include "x"`, `include required(...)`,
-  *    `include file("x")`, `include classpath("x")` — via an explicit
-  *    [[IncludeResolver]] passed to [[parseWithIncludes]] or implied by
-  *    [[parseFile]] (file-relative, the Typesafe-Config behavior). The
-  *    plain-string [[parse]] entry point has no resolution context, so an
-  *    `include` there is a LOUD error naming the includes-capable entry
-  *    points — never a silent skip. `include url(...)` is always rejected
-  *    (a config parser embedded in a query engine does not do network I/O).
-  *    Included objects merge at the include point with the spec's
-  *    duplicate-key semantics (objects deep-merge, scalars last-wins), and
-  *    substitutions in included files resolve against the fully merged
-  *    document. A depth cap of 64 turns include cycles into a parse error.
-  *
-  * Parse failures are fail-fast (one structural error); the accumulating
-  * validation contract lives in [[StageConfig.parse]] on the resulting map.
+  * `file("x")` includes resolve against the including file's directory
+  * (Typesafe's default resolves them against the working directory).
+  * Errors carry the line they come from.
   */
 object Hocon {
 
-  private case class Sub(path: String, optional: Boolean)
-  private case class Concat(parts: List[Any])
-
-  /** Supplies the raw text of an include target plus the resolver to use
-    * for includes nested inside it (so file includes stay relative to the
-    * including file, not the process working directory). `kind` is
-    * `"file"`, `"classpath"` or `"heuristic"` (a bare `include "x"`).
-    * Returning None means "not found" — a parse error for
-    * `include required(...)`, a spec-mandated silent skip otherwise. */
-  trait IncludeResolver {
-    def resolve(kind: String, target: String): Option[(String, IncludeResolver)]
-  }
-
-  private val MaxIncludeDepth = 64
-
   def parse(text: String): Either[List[String], Map[String, Any]] =
-    parseInternal(text, None)
+    load(ConfigFactory.parseString(text, options(includes = false)))
 
-  def parseWithIncludes(text: String, resolver: IncludeResolver): Either[List[String], Map[String, Any]] =
-    parseInternal(text, Some(resolver))
+  /** Parse a `.conf` file; includes resolve relative to the including file,
+    * then against the classpath, as Typesafe Config resolves them. */
+  def parseFile(path: String): Either[List[String], Map[String, Any]] =
+    load(ConfigFactory.parseFile(new File(path),
+      options(includes = true).setAllowMissing(false).setSyntax(ConfigSyntax.CONF)))
 
-  /** Parse a `.conf` file; includes resolve relative to the file's own
-    * directory first (then `<target>.conf`, then the classpath), matching
-    * the public Typesafe-Config heuristic users migrate from. */
-  def parseFile(path: String): Either[List[String], Map[String, Any]] = {
-    val p = java.nio.file.Paths.get(path).toAbsolutePath
-    if (!java.nio.file.Files.isRegularFile(p)) Left(List(s"config file not found: $path"))
-    else parseWithIncludes(
-      new String(java.nio.file.Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8),
-      fileResolver(p.getParent))
-  }
+  private def options(includes: Boolean): ConfigParseOptions =
+    ConfigParseOptions.defaults.setIncluder(new Includer(includes, fallback = null))
 
-  /** File-relative resolver rooted at `baseDir`; nested includes re-root at
-    * each included file's parent directory. */
-  def fileResolver(baseDir: java.nio.file.Path): IncludeResolver = new IncludeResolver {
-    import java.nio.file.{Files, Path}
-    private def fromFile(p: Path): Option[(String, IncludeResolver)] =
-      if (Files.isRegularFile(p))
-        Some((new String(Files.readAllBytes(p), java.nio.charset.StandardCharsets.UTF_8),
-              fileResolver(p.toAbsolutePath.getParent)))
-      else None
-    private def fromClasspath(name: String): Option[(String, IncludeResolver)] = {
-      val cl = Thread.currentThread.getContextClassLoader
-      Option(cl.getResourceAsStream(name)).map { in =>
-        val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-        // nested heuristic/classpath includes resolve within the resource's package path
-        val prefix = name.lastIndexOf('/') match { case -1 => ""; case k => name.substring(0, k + 1) }
-        (text, classpathResolver(prefix, baseDir))
-      }
-    }
-    def resolve(kind: String, target: String): Option[(String, IncludeResolver)] = kind match {
-      case "file" => fromFile(baseDir.resolve(target))
-      case "classpath" => fromClasspath(target)
-      case _ => // heuristic: file-relative, then `.conf` suffix, then classpath
-        fromFile(baseDir.resolve(target))
-          .orElse(if (!target.contains('.')) fromFile(baseDir.resolve(target + ".conf")) else None)
-          .orElse(fromClasspath(target))
-    }
-  }
-
-  private def classpathResolver(prefix: String, fileBase: java.nio.file.Path): IncludeResolver =
-    new IncludeResolver {
-      def resolve(kind: String, target: String): Option[(String, IncludeResolver)] = kind match {
-        case "file" => fileResolver(fileBase).resolve("file", target)
-        case _ =>
-          val cl = Thread.currentThread.getContextClassLoader
-          def load(name: String): Option[(String, IncludeResolver)] =
-            Option(cl.getResourceAsStream(name)).map { in =>
-              val text = try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
-              val p = name.lastIndexOf('/') match { case -1 => ""; case k => name.substring(0, k + 1) }
-              (text, classpathResolver(p, fileBase))
-            }
-          load(prefix + target)
-            .orElse(if (!target.contains('.')) load(prefix + target + ".conf") else None)
-            .orElse(load(target))
-      }
-    }
-
-  private def parseInternal(text: String, resolver: Option[IncludeResolver]): Either[List[String], Map[String, Any]] =
+  private def load(parsed: => Config): Either[List[String], Map[String, Any]] =
     try {
-      val p = new Parser(text, resolver, 0)
-      val raw = p.parseRoot()
-      new Resolver(raw).resolve() match {
-        case Left(errs) => Left(errs)
-        case Right(m) => Right(m)
+      // a cycle throws even here, with Typesafe's own text naming it
+      val root = parsed.resolve(ConfigResolveOptions.defaults.setAllowUnresolved(true)).root
+      unresolved(root).sorted.map(_._2).distinct match {
+        case Nil => Right(toScala(root).asInstanceOf[Map[String, Any]])
+        case errors => Left(errors)
       }
-    } catch {
-      case e: HoconError => Left(List(e.getMessage))
-    }
+    } catch { case e: ConfigException => Left(List(describe(e))) }
 
-  private final class HoconError(msg: String) extends RuntimeException(msg)
-
-  private final class Parser(s: String, resolver: Option[IncludeResolver], depth: Int) {
-    private var i = 0
-    private var line = 1
-
-    private def fail(msg: String): Nothing =
-      throw new HoconError(s"HOCON parse error at line $line: $msg")
-
-    private def peek: Char = if (i < s.length) s.charAt(i) else '\u0000'
-    private def atEnd: Boolean = i >= s.length
-
-    private def advance(): Char = {
-      val c = s.charAt(i)
-      if (c == '\n') line += 1
-      i += 1
-      c
-    }
-
-    /** Skip spaces/tabs/CR and comments; returns true if a newline was
-      * crossed (the implicit element separator). */
-    private def skipWs(crossLines: Boolean): Boolean = {
-      var nl = false
-      var done = false
-      while (!done && !atEnd) {
-        val c = peek
-        if (c == '\n') {
-          if (!crossLines) done = true
-          else { nl = true; advance() }
-        } else if (c == ' ' || c == '\t' || c == '\r') advance()
-        else if (c == '#' || (c == '/' && i + 1 < s.length && s.charAt(i + 1) == '/')) {
-          while (!atEnd && peek != '\n') advance()
-        } else done = true
+  /** (line, error) for every value still unresolved: resolving the value on
+    * its own yields Typesafe's strict message for the substitution in it. */
+  private def unresolved(v: ConfigValue): List[(Int, String)] = v match {
+    case o: ConfigObject => o.values.asScala.toList.flatMap(unresolved)
+    case l: ConfigList => l.asScala.toList.flatMap(unresolved)
+    case _ =>
+      try { v.valueType; Nil }
+      catch { case _: ConfigException.NotResolved =>
+        try { v.atKey("value").resolve(); Nil }
+        catch { case e: ConfigException => List((Option(e.origin).fold(-1)(_.lineNumber), describe(e))) }
       }
-      nl
-    }
+  }
 
-    def parseRoot(): Map[String, Any] = {
-      skipWs(crossLines = true)
-      val root =
-        if (peek == '{') { advance(); parseObjectBody(braced = true) }
-        else parseObjectBody(braced = false)
-      skipWs(crossLines = true)
-      if (!atEnd) fail(s"unexpected content after document end: '${peek}'")
-      root
-    }
-
-    private def parseObjectBody(braced: Boolean): Map[String, Any] = {
-      val acc = mutable.LinkedHashMap[String, Any]()
-      var needSep = false
-      var done = false
-      while (!done) {
-        val crossedNl = skipWs(crossLines = true)
-        if (atEnd) {
-          if (braced) fail("unterminated object (missing '}')")
-          done = true
-        } else if (peek == '}') {
-          if (!braced) fail("unexpected '}'")
-          advance()
-          done = true
-        } else {
-          if (needSep && !crossedNl) {
-            if (peek == ',') { advance(); skipWs(crossLines = true) }
-            else fail(s"expected ',' or newline between object entries, got '${peek}'")
-          } else if (peek == ',') advance()
-          if (!atEnd && peek != '}') {
-            if (tryParseInclude(acc)) { needSep = true }
-            else {
-            val path = parseKeyPath()
-            skipWs(crossLines = false)
-            val value = peek match {
-              case ':' | '=' => advance(); skipWs(crossLines = false); parseValue()
-              case '{' => advance(); parseObjectBody(braced = true)
-              case '+' if i + 1 < s.length && s.charAt(i + 1) == '=' =>
-                fail("'+=' append is not supported")
-              case c => fail(s"expected ':', '=' or '{' after key '${path.mkString(".")}', got '$c'")
-            }
-            mergeAt(acc, path, value)
-            needSep = true
-            }
-          }
-        }
-      }
-      acc.toMap
-    }
-
-    /** If the cursor sits on an `include` DIRECTIVE (unquoted `include`,
-      * whitespace, then a target form), consume it, merge the included
-      * object into `acc`, and return true. `include` used as a plain key
-      * (`include = 5`, `"include" : x`) is left for the normal key path —
-      * the cursor is restored and false returned. */
-    private def tryParseInclude(acc: mutable.LinkedHashMap[String, Any]): Boolean = {
-      if (!s.regionMatches(i, "include", 0, 7)) return false
-      val save = i; val saveLine = line
-      i += 7
-      val hadWs = peek == ' ' || peek == '\t'
-      skipWs(crossLines = false)
-      // a directive target is a quoted string or any `word(` call form — the
-      // latter reaches parseIncludeSpec so unknown qualifiers error by NAME
-      val looksLikeTarget = hadWs && (peek == '"' || {
-        var j = i
-        while (j < s.length && s.charAt(j).isLetter) j += 1
-        var k = j
-        while (k < s.length && (s.charAt(k) == ' ' || s.charAt(k) == '\t')) k += 1
-        j > i && k < s.length && s.charAt(k) == '('
-      })
-      if (!looksLikeTarget) { i = save; line = saveLine; return false }
-      val (kind, target, required) = parseIncludeSpec()
-      resolver match {
-        case None =>
-          fail("'include' directives need a resolution context: use Hocon.parseFile " +
-            "or Hocon.parseWithIncludes (plain Hocon.parse cannot locate included files)")
-        case Some(r) =>
-          if (depth >= MaxIncludeDepth)
-            fail(s"include depth exceeds $MaxIncludeDepth — include cycle?")
-          r.resolve(kind, target) match {
-            case None if required => fail(s"required include '$target' not found")
-            case None => // optional include, missing target: spec says skip silently
-            case Some((text, childResolver)) =>
-              val m = new Parser(text, Some(childResolver), depth + 1).parseRoot()
-              m.foreach { case (k, v) => mergeAt(acc, List(k), v) }
-          }
-      }
-      true
-    }
-
-    /** Target forms: `"path"`, `required(<inner>)`, `file("path")`,
-      * `classpath("path")`. `url(...)` is rejected loudly. */
-    private def parseIncludeSpec(): (String, String, Boolean) =
-      if (peek == '"') {
-        val t = if (s.regionMatches(i, "\"\"\"", 0, 3)) parseTripleQuoted() else parseQuotedString()
-        ("heuristic", t, false)
-      } else {
-        val sb = new StringBuilder
-        while (!atEnd && peek.isLetter) sb += advance()
-        val word = sb.result()
-        skipWs(crossLines = false)
-        if (peek != '(') fail(s"expected '(' after include $word")
-        advance(); skipWs(crossLines = false)
-        word match {
-          case "required" =>
-            val (k, t, _) = parseIncludeSpec()
-            skipWs(crossLines = false)
-            if (peek != ')') fail("expected ')' closing include required(...)")
-            advance()
-            (k, t, true)
-          case "file" | "classpath" =>
-            if (peek != '"') fail(s"expected a quoted path inside include $word(...)")
-            val t = parseQuotedString()
-            skipWs(crossLines = false)
-            if (peek != ')') fail(s"expected ')' closing include $word(...)")
-            advance()
-            (word, t, false)
-          case "url" =>
-            fail("include url(...) is not supported: the config parser does no network I/O")
-          case other => fail(s"unknown include qualifier '$other'")
-        }
-      }
-
-    /** Deep-merge `value` into `acc` at the dotted path: objects merge
-      * key-by-key, anything else replaces (last wins). */
-    private def mergeAt(acc: mutable.LinkedHashMap[String, Any], path: List[String], value: Any): Unit =
-      path match {
-        case key :: Nil =>
-          (acc.get(key), value) match {
-            case (Some(old: Map[_, _]), nw: Map[_, _]) =>
-              val m = mutable.LinkedHashMap[String, Any]()
-              old.asInstanceOf[Map[String, Any]].foreach { case (k, v) => m(k) = v }
-              nw.asInstanceOf[Map[String, Any]].foreach { case (k, v) => mergeAt(m, List(k), v) }
-              acc(key) = m.toMap
-            case _ => acc(key) = value
-          }
-        case key :: rest =>
-          val nested = mutable.LinkedHashMap[String, Any]()
-          acc.get(key) match {
-            case Some(old: Map[_, _]) =>
-              old.asInstanceOf[Map[String, Any]].foreach { case (k, v) => nested(k) = v }
-            case _ =>
-          }
-          mergeAt(nested, rest, value)
-          acc(key) = nested.toMap
-        case Nil => fail("empty key path")
-      }
-
-    private def parseKeyPath(): List[String] = {
-      val parts = mutable.ListBuffer[String]()
-      var done = false
-      while (!done) {
-        skipWs(crossLines = false)
-        if (peek == '"') {
-          if (s.regionMatches(i, "\"\"\"", 0, 3)) parts += parseTripleQuoted()
-          else parts += parseQuotedString()
-        } else {
-          val sb = new StringBuilder
-          while (!atEnd && !":=.{}\n,#\" \t\r".contains(peek)) sb += advance()
-          if (sb.isEmpty) fail("expected a key")
-          parts += sb.result()
-        }
-        skipWs(crossLines = false)
-        if (peek == '.') advance() else done = true
-      }
-      parts.toList
-    }
-
-    private def parseValue(): Any = peek match {
-      case '{' => advance(); parseObjectBody(braced = true)
-      case '[' => advance(); parseArray()
-      case _ => parseValueText()
-    }
-
-    private def parseArray(): List[Any] = {
-      val acc = mutable.ListBuffer[Any]()
-      var needSep = false
-      var done = false
-      while (!done) {
-        val crossedNl = skipWs(crossLines = true)
-        if (atEnd) fail("unterminated array (missing ']')")
-        else if (peek == ']') { advance(); done = true }
-        else {
-          if (needSep && !crossedNl) {
-            if (peek == ',') { advance(); skipWs(crossLines = true) }
-            else fail(s"expected ',' or newline between array entries, got '${peek}'")
-          } else if (peek == ',') advance()
-          skipWs(crossLines = true)
-          if (!atEnd && peek != ']') {
-            acc += (peek match {
-              case '{' => advance(); parseObjectBody(braced = true)
-              case '[' => advance(); parseArray()
-              case _ => parseValueText()
-            })
-            needSep = true
-          }
-        }
-      }
-      acc.toList
-    }
-
-    /** A scalar value: a sequence of quoted strings, substitutions and
-      * unquoted text up to the end of the value (newline, comma, closing
-      * bracket or comment). A single typed token stays typed; multiple
-      * parts concatenate as strings. */
-    private def parseValueText(): Any = {
-      val parts = mutable.ListBuffer[Any]()
-      var done = false
-      while (!done) {
-        val c = peek
-        if (atEnd || c == '\n' || c == ',' || c == '}' || c == ']' || c == '#') done = true
-        else if (c == '/' && i + 1 < s.length && s.charAt(i + 1) == '/') done = true
-        else if (c == '"') {
-          if (s.regionMatches(i, "\"\"\"", 0, 3)) parts += parseTripleQuoted()
-          else parts += parseQuotedString()
-        } else if (c == '$' && i + 1 < s.length && s.charAt(i + 1) == '{') {
-          advance(); advance()
-          val optional = peek == '?'
-          if (optional) advance()
-          val sb = new StringBuilder
-          while (!atEnd && peek != '}') sb += advance()
-          if (atEnd) fail("unterminated substitution ${...}")
-          advance()
-          parts += Sub(sb.result().trim, optional)
-        } else {
-          val sb = new StringBuilder
-          // a '$' that does not open a ${...} substitution is literal text;
-          // it is in the stop-set below, so consume it here or the scanner
-          // would make no progress (infinite loop on e.g. `price = US$5`)
-          if (peek == '$') sb += advance()
-          while (!atEnd && !"\n,}]#\"$".contains(peek) &&
-            !(peek == '/' && i + 1 < s.length && s.charAt(i + 1) == '/')) sb += advance()
-          val raw = sb.result()
-          if (raw.nonEmpty) parts += UnquotedText(raw)
-        }
-      }
-      parts.toList match {
-        case Nil => fail("expected a value")
-        case UnquotedText(t) :: Nil => typedScalar(t.trim)
-        case (one: String) :: Nil => one
-        case (one: Sub) :: Nil => one
-        case many => Concat(many.map {
-          case UnquotedText(t) => t
-          case other => other
-        })
-      }
-    }
-
-    private def typedScalar(t: String): Any = t match {
-      case "true" => true
-      case "false" => false
-      case "null" => null
-      case _ if t.matches("[+-]?[0-9]+") =>
-        try java.lang.Long.parseLong(t) catch { case _: NumberFormatException => t }
-      case _ if t.matches("[+-]?[0-9]+(\\.[0-9]+)?([eE][+-]?[0-9]+)?") => t.toDouble
+  private def toScala(v: ConfigValue): Any = v match {
+    case o: ConfigObject => o.asScala.map { case (k, x) => k -> toScala(x) }.toMap
+    case l: ConfigList => l.asScala.map(toScala).toList
+    case _ => v.unwrapped match {
+      case i: java.lang.Integer => i.toLong
       case other => other
-    }
-
-    /** `"""..."""` raw string: no escapes, newlines preserved. Per the
-      * public HOCON spec's multi-line string rule, in a run of more than
-      * three closing quotes the string ends at the LAST three — earlier
-      * quotes belong to the content (`""""a""""` is the string `"a"`). */
-    private def parseTripleQuoted(): String = {
-      i += 3 // opening delimiter (never contains a newline)
-      val sb = new StringBuilder
-      while (!s.regionMatches(i, "\"\"\"", 0, 3) ||
-             (i + 3 < s.length && s.charAt(i + 3) == '"')) {
-        if (atEnd) fail("unterminated triple-quoted string")
-        sb += advance()
-      }
-      i += 3 // closing delimiter
-      sb.result()
-    }
-
-    private def parseQuotedString(): String = {
-      if (advance() != '"') fail("expected '\"'")
-      val sb = new StringBuilder
-      var done = false
-      while (!done) {
-        if (atEnd) fail("unterminated string")
-        val c = advance()
-        if (c == '"') done = true
-        else if (c == '\n') fail("newline inside quoted string")
-        else if (c == '\\') {
-          if (atEnd) fail("unterminated escape")
-          advance() match {
-            case '"' => sb += '"'
-            case '\\' => sb += '\\'
-            case '/' => sb += '/'
-            case 'b' => sb += '\b'
-            case 'f' => sb += '\f'
-            case 'n' => sb += '\n'
-            case 'r' => sb += '\r'
-            case 't' => sb += '\t'
-            case 'u' =>
-              if (i + 4 > s.length) fail("truncated \\u escape")
-              val hex = s.substring(i, i + 4)
-              i += 4
-              try sb += Integer.parseInt(hex, 16).toChar
-              catch { case _: NumberFormatException => fail(s"invalid \\u escape '\\u$hex'") }
-            case other => fail(s"invalid escape '\\$other'")
-          }
-        } else sb += c
-      }
-      sb.result()
     }
   }
 
-  private case class UnquotedText(text: String)
+  /** `[<file> ]line N: <message>`, the origin's description swapped for its line. */
+  private def describe(e: ConfigException): String = Option(e.origin) match {
+    case Some(o) if o.lineNumber > 0 =>
+      val file = Option(o.filename).fold("")(f => s"${new File(f).getName} ")
+      s"${file}line ${o.lineNumber}: ${e.getMessage.stripPrefix(o.description + ": ")}"
+    case _ => e.getMessage
+  }
 
-  /** Resolves `Sub`/`Concat` nodes against the document root, then the
-    * process environment; accumulates every unresolvable required
-    * substitution instead of stopping at the first. */
-  private final class Resolver(root: Map[String, Any]) {
-    private val errs = mutable.ListBuffer[String]()
-    private val inFlight = mutable.Set[String]()
+  /** graft's include policy. `fallback` is Typesafe's default includer,
+    * which Typesafe hands over through [[withFallback]]; bare `include "x"`
+    * goes to it (file-relative, `.conf`/`.json`/`.properties` basename, then
+    * classpath). */
+  private final class Includer(includes: Boolean, fallback: ConfigIncluder)
+      extends ConfigIncluder with ConfigIncluderFile with ConfigIncluderURL with ConfigIncluderClasspath {
+    def withFallback(f: ConfigIncluder): ConfigIncluder = new Includer(includes, f)
 
-    def resolve(): Either[List[String], Map[String, Any]] = {
-      val out = resolveMap(root)
-      if (errs.nonEmpty) Left(errs.toList.distinct) else Right(out)
-    }
+    private def allowed(): Unit = if (!includes) throw new ConfigException.Generic(
+      "'include' directives need a resolution context: use Hocon.parseFile " +
+        "(plain Hocon.parse cannot locate included files)")
 
-    private object Dropped
-
-    private def resolveMap(m: Map[String, Any]): Map[String, Any] =
-      m.flatMap { case (k, v) =>
-        resolveValue(v) match {
-          case Dropped => None
-          case rv => Some(k -> rv)
-        }
+    def include(context: ConfigIncludeContext, what: String): ConfigObject =
+      Try(new URL(what)).toOption match {
+        case Some(url) => includeURL(context, url) // Typesafe would fetch a bare URL
+        case None => allowed(); fallback.include(context, what)
       }
 
-    private def resolveValue(v: Any): Any = v match {
-      case m: Map[_, _] => resolveMap(m.asInstanceOf[Map[String, Any]])
-      case l: List[_] => l.map(resolveValue).filter(_ != Dropped)
-      case Sub(path, optional) =>
-        lookup(path) match {
-          case Some(value) => value
-          case None if optional => Dropped
-          case None =>
-            errs += s"Could not resolve substitution '$${$path}'."
-            Dropped
-        }
-      case Concat(parts) =>
-        val resolved = parts.map {
-          case Sub(path, optional) =>
-            lookup(path) match {
-              case Some(value) => stringify(value)
-              case None if optional => ""
-              case None =>
-                errs += s"Could not resolve substitution '$${$path}'."
-                ""
-            }
-          case s: String => s
-          case other => stringify(other)
-        }
-        // HOCON trims exterior (not interior) whitespace of a concatenation
-        resolved.mkString.trim
-      case other => other
+    def includeURL(context: ConfigIncludeContext, what: URL): ConfigObject = {
+      allowed()
+      throw new ConfigException.Generic(
+        s"include url(...) is not supported: the config parser does no network I/O ($what)")
     }
 
-    private def stringify(v: Any): String = v match {
-      case null => "null"
-      case s: String => s
-      case other => other.toString
+    def includeResources(context: ConfigIncludeContext, what: String): ConfigObject = {
+      allowed()
+      ConfigFactory.parseResourcesAnySyntax(what, context.parseOptions).root
     }
 
-    private def lookup(path: String): Option[Any] = {
-      if (inFlight.contains(path)) {
-        errs += s"Substitution cycle involving '$${$path}'."
-        return None
-      }
-      val segs = path.split('.').toList
-      def walk(cur: Any, rest: List[String]): Option[Any] = rest match {
-        case Nil => Some(cur)
-        case h :: t => cur match {
-          case m: Map[_, _] => m.asInstanceOf[Map[String, Any]].get(h).flatMap(walk(_, t))
-          case _ => None
-        }
-      }
-      walk(root, segs) match {
-        case Some(raw) =>
-          inFlight += path
-          val r = resolveValue(raw)
-          inFlight -= path
-          if (r == Dropped) None else Some(r)
-        case None => sys.env.get(path)
+    /** `relativeTo` yields a file only when the sibling exists; otherwise
+      * it falls back to the classpath, which `file(...)` must not do. */
+    def includeFile(context: ConfigIncludeContext, what: File): ConfigObject = {
+      allowed()
+      Option(context.relativeTo(what.getPath)).flatMap(p => Option(p.origin.filename)) match {
+        case Some(f) => ConfigFactory.parseFile(new File(f), context.parseOptions).root
+        case None if context.parseOptions.getAllowMissing => ConfigFactory.empty.root
+        case None => throw new ConfigException.IO(ConfigOriginFactory.newFile(what.getPath),
+          "required include file not found")
       }
     }
   }

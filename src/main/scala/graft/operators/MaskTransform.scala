@@ -5,7 +5,6 @@ import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{DataType, DecimalType, Metadata, MetadataBuilder}
-import org.apache.spark.storage.StorageLevel
 
 /** Metadata-driven masking projection — the reference's one relational
   * operator (O1-O6, /root/reference/src/main/scala/ai/tripl/arc/transform/MaskDataTransform.scala:107-173),
@@ -107,15 +106,15 @@ object MaskTransform {
 
   /** Stage wrapper with the reference's dataflow contract: read a named view,
     * mask, publish the output view, optionally persist + instrument
-    * (records + rate, O5-O6). Returns the output frame and the stage detail
-    * map the reference logs. */
+    * (records + rate, O5-O6). Publishing and persisting go through
+    * [[StageConfig.publish]], the pipeline runner's own path. Returns the
+    * output frame and the stage detail map the reference logs. */
   def runStage(
       spark: org.apache.spark.sql.SparkSession,
       inputView: String,
       outputView: String,
       persist: Boolean = false): (DataFrame, Map[String, Any]) = {
     val outputDF = apply(spark.table(inputView))
-    outputDF.createOrReplaceTempView(outputView)
 
     var detail = Map[String, Any]("inputView" -> inputView, "outputView" -> outputView)
     if (!outputDF.isStreaming) {
@@ -126,19 +125,17 @@ object MaskTransform {
       // callers who cannot afford the planning pass use apply() directly,
       // which attaches no instrumentation.
       detail += ("numPartitions" -> outputDF.rdd.getNumPartitions)
-      if (persist) {
-        val start = System.currentTimeMillis()
-        outputDF.persist(StorageLevel.MEMORY_AND_DISK_SER)
-        val records = outputDF.count()
-        val elapsed = System.currentTimeMillis() - start
-        detail += ("records" -> records)
-        // "rate" keeps the reference's exact formula — integer ms-per-record
-        // (MaskDataTransform.scala:168 computes (endTime-startTime)/count),
-        // which floors to 0 for any stage faster than 1 ms/record; kept for
-        // dashboard parity, with the metric a human actually wants alongside
-        detail += ("rate" -> (if (records > 0) elapsed / records else 0L))
-        detail += ("recordsPerSecond" -> (records * 1000L / math.max(elapsed, 1L)))
-      }
+    }
+    val start = System.currentTimeMillis()
+    StageConfig.publish(outputDF, outputView, persist).foreach { records =>
+      val elapsed = System.currentTimeMillis() - start
+      detail += ("records" -> records)
+      // "rate" keeps the reference's exact formula — integer ms-per-record
+      // (MaskDataTransform.scala:168 computes (endTime-startTime)/count),
+      // which floors to 0 for any stage faster than 1 ms/record; kept for
+      // dashboard parity, with the metric a human actually wants alongside
+      detail += ("rate" -> (if (records > 0) elapsed / records else 0L))
+      detail += ("recordsPerSecond" -> (records * 1000L / math.max(elapsed, 1L)))
     }
     (outputDF, detail)
   }

@@ -1,5 +1,7 @@
 package graft.operators
 
+import java.util.concurrent.ConcurrentHashMap
+
 import scala.collection.mutable
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -13,11 +15,11 @@ import org.apache.spark.storage.StorageLevel
   * ACCUMULATION (all problems reported at once, not fail-fast), and a typed
   * stage value on success.
   *
-  * The reference reads HOCON through the host framework; the engine core
-  * accepts HOCON directly ([[Hocon]] — so a reference user's existing
-  * `.conf` files with comments, unquoted keys and substitutions migrate
-  * unchanged, and a JSON document is HOCON too) or an already-parsed map —
-  * the validation contract is the same on every path.
+  * The reference reads HOCON through its host framework's Typesafe Config;
+  * graft parses documents with the same library ([[Hocon]] — so a
+  * reference user's existing `.conf` files migrate unchanged, and a JSON
+  * document is HOCON too) or takes an already-parsed map — the validation
+  * contract is the same on every path.
   *
   * Beyond the single stage, [[runPipeline]] is the host-runner analog: the
   * reference's driver accepts a `{"stages": [...]}` document and walks the
@@ -325,15 +327,28 @@ object StageConfig {
         }
     }
 
-  /** Publish a frame as `outputView`; `persist` materializes it eagerly
+  /** The frame [[publish]] last persisted under each (session, view name). */
+  private val persisted = new ConcurrentHashMap[(SparkSession, String), DataFrame]()
+
+  /** Publish a frame as `outputView`, first releasing the frame an earlier
+    * publish persisted under that name (a rerun pipeline would otherwise
+    * pin every run's frames). `persist` materializes the frame eagerly
     * (MEMORY_AND_DISK_SER + count — the reference's persist contract) so
-    * later stages re-read the cache instead of recomputing the lineage. */
-  private def publish(df: DataFrame, outputView: String, persist: Boolean): DataFrame = {
+    * later stages re-read the cache instead of recomputing the lineage;
+    * the count is returned. Streaming frames are published, never persisted. */
+  private[operators] def publish(df: DataFrame, outputView: String, persist: Boolean): Option[Long] = {
+    val key = (df.sparkSession, outputView)
+    Option(persisted.remove(key)).foreach(_.unpersist())
     df.createOrReplaceTempView(outputView)
-    if (persist && !df.isStreaming) {
+    Option.when(persist && !df.isStreaming) {
       df.persist(StorageLevel.MEMORY_AND_DISK_SER)
+      persisted.put(key, df)
       df.count()
     }
+  }
+
+  private def published(df: DataFrame, outputView: String, persist: Boolean): DataFrame = {
+    publish(df, outputView, persist)
     df
   }
 
@@ -347,7 +362,7 @@ object StageConfig {
       }
       // repartition, not coalesce: the point is spreading a one-split file
       // across cores for downstream per-cell KDF work
-      publish(s.numPartitions.fold(raw)(raw.repartition), s.outputView, s.persist)
+      published(s.numPartitions.fold(raw)(raw.repartition), s.outputView, s.persist)
     case s: MetadataStage =>
       val df = spark.table(s.inputView)
       val missing = s.treatments.keySet.diff(df.columns.toSet)
@@ -361,12 +376,12 @@ object StageConfig {
             .withMetadata(MaskTransform.treatmentsMetadata(t)).build())
         }
       }
-      publish(df.select(projected.toIndexedSeq: _*), s.outputView, s.persist)
+      published(df.select(projected.toIndexedSeq: _*), s.outputView, s.persist)
     case s: SqlStage =>
       val stmt = s.sqlParams.foldLeft(s.sql) { case (acc, (k, v)) =>
         acc.replace("${" + k + "}", v)
       }
-      publish(spark.sql(stmt), s.outputView, s.persist)
+      published(spark.sql(stmt), s.outputView, s.persist)
     case s: LoadStage =>
       val df = spark.table(s.inputView)
       s.numPartitions.fold(df)(df.repartition).write.mode("overwrite").parquet(s.outputURI)

@@ -4,12 +4,12 @@ import org.scalacheck.Gen
 import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Property fuzz for the hand-built HOCON parser (judge r10 ask #6): the
-  * config path is the highest-risk divergence surface in the library, so
+/** Property fuzz for [[Hocon]], graft's adapter over Typesafe Config:
   * beyond HoconSpec's example-based cases these generate STRUCTURED random
   * documents — nested objects, substitutions, concatenations, includes —
   * and assert parse∘render fixpoints plus the error-accumulation contract
-  * (invalid input is ALWAYS `Left(errors)`, never an exception).
+  * (invalid input is ALWAYS `Left(errors)`, never an exception, and every
+  * unresolved substitution is reported).
   *
   * Raw ScalaCheck generators with fixed seeds (scalatestplus is not on the
   * classpath), mirroring the Round*PropertySpec house pattern. */
@@ -117,12 +117,12 @@ class HoconPropertySpec extends AnyFunSuite {
       val ownMap = own.toMap ++ Map("nest" -> Map("y" -> nested2))
       (inc, ownMap)
     }
-    samples(docGen, 0xCAFE03L, 80).foreach { case (inc, own) =>
+    val dir = java.nio.file.Files.createTempDirectory("hocon-prop-inc")
+    def write(name: String, text: String): java.nio.file.Path =
+      java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+    try samples(docGen, 0xCAFE03L, 80).foreach { case (inc, own) =>
       val incText = inc.map { case (k, v) => s"$k = ${render(v)}" }.mkString("\n")
-      val resolver: Hocon.IncludeResolver = new Hocon.IncludeResolver {
-        def resolve(kind: String, target: String): Option[(String, Hocon.IncludeResolver)] =
-          if (target == "inc.conf") Some((incText, this)) else None
-      }
+      write("inc.conf", incText)
       val ownText = own.map { case (k, v) => s"$k = ${render(v)}" }.mkString("\n")
       val text = "include \"inc.conf\"\n" + ownText
       // expected: include merges into an empty doc, then the includer's own
@@ -136,11 +136,13 @@ class HoconPropertySpec extends AnyFunSuite {
           case _ => throw new IllegalStateException
         })
       }.toMap
-      Hocon.parseWithIncludes(text, resolver) match {
+      Hocon.parseFile(write("main.conf", text).toString) match {
         case Right(m) => assert(m === expected, s"for document:\n$text\n--- include:\n$incText")
         case Left(errs) => fail(s"valid include doc rejected ($errs):\n$text")
       }
     }
+    finally Seq(dir.resolve("inc.conf"), dir.resolve("main.conf"), dir)
+      .foreach(java.nio.file.Files.deleteIfExists)
   }
 
   test("error accumulation: every missing required substitution is reported, none throws") {

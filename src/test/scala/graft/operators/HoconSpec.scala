@@ -108,13 +108,14 @@ class HoconSpec extends AnyFunSuite {
     }
   }
 
-  test("a literal '$' outside a substitution is value text, not a hang (advisor r5)") {
-    assert(ok("price = US$5")("price") === "US$5")
-    assert(ok("sigil = $")("sigil") === "$")
-    assert(ok("trail = abc$")("trail") === "abc$")
-    assert(ok("twin = $$")("twin") === "$$")
-    val m = ok("base = v\nc = $-${base}")
-    assert(m("c") === "$-v")
+  test("a literal '$' outside a substitution is rejected, not a hang") {
+    // HOCON reserves '$' in unquoted text for `${`; Typesafe Config (and so
+    // the reference) rejects a bare one, and quoting keeps it literal
+    assert(Hocon.parse("price = US$5").isLeft)
+    assert(Hocon.parse("sigil = $").isLeft)
+    assert(Hocon.parse("trail = abc$").isLeft)
+    assert(Hocon.parse("twin = $$").isLeft)
+    assert(Hocon.parse("base = v\nc = $-${base}").isLeft)
   }
 
   test("structural errors fail loudly with a line number") {
@@ -130,6 +131,13 @@ class HoconSpec extends AnyFunSuite {
   test("unsupported constructs are named in the error, never misparsed (judge r5)") {
     val Left(inc) = Hocon.parse("include \"other.conf\"\na = 1"): @unchecked
     assert(inc.exists(_.contains("'include' directives need a resolution context")))
+    // every include form, through every string entry point
+    for (doc <- Seq("include file(\"x.conf\")", "include classpath(\"x.conf\")",
+      "include required(\"x.conf\")\nstages = []")) {
+      for (errs <- Seq(Hocon.parse(doc), StageConfig.parseHocon(doc), StageConfig.parsePipeline(doc))
+        .map(_.left.getOrElse(Nil)))
+        assert(errs.exists(_.contains("'include' directives need a resolution context")), doc)
+    }
   }
 
   test("triple-quoted strings: raw, multi-line, no escape processing (judge r7)") {
@@ -149,7 +157,7 @@ class HoconSpec extends AnyFunSuite {
     assert(ok("\"\"\"k.ey\"\"\" = 1")("k.ey") === 1L)
     // unterminated is a loud error
     val Left(errs) = Hocon.parse("a = \"\"\"never closed"): @unchecked
-    assert(errs.exists(_.contains("unterminated triple-quoted string")))
+    assert(errs.exists(e => e.contains("triple-quoted string") && e.contains("still open")))
   }
 
   test("fuzz: random byte soup never hangs, never escapes Left/Right") {
@@ -301,7 +309,7 @@ class HoconSpec extends AnyFunSuite {
       assert(m === Map("a" -> 1L))
       val req = put(dir, "req.conf", "include required(\"nowhere.conf\")\na = 1\n")
       val Left(errs) = Hocon.parseFile(req.toString): @unchecked
-      assert(errs.exists(_.contains("required include 'nowhere.conf' not found")))
+      assert(errs.exists(_.contains("nowhere.conf")))
     }
   }
 
@@ -312,6 +320,11 @@ class HoconSpec extends AnyFunSuite {
       val main = put(dir, "main.conf", "include \"sub/mid.conf\"\ntop = 1\n")
       val Right(m) = Hocon.parseFile(main.toString): @unchecked
       assert(m === Map("deep" -> "yes", "mid" -> 1L, "top" -> 1L))
+      // file(...) too resolves against the including file's directory
+      put(dir, "sub/mid_file.conf", "include file(\"inner.conf\")\nmid = 1\n")
+      val viaFile = put(dir, "main_file.conf", "include file(\"sub/mid_file.conf\")\ntop = 1\n")
+      val Right(m2) = Hocon.parseFile(viaFile.toString): @unchecked
+      assert(m2 === m)
     }
   }
 
@@ -329,7 +342,7 @@ class HoconSpec extends AnyFunSuite {
       put(dir, "a.conf", "include \"b.conf\"\nx = 1\n")
       put(dir, "b.conf", "include \"a.conf\"\ny = 2\n")
       val Left(errs) = Hocon.parseFile(dir.resolve("a.conf").toString): @unchecked
-      assert(errs.exists(_.contains("include depth exceeds")))
+      assert(errs.exists(e => e.contains("cycle") && e.contains("a.conf") && e.contains("b.conf")))
     }
   }
 
@@ -340,14 +353,19 @@ class HoconSpec extends AnyFunSuite {
       assert(e1.exists(_.contains("include url(...) is not supported")))
       val q = put(dir, "q.conf", "include magic(\"x\")\n")
       val Left(e2) = Hocon.parseFile(q.toString): @unchecked
-      assert(e2.exists(_.contains("unknown include qualifier 'magic'")))
+      assert(e2.exists(_.contains("magic")))
+      // a bare include naming a URL is a url include too
+      val h = put(dir, "h.conf", "include \"http://example.com/x.conf\"\n")
+      val Left(e3) = Hocon.parseFile(h.toString): @unchecked
+      assert(e3.exists(_.contains("include url(...) is not supported")))
     }
   }
 
-  test("'include' as a plain key stays a field, directive only with a target form") {
-    // no resolver in plain parse, but these are FIELDS, not directives
-    assert(ok("include = 5")("include") === 5L)
-    assert(ok("include : sub")("include") === "sub")
+  test("'include' is a directive keyword; only its quoted form is a plain key") {
+    // HOCON reserves unquoted `include` for the directive; Typesafe Config
+    // (and so the reference) rejects it as a plain key
+    assert(Hocon.parse("include = 5").isLeft)
+    assert(Hocon.parse("include : sub").isLeft)
     assert(ok("\"include\" = quoted")("include") === "quoted")
     // nested objects can hold includes too
     withTempDir { dir =>

@@ -177,6 +177,37 @@ class PipelineSpec extends AnyFunSuite {
     Seq("plm_raw", "plm_typed", "plm_masked").foreach(spark.catalog.dropTempView)
   }
 
+  test("rerunning a persist = true pipeline releases the frames it persisted before") {
+    graft.functions.MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
+    val dir = java.nio.file.Files.createTempDirectory("graft_plr")
+    // two inputs, so the second run's frames are new plans, not cache hits
+    val inputs = Seq("alice", "bob").map { who =>
+      val path = dir.resolve(who).toString
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L, who))),
+        StructType(Seq(StructField("id", LongType), StructField("secret", StringType))))
+        .write.parquet(path)
+      path
+    }
+    def run(input: String): Int = {
+      val conf =
+        s"""stages = [
+           |  { type = ParquetExtract, name = extract, inputURI = "$input",
+           |    outputView = plr_raw, persist = true }
+           |  { type = MetadataTransform, name = meta, inputView = plr_raw, outputView = plr_typed,
+           |    treatments { secret = "mask_string(16, true, $${value})" } }
+           |  { type = MaskDataTransform, name = mask, inputView = plr_typed, outputView = plr_masked,
+           |    persist = true }
+           |]""".stripMargin
+      val Right(Some(df)) = StageConfig.runPipeline(spark, conf, "test"): @unchecked
+      assert(df.collect().map(_.getString(1)).forall(_.length === 16))
+      spark.sparkContext.getPersistentRDDs.size
+    }
+    val afterFirst = run(inputs(0))
+    assert(run(inputs(1)) === afterFirst, "the first run's persisted frames must be released")
+    Seq("plr_raw", "plr_masked").foreach(v => spark.table(v).unpersist())
+    Seq("plr_raw", "plr_typed", "plr_masked").foreach(spark.catalog.dropTempView)
+  }
+
   test("file entry points: a .conf including a shared stage fragment runs end to end") {
     publishRaw("plf_raw")
     val dir = java.nio.file.Files.createTempDirectory("graft_plf")

@@ -121,6 +121,44 @@ class StageConfigSpec extends AnyFunSuite {
     }
   }
 
+  test("golden: a mask_etl-shaped pipeline document parses to these typed stages") {
+    // the benchmark's document shape: newline-separated stage objects,
+    // quoted treatments holding ${value} and single-quoted SQL literals, a
+    // persisted SQL stage and a ParquetLoad with numPartitions
+    val treatments = Seq(
+      "holder" -> "mask_string(16, true, ${value})",
+      "card" -> "mask_string_alphabet_format(16, '0123456789', 'xxxx-xxxx-xxxx-xxxx', true, ${value})",
+      "birth_date" -> "mask_date(365, true, ${value})",
+      "created_at" -> "mask_timestamp(30, true, ${value})",
+      "balance" -> "mask_decimal(CAST(5.00 AS DECIMAL(4,2)), true, ${value})")
+    val treat = treatments.map { case (c, t) => s"""$c = "$t"""" }.mkString(", ")
+    val sql = "SELECT count(*) AS n, count(CASE WHEN length(holder) = 16 THEN 1 END) AS n_len16, " +
+      "sum(id) AS id_sum FROM pb_masked"
+    val conf =
+      s"""stages = [
+         |  { type = ParquetExtract, name = extract, environments = [bench],
+         |    inputURI = "/data/etl_in", outputView = pb_raw, persist = true, numPartitions = 4 }
+         |  { type = MetadataTransform, name = treatments, environments = [bench],
+         |    inputView = pb_raw, outputView = pb_typed, treatments { $treat } }
+         |  { type = MaskDataTransform, name = mask, environments = [bench],
+         |    inputView = pb_typed, outputView = pb_masked, persist = true }
+         |  { type = SQLTransform, name = summary, environments = [bench], persist = true,
+         |    sql = "$sql",
+         |    outputView = pb_summary }
+         |  { type = ParquetLoad, name = load, environments = [bench],
+         |    inputView = pb_masked, outputURI = "/data/etl_out", numPartitions = 4 }
+         |]""".stripMargin
+    val bench = Seq("bench")
+    assert(StageConfig.parsePipeline(conf) === Right(List(
+      StageConfig.ExtractStage("ParquetExtract", "extract", None, bench, "/data/etl_in", "pb_raw",
+        persist = true, header = false, numPartitions = Some(4)),
+      StageConfig.MetadataStage("treatments", None, bench, "pb_raw", "pb_typed", persist = false,
+        treatments.toMap),
+      StageConfig.MaskStage("mask", None, bench, "pb_typed", "pb_masked", persist = true, Map.empty),
+      StageConfig.SqlStage("summary", None, bench, sql, "pb_summary", persist = true, Map.empty),
+      StageConfig.LoadStage("load", None, bench, "pb_masked", "/data/etl_out", Some(4)))))
+  }
+
   test("run executes the configured stage end to end") {
     val spark = SparkTestBase.spark
     import org.apache.spark.sql.types._
