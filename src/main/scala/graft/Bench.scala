@@ -3,6 +3,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // optional subset for isolated measurement: SPARK_GRAFT_QUERIES=a,b,c
+    val only = sys.env.get("SPARK_GRAFT_QUERIES")
+    val selected = only.fold(SparkEntry.queries)(SparkEntry.named(_).map(q => q.name -> q.run).toMap)
     val spark = Defaults.localSession(cpus.toInt)
     // absorb one-time session costs (codegen warmup, parquet footer reads,
     // UDF registration) so the first measured query isn't inflated
@@ -11,9 +14,6 @@ object Bench {
       spark.range(1000).selectExpr("sum(id)").count()
       spark.read.parquet(s"$sfDir/customer.parquet").limit(1).count()
     } catch { case _: Throwable => }
-    // optional subset for isolated measurement: SPARK_GRAFT_QUERIES=a,b,c
-    val only = sys.env.get("SPARK_GRAFT_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
     // the bench host shows 10x single-query GC spikes run-to-run; two passes
     // + min per query reports the real cost instead of whichever pass a GC
     // pause landed on
@@ -149,8 +149,7 @@ object Bench {
     // so a query that settles round after round is itself a visible
     // suite-interference lead in the history.
     val settles = scala.collection.mutable.LinkedHashMap.empty[String, (Double, Double)]
-    val results = SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
+    val results = selected
       .flatMap { case (name, fn) =>
         var lastErr: Option[String] = None
         val times = (1 to passes).flatMap { _ =>
@@ -404,8 +403,7 @@ object Bench {
     // calibration constant makes round-over-round comparison mechanical
     // instead of forensic (r8 spent a verdict section attributing a ~30%
     // box-wide shift by hand).
-    val kdfBound = results.keys.filter(k =>
-      k.startsWith("mask_") || k.startsWith("stage_") || k == "fixture_e2e")
+    val kdfBound = results.keys.filter(SparkEntry.registry.filter(_.tags(QueryDef.Kdf)).map(_.name).toSet)
     val qsNorm = kdfBound.map(k => s"\"" + k + "\":" + r3(results(k) / calib))
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0

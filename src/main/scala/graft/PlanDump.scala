@@ -14,11 +14,12 @@ import java.nio.file.{Files, Paths}
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir, suffix, names) = args.take(4)
+    val selected = SparkEntry.named(names)
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Defaults.localSession(cpus.toInt)
     Files.createDirectories(Paths.get(outDir))
-    names.split(",").map(_.trim).filter(_.nonEmpty).foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfDir)
+    selected.foreach { case QueryDef(name, run, _, _) =>
+      val df = run(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
       Files.writeString(Paths.get(s"$outDir/${name}_$suffix.txt"), plan)

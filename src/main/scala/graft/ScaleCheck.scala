@@ -23,355 +23,13 @@ import org.apache.spark.sql.functions._
   * Output: one JSON line (also target/scaling.json) with per-query seconds
   * at 1x and SCALEx plus the time ratio; a time ratio near the data ratio
   * (or below, when fixed startup dominates at 1x) means linear scaling.
+  *
+  * The measured set is the [[QueryDef.Scale]]-tagged records of
+  * [[SparkEntry.registry]]; each record carries the comment saying why its
+  * query is measured (and an untagged record, why it is not).
+  * `SPARK_GRAFT_SCALE_QUERIES=a,b` measures the named queries instead.
   */
 object ScaleCheck {
-
-  val queriesUnderTest: Seq[String] = Seq(
-    "dedup_minhash", "dedup_incremental", "dedup_sig_reuse", "decontaminate_bloom",
-    "bm25_topk", "pack_sequences",
-    // embedding operators: the scaled table applies a per-copy diagonal
-    // +-1 sign flip (an orthogonal transform - within-copy cosines are
-    // preserved EXACTLY, cross-copy cosines decorrelate), so LSH bucket
-    // geometry sees 10x more of the same distribution
-    "embed_pairs_lsh", "ann_topk", "ann_ivf_topk", "embed_quantize",
-    // round-9 additions (documents-table operators)
-    "snapshot_diff", "incremental_score", "sample_fixed_k", "compaction_plan",
-    "dedup_spans", "dedup_ngram_hot", "edit_pairs", "scd2_merge",
-    "keyword_tfidf", "label_vote",
-    // round-10: the iterative operator — per-round driver synchronization is
-    // exactly where super-linear cost would hide (rounds must stay flat,
-    // per-round cost linear); graft.fixpoint round logs are enabled below
-    "dedup_components", "dedup_drop",
-    // round-10 operators over the scaled documents table
-    "weighted_sample", "fim_transform", "length_buckets",
-    // round-10 batch 2: the second iterative operator (pagerank — fixed 10
-    // rounds, per-round cost must be linear), the within-cluster pair join
-    // (semantic_dedup — labels shift per copy, the SemDeDup regime where
-    // cluster COUNT grows with the corpus and cluster SIZE stays put), the
-    // broadcast-histogram scorer (dsir_select), the bounded-heap group ops
-    // (dedup_keep_best, cap_per_group), and the grouped exact-percentile
-    // path (anomaly_mad — 5 constant groups, so the per-group reducer
-    // buffer is the term under test)
-    "pagerank", "semantic_dedup", "dsir_select", "dedup_keep_best",
-    "cap_per_group", "anomaly_mad",
-    // round-10 batch 3: the Expand-multiplied one-pass profile, the heap
-    // CDC window, and the low-threshold pair histogram (the widest pair
-    // join in the suite — where candidate growth would hide)
-    "profile_table", "latest_k_events", "pair_similarity_hist",
-    // batch-3b: graded decontamination (in-row distinct + broadcast probe),
-    // the histogram-window percent-rank, and the pair-broadcast source matrix
-    "contamination_ratio", "score_calibrate", "dedup_cross_source",
-    // the oriented wedge join: wedge volume is sum(in*out) — bounded
-    // on the planted 3-out-regular graph, so bytes must stay linear
-    "triangle_count",
-    // df-join novelty: gram-keyed aggregate + join back — the inverted
-    // index is the linear term
-    "ngram_novelty",
-    // NOTE dedup_containment is deliberately NOT measured here beyond the
-    // recorded 10x point: its planted rot13 tails commute with the scaled
-    // corpus's alphabet rotation (rot13 ∘ rot_k = rot_{k+13}), so at
-    // SCALE >= 13 copy k's tails equal copy k+13's vocabulary — real
-    // cross-copy duplicate mass that no dedup operator should be expected
-    // to scale linearly through (SCALING.md documents the 10x/30x numbers
-    // and this attribution)
-    // round-11: the third iterative operator (label propagation — 5 fixed
-    // synchronous rounds; per-round cost is one label join + one
-    // (node,label) count, so bytes must be linear and rounds flat), plus
-    // the two narrow round-11 projections (scan-bound by construction —
-    // measured to confirm, not to discover)
-    "label_prop", "quality_rules", "padding_report",
-    // PQ ANN: training joins the broadcast codebook (constant size), the
-    // probe touches m rows per vector — both linear terms under test
-    "ann_pq_topk",
-    // round-11 batch 2: the distinct-word DP (cost is vocabulary-shaped —
-    // scaled copies rotate the alphabet so distinct words grow ~SCALEx,
-    // the worst case for this operator), the heap-sampled language
-    // mixture, and the bounded-probe nested-loop miner
-    "segment_viterbi", "lang_mix_sample", "hard_negatives", "ann_ivfpq_topk",
-    // round-11 batch 3: quantization-cell blocking (cell-count growth is
-    // the term under test), the narrow reconstruction-error scan, and the
-    // modularity aggregate riding the LPA layout
-    "dedup_pq_codes", "pq_error", "community_modularity",
-    // round-12: the fingerprint-disciplined corpus card (the r11 fix —
-    // distinct over md5, never bodies; the bytes row IS the before/after
-    // evidence), the ppm-grid hard-negative miner, and the two narrow
-    // single-aggregate ops (recency decay, k-anonymity report) that
-    // complete the per-family scale table
-    "corpus_card", "recency_weights", "k_anonymity", "mask_k_anon",
-    // round-12 batch 2: the fourth iterative operator (k-core peel —
-    // rounds = cascade depth, which the planted tiers pin; per-round cost
-    // linear), the bounded fusion aggregate, the in-row JL projection
-    // (zero shuffle by construction), and the bounded-bench semantic
-    // decontamination scan
-    "kcore_peel", "hybrid_rrf", "embed_project", "decontaminate_semantic",
-    // round-12 batch 3: winnowing (fingerprint-bucket join under the df
-    // cap — candidate growth is the term under test), two-pass SNM (two
-    // block shuffles + banded verify, candidates n*(w-1) by construction),
-    // the IVFADC exact-refine probe (shortlist-bounded second scan), and
-    // the MMR rerank (one scoring scan + driver greedy on 20 candidates)
-    "dedup_winnow", "sorted_neighborhood", "ann_ivfpq_refine", "ann_mmr_rerank",
-    // round-12 batch 4: FS linkage (same SNM window layout, score in the
-    // post-window projection), and the two in-row text kernels (fold +
-    // AC phrase scan — both shuffle only per-doc aggregates; the scaled
-    // corpus's rotated alphabets make phrase hits ~constant while the
-    // scan grows, which is exactly the scan-bound claim under test)
-    "record_linkage", "fold_accents", "blocklist_phrases",
-    // round-12 batch 5: the sketches — CMS cells and HLL registers are
-    // CONSTANT-size aggregates by construction, so their shuffle bytes
-    // must be ~flat while the scan grows; the exact-side top-10/distinct
-    // in the same queries is the linear term that dominates the bytes
-    "cms_heavy_hitters", "hll_distinct",
-    // the split-leakage audit composes the measured minhash + CC + hash
-    // assignment pipelines; its own term is the pair-sized split joins
-    "split_leakage", "ranking_eval", "sketch_shard_merge",
-    // round-13: the fifth iterative operator — star-contraction CC on the
-    // planted diameter-50 chain graph (rounds must be FLAT in corpus size:
-    // chain length is fixed, O(log² n) contraction depth barely moves);
-    // the quantile-sketch family (bottom-k state is CONSTANT — the
-    // TakeOrderedAndProject cut is the term under test; the per-group
-    // variant shuffles group-key rows once); and the production-shape
-    // sketch twins whose bytes must be ~flat where their oracle-bearing
-    // siblings carry the corpus-linear comparator
-    "cc_chain_star", "quantile_bottomk", "quantile_bottomk_merge",
-    "group_percentiles_portable", "hll_registers_only", "cms_cells_only",
-    // round-13 backfill (verdict ask #7): the outer interval join and the
-    // streaming CMS (state measured in StreamScaleCheck; THIS row is the
-    // batch-harness bytes view), the per-distinct-value KDF path, and the
-    // multi-pattern redaction scan
-    "stream_join_outer", "stream_cms", "mask_via_distinct", "redact_pii_extended",
-    // the streamed bottom-k (state = one k-pair heap, constant by
-    // construction; bytes may only carry heap partials × splits)
-    "stream_quantile",
-    // true KLL: the sketch aggregate's state is O(cap·levels) items, so
-    // its shuffle term is constant-class; the corpus-linear term in these
-    // queries is the exact-rank comparator (the contract's ground truth,
-    // same role as hll_distinct's exact side)
-    "quantile_kll", "quantile_kll_merge",
-    // round-14: the per-group register sketch (shuffle must be
-    // Θ(groups·m) — ~flat here, groups fixed at the 5 languages — while
-    // the _distinct sibling carries the corpus-linear exact comparator);
-    // per-group KLL (constant-class aggregate state per group + the exact
-    // per-group rank comparator as the linear term); the sketch STORE
-    // cycle (three sketch builds + three constant-size store round-trips
-    // + whole-corpus comparators); the deflate-ratio scan (narrow
-    // per-partition codec pass — scan-bound by construction); the widened
-    // Gopher repetition profile (9× gram explode, all keyed aggs — the
-    // bytes ratio is the explicit price of the full char-fraction set);
-    // and the validate on/off CC pair (the delta is the measured cost of
-    // the three post-convergence checks, r13 ask #5)
-    "hll_group_distinct", "hll_group_registers_only", "group_quantile_kll",
-    "sketch_store_roundtrip", "text_compress_ratio", "text_repetition",
-    "cc_chain_star_novalidate",
-    // round-14 batch 2: the streamed HLL (state <= m registers by
-    // construction — bytes must stay in the register-partial constant
-    // class); the per-group CMS (cells Θ(groups·depth·width) + the exact
-    // top-3 comparator as the corpus-linear term); the register set
-    // algebra (three register builds + the corpus-linear exact-overlap
-    // comparator); and PCA (the gram aggregate's shuffle is ONE flat
-    // d²-state per partition — bytes must be ~flat while the scan term
-    // carries the wall)
-    "stream_hll", "cms_group_topk", "hll_intersection", "pca_project",
-    // the kNN production twin: nLists scales with the corpus (buckets
-    // pinned ~512 vectors), so per-bucket pair work is flat and the
-    // probe shuffle is rows × nProbe — the measured proof of the
-    // "nLists must grow" lever documented on knnJoin
-    "knn_graph_only",
-    // the windowed streaming HLL: state = windows-in-horizon × m
-    // registers, watermark-evicted; bytes must stay in the
-    // register-partial class while the event stream grows 10×
-    "stream_hll_window",
-    // round-14 batch 3: the indexed kNN probe (the fixed 50-vector batch
-    // against a growing stored index — cost is batch × bucket, corpus
-    // never rescanned), the incremental gram store (2145-long states
-    // through the sink — constant-class), and whitening (one moment pass
-    // + a narrow literal-basis projection — the pca_project shape twice)
-    "knn_incremental", "gram_store_merge", "pca_whiten", "pca_by_group",
-    // the streamed moment state: ONE flat buffer per partition through
-    // the complete-mode aggregate — constant-class bytes at any volume
-    "stream_gram",
-    // round-15: the unigram trainer (one corpus scan into the Heaps'-law
-    // word histogram, then vocab-broadcast kernel passes over the
-    // DISTINCT-WORD frame — rotation makes copies' vocabularies disjoint,
-    // so the distinct-word term grows ~linearly and seeding/E-step cost
-    // must track IT, not the corpus); the streaming kNN probe (fixed
-    // 50-vector stream against the grown stored index through
-    // foreachBatch — the knn_incremental law with trigger machinery on
-    // top); and the drift report (planted fixed-size shards: cost must
-    // be FLAT — the monitor never touches the corpus)
-    "unigram_train", "stream_knn_probe", "pca_drift",
-    // round-15 batch 2: the token-distribution drift monitor (two
-    // map-side-combined histograms + one vocab-keyed join — vocab grows
-    // with the rotated copies, so bytes are Heaps'-shaped) and the
-    // two-tokenizer evaluation (both trainers + both in-row appliers —
-    // wall must track the distinct-word frame, not the corpus).
-    // stream_segment is NOT here: the operator is the in-row
-    // segmentation already measured via its batch twin; the QUERY's
-    // memory-sink harness would hold the 100× token stream on the
-    // driver, measuring the harness rather than the operator
-    "vocab_drift", "tokenizer_eval",
-    // round-15 batch 3: incremental CC — the day-0 contraction carries
-    // the corpus-linear term; the merge itself is batch-shaped (supernode
-    // graph ≤ 2·|batch| nodes, label store rewritten through a broadcast
-    // remap, never shuffled)
-    "cc_incremental",
-    // knn_clusters and knn_graph are deliberately NOT here: their exact
-    // full-probe configuration is the ORACLE'S setting (every pair
-    // considered — quadratic by design, like embed_pairs_exact); the
-    // production path is knn_graph_only's pruned adaptive-nLists shape,
-    // measured above
-    // round-15 batch 4: the inverted-index store (build = the one
-    // posting shuffle, probe = partition-pruned bucket reads whose bytes
-    // track query-term postings, not the corpus; the incremental query
-    // additionally carries the full-rebuild comparator — corpus-linear
-    // by definition of the audit); NB classification (training is one
-    // bounded labels×buckets aggregate, scoring shuffles ≤ min(tokens,
-    // buckets) rows per doc — both linear-class); warm-start PageRank
-    // (28 fixed rounds over three generated graphs — per-round cost is
-    // the linear term, round count flat by construction); the image
-    // dHash REPORT — image_phash_dedup's pair list is the oracle-priced
-    // ground truth and its OUTPUT is Θ(Σ group²) (measured 115× bytes at
-    // 10×: scaled copies replant the same 385 texture classes, so
-    // duplicate groups fatten 10× and pairs grow ~100× — the quadratic
-    // lives in the duplicate mass of the data, like any pair report over
-    // g-sized duplicate groups); the production twin groups by hash —
-    // one hash-keyed aggregate, output linear in distinct hashes.
-    // audio_fingerprint_dedup shares image_phash_dedup's exact shape
-    // (same plants, same join) and is not re-measured;
-    // stream_nb_classify is in-row scoring already measured via
-    // nb_classify plus the memory-sink harness stream_segment's note
-    // excludes
-    "bm25_store_probe", "bm25_incremental", "nb_classify_inrow",
-    "pagerank_incremental", "image_phash_report",
-    // round-16: FF1 format-preserving masking (per-row AES cipher work,
-    // zero shuffle beyond the final 1-row agg — scan-bound by
-    // construction); the DP count release (one counting shuffle with
-    // map-side combine + a per-row codegen'd CASE — the noise adds
-    // nothing to data movement); and the registrable-domain report
-    // (in-row codegen'd suffix walk + one domain-keyed aggregate whose
-    // output is the distinct-domain count, which the planted URL classes
-    // pin ~constant while the scan grows).
-    // image_phash_incremental / stream_sig_probe are NOT here: their
-    // output is image_phash_dedup's oracle-priced PAIR LIST, Θ(Σ group²)
-    // in duplicate mass by definition (the scaled corpus replants the
-    // same 385 texture classes, so pairs grow ~100× at 10× — the
-    // image_phash_report note); the store machinery's scale terms
-    // (build = one chunk-partitioned write, probe = batch-broadcast join
-    // with zero corpus shuffle) are plan-structural, asserted in
-    // PlanShapeSpec instead
-    "mask_fpe_props", "dp_counts", "url_domain_report",
-    // round-16 batch 2: the DP sum twin (same one-shuffle class as
-    // dp_counts), the domain∘cap composition (bounded-heap per-group
-    // selection — the cap_per_group class with the codegen'd suffix walk
-    // in front), the robots compliance pass (in-row rule walk over
-    // memoized compiled rules + a 3-row aggregate — scan-bound), and the
-    // WARC ingest (per-row gzip inflate + container parse, one narrow
-    // flatMap — the heaviest per-row CPU of the batch, no shuffle)
-    "dp_sums", "url_domain_caps", "robots_filter", "warc_ingest",
-    // the composed ingest chain: parse cost linear (warc_ingest's term),
-    // dedup = one body-keyed aggregate (winners = half the corpus by
-    // construction), cap = the bounded-heap class. stream_warc_ingest is
-    // the same parser under trigger machinery — the memory-sink-harness
-    // exclusion class (stream_segment note)
-    "crawl_pipeline_e2e",
-    // round-16 batch 3: link extraction (regexp_extract_all + explode +
-    // a domain-keyed aggregate over a fixed 20-domain space) and URL
-    // canonicalization (in-row string kernel + one 1-row agg with two
-    // distinct terms) — both scan-bound with bounded aggregates
-    "html_link_graph", "url_canonical_dedup",
-    // events-table operators: the scaled table shifts user_id/event_id per
-    // copy (10x users, same time window) — exactly how a bigger product
-    // corpus grows
-    "events_funnel", "cohort_retention", "skew_report", "event_transitions",
-    // round-17: the charset-ladder ingest (warc_ingest's narrow-flatMap
-    // class plus per-body sniff/decode CPU), the frontier composition
-    // (robots listing -> XML parse -> canonicalize -> one domain-keyed
-    // aggregate over a fixed 27-domain space), block-level main-content
-    // extraction (in-row codegen'd kernel + a 1-row agg — the
-    // quality_rules scan-bound class), byte-level BPE training (the
-    // distinct-WORD frame is the term under test: raw case-preserved
-    // words grow ~SCALEx under alphabet rotation, the char arm's worst
-    // case, with byte symbols ~2x the char count), the per-doc byte
-    // encode (distinct-word join + one doc-keyed aggregate), and the
-    // rank-then-encipher masking scan (in-row AES, no shuffle)
-    "warc_charset", "sitemap_frontier", "html_main_content",
-    "bpe_train_bytes", "bpe_encode_bytes", "mask_fpe_number",
-    // round-17 batch 2: the composed ingest with charset+extraction
-    // load-bearing (crawl_pipeline_e2e's class plus the decode/extract
-    // kernels), the in-row MIME table + head-metadata kernels (scan-bound
-    // with bounded aggregates), the schedule composition (one domain
-    // aggregate over a fixed 20-domain space), the frontier store cycle
-    // (store write + bloom + one store scan per probe — the probe's
-    // exchange is match-sized), and the WET export loop (two narrow
-    // flatMaps back to back). stream twins excluded: the memory/parquet
-    // sink harness class
-    "crawl_pipeline_v2", "mime_sniff", "html_metadata", "crawl_schedule",
-    "frontier_incremental", "wet_export",
-    // anchor extraction: regexp_extract_all x2 + explode + a domain-keyed
-    // aggregate over a fixed 20-domain space — the html_link_graph class
-    "anchor_text",
-    // decode->langid: warc_charset's narrow parse/decode class plus the
-    // in-row langid kernel and a 3-row aggregate
-    "crawl_langid",
-    // round-18: redirect-chain resolution (3xx-only edge frame — a few
-    // rows per file — through two bounded equi-join hops + the revisit
-    // aggregate; the corpus-linear term is the WARC parse, the joins are
-    // edge-sized)
-    "warc_redirects",
-    // round-18 batch 2: sentence segmentation (in-row regex-free scan +
-    // posexplode — output is rows-per-sentence, the linear term);
-    // sentence-level dedup (one sentence-keyed count aggregate + a
-    // key-join back — the Dedup discipline; literal planted sentences
-    // collide ACROSS scaled copies so duplicate mass grows linearly, the
-    // regime under test); CCNet-style bucketing (bigram-LM training over
-    // the rotated corpus — distinct bigrams grow ~SCALEx, Heaps' worst
-    // case — plus the per-language score HISTOGRAM aggregate whose
-    // distinct (lang, score) keys bound the window input, never a
-    // per-doc global sort); URL-shape scoring (in-row codegen'd kernel +
-    // no aggregate at all — output linear); and content-defined chunking
-    // (in-row gear-hash walk over ~24.5 KiB blobs + the chunk-hash
-    // dedup aggregate — chunk keys grow with the corpus's unique-prefix
-    // chunks, shared-segment chunks stay 4 families)
-    "sentence_split", "sentence_dedup", "lm_quality_buckets",
-    "url_spam_score", "cdc_chunking",
-    // round-18 batch 3: feed discovery (narrow XML build + parse, one
-    // host-keyed aggregate over a fixed 20-host space — the
-    // sitemap_frontier class), and the two in-row kernels (date ladder,
-    // robots-directive tests — scan-bound, no aggregate at all)
-    "feed_frontier", "page_dates", "noindex_filter",
-    // round-18 batch 4: feed autodiscovery (in-row link scan + one
-    // 1-row agg), and the chunk-CAS ingest loop (store write + TWO
-    // broadcast-probed store scans; the batch's distinct-chunk frame is
-    // the broadcast side — store never shuffles; chunking CPU is the
-    // corpus-linear term). stream_feed_poll excluded: the
-    // memory/parquet sink harness class (stream_segment note)
-    "feed_autodiscovery", "cdc_incremental",
-    // round-18 batch 5: interpolated-KN trigram scoring — training is
-    // five vocabulary-shaped counting aggregates (rotation grows
-    // distinct trigrams ~SCALEx, the Heaps' worst case), scoring joins
-    // the per-position frame against the model tables (the lm
-    // bucketing shape one order up — watch the broadcast→SMJ shift)
-    "lm_kn_score",
-    // round-18 batch 6: the keep-newest dedup (one bounded struct-max
-    // aggregate per duplicate group — the dedup_keep_best class with
-    // the date ladder in front). stream_cdc_ingest excluded: the
-    // foreachBatch/parquet-sink harness class, and its operator cost is
-    // cdc_incremental's, already measured
-    "dated_dedup",
-    // bitext margin mining: bounded src (200 vectors) against the
-    // growing tgt corpus — pair volume is 200·|tgt|, LINEAR in the
-    // corpus by the maxSrc contract; the windows partition by sid/tid
-    // so per-partition state is bounded
-    "bitext_margin_mine",
-    // round-18 batch 8: the sixth iterative operator (HITS — 10 fixed
-    // rounds, two node-keyed join+agg exchanges per round with map-side
-    // partials; per-round cost must be linear, round count flat), and
-    // the in-row readability kernel (segmentation + token fold, no
-    // shuffle beyond the input spread)
-    "hits_scores", "readability_scores",
-    // the gate ensemble: three in-row kernels (spam features, profile
-    // langid, FRE fold) in ONE narrow projection — the url_spam_score
-    // class with more CPU per row
-    "quality_gate")
 
   /** Total shuffle bytes written across all tasks, collected off the
     * listener bus. Wall-clock ratios conflate CPU with data movement; the
@@ -447,6 +105,8 @@ object ScaleCheck {
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val scale = sys.env.getOrElse("SPARK_GRAFT_SCALE", "10").toInt
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val measured = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
+      .fold(SparkEntry.registry.filter(_.tags(QueryDef.Scale)))(SparkEntry.named)
     // the generation suffix versions the cached scaled tables: bump it
     // whenever the generation logic changes (g2 = per-copy embedding label
     // shift; g3 = reversal-composed rotation past 26 copies; g4 =
@@ -536,10 +196,7 @@ object ScaleCheck {
       (secs, bytes._1, bytes._2)
     }
 
-    val only = sys.env.get("SPARK_GRAFT_SCALE_QUERIES")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    val rows = queriesUnderTest.filter(q => only.forall(_.contains(q))).map { name =>
-      val fn = SparkEntry.queries(name)
+    val rows = measured.map { case QueryDef(name, fn, _, _) =>
       val (base, bw, br) = time(fn, baseDir)
       val (scaled, sw, sr) = time(fn, scaledDir)
       val bytesRatio = if (bw + br > 0) (sw + sr).toDouble / (bw + br) else 0.0

@@ -16,8 +16,7 @@ import graft.operators.MaskTransform
   */
 object SparkEntry extends EntryCore
     with EntryMaskDedupMedia with EntryAnnSketchText
-    with EntryTokenizerStream with EntryGraphCrawlPrivacy with EntryCrawl17
-    with EntryCrawl18 with EntryText18 with EntryOracles1 with EntryOracles2 {
+    with EntryTokenizerStream with EntryGraphCrawlPrivacy {
 
   /** Flagship: metadata-driven masking pipeline over sf0.001 customer —
     * the reference's end-to-end flow (typed source -> treatments in schema
@@ -39,305 +38,24 @@ object SparkEntry extends EntryCore
 
   // ---------------------------------------------------------------------
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "k_anonymity" -> qKAnonymity,
-    "t_closeness" -> qTCloseness,
-    "dp_counts" -> qDpCounts,
-    "dp_sums" -> qDpSums,
-    "mask_k_anon" -> qMaskKAnon,
-    "generalize_k_anon" -> qGeneralizeKAnon,
-    "dedup_lines_global" -> qDedupLinesGlobal,
-    "mixture_plan" -> qMixturePlan,
-    "anomaly_zscore" -> qAnomalyZscore,
-    "mask_string_props" -> qMaskStringProps,
-    "mask_fpe_props" -> qMaskFpeProps,
-    "mask_fpe_number" -> qMaskFpeNumber,
-    "mask_format_props" -> qMaskFormatProps,
-    "mask_date_props" -> qMaskDateProps,
-    "mask_timestamp_props" -> qMaskTimestampProps,
-    "mask_decimal_props" -> qMaskDecimalProps,
-    "mask_transform" -> qMaskTransform,
-    "mask_name_vocab" -> qMaskNameVocab,
-    "mask_email_vocab" -> qMaskEmailVocab,
-    "mask_via_distinct" -> qMaskViaDistinct,
-    "mask_stream" -> qMaskStream,
-    "mask_argon2_rate" -> qMaskArgon2Rate,
-    "stage_roundtrip" -> qStageRoundtrip,
-    "stage_pipeline" -> qStagePipeline,
-    "stage_config_errors" -> qStageConfigErrors,
-    "fixture_e2e" -> qFixtureE2e,
-    "dedup_exact" -> qDedupExact,
-    "dedup_minhash" -> qDedupMinhash,
-    "dedup_components" -> qDedupComponents,
-    "cc_chain_star" -> (qCcChainStar(_, _)),
-    "cc_chain_star_novalidate" -> qCcChainStarNoValidate,
-    "cc_incremental" -> qCcIncremental,
-    "dedup_drop" -> qDedupDrop,
-    "dedup_ngram" -> qDedupNgram,
-    "dedup_ngram_hot" -> qDedupNgramHot,
-    "dedup_spans" -> qDedupSpans,
-    "snapshot_diff" -> qSnapshotDiff,
-    "scd2_merge" -> qScd2Merge,
-    "keyword_tfidf" -> qKeywordTfidf,
-    "label_vote" -> qLabelVote,
-    "event_transitions" -> qEventTransitions,
-    "text_strip_html" -> qTextStripHtml,
-    "annotator_report" -> qAnnotatorReport,
-    "group_percentiles" -> qGroupPercentiles,
-    "edit_pairs" -> qEditPairs,
-    "incremental_score" -> qIncrementalScore,
-    "sample_fixed_k" -> qSampleFixedK,
-    "compaction_plan" -> qCompactionPlan,
-    "dedup_simhash" -> qDedupSimhash,
-    "image_phash_dedup" -> qImagePhashDedup,
-    "image_phash_incremental" -> qImagePhashIncremental,
-    "stream_sig_probe" -> qStreamSigProbe,
-    "jpeg_phash_props" -> qJpegPhashProps,
-    "image_phash_report" -> qImagePhashReport,
-    "audio_fingerprint_dedup" -> qAudioFingerprintDedup,
-    "video_fingerprint_dedup" -> qVideoFingerprintDedup,
-    "embed_pairs_exact" -> qEmbedPairsExact,
-    "embed_pairs_lsh" -> qEmbedPairsLsh,
-    "embed_quantize" -> qEmbedQuantize,
-    "embed_project" -> qEmbedProject,
-    "pca_project" -> qPcaProject,
-    "knn_graph" -> qKnnGraph,
-    "knn_graph_pruned" -> qKnnGraphPruned,
-    "knn_graph_only" -> qKnnGraphOnly,
-    "knn_clusters" -> qKnnClusters,
-    "knn_incremental" -> qKnnIncremental,
-    "gram_store_merge" -> qGramStoreMerge,
-    "pca_drift" -> qPcaDrift,
-    "pca_whiten" -> qPcaWhiten,
-    "pca_by_group" -> qPcaByGroup,
-    "decontaminate_semantic" -> qDecontaminateSemantic,
-    "ann_topk" -> qAnnTopk,
-    "ann_pq_topk" -> qAnnPqTopk,
-    "ann_l2_topk" -> qAnnL2Topk,
-    "ann_ivfpq_topk" -> qAnnIvfPqTopk,
-    "ann_ivfpq_pruned" -> qAnnIvfPqPruned,
-    "ann_ivfpq_refine" -> qAnnIvfPqRefine,
-    "ann_pq_batch" -> qAnnPqBatch,
-    "ann_mmr_rerank" -> qAnnMmrRerank,
-    "dedup_winnow" -> qDedupWinnow,
-    "sorted_neighborhood" -> qSortedNeighborhood,
-    "record_linkage" -> qRecordLinkage,
-    "fold_accents" -> qFoldAccents,
-    "blocklist_phrases" -> qBlocklistPhrases,
-    "cms_heavy_hitters" -> qCmsHeavyHitters,
-    "hll_distinct" -> qHllDistinct,
-    "hll_registers_only" -> qHllRegistersOnly,
-    "hll_group_distinct" -> qHllGroupDistinct,
-    "hll_group_registers_only" -> qHllGroupRegistersOnly,
-    "cms_group_topk" -> qCmsGroupTopk,
-    "hll_intersection" -> qHllIntersection,
-    "cms_cells_only" -> qCmsCellsOnly,
-    "quantile_bottomk" -> qQuantileBottomk,
-    "quantile_bottomk_merge" -> qQuantileBottomkMerge,
-    "quantile_kll" -> qQuantileKll,
-    "quantile_kll_merge" -> qQuantileKllMerge,
-    "group_quantile_kll" -> qGroupQuantileKll,
-    "group_percentiles_portable" -> qGroupPercentilesPortable,
-    "stream_pq_probe" -> qStreamPqProbe,
-    "pq_error" -> qPqError,
-    "dedup_pq_codes" -> qDedupPqCodes,
-    "pq_recall" -> qPqRecall,
-    "ranking_eval" -> qRankingEval,
-    "hard_negatives" -> qHardNegatives,
-    "ann_ivf_topk" -> qAnnIvfTopk,
-    "ann_lsh_topk" -> qAnnLshTopk,
-    "text_profile" -> qTextProfile,
-    "text_fingerprint" -> qTextFingerprint,
-    "text_repetition" -> qTextRepetition,
-    "text_compress_ratio" -> qTextCompressRatio,
-    "quality_filter" -> qQualityFilter,
-    "truncate_tokens" -> qTruncateTokens,
-    "redact_pii" -> qRedactPii,
-    "redact_pii_extended" -> qRedactPiiExtended,
-    "bm25_topk" -> qBm25Topk,
-    "bm25_store_probe" -> qBm25StoreProbe,
-    "bm25_incremental" -> qBm25Incremental,
-    "nb_classify" -> qNbClassify,
-    "nb_classify_inrow" -> qNbClassifyInRow,
-    "stream_nb_classify" -> qStreamNbClassify,
-    "hybrid_rrf" -> qHybridRrf,
-    "kcore_peel" -> qKcorePeel,
-    "gapfill_resample" -> qGapfillResample,
-    "decontaminate_bloom" -> qDecontaminateBloom,
-    "kmeans_cluster" -> qKmeansCluster,
-    "histogram_stats" -> qHistogramStats,
-    "corr_stats" -> qCorrStats,
-    "schema_evolution" -> qSchemaEvolution,
-    "temperature_mix" -> qTemperatureMix,
-    "curriculum_mix" -> qCurriculumMix,
-    "vocab_coverage" -> qVocabCoverage,
-    "vocab_drift" -> qVocabDrift,
-    "vocab_drift_store" -> qVocabDriftStore,
-    "quality_checks" -> qQualityChecks,
-    "skew_report" -> qSkewReport,
-    "assemble_docs" -> qAssembleDocs,
-    "bpe_pair_counts" -> qBpePairCounts,
-    "bpe_train" -> qBpeTrain,
-    "unigram_train" -> qUnigramTrain,
-    "tokenizer_eval" -> qTokenizerEval,
-    "bpe_train_unicode" -> qBpeTrainUnicode,
-    "bpe_train_bytes" -> qBpeTrainBytes,
-    "bpe_encode_bytes" -> qBpeEncodeBytes,
-    "segment_viterbi_unicode" -> qSegmentViterbiUnicode,
-    "bpe_encode" -> qBpeEncode,
-    "bpe_pack" -> qBpePack,
-    "segment_viterbi" -> qSegmentViterbi,
-    "stream_segment" -> qStreamSegment,
-    "langid_profile" -> qLangidProfile,
-    "dedup_incremental" -> qDedupIncremental,
-    "dedup_sig_reuse" -> qDedupSigReuse,
-    "dedup_exact_incremental" -> qDedupExactIncremental,
-    "stream_dedup_probe" -> qStreamDedupProbe,
-    "stream_knn_probe" -> qStreamKnnProbe,
-    "dedup_normalized" -> qDedupNormalized,
-    "dedup_cluster_report" -> qDedupClusterReport,
-    "dedup_lines" -> qDedupLines,
-    "chunk_docs" -> qChunkDocs,
-    "cluster_split" -> qClusterSplit,
-    "split_leakage" -> qSplitLeakage,
-    "text_normalize" -> qTextNormalize,
-    "epoch_shuffle" -> qEpochShuffle,
-    "lm_score" -> qLmScore,
-    "lm_store_roundtrip" -> qLmStoreRoundtrip,
-    "vocab_topk" -> qVocabTopk,
-    "vocab_cms" -> qVocabCms,
-    "multimodal_features" -> qMultimodalFeatures,
-    "binary_ingest" -> qBinaryIngest,
-    "weighted_sample" -> qWeightedSample,
-    "winsorize_stats" -> qWinsorizeStats,
-    "fim_transform" -> qFimTransform,
-    "pmi_pairs" -> qPmiPairs,
-    "token_entropy" -> qTokenEntropy,
-    "semantic_dedup" -> qSemanticDedup,
-    "cap_per_group" -> qCapPerGroup,
-    "cap_tokens_per_group" -> qCapTokensPerGroup,
-    "cms_join_size" -> qCmsJoinSize,
-    "anomaly_mad" -> qAnomalyMad,
-    "blocklist_filter" -> qBlocklistFilter,
-    "annotator_kappa" -> qAnnotatorKappa,
-    "contamination_ratio" -> qContaminationRatio,
-    "score_calibrate" -> qScoreCalibrate,
-    "dedup_cross_source" -> qDedupCrossSource,
-    "url_domain_report" -> qUrlDomainReport,
-    "url_domain_caps" -> qUrlDomainCaps,
-    "robots_filter" -> qRobotsFilter,
-    "warc_ingest" -> qWarcIngest,
-    "warc_charset" -> qWarcCharset,
-    "sitemap_frontier" -> qSitemapFrontier,
-    "stream_sitemap" -> qStreamSitemap,
-    "html_main_content" -> qHtmlMainContent,
-    "crawl_pipeline_e2e" -> qCrawlPipelineE2e,
-    "crawl_pipeline_v2" -> qCrawlPipelineV2,
-    "mime_sniff" -> qMimeSniff,
-    "html_metadata" -> qHtmlMetadata,
-    "crawl_schedule" -> qCrawlSchedule,
-    "frontier_incremental" -> qFrontierIncremental,
-    "wet_export" -> qWetExport,
-    "stream_frontier_probe" -> qStreamFrontierProbe,
-    "anchor_text" -> qAnchorText,
-    "crawl_langid" -> qCrawlLangid,
-    "warc_redirects" -> qWarcRedirects,
-    "feed_frontier" -> qFeedFrontier,
-    "stream_feed_poll" -> qStreamFeedPoll,
-    "feed_autodiscovery" -> qFeedAutodiscovery,
-    "cdc_incremental" -> qCdcIncremental,
-    "stream_cdc_ingest" -> qStreamCdcIngest,
-    "dated_dedup" -> qDatedDedup,
-    "bitext_margin_mine" -> qBitextMine,
-    "hits_scores" -> qHitsScores,
-    "readability_scores" -> qReadabilityScores,
-    "quality_gate" -> qQualityGate,
-    "page_dates" -> qPageDates,
-    "noindex_filter" -> qNoindexFilter,
-    "sentence_split" -> qSentenceSplit,
-    "sentence_dedup" -> qSentenceDedup,
-    "lm_quality_buckets" -> qLmQualityBuckets,
-    "lm_kn_score" -> qLmKnScore,
-    "url_spam_score" -> qUrlSpamScore,
-    "cdc_chunking" -> qCdcChunking,
-    "stream_warc_ingest" -> qStreamWarcIngest,
-    "html_link_graph" -> qHtmlLinkGraph,
-    "url_canonical_dedup" -> qUrlCanonicalDedup,
-    "profile_table" -> qProfileTable,
-    "triangle_count" -> qTriangleCount,
-    "embed_centroid" -> qEmbedCentroid,
-    "ngram_novelty" -> qNgramNovelty,
-    "dedup_containment" -> qDedupContainment,
-    "latest_k_events" -> qLatestKEvents,
-    "pair_similarity_hist" -> qPairSimilarityHist,
-    "pagerank" -> qPagerank,
-    "pagerank_incremental" -> qPagerankIncremental,
-    "label_prop" -> qLabelProp,
-    "community_modularity" -> qCommunityModularity,
-    "quality_rules" -> qQualityRules,
-    "corpus_card" -> qCorpusCard,
-    "recency_weights" -> qRecencyWeights,
-    "stream_quality_filter" -> qStreamQualityFilter,
-    "padding_report" -> qPaddingReport,
-    "lang_mix_report" -> qLangMixReport,
-    "lang_mix_sample" -> qLangMixSample,
-    "dsir_select" -> qDsirSelect,
-    "dedup_keep_best" -> qDedupKeepBest,
-    "length_buckets" -> qLengthBuckets,
-    "multimodal_audio" -> qMultimodalAudio,
-    "multimodal_audio_resample" -> qMultimodalAudioResample,
-    "multimodal_resize" -> qMultimodalResize,
-    "multimodal_video" -> qMultimodalVideo,
-    "pack_sequences" -> qPackSequences,
-    "hash_sample" -> qHashSample,
-    "decontaminate" -> qDecontaminate,
-    "sink_roundtrip" -> qSinkRoundtrip,
-    "orc_roundtrip" -> qOrcRoundtrip,
-    "csv_roundtrip" -> qCsvRoundtrip,
-    "events_window" -> qEventsWindow,
-    "events_window_stream" -> qEventsWindowStream,
-    "events_sessions" -> qEventsSessions,
-    "events_funnel" -> qEventsFunnel,
-    "cohort_retention" -> qCohortRetention,
-    "quantile_sketch" -> qQuantileSketch,
-    "events_sessions_stream" -> qEventsSessionsStream,
-    "events_dedup_stream" -> qEventsDedupStream,
-    "stream_cms" -> qStreamCms,
-    "stream_hll" -> qStreamHll,
-    "stream_hll_window" -> qStreamHllWindow,
-    "stream_gram" -> qStreamGram,
-    "stream_quantile" -> qStreamQuantile,
-    "sketch_shard_merge" -> qSketchShardMerge,
-    "sketch_store_roundtrip" -> qSketchStoreRoundtrip,
-    "stream_stream_join" -> qStreamStreamJoin,
-    "stream_join_outer" -> qStreamJoinOuter,
-    "stream_static_join" -> qStreamStaticJoin,
-    "session_window_agg" -> qSessionWindowAgg,
-    "stream_foreach_batch" -> qStreamForeachBatch,
-    "events_props" -> qEventsProps,
-    "asof_join" -> qAsofJoin,
-    "range_join" -> qRangeJoin,
-    "interval_overlap_join" -> qIntervalOverlapJoin,
-    "rollup_agg" -> qRollupAgg,
-    "grouping_sets_agg" -> qGroupingSets,
-    "pivot_agg" -> qPivotAgg,
-    "moving_avg" -> qMovingAvg,
-    "set_ops" -> qSetOps,
-    "topk_per_group" -> qTopkPerGroup,
-    "topk_heap" -> qTopkHeap,
-    "approx_agg" -> qApproxAgg,
-    "curate_pipeline" -> qCuratePipeline,
-    "lineitem_agg" -> qLineitemAgg,
-    "join_agg" -> qJoinAgg,
-    "join_agg_bucketed" -> qJoinAggBucketed,
-    "skew_join_agg" -> qSkewJoinAgg,
-    "zorder_cluster" -> qZorderCluster,
-    "window_top_order" -> qWindowTopOrder,
-    "window_lead_lag" -> qWindowLeadLag,
-    "latest_per_key" -> qLatestPerKey,
-    "exact_percentile" -> qExactPercentile,
-    "json_roundtrip" -> qJsonRoundtrip)
+  /** Every query, each record declared with its oracle and tags in the
+    * entry file that defines it. */
+  lazy val registry: Seq[QueryDef] = coreQueries ++ maskDedupMediaQueries ++
+    annSketchTextQueries ++ tokenizerStreamQueries ++ graphCrawlPrivacyQueries
 
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] = registry.map(q => q.name -> q.run).toMap
 
-  def oracleSql: Map[String, String] = oracleSqlPart1 ++ oracleSqlPart2
+  lazy val oracleSql: Map[String, String] = registry.map(q => q.name -> q.oracleSql).toMap
+
+  /** The records named in the comma-separated `list`, in the order given;
+    * throws naming every name that is not a query, so a mistyped subset
+    * fails instead of running nothing. */
+  def named(list: String): Seq[QueryDef] = {
+    val names = list.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+    val byName = registry.map(q => q.name -> q).toMap
+    val unknown = names.filterNot(byName.contains).distinct
+    if (unknown.nonEmpty)
+      throw new IllegalArgumentException(s"unknown query name(s): ${unknown.mkString(", ")}")
+    names.distinct.map(byName)
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -7,7 +8,9 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query names (local iteration only;
     // the driver always passes exactly two args = run everything)
-    val only: Set[String] = if (args.length > 2) args(2).split(",").toSet else Set.empty
+    val selected: Iterable[(String, (SparkSession, String) => DataFrame)] =
+      if (args.length > 2) SparkEntry.named(args(2)).map(q => q.name -> q.run)
+      else SparkEntry.queries
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = Defaults.localSession(cpus.toInt)
     new java.io.File(outDir).mkdirs()
@@ -17,7 +20,7 @@ object Verify {
     // now land in a verify_errors.json artifact next to oracle_sql.json and
     // in an unmissable stdout summary.
     val failures = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    SparkEntry.queries.filter(kv => only.isEmpty || only(kv._1)).foreach { case (name, fn) =>
+    selected.foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

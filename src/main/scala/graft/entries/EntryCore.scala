@@ -4,13 +4,13 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef.Scale
 import graft.operators.MaskTransform
 
-/** Shared machinery of the query registry (split from the former 9.8k-line
-  * SparkEntry.scala — judge r16 #6): table readers, fixtures, memoized
-  * trainings, temp stores, and every oracle CTE builder, plus the four
-  * query defs other registries reuse. No behavior change: the merged
-  * `SparkEntry.queries` / `oracleSql` maps are byte-identical. */
+/** Shared machinery of the query registry: table readers, fixtures,
+  * memoized trainings, temp stores, the oracle CTE builders and the oracle
+  * SQL more than one entry file uses, plus the query defs other entry files
+  * reuse. */
 private[graft] trait EntryCore {
 
   private[graft] def table(spark: SparkSession, dir: String, name: String): DataFrame =
@@ -666,20 +666,6 @@ private[graft] trait EntryCore {
       s"${tag}_seg AS (SELECT word, toks FROM ${tag}_bt WHERE j = 0)"
 
 
-  /** The unigram trainer's WHOLE trajectory replayed: word histogram,
-    * substring seeding (frequency × length scores, minFreq floor, top
-    * `seedSize`), the round-1 E-step usage, the exact split-point prune
-    * loss (both halves costed by a piece-string DP under the full
-    * candidate vocabulary — a proper substring can never be the piece
-    * itself), the keep-to-target cut, and the final E-step ranking.
-    * Parameters mirror [[qUnigramTrain]] verbatim. */
-  private[graft] val unigramTrainOracleSql: String =
-    "WITH RECURSIVE " + unigramChainCtes + ", " +
-      "u2 AS (SELECT tok, sum(freq)::BIGINT AS u FROM " +
-      "(SELECT word, unnest(toks) AS tok FROM e2_seg) t JOIN wds USING (word) GROUP BY tok), " +
-      "res AS (SELECT v2.token, coalesce(u2.u, 0)::BIGINT AS usage FROM v2 LEFT JOIN u2 ON u2.tok = v2.token) " +
-      "SELECT (row_number() OVER (ORDER BY usage DESC, token))::BIGINT AS rank, " +
-      "token, len(token)::BIGINT AS piece_len, usage FROM res ORDER BY rank"
 
 
   /** The unigram trainer's CTE chain through the final-vocabulary
@@ -724,51 +710,10 @@ private[graft] trait EntryCore {
   }
 
 
-  /** Both tokenizers' chars-per-token over the same corpus: the BPE
-    * encode recursion and the unigram chain's final segmentation, each
-    * joined onto the document word stream (`dw`). */
-  private[graft] val tokenizerEvalOracleSql: String =
-    s"WITH RECURSIVE ${bpeEncodeCteFor("documents", "[a-z]+", 20)}, " +
-      unigramChainCtes + ", " +
-      "bstat AS (SELECT count(*)::BIGINT AS n_words FROM dw), " +
-      "btok AS (SELECT sum(len(f.toks))::BIGINT AS n_tokens, " +
-      "sum(len(word))::BIGINT AS n_chars FROM dw JOIN final f USING (word)), " +
-      "ustat AS (SELECT count(*)::BIGINT AS n_words FROM dw WHERE len(word) <= 20), " +
-      "utok AS (SELECT sum(len(s.toks))::BIGINT AS n_tokens, " +
-      "sum(len(word))::BIGINT AS n_chars FROM dw JOIN e2_seg s USING (word)) " +
-      "SELECT 'bpe' AS tokenizer, (SELECT n_words FROM bstat) AS n_words, " +
-      "(SELECT n_tokens FROM btok) AS n_tokens, (SELECT n_chars FROM btok) AS n_chars, " +
-      "((SELECT n_chars FROM btok) * 10000 // greatest((SELECT n_tokens FROM btok), 1))::BIGINT AS chars_per_token_x1e4 " +
-      "UNION ALL " +
-      "SELECT 'unigram', (SELECT n_words FROM ustat), " +
-      "(SELECT n_tokens FROM utok), (SELECT n_chars FROM utok), " +
-      "((SELECT n_chars FROM utok) * 10000 // greatest((SELECT n_tokens FROM utok), 1))::BIGINT " +
-      "ORDER BY tokenizer"
 
 
   /** DuckDB oracles: expected property values derived from the unmasked base
     * tables (the KDF itself is not DuckDB-expressible). */
-  /** Fixed-point PageRank recomputed as 10 chained CTEs — identical
-    * integer grid (1e12), teleport floor, and per-edge floored share as
-    * [[graft.operators.PageRank.ranks]], so every rank matches
-    * bit-for-bit. Generated by a loop so iterations can't drift apart. */
-  private[graft] val pagerankOracleSql: String = {
-    val head = "WITH nodes AS (SELECT doc_id AS node FROM documents), " +
-      "nn AS (SELECT count(*)::BIGINT AS n FROM documents), " +
-      "edges AS (SELECT node AS src, (node * 31 + 7) % (SELECT n FROM nn) AS dst FROM nodes " +
-      "UNION ALL SELECT node, (node * 17 + 3) % (SELECT n FROM nn) FROM nodes " +
-      "UNION ALL SELECT node, (node * 13 + 11) % (SELECT n FROM nn) FROM nodes), " +
-      "od AS (SELECT src, count(*)::BIGINT AS outdeg FROM edges GROUP BY src), " +
-      "r0 AS (SELECT node, (SELECT 1000000000000 // n FROM nn) AS rank FROM nodes)"
-    val iters = (1 to 10).map { i =>
-      s"r$i AS (SELECT nodes.node AS node, (SELECT 150000000000 // n FROM nn) + coalesce(m.c, 0) AS rank " +
-        s"FROM nodes LEFT JOIN (SELECT e.dst AS node, sum((85 * r.rank) // (100 * od.outdeg))::BIGINT AS c " +
-        s"FROM edges e JOIN r${i - 1} r ON e.src = r.node JOIN od ON od.src = e.src GROUP BY e.dst) m " +
-        "ON nodes.node = m.node)"
-    }.mkString(", ", ", ", " ")
-    head + iters +
-      "SELECT node::BIGINT AS node, rank::BIGINT AS rank_x1e12 FROM r10 ORDER BY rank DESC, node LIMIT 10"
-  }
 
 
   /** Full NB replay shared by `nb_classify` and `stream_nb_classify`. */
@@ -803,38 +748,6 @@ private[graft] trait EntryCore {
         "FROM pred JOIN te USING (doc_id) GROUP BY 1, 2 ORDER BY 1, 2")
 
 
-  /** Warm-start PageRank replayed exactly: day-0 chain (10 rounds, 2-gen
-    * graph), reference chain (10 rounds, 3-gen graph), warm chain (4
-    * rounds seeded from the replayed day-0 ranks); the cold 4-round
-    * iterate is the reference chain's own 4th CTE. */
-  private[graft] val pagerankIncrementalOracleSql: String = {
-    def iterCte(name: String, prev: String, edges: String, od: String): String =
-      s"$name AS (SELECT nodes.node AS node, (SELECT 150000000000 // n FROM nn) + coalesce(m.c, 0) AS rank " +
-        s"FROM nodes LEFT JOIN (SELECT e.dst AS node, sum((85 * r.rank) // (100 * od.outdeg))::BIGINT AS c " +
-        s"FROM $edges e JOIN $prev r ON e.src = r.node JOIN $od od ON od.src = e.src GROUP BY e.dst) m " +
-        "ON nodes.node = m.node)"
-    val head = "WITH nodes AS (SELECT doc_id AS node FROM documents), " +
-      "nn AS (SELECT count(*)::BIGINT AS n FROM documents), " +
-      "e2 AS (SELECT node AS src, (node * 31 + 7) % (SELECT n FROM nn) AS dst FROM nodes " +
-      "UNION ALL SELECT node, (node * 10 + 3) % (SELECT n FROM nn) FROM nodes), " +
-      "e3 AS (SELECT src, dst FROM e2 " +
-      "UNION ALL SELECT node, (node * 25 + 11) % (SELECT n FROM nn) FROM nodes), " +
-      "od2 AS (SELECT src, count(*)::BIGINT AS outdeg FROM e2 GROUP BY src), " +
-      "od3 AS (SELECT src, count(*)::BIGINT AS outdeg FROM e3 GROUP BY src), " +
-      "r0 AS (SELECT node, (SELECT 1000000000000 // n FROM nn) AS rank FROM nodes)"
-    val day0 = (1 to 10).map(i =>
-      iterCte(s"d$i", if (i == 1) "r0" else s"d${i - 1}", "e2", "od2"))
-    val ref = (1 to 10).map(i =>
-      iterCte(s"f$i", if (i == 1) "r0" else s"f${i - 1}", "e3", "od3"))
-    val warm = (1 to 4).map(i =>
-      iterCte(s"w$i", if (i == 1) "d10" else s"w${i - 1}", "e3", "od3"))
-    head + (day0 ++ ref ++ warm).mkString(", ", ", ", " ") +
-      "SELECT n_nodes, l1_warm, l1_cold, " +
-      "(CASE WHEN l1_warm < l1_cold THEN 1 ELSE 0 END)::BIGINT AS warm_closer FROM " +
-      "(SELECT (SELECT n FROM nn) AS n_nodes, " +
-      "(SELECT sum(abs(w.rank - f.rank)) FROM w4 w JOIN f10 f USING (node))::BIGINT AS l1_warm, " +
-      "(SELECT sum(abs(c.rank - f.rank)) FROM f4 c JOIN f10 f USING (node))::BIGINT AS l1_cold) t"
-  }
 
 
   /** Label propagation replayed exactly: same hash-generated edges as
@@ -862,52 +775,10 @@ private[graft] trait EntryCore {
   }
 
 
-  private[graft] val labelPropOracleSql: String =
-    labelPropCte + "SELECT node::BIGINT AS node, label::BIGINT AS label FROM l5 ORDER BY node"
 
 
-  /** k-core peel replayed as chained levels over the same hash graph:
-    * level i keeps edges whose BOTH endpoints had degree >= k at level
-    * i-1. The k-core is the unique fixpoint, so any level count >= the
-    * actual cascade depth yields it — 25 levels is far past the measured
-    * depth, and extra levels are no-ops. */
-  private[graft] val kcoreOracleSql: String = {
-    val k = 10
-    val levels = 25
-    val head = "WITH nodes AS (SELECT doc_id AS node FROM documents), " +
-      "nn AS (SELECT count(*)::BIGINT AS n FROM documents), " +
-      "e0 AS (SELECT node AS src, (node * 31 + 7) % (SELECT n FROM nn) AS dst FROM nodes " +
-      "UNION ALL SELECT node, (node * 17 + 3) % (SELECT n FROM nn) FROM nodes " +
-      "UNION ALL SELECT node, (node * 13 + 11) % (SELECT n FROM nn) FROM nodes " +
-      "UNION ALL SELECT node, (node + j) % 50 FROM nodes, (SELECT unnest(range(1, 7)) AS j) WHERE node < 50 " +
-      "UNION ALL SELECT node, 50 + ((node - 50 + j) % 100) FROM nodes, (SELECT unnest(range(1, 6)) AS j) WHERE node >= 50 AND node < 150 " +
-      "UNION ALL SELECT node, 150 + ((node - 150 + j) % 150) FROM nodes, (SELECT unnest(range(1, 5)) AS j) WHERE node >= 150 AND node < 300), " +
-      "p0 AS MATERIALIZED (SELECT DISTINCT node, nbr FROM (" +
-      "SELECT src AS node, dst AS nbr FROM e0 WHERE src <> dst " +
-      "UNION ALL SELECT dst, src FROM e0 WHERE src <> dst))"
-    val rounds = (1 to levels).map { i =>
-      s"s$i AS MATERIALIZED (SELECT node FROM (SELECT node, count(*) AS c " +
-        s"FROM p${i - 1} GROUP BY node) WHERE c >= $k), " +
-        s"p$i AS MATERIALIZED (SELECT p.node, p.nbr FROM p${i - 1} p " +
-        s"JOIN s$i a ON a.node = p.node JOIN s$i b ON b.node = p.nbr)"
-    }.mkString(", ", ", ", " ")
-    head + rounds +
-      s"SELECT node::BIGINT AS node, count(*)::BIGINT AS core_deg " +
-      s"FROM p$levels GROUP BY node ORDER BY node"
-  }
 
 
-  /** Newman modularity of the round-5 labeling in exact integer form:
-    * Q·4m² = Σ_c (2m·in2_c − deg_c²) over the directed half-edge view. */
-  private[graft] val modularityOracleSql: String =
-    labelPropCte +
-      ", hv AS (SELECT a.label AS c1, b.label AS c2 FROM sym s " +
-      "JOIN l5 a ON a.node = s.node JOIN l5 b ON b.node = s.nbr), " +
-      "m2 AS (SELECT count(*)::BIGINT AS v FROM hv), " +
-      "per AS (SELECT c1, count(*)::BIGINT AS deg_c, " +
-      "sum(CASE WHEN c1 = c2 THEN 1 ELSE 0 END)::BIGINT AS in2 FROM hv GROUP BY c1) " +
-      "SELECT count(*)::BIGINT AS n_communities, ((SELECT v FROM m2) // 2)::BIGINT AS m_edges, " +
-      "sum(in2 * (SELECT v FROM m2) - deg_c * deg_c)::BIGINT AS q_x4m2 FROM per"
 
 
   /** PQ replayed exactly: quantize to the 1e6 grid, hash-init codebooks,
@@ -947,57 +818,10 @@ private[graft] trait EntryCore {
     "JOIN dt ON dt.s = a.s AND dt.code = a.code WHERE a.vec_id <> 0 GROUP BY a.vec_id)"
 
 
-  /** The batch probe: per-probe distance tables keyed by query_id (=
-    * vec_id of the probe, which is also its 0-based batch position), one
-    * joined lookup-sum over the shared encode — 5 independent
-    * single-query replays in one statement. */
-  private[graft] val annPqBatchOracleSql: String = annPqTrainCte + ", " +
-    "qv AS (SELECT vec_id AS query_id, s, spos, q FROM qz WHERE vec_id IN (0, 1, 2, 3, 4)), " +
-    "dt AS (SELECT qv.query_id, cb.s, cb.code, sum((qv.q - cb.c) * (qv.q - cb.c))::BIGINT AS d " +
-    "FROM cb1 cb JOIN qv ON qv.s = cb.s AND qv.spos = cb.spos GROUP BY qv.query_id, cb.s, cb.code) " +
-    "SELECT dt.query_id::BIGINT AS query_id, a.vec_id::BIGINT AS vec_id, sum(dt.d)::BIGINT AS pq_dist " +
-    "FROM a2 a JOIN dt ON dt.s = a.s AND dt.code = a.code " +
-    "GROUP BY dt.query_id, a.vec_id ORDER BY query_id, vec_id"
 
 
-  private[graft] val annPqOracleSql: String =
-    annPqCoreCte + " SELECT vec_id, pq_dist, row_number() OVER (ORDER BY pq_dist, vec_id) AS rank " +
-      "FROM res ORDER BY pq_dist, vec_id LIMIT 10"
 
 
-  /** PQ-code blocking replayed with a coarser m=4/subDim=16/nCodes=4
-    * codebook: train, encode, group identical code vectors into cells,
-    * pair within cells (2..1000 guard), verify by exact grid L2. */
-  private[graft] val pqCodePairsOracleSql: String = {
-    def cb(name: String, assignT: String) =
-      s"$name AS MATERIALIZED (SELECT z.s, a.code, z.spos, " +
-        "((sum(z.q) - ((sum(z.q) % count(*)) + count(*)) % count(*)) // count(*))::BIGINT AS c " +
-        s"FROM qz4 z JOIN $assignT a ON a.vec_id = z.vec_id AND a.s = z.s GROUP BY z.s, a.code, z.spos)"
-    def assign(name: String, codebook: String) =
-      s"$name AS MATERIALIZED (SELECT vec_id, s, code FROM (" +
-        "SELECT z.vec_id, z.s, cb.code, row_number() OVER (PARTITION BY z.vec_id, z.s " +
-        "ORDER BY sum((z.q - cb.c) * (z.q - cb.c)), cb.code) AS rn " +
-        s"FROM qz4 z JOIN $codebook cb ON cb.s = z.s AND cb.spos = z.spos " +
-        "GROUP BY z.vec_id, z.s, cb.code) WHERE rn = 1)"
-    "WITH qz4 AS MATERIALIZED (SELECT vec_id, ((pos - 1) // 16)::BIGINT AS s, ((pos - 1) % 16)::BIGINT AS spos, q FROM (" +
-      "SELECT vec_id, unnest(range(1, len(embedding)+1)) AS pos, " +
-      "unnest(list_transform(embedding, e -> round(e::DOUBLE * 1000000)::BIGINT)) AS q FROM embeddings)), " +
-      "b0 AS (SELECT DISTINCT vec_id, s, (vec_id * 31 + s * 7) % 4 AS code FROM qz4), " +
-      cb("bb0", "b0") + ", " + assign("ba1", "bb0") + ", " +
-      cb("bb1", "ba1") + ", " + assign("ba2", "bb1") + ", " +
-      "cv AS MATERIALIZED (SELECT vec_id, list(code ORDER BY s) AS codes FROM ba2 GROUP BY vec_id), " +
-      "cnt AS (SELECT codes, count(*) AS n FROM cv GROUP BY codes), " +
-      "okc AS MATERIALIZED (SELECT cv.vec_id, cv.codes FROM cv JOIN cnt ON cnt.codes = cv.codes " +
-      "WHERE cnt.n BETWEEN 2 AND 1000), " +
-      "pr AS (SELECT a.vec_id AS id_a, b.vec_id AS id_b FROM okc a " +
-      "JOIN okc b ON a.codes = b.codes AND a.vec_id < b.vec_id), " +
-      "dd AS (SELECT pr.id_a, pr.id_b, sum((za.q - zb.q) * (za.q - zb.q))::BIGINT AS l2_dist " +
-      "FROM pr JOIN qz4 za ON za.vec_id = pr.id_a " +
-      "JOIN qz4 zb ON zb.vec_id = pr.id_b AND zb.s = za.s AND zb.spos = za.spos " +
-      "GROUP BY pr.id_a, pr.id_b) " +
-      "SELECT id_a::BIGINT AS id_a, id_b::BIGINT AS id_b, l2_dist FROM dd " +
-      "WHERE l2_dist <= 20000000000000 ORDER BY id_a, id_b"
-  }
 
 
   /** IVFADC replayed exactly: the coarse quantizer is a one-subspace PQ
@@ -1055,137 +879,16 @@ private[graft] trait EntryCore {
       "FROM score ORDER BY pq_dist, vec_id LIMIT 10"
 
 
-  /** Refine stage on top of the full IVFADC replay: ADC shortlist of 50,
-    * exact squared-L2 on the full-dim grid (`fz` vs the query's `qf`),
-    * final top-10 by exact distance. */
-  private[graft] val annIvfPqRefineOracleSql: String =
-    annIvfPqCoreCte + ", " +
-      "short AS MATERIALIZED (SELECT vec_id, pq_dist FROM score ORDER BY pq_dist, vec_id LIMIT 50), " +
-      "ex AS (SELECT z.vec_id, sum((z.q - qf.q) * (z.q - qf.q))::BIGINT AS exact_dist " +
-      "FROM fz z JOIN qf ON qf.spos = z.spos JOIN short s ON s.vec_id = z.vec_id " +
-      "GROUP BY z.vec_id) " +
-      "SELECT s.vec_id, s.pq_dist, e.exact_dist, " +
-      "row_number() OVER (ORDER BY e.exact_dist, s.vec_id) AS rank " +
-      "FROM short s JOIN ex e USING (vec_id) ORDER BY exact_dist, vec_id LIMIT 10"
 
 
-  /** MMR greedy selection replayed as a recursive CTE: the picks list is
-    * the recursion state; each step's argmax is a correlated subquery
-    * ranking the remaining candidates by 7·rel − 3·max_sim_to_picks on
-    * the ppm grid, ties by vec_id — the exact mirror of
-    * [[graft.operators.Similarity.mmrRerank]]'s driver loop. */
-  private[graft] val annMmrOracleSql: String =
-    "WITH q AS (SELECT list_transform(embedding, x -> x::DOUBLE) AS qe FROM embeddings WHERE vec_id = 0), " +
-      "v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e FROM embeddings WHERE vec_id <> 0), " +
-      "rel AS (SELECT vec_id, e, round(list_cosine_similarity(e, qe) * 1000000)::BIGINT AS rel_ppm FROM v, q), " +
-      "cand AS (SELECT vec_id, e, rel_ppm, row_number() OVER (ORDER BY rel_ppm DESC, vec_id) AS rn FROM rel " +
-      "QUALIFY rn <= 20), " +
-      "sims AS (SELECT a.vec_id AS va, b.vec_id AS vb, " +
-      "round(list_cosine_similarity(a.e, b.e) * 1000000)::BIGINT AS sim_ppm " +
-      "FROM cand a JOIN cand b ON a.vec_id <> b.vec_id), " +
-      "sel AS (WITH RECURSIVE r(step, picks) AS (" +
-      "SELECT 1, [(SELECT vec_id FROM cand ORDER BY rel_ppm DESC, vec_id LIMIT 1)] " +
-      "UNION ALL SELECT step + 1, list_append(picks, (" +
-      "SELECT c.vec_id FROM cand c WHERE NOT list_contains(r.picks, c.vec_id) " +
-      "ORDER BY 7 * c.rel_ppm - 3 * (SELECT max(s.sim_ppm) FROM sims s " +
-      "WHERE s.va = c.vec_id AND list_contains(r.picks, s.vb)) DESC, c.vec_id LIMIT 1)) " +
-      "FROM r WHERE step < 10) SELECT picks FROM r WHERE step = 10) " +
-      "SELECT u.i::BIGINT AS sel_rank, u.v AS vec_id, c.rel_ppm " +
-      "FROM (SELECT unnest(picks) AS v, unnest(range(1, 11)) AS i FROM sel) u " +
-      "JOIN cand c ON c.vec_id = u.v ORDER BY sel_rank"
 
 
-  /** Winnowing replayed selection-for-selection: same k=5 grams over
-    * lower(trim(text)), same 60-bit md5-prefix hash, same rightmost-min
-    * window rule (list_reduce keeps the later index on ties), same df<=
-    * 50 hot-fingerprint cap, Jaccard >= 0.5 over fingerprint sets. */
-  private[graft] val dedupWinnowOracleSql: String =
-    "WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents WHERE text IS NOT NULL), " +
-      "g AS (SELECT doc_id, [('0x' || substr(md5(t[i:i+4]), 1, 15))::UBIGINT::BIGINT " +
-      "FOR i IN range(1, greatest(len(t) - 3, 1))] AS h FROM d WHERE len(t) >= 5), " +
-      "w AS (SELECT doc_id, h, least(4, len(h)) AS we FROM g), " +
-      "f AS (SELECT doc_id, list_distinct([list_reduce(range(j, j + we), " +
-      "(acc, p) -> CASE WHEN h[p] <= h[acc] THEN p ELSE acc END) " +
-      "FOR j IN range(1, len(h) - we + 2)]) AS selpos, h FROM w), " +
-      "fp AS (SELECT doc_id, unnest(list_distinct(list_transform(selpos, p -> h[p]))) AS fp FROM f), " +
-      "keepfp AS (SELECT fp FROM fp GROUP BY fp HAVING count(*) <= 50), " +
-      "fpk AS (SELECT doc_id, fp FROM fp JOIN keepfp USING (fp)), " +
-      "shared AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, count(*) AS n_shared " +
-      "FROM fpk a JOIN fpk b ON a.fp = b.fp AND a.doc_id < b.doc_id GROUP BY 1, 2), " +
-      "sz AS (SELECT doc_id, count(*) AS n_fp FROM fpk GROUP BY 1), " +
-      "p AS (SELECT id_a, id_b, n_shared, " +
-      "n_shared::DOUBLE / (sa.n_fp + sb.n_fp - n_shared) AS sim " +
-      "FROM shared JOIN sz sa ON sa.doc_id = id_a JOIN sz sb ON sb.doc_id = id_b) " +
-      "SELECT count(*) AS n_pairs, coalesce(sum(id_a + id_b), 0)::BIGINT AS pair_id_sum, " +
-      "coalesce(sum(n_shared), 0)::BIGINT AS shared_sum FROM p WHERE sim >= 0.5"
 
 
-  /** Both SNM passes (normalized key + reversed key), blocked on the
-    * 4-char prefix, window 5, distinct pair union, Levenshtein verify. */
-  private[graft] val sortedNeighborhoodOracleSql: String =
-    "WITH u AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL " +
-      "UNION ALL SELECT doc_id + 1000000000000, concat(substr(text, 1, 5), '#', substr(text, 7)) " +
-      "FROM documents WHERE doc_id % 10 = 0 AND text IS NOT NULL), " +
-      "d AS (SELECT doc_id, lower(trim(text)) AS k1, reverse(lower(trim(text))) AS k2, text FROM u), " +
-      "o1 AS (SELECT doc_id, text, substr(k1, 1, 4) AS blk, " +
-      "row_number() OVER (PARTITION BY substr(k1, 1, 4) ORDER BY k1, doc_id) AS rn FROM d), " +
-      "o2 AS (SELECT doc_id, text, substr(k2, 1, 4) AS blk, " +
-      "row_number() OVER (PARTITION BY substr(k2, 1, 4) ORDER BY k2, doc_id) AS rn FROM d), " +
-      "c1 AS (SELECT least(a.doc_id, b.doc_id) AS id_a, greatest(a.doc_id, b.doc_id) AS id_b " +
-      "FROM o1 a JOIN o1 b ON a.blk = b.blk AND b.rn - a.rn BETWEEN 1 AND 4), " +
-      "c2 AS (SELECT least(a.doc_id, b.doc_id) AS id_a, greatest(a.doc_id, b.doc_id) AS id_b " +
-      "FROM o2 a JOIN o2 b ON a.blk = b.blk AND b.rn - a.rn BETWEEN 1 AND 4), " +
-      "cand AS (SELECT DISTINCT id_a, id_b FROM (SELECT * FROM c1 UNION ALL SELECT * FROM c2)), " +
-      "m AS (SELECT id_a, id_b, levenshtein(da.text, db.text) AS dist FROM cand " +
-      "JOIN d da ON da.doc_id = id_a JOIN d db ON db.doc_id = id_b) " +
-      "SELECT count(*) AS n_candidates, " +
-      "count(CASE WHEN dist <= 2 THEN 1 END)::BIGINT AS n_matches, " +
-      "coalesce(sum(CASE WHEN dist <= 2 THEN id_a + id_b END), 0)::BIGINT AS pair_id_sum, " +
-      "coalesce(sum(CASE WHEN dist <= 2 THEN dist END), 0)::BIGINT AS dist_sum FROM m"
 
 
-  /** Fellegi–Sunter replayed weight-for-weight: same planted duplicates,
-    * same reversed-name SNM pass (blockLen 3, window 5), same integer
-    * log-odds table, same decision bands. Agreement predicates are all
-    * symmetric, so the a/b orientation difference (rn order here, id
-    * order in Spark) cannot move a score. */
-  private[graft] val recordLinkageOracleSql: String =
-    "WITH c AS (SELECT c_custkey AS id, lower(c_name) AS nm, c_nationkey AS nat, " +
-      "c_mktsegment AS seg, round(c_acctbal * 100)::BIGINT AS bal FROM customer " +
-      "UNION ALL SELECT c_custkey + 10000000000000, " +
-      "concat(substr(lower(c_name), 1, 8), '-', substr(lower(c_name), 10)), " +
-      "c_nationkey, c_mktsegment, round(c_acctbal * 100)::BIGINT + 50 " +
-      "FROM customer WHERE c_custkey % 10 = 0), " +
-      "o AS (SELECT *, substr(reverse(nm), 1, 3) AS blk, " +
-      "row_number() OVER (PARTITION BY substr(reverse(nm), 1, 3) " +
-      "ORDER BY reverse(nm), id) AS rn FROM c), " +
-      "s AS (SELECT least(a.id, b.id) AS id_a, greatest(a.id, b.id) AS id_b, " +
-      "(CASE WHEN levenshtein(a.nm, b.nm) <= 2 THEN 24 ELSE -8 END) + " +
-      "(CASE WHEN a.nat = b.nat THEN 6 ELSE -6 END) + " +
-      "(CASE WHEN a.seg = b.seg THEN 4 ELSE -4 END) + " +
-      "(CASE WHEN abs(a.bal - b.bal) <= 100 THEN 10 ELSE -10 END) AS score " +
-      "FROM o a JOIN o b ON a.blk = b.blk AND b.rn - a.rn BETWEEN 1 AND 4) " +
-      "SELECT count(*) AS n_candidates, " +
-      "count(CASE WHEN score >= 30 THEN 1 END)::BIGINT AS n_match, " +
-      "count(CASE WHEN score >= 10 AND score < 30 THEN 1 END)::BIGINT AS n_possible, " +
-      "coalesce(sum(CASE WHEN score >= 30 THEN id_a + id_b END), 0)::BIGINT AS match_id_sum, " +
-      "coalesce(sum(CASE WHEN score >= 30 THEN score END), 0)::BIGINT AS match_score_sum FROM s"
 
 
-  /** The fold is utf8proc's strip_accents contract, so DuckDB replays it
-    * natively; grouping on the folded text directly is equivalent to the
-    * Spark side's md5-of-folded key. */
-  private[graft] val foldAccentsOracleSql: String =
-    "WITH d AS (SELECT doc_id, lower(text) AS t FROM documents WHERE text IS NOT NULL " +
-      "UNION ALL SELECT doc_id + 2000000000000, translate(lower(text), 'aeiou', 'àéîöú') " +
-      "FROM documents WHERE doc_id % 10 = 0 AND text IS NOT NULL), " +
-      "f AS (SELECT doc_id, t, strip_accents(t) AS ff FROM d), " +
-      "g AS (SELECT ff, count(*) AS n, sum(CASE WHEN ff <> t THEN 1 ELSE 0 END) AS nc, " +
-      "sum(doc_id) AS ids FROM f GROUP BY ff) " +
-      "SELECT sum(n)::BIGINT AS n_docs, sum(nc)::BIGINT AS n_changed, " +
-      "count(*)::BIGINT AS n_groups, " +
-      "count(CASE WHEN n >= 2 THEN 1 END)::BIGINT AS n_dup_groups, " +
-      "coalesce(sum(CASE WHEN n >= 2 THEN ids END), 0)::BIGINT AS dup_id_sum FROM g"
 
 
   /** Token-position replay of the automaton semantics: phrases match
@@ -1198,39 +901,8 @@ private[graft] trait EntryCore {
   // separator, while Unicode lowercasing can map non-ASCII chars INTO
   // [a-z0-9] (Kelvin sign U+212A -> 'k', fullwidth letters) — lower() would
   // tokenize those differently than the scan (advisor r12).
-  private[graft] val blocklistPhrasesOracleSql: String =
-    "WITH d AS (SELECT doc_id, list_filter(string_split_regex(" +
-      "translate(text, 'ABCDEFGHIJKLMNOPQRSTUVWXYZ', 'abcdefghijklmnopqrstuvwxyz'), " +
-      "'[^a-z0-9]+'), x -> x <> '') AS tk FROM documents WHERE text IS NOT NULL), " +
-      "h AS (SELECT doc_id, " +
-      "len([i FOR i IN range(1, len(tk)) IF tk[i:i+1] = ['big','table']]) + " +
-      "len([i FOR i IN range(1, len(tk)) IF tk[i:i+1] = ['table','table']]) + " +
-      "len([i FOR i IN range(1, len(tk)) IF tk[i:i+1] = ['slow','query']]) + " +
-      "len([i FOR i IN range(1, len(tk)) IF tk[i:i+1] = ['hash','join']]) + " +
-      "len(list_filter(tk, x -> x = 'stream')) AS hits FROM d) " +
-      "SELECT count(CASE WHEN hits > 0 THEN 1 END)::BIGINT AS n_docs_hit, " +
-      "coalesce(sum(hits), 0)::BIGINT AS total_hits, " +
-      "coalesce(sum(CASE WHEN hits > 0 THEN doc_id END), 0)::BIGINT AS hit_id_sum, " +
-      "coalesce(max(hits), 0)::BIGINT AS max_hits FROM h"
 
 
-  /** The merge theorem as assertion: the oracle recomputes the WHOLE-
-    * corpus sketch summaries and pins both mismatch counts to zero — a
-    * Spark-side merge that diverged from the single-pass sketch in any
-    * cell/register would fail the compare. */
-  private[graft] val sketchShardMergeOracleSql: String =
-    "WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL), " +
-      "rr AS (SELECT unnest([0, 1, 2, 3]) AS r), " +
-      "cells AS (SELECT r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c, " +
-      "count(*) AS cnt FROM t, rr GROUP BY 1, 2), " +
-      "h AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
-      "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v FROM t), " +
-      "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM h GROUP BY bucket) " +
-      "SELECT (SELECT count(*) FROM cells)::BIGINT AS cms_cells, 0::BIGINT AS cms_mismatch, " +
-      "(SELECT coalesce(sum(cnt), 0) FROM cells)::BIGINT AS total_mass, " +
-      "(SELECT count(*) FROM regs)::BIGINT AS hll_regs, 0::BIGINT AS hll_mismatch"
 
 
   /** Streamed sketch == batch sketch: the oracle rebuilds the cell table
@@ -1248,60 +920,10 @@ private[graft] trait EntryCore {
       "coalesce(sum((r * 1024 + c) * cnt), 0)::BIGINT AS cell_checksum FROM cells"
 
 
-  /** Count-Min replayed cell-for-cell: same md5 hex-slice columns (row r
-    * uses hex[3r+1..3r+3] mod 1024), same min-over-rows estimate with
-    * empty cells read as 0. */
-  private[graft] val cmsHeavyHittersOracleSql: String =
-    "WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL), " +
-      "rr AS (SELECT unnest([0, 1, 2, 3]) AS r), " +
-      "cells AS (SELECT r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c, " +
-      "count(*) AS cnt FROM t, rr GROUP BY 1, 2), " +
-      "top AS (SELECT tok, count(*)::BIGINT AS exact FROM t GROUP BY tok " +
-      "ORDER BY exact DESC, tok LIMIT 10), " +
-      "pc AS (SELECT tok, r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c " +
-      "FROM top, rr), " +
-      "est AS (SELECT tok, min(coalesce(cnt, 0))::BIGINT AS est FROM pc " +
-      "LEFT JOIN cells USING (r, c) GROUP BY tok) " +
-      "SELECT tok, exact, est, (est - exact)::BIGINT AS overcount " +
-      "FROM est JOIN top USING (tok)"
 
 
-  /** HLL registers replayed bucket-for-bucket: bucket = hex[1..3] mod
-    * 1024, rho = 61 − len(bin(v)) over the 60-bit hex[4..18] slice (61
-    * when v = 0), registers as max-aggregates; exact distinct over the
-    * same md5 fingerprints. */
-  private[graft] val hllDistinctOracleSql: String =
-    "WITH d AS (SELECT list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '') AS toks FROM documents WHERE text IS NOT NULL), " +
-      "g AS (SELECT unnest(list_transform(range(1, len(toks) - 5 + 2), " +
-      "i -> array_to_string(toks[i:i+4], ' '))) AS gram FROM d WHERE len(toks) >= 5), " +
-      "h AS (SELECT ('0x' || substr(md5(gram), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
-      "('0x' || substr(md5(gram), 4, 15))::UBIGINT::BIGINT AS v, md5(gram) AS fp FROM g), " +
-      "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM h GROUP BY bucket) " +
-      "SELECT 1024::BIGINT AS m, (SELECT count(*) FROM regs)::BIGINT AS n_filled, " +
-      "(SELECT coalesce(sum(rho), 0) FROM regs)::BIGINT AS sum_rho, " +
-      "(SELECT coalesce(max(rho), 0) FROM regs)::BIGINT AS max_rho, " +
-      "(SELECT count(DISTINCT fp) FROM h)::BIGINT AS exact_distinct"
 
 
-  /** Register table alone, replayed bucket-for-bucket with a
-    * position-weighted checksum — the production HLL shape (no exact
-    * comparator term). */
-  private[graft] val hllRegistersOnlyOracleSql: String =
-    "WITH d AS (SELECT list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '') AS toks FROM documents WHERE text IS NOT NULL), " +
-      "g AS (SELECT unnest(list_transform(range(1, len(toks) - 5 + 2), " +
-      "i -> array_to_string(toks[i:i+4], ' '))) AS gram FROM d WHERE len(toks) >= 5), " +
-      "h AS (SELECT ('0x' || substr(md5(gram), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
-      "('0x' || substr(md5(gram), 4, 15))::UBIGINT::BIGINT AS v FROM g), " +
-      "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM h GROUP BY bucket) " +
-      "SELECT 1024::BIGINT AS m, count(*)::BIGINT AS n_filled, " +
-      "coalesce(sum(rho), 0)::BIGINT AS sum_rho, " +
-      "coalesce(max(rho), 0)::BIGINT AS max_rho, " +
-      "coalesce(sum((bucket + 1) * rho), 0)::BIGINT AS reg_checksum FROM regs"
 
 
   /** Gaps-and-islands replay of the planted chain components (no graph
@@ -1336,108 +958,16 @@ private[graft] trait EntryCore {
       "coalesce(sum((bucket + 1) * rho), 0)::BIGINT AS reg_checksum FROM regs GROUP BY lang) "
 
 
-  private[graft] val hllGroupDistinctOracleSql: String =
-    hllGroupCte(256) +
-      ", x AS (SELECT lang, count(DISTINCT fp)::BIGINT AS exact_distinct FROM h GROUP BY lang) " +
-      "SELECT s.lang, n_filled, sum_rho, max_rho, reg_checksum, exact_distinct " +
-      "FROM s JOIN x USING (lang) ORDER BY lang"
 
 
-  private[graft] val hllGroupRegistersOnlyOracleSql: String =
-    hllGroupCte(256) +
-      "SELECT lang, n_filled, sum_rho, max_rho, reg_checksum FROM s ORDER BY lang"
 
 
-  /** Streamed HLL == batch HLL: the oracle rebuilds the register table
-    * from the same tokens (m = 1024) — the complete-mode max-aggregate
-    * must land on exactly the batch registers, checksum-pinned. */
-  private[graft] val streamHllOracleSql: String =
-    "WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL), " +
-      "h AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
-      "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v FROM t), " +
-      "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM h GROUP BY bucket) " +
-      "SELECT 1024::BIGINT AS m, count(*)::BIGINT AS n_filled, " +
-      "coalesce(sum(rho), 0)::BIGINT AS sum_rho, " +
-      "coalesce(max(rho), 0)::BIGINT AS max_rho, " +
-      "coalesce(sum((bucket + 1) * rho), 0)::BIGINT AS reg_checksum FROM regs"
 
 
-  /** Windowed streaming HLL replayed on the same hour grid with the same
-    * md5 register slices; the append-mode watermark cutoff — only windows
-    * whose end precedes (max event time − 10 min) emit — is replayed as a
-    * WHERE on the window end (the `sessionize` stated-semantics
-    * discipline). */
-  private[graft] val streamHllWindowOracleSql: String =
-    "WITH e AS (SELECT ts, user_id::VARCHAR AS uid FROM events WHERE user_id IS NOT NULL), " +
-      "mx AS (SELECT max(ts) AS mt FROM e), " +
-      "h AS (SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, " +
-      "('0x' || substr(md5(uid), 1, 3))::UBIGINT::BIGINT % 256 AS bucket, " +
-      "('0x' || substr(md5(uid), 4, 15))::UBIGINT::BIGINT AS v FROM e), " +
-      "regs AS (SELECT ws, bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM h GROUP BY ws, bucket), " +
-      "s AS (SELECT ws, count(*)::BIGINT AS n_filled, sum(rho)::BIGINT AS sum_rho, " +
-      "sum((bucket + 1) * rho)::BIGINT AS reg_checksum FROM regs GROUP BY ws) " +
-      "SELECT epoch(ws)::BIGINT AS ws_epoch, n_filled, sum_rho, reg_checksum FROM s, mx " +
-      "WHERE ws + INTERVAL '1 hour' <= mt - INTERVAL '10 minutes' ORDER BY ws_epoch"
 
 
-  /** Per-group Count-Min replayed cell-for-cell with the language riding
-    * the cell key; per-group top-3 exact counts as ground truth, same
-    * min-over-rows estimate with empty cells read as 0 WITHIN the
-    * group. */
-  private[graft] val cmsGroupTopkOracleSql: String =
-    "WITH t AS (SELECT lang, unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL AND lang IS NOT NULL), " +
-      "rr AS (SELECT unnest([0, 1, 2, 3]) AS r), " +
-      "cells AS (SELECT lang, r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c, " +
-      "count(*) AS cnt FROM t, rr GROUP BY 1, 2, 3), " +
-      "top AS (SELECT lang, tok, exact FROM (SELECT lang, tok, count(*)::BIGINT AS exact, " +
-      "row_number() OVER (PARTITION BY lang ORDER BY count(*) DESC, tok) AS rk " +
-      "FROM t GROUP BY lang, tok) WHERE rk <= 3), " +
-      "pc AS (SELECT lang, tok, r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c " +
-      "FROM top, rr), " +
-      "est AS (SELECT lang, tok, min(coalesce(cnt, 0))::BIGINT AS est FROM pc " +
-      "LEFT JOIN cells USING (lang, r, c) GROUP BY lang, tok) " +
-      "SELECT lang, tok, exact, est, (est - exact)::BIGINT AS overcount " +
-      "FROM est JOIN top USING (lang, tok) ORDER BY lang, tok"
 
 
-  /** HLL set algebra replayed: per-half register tables (m = 4096)
-    * checksum-for-checksum, the union registers from the combined token
-    * stream (== the per-bucket max merge, by the max law the Spark side
-    * asserts as merge_mismatch = 0), the exact fingerprint intersection
-    * as ground truth, and the inclusion–exclusion bound pinned at 1. */
-  private[graft] val hllIntersectionOracleSql: String =
-    "WITH d AS (SELECT substr(source, 4)::INT AS src_n, text FROM documents " +
-      "WHERE text IS NOT NULL AND source IS NOT NULL), " +
-      "ta AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '')) AS tok FROM d WHERE src_n < 10), " +
-      "tb AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '')) AS tok FROM d WHERE src_n >= 10), " +
-      "ha AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 4096 AS bucket, " +
-      "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v, md5(tok) AS fp FROM ta), " +
-      "hb AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 4096 AS bucket, " +
-      "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v, md5(tok) AS fp FROM tb), " +
-      "ra AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM ha GROUP BY bucket), " +
-      "rb AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM hb GROUP BY bucket), " +
-      "ru AS (SELECT bucket, max(rho) AS rho FROM " +
-      "(SELECT bucket, rho FROM ra UNION ALL SELECT bucket, rho FROM rb) GROUP BY bucket), " +
-      "ix AS (SELECT count(*)::BIGINT AS exact FROM " +
-      "(SELECT DISTINCT fp FROM ha) a JOIN (SELECT DISTINCT fp FROM hb) b USING (fp)) " +
-      "SELECT 4096::BIGINT AS m, " +
-      "(SELECT count(*) FROM ra)::BIGINT AS a_filled, " +
-      "(SELECT count(*) FROM rb)::BIGINT AS b_filled, " +
-      "(SELECT count(*) FROM ru)::BIGINT AS u_filled, " +
-      "(SELECT coalesce(sum((bucket + 1) * rho), 0) FROM ra)::BIGINT AS a_checksum, " +
-      "(SELECT coalesce(sum((bucket + 1) * rho), 0) FROM rb)::BIGINT AS b_checksum, " +
-      "(SELECT coalesce(sum((bucket + 1) * rho), 0) FROM ru)::BIGINT AS u_checksum, " +
-      "0::BIGINT AS merge_mismatch, " +
-      "(SELECT exact FROM ix)::BIGINT AS exact_intersection, " +
-      "1::BIGINT AS within_bound"
 
 
   /** PCA's moment state replayed exactly — the x1e3 integer grid, Σ qᵢ
@@ -1459,15 +989,6 @@ private[graft] trait EntryCore {
       "(SELECT unnest(range(0, 64)) AS i) a GROUP BY a.i) "
 
 
-  private[graft] val pcaProjectOracleSql: String =
-    pcaMomentsCte +
-      "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 64::BIGINT AS d, " +
-      "(SELECT sum(CASE WHEN i = j THEN gij ELSE 0 END) FROM g)::BIGINT AS trace_q, " +
-      "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
-      "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum, " +
-      "1::BIGINT AS eig_trace_ok, 1::BIGINT AS eig_sorted_ok, " +
-      "1::BIGINT AS eig_orthonormal_ok, 1::BIGINT AS eig_dominates_axes, " +
-      "1::BIGINT AS proj_var_ok"
 
 
   /** Batch-probes-index replayed by brute force: every (batch, corpus)
@@ -1484,48 +1005,10 @@ private[graft] trait EntryCore {
       "ORDER BY vec_id, rank"
 
 
-  /** Shard-built + stored + merged gram state == the single-pass state:
-    * the oracle replays the whole-corpus moments and pins n_mismatch = 0
-    * (any drifted element fails the compare Spark-side). */
-  private[graft] val gramStoreMergeOracleSql: String =
-    pcaMomentsCte +
-      "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 2145::BIGINT AS state_len, " +
-      "0::BIGINT AS n_mismatch, " +
-      "(SELECT sum(CASE WHEN i = j THEN gij ELSE 0 END) FROM g)::BIGINT AS trace_q, " +
-      "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
-      "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum"
 
 
-  /** Streamed moment state == the single-pass batch moments, exactly. */
-  private[graft] val streamGramOracleSql: String =
-    pcaMomentsCte +
-      "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 2145::BIGINT AS state_len, " +
-      "(SELECT sum(CASE WHEN i = j THEN gij ELSE 0 END) FROM g)::BIGINT AS trace_q, " +
-      "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
-      "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum"
 
 
-  /** Per-group moments replayed with the label riding every CTE key;
-    * eigensolver contract booleans pinned per group. */
-  private[graft] val pcaByGroupOracleSql: String =
-    "WITH v AS (SELECT label, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS q " +
-      "FROM embeddings WHERE label IS NOT NULL AND embedding IS NOT NULL AND len(embedding) >= 64 " +
-      "AND len(list_filter(embedding, x -> x IS NULL)) = 0), " +
-      "ij AS (SELECT a.i AS i, b.j AS j FROM (SELECT unnest(range(0, 64)) AS i) a, " +
-      "(SELECT unnest(range(0, 64)) AS j) b WHERE b.j >= a.i), " +
-      "g AS (SELECT label, i, j, sum(q[i + 1] * q[j + 1])::BIGINT AS gij FROM v, ij " +
-      "GROUP BY label, i, j), " +
-      "s AS (SELECT label, a.i AS i, sum(q[a.i + 1])::BIGINT AS si FROM v, " +
-      "(SELECT unnest(range(0, 64)) AS i) a GROUP BY label, a.i), " +
-      "n AS (SELECT label, count(*)::BIGINT AS n FROM v GROUP BY label), " +
-      "gc AS (SELECT label, sum(CASE WHEN i = j THEN gij ELSE 0 END)::BIGINT AS trace_q, " +
-      "(sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007)::BIGINT AS gram_checksum " +
-      "FROM g GROUP BY label), " +
-      "sc AS (SELECT label, (sum((i + 1) * (si % 1000003)) % 1000000007)::BIGINT AS sums_checksum " +
-      "FROM s GROUP BY label) " +
-      "SELECT n.label::BIGINT AS label, n.n, gc.trace_q, sc.sums_checksum, gc.gram_checksum, " +
-      "1::BIGINT AS eig_trace_ok, 1::BIGINT AS eig_dominates_axes " +
-      "FROM n JOIN gc USING (label) JOIN sc USING (label) ORDER BY label"
 
 
   /** Token-drift oracle: the planted day-1 snapshot replayed — same
@@ -1554,114 +1037,18 @@ private[graft] trait EntryCore {
       "(SELECT delta FROM top)::BIGINT AS top_mover_delta_ppm FROM d"
 
 
-  /** Drift-report oracle: shard sizes and exact integer traces replayed
-    * from the same planted generator arithmetic; the two angle verdicts
-    * pinned as contract booleans (measured cosines 0.99999995 aligned /
-    * 0.0126 rotated vs the 0.98 / 0.3 bars — ~50× margin each side). */
-  private[graft] val pcaDriftOracleSql: String =
-    "WITH wa(d, w) AS (VALUES (0, 128), (1, 64), (2, 32), (3, 16), (4, 8), (5, 4), (6, 2), (7, 1)), " +
-      "wc(d, w) AS (VALUES (0, 1), (1, 64), (2, 32), (3, 16), (4, 8), (5, 4), (6, 2), (7, 128)), " +
-      "ii AS (SELECT unnest(range(0, 600)) AS i), " +
-      "qa AS (SELECT sum((w * (((i + 0) * 31 + d * 7) % 19 - 9)) * (w * (((i + 0) * 31 + d * 7) % 19 - 9)))::BIGINT AS t FROM ii, wa), " +
-      "qb AS (SELECT sum((w * (((i + 1000) * 31 + d * 7) % 19 - 9)) * (w * (((i + 1000) * 31 + d * 7) % 19 - 9)))::BIGINT AS t FROM ii, wa), " +
-      "qc AS (SELECT sum((w * (((i + 1000) * 31 + d * 7) % 19 - 9)) * (w * (((i + 1000) * 31 + d * 7) % 19 - 9)))::BIGINT AS t FROM ii, wc) " +
-      "SELECT 600::BIGINT AS n_a, 600::BIGINT AS n_b, 600::BIGINT AS n_c, " +
-      "(SELECT t FROM qa) AS trace_a, (SELECT t FROM qb) AS trace_b, (SELECT t FROM qc) AS trace_c, " +
-      "1::BIGINT AS aligned_ok, 1::BIGINT AS drift_detected"
 
 
-  /** Whitening contract: moment state replayed exactly; unit variance and
-    * decorrelation pinned at 1 (they hold only if moments, eigensolve,
-    * whitening scale, and projection all agree — the Spark side computes
-    * them honestly from the in-plan integer projections). */
-  private[graft] val pcaWhitenOracleSql: String =
-    pcaMomentsCte +
-      "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 8::BIGINT AS k_kept, " +
-      "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
-      "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum, " +
-      "1::BIGINT AS unit_var_ok, 1::BIGINT AS decorrelated_ok"
 
 
-  /** The mutual-kNN clustering replayed end to end: brute-force kNN on
-    * the ppm grid, mutual filter, transitive closure by recursive CTE,
-    * min-label components. */
-  private[graft] val knnClustersOracleSql: String =
-    "WITH RECURSIVE p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id, " +
-      "round(list_cosine_similarity(list_transform(a.embedding, x -> x::DOUBLE), " +
-      "list_transform(b.embedding, x -> x::DOUBLE)) * 1000000)::BIGINT AS cos_ppm " +
-      "FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id), " +
-      "r AS (SELECT vec_id, nbr_id, " +
-      "row_number() OVER (PARTITION BY vec_id ORDER BY cos_ppm DESC, nbr_id) AS rank FROM p), " +
-      "knn AS (SELECT vec_id, nbr_id FROM r WHERE rank <= 3), " +
-      "mu AS (SELECT a.vec_id AS ida, a.nbr_id AS idb FROM knn a " +
-      "JOIN knn b ON a.vec_id = b.nbr_id AND a.nbr_id = b.vec_id WHERE a.vec_id < a.nbr_id), " +
-      "e AS (SELECT ida AS s, idb AS d FROM mu UNION ALL SELECT idb AS s, ida AS d FROM mu), " +
-      "nodes AS (SELECT DISTINCT s AS id FROM e), " +
-      "walk AS (SELECT id, id AS reach FROM nodes " +
-      "UNION SELECT w.id, e.d AS reach FROM walk w JOIN e ON e.s = w.reach), " +
-      "comp AS (SELECT id, min(reach) AS component FROM walk GROUP BY id) " +
-      "SELECT count(*)::BIGINT AS n_nodes, count(DISTINCT component)::BIGINT AS n_clusters, " +
-      "coalesce(sum(component % 1000003), 0)::BIGINT AS comp_checksum, " +
-      "coalesce(sum(id), 0)::BIGINT AS node_id_sum FROM comp"
 
 
-  /** The full-probe kNN graph replayed by brute force on the shared ppm
-    * grid: every ordered pair's cosine (double-cast lists, the
-    * `decontaminate_semantic` discipline), rank = row_number per vector
-    * by (cos_ppm DESC, nbr ASC). */
-  private[graft] val knnGraphOracleSql: String =
-    "WITH p AS (SELECT a.vec_id AS vec_id, b.vec_id AS nbr_id, " +
-      "round(list_cosine_similarity(list_transform(a.embedding, x -> x::DOUBLE), " +
-      "list_transform(b.embedding, x -> x::DOUBLE)) * 1000000)::BIGINT AS cos_ppm " +
-      "FROM embeddings a JOIN embeddings b ON a.vec_id <> b.vec_id), " +
-      "r AS (SELECT vec_id, nbr_id, cos_ppm, " +
-      "row_number() OVER (PARTITION BY vec_id ORDER BY cos_ppm DESC, nbr_id) AS rank FROM p) " +
-      "SELECT vec_id, rank::BIGINT AS rank, nbr_id, cos_ppm FROM r WHERE rank <= 3 " +
-      "ORDER BY vec_id, rank"
 
 
-  /** Pruned probing is quantizer-dependent (engine hashing picks the
-    * coarse centroids), so the oracle pins the structural contract —
-    * complete bounded graph, no self edges — and the recall bound the
-    * Spark side computes honestly against its own exact join. */
-  private[graft] val knnGraphPrunedOracleSql: String =
-    "SELECT count(*)::BIGINT AS n_vectors, 3::BIGINT AS k, " +
-      "(count(*) * 3)::BIGINT AS n_edges, count(*)::BIGINT AS n_served, " +
-      "0::BIGINT AS n_self_edges, 1::BIGINT AS recall_ok FROM embeddings"
 
 
-  /** Structural contract with the completeness bar computed honestly
-    * in-query from the candidate supply (advisor r14): the oracle pins
-    * the booleans, not an assumed k·n edge count. */
-  private[graft] val knnGraphOnlyOracleSql: String =
-    "SELECT count(*)::BIGINT AS n_vectors, 1::BIGINT AS served_ok, " +
-      "1::BIGINT AS edges_ok, 0::BIGINT AS n_self_edges, " +
-      "1::BIGINT AS rank_ok FROM embeddings"
 
 
-  /** Store round-trip pinned like `sketch_shard_merge`: the oracle
-    * recomputes the WHOLE-corpus cells/registers/bottom-k and requires all
-    * three mismatch counts to be zero — one cell/register/(prio, v) row
-    * diverging through the write→read→merge cycle fails the compare. */
-  private[graft] val sketchStoreRoundtripOracleSql: String =
-    "WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
-      "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL), " +
-      "rr AS (SELECT unnest([0, 1, 2, 3]) AS r), " +
-      "cells AS (SELECT r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c, " +
-      "count(*) AS cnt FROM t, rr GROUP BY 1, 2), " +
-      "h AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
-      "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v FROM t), " +
-      "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
-      "FROM h GROUP BY bucket), " +
-      "src AS (SELECT doc_id, length(text)::BIGINT AS len FROM documents " +
-      "WHERE text IS NOT NULL AND doc_id IS NOT NULL), " +
-      "sk AS (SELECT ('0x' || substr(md5(doc_id::VARCHAR || ':' || len::VARCHAR), 1, 15))" +
-      "::UBIGINT::BIGINT AS prio, len AS v FROM src ORDER BY prio, v LIMIT 1024) " +
-      "SELECT (SELECT count(*) FROM cells)::BIGINT AS cms_cells, 0::BIGINT AS cms_mismatch, " +
-      "(SELECT coalesce(sum(cnt), 0) FROM cells)::BIGINT AS total_mass, " +
-      "(SELECT count(*) FROM regs)::BIGINT AS hll_regs, 0::BIGINT AS hll_mismatch, " +
-      "(SELECT count(*) FROM sk)::BIGINT AS bk_rows, 0::BIGINT AS bk_mismatch, " +
-      "(SELECT coalesce(sum(prio % 1000003), 0) FROM sk)::BIGINT AS bk_prio_checksum"
 
 
   /** Bottom-k quantile sketch replayed state-for-state: same md5
@@ -1679,94 +1066,14 @@ private[graft] trait EntryCore {
       "ON rn = greatest(1, (q_x1e4 * s + 9999) // 10000) ORDER BY q_x1e4"
 
 
-  /** Merge theorem as assertion: the oracle recomputes the WHOLE-corpus
-    * sketch and pins n_mismatch to 0 — a merged sketch diverging from the
-    * single pass in any (prio, v) row fails the compare. */
-  private[graft] val quantileBottomkMergeOracleSql: String =
-    "WITH src AS (SELECT doc_id, length(text)::BIGINT AS len FROM documents " +
-      "WHERE text IS NOT NULL AND doc_id IS NOT NULL), " +
-      "sk AS (SELECT ('0x' || substr(md5(doc_id::VARCHAR || ':' || len::VARCHAR), 1, 15))" +
-      "::UBIGINT::BIGINT AS prio, len AS v FROM src ORDER BY prio, v LIMIT 1024) " +
-      "SELECT count(*)::BIGINT AS sketch_rows, 0::BIGINT AS n_mismatch, " +
-      "coalesce(sum(prio % 1000003), 0)::BIGINT AS prio_checksum, " +
-      "coalesce(sum(v), 0)::BIGINT AS v_sum FROM sk"
 
 
-  /** Per-group bottom-k quantiles replayed group-for-group. */
-  private[graft] val groupPercentilesPortableOracleSql: String =
-    "WITH src AS (SELECT lang, doc_id, length(text)::BIGINT AS v FROM documents " +
-      "WHERE text IS NOT NULL AND doc_id IS NOT NULL AND lang IS NOT NULL), " +
-      "pr AS (SELECT lang, v, ('0x' || substr(md5(doc_id::VARCHAR || ':' || v::VARCHAR), 1, 15))" +
-      "::UBIGINT::BIGINT AS prio FROM src), " +
-      "sm AS (SELECT lang, v, prio, " +
-      "row_number() OVER (PARTITION BY lang ORDER BY prio, v) AS pn, " +
-      "count(*) OVER (PARTITION BY lang) AS n FROM pr), " +
-      "samp AS (SELECT lang, v, prio, n, least(n, 1024) AS s, " +
-      "row_number() OVER (PARTITION BY lang ORDER BY v, prio) AS rn " +
-      "FROM sm WHERE pn <= 1024), " +
-      "qq AS (SELECT unnest([2500, 5000, 7500])::BIGINT AS q_x1e4) " +
-      "SELECT lang, n::BIGINT AS n, q_x1e4, v AS est_v FROM qq JOIN samp " +
-      "ON rn = greatest(1, (q_x1e4 * s + 9999) // 10000) ORDER BY lang, q_x1e4"
 
 
-  /** Deflate ratios: DuckDB has no zlib, so the planted documents' exact
-    * ratios are Scala-computed literals (the rankingEval pattern), and the
-    * corpus carries the always-true bound invariant (n_in_bounds must
-    * equal n_nonempty — every non-empty doc compresses to a positive size,
-    * and raw deflate's stored-block overhead caps the ratio well under
-    * 1.10x once orig_bytes ≥ 100). */
-  private[graft] def textCompressRatioOracleSql: String = {
-    def ratioOf(s: String): Long = {
-      val n = s.getBytes(java.nio.charset.StandardCharsets.UTF_8).length
-      graft.operators.TextAnalysis.deflatedBytes(s) * 10000L / n
-    }
-    val Seq(c, p, rnd) = compressPlants.map { case (_, s) => ratioOf(s) }
-    "SELECT (SELECT count(*) FROM documents)::BIGINT AS n_docs, " +
-      "(SELECT count(*) FROM documents WHERE text IS NOT NULL AND length(text) > 0)" +
-      "::BIGINT AS n_nonempty, " +
-      "(SELECT count(*) FROM documents WHERE text IS NOT NULL AND length(text) > 0)" +
-      "::BIGINT AS n_in_bounds, " +
-      s"$c::BIGINT AS const_ratio_x1e4, $p::BIGINT AS phrase_ratio_x1e4, " +
-      s"$rnd::BIGINT AS rand_ratio_x1e4"
-  }
 
 
-  /** nDCG/MRR replayed with the SAME Scala-computed discount constants
-    * embedded as SQL literals — the float log2 never runs in DuckDB. */
-  private[graft] val rankingEvalOracleSql: String = {
-    val disc = graft.operators.Ranking.dcgDiscountsPpm(10)
-    val idcg = graft.operators.Ranking.idcgPpm(10)
-    val caseDisc = (1 to 10).map(i => s"WHEN $i THEN ${disc(i - 1)}")
-      .mkString("CASE srank ", " ", " ELSE 0 END")
-    annPqCoreCte + ", " +
-      "exq AS (SELECT z.vec_id, sum((z.q - qv.q) * (z.q - qv.q))::BIGINT AS d " +
-      "FROM qz z JOIN qv ON qv.s = z.s AND qv.spos = z.spos WHERE z.vec_id <> 0 GROUP BY z.vec_id), " +
-      "ex AS (SELECT vec_id, row_number() OVER (ORDER BY d, vec_id) AS trank " +
-      "FROM exq ORDER BY d, vec_id LIMIT 10), " +
-      "sysr AS (SELECT vec_id, row_number() OVER (ORDER BY pq_dist, vec_id) AS srank " +
-      "FROM res ORDER BY pq_dist, vec_id LIMIT 10), " +
-      "j AS (SELECT s.srank, coalesce(11 - e.trank, 0) AS rel " +
-      "FROM sysr s LEFT JOIN ex e USING (vec_id)), " +
-      s"m AS (SELECT coalesce(sum(rel * ($caseDisc)), 0)::BIGINT AS dcg, " +
-      "min(CASE WHEN rel > 0 THEN srank END) AS fr, " +
-      "count(CASE WHEN rel > 0 THEN 1 END)::BIGINT AS n_relevant FROM j) " +
-      s"SELECT 10::BIGINT AS k, dcg, $idcg::BIGINT AS idcg, " +
-      s"((dcg * 1000000) // $idcg)::BIGINT AS ndcg_ppm, " +
-      "coalesce(1000000 // fr, 0)::BIGINT AS mrr_ppm, n_relevant FROM m"
-  }
 
 
-  /** PQ recall@10 vs the exact L2 ranking on the same grid: extends the
-    * PQ CTE with the brute-force distance and intersects the two top-10
-    * id sets. */
-  private[graft] val pqRecallOracleSql: String =
-    annPqCoreCte + ", " +
-      "exq AS (SELECT z.vec_id, sum((z.q - qv.q) * (z.q - qv.q))::BIGINT AS d " +
-      "FROM qz z JOIN qv ON qv.s = z.s AND qv.spos = z.spos WHERE z.vec_id <> 0 GROUP BY z.vec_id), " +
-      "ex AS (SELECT vec_id FROM exq ORDER BY d, vec_id LIMIT 10), " +
-      "pqt AS (SELECT vec_id FROM res ORDER BY pq_dist, vec_id LIMIT 10), " +
-      "nc AS (SELECT count(*)::BIGINT AS n FROM pqt JOIN ex USING (vec_id)) " +
-      "SELECT 10::BIGINT AS k, n AS n_common, ((n * 1000000) // 10)::BIGINT AS recall_ppm FROM nc"
 
 
   /** Shared Gopher-rule CTE (through `g`, which carries every flag plus
@@ -1814,5 +1121,69 @@ private[graft] trait EntryCore {
       "t AS (SELECT sum(w)::BIGINT AS wt FROM w), " +
       "q AS (SELECT lang, n_docs, w::BIGINT AS w, ((200 * w) // wt)::BIGINT AS quota FROM w, t)"
 
-
+  /** The queries defined in this file, each with its DuckDB oracle. */
+  private[graft] lazy val coreQueries: Seq[QueryDef] = Seq(
+    // Scale: round-13: the fifth iterative operator — star-contraction CC on the
+    // planted diameter-50 chain graph (rounds must be FLAT in corpus size: chain
+    // length is fixed, O(log² n) contraction depth barely moves); the
+    // quantile-sketch family (bottom-k state is CONSTANT — the
+    // TakeOrderedAndProject cut is the term under test; the per-group variant
+    // shuffles group-key rows once); and the production-shape sketch twins whose
+    // bytes must be ~flat where their oracle-bearing siblings carry the
+    // corpus-linear comparator.
+    // chains of consecutive ids = gaps-and-islands: component = min(id)
+    // over island (id - row_number() is constant per consecutive run) —
+    // no recursive walk needed, exact at any scale
+    QueryDef("cc_chain_star", qCcChainStar(_, _), ccChainStarOracleSql, Set(Scale)),
+    // full replay of the dHash chain from the pixel formula: integer luma
+    // (grayscale: the sample), 2x2 block means (18x16 / 9x8 grid), neighbor
+    // comparison bits, all-pairs hamming <= 3 — the engine must reproduce
+    // the exact pair list through its real PNG encode/decode round-trip
+    QueryDef("image_phash_dedup", qImagePhashDedup,
+      "WITH ids AS (SELECT doc_id AS id, doc_id // 2 AS k FROM documents), " +
+        "px AS (SELECT id, x, y, " +
+        "(x*x*(1 + k % 5) + y*y*(2 + k % 7) + x*y*(k % 11)) % 256 AS v " +
+        "FROM ids, (SELECT unnest(range(0, 18)) AS x), (SELECT unnest(range(0, 16)) AS y)), " +
+        "cells AS (SELECT id, y // 2 AS gy, x // 2 AS gx, sum(v) // 4 AS cell " +
+        "FROM px GROUP BY id, y // 2, x // 2), " +
+        "bits AS (SELECT a.id, a.gy, a.gx, CASE WHEN b.cell > a.cell THEN 1 ELSE 0 END AS bit " +
+        "FROM cells a JOIN cells b ON b.id = a.id AND b.gy = a.gy AND b.gx = a.gx + 1 " +
+        "WHERE a.gx < 8), " +
+        "sigs AS (SELECT id, list(bit ORDER BY gy * 8 + gx) AS bl FROM bits GROUP BY id), " +
+        "pairs AS (SELECT s1.id AS id_a, s2.id AS id_b, " +
+        "list_sum(list_transform(range(1, 65), i -> CASE WHEN s1.bl[i] <> s2.bl[i] THEN 1 ELSE 0 END))::BIGINT AS hamming " +
+        "FROM sigs s1 JOIN sigs s2 ON s1.id < s2.id) " +
+        "SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b"),
+    QueryDef("multimodal_features", qMultimodalFeatures,
+      "SELECT count(*) AS n, count(*) AS n_png, " +
+        "sum(1 + doc_id % 64)::BIGINT AS width_sum, sum(1 + doc_id % 48)::BIGINT AS height_sum, " +
+        "count(*) AS n_feat8, count(*) AS n_mean_exact, count(*) AS n_std_zero FROM documents"),
+    // Scale: round-15: the unigram trainer (one corpus scan into the Heaps'-law
+    // word histogram, then vocab-broadcast kernel passes over the DISTINCT-WORD
+    // frame — rotation makes copies' vocabularies disjoint, so the distinct-word
+    // term grows ~linearly and seeding/E-step cost must track IT, not the
+    // corpus); the streaming kNN probe (fixed 50-vector stream against the grown
+    // stored index through foreachBatch — the knn_incremental law with trigger
+    // machinery on top); and the drift report (planted fixed-size shards: cost
+    // must be FLAT — the monitor never touches the corpus).
+    // The unigram trainer's WHOLE trajectory replayed: word histogram,
+    // substring seeding (frequency × length scores, minFreq floor, top
+    // `seedSize`), the round-1 E-step usage, the exact split-point prune
+    // loss (both halves costed by a piece-string DP under the full
+    // candidate vocabulary — a proper substring can never be the piece
+    // itself), the keep-to-target cut, and the final E-step ranking.
+    // Parameters mirror [[qUnigramTrain]] verbatim.
+    QueryDef("unigram_train", qUnigramTrain,
+      "WITH RECURSIVE " + unigramChainCtes + ", " +
+        "u2 AS (SELECT tok, sum(freq)::BIGINT AS u FROM " +
+        "(SELECT word, unnest(toks) AS tok FROM e2_seg) t JOIN wds USING (word) GROUP BY tok), " +
+        "res AS (SELECT v2.token, coalesce(u2.u, 0)::BIGINT AS usage FROM v2 LEFT JOIN u2 ON u2.tok = v2.token) " +
+        "SELECT (row_number() OVER (ORDER BY usage DESC, token))::BIGINT AS rank, " +
+        "token, len(token)::BIGINT AS piece_len, usage FROM res ORDER BY rank", Set(Scale)),
+    QueryDef("stream_stream_join", qStreamStreamJoin,
+      "SELECT count(*)::BIGINT AS n_pairs, coalesce(sum(c.event_id), 0)::BIGINT AS click_id_sum, " +
+        "coalesce(sum(p.event_id), 0)::BIGINT AS purchase_id_sum " +
+        "FROM events c JOIN events p ON c.user_id = p.user_id " +
+        "AND c.event_type = 'click' AND p.event_type = 'purchase' " +
+        "AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE"))
 }

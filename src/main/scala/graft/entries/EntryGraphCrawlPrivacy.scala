@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef.{Kdf, Scale}
 import graft.operators.MaskTransform
 
 /** Query registry: sketch stores, sessions/funnels, privacy/DP releases,
@@ -1891,5 +1892,2003 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
       coalesce(sum(when(jac >= 0.9, 1L).otherwise(0L)), lit(0L)).as("n_jaccard"))
   }
 
+  // ---------------------------------------------------------------------
+  // crawl egress and composition: WET export, streaming frontier probe,
+  // decode -> langid, anchor text
+  // ---------------------------------------------------------------------
 
+  /** WET EXPORT round-trip — the egress side of the crawl loop: a curated
+    * corpus ships as WET (WARC conversion records, the format it arrived
+    * in), so the writer matters as much as the reader. Every document
+    * exports as a gzipped conversion record (its text as the payload)
+    * and re-ingests through [[graft.sources.Warc.recordsDF]]; the decoded
+    * body must equal the original text byte-for-byte (gzip + container +
+    * charset ladder round-trip), the sniffed charset must be UTF-8, and
+    * the payload byte mass must equal the text's UTF-8 mass. FULL-VALUE
+    * oracle: everything replays from the documents table itself. */
+  private[graft] def qWetExport(spark: SparkSession, dir: String): DataFrame = {
+    val mkWet = udf((id: Long, text: String) => {
+      import graft.sources.Warc
+      Warc.writeWarcGz(Seq(Warc.WarcRecord("conversion",
+        s"https://site${id % 20}.example.com/doc/$id", s"<urn:uuid:wet-$id>",
+        "text/plain", text.getBytes("UTF-8"))))
+    })
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"), col("text"))
+    val files = docs.select(col("id").as("warc_id"), col("text"),
+      mkWet(col("id"), col("text")).as("content"))
+    // both join sides fold to (id, digest, few bounded columns) BEFORE
+    // the id-keyed exchange — the 100x ScaleCheck caught the naive join
+    // shipping every body TWICE (text + parsed body) through sort-merge
+    // (257x bytes); digest equality is the same byte-exact round-trip
+    // check at ~50 bytes a row
+    val parsed = graft.sources.Warc.recordsDF(files.select(col("warc_id"), col("content")))
+      .select(col("warc_id"), md5(col("body_text")).as("body_md5"),
+        (col("target_uri") === concat(lit("https://site"),
+          pmod(col("warc_id"), lit(20L)), lit(".example.com/doc/"), col("warc_id")))
+          .as("uri_ok"),
+        col("charset"), col("n_payload_bytes"))
+    parsed.join(files.select(col("warc_id"), md5(col("text")).as("text_md5")), "warc_id")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        count(when(col("body_md5") === col("text_md5"), 1)).as("n_roundtrip"),
+        count(when(col("uri_ok"), 1)).as("n_uri_match"),
+        count(when(col("charset") === "UTF-8", 1)).as("n_utf8"),
+        sum(col("n_payload_bytes")).cast("long").as("payload_bytes"))
+  }
+
+  /** The frontier novelty probe as a STRUCTURED STREAM — the shape a live
+    * ingest runs: discovered urls arrive as micro-batches and each batch
+    * is novelty-filtered against the static store via
+    * [[graft.operators.Frontier.novelUrls]] inside foreachBatch (the
+    * probe's broadcast-confirm join is batch machinery, so foreachBatch
+    * is the streaming-legal composition — the stream_foreach_batch
+    * harness). The union of per-batch novel sets equals the batch
+    * answer: the store is static and novelty is per-url, so batch
+    * boundaries are invisible. Shares `frontier_incremental`'s oracle
+    * VERBATIM. */
+  private[graft] def qStreamFrontierProbe(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+    val seen = docs.where(pmod(col("id"), lit(3L)) =!= 0)
+      .select(concat(lit("https://www.front"), pmod(col("id"), lit(20L)),
+        lit(".com/p/"), col("id")).as("url"))
+    val storeDir = freshTmpStore(spark, "graft_stream_frontier_store").getAbsolutePath
+    graft.operators.Frontier.writeSeenStore(seen, "url", storeDir, capacity = 1000000L)
+    val out = freshTmpStore(spark, "graft_stream_frontier_sink")
+    val stream = streamDocuments(spark, dir)
+      .select(col("doc_id").cast("long").as("id"))
+      .select(concat(lit("HTTPS://WWW.Front"), pmod(col("id"), lit(20L)),
+        lit(".COM:443/p/"), col("id"), lit("?utm_source=x&ref=z#frag")).as("url"))
+    val q = stream.writeStream
+      .foreachBatch { (batch: DataFrame, _: Long) =>
+        graft.operators.Frontier.novelUrls(spark, storeDir, batch, "url")
+          .write.mode("append").parquet(out.getAbsolutePath)
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    spark.read.parquet(out.getAbsolutePath)
+      .withColumn("domain", graft.operators.UrlDomain.urlDomain(col("canon")))
+      .withColumn("nid", regexp_extract(col("canon"), "/p/(\\d+)$", 1).cast("long"))
+      .groupBy(col("domain"))
+      .agg(count(lit(1)).as("n_novel"), sum(col("nid")).cast("long").as("novel_id_sum"))
+      .orderBy("domain")
+  }
+
+  /** Charset decoding FEEDING language-ID — the interaction a real crawl
+    * exercises on every page: langid runs over DECODED text, and for
+    * non-Latin scripts the decode is load-bearing (a GBK page decoded as
+    * 1252 is latin mojibake with zero CJK codepoints — no zh profile
+    * gram would ever match). Five arms: undeclared-UTF-8 English,
+    * transport-declared GBK Chinese, transport-declared 1252 French,
+    * and (r18, with the non-Latin profile set) transport-declared
+    * Shift_JIS Japanese and EUC-KR Korean — the zh/ja pair now exercises
+    * BOTH ends of the same-script-family separation over two different
+    * legacy encodings. The detector is the Cavnar–Trenkle profile ranker
+    * ([[graft.operators.LangId]], 17 languages incl. the non-Latin
+    * scripts — r18: replaced the 5-language marker heuristic this query
+    * first shipped with; the zh arm is hanzi-ONLY, the ja-vs-zh
+    * separation the profile set must carry). FULL-VALUE oracle: per-arm
+    * counts, the charset the ladder picks, the language the detector
+    * must emit, exact decoded bodies, and decoded char mass. */
+  private[graft] def qCrawlLangid(spark: SparkSession, dir: String): DataFrame = {
+    val mkWarc = udf((id: Long) => {
+      import graft.sources.Warc
+      val (body, ct, enc) = (id % 5).toInt match {
+        case 0 => (s"the report and the data of the crawl is here to stay with us number $id",
+          "text/plain", "UTF-8")
+        case 1 => (s"你好世界这是一个测试的报告编号 $id", "text/html; charset=gbk", "GBK")
+        case 2 => (s"le chat est dans la maison et les champs pour une vie très belle $id",
+          "text/html; charset=windows-1252", "windows-1252")
+        case 3 => (s"これは日本語のページでありクロールの報告を含んでいます番号 $id",
+          "text/html; charset=shift_jis", "Shift_JIS")
+        case _ => (s"이것은 한국어 시험 보고서입니다 번호 $id",
+          "text/html; charset=euc-kr", "EUC-KR")
+      }
+      val head = s"HTTP/1.1 200 OK\r\nContent-Type: $ct\r\n\r\n".getBytes("US-ASCII")
+      Warc.writeWarcGz(Seq(Warc.WarcRecord("response", s"https://lang.example.com/$id",
+        s"<urn:uuid:lang-$id>", "application/http;msgtype=response",
+        head ++ body.getBytes(enc))))
+    })
+    val files = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"),
+        mkWarc(col("doc_id").cast("long")).as("content"))
+      .withColumnRenamed("id", "warc_id")
+    val recs = graft.sources.Warc.recordsDF(files)
+      .withColumn("case_id", pmod(col("warc_id"), lit(5L)))
+    val expected =
+      when(col("case_id") === 0, concat(
+        lit("the report and the data of the crawl is here to stay with us number "),
+        col("warc_id")))
+        .when(col("case_id") === 1, concat(lit("你好世界这是一个测试的报告编号 "), col("warc_id")))
+        .when(col("case_id") === 2, concat(
+          lit("le chat est dans la maison et les champs pour une vie très belle "),
+          col("warc_id")))
+        .when(col("case_id") === 3, concat(
+          lit("これは日本語のページでありクロールの報告を含んでいます番号 "), col("warc_id")))
+        .otherwise(concat(lit("이것은 한국어 시험 보고서입니다 번호 "), col("warc_id")))
+    recs.withColumn("lang", graft.operators.LangId.langid(col("body_text")))
+      .groupBy(col("case_id"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        min(col("charset")).as("charset"),
+        min(col("lang")).as("lang"),
+        countDistinct(col("lang")).as("n_langs"),
+        count(when(col("body_text") === expected, 1)).as("n_exact"),
+        sum(length(col("body_text"))).cast("long").as("body_chars"))
+      .orderBy("case_id")
+  }
+
+  /** Anchor-text aggregation ([[graft.operators.TextAnalysis
+    * .extractAnchorPairs]] — incoming anchor text describes the TARGET
+    * page, the classic search-quality prior): pages plant two absolute
+    * anchors with id-keyed texts plus a relative one (no registrable
+    * domain → excluded); per target domain, in-link counts, anchor
+    * character mass, and exact text matches. All codegen'd regexp
+    * builtins; FULL-VALUE oracle replays from the construction
+    * arithmetic. */
+  private[graft] def qAnchorText(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+    val t1 = concat(lit("read the "), col("id"), lit(" report"))
+    val t2 = concat(lit("more "), col("id"), lit(" details"))
+    val html = concat(
+      lit("<html><body><a class=\"x\" href=\"https://t.targ"),
+      pmod(col("id") * 31 + 7, lit(20L)), lit(".io/p\">"), t1,
+      lit("</a> and <A HREF='https://u.targ"),
+      pmod(col("id") * 17 + 3, lit(20L)), lit(".io/q'>"), t2,
+      lit("</A> <a href=\"/relative\">rel</a></body></html>"))
+    docs.select(col("id"), t1.as("t1"), t2.as("t2"),
+        explode(graft.operators.TextAnalysis.extractAnchorPairs(html)).as("p"))
+      .select(col("t1"), col("t2"), col("p.href").as("href"), col("p.anchor").as("anchor"))
+      .withColumn("domain", graft.operators.UrlDomain.urlDomain(col("href")))
+      .where(col("domain").isNotNull)
+      .groupBy(col("domain"))
+      .agg(
+        count(lit(1)).as("n_anchors"),
+        sum(length(col("anchor"))).cast("long").as("anchor_chars"),
+        count(when(col("anchor") === col("t1") || col("anchor") === col("t2"), 1))
+          .as("n_exact"))
+      .orderBy("domain")
+  }
+
+  // ---------------------------------------------------------------------
+  // redirect chains and revisit records, conditional-recrawl validators,
+  // RSS/Atom feeds, publication dates, robots-meta compliance
+  // ---------------------------------------------------------------------
+
+  /** RSS/Atom url discovery — [[graft.sources.Feed]] closing the loop
+    * next to `sitemap_frontier`: each document plants a feed (RSS by
+    * even id, Atom by odd — BOTH dialects load-bearing) with two
+    * entries linking into a fixed 20-host space and RFC 1123 / RFC 3339
+    * publication times on a minute grid. The XML is BUILT with string
+    * builtins and must round-trip through the real parser: links, kinds,
+    * and parsed epochs all replay from id arithmetic in the oracle —
+    * a date-parse bug shows up as a null epoch (counted) or a wrong
+    * sum. Scale shape: narrow parse (files are the parallelism unit),
+    * one host-keyed aggregate over a fixed 20-host space. */
+  /** The planted feed files of [[qFeedFrontier]] (and its streaming
+    * twin): id → (feed_id, content) with RSS by even id, Atom by odd. */
+  private[graft] def feedFiles(docs: DataFrame): DataFrame = {
+    val mm1 = lpad(pmod(col("id"), lit(60L)).cast("string"), 2, "0")
+    val mm2 = lpad(pmod(col("id") + 13, lit(60L)).cast("string"), 2, "0")
+    val link1 = concat(lit("https://news-"), pmod(col("id"), lit(20L)),
+      lit(".example.com/"), col("id"), lit("/a"))
+    val link2 = concat(lit("https://news-"), pmod(col("id") + 7, lit(20L)),
+      lit(".example.com/"), col("id"), lit("/b"))
+    val rss = concat(
+      lit("<?xml version=\"1.0\"?><rss version=\"2.0\"><channel><title>f</title>"),
+      lit("<item><title>t-a</title><link>"), link1,
+      lit("</link><pubDate>Mon, 15 Jun 2026 10:"), mm1,
+      lit(":00 GMT</pubDate><guid>g-"), col("id"), lit("-a</guid></item>"),
+      lit("<item><title>t-b</title><link>"), link2,
+      lit("</link><pubDate>Mon, 15 Jun 2026 10:"), mm2,
+      lit(":00 GMT</pubDate><guid>g-"), col("id"), lit("-b</guid></item>"),
+      lit("</channel></rss>"))
+    val atom = concat(
+      lit("<?xml version=\"1.0\"?><feed xmlns=\"http://www.w3.org/2005/Atom\">"),
+      lit("<title>f</title>"),
+      lit("<entry><title>t-a</title><link rel=\"alternate\" href=\""), link1,
+      lit("\"/><published>2026-06-15T10:"), mm1,
+      lit(":00Z</published><id>u-"), col("id"), lit("-a</id></entry>"),
+      lit("<entry><title>t-b</title><link href=\""), link2,
+      lit("\"/><published>2026-06-15T10:"), mm2,
+      lit(":00Z</published><id>u-"), col("id"), lit("-b</id></entry>"),
+      lit("</feed>"))
+    docs.select(col("id").as("feed_id"),
+      when(pmod(col("id"), lit(2L)) === 0, rss).otherwise(atom)
+        .cast("binary").as("content"))
+  }
+
+  /** The host-keyed frontier aggregate over parsed feed entries. */
+  private[graft] def feedAgg(entries: DataFrame): DataFrame =
+    entries
+      .withColumn("host", regexp_extract(col("link"), "^https://([^/]+)/", 1))
+      .groupBy("host")
+      .agg(
+        count(lit(1)).as("n_entries"),
+        count(when(col("kind") === "rss", 1)).as("n_rss"),
+        count(when(col("kind") === "atom", 1)).as("n_atom"),
+        sum(col("published_epoch")).as("sum_epoch"),
+        count(when(col("published_epoch").isNull, 1)).as("n_bad_epoch"))
+
+  private[graft] def qFeedFrontier(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+    feedAgg(graft.sources.Feed.entriesDF(feedFiles(docs)))
+  }
+
+  /** Streaming twin of [[qFeedFrontier]] — continuous feed POLLING is
+    * the natural arrival mode of this source (feeds announce what's
+    * new; a crawler re-reads them on a schedule). The build → parse
+    * chain is stateless narrow ops, streaming-legal verbatim; entries
+    * land in a parquet sink per batch (the stream_warc_ingest overwrite
+    * harness), then the batch aggregate runs over the sink. Shares
+    * `feed_frontier`'s oracle VERBATIM — trigger machinery must not
+    * change one count. */
+  private[graft] def qStreamFeedPoll(spark: SparkSession, dir: String): DataFrame = {
+    val docs = streamDocuments(spark, dir).select(col("doc_id").cast("long").as("id"))
+    val entries = graft.sources.Feed.entriesDF(feedFiles(docs))
+    val sink = freshTmpStore(spark, "graft_stream_feed_sink").getAbsolutePath
+    val q = entries.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        batch.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    feedAgg(spark.read.parquet(sink))
+  }
+
+  /** Feed AUTODISCOVERY — how feeds are actually found: pages advertise
+    * them as head `<link rel=alternate type=application/rss+xml|
+    * atom+xml>` ([[graft.operators.HtmlMeta.feedLinks]], codegen'd),
+    * and relative hrefs resolve against the page url with the same RFC
+    * 3986 machinery the redirect resolver uses. Four arms: relative rss
+    * link among decoys / absolute rss+atom pair / decoys only
+    * (rel=alternate but type=text/html, rel=stylesheet) / no links.
+    * FULL-VALUE 1-row oracle: every count replays from id arithmetic —
+    * decoy arms contributing 0 is the load-bearing discrimination. */
+  private[graft] def qFeedAutodiscovery(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+    val arm = pmod(col("id"), lit(4L))
+    val pageUrl = concat(lit("https://site-"), pmod(col("id"), lit(20L)),
+      lit(".example.com/p/"), col("id"))
+    val html = when(arm === 0, lit(
+        "<head><link rel=\"stylesheet\" href=\"/s.css\">" +
+        "<link rel=\"alternate\" type=\"application/rss+xml\" href=\"/feed.xml\">" +
+        "<title>t</title></head>"))
+      .when(arm === 1, concat(
+        lit("<head><link rel=\"alternate\" type=\"application/rss+xml\" href=\"https://feeds.example.net/r/"),
+        col("id"),
+        lit("\"><link rel=\"alternate\" type=\"application/atom+xml\" href=\"https://feeds.example.net/a/"),
+        col("id"), lit("\"></head>")))
+      .when(arm === 2, lit(
+        "<head><link rel=\"alternate\" type=\"text/html\" href=\"/amp.html\">" +
+        "<link rel=\"stylesheet\" href=\"/s.css\"></head>"))
+      .otherwise(lit("<head><title>t</title></head>"))
+    val resolveU = udf((base: String, loc: String) =>
+      graft.operators.Redirects.resolveUrl(base, loc))
+    docs.select(col("id"), pageUrl.as("page_url"), arm.as("arm"),
+        graft.operators.HtmlMeta.htmlFeedLinks(html).as("links"))
+      .select(col("id"), col("page_url"), col("arm"),
+        explode_outer(col("links")).as("href"))
+      .withColumn("resolved",
+        when(col("href").isNotNull, resolveU(col("page_url"), col("href"))))
+      .agg(
+        countDistinct(col("id")).as("n_pages"),
+        count(col("href")).as("n_feed_links"),
+        count(when(col("arm") === 0 && col("resolved") === concat(
+          lit("https://site-"), pmod(col("id"), lit(20L)),
+          lit(".example.com/feed.xml")), 1)).as("n_rel_resolved"),
+        count(when(col("arm") === 1 &&
+          col("resolved") === concat(lit("https://feeds.example.net/r/"), col("id")), 1))
+          .as("n_abs_rss"),
+        count(when(col("arm") === 1 &&
+          col("resolved") === concat(lit("https://feeds.example.net/a/"), col("id")), 1))
+          .as("n_abs_atom"),
+        count(when(col("arm").isin(2L, 3L) && col("href").isNotNull, 1))
+          .as("n_from_decoy_arms"))
+  }
+
+  /** Incremental sub-document dedup — the chunk CAS ingest loop
+    * ([[graft.operators.Cdc.ingestNovel]]): a day-0 chunk store (ids ≡
+    * 0 mod 3), then the FULL corpus re-arrives as a batch and only
+    * never-seen chunks are admitted. Plan shape: the batch's distinct
+    * chunk set broadcasts against one flat store scan —
+    * store never shuffles (the [[graft.operators.Frontier]]
+    * discipline, bloomless by design: a CAS batch is mostly novel).
+    * PINNED-CONTRACT oracle: re-arrived documents must contribute ZERO
+    * novel chunks (store exactness), a re-probe after ingest must find
+    * ZERO novel (append correctness), novel bytes are bounded by the
+    * new documents' bytes — plus the arithmetic doc counts. */
+  private[graft] def qCdcIncremental(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+      .withColumn("blob", mkBlob(col("id")))
+    val chunked = docs
+      .select(col("id"), length(col("blob")).cast("long").as("blen"),
+        explode(graft.plans.CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096)).as("c"))
+      .select(col("id"), col("blen"), col("c.hash").as("hash"), col("c.size").as("size"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val storePath = freshTmpStore(spark, "graft_cdc_store").getAbsolutePath
+    graft.operators.Cdc.writeChunkStore(
+      chunked.where(pmod(col("id"), lit(3L)) === 0), storePath)
+    // ingestNovel pins its novel set with an eager localCheckpoint, so
+    // the re-probe's append cannot retroactively empty it
+    val novel = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
+    val novelAfter = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
+    val rearrivedHit = chunked.where(pmod(col("id"), lit(3L)) === 0)
+      .select(col("hash")).distinct()
+      .join(novel.select(col("hash")).distinct(), Seq("hash"))
+      .agg(count(lit(1)).as("n_novel_from_rearrived"))
+    // new-doc bytes from the PERSISTED chunk index (blen rides every chunk
+    // row; max per id = the doc's length, every blob chunks to >= 1 row) —
+    // the old docs-side sum re-ran the full blob generation for a number
+    // the index already holds: a second complete data pass at 100 TB
+    // (guide §1.2: don't compute things twice)
+    val newBytes = chunked.where(pmod(col("id"), lit(3L)) =!= 0)
+      .groupBy(col("id")).agg(max(col("blen")).as("blen"))
+      .agg(sum(col("blen")).as("new_bytes"))
+    val counts = docs.agg(
+      count(when(pmod(col("id"), lit(3L)) === 0, 1)).as("n_day0_docs"),
+      count(lit(1)).as("n_batch_docs"))
+    val novelAgg = novel.agg(
+      count(lit(1)).as("n_novel_chunks"),
+      coalesce(sum(col("size")), lit(0L)).as("novel_bytes"))
+    val afterAgg = novelAfter.agg(count(lit(1)).as("n_novel_after_ingest"))
+    graft.operators.Partitioning.releaseAfterUse(
+      counts.crossJoin(rearrivedHit).crossJoin(novelAgg)
+        .crossJoin(afterAgg).crossJoin(newBytes)
+        .select(col("n_day0_docs"), col("n_batch_docs"),
+          col("n_novel_from_rearrived"),
+          when(col("n_novel_chunks") > 0, lit(1L)).otherwise(lit(0L)).as("has_novel"),
+          when(col("novel_bytes") <= col("new_bytes"), lit(1L)).otherwise(lit(0L))
+            .as("novel_bytes_le_new"),
+          col("n_novel_after_ingest")),
+      chunked, novel)
+  }
+
+  /** Publication-date extraction — [[graft.operators.PageDate]]'s
+    * ladder over four planted arms (og/article meta, body `<time>`,
+    * `/YYYY/MM/DD/` permalink, dateless). The meta and time arms ALSO
+    * carry a valid decoy url date the ladder must NOT return — rung
+    * order is load-bearing, not just rung firing. FULL-VALUE oracle:
+    * every (src, date) replays from id arithmetic. */
+  private[graft] def qPageDates(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+    val ds = concat(
+      (lit(2000L) + pmod(col("id"), lit(20L))).cast("string"), lit("-"),
+      lpad((lit(1L) + pmod(col("id"), lit(12L))).cast("string"), 2, "0"), lit("-"),
+      lpad((lit(1L) + pmod(col("id"), lit(28L))).cast("string"), 2, "0"))
+    val decoyUrl = concat(lit("https://e.com/"),
+      (lit(1995L) + pmod(col("id"), lit(5L))).cast("string"),
+      lit("/01/02/p-"), col("id"))
+    val arm = pmod(col("id"), lit(4L))
+    val html = when(arm === 0, concat(
+        lit("<html><head><meta property=\"article:published_time\" content=\""),
+        ds, lit("T08:30:00Z\"><title>x</title></head><body>text</body></html>")))
+      .when(arm === 1, concat(
+        lit("<html><body><p>intro</p><time datetime=\""), ds,
+        lit("\">then</time></body></html>")))
+      .otherwise(lit("<html><body>no dates here</body></html>"))
+    val url = when(arm.isin(0L, 1L), decoyUrl)
+      .when(arm === 2, concat(lit("https://e.com/"),
+        (lit(2000L) + pmod(col("id"), lit(20L))).cast("string"), lit("/"),
+        lpad((lit(1L) + pmod(col("id"), lit(12L))).cast("string"), 2, "0"), lit("/"),
+        lpad((lit(1L) + pmod(col("id"), lit(28L))).cast("string"), 2, "0"),
+        lit("/post-"), col("id")))
+      .otherwise(concat(lit("https://e.com/about/"), col("id")))
+    docs.select(col("id").as("doc_id"),
+        graft.operators.PageDate.pageDate(url, html).as("d"))
+      .select(col("doc_id"), col("d.date_src").as("date_src"),
+        col("d.pub_date").as("pub_date"))
+  }
+
+  /** Robots-meta / X-Robots-Tag compliance — the page-level indexing
+    * directives (the html-level sibling of RFC 9309): noindex via
+    * EITHER channel excludes the page, nofollow only flags it. The meta
+    * channel runs through [[graft.operators.HtmlMeta.robotsContent]]
+    * (codegen'd), the header channel through the REAL
+    * [[graft.sources.Warc.httpHeaderValue]] parser over a constructed
+    * response head; token tests are comma-split builtins so the oracle
+    * replays them verbatim. FULL-VALUE oracle by arm arithmetic. */
+  private[graft] def qNoindexFilter(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+    val arm = pmod(col("id"), lit(5L))
+    val html = when(arm === 1,
+        lit("<head><meta name=\"robots\" content=\"noindex, follow\"><title>t</title></head>"))
+      .when(arm === 3,
+        lit("<head><meta name=\"robots\" content=\"nofollow\"><title>t</title></head>"))
+      .otherwise(lit("<head><title>t</title></head>"))
+    val head = concat(lit("HTTP/1.1 200 OK\r\n"),
+      when(arm === 2, lit("X-Robots-Tag: noindex\r\n"))
+        .when(arm === 4, lit("X-Robots-Tag: all\r\n")).otherwise(lit("")),
+      lit("Content-Type: text/html\r\n\r\n"))
+    val headerOf = udf((head: String, name: String) =>
+      graft.sources.Warc.httpHeaderValue(
+        if (head == null) null else head.getBytes("ISO-8859-1"), name))
+    def hasToken(c: org.apache.spark.sql.Column, tok: String) =
+      array_contains(transform(split(lower(coalesce(c, lit(""))), ","),
+        t => trim(t)), tok)
+    docs.select(col("id").as("doc_id"),
+        graft.operators.HtmlMeta.htmlRobots(html).as("meta_robots"),
+        headerOf(head, lit("x-robots-tag")).as("hdr_robots"))
+      .withColumn("noindex",
+        hasToken(col("meta_robots"), "noindex") || hasToken(col("hdr_robots"), "noindex"))
+      .withColumn("nofollow",
+        hasToken(col("meta_robots"), "nofollow") || hasToken(col("hdr_robots"), "nofollow"))
+      .withColumn("kept", !col("noindex"))
+  }
+
+  /** Redirect chains + revisit records — the two crawl signals
+    * [[graft.sources.Warc.recordsDF]] gained in r18, composed the way a
+    * curation pipeline consumes them. Each document plants a
+    * 301→302→200 chain (`/a/id` root-relative to `/b/id`, absolute to
+    * the final url shared by every id ≡ mod 20 — the canonical-target
+    * mapping IS dedup evidence: n ids collapse onto ≤20 finals) plus a
+    * `revisit` record pointing at the final capture (ISO 28500 §6.7 —
+    * the crawler's own duplicate detection); every 10th id plants a
+    * 301↔301 LOOP that must report unresolved at the hop cap.
+    * [[graft.operators.Redirects.resolveChains]] resolves the mapping;
+    * FULL-VALUE oracle: every count replays from id arithmetic. */
+  private[graft] def qWarcRedirects(spark: SparkSession, dir: String): DataFrame = {
+    val mkWarc = udf((id: Long) => {
+      import graft.sources.Warc
+      val fin = s"https://final.example.com/p/${id % 20}"
+      val recs = scala.collection.mutable.ArrayBuffer(
+        Warc.WarcRecord("response", s"https://chain.example.com/a/$id",
+          s"<urn:uuid:a-$id>", "application/http;msgtype=response",
+          s"HTTP/1.1 301 Moved Permanently\r\nLocation: /b/$id\r\n\r\n"
+            .getBytes("US-ASCII")),
+        Warc.WarcRecord("response", s"https://chain.example.com/b/$id",
+          s"<urn:uuid:b-$id>", "application/http;msgtype=response",
+          s"HTTP/1.1 302 Found\r\nLocation: $fin\r\n\r\n".getBytes("US-ASCII")),
+        Warc.WarcRecord("response", fin, s"<urn:uuid:f-$id>",
+          "application/http;msgtype=response",
+          (s"HTTP/1.1 200 OK\r\nContent-Type: text/plain\r\n\r\nfinal page ${id % 20}")
+            .getBytes("US-ASCII")),
+        Warc.WarcRecord("revisit", s"https://re.example.com/dup/$id",
+          s"<urn:uuid:v-$id>", "application/http;msgtype=revisit",
+          Array.emptyByteArray, refersTo = s"<urn:uuid:f-$id>", refersToUri = fin,
+          profile = "http://netpreserve.org/warc/1.0/revisit/identical-payload-digest"))
+      if (id % 10 == 0) {
+        recs += Warc.WarcRecord("response", s"https://loop.example.com/x/$id",
+          s"<urn:uuid:x-$id>", "application/http;msgtype=response",
+          s"HTTP/1.1 301 Moved Permanently\r\nLocation: /y/$id\r\n\r\n"
+            .getBytes("US-ASCII"))
+        recs += Warc.WarcRecord("response", s"https://loop.example.com/y/$id",
+          s"<urn:uuid:y-$id>", "application/http;msgtype=response",
+          s"HTTP/1.1 301 Moved Permanently\r\nLocation: /x/$id\r\n\r\n"
+            .getBytes("US-ASCII"))
+      }
+      Warc.writeWarcGz(recs.toSeq)
+    })
+    val files = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("warc_id"))
+      .withColumn("content", mkWarc(col("warc_id")))
+    val recs = graft.sources.Warc.recordsDF(files)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val chains = graft.operators.Redirects.resolveChains(recs)
+      .withColumn("aid", nullif(regexp_extract(col("url"),
+        "^https://chain\\.example\\.com/[ab]/(\\d+)$", 1), lit("")).cast("long"))
+      .withColumn("exp_final", when(col("aid").isNotNull,
+        concat(lit("https://final.example.com/p/"), pmod(col("aid"), lit(20L)))))
+      .agg(
+        count(lit(1)).as("n_chains"),
+        count(when(col("resolved"), 1)).as("n_resolved"),
+        count(when(col("resolved") && col("hops") === 1, 1)).as("n_hop1"),
+        count(when(col("resolved") && col("hops") === 2, 1)).as("n_hop2"),
+        count(when(!col("resolved"), 1)).as("n_unresolved"),
+        count(when(col("final_url") === col("exp_final"), 1)).as("n_final_ok"),
+        countDistinct(when(col("resolved"), col("final_url"))).as("n_distinct_final"))
+    val revisits = recs.where(col("warc_type") === "revisit")
+      .withColumn("vid", nullif(regexp_extract(col("target_uri"), "/dup/(\\d+)$", 1),
+        lit("")).cast("long"))
+      .agg(
+        count(lit(1)).as("n_revisit"),
+        count(when(col("refers_to_uri") === concat(
+          lit("https://final.example.com/p/"), pmod(col("vid"), lit(20L))), 1))
+          .as("n_refers_ok"),
+        countDistinct(col("revisit_profile")).as("n_profiles"))
+    graft.operators.Partitioning.releaseAfterUse(
+      chains.crossJoin(revisits), recs) // two 1-row frames
+  }
+
+  /** Streaming twin of `cdc_incremental` — blobs arriving as
+    * micro-batches through the CAS ingest loop (the frontier-probe
+    * pattern for chunk stores): the day-0 store builds batch-side, then
+    * each micro-batch chunks in-row and [[graft.operators.Cdc
+    * .ingestNovel]] admits only never-seen chunks inside foreachBatch
+    * (novel frames land in a parquet sink). The pinned contract is
+    * BATCHING-INVARIANT — re-arrived docs contribute zero novel chunks
+    * and a post-stream re-probe finds zero novel no matter how the
+    * micro-batches cut — so it shares `cdc_incremental`'s oracle
+    * VERBATIM. */
+  private[graft] def qStreamCdcIngest(spark: SparkSession, dir: String): DataFrame = {
+    import graft.plans.CdcExpressions
+    // the twin runs on the id % 4 == 1 quarter: the contract under test
+    // is BATCHING-invariance of the CAS loop, not corpus volume (the
+    // batch query already prices the full corpus), and the blob
+    // generation + gear-hash CPU is the suite's heaviest kernel
+    val batchDocs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+      .where(pmod(col("id"), lit(4L)) === 1)
+      .withColumn("blob", mkBlob(col("id")))
+    def chunksOf(d: DataFrame): DataFrame = d
+      .select(col("id"),
+        explode(CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096)).as("c"))
+      .select(col("id"), col("c.hash").as("hash"), col("c.size").as("size"))
+    val storePath = freshTmpStore(spark, "graft_stream_cdc_store").getAbsolutePath
+    graft.operators.Cdc.writeChunkStore(
+      chunksOf(batchDocs.where(pmod(col("id"), lit(3L)) === 0)), storePath)
+    val sink = freshTmpStore(spark, "graft_stream_cdc_sink").getAbsolutePath
+    val stream = streamDocuments(spark, dir).select(col("doc_id").cast("long").as("id"))
+      .where(pmod(col("id"), lit(4L)) === 1)
+      .withColumn("blob", mkBlob(col("id")))
+    val q = chunksOf(stream).writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        graft.operators.Cdc.ingestNovel(spark, storePath, batch)
+          .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    val novel = spark.read.schema("hash LONG, size LONG").parquet(sink)
+    val chunked = chunksOf(batchDocs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val novelAfter = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
+    val rearrivedHit = chunked.where(pmod(col("id"), lit(3L)) === 0)
+      .select(col("hash")).distinct()
+      .join(novel.select(col("hash")).distinct(), Seq("hash"))
+      .agg(count(lit(1)).as("n_novel_from_rearrived"))
+    val newBytes = batchDocs.where(pmod(col("id"), lit(3L)) =!= 0)
+      .agg(sum(length(col("blob")).cast("long")).as("new_bytes"))
+    val counts = batchDocs.agg(
+      count(when(pmod(col("id"), lit(3L)) === 0, 1)).as("n_day0_docs"),
+      count(lit(1)).as("n_batch_docs"))
+    val novelAgg = novel.agg(
+      count(lit(1)).as("n_novel_chunks"),
+      coalesce(sum(col("size")), lit(0L)).as("novel_bytes"))
+    val afterAgg = novelAfter.agg(count(lit(1)).as("n_novel_after_ingest"))
+    graft.operators.Partitioning.releaseAfterUse(
+      counts.crossJoin(rearrivedHit).crossJoin(novelAgg)
+        .crossJoin(afterAgg).crossJoin(newBytes)
+        .select(col("n_day0_docs"), col("n_batch_docs"),
+          col("n_novel_from_rearrived"),
+          when(col("n_novel_chunks") > 0, lit(1L)).otherwise(lit(0L)).as("has_novel"),
+          when(col("novel_bytes") <= col("new_bytes"), lit(1L)).otherwise(lit(0L))
+            .as("novel_bytes_le_new"),
+          col("n_novel_after_ingest")),
+      chunked)
+  }
+
+  /** Dated dedup — the keep-NEWEST-capture tie-break real url-level
+    * dedup runs on ([[graft.operators.PageDate]] composed with the
+    * exact-dedup discipline): duplicate groups are planted by `id / 3`
+    * (same body key), each capture carries a permalink date whose DAY
+    * varies with the capture; the winner per group is the latest
+    * `pub_date`, ties broken by min doc_id. One group-keyed aggregate
+    * over (group, date, id) — never all-pairs, no window over the
+    * corpus. FULL-VALUE oracle: winner ids and dates replay from id
+    * arithmetic. */
+  private[graft] def qDatedDedup(spark: SparkSession, dir: String): DataFrame = {
+    val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+    val grp = floor(col("id") / 3).cast("long")
+    val url = concat(lit("https://a.example.com/"),
+      (lit(2010L) + pmod(col("id"), lit(10L))).cast("string"), lit("/"),
+      lpad((lit(1L) + pmod(col("id"), lit(12L))).cast("string"), 2, "0"), lit("/"),
+      lpad((lit(1L) + pmod(col("id"), lit(28L))).cast("string"), 2, "0"),
+      lit("/copy-"), col("id"))
+    val dated = docs.select(col("id"), grp.as("grp"),
+        graft.operators.PageDate.pageDate(url, lit("<p>no inline date</p>"))
+          .getField("pub_date").as("pub_date"))
+    dated.groupBy("grp")
+      .agg(count(lit(1)).as("n_captures"),
+        // lexicographic struct max = latest ISO date, then smallest id
+        // (negated) — ONE bounded aggregate state per group, no window
+        max(struct(col("pub_date"), (-col("id")).as("neg"))).as("m"))
+      .select(col("grp"), col("n_captures"),
+        col("m.pub_date").as("kept_date"), (-col("m.neg")).as("kept_id"))
+  }
+
+  /** Integer-exact HITS ([[graft.operators.Hits]]) over a generated
+    * 3-out-regular link graph — the hubs-and-authorities prior a
+    * frontier scheduler prices fetch order with, next to `pagerank`'s
+    * random-walk importance (different multipliers, so the two graph
+    * fixtures cannot mask each other's bugs). FULL-VALUE oracle: ten
+    * rounds of integer sums + max-renormalization replayed as chained
+    * CTEs — bit-identical scores by construction. */
+  private[graft] def qHitsScores(spark: SparkSession, dir: String): DataFrame = {
+    val nodes = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("node"))
+    val nn = nodes.count()
+    val edges = nodes.select(col("node").as("src"),
+        pmod(col("node") * 19 + 5, lit(nn)).as("dst"))
+      .unionAll(nodes.select(col("node"), pmod(col("node") * 23 + 2, lit(nn))))
+      .unionAll(nodes.select(col("node"), pmod(col("node") * 29 + 1, lit(nn))))
+    graft.operators.Hits.scores(edges, nodes)
+      .orderBy(col("auth").desc, col("node").asc).limit(10)
+  }
+
+  /** Content-defined chunking ([[graft.operators.Cdc]] — FastCDC gear
+    * hash) as the sub-document dedup primitive over binary blobs. Each
+    * document plants `unique-prefix(64 + id%257 bytes) ++ S(id%4) ++
+    * S(id%4 + 1) ++ S(id%4 + 2)` with four shared 8 KiB segments — the
+    * "same payload, different header" shape chunk-level dedup exists
+    * for. PINNED-CONTRACT oracle (chunk boundaries are content-defined,
+    * not SQL-expressible): byte totals replay from id arithmetic; the
+    * partition/bounds/roundtrip laws must hold with ZERO violations;
+    * within a `id%4` group chunking must RESYNCHRONIZE after the unique
+    * prefix (exactly 4 distinct tail-chunk hashes corpus-wide — one per
+    * suffix family); and chunk-level dedup must save over half the
+    * corpus bytes, which whole-blob hashing cannot (every blob is
+    * distinct by its prefix). */
+  /** The planted CDC blob (shared by `cdc_chunking` and
+    * `cdc_incremental`): unique prefix (64 + id%257 bytes) ++ three of
+    * four shared 8 KiB segments — "same payload, different header". */
+  private[graft] val mkBlob = udf((id: Long) => {
+    def gen(seed: Long, n: Int): Array[Byte] = {
+      val a = new Array[Byte](n)
+      var x = seed
+      var i = 0
+      while (i < n) {
+        x = x * 6364136223846793005L + 1442695040888963407L
+        a(i) = (x >>> 56).toByte
+        i += 1
+      }
+      a
+    }
+    def seg(k: Long): Array[Byte] = gen(k + 1, 8192)
+    gen(1000 + id, 64 + (id % 257).toInt) ++
+      seg(id % 4) ++ seg((id + 1) % 4) ++ seg((id + 2) % 4)
+  })
+
+  private[graft] def qCdcChunking(spark: SparkSession, dir: String): DataFrame = {
+    val blobs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
+      .select(col("doc_id").cast("long").as("id"))
+      .withColumn("blob", mkBlob(col("id")))
+    val chunked = blobs.select(col("id"), length(col("blob")).cast("long").as("blen"),
+        graft.plans.CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096).as("c"))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    val perDoc = chunked
+      .withColumn("roundtrip_ok", aggregate(col("c"),
+        struct(lit(0L).as("off"), lit(true).as("ok")),
+        (acc, x) => struct((acc.getField("off") + x.getField("size")).as("off"),
+          (acc.getField("ok") && x.getField("offset") === acc.getField("off")).as("ok")),
+        acc => acc.getField("ok") && acc.getField("off") === col("blen")))
+      .withColumn("over_max", exists(col("c"), x => x.getField("size") > 4096))
+      .withColumn("under_min_nonlast",
+        exists(slice(col("c"), lit(1), size(col("c")) - 1),
+          x => x.getField("size") <= 256))
+      .withColumn("tail_hash", element_at(col("c"), -1).getField("hash"))
+      .agg(
+        count(lit(1)).as("n_docs"),
+        sum(col("blen")).as("total_bytes"),
+        count(when(col("over_max"), 1)).as("over_max"),
+        count(when(col("under_min_nonlast"), 1)).as("under_min_nonlast"),
+        count(when(!col("roundtrip_ok"), 1)).as("roundtrip_violations"),
+        countDistinct(col("tail_hash")).as("n_distinct_tail_hash"))
+    val chunkLevel = chunked
+      .select(explode(col("c")).as("x"))
+      .select(col("x.hash").as("hash"), col("x.size").as("sz"))
+      .agg(sum(col("sz")).as("tot"), count(lit(1)).as("n_chunks"))
+    val distinctLevel = chunked
+      .select(explode(col("c")).as("x"))
+      .groupBy(col("x.hash")).agg(max(col("x.size")).as("sz"))
+      .agg(sum(col("sz")).as("dtot"))
+    graft.operators.Partitioning.releaseAfterUse(
+      perDoc.crossJoin(chunkLevel).crossJoin(distinctLevel)
+        .select(col("n_docs"), col("total_bytes"), col("over_max"),
+          col("under_min_nonlast"), col("roundtrip_violations"),
+          col("n_distinct_tail_hash"),
+          when((col("tot") - col("dtot")) * 2 >= col("tot"), lit(1L))
+            .otherwise(lit(0L)).as("dedup_saved_ge_half"),
+          when(col("tot") / col("n_chunks") >= 384 &&
+            col("tot") / col("n_chunks") <= 3072, lit(1L))
+            .otherwise(lit(0L)).as("avg_size_in_range")),
+      chunked)
+  }
+
+  /** Frontier replay, shared VERBATIM by `sitemap_frontier` and its
+    * streaming twin `stream_sitemap`. */
+  private val sitemapFrontierOracleSql: String =
+    ("WITH d AS (SELECT doc_id AS id FROM documents), " +
+        "e AS (" +
+        "SELECT 'url' AS kind, 'site' || (id % 20)::VARCHAR || '.com' AS domain, " +
+        "'https://www.site' || (id % 20)::VARCHAR || '.com/page/' || id::VARCHAR || '?a=1&b=2' AS canon, " +
+        "'2026-01-0' || (1 + id % 9)::VARCHAR AS lastmod FROM d WHERE id % 10 <> 0 " +
+        "UNION ALL SELECT 'url', 'site' || (id % 20)::VARCHAR || '.com', " +
+        "'https://www.site' || (id % 20)::VARCHAR || '.com/page/' || id::VARCHAR || '?a=1&b=2', NULL FROM d WHERE id % 10 <> 0 " +
+        "UNION ALL SELECT 'url', 'other' || (id % 7)::VARCHAR || '.io', " +
+        "'https://media.other' || (id % 7)::VARCHAR || '.io/x/' || id::VARCHAR, NULL FROM d WHERE id % 10 <> 0 " +
+        "UNION ALL SELECT 'sitemap', 'site' || (id % 20)::VARCHAR || '.com', NULL, NULL FROM d WHERE id % 10 = 0 " +
+        "UNION ALL SELECT 'sitemap', 'site' || (id % 20)::VARCHAR || '.com', NULL, NULL FROM d WHERE id % 10 = 0) " +
+        "SELECT domain, count(CASE WHEN kind = 'url' THEN 1 END)::BIGINT AS n_urls, " +
+        "count(DISTINCT canon)::BIGINT AS n_canonical, " +
+        "least(count(DISTINCT canon), 40)::BIGINT AS n_kept, " +
+        "count(CASE WHEN kind = 'url' THEN lastmod END)::BIGINT AS n_lastmod, " +
+        "count(CASE WHEN kind = 'sitemap' THEN 1 END)::BIGINT AS n_children " +
+        "FROM e GROUP BY domain ORDER BY domain")
+
+  /** Novel set = the never-stored third, shared VERBATIM by
+    * `frontier_incremental` and its streaming twin. */
+  private val frontierNovelOracleSql: String =
+    "WITH d AS (SELECT doc_id AS id FROM documents WHERE doc_id % 3 = 0) " +
+      "SELECT 'front' || (id % 20)::VARCHAR || '.com' AS domain, " +
+      "count(*)::BIGINT AS n_novel, sum(id)::BIGINT AS novel_id_sum " +
+      "FROM d GROUP BY domain ORDER BY domain"
+
+  /** Shared by `feed_frontier` and its streaming twin
+    * `stream_feed_poll`. */
+  private val feedFrontierOracleSql: String =
+    "WITH e AS (SELECT 'news-' || (doc_id % 20) || '.example.com' AS host, " +
+      "CASE WHEN doc_id % 2 = 0 THEN 'rss' ELSE 'atom' END AS kind, " +
+      "1781517600 + (doc_id % 60) * 60 AS epoch FROM documents " +
+      "UNION ALL SELECT 'news-' || ((doc_id + 7) % 20) || '.example.com', " +
+      "CASE WHEN doc_id % 2 = 0 THEN 'rss' ELSE 'atom' END, " +
+      "1781517600 + ((doc_id + 13) % 60) * 60 FROM documents) " +
+      "SELECT host, count(*)::BIGINT AS n_entries, " +
+      "sum(CASE WHEN kind = 'rss' THEN 1 ELSE 0 END)::BIGINT AS n_rss, " +
+      "sum(CASE WHEN kind = 'atom' THEN 1 ELSE 0 END)::BIGINT AS n_atom, " +
+      "sum(epoch)::BIGINT AS sum_epoch, 0::BIGINT AS n_bad_epoch " +
+      "FROM e GROUP BY host"
+
+  /** Shared by `cdc_incremental` and its streaming twin
+    * `stream_cdc_ingest` (the contract is batching-invariant). */
+  private def cdcIncrementalOracleSql(where: String): String =
+    "SELECT sum(CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_day0_docs, " +
+      "count(*)::BIGINT AS n_batch_docs, 0::BIGINT AS n_novel_from_rearrived, " +
+      "1::BIGINT AS has_novel, 1::BIGINT AS novel_bytes_le_new, " +
+      "0::BIGINT AS n_novel_after_ingest FROM documents" + where
+
+  /** The queries defined in this file, each with its DuckDB oracle. */
+  private[graft] lazy val graphCrawlPrivacyQueries: Seq[QueryDef] = Seq(
+    // Scale: see split_leakage.
+    // The merge theorem as assertion: the oracle recomputes the WHOLE-
+    // corpus sketch summaries and pins both mismatch counts to zero — a
+    // Spark-side merge that diverged from the single-pass sketch in any
+    // cell/register would fail the compare.
+    QueryDef("sketch_shard_merge", qSketchShardMerge,
+      "WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
+        "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL), " +
+        "rr AS (SELECT unnest([0, 1, 2, 3]) AS r), " +
+        "cells AS (SELECT r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c, " +
+        "count(*) AS cnt FROM t, rr GROUP BY 1, 2), " +
+        "h AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
+        "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v FROM t), " +
+        "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
+        "FROM h GROUP BY bucket) " +
+        "SELECT (SELECT count(*) FROM cells)::BIGINT AS cms_cells, 0::BIGINT AS cms_mismatch, " +
+        "(SELECT coalesce(sum(cnt), 0) FROM cells)::BIGINT AS total_mass, " +
+        "(SELECT count(*) FROM regs)::BIGINT AS hll_regs, 0::BIGINT AS hll_mismatch", Set(Scale)),
+    // Scale: see hll_group_distinct.
+    // Store round-trip pinned like `sketch_shard_merge`: the oracle
+    // recomputes the WHOLE-corpus cells/registers/bottom-k and requires all
+    // three mismatch counts to be zero — one cell/register/(prio, v) row
+    // diverging through the write→read→merge cycle fails the compare.
+    QueryDef("sketch_store_roundtrip", qSketchStoreRoundtrip,
+      "WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
+        "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL), " +
+        "rr AS (SELECT unnest([0, 1, 2, 3]) AS r), " +
+        "cells AS (SELECT r, ('0x' || substr(md5(tok), 1 + 3 * r, 3))::UBIGINT::BIGINT % 1024 AS c, " +
+        "count(*) AS cnt FROM t, rr GROUP BY 1, 2), " +
+        "h AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
+        "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v FROM t), " +
+        "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
+        "FROM h GROUP BY bucket), " +
+        "src AS (SELECT doc_id, length(text)::BIGINT AS len FROM documents " +
+        "WHERE text IS NOT NULL AND doc_id IS NOT NULL), " +
+        "sk AS (SELECT ('0x' || substr(md5(doc_id::VARCHAR || ':' || len::VARCHAR), 1, 15))" +
+        "::UBIGINT::BIGINT AS prio, len AS v FROM src ORDER BY prio, v LIMIT 1024) " +
+        "SELECT (SELECT count(*) FROM cells)::BIGINT AS cms_cells, 0::BIGINT AS cms_mismatch, " +
+        "(SELECT coalesce(sum(cnt), 0) FROM cells)::BIGINT AS total_mass, " +
+        "(SELECT count(*) FROM regs)::BIGINT AS hll_regs, 0::BIGINT AS hll_mismatch, " +
+        "(SELECT count(*) FROM sk)::BIGINT AS bk_rows, 0::BIGINT AS bk_mismatch, " +
+        "(SELECT coalesce(sum(prio % 1000003), 0) FROM sk)::BIGINT AS bk_prio_checksum", Set(Scale)),
+    // Scale: the windowed streaming HLL: state = windows-in-horizon × m
+    // registers, watermark-evicted; bytes must stay in the register-partial
+    // class while the event stream grows 10×.
+    // Windowed streaming HLL replayed on the same hour grid with the same
+    // md5 register slices; the append-mode watermark cutoff — only windows
+    // whose end precedes (max event time − 10 min) emit — is replayed as a
+    // WHERE on the window end (the `sessionize` stated-semantics
+    // discipline).
+    QueryDef("stream_hll_window", qStreamHllWindow,
+      "WITH e AS (SELECT ts, user_id::VARCHAR AS uid FROM events WHERE user_id IS NOT NULL), " +
+        "mx AS (SELECT max(ts) AS mt FROM e), " +
+        "h AS (SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, " +
+        "('0x' || substr(md5(uid), 1, 3))::UBIGINT::BIGINT % 256 AS bucket, " +
+        "('0x' || substr(md5(uid), 4, 15))::UBIGINT::BIGINT AS v FROM e), " +
+        "regs AS (SELECT ws, bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
+        "FROM h GROUP BY ws, bucket), " +
+        "s AS (SELECT ws, count(*)::BIGINT AS n_filled, sum(rho)::BIGINT AS sum_rho, " +
+        "sum((bucket + 1) * rho)::BIGINT AS reg_checksum FROM regs GROUP BY ws) " +
+        "SELECT epoch(ws)::BIGINT AS ws_epoch, n_filled, sum_rho, reg_checksum FROM s, mx " +
+        "WHERE ws + INTERVAL '1 hour' <= mt - INTERVAL '10 minutes' ORDER BY ws_epoch", Set(Scale)),
+    // Scale: the streamed moment state: ONE flat buffer per partition through
+    // the complete-mode aggregate — constant-class bytes at any volume.
+    // Streamed moment state == the single-pass batch moments, exactly.
+    QueryDef("stream_gram", qStreamGram,
+      pcaMomentsCte +
+        "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 2145::BIGINT AS state_len, " +
+        "(SELECT sum(CASE WHEN i = j THEN gij ELSE 0 END) FROM g)::BIGINT AS trace_q, " +
+        "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
+        "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum", Set(Scale)),
+    // Scale: see stream_join_outer.
+    QueryDef("stream_cms", qStreamCms, streamCmsOracleSql, Set(Scale)),
+    // Scale: the streamed bottom-k (state = one k-pair heap, constant by
+    // construction; bytes may only carry heap partials × splits).
+    // the streamed bottom-k must land on EXACTLY the batch sketch's state
+    // — same oracle as quantile_bottomk, different plan under test
+    QueryDef("stream_quantile", qStreamQuantile, quantileBottomkOracleSql, Set(Scale)),
+    // Scale: round-14 batch 2: the streamed HLL (state <= m registers by
+    // construction — bytes must stay in the register-partial constant class);
+    // the per-group CMS (cells Θ(groups·depth·width) + the exact top-3
+    // comparator as the corpus-linear term); the register set algebra (three
+    // register builds + the corpus-linear exact-overlap comparator); and PCA
+    // (the gram aggregate's shuffle is ONE flat d²-state per partition — bytes
+    // must be ~flat while the scan term carries the wall).
+    // Streamed HLL == batch HLL: the oracle rebuilds the register table
+    // from the same tokens (m = 1024) — the complete-mode max-aggregate
+    // must land on exactly the batch registers, checksum-pinned.
+    QueryDef("stream_hll", qStreamHll,
+      "WITH t AS (SELECT unnest(list_filter(string_split_regex(lower(trim(text)), '\\s+'), " +
+        "x -> x <> '')) AS tok FROM documents WHERE text IS NOT NULL), " +
+        "h AS (SELECT ('0x' || substr(md5(tok), 1, 3))::UBIGINT::BIGINT % 1024 AS bucket, " +
+        "('0x' || substr(md5(tok), 4, 15))::UBIGINT::BIGINT AS v FROM t), " +
+        "regs AS (SELECT bucket, max(CASE WHEN v = 0 THEN 61 ELSE 61 - len(bin(v)) END) AS rho " +
+        "FROM h GROUP BY bucket) " +
+        "SELECT 1024::BIGINT AS m, count(*)::BIGINT AS n_filled, " +
+        "coalesce(sum(rho), 0)::BIGINT AS sum_rho, " +
+        "coalesce(max(rho), 0)::BIGINT AS max_rho, " +
+        "coalesce(sum((bucket + 1) * rho), 0)::BIGINT AS reg_checksum FROM regs", Set(Scale)),
+    QueryDef("events_sessions", qEventsSessions,
+      "WITH l AS (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM events), " +
+        "f AS (SELECT *, CASE WHEN prev_ts IS NULL OR epoch_ms(ts) - epoch_ms(prev_ts) > 1800000 THEN 1 ELSE 0 END AS ns FROM l), " +
+        "s AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid FROM f), " +
+        "g AS (SELECT user_id, sid, count(*) AS cnt FROM s GROUP BY 1, 2) " +
+        "SELECT count(*) AS n_sessions, sum(cnt)::BIGINT AS n_events_total, max(cnt)::BIGINT AS max_session_events FROM g"),
+    // Scale: events-table operators: the scaled table shifts user_id/event_id
+    // per copy (10x users, same time window) — exactly how a bigger product
+    // corpus grows.
+    // k-1 self-join recompute of the funnel the operator does in one fold
+    QueryDef("events_funnel", qEventsFunnel,
+      "WITH t1 AS (SELECT user_id, min(epoch_us(ts)) AS t1 FROM events WHERE event_type = 'view' GROUP BY user_id), " +
+        "t2 AS (SELECT e.user_id AS user_id, min(epoch_us(e.ts)) AS t2 FROM events e JOIN t1 ON e.user_id = t1.user_id " +
+        "WHERE e.event_type = 'click' AND epoch_us(e.ts) > t1.t1 GROUP BY e.user_id), " +
+        "t3 AS (SELECT e.user_id AS user_id, min(epoch_us(e.ts)) AS t3 FROM events e JOIN t2 ON e.user_id = t2.user_id " +
+        "WHERE e.event_type = 'purchase' AND epoch_us(e.ts) > t2.t2 GROUP BY e.user_id), " +
+        "u AS (SELECT DISTINCT user_id FROM events), " +
+        "j AS (SELECT u.user_id, t1.t1, t2.t2, t3.t3 FROM u LEFT JOIN t1 ON u.user_id = t1.user_id " +
+        "LEFT JOIN t2 ON u.user_id = t2.user_id LEFT JOIN t3 ON u.user_id = t3.user_id) " +
+        "SELECT count(*)::BIGINT AS n_users, count(t1)::BIGINT AS n_step1, count(t2)::BIGINT AS n_step2, " +
+        "count(t3)::BIGINT AS n_step3, coalesce(sum(t2 - t1), 0)::BIGINT AS lat12_sum, " +
+        "coalesce(sum(t3 - t1), 0)::BIGINT AS lat13_sum, " +
+        "coalesce(sum(CASE WHEN t3 IS NOT NULL THEN user_id END), 0)::BIGINT AS converted_user_sum FROM j", Set(Scale)),
+    // Scale: see events_funnel.
+    // naive min-join recompute of the retention triangle the operator
+    // derives from one groupBy-user pass
+    QueryDef("cohort_retention", qCohortRetention,
+      "WITH p AS (SELECT user_id, epoch_us(ts) // 86400000000 AS p FROM events), " +
+        "f AS (SELECT user_id, min(p) AS cohort FROM p GROUP BY user_id), " +
+        "a AS (SELECT DISTINCT user_id, p FROM p), " +
+        "j AS (SELECT f.cohort, a.p - f.cohort AS off, a.user_id FROM a JOIN f ON a.user_id = f.user_id) " +
+        "SELECT cohort, off AS \"offset\", count(*)::BIGINT AS n_users FROM j GROUP BY cohort, off", Set(Scale)),
+    // the rank-error and membership contracts are structural (checked
+    // in-plan with integer arithmetic); N pins the sketch ran over all rows
+    QueryDef("quantile_sketch", qQuantileSketch,
+      "SELECT count(*)::BIGINT AS n, 1::BIGINT AS ok_q25, 1::BIGINT AS ok_q50, " +
+        "1::BIGINT AS ok_q75, 1::BIGINT AS ok_q99, 1::BIGINT AS ok_member FROM documents"),
+    QueryDef("lineitem_agg", qLineitemAgg,
+      "SELECT l_returnflag, l_linestatus, count(*) AS n, " +
+        "round(sum(l_quantity::DECIMAL(12,2)) * 100)::BIGINT AS sum_qty_x100, " +
+        "round(sum(l_extendedprice::DECIMAL(14,2)) * 100)::BIGINT AS sum_price_x100, " +
+        "round(sum((l_extendedprice::DECIMAL(14,2) * (1 - l_discount::DECIMAL(3,2)))::DECIMAL(18,4)) * 10000)::BIGINT AS sum_disc_price_x10000 " +
+        "FROM lineitem GROUP BY 1, 2 ORDER BY 1, 2"),
+    QueryDef("join_agg", qJoinAgg,
+      "SELECT c_mktsegment, count(*) AS n_orders, count(DISTINCT o_custkey) AS n_customers " +
+        "FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1 ORDER BY 1"),
+    QueryDef("skew_join_agg", qSkewJoinAgg,
+      "SELECT c_mktsegment, count(*) AS n_orders, count(DISTINCT o_custkey) AS n_customers " +
+        "FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1 ORDER BY 1"),
+    QueryDef("join_agg_bucketed", qJoinAggBucketed,
+      "SELECT c_mktsegment, count(*) AS n_orders, count(DISTINCT o_custkey) AS n_customers " +
+        "FROM orders JOIN customer ON o_custkey = c_custkey GROUP BY 1 ORDER BY 1"),
+    QueryDef("window_top_order", qWindowTopOrder,
+      "WITH r AS (SELECT o_orderkey, row_number() OVER (PARTITION BY o_custkey ORDER BY o_totalprice DESC, o_orderkey) AS rn FROM orders) " +
+        "SELECT count(*) AS n_top, sum(o_orderkey)::BIGINT AS top_orderkey_sum FROM r WHERE rn = 1"),
+    // Scale: see corpus_card.
+    // per-class k-anonymity/l-diversity over (nation, segment)
+    QueryDef("k_anonymity", qKAnonymity,
+      "WITH c AS (SELECT c_nationkey::BIGINT AS nat, c_mktsegment AS seg, " +
+        "round(c_acctbal * 100)::BIGINT AS bal_cents FROM customer) " +
+        "SELECT nat, seg, count(*)::BIGINT AS class_size, " +
+        "count(DISTINCT bal_cents)::BIGINT AS l_diversity, " +
+        "(count(*) >= 10)::BIGINT AS k_ok, " +
+        "(count(DISTINCT bal_cents) >= 5)::BIGINT AS l_ok " +
+        "FROM c GROUP BY nat, seg ORDER BY nat, seg", Set(Scale)),
+    // one-sided TVD replayed on the exact integer grid: per (class, band)
+    // positive part max(cnt_cv*N - cnt_v*n_c, 0), one floor per class
+    QueryDef("t_closeness", qTCloseness,
+      "WITH c AS (SELECT c_nationkey::BIGINT AS nat, c_mktsegment AS seg, " +
+        "(round(c_acctbal * 100)::BIGINT - ((round(c_acctbal * 100)::BIGINT % 100000) + 100000) % 100000) AS bal_band FROM customer), " +
+        "n AS (SELECT count(*)::BIGINT AS n_all FROM c), " +
+        "g AS (SELECT bal_band, count(*)::BIGINT AS cnt_v FROM c GROUP BY bal_band), " +
+        "cc AS (SELECT nat, seg, bal_band, count(*)::BIGINT AS cnt_cv FROM c GROUP BY nat, seg, bal_band), " +
+        "cs AS (SELECT nat, seg, sum(cnt_cv)::BIGINT AS n_c FROM cc GROUP BY nat, seg), " +
+        "p AS (SELECT cc.nat, cc.seg, cs.n_c, " +
+        "greatest(cc.cnt_cv * (SELECT n_all FROM n) - g.cnt_v * cs.n_c, 0) AS pos " +
+        "FROM cc JOIN g ON g.bal_band IS NOT DISTINCT FROM cc.bal_band " +
+        "JOIN cs ON cs.nat = cc.nat AND cs.seg = cc.seg) " +
+        "SELECT nat, seg, n_c AS class_size, " +
+        "((sum(pos) * 1000000) // (n_c * (SELECT n_all FROM n)))::BIGINT AS t_ppm, " +
+        "(((sum(pos) * 1000000) // (n_c * (SELECT n_all FROM n)))::BIGINT <= 200000)::BIGINT AS t_ok " +
+        "FROM p GROUP BY nat, seg, n_c ORDER BY nat, seg"),
+    // Scale: see mask_fpe_props.
+    // full replay of the DP release: true counts + the IDENTICAL
+    // generated noise-draw CASE (exact integer thresholds) over the
+    // DuckDB spelling of the same secret-seeded 60-bit md5 hash — the
+    // key builder is SHARED with the engine side (Privacy.hash60DuckSql)
+    // and the test's own secret seeds the token, so the replay is the
+    // correctness check, not a de-noising leak (advisor r16)
+    QueryDef("dp_counts", qDpCounts,
+      "WITH c AS (SELECT c_nationkey::BIGINT AS nat, c_mktsegment AS seg FROM customer), " +
+        "g AS (SELECT nat, seg, count(*)::BIGINT AS n FROM c GROUP BY nat, seg) " +
+        "SELECT nat, seg, (n + " +
+        graft.operators.Privacy.dpNoiseCaseSql(
+          graft.operators.Privacy.hash60DuckSql(
+            graft.operators.Privacy.dpSeedToken(graft.Defaults.testPassphrase, "r16-census"),
+            Seq("nat", "seg"))) +
+        ")::BIGINT AS n_noisy FROM g ORDER BY nat, seg", Set(Scale)),
+    // Scale: round-16 batch 2: the DP sum twin (same one-shuffle class as
+    // dp_counts), the domain∘cap composition (bounded-heap per-group selection —
+    // the cap_per_group class with the codegen'd suffix walk in front), the
+    // robots compliance pass (in-row rule walk over memoized compiled rules + a
+    // 3-row aggregate — scan-bound), and the WARC ingest (per-row gzip inflate +
+    // container parse, one narrow flatMap — the heaviest per-row CPU of the
+    // batch, no shuffle).
+    // clamp + sum + the identical generated noise CASE scaled by clip
+    QueryDef("dp_sums", qDpSums,
+      "WITH c AS (SELECT c_mktsegment AS seg, " +
+        "least(greatest(round(c_acctbal * 100)::BIGINT, 0), 100000) AS v FROM customer), " +
+        "g AS (SELECT seg, sum(v)::BIGINT AS s FROM c GROUP BY seg) " +
+        "SELECT seg, (s + 100000 * " +
+        graft.operators.Privacy.dpNoiseCaseSql(
+          graft.operators.Privacy.hash60DuckSql(
+            graft.operators.Privacy.dpSeedToken(graft.Defaults.testPassphrase, "r16-balances"),
+            Seq("seg"))) +
+        ")::BIGINT AS sum_noisy FROM g ORDER BY seg", Set(Scale)),
+    // Scale: see corpus_card.
+    // before/after anonymity of the treatment set: suppress name,
+    // generalize nation to 10-wide groups
+    QueryDef("mask_k_anon", qMaskKAnon,
+      "WITH c AS (SELECT c_name, c_nationkey::BIGINT AS nat, c_mktsegment AS seg, " +
+        "round(c_acctbal * 100)::BIGINT AS bal_cents FROM customer), " +
+        "b AS (SELECT c_name, nat, seg, count(*)::BIGINT AS cs, " +
+        "count(DISTINCT bal_cents)::BIGINT AS ld FROM c GROUP BY 1, 2, 3), " +
+        "a AS (SELECT 'suppressed' AS c_name, nat - ((nat % 10) + 10) % 10 AS nat, seg, " +
+        "count(*)::BIGINT AS cs, count(DISTINCT bal_cents)::BIGINT AS ld FROM c GROUP BY 1, 2, 3), " +
+        "r AS (SELECT 'before' AS phase, cs, ld FROM b UNION ALL SELECT 'after' AS phase, cs, ld FROM a) " +
+        "SELECT phase, count(*)::BIGINT AS n_classes, min(cs)::BIGINT AS min_class_size, " +
+        "sum(CASE WHEN cs < 5 THEN cs ELSE 0 END)::BIGINT AS rows_below_k, " +
+        "(count(*) = sum(CASE WHEN cs >= 5 THEN 1 ELSE 0 END))::BIGINT AS all_k_ok, " +
+        "(count(*) = sum(CASE WHEN ld >= 3 THEN 1 ELSE 0 END))::BIGINT AS all_l_ok " +
+        "FROM r GROUP BY phase ORDER BY phase", Set(Scale, Kdf)),
+    // ladder of balance-bucket widths; chosen = minimal width meeting k=10
+    QueryDef("generalize_k_anon", qGeneralizeKAnon,
+      "WITH c AS (SELECT c_mktsegment AS seg, round(c_acctbal * 100)::BIGINT AS cents FROM customer), " +
+        "lv AS (SELECT w FROM (VALUES (10000), (100000), (1000000), (100000000)) t(w)), " +
+        "g AS (SELECT w, seg, cents - ((cents % w) + w) % w AS bucket, count(*) AS class_size " +
+        "FROM c CROSS JOIN lv GROUP BY 1, 2, 3), " +
+        "p AS (SELECT w, count(*) AS n_classes, min(class_size) AS min_class_size, " +
+        "coalesce(sum(CASE WHEN class_size < 10 THEN class_size END), 0) AS rows_below_k " +
+        "FROM g GROUP BY w) " +
+        "SELECT w::BIGINT AS width, n_classes::BIGINT AS n_classes, " +
+        "min_class_size::BIGINT AS min_class_size, rows_below_k::BIGINT AS rows_below_k, " +
+        "coalesce(w = min(CASE WHEN min_class_size >= 10 THEN w END) OVER (), false)::BIGINT AS chosen " +
+        "FROM p ORDER BY width"),
+    // same planted footer lines; doc-freq >= 50 lines drop everywhere
+    QueryDef("dedup_lines_global", qDedupLinesGlobal,
+      "WITH t AS (SELECT doc_id, text " +
+        "|| CASE WHEN doc_id % 5 = 0 THEN chr(10) || 'subscribe to our newsletter' ELSE '' END " +
+        "|| CASE WHEN doc_id % 7 = 0 THEN chr(10) || 'all rights reserved' ELSE '' END " +
+        "|| chr(10) || 'tail ' || doc_id AS text FROM documents), " +
+        "l AS (SELECT doc_id, string_split(text, chr(10)) AS lines FROM t), " +
+        "e AS (SELECT doc_id, generate_subscripts(lines, 1) AS pos, unnest(lines) AS line FROM l), " +
+        "n AS (SELECT doc_id, pos, line, trim(lower(line)) AS norm FROM e), " +
+        "hot AS (SELECT norm FROM n WHERE norm <> '' GROUP BY norm HAVING count(DISTINCT doc_id) >= 50), " +
+        "kept AS (SELECT * FROM n WHERE norm NOT IN (SELECT norm FROM hot)), " +
+        "r AS (SELECT doc_id, count(*)::BIGINT AS n_lines_after, " +
+        "string_agg(line, chr(10) ORDER BY pos) AS clean_text FROM kept GROUP BY doc_id) " +
+        "SELECT l.doc_id, len(l.lines)::BIGINT AS n_lines_before, " +
+        "coalesce(r.n_lines_after, 0)::BIGINT AS n_lines_after, " +
+        "coalesce(r.clean_text, '') AS clean_text " +
+        "FROM l LEFT JOIN r USING (doc_id) ORDER BY doc_id"),
+    // per-language mixture plan vs explicit target ppm under a 1B budget
+    QueryDef("mixture_plan", qMixturePlan,
+      "WITH c AS (SELECT lang AS grp, sum(n_chars)::BIGINT AS tokens FROM documents " +
+        "WHERE lang IS NOT NULL GROUP BY lang), " +
+        "tot AS (SELECT sum(tokens)::BIGINT AS total FROM c), " +
+        "t AS (SELECT grp, tokens, (CASE grp WHEN 'en' THEN 500000 WHEN 'zh' THEN 200000 " +
+        "WHEN 'de' THEN 150000 WHEN 'fr' THEN 100000 WHEN 'es' THEN 50000 ELSE 0 END)::BIGINT AS target_ppm FROM c) " +
+        "SELECT grp, tokens, round(tokens::DOUBLE * 1000000 / total)::BIGINT AS actual_ppm, " +
+        "target_ppm, round(target_ppm::DOUBLE * total / greatest(tokens, 1))::BIGINT AS weight_x1e6, " +
+        "((target_ppm * 1000000000) // 1000000)::BIGINT AS planned_tokens, " +
+        "round(((target_ppm * 1000000000) // 1000000)::DOUBLE * 100 / greatest(tokens, 1))::BIGINT AS epochs_x100 " +
+        "FROM t, tot ORDER BY grp"),
+    // trailing-window integer z^2 inequality, per user, 20-row lookback
+    QueryDef("anomaly_zscore", qAnomalyZscore,
+      "WITH k AS (SELECT user_id, event_id, ts, round(value * 100)::BIGINT AS cents FROM events), " +
+        "w AS (SELECT user_id, event_id, cents, " +
+        "count(cents) OVER win AS n_baseline, sum(cents) OVER win AS s, " +
+        "sum(cents * cents) OVER win AS q FROM k " +
+        "WINDOW win AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 20 PRECEDING AND 1 PRECEDING)) " +
+        "SELECT user_id::BIGINT AS user_id, event_id::BIGINT AS event_id, cents, " +
+        "n_baseline::BIGINT AS n_baseline, " +
+        "(n_baseline >= 8 AND (n_baseline * cents - s) * (n_baseline * cents - s) * (n_baseline - 1) " +
+        "> 9 * n_baseline * (n_baseline * q - s * s))::BIGINT AS flagged " +
+        "FROM w ORDER BY user_id, event_id"),
+    // Scale: see pagerank.
+    // SemDeDup drop set recomputed with double-cast cosines in SQL
+    QueryDef("semantic_dedup", qSemanticDedup,
+      "WITH d AS (SELECT DISTINCT b.vec_id AS vid FROM embeddings a JOIN embeddings b " +
+        "ON a.label = b.label AND a.vec_id < b.vec_id " +
+        "AND list_cosine_similarity(list_transform(a.embedding, x -> x::DOUBLE), " +
+        "list_transform(b.embedding, x -> x::DOUBLE)) >= 0.30) " +
+        "SELECT (SELECT count(*) FROM embeddings)::BIGINT AS n_vectors, " +
+        "(SELECT count(*) FROM d)::BIGINT AS n_dropped, " +
+        "(SELECT coalesce(sum(vid), 0) FROM d)::BIGINT AS dropped_id_sum, " +
+        "(SELECT count(*) FROM embeddings WHERE vec_id NOT IN (SELECT vid FROM d))::BIGINT AS n_kept, " +
+        "(SELECT coalesce(sum(vec_id), 0) FROM embeddings WHERE vec_id NOT IN (SELECT vid FROM d))::BIGINT AS kept_id_sum", Set(Scale)),
+    // Scale: round-10 batch 2: the second iterative operator (pagerank — fixed
+    // 10 rounds, per-round cost must be linear), the within-cluster pair join
+    // (semantic_dedup — labels shift per copy, the SemDeDup regime where cluster
+    // COUNT grows with the corpus and cluster SIZE stays put), the
+    // broadcast-histogram scorer (dsir_select), the bounded-heap group ops
+    // (dedup_keep_best, cap_per_group), and the grouped exact-percentile path
+    // (anomaly_mad — 5 constant groups, so the per-group reducer buffer is the
+    // term under test).
+    // Fixed-point PageRank recomputed as 10 chained CTEs — identical
+    // integer grid (1e12), teleport floor, and per-edge floored share as
+    // [[graft.operators.PageRank.ranks]], so every rank matches
+    // bit-for-bit. Generated by a loop so iterations can't drift apart.
+    QueryDef("pagerank", qPagerank, {
+      val head = "WITH nodes AS (SELECT doc_id AS node FROM documents), " +
+        "nn AS (SELECT count(*)::BIGINT AS n FROM documents), " +
+        "edges AS (SELECT node AS src, (node * 31 + 7) % (SELECT n FROM nn) AS dst FROM nodes " +
+        "UNION ALL SELECT node, (node * 17 + 3) % (SELECT n FROM nn) FROM nodes " +
+        "UNION ALL SELECT node, (node * 13 + 11) % (SELECT n FROM nn) FROM nodes), " +
+        "od AS (SELECT src, count(*)::BIGINT AS outdeg FROM edges GROUP BY src), " +
+        "r0 AS (SELECT node, (SELECT 1000000000000 // n FROM nn) AS rank FROM nodes)"
+      val iters = (1 to 10).map { i =>
+        s"r$i AS (SELECT nodes.node AS node, (SELECT 150000000000 // n FROM nn) + coalesce(m.c, 0) AS rank " +
+          s"FROM nodes LEFT JOIN (SELECT e.dst AS node, sum((85 * r.rank) // (100 * od.outdeg))::BIGINT AS c " +
+          s"FROM edges e JOIN r${i - 1} r ON e.src = r.node JOIN od ON od.src = e.src GROUP BY e.dst) m " +
+          "ON nodes.node = m.node)"
+      }.mkString(", ", ", ", " ")
+      head + iters +
+        "SELECT node::BIGINT AS node, rank::BIGINT AS rank_x1e12 FROM r10 ORDER BY rank DESC, node LIMIT 10"
+    }, Set(Scale)),
+    // Scale: see bm25_store_probe.
+    // Warm-start PageRank replayed exactly: day-0 chain (10 rounds, 2-gen
+    // graph), reference chain (10 rounds, 3-gen graph), warm chain (4
+    // rounds seeded from the replayed day-0 ranks); the cold 4-round
+    // iterate is the reference chain's own 4th CTE.
+    QueryDef("pagerank_incremental", qPagerankIncremental, {
+      def iterCte(name: String, prev: String, edges: String, od: String): String =
+        s"$name AS (SELECT nodes.node AS node, (SELECT 150000000000 // n FROM nn) + coalesce(m.c, 0) AS rank " +
+          s"FROM nodes LEFT JOIN (SELECT e.dst AS node, sum((85 * r.rank) // (100 * od.outdeg))::BIGINT AS c " +
+          s"FROM $edges e JOIN $prev r ON e.src = r.node JOIN $od od ON od.src = e.src GROUP BY e.dst) m " +
+          "ON nodes.node = m.node)"
+      val head = "WITH nodes AS (SELECT doc_id AS node FROM documents), " +
+        "nn AS (SELECT count(*)::BIGINT AS n FROM documents), " +
+        "e2 AS (SELECT node AS src, (node * 31 + 7) % (SELECT n FROM nn) AS dst FROM nodes " +
+        "UNION ALL SELECT node, (node * 10 + 3) % (SELECT n FROM nn) FROM nodes), " +
+        "e3 AS (SELECT src, dst FROM e2 " +
+        "UNION ALL SELECT node, (node * 25 + 11) % (SELECT n FROM nn) FROM nodes), " +
+        "od2 AS (SELECT src, count(*)::BIGINT AS outdeg FROM e2 GROUP BY src), " +
+        "od3 AS (SELECT src, count(*)::BIGINT AS outdeg FROM e3 GROUP BY src), " +
+        "r0 AS (SELECT node, (SELECT 1000000000000 // n FROM nn) AS rank FROM nodes)"
+      val day0 = (1 to 10).map(i =>
+        iterCte(s"d$i", if (i == 1) "r0" else s"d${i - 1}", "e2", "od2"))
+      val ref = (1 to 10).map(i =>
+        iterCte(s"f$i", if (i == 1) "r0" else s"f${i - 1}", "e3", "od3"))
+      val warm = (1 to 4).map(i =>
+        iterCte(s"w$i", if (i == 1) "d10" else s"w${i - 1}", "e3", "od3"))
+      head + (day0 ++ ref ++ warm).mkString(", ", ", ", " ") +
+        "SELECT n_nodes, l1_warm, l1_cold, " +
+        "(CASE WHEN l1_warm < l1_cold THEN 1 ELSE 0 END)::BIGINT AS warm_closer FROM " +
+        "(SELECT (SELECT n FROM nn) AS n_nodes, " +
+        "(SELECT sum(abs(w.rank - f.rank)) FROM w4 w JOIN f10 f USING (node))::BIGINT AS l1_warm, " +
+        "(SELECT sum(abs(c.rank - f.rank)) FROM f4 c JOIN f10 f USING (node))::BIGINT AS l1_cold) t"
+    }, Set(Scale)),
+    // Scale: round-11: the third iterative operator (label propagation — 5 fixed
+    // synchronous rounds; per-round cost is one label join + one (node,label)
+    // count, so bytes must be linear and rounds flat), plus the two narrow
+    // round-11 projections (scan-bound by construction — measured to confirm,
+    // not to discover).
+    QueryDef("label_prop", qLabelProp,
+      labelPropCte + "SELECT node::BIGINT AS node, label::BIGINT AS label FROM l5 ORDER BY node", Set(Scale)),
+    // Scale: round-12 batch 2: the fourth iterative operator (k-core peel —
+    // rounds = cascade depth, which the planted tiers pin; per-round cost
+    // linear), the bounded fusion aggregate, the in-row JL projection (zero
+    // shuffle by construction), and the bounded-bench semantic decontamination
+    // scan.
+    // k-core peel replayed as chained levels over the same hash graph:
+    // level i keeps edges whose BOTH endpoints had degree >= k at level
+    // i-1. The k-core is the unique fixpoint, so any level count >= the
+    // actual cascade depth yields it — 25 levels is far past the measured
+    // depth, and extra levels are no-ops.
+    QueryDef("kcore_peel", qKcorePeel, {
+      val k = 10
+      val levels = 25
+      val head = "WITH nodes AS (SELECT doc_id AS node FROM documents), " +
+        "nn AS (SELECT count(*)::BIGINT AS n FROM documents), " +
+        "e0 AS (SELECT node AS src, (node * 31 + 7) % (SELECT n FROM nn) AS dst FROM nodes " +
+        "UNION ALL SELECT node, (node * 17 + 3) % (SELECT n FROM nn) FROM nodes " +
+        "UNION ALL SELECT node, (node * 13 + 11) % (SELECT n FROM nn) FROM nodes " +
+        "UNION ALL SELECT node, (node + j) % 50 FROM nodes, (SELECT unnest(range(1, 7)) AS j) WHERE node < 50 " +
+        "UNION ALL SELECT node, 50 + ((node - 50 + j) % 100) FROM nodes, (SELECT unnest(range(1, 6)) AS j) WHERE node >= 50 AND node < 150 " +
+        "UNION ALL SELECT node, 150 + ((node - 150 + j) % 150) FROM nodes, (SELECT unnest(range(1, 5)) AS j) WHERE node >= 150 AND node < 300), " +
+        "p0 AS MATERIALIZED (SELECT DISTINCT node, nbr FROM (" +
+        "SELECT src AS node, dst AS nbr FROM e0 WHERE src <> dst " +
+        "UNION ALL SELECT dst, src FROM e0 WHERE src <> dst))"
+      val rounds = (1 to levels).map { i =>
+        s"s$i AS MATERIALIZED (SELECT node FROM (SELECT node, count(*) AS c " +
+          s"FROM p${i - 1} GROUP BY node) WHERE c >= $k), " +
+          s"p$i AS MATERIALIZED (SELECT p.node, p.nbr FROM p${i - 1} p " +
+          s"JOIN s$i a ON a.node = p.node JOIN s$i b ON b.node = p.nbr)"
+      }.mkString(", ", ", ", " ")
+      head + rounds +
+        s"SELECT node::BIGINT AS node, count(*)::BIGINT AS core_deg " +
+        s"FROM p$levels GROUP BY node ORDER BY node"
+    }, Set(Scale)),
+    // Scale: see dedup_pq_codes.
+    // Newman modularity of the round-5 labeling in exact integer form:
+    // Q·4m² = Σ_c (2m·in2_c − deg_c²) over the directed half-edge view.
+    QueryDef("community_modularity", qCommunityModularity,
+      labelPropCte +
+        ", hv AS (SELECT a.label AS c1, b.label AS c2 FROM sym s " +
+        "JOIN l5 a ON a.node = s.node JOIN l5 b ON b.node = s.nbr), " +
+        "m2 AS (SELECT count(*)::BIGINT AS v FROM hv), " +
+        "per AS (SELECT c1, count(*)::BIGINT AS deg_c, " +
+        "sum(CASE WHEN c1 = c2 THEN 1 ELSE 0 END)::BIGINT AS in2 FROM hv GROUP BY c1) " +
+        "SELECT count(*)::BIGINT AS n_communities, ((SELECT v FROM m2) // 2)::BIGINT AS m_edges, " +
+        "sum(in2 * (SELECT v FROM m2) - deg_c * deg_c)::BIGINT AS q_x4m2 FROM per", Set(Scale)),
+    // exact integer sqrt (float floor(sqrt) with the +-1 correction),
+    // floor quotas over the isqrt weight total
+    QueryDef("lang_mix_report", qLangMixReport,
+      langMixQuotaCte +
+        "SELECT lang, n_docs, w, quota FROM q ORDER BY lang"),
+    // Scale: see segment_viterbi.
+    // ring-hash window replay of the bounded-heap sample, cut at quota
+    QueryDef("lang_mix_sample", qLangMixSample,
+      langMixQuotaCte + ", " +
+        "r AS (SELECT lang, doc_id, row_number() OVER (PARTITION BY lang " +
+        "ORDER BY (doc_id::HUGEINT * 2654435761) % 4294967296, doc_id) AS rank " +
+        "FROM documents WHERE lang IS NOT NULL AND doc_id IS NOT NULL) " +
+        "SELECT r.lang, r.doc_id::BIGINT AS doc_id, r.rank::BIGINT AS rank " +
+        "FROM r JOIN q USING (lang) WHERE r.rank <= q.quota ORDER BY lang, rank", Set(Scale)),
+    // Scale: see corpus_card.
+    // power-of-2 half-life decay replayed in integers: floor-second ages,
+    // 7-day buckets, weight 2^(30 - bucket), cents-grid values
+    QueryDef("recency_weights", qRecencyWeights,
+      "WITH e AS (SELECT user_id, " +
+        "((1706745600 - floor(epoch(ts))::BIGINT) // 86400) // 7 AS bucket, " +
+        "round(value * 100)::BIGINT AS cents FROM events " +
+        "WHERE user_id IS NOT NULL AND ts IS NOT NULL AND value IS NOT NULL), " +
+        "w AS (SELECT user_id, cents, " +
+        "CASE WHEN bucket <= 30 THEN (1::BIGINT << (30 - bucket)::INT) ELSE 0 END AS w FROM e) " +
+        "SELECT user_id, count(*)::BIGINT AS n_events, sum(w)::BIGINT AS w_sum, " +
+        "sum(cents * w)::BIGINT AS decayed_cents FROM w GROUP BY user_id ORDER BY user_id", Set(Scale)),
+    // Scale: round-12: the fingerprint-disciplined corpus card (the r11 fix —
+    // distinct over md5, never bodies; the bytes row IS the before/after
+    // evidence), the ppm-grid hard-negative miner, and the two narrow
+    // single-aggregate ops (recency decay, k-anonymity report) that complete the
+    // per-family scale table.
+    // one-row dataset card: volume, token mass, spread, quality pass
+    // rate, exact-dup mass, top language (ties to smallest code)
+    QueryDef("corpus_card", qCorpusCard,
+      qualityRulesCte +
+        ", base AS (SELECT count(*)::BIGINT AS n_docs, " +
+        "sum(len(string_split_regex(lower(trim(text)), '\\s+')))::BIGINT AS n_tokens, " +
+        "count(DISTINCT source)::BIGINT AS n_sources, " +
+        "count(DISTINCT lang)::BIGINT AS n_langs, " +
+        "count(DISTINCT md5(lower(trim(text))))::BIGINT AS n_distinct_texts, " +
+        "sum(n_chars)::BIGINT AS n_chars FROM documents), " +
+        "qp AS (SELECT sum(CASE WHEN pass THEN 1 ELSE 0 END)::BIGINT AS n_quality_pass FROM g), " +
+        "tl AS (SELECT lang AS top_lang, count(*)::BIGINT AS top_lang_docs FROM documents " +
+        "WHERE lang IS NOT NULL GROUP BY lang ORDER BY count(*) DESC, lang LIMIT 1) " +
+        "SELECT n_docs, n_tokens, n_chars, n_sources, n_langs, " +
+        "(n_docs - n_distinct_texts)::BIGINT AS n_exact_dup_docs, n_quality_pass, " +
+        "top_lang, top_lang_docs FROM base, qp, tl", Set(Scale)),
+    // Scale: see label_prop.
+    // every structural rule recomputed in integer cross-multiplication
+    QueryDef("quality_rules", qQualityRules,
+      qualityRulesCte +
+        "SELECT doc_id, n_words, n_lines, word_count_ok, mean_word_len_ok, symbol_ok, " +
+        "bullet_ok, ellipsis_ok, alpha_ok, stopword_ok, pass FROM g ORDER BY doc_id", Set(Scale)),
+    // streaming twin: the stateless rules aggregate identically over the
+    // one-shot stream
+    QueryDef("stream_quality_filter", qStreamQualityFilter,
+      qualityRulesCte +
+        "SELECT count(*)::BIGINT AS n_docs, " +
+        "sum(CASE WHEN pass THEN 1 ELSE 0 END)::BIGINT AS n_pass, " +
+        "sum(CASE WHEN bullet_ok THEN 1 ELSE 0 END)::BIGINT AS n_bullet_ok, " +
+        "sum(CASE WHEN alpha_ok THEN 1 ELSE 0 END)::BIGINT AS n_alpha_ok, " +
+        "sum(CASE WHEN stopword_ok THEN 1 ELSE 0 END)::BIGINT AS n_stopword_ok, " +
+        "sum(CASE WHEN pass THEN doc_id ELSE 0 END)::BIGINT AS pass_id_sum FROM g"),
+    // Scale: see label_prop.
+    // smallest-capacity bucket assignment + integral padding arithmetic
+    QueryDef("padding_report", qPaddingReport,
+      "WITH t AS (SELECT len(string_split_regex(lower(trim(text)), '\\s+'))::BIGINT AS toks FROM documents), " +
+        "b AS (SELECT toks, coalesce(list_filter([16,32,64,128,256,512,1024,2048,4096], c -> c >= toks)[1], -1)::BIGINT AS bucket_capacity " +
+        "FROM t WHERE toks IS NOT NULL AND toks > 0), " +
+        "g AS (SELECT bucket_capacity, count(*)::BIGINT AS n_docs, sum(toks)::BIGINT AS token_sum FROM b GROUP BY bucket_capacity) " +
+        "SELECT bucket_capacity, n_docs, token_sum, " +
+        "(CASE WHEN bucket_capacity > 0 THEN bucket_capacity * n_docs - token_sum ELSE 0 END)::BIGINT AS padded_tokens, " +
+        "(CASE WHEN bucket_capacity > 0 THEN ((bucket_capacity * n_docs - token_sum) * 1000000) // (bucket_capacity * n_docs) ELSE 0 END)::BIGINT AS waste_ppm " +
+        "FROM g ORDER BY bucket_capacity", Set(Scale)),
+    // Scale: see pagerank.
+    // hashed-feature importance ratio, full integer recompute
+    QueryDef("dsir_select", qDsirSelect,
+      "WITH toks AS (SELECT doc_id, lang, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok FROM documents), " +
+        "tb AS (SELECT doc_id, lang, (length(tok) * 31 + ascii(tok)) % 64 AS b FROM toks WHERE tok != ''), " +
+        "hist AS (SELECT b, count(*)::BIGINT AS n_raw, " +
+        "count(CASE WHEN lang = 'en' THEN 1 END)::BIGINT AS n_target FROM tb GROUP BY b), " +
+        "ratio AS (SELECT b, (n_target * 1000000 // n_raw)::BIGINT AS r FROM hist) " +
+        "SELECT doc_id, sum(r)::BIGINT AS score_x1e6, count(*)::BIGINT AS n_tokens " +
+        "FROM tb JOIN ratio USING (b) GROUP BY doc_id " +
+        "ORDER BY score_x1e6 DESC, doc_id LIMIT 20", Set(Scale)),
+    // Scale: see pagerank.
+    // keep-best recomputed as a (quality desc, id asc) window over the
+    // same first-3-token fuzzy key
+    QueryDef("dedup_keep_best", qDedupKeepBest,
+      "WITH k AS (SELECT doc_id, n_chars, " +
+        "array_to_string(list_filter(string_split_regex(lower(trim(text)), '\\s+'), t -> t != '')[1:3], ' ') AS key " +
+        "FROM documents), " +
+        "w AS (SELECT doc_id, n_chars, row_number() OVER (PARTITION BY key ORDER BY n_chars DESC, doc_id ASC) AS rn FROM k) " +
+        "SELECT count(*)::BIGINT AS n_kept, sum(doc_id)::BIGINT AS kept_id_sum, " +
+        "sum(n_chars)::BIGINT AS kept_chars_sum, " +
+        "(SELECT count(*) FROM documents)::BIGINT AS n_docs FROM w WHERE rn = 1", Set(Scale)),
+    // Scale: see pagerank.
+    // per-source cap winners recomputed as a (hash, id) window rank
+    QueryDef("cap_per_group", qCapPerGroup,
+      "WITH h AS (SELECT source, doc_id, n_chars, " +
+        "row_number() OVER (PARTITION BY source " +
+        "ORDER BY (doc_id::HUGEINT * 2654435761) % 4294967296, doc_id) AS rn FROM documents) " +
+        "SELECT source, count(*)::BIGINT AS n_kept, sum(doc_id)::BIGINT AS id_sum, " +
+        "sum(n_chars)::BIGINT AS chars_sum FROM h WHERE rn <= 25 " +
+        "GROUP BY source ORDER BY source", Set(Scale)),
+    // ring-hash prefix fill replayed: running token sum in (hash, id)
+    // order, keep while the PRECEDING sum is under the budget
+    QueryDef("cap_tokens_per_group", qCapTokensPerGroup,
+      "WITH t AS (SELECT source, doc_id, " +
+        "len(string_split_regex(lower(trim(text)), '\\s+'))::BIGINT AS toks " +
+        "FROM documents WHERE text IS NOT NULL AND source IS NOT NULL AND doc_id IS NOT NULL), " +
+        "h AS (SELECT source, doc_id, toks, coalesce(sum(toks) OVER (" +
+        "PARTITION BY source ORDER BY (doc_id::HUGEINT * 2654435761) % 4294967296, doc_id " +
+        "ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cb FROM t) " +
+        "SELECT source, count(*)::BIGINT AS n_kept, sum(toks)::BIGINT AS tokens_kept, " +
+        "sum(doc_id)::BIGINT AS id_sum FROM h WHERE cb < 400 GROUP BY source ORDER BY source"),
+    // CMS inner product replayed cell-for-cell: same md5-slice cells,
+    // same per-row dots, same min-with-zero-reindex, exact truths and
+    // integer bound arithmetic
+    QueryDef("cms_join_size", qCmsJoinSize,
+      "WITH lp AS (SELECT l_partkey::VARCHAR AS k FROM lineitem), " +
+        "lo AS (SELECT l_orderkey::VARCHAR AS k FROM lineitem), " +
+        "oo AS (SELECT o_orderkey::VARCHAR AS k FROM orders), " +
+        "rr AS (SELECT unnest([0, 1, 2, 3]) AS r), " +
+        "clp AS (SELECT r, ('0x' || substr(md5(k), 1 + 3 * r, 3))::UBIGINT::BIGINT % 4096 AS c, count(*)::BIGINT AS cnt FROM lp, rr GROUP BY 1, 2), " +
+        "clo AS (SELECT r, ('0x' || substr(md5(k), 1 + 3 * r, 3))::UBIGINT::BIGINT % 4096 AS c, count(*)::BIGINT AS cnt FROM lo, rr GROUP BY 1, 2), " +
+        "coo AS (SELECT r, ('0x' || substr(md5(k), 1 + 3 * r, 3))::UBIGINT::BIGINT % 4096 AS c, count(*)::BIGINT AS cnt FROM oo, rr GROUP BY 1, 2), " +
+        "dself AS (SELECT a.r, sum(a.cnt * b.cnt)::BIGINT AS dot FROM clp a JOIN clp b ON a.r = b.r AND a.c = b.c GROUP BY a.r), " +
+        "dol AS (SELECT a.r, sum(a.cnt * b.cnt)::BIGINT AS dot FROM clo a JOIN coo b ON a.r = b.r AND a.c = b.c GROUP BY a.r), " +
+        "eself AS (SELECT sum(c * c)::BIGINT AS exact_self, sum(c)::BIGINT AS n FROM (SELECT count(*)::BIGINT AS c FROM lp GROUP BY k)), " +
+        "eol AS (SELECT coalesce(sum(a.ca * b.cb), 0)::BIGINT AS exact_ol FROM " +
+        "(SELECT k, count(*)::BIGINT AS ca FROM lo GROUP BY k) a JOIN (SELECT k, count(*)::BIGINT AS cb FROM oo GROUP BY k) b ON a.k = b.k), " +
+        "nord AS (SELECT count(*)::BIGINT AS n_ord FROM oo), " +
+        "e1 AS (SELECT min(coalesce(dot, 0))::BIGINT AS est_self FROM rr LEFT JOIN dself USING (r)), " +
+        "e2 AS (SELECT min(coalesce(dot, 0))::BIGINT AS est_ol FROM rr LEFT JOIN dol USING (r)) " +
+        "SELECT est_self, exact_self, " +
+        "(CASE WHEN est_self >= exact_self THEN 1 ELSE 0 END)::BIGINT AS self_ge_ok, " +
+        "(CASE WHEN est_self <= exact_self + (3 * n * n) // 4096 THEN 1 ELSE 0 END)::BIGINT AS self_bound_ok, " +
+        "est_ol, exact_ol, " +
+        "(CASE WHEN est_ol >= exact_ol THEN 1 ELSE 0 END)::BIGINT AS ol_ge_ok, " +
+        "(CASE WHEN est_ol <= exact_ol + (3 * n * n_ord) // 4096 THEN 1 ELSE 0 END)::BIGINT AS ol_bound_ok " +
+        "FROM e1, e2, eself, eol, nord"),
+    // Scale: see pagerank.
+    // doubled-integer-grid MAD rule, full recompute
+    QueryDef("anomaly_mad", qAnomalyMad,
+      "WITH c AS (SELECT event_type, round(value * 100)::BIGINT AS cents FROM events), " +
+        "m AS (SELECT event_type, round(quantile_cont(cents, 0.5) * 2)::BIGINT AS med2 " +
+        "FROM c WHERE cents IS NOT NULL GROUP BY event_type), " +
+        "d AS (SELECT c.event_type, cents, med2, abs(2 * cents - med2) AS dev2 " +
+        "FROM c LEFT JOIN m USING (event_type)), " +
+        "md AS (SELECT event_type, round(quantile_cont(dev2, 0.5) * 2)::BIGINT AS mad4 " +
+        "FROM d WHERE dev2 IS NOT NULL GROUP BY event_type), " +
+        "f AS (SELECT d.event_type, cents, med2, mad4, " +
+        "CASE WHEN cents IS NULL OR mad4 IS NULL THEN 0 " +
+        "WHEN 2 * dev2 > 3 * mad4 THEN 1 ELSE 0 END AS flagged " +
+        "FROM d LEFT JOIN md USING (event_type)) " +
+        "SELECT event_type, count(*)::BIGINT AS n, max(med2)::BIGINT AS med2, " +
+        "max(mad4)::BIGINT AS mad4, sum(flagged)::BIGINT AS n_flagged, " +
+        "coalesce(sum(CASE WHEN flagged = 1 THEN cents END), 0)::BIGINT AS flagged_cent_sum " +
+        "FROM f GROUP BY event_type ORDER BY event_type", Set(Scale)),
+    // whole-word blocklist hits after the same punctuation strip
+    QueryDef("blocklist_filter", qBlocklistFilter,
+      "WITH t AS (SELECT source, doc_id, " +
+        "len(list_filter(list_transform(string_split_regex(lower(trim(text)), '\\s+'), " +
+        "t -> regexp_replace(regexp_replace(t, '^[^a-z0-9]+', ''), '[^a-z0-9]+$', '')), " +
+        "t -> list_contains(['dup', 'spark', 'vector'], t)))::BIGINT AS hits FROM documents) " +
+        "SELECT source, count(*)::BIGINT AS n_docs, " +
+        "sum((hits > 0)::BIGINT)::BIGINT AS n_flagged, sum(hits)::BIGINT AS hit_sum, " +
+        "coalesce(sum(CASE WHEN hits > 0 THEN doc_id END), 0)::BIGINT AS flagged_id_sum " +
+        "FROM t GROUP BY source ORDER BY source"),
+    // Fleiss' kappa integer sufficient statistics, full recompute
+    QueryDef("annotator_kappa", qAnnotatorKappa,
+      "WITH v AS (SELECT doc_id, lang AS label FROM documents " +
+        "UNION ALL SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN 'xx' ELSE lang END FROM documents " +
+        "UNION ALL SELECT doc_id, CASE WHEN doc_id % 21 = 0 THEN 'xx' " +
+        "WHEN doc_id % 13 = 0 THEN 'yy' ELSE lang END FROM documents), " +
+        "counts AS (SELECT doc_id, label, count(*)::BIGINT AS nij FROM v GROUP BY doc_id, label), " +
+        "pi AS (SELECT doc_id, sum(nij) AS ni, sum(nij * nij) AS s2i FROM counts GROUP BY doc_id), " +
+        "el AS (SELECT doc_id FROM pi WHERE ni = 3), " +
+        "it AS (SELECT count(*)::BIGINT AS n_items, coalesce(sum(s2i), 0)::BIGINT AS s2_sum FROM pi WHERE ni = 3), " +
+        "dr AS (SELECT count(*)::BIGINT AS n_dropped FROM pi WHERE ni != 3), " +
+        "cj AS (SELECT label, sum(nij) AS cjn FROM counts JOIN el USING (doc_id) GROUP BY label), " +
+        "c2 AS (SELECT coalesce(sum(cjn * cjn), 0)::BIGINT AS cj2_sum FROM cj) " +
+        "SELECT n_items, 3::BIGINT AS n_raters, n_dropped, s2_sum, cj2_sum, " +
+        "((s2_sum - n_items * 3) * (n_items * 3) - 2 * cj2_sum)::BIGINT AS kappa_num, " +
+        "(2 * ((n_items * 3) * (n_items * 3) - cj2_sum))::BIGINT AS kappa_den " +
+        "FROM it, dr, c2"),
+    // Scale: batch-3b: graded decontamination (in-row distinct + broadcast
+    // probe), the histogram-window percent-rank, and the pair-broadcast source
+    // matrix.
+    // per-doc distinct-8-gram overlap share vs the planted benchmark
+    QueryDef("contamination_ratio", qContaminationRatio,
+      "WITH t AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents), " +
+        "g0 AS (SELECT doc_id, unnest(list_transform(range(1, len(toks) - 8 + 2), i -> array_to_string(toks[i:i+7], ' '))) AS gram " +
+        "FROM t WHERE len(toks) >= 8), " +
+        "g AS (SELECT DISTINCT doc_id, gram FROM g0), " +
+        "bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0), " +
+        "j AS (SELECT g.doc_id, count(*)::BIGINT AS n_grams, count(b.gram)::BIGINT AS n_hit " +
+        "FROM g LEFT JOIN bench b ON g.gram = b.gram GROUP BY g.doc_id) " +
+        "SELECT doc_id, n_grams, n_hit, (n_hit * 10000 // n_grams)::BIGINT AS ratio_x1e4 " +
+        "FROM j ORDER BY doc_id", Set(Scale)),
+    // Scale: see contamination_ratio.
+    // percent_rank (min-rank ties) replayed as a window; same per-10k grid
+    QueryDef("score_calibrate", qScoreCalibrate,
+      "WITH r AS (SELECT doc_id, source, n_chars::BIGINT AS n_chars, " +
+        "rank() OVER (PARTITION BY source ORDER BY n_chars) AS rnk, " +
+        "count(*) OVER (PARTITION BY source) AS n FROM documents) " +
+        "SELECT doc_id, source, n_chars, " +
+        "(CASE WHEN n > 1 THEN ((rnk - 1) * 10000) // (n - 1) ELSE 0 END)::BIGINT AS pr_x1e4 " +
+        "FROM r ORDER BY doc_id", Set(Scale)),
+    // Scale: see contamination_ratio.
+    // exact-Jaccard pair set (as dedup_minhash) rolled up by source pair
+    QueryDef("dedup_cross_source", qDedupCrossSource,
+      "WITH sh AS (SELECT doc_id, list_distinct([text[i:i+4] FOR i IN range(1, greatest(len(text)-3, 1))]) AS s FROM documents), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.s, b.s))::DOUBLE / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j " +
+        "FROM sh a JOIN sh b ON a.doc_id < b.doc_id), " +
+        "pr AS (SELECT id_a, id_b FROM p WHERE j >= 0.8), " +
+        "s AS (SELECT pr.id_a, pr.id_b, da.source AS sa, db.source AS sb FROM pr " +
+        "JOIN documents da ON pr.id_a = da.doc_id JOIN documents db ON pr.id_b = db.doc_id) " +
+        "SELECT least(sa, sb) AS src_lo, greatest(sa, sb) AS src_hi, " +
+        "count(*)::BIGINT AS n_pairs, sum(id_a + id_b)::BIGINT AS pair_id_sum " +
+        "FROM s GROUP BY 1, 2 ORDER BY 1, 2", Set(Scale)),
+    // Scale: see mask_fpe_props.
+    // independent public-suffix replay: host extraction by regex, then the
+    // PSL algorithm itself (candidate-suffix expansion, rule-table longest
+    // match, exception > wildcard > normal > default '*') over the rule
+    // subset reachable by the planted hosts — not a copy of the URL
+    // construction
+    QueryDef("url_domain_report", qUrlDomainReport,
+      "WITH u AS (SELECT CASE " +
+        "WHEN c_custkey % 12 = 0 THEN concat('https://shop', (c_custkey % 97)::VARCHAR, '.example.com/products?id=', c_custkey::VARCHAR) " +
+        "WHEN c_custkey % 12 = 1 THEN concat('http://user@www', (c_custkey % 13)::VARCHAR, '.webmail.co.uk:8080/inbox') " +
+        "WHEN c_custkey % 12 = 2 THEN concat('media', (c_custkey % 7)::VARCHAR, '.cdn.ac.uk') " +
+        "WHEN c_custkey % 12 = 3 THEN concat('https://192.168.', (c_custkey % 256)::VARCHAR, '.', (c_custkey % 250)::VARCHAR, '/admin') " +
+        "WHEN c_custkey % 12 = 4 THEN concat('https://news.site', (c_custkey % 11)::VARCHAR, '.com.au/a') " +
+        "WHEN c_custkey % 12 = 5 THEN 'ftp://files.archive.org:21/pub' " +
+        "WHEN c_custkey % 12 = 6 THEN 'https://www.gov.ck/services' " +
+        "WHEN c_custkey % 12 = 7 THEN 'https://www.ck/index' " +
+        "WHEN c_custkey % 12 = 8 THEN 'http://localhost:3000/dev' " +
+        "WHEN c_custkey % 12 = 9 THEN concat('https://api.v', (c_custkey % 3)::VARCHAR, '.app', (c_custkey % 19)::VARCHAR, '.io/v1/q') " +
+        "WHEN c_custkey % 12 = 10 THEN concat('//assets.tienda', (c_custkey % 23)::VARCHAR, '.com.mx/img.png') " +
+        "ELSE concat('dash.metrics', (c_custkey % 5)::VARCHAR, '.example.co.jp.') END AS url FROM customer), " +
+        "h AS (SELECT url, rtrim(lower(regexp_extract(regexp_replace(url, '^//', ''), " +
+        "'^(?:[a-z][a-z0-9+.-]*://)?(?:[^/?#@]*@)?([^/?#:]*)', 1)), '.') AS host FROM u), " +
+        "hl AS (SELECT host, string_split(host, '.') AS ls, len(string_split(host, '.')) AS nl " +
+        "FROM (SELECT DISTINCT host FROM h)), " +
+        "c2 AS (SELECT host, nl, ls, unnest(generate_series(1, nl)) AS i FROM hl), " +
+        "c3 AS (SELECT host, nl, i, array_to_string(ls[i:], '.') AS cand, " +
+        "CASE WHEN i < nl THEN array_to_string(ls[i+1:], '.') END AS tail FROM c2), " +
+        "m AS (SELECT host, nl, " +
+        "min(CASE WHEN cand IN ('www.ck') THEN i END) AS exc_i, " +
+        "min(CASE WHEN cand IN ('com','org','io','uk','co.uk','ac.uk','au','com.au','mx','com.mx','jp','co.jp') THEN i END) AS norm_i, " +
+        "min(CASE WHEN tail IN ('ck') THEN i END) AS wild_i FROM c3 GROUP BY host, nl), " +
+        "ps AS (SELECT host, CASE WHEN exc_i IS NOT NULL THEN exc_i + 1 " +
+        "WHEN norm_i IS NOT NULL OR wild_i IS NOT NULL THEN least(coalesce(norm_i, 9999), coalesce(wild_i, 9999)) " +
+        "ELSE nl END AS s FROM m), " +
+        "dm AS (SELECT hl.host, CASE " +
+        "WHEN regexp_matches(hl.host, '^[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}$') THEN NULL " +
+        "WHEN hl.nl < 2 THEN NULL " +
+        "WHEN ps.s >= 2 THEN array_to_string(hl.ls[ps.s - 1:], '.') END AS domain " +
+        "FROM ps JOIN hl ON hl.host = ps.host), " +
+        "r AS (SELECT h.url, h.host, dm.domain FROM h JOIN dm ON dm.host = h.host) " +
+        "SELECT domain, count(*)::BIGINT AS n_urls, count(DISTINCT host)::BIGINT AS n_hosts, " +
+        "((count(*) * 1000000) // (SELECT count(*) FROM r))::BIGINT AS share_ppm " +
+        "FROM r GROUP BY domain ORDER BY n_urls DESC, domain", Set(Scale)),
+    // Scale: see dp_sums.
+    // the domain replay composed with the ring-hash cap: same suffix
+    // algorithm as url_domain_report, then row_number per domain in
+    // (idHash, id) order, keep rn <= 40, null domains excluded
+    QueryDef("url_domain_caps", qUrlDomainCaps,
+      "WITH u AS (SELECT c_custkey AS id, CASE " +
+        "WHEN c_custkey % 12 = 0 THEN concat('https://shop', (c_custkey % 97)::VARCHAR, '.example.com/products?id=', c_custkey::VARCHAR) " +
+        "WHEN c_custkey % 12 = 1 THEN concat('http://user@www', (c_custkey % 13)::VARCHAR, '.webmail.co.uk:8080/inbox') " +
+        "WHEN c_custkey % 12 = 2 THEN concat('media', (c_custkey % 7)::VARCHAR, '.cdn.ac.uk') " +
+        "WHEN c_custkey % 12 = 3 THEN concat('https://192.168.', (c_custkey % 256)::VARCHAR, '.', (c_custkey % 250)::VARCHAR, '/admin') " +
+        "WHEN c_custkey % 12 = 4 THEN concat('https://news.site', (c_custkey % 11)::VARCHAR, '.com.au/a') " +
+        "WHEN c_custkey % 12 = 5 THEN 'ftp://files.archive.org:21/pub' " +
+        "WHEN c_custkey % 12 = 6 THEN 'https://www.gov.ck/services' " +
+        "WHEN c_custkey % 12 = 7 THEN 'https://www.ck/index' " +
+        "WHEN c_custkey % 12 = 8 THEN 'http://localhost:3000/dev' " +
+        "WHEN c_custkey % 12 = 9 THEN concat('https://api.v', (c_custkey % 3)::VARCHAR, '.app', (c_custkey % 19)::VARCHAR, '.io/v1/q') " +
+        "WHEN c_custkey % 12 = 10 THEN concat('//assets.tienda', (c_custkey % 23)::VARCHAR, '.com.mx/img.png') " +
+        "ELSE concat('dash.metrics', (c_custkey % 5)::VARCHAR, '.example.co.jp.') END AS url FROM customer), " +
+        "h AS (SELECT id, rtrim(lower(regexp_extract(regexp_replace(url, '^//', ''), " +
+        "'^(?:[a-z][a-z0-9+.-]*://)?(?:[^/?#@]*@)?([^/?#:]*)', 1)), '.') AS host FROM u), " +
+        "hl AS (SELECT host, string_split(host, '.') AS ls, len(string_split(host, '.')) AS nl " +
+        "FROM (SELECT DISTINCT host FROM h)), " +
+        "c2 AS (SELECT host, nl, ls, unnest(generate_series(1, nl)) AS i FROM hl), " +
+        "c3 AS (SELECT host, nl, i, array_to_string(ls[i:], '.') AS cand, " +
+        "CASE WHEN i < nl THEN array_to_string(ls[i+1:], '.') END AS tail FROM c2), " +
+        "m AS (SELECT host, nl, " +
+        "min(CASE WHEN cand IN ('www.ck') THEN i END) AS exc_i, " +
+        "min(CASE WHEN cand IN ('com','org','io','uk','co.uk','ac.uk','au','com.au','mx','com.mx','jp','co.jp') THEN i END) AS norm_i, " +
+        "min(CASE WHEN tail IN ('ck') THEN i END) AS wild_i FROM c3 GROUP BY host, nl), " +
+        "ps AS (SELECT host, CASE WHEN exc_i IS NOT NULL THEN exc_i + 1 " +
+        "WHEN norm_i IS NOT NULL OR wild_i IS NOT NULL THEN least(coalesce(norm_i, 9999), coalesce(wild_i, 9999)) " +
+        "ELSE nl END AS s FROM m), " +
+        "dm AS (SELECT hl.host, CASE " +
+        "WHEN regexp_matches(hl.host, '^[0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}[.][0-9]{1,3}$') THEN NULL " +
+        "WHEN hl.nl < 2 THEN NULL " +
+        "WHEN ps.s >= 2 THEN array_to_string(hl.ls[ps.s - 1:], '.') END AS domain " +
+        "FROM ps JOIN hl ON hl.host = ps.host), " +
+        "r AS (SELECT h.id, dm.domain FROM h JOIN dm ON dm.host = h.host WHERE dm.domain IS NOT NULL), " +
+        "rk AS (SELECT id, domain, row_number() OVER (PARTITION BY domain " +
+        "ORDER BY (id::HUGEINT * 2654435761) % 4294967296, id) AS rn FROM r) " +
+        "SELECT domain, count(*)::BIGINT AS n_kept, sum(id)::BIGINT AS id_sum " +
+        "FROM rk WHERE rn <= 40 GROUP BY domain ORDER BY domain", Set(Scale)),
+    // Scale: see dp_sums.
+    // rules-table replay of the RFC 9309 semantics: group selection
+    // (named group if the variant has one, else '*'), pattern->regex
+    // conversion ('*' -> '.*', trailing '$' kept as anchor), longest
+    // pattern wins with allow on ties, no-match defaults to allowed
+    QueryDef("robots_filter", qRobotsFilter,
+      "WITH u AS (SELECT c_custkey AS id, c_custkey % 3 AS v, CASE " +
+        "WHEN c_custkey % 5 = 0 THEN '/index' " +
+        "WHEN c_custkey % 5 = 1 THEN '/admin/settings' " +
+        "WHEN c_custkey % 5 = 2 THEN '/admin/public/page' " +
+        "WHEN c_custkey % 5 = 3 THEN concat('/private/', c_custkey::VARCHAR) " +
+        "ELSE '/private/ok' END AS path FROM customer), " +
+        "r(v, agent, allow, pattern) AS (VALUES " +
+        "(0, '*', 0, '/admin'), (0, '*', 1, '/admin/public'), " +
+        "(1, 'graftbot', 0, '/private*'), (1, 'graftbot', 1, '/private/ok$'), (1, '*', 0, '/'), " +
+        "(2, 'otherbot', 0, '/')), " +
+        "g AS (SELECT v, max(CASE WHEN agent = 'graftbot' THEN 1 ELSE 0 END) AS has_named " +
+        "FROM r GROUP BY v), " +
+        "eff AS (SELECT r.v, r.allow, r.pattern, len(r.pattern) AS plen FROM r JOIN g USING (v) " +
+        "WHERE (g.has_named = 1 AND r.agent = 'graftbot') OR (g.has_named = 0 AND r.agent = '*')), " +
+        "m AS (SELECT u.id, u.v, e.allow, e.plen FROM u LEFT JOIN eff e ON e.v = u.v " +
+        "AND regexp_matches(u.path, '^' || " +
+        "replace(CASE WHEN e.pattern LIKE '%$' THEN substr(e.pattern, 1, len(e.pattern) - 1) ELSE e.pattern END, '*', '.*') || " +
+        "CASE WHEN e.pattern LIKE '%$' THEN '$' ELSE '' END)), " +
+        "rk AS (SELECT id, v, allow, row_number() OVER (PARTITION BY id " +
+        "ORDER BY plen DESC NULLS LAST, allow DESC) AS rn FROM m), " +
+        "verdict AS (SELECT id, v, " +
+        "CASE WHEN allow IS NULL THEN true WHEN allow = 1 THEN true ELSE false END AS ok " +
+        "FROM rk WHERE rn = 1) " +
+        "SELECT v::BIGINT AS v, count(*)::BIGINT AS n_urls, " +
+        "count(CASE WHEN ok THEN 1 END)::BIGINT AS n_allowed, " +
+        "coalesce(sum(CASE WHEN ok THEN id END), 0)::BIGINT AS allowed_id_sum " +
+        "FROM verdict GROUP BY v ORDER BY v", Set(Scale)),
+    // Scale: see dp_sums.
+    // ground truth from the planted construction: 4 records per doc,
+    // 2 responses, 1 kept 200; body = 'warc body for doc <id> ' plus
+    // (id%7)+1 space-joined 'w's, so body length = 18 + len(id) + 1 +
+    // (2*((id%7)+1) - 1); the engine's container/HTTP machinery must
+    // reproduce it byte-for-byte (n_body_match pins to n)
+    QueryDef("warc_ingest", qWarcIngest,
+      "WITH d AS (SELECT doc_id AS id FROM documents), " +
+        "b AS (SELECT id, 19 + len(id::VARCHAR) + 2 * ((id % 7) + 1) - 1 AS blen FROM d) " +
+        "SELECT count(*)::BIGINT AS n_files, (count(*) * 4)::BIGINT AS n_records, " +
+        "(count(*) * 2)::BIGINT AS n_responses, count(*)::BIGINT AS n_ok200, " +
+        "sum(blen)::BIGINT AS body_chars, count(*)::BIGINT AS n_body_match FROM b", Set(Scale)),
+    // Scale: round-17: the charset-ladder ingest (warc_ingest's narrow-flatMap
+    // class plus per-body sniff/decode CPU), the frontier composition (robots
+    // listing -> XML parse -> canonicalize -> one domain-keyed aggregate over a
+    // fixed 27-domain space), block-level main-content extraction (in-row
+    // codegen'd kernel + a 1-row agg — the quality_rules scan-bound class),
+    // byte-level BPE training (the distinct-WORD frame is the term under test:
+    // raw case-preserved words grow ~SCALEx under alphabet rotation, the char
+    // arm's worst case, with byte symbols ~2x the char count), the per-doc byte
+    // encode (distinct-word join + one doc-keyed aggregate), and the
+    // rank-then-encipher masking scan (in-row AES, no shuffle).
+    // charset-ladder replay: the expected DECODED strings are DuckDB
+    // constants per planted arm (the 1252/Shift-of-meaning bytes live
+    // only on the engine side — the oracle states what correct decoding
+    // must produce), the charset per arm is the ladder's pinned pick
+    QueryDef("warc_charset", qWarcCharset,
+      "WITH d AS (SELECT doc_id, doc_id % 5 AS case_id FROM documents), " +
+        "e AS (SELECT case_id, CASE case_id " +
+        "WHEN 0 THEN 'plain ascii doc ' || doc_id::VARCHAR " +
+        "WHEN 1 THEN 'résumé détails ' || doc_id::VARCHAR " +
+        "WHEN 2 THEN 'café ' || doc_id::VARCHAR " +
+        "WHEN 3 THEN '<html><head><meta charset=\"windows-1252\"></head><body>déjà vu ' || doc_id::VARCHAR || '</body></html>' " +
+        "ELSE 'naïve fiancée ' || doc_id::VARCHAR END AS exp FROM d) " +
+        "SELECT case_id, count(*)::BIGINT AS n_docs, " +
+        "CASE WHEN case_id IN (0, 2) THEN 'UTF-8' ELSE 'windows-1252' END AS charset, " +
+        "1::BIGINT AS n_charsets, count(*)::BIGINT AS n_decoded_exact, " +
+        "sum(len(exp))::BIGINT AS decoded_chars FROM e GROUP BY case_id ORDER BY case_id", Set(Scale)),
+    // Scale: see warc_charset.
+    // frontier replay: urls, canonical collapses, lastmods, caps and
+    // child-sitemap counts all re-derived from the planted construction
+    // (two spellings per page -> one canonical; index docs -> 2 children)
+    QueryDef("sitemap_frontier", qSitemapFrontier, sitemapFrontierOracleSql, Set(Scale)),
+    // Scale: see warc_charset.
+    // extraction replay: the expected extracted text is a constant of the
+    // planted page; keep/reject decisions on both arms are determined by
+    // the construction (500 vs 333 per-mille stopwords at a 450 bar)
+    QueryDef("html_main_content", qHtmlMainContent,
+      "WITH d AS (SELECT doc_id AS id FROM documents), " +
+        "e AS (SELECT id, 'The story of document ' || id::VARCHAR || " +
+        "' is told in the text and a reader is sure to enjoy it.' AS p1, " +
+        "'A second paragraph of the article ' || id::VARCHAR || " +
+        "' adds to the mass and is kept in the extraction.' AS p2 FROM d) " +
+        "SELECT count(*)::BIGINT AS n_docs, count(*)::BIGINT AS n_exact, " +
+        "sum(len(p1) + 1 + len(p2))::BIGINT AS extracted_chars, " +
+        "0::BIGINT AS n_nav_leak, count(*)::BIGINT AS n_strip_nav, " +
+        "count(*)::BIGINT AS extracted_keep, 0::BIGINT AS stripped_keep FROM e", Set(Scale)),
+    // Scale: see html_link_graph.
+    // the canonical key is a pure function of the page index k: FULL
+    // values (distinct keys, redundancy, exact canonical character mass
+    // 34 + len(k%30) + len(k) per row) replay from the construction — the
+    // normalizer must land exactly there from all four messy spellings
+    QueryDef("url_canonical_dedup", qUrlCanonicalDedup,
+      "WITH u AS (SELECT c_custkey AS id, c_custkey // 4 AS k FROM customer) " +
+        "SELECT count(*)::BIGINT AS n_urls, count(DISTINCT k)::BIGINT AS n_canonical, " +
+        "(count(*) - count(DISTINCT k))::BIGINT AS n_redundant, " +
+        "sum(34 + len((k % 30)::VARCHAR) + len(k::VARCHAR))::BIGINT AS canon_chars, " +
+        "count(DISTINCT k)::BIGINT AS n_pages FROM u", Set(Scale)),
+    // Scale: round-16 batch 3: link extraction (regexp_extract_all + explode + a
+    // domain-keyed aggregate over a fixed 20-domain space) and URL
+    // canonicalization (in-row string kernel + one 1-row agg with two distinct
+    // terms) — both scan-bound with bounded aggregates.
+    // independent extraction + suffix replay: DuckDB builds the same html,
+    // pulls hrefs with ITS regexp_extract_all, derives hosts and runs the
+    // public-suffix algorithm over the reachable rule subset
+    QueryDef("html_link_graph", qHtmlLinkGraph,
+      "WITH docs AS (SELECT doc_id AS id, concat('<html><body><p>doc ', doc_id::VARCHAR, " +
+        "'</p><a class=\"m\" href=\"https://a.site', ((doc_id * 31 + 7) % 20)::VARCHAR, " +
+        "'.io/p\">one</a> <A HREF=''https://b.site', ((doc_id * 17 + 3) % 20)::VARCHAR, " +
+        "'.io/q?z=1#frag''>two</A> <a href=\"/relative/path\">rel</a> " +
+        "<a name=\"x\">no href</a></body></html>') AS html FROM documents), " +
+        "l AS (SELECT id, unnest(regexp_extract_all(html, '(?i)<a\\s[^>]*href\\s*=\\s*[\"'']([^\"''#>]+)', 1)) AS link FROM docs), " +
+        "h AS (SELECT id, rtrim(lower(regexp_extract(regexp_replace(link, '^//', ''), " +
+        "'^(?:[a-z][a-z0-9+.-]*://)?(?:[^/?#@]*@)?([^/?#:]*)', 1)), '.') AS host FROM l), " +
+        "hl AS (SELECT host, string_split(host, '.') AS ls, len(string_split(host, '.')) AS nl " +
+        "FROM (SELECT DISTINCT host FROM h WHERE host <> '')), " +
+        "c2 AS (SELECT host, nl, ls, unnest(generate_series(1, nl)) AS i FROM hl), " +
+        "c3 AS (SELECT host, nl, i, array_to_string(ls[i:], '.') AS cand FROM c2), " +
+        "m AS (SELECT host, nl, min(CASE WHEN cand IN ('io', 'com') THEN i END) AS norm_i " +
+        "FROM c3 GROUP BY host, nl), " +
+        "dm AS (SELECT hl.host, CASE WHEN hl.nl < 2 THEN NULL " +
+        "WHEN coalesce(m.norm_i, hl.nl) >= 2 THEN array_to_string(hl.ls[coalesce(m.norm_i, hl.nl) - 1:], '.') END AS domain " +
+        "FROM m JOIN hl ON hl.host = m.host), " +
+        "e AS (SELECT 'site' || (h.id % 20)::VARCHAR || '.io' AS src_domain, dm.domain AS dst_domain " +
+        "FROM h JOIN dm ON dm.host = h.host WHERE dm.domain IS NOT NULL) " +
+        "SELECT dst_domain, count(*)::BIGINT AS in_links, " +
+        "count(DISTINCT src_domain)::BIGINT AS n_src_domains " +
+        "FROM e GROUP BY dst_domain ORDER BY dst_domain", Set(Scale)),
+    // streaming the ingest must not change one record: warc_ingest's
+    // construction replay VERBATIM
+    QueryDef("stream_warc_ingest", qStreamWarcIngest,
+      "WITH d AS (SELECT doc_id AS id FROM documents), " +
+        "b AS (SELECT id, 19 + len(id::VARCHAR) + 2 * ((id % 7) + 1) - 1 AS blen FROM d) " +
+        "SELECT count(*)::BIGINT AS n_files, (count(*) * 4)::BIGINT AS n_records, " +
+        "(count(*) * 2)::BIGINT AS n_responses, count(*)::BIGINT AS n_ok200, " +
+        "sum(blen)::BIGINT AS body_chars, count(*)::BIGINT AS n_body_match FROM b"),
+    // Scale: the composed ingest chain: parse cost linear (warc_ingest's term),
+    // dedup = one body-keyed aggregate (winners = half the corpus by
+    // construction), cap = the bounded-heap class. stream_warc_ingest is the
+    // same parser under trigger machinery — the memory-sink-harness exclusion
+    // class (stream_segment note).
+    // the whole ingest chain replayed from the construction: bodies are
+    // keyed by id/2 (min id wins the exact dedup), the winner's domain
+    // is site(id%20).io, then the ring-hash cap at 30 per domain — the
+    // engine's gzip+WARC+HTTP+suffix+cap machinery must land exactly here
+    QueryDef("crawl_pipeline_e2e", qCrawlPipelineE2e,
+      "WITH u AS (SELECT doc_id AS id FROM documents), " +
+        "w AS (SELECT min(id) AS id FROM u GROUP BY id // 2), " +
+        "d AS (SELECT id, 'site' || (id % 20)::VARCHAR || '.io' AS domain FROM w), " +
+        "rk AS (SELECT id, domain, row_number() OVER (PARTITION BY domain " +
+        "ORDER BY (id::HUGEINT * 2654435761) % 4294967296, id) AS rn FROM d) " +
+        "SELECT domain, count(*)::BIGINT AS n_kept, sum(id)::BIGINT AS id_sum " +
+        "FROM rk WHERE rn <= 30 GROUP BY domain ORDER BY domain", Set(Scale)),
+    // Scale: round-17 batch 2: the composed ingest with charset+extraction
+    // load-bearing (crawl_pipeline_e2e's class plus the decode/extract kernels),
+    // the in-row MIME table + head-metadata kernels (scan-bound with bounded
+    // aggregates), the schedule composition (one domain aggregate over a fixed
+    // 20-domain space), the frontier store cycle (store write + bloom + one
+    // store scan per probe — the probe's exchange is match-sized), and the WET
+    // export loop (two narrow flatMaps back to back). stream twins excluded: the
+    // memory/parquet sink harness class.
+    // the round-17 composition: classes are pairs (2k, 2k+1) planted in
+    // DIFFERENT encodings with per-id boilerplate — the min-id winner set
+    // below is reachable ONLY if charset decoding unified the pair's text
+    // and extraction dropped the per-id blocks; then domain + ring-hash
+    // cap replay exactly as in crawl_pipeline_e2e
+    QueryDef("crawl_pipeline_v2", qCrawlPipelineV2,
+      "WITH u AS (SELECT doc_id AS id FROM documents), " +
+        "w AS (SELECT min(id) AS id FROM u GROUP BY id // 2), " +
+        "d AS (SELECT id, 'page' || (id % 20)::VARCHAR || '.com' AS domain FROM w), " +
+        "rk AS (SELECT id, domain, row_number() OVER (PARTITION BY domain " +
+        "ORDER BY (id::HUGEINT * 2654435761) % 4294967296, id) AS rn FROM d) " +
+        "SELECT domain, count(*)::BIGINT AS n_kept, sum(id)::BIGINT AS id_sum " +
+        "FROM rk WHERE rn <= 25 GROUP BY domain ORDER BY domain", Set(Scale)),
+    // the trigger machinery must not change one frontier count
+    QueryDef("stream_sitemap", qStreamSitemap, sitemapFrontierOracleSql),
+    // Scale: see crawl_pipeline_v2.
+    // the sniffed type per arm is a construction constant (the three
+    // codec arms produce real JPEG/PNG/gzip magic bytes), so counts and
+    // id sums replay from doc_id % 6 alone
+    QueryDef("mime_sniff", qMimeSniff,
+      "WITH d AS (SELECT doc_id AS id, CASE doc_id % 6 " +
+        "WHEN 0 THEN 'image/jpeg' WHEN 1 THEN 'image/png' " +
+        "WHEN 2 THEN 'application/gzip' WHEN 3 THEN 'text/html' " +
+        "WHEN 4 THEN 'text/plain' ELSE 'application/octet-stream' END AS mime FROM documents) " +
+        "SELECT mime, count(*)::BIGINT AS n_payloads, count(*)::BIGINT AS n_expected, " +
+        "sum(id)::BIGINT AS id_sum FROM d GROUP BY mime ORDER BY mime", Set(Scale)),
+    // Scale: see crawl_pipeline_v2.
+    // extraction replay: titles/descriptions/canonicals are constants of
+    // the construction (both quoting arms must land on the same values);
+    // canonical groups = distinct id/3
+    QueryDef("html_metadata", qHtmlMetadata,
+      "SELECT count(*)::BIGINT AS n_docs, count(*)::BIGINT AS n_title_exact, " +
+        "count(*)::BIGINT AS n_desc_exact, count(*)::BIGINT AS n_canon_exact, " +
+        "count(DISTINCT doc_id // 3)::BIGINT AS n_canonical_groups FROM documents", Set(Scale)),
+    // Scale: see crawl_pipeline_v2.
+    // scheduling replay: delay = 1 + (id%20)%5 per domain, budget =
+    // 86400/delay, due per the changefreq->interval map at the pinned
+    // as-of, priority mass on the x1000 grid — all id arithmetic
+    // v2: due urls lane-split on the planted validators (id%4 — 0 ETag,
+    // 1 Last-Modified, 2 both with ETag winning, 3 none -> full fetch)
+    QueryDef("crawl_schedule", qCrawlSchedule,
+      "WITH d AS (SELECT doc_id AS id, doc_id % 20 AS k FROM documents), " +
+        "e AS (SELECT id, k, 'site' || k::VARCHAR || '.com' AS domain, " +
+        "1 + (k % 5) AS delay_s, " +
+        "CASE id % 5 WHEN 0 THEN 0 WHEN 1 THEN 1 WHEN 2 THEN 7 WHEN 3 THEN 365 ELSE NULL END AS iv, " +
+        "('2026-0' || (1 + id % 6)::VARCHAR || '-15')::DATE AS lastmod, " +
+        "(id % 10) * 100 AS px, " +
+        "(id % 4 IN (0, 2)) AS has_etag, (id % 4 IN (1, 2)) AS has_lm FROM d), " +
+        "f AS (SELECT *, iv IS NOT NULL AND lastmod + to_days(iv) <= DATE '2026-08-16' AS due FROM e) " +
+        "SELECT domain, min(delay_s)::BIGINT AS delay_s, " +
+        "(86400 // min(delay_s))::BIGINT AS daily_budget, count(*)::BIGINT AS n_urls, " +
+        "count(CASE WHEN due THEN 1 END)::BIGINT AS n_due, " +
+        "count(CASE WHEN due AND has_etag THEN 1 END)::BIGINT AS n_if_none_match, " +
+        "count(CASE WHEN due AND NOT has_etag AND has_lm THEN 1 END)::BIGINT AS n_if_modified_since, " +
+        "count(CASE WHEN due AND NOT has_etag AND NOT has_lm THEN 1 END)::BIGINT AS n_full_fetch, " +
+        "sum(px)::BIGINT AS priority_x1e3 FROM f GROUP BY domain ORDER BY domain", Set(Scale)),
+    // Scale: see crawl_pipeline_v2.
+    // the novel set is exactly the never-stored third: ids and domains
+    // replay from id arithmetic (canonicalization + bloom + confirm join
+    // must land there from the messy batch spellings)
+    QueryDef("frontier_incremental", qFrontierIncremental, frontierNovelOracleSql, Set(Scale)),
+    // Scale: round-10 batch 3: the Expand-multiplied one-pass profile, the heap
+    // CDC window, and the low-threshold pair histogram (the widest pair join in
+    // the suite — where candidate growth would hide).
+    // per-column profile as a UNION ALL of single-column aggregates
+    QueryDef("profile_table", qProfileTable,
+      Seq("doc_id", "lang", "n_chars", "source", "text").map { c =>
+        s"SELECT '$c' AS column_name, count(*)::BIGINT AS n_rows, " +
+          s"count(CASE WHEN $c IS NULL THEN 1 END)::BIGINT AS n_null, " +
+          s"count(DISTINCT $c)::BIGINT AS n_distinct, " +
+          s"min($c)::VARCHAR AS min_str, max($c)::VARCHAR AS max_str FROM documents"
+      }.mkString("", " UNION ALL ", " ORDER BY column_name"), Set(Scale)),
+    // Scale: see profile_table.
+    // latest-3 window recomputed as a (ts DESC, event_id ASC) rank
+    QueryDef("latest_k_events", qLatestKEvents,
+      "WITH r AS (SELECT user_id, event_id, value, " +
+        "row_number() OVER (PARTITION BY user_id ORDER BY epoch_us(ts) DESC, event_id ASC) AS rn " +
+        "FROM events) " +
+        "SELECT count(*)::BIGINT AS n_rows, count(DISTINCT user_id)::BIGINT AS n_users, " +
+        "sum(event_id)::BIGINT AS id_sum, sum(round(value * 100))::BIGINT AS value_cent_sum " +
+        "FROM r WHERE rn <= 3", Set(Scale)),
+    // Scale: see profile_table.
+    // exact-jaccard pair set (as dedup_ngram) bucketed on the 0.05 grid
+    QueryDef("pair_similarity_hist", qPairSimilarityHist,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents), " +
+        "g AS (SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ') FOR i IN range(1, greatest(len(t)-1, 1))]) AS gr FROM toks), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.gr, b.gr))::DOUBLE / (len(a.gr) + len(b.gr) - len(list_intersect(a.gr, b.gr))) AS j " +
+        "FROM g a JOIN g b ON a.doc_id < b.doc_id) " +
+        "SELECT least(floor(j * 20)::BIGINT, 19) AS bucket, count(*)::BIGINT AS n_pairs, " +
+        "sum(id_a + id_b)::BIGINT AS pair_id_sum " +
+        "FROM p WHERE j >= 0.2 GROUP BY 1 ORDER BY 1", Set(Scale)),
+    // Scale: the oriented wedge join: wedge volume is sum(in*out) — bounded on
+    // the planted 3-out-regular graph, so bytes must stay linear.
+    // oriented-wedge triangle recompute over the same planted graph
+    QueryDef("triangle_count", qTriangleCount,
+      "WITH nn AS (SELECT count(*)::BIGINT AS n FROM documents), " +
+        // UNION ALL instead of unnest-over-CTE: DuckDB 1.0.0's binder
+        // asserts on DISTINCT over an unnest column routed through CTEs
+        "e0 AS (SELECT doc_id AS src, (doc_id*31+7) % (SELECT n FROM nn) AS dst FROM documents " +
+        "UNION ALL SELECT doc_id, (doc_id*17+3) % (SELECT n FROM nn) FROM documents " +
+        "UNION ALL SELECT doc_id, (doc_id*13+11) % (SELECT n FROM nn) FROM documents), " +
+        "e AS (SELECT DISTINCT least(src, dst) AS lo, greatest(src, dst) AS hi FROM e0 WHERE src != dst), " +
+        "w AS (SELECT e1.lo AS a, e1.hi AS b, e2.hi AS c FROM e e1 JOIN e e2 ON e1.hi = e2.lo), " +
+        "t AS (SELECT * FROM w WHERE EXISTS (SELECT 1 FROM e WHERE e.lo = w.a AND e.hi = w.c)) " +
+        "SELECT (SELECT count(*) FROM e)::BIGINT AS n_edges, " +
+        "(SELECT count(*) FROM w)::BIGINT AS n_wedges, " +
+        "(SELECT count(*) FROM t)::BIGINT AS n_triangles", Set(Scale)),
+    // elementwise integer-grid centroid, parallel-unnest recompute
+    QueryDef("embed_centroid", qEmbedCentroid,
+      "WITH x AS (SELECT label, unnest(range(1, len(embedding)+1)) AS pos, " +
+        "unnest(list_transform(embedding, e -> round(e::DOUBLE * 1000000)::BIGINT)) AS c FROM embeddings) " +
+        // exact FLOOR division in pure integers: subtract the pmod first
+        // (DuckDB's // truncates toward zero on negatives, and floor()
+        // over a double quotient loses exactness past 2^53)
+        "SELECT label::BIGINT AS label, pos::BIGINT AS pos, count(c)::BIGINT AS n, " +
+        "sum(c)::BIGINT AS s, " +
+        "((sum(c) - ((sum(c) % count(c)) + count(c)) % count(c)) // count(c))::BIGINT AS mean_x1e6 " +
+        // HAVING mirrors the operator: an all-null (label, pos) group has
+        // no countable elements and is absent, never a divide-by-zero
+        "FROM x GROUP BY label, pos HAVING count(c) > 0 ORDER BY label, pos"),
+    // Scale: df-join novelty: gram-keyed aggregate + join back — the inverted
+    // index is the linear term.
+    // corpus-relative novelty: df over distinct (doc, gram), df=1 share
+    QueryDef("ngram_novelty", qNgramNovelty,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents), " +
+        "g0 AS (SELECT doc_id, unnest(CASE WHEN len(t) >= 3 " +
+        "THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)] ELSE [] END) AS gram FROM toks), " +
+        "g AS (SELECT DISTINCT doc_id, gram FROM g0), " +
+        "dfreq AS (SELECT gram, count(*) AS df FROM g GROUP BY gram), " +
+        "j AS (SELECT g.doc_id, count(*)::BIGINT AS n_grams, " +
+        "count(CASE WHEN df = 1 THEN 1 END)::BIGINT AS n_unique " +
+        "FROM g JOIN dfreq USING (gram) GROUP BY g.doc_id) " +
+        "SELECT doc_id, n_grams, n_unique, (n_unique * 10000 // n_grams)::BIGINT AS novelty_x1e4 " +
+        "FROM j ORDER BY doc_id", Set(Scale)),
+    // Not Scale-tagged: deliberately NOT measured by ScaleCheck beyond the
+    // recorded 10x point: its planted rot13 tails commute with the scaled
+    // corpus's alphabet rotation (rot13 ∘ rot_k = rot_{k+13}), so at
+    // SCALE >= 13 copy k's tails equal copy k+13's vocabulary — real
+    // cross-copy duplicate mass that no dedup operator should be expected
+    // to scale linearly through (SCALING.md documents the 10x/30x numbers
+    // and this attribution).
+    // planted-containment recompute: exact distinct-3-gram sets, both the
+    // asymmetric containment and the symmetric jaccard at 0.9
+    QueryDef("dedup_containment", qDedupContainment,
+      "WITH base AS (SELECT doc_id, text FROM documents " +
+        "UNION ALL SELECT doc_id + 2000000000000, text || ' ' || translate(text, 'abcdefghijklmnopqrstuvwxyz', 'nopqrstuvwxyzabcdefghijklm') " +
+        "FROM documents WHERE doc_id % 20 = 0), " +
+        "toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM base), " +
+        "g AS (SELECT doc_id, list_distinct(CASE WHEN len(t) >= 3 " +
+        "THEN [array_to_string(t[i:i+2], ' ') FOR i IN range(1, len(t)-1)] ELSE [] END) AS gr FROM toks), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.gr, b.gr)) AS i, len(a.gr) AS la, len(b.gr) AS lb " +
+        "FROM g a JOIN g b ON a.doc_id < b.doc_id WHERE len(a.gr) > 0 AND len(b.gr) > 0) " +
+        "SELECT (SELECT count(*) FROM p WHERE greatest(i::DOUBLE / la, i::DOUBLE / lb) >= 0.9)::BIGINT AS n_containment, " +
+        "(SELECT coalesce(sum(id_a + id_b), 0) FROM p WHERE greatest(i::DOUBLE / la, i::DOUBLE / lb) >= 0.9)::BIGINT AS pair_id_sum, " +
+        "(SELECT count(*) FROM p WHERE i::DOUBLE / (la + lb - i) >= 0.9)::BIGINT AS n_jaccard"),
+    // Scale: see crawl_pipeline_v2.
+    // the export loop replays from the corpus itself: every check holds
+    // for every row, payload mass = the text's own UTF-8 byte mass
+    QueryDef("wet_export", qWetExport,
+      "SELECT count(*)::BIGINT AS n_docs, count(*)::BIGINT AS n_roundtrip, " +
+        "count(*)::BIGINT AS n_uri_match, count(*)::BIGINT AS n_utf8, " +
+        "sum(octet_length(encode(text)))::BIGINT AS payload_bytes FROM documents", Set(Scale)),
+    // per-batch novelty against a static store unions to the batch
+    // answer: the trigger machinery must not change one novel url
+    QueryDef("stream_frontier_probe", qStreamFrontierProbe, frontierNovelOracleSql),
+    // Scale: decode->langid: warc_charset's narrow parse/decode class plus the
+    // in-row langid kernel and a 3-row aggregate.
+    // decode->langid replay: per-arm charset, language, exact decoded
+    // bodies and char mass are construction constants (the zh arm is
+    // reachable only if the GBK declaration was honored — 1252 mojibake
+    // has no CJK codepoints for the script detector)
+    QueryDef("crawl_langid", qCrawlLangid,
+      "WITH d AS (SELECT doc_id AS id, doc_id % 5 AS c FROM documents), " +
+        "e AS (SELECT c, CASE c " +
+        "WHEN 0 THEN 'the report and the data of the crawl is here to stay with us number ' || id::VARCHAR " +
+        "WHEN 1 THEN '你好世界这是一个测试的报告编号 ' || id::VARCHAR " +
+        "WHEN 2 THEN 'le chat est dans la maison et les champs pour une vie très belle ' || id::VARCHAR " +
+        "WHEN 3 THEN 'これは日本語のページでありクロールの報告を含んでいます番号 ' || id::VARCHAR " +
+        "ELSE '이것은 한국어 시험 보고서입니다 번호 ' || id::VARCHAR END AS exp FROM d) " +
+        "SELECT c AS case_id, count(*)::BIGINT AS n_docs, " +
+        "CASE c WHEN 0 THEN 'UTF-8' WHEN 1 THEN 'GBK' WHEN 2 THEN 'windows-1252' " +
+        "WHEN 3 THEN 'Shift_JIS' ELSE 'EUC-KR' END AS charset, " +
+        "CASE c WHEN 0 THEN 'en' WHEN 1 THEN 'zh' WHEN 2 THEN 'fr' " +
+        "WHEN 3 THEN 'ja' ELSE 'ko' END AS lang, " +
+        "1::BIGINT AS n_langs, count(*)::BIGINT AS n_exact, " +
+        "sum(len(exp))::BIGINT AS body_chars FROM e GROUP BY c ORDER BY case_id", Set(Scale)),
+    // Scale: anchor extraction: regexp_extract_all x2 + explode + a domain-keyed
+    // aggregate over a fixed 20-domain space — the html_link_graph class.
+    // anchor texts and targets are id arithmetic: 'read the <id> report'
+    // (16 + digits chars) onto targ(id*31+7 % 20).io, 'more <id> details'
+    // (13 + digits) onto targ(id*17+3 % 20).io; the relative anchor has
+    // no registrable domain and drops
+    QueryDef("anchor_text", qAnchorText,
+      "WITH d AS (SELECT doc_id AS id FROM documents), " +
+        "e AS (SELECT 'targ' || ((id * 31 + 7) % 20)::VARCHAR || '.io' AS domain, " +
+        "16 + len(id::VARCHAR) AS alen FROM d " +
+        "UNION ALL SELECT 'targ' || ((id * 17 + 3) % 20)::VARCHAR || '.io', " +
+        "13 + len(id::VARCHAR) FROM d) " +
+        "SELECT domain, count(*)::BIGINT AS n_anchors, sum(alen)::BIGINT AS anchor_chars, " +
+        "count(*)::BIGINT AS n_exact FROM e GROUP BY domain ORDER BY domain", Set(Scale)),
+    // Scale: round-18 batch 3: feed discovery (narrow XML build + parse, one
+    // host-keyed aggregate over a fixed 20-host space — the sitemap_frontier
+    // class), and the two in-row kernels (date ladder, robots-directive tests —
+    // scan-bound, no aggregate at all).
+    // the feed XML is BUILT from id arithmetic and must round-trip
+    // through the real RSS/Atom parser: links, kinds, and RFC 1123 /
+    // RFC 3339 epochs all replay here without parsing any XML; a
+    // date-parse bug surfaces as n_bad_epoch > 0 or a wrong sum_epoch
+    QueryDef("feed_frontier", qFeedFrontier, feedFrontierOracleSql, Set(Scale)),
+    // the streaming twin shares the oracle VERBATIM: trigger machinery
+    // must not change one count
+    QueryDef("stream_feed_poll", qStreamFeedPoll, feedFrontierOracleSql),
+    // Scale: round-18 batch 4: feed autodiscovery (in-row link scan + one 1-row
+    // agg), and the chunk-CAS ingest loop (store write + TWO broadcast-probed
+    // store scans; the batch's distinct-chunk frame is the broadcast side —
+    // store never shuffles; chunking CPU is the corpus-linear term).
+    // stream_feed_poll excluded: the memory/parquet sink harness class
+    // (stream_segment note).
+    // every count replays from the four-arm arithmetic; the decoy arms
+    // (rel=alternate type=text/html, rel=stylesheet, linkless)
+    // contributing ZERO is the load-bearing discrimination
+    QueryDef("feed_autodiscovery", qFeedAutodiscovery,
+      "SELECT count(*)::BIGINT AS n_pages, " +
+        "(sum(CASE WHEN doc_id % 4 = 0 THEN 1 WHEN doc_id % 4 = 1 THEN 2 ELSE 0 END))::BIGINT AS n_feed_links, " +
+        "sum(CASE WHEN doc_id % 4 = 0 THEN 1 ELSE 0 END)::BIGINT AS n_rel_resolved, " +
+        "sum(CASE WHEN doc_id % 4 = 1 THEN 1 ELSE 0 END)::BIGINT AS n_abs_rss, " +
+        "sum(CASE WHEN doc_id % 4 = 1 THEN 1 ELSE 0 END)::BIGINT AS n_abs_atom, " +
+        "0::BIGINT AS n_from_decoy_arms FROM documents", Set(Scale)),
+    // Scale: see feed_autodiscovery.
+    // pinned store-exactness contract: re-arrived docs contribute ZERO
+    // novel chunks, a re-probe after ingest finds ZERO novel, novel
+    // bytes bounded by the new docs' bytes; doc counts arithmetic
+    QueryDef("cdc_incremental", qCdcIncremental, cdcIncrementalOracleSql(""), Set(Scale)),
+    // Scale: see feed_frontier.
+    // ladder arms replay from id arithmetic; the meta/time arms carry a
+    // valid DECOY url date the ladder must not return, so src order is
+    // load-bearing in the hash
+    QueryDef("page_dates", qPageDates,
+      "SELECT doc_id, CASE (doc_id % 4) WHEN 0 THEN 'meta' WHEN 1 THEN 'time' " +
+        "WHEN 2 THEN 'url' ELSE NULL END AS date_src, " +
+        "CASE WHEN (doc_id % 4) <= 2 THEN (2000 + doc_id % 20) || '-' || " +
+        "lpad((1 + doc_id % 12)::VARCHAR, 2, '0') || '-' || " +
+        "lpad((1 + doc_id % 28)::VARCHAR, 2, '0') ELSE NULL END AS pub_date " +
+        "FROM documents", Set(Scale)),
+    // Scale: see feed_frontier.
+    // both directive channels replay by arm: meta via the html kernel,
+    // header via the real HTTP head parser; noindex from EITHER channel
+    // excludes, nofollow only flags
+    QueryDef("noindex_filter", qNoindexFilter,
+      "SELECT doc_id, CASE (doc_id % 5) WHEN 1 THEN 'noindex, follow' " +
+        "WHEN 3 THEN 'nofollow' ELSE NULL END AS meta_robots, " +
+        "CASE (doc_id % 5) WHEN 2 THEN 'noindex' WHEN 4 THEN 'all' ELSE NULL END AS hdr_robots, " +
+        "(doc_id % 5) IN (1, 2) AS noindex, " +
+        "(doc_id % 5) = 3 AS nofollow, " +
+        "(doc_id % 5) NOT IN (1, 2) AS kept " +
+        "FROM documents", Set(Scale)),
+    // Scale: round-18: redirect-chain resolution (3xx-only edge frame — a few
+    // rows per file — through two bounded equi-join hops + the revisit
+    // aggregate; the corpus-linear term is the WARC parse, the joins are
+    // edge-sized).
+    // redirect/revisit replay: every chain is 2 hops of id arithmetic
+    // (/a/id -> /b/id -> final p/(id%20)), every 10th id adds a 2-url
+    // loop that must land unresolved at the hop cap, and each id's
+    // revisit record points at its final capture — so every count is a
+    // closed form over the id set
+    QueryDef("warc_redirects", qWarcRedirects,
+      "WITH d AS (SELECT doc_id AS id FROM documents), " +
+        "a AS (SELECT count(*)::BIGINT AS n, " +
+        "count(*) FILTER (WHERE id % 10 = 0)::BIGINT AS l, " +
+        "count(DISTINCT id % 20)::BIGINT AS df FROM d) " +
+        "SELECT (2*n + 2*l) AS n_chains, (2*n) AS n_resolved, n AS n_hop1, " +
+        "n AS n_hop2, (2*l) AS n_unresolved, (2*n) AS n_final_ok, " +
+        "df AS n_distinct_final, n AS n_revisit, n AS n_refers_ok, " +
+        "1::BIGINT AS n_profiles FROM a", Set(Scale)),
+    // the streaming twin shares the pinned contract VERBATIM: the
+    // invariants are batching-invariant by construction
+    QueryDef("stream_cdc_ingest", qStreamCdcIngest,
+      cdcIncrementalOracleSql(" WHERE doc_id % 4 = 1")),
+    // Scale: round-18 batch 6: the keep-newest dedup (one bounded struct-max
+    // aggregate per duplicate group — the dedup_keep_best class with the date
+    // ladder in front). stream_cdc_ingest excluded: the
+    // foreachBatch/parquet-sink harness class, and its operator cost is
+    // cdc_incremental's, already measured.
+    // keep-newest capture: winner ids and dates replay from the
+    // permalink-date arithmetic; ISO strings order chronologically
+    QueryDef("dated_dedup", qDatedDedup,
+      "WITH d AS (SELECT doc_id AS id, doc_id // 3 AS grp, " +
+        "(2010 + doc_id % 10) || '-' || lpad((1 + doc_id % 12)::VARCHAR, 2, '0') " +
+        "|| '-' || lpad((1 + doc_id % 28)::VARCHAR, 2, '0') AS pub_date FROM documents), " +
+        "m AS (SELECT grp, count(*)::BIGINT AS n_captures, max(pub_date) AS kept_date " +
+        "FROM d GROUP BY grp) " +
+        "SELECT m.grp, m.n_captures, m.kept_date, min(d.id)::BIGINT AS kept_id " +
+        "FROM m JOIN d ON d.grp = m.grp AND d.pub_date = m.kept_date " +
+        "GROUP BY m.grp, m.n_captures, m.kept_date", Set(Scale)),
+    // Scale: round-18 batch 8: the sixth iterative operator (HITS — 10 fixed
+    // rounds, two node-keyed join+agg exchanges per round with map-side
+    // partials; per-round cost must be linear, round count flat), and the in-row
+    // readability kernel (segmentation + token fold, no shuffle beyond the input
+    // spread).
+    // Ten HITS rounds as chained CTEs — identical integer grid, max-
+    // renormalization and floor division as [[graft.operators.Hits]];
+    // generated by a loop so iterations can't drift apart (the pagerank
+    // oracle discipline).
+    // bit-identical by construction: integer sums + max renormalization
+    QueryDef("hits_scores", qHitsScores, {
+      val head = "WITH nodes AS MATERIALIZED (SELECT doc_id AS node FROM documents), " +
+        "nn AS MATERIALIZED (SELECT count(*)::BIGINT AS n FROM documents), " +
+        "edges AS MATERIALIZED (SELECT node AS src, (node * 19 + 5) % (SELECT n FROM nn) AS dst FROM nodes " +
+        "UNION ALL SELECT node, (node * 23 + 2) % (SELECT n FROM nn) FROM nodes " +
+        "UNION ALL SELECT node, (node * 29 + 1) % (SELECT n FROM nn) FROM nodes), " +
+        "h0 AS (SELECT node, 1000000::BIGINT AS hub FROM nodes)"
+      val rounds = (1 to 10).map { i =>
+        s"ar$i AS MATERIALIZED (SELECT e.dst AS node, sum(h.hub)::BIGINT AS raw FROM edges e " +
+          s"JOIN h${i - 1} h ON e.src = h.node GROUP BY e.dst), " +
+          s"a$i AS MATERIALIZED (SELECT nodes.node, (coalesce(ar.raw, 0) * 1000000) // " +
+          s"(SELECT greatest(max(raw), 1) FROM ar$i) AS auth " +
+          s"FROM nodes LEFT JOIN ar$i ar ON nodes.node = ar.node), " +
+          s"hr$i AS MATERIALIZED (SELECT e.src AS node, sum(a.auth)::BIGINT AS raw FROM edges e " +
+          s"JOIN a$i a ON e.dst = a.node GROUP BY e.src), " +
+          s"h$i AS MATERIALIZED (SELECT nodes.node, (coalesce(hr.raw, 0) * 1000000) // " +
+          s"(SELECT greatest(max(raw), 1) FROM hr$i) AS hub " +
+          s"FROM nodes LEFT JOIN hr$i hr ON nodes.node = hr.node)"
+      }.mkString(", ", ", ", " ")
+      head + rounds +
+        "SELECT a10.node::BIGINT AS node, a10.auth::BIGINT AS auth, h10.hub::BIGINT AS hub " +
+        "FROM a10 JOIN h10 ON a10.node = h10.node ORDER BY auth DESC, a10.node LIMIT 10"
+    }, Set(Scale)),
+    // Scale: see sentence_split.
+    // pinned contract: byte totals from id arithmetic; partition/bounds/
+    // roundtrip laws zero-violation; 4 suffix families -> 4 distinct
+    // tail-chunk hashes (within-family chunking must RESYNC after the
+    // unique prefix); chunk-level dedup saves >half the corpus bytes
+    QueryDef("cdc_chunking", qCdcChunking,
+      "SELECT count(*)::BIGINT AS n_docs, " +
+        "sum(64 + (doc_id % 257) + 3 * 8192)::BIGINT AS total_bytes, " +
+        "0::BIGINT AS over_max, 0::BIGINT AS under_min_nonlast, " +
+        "0::BIGINT AS roundtrip_violations, 4::BIGINT AS n_distinct_tail_hash, " +
+        "1::BIGINT AS dedup_saved_ge_half, 1::BIGINT AS avg_size_in_range " +
+        "FROM documents", Set(Scale)))
 }

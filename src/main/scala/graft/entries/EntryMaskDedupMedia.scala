@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef.{Kdf, Scale}
 import graft.operators.MaskTransform
 
 /** Query registry: masking/stage/FPE family, dedup core, multimodal
@@ -1222,5 +1223,540 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
         "eig_dominates_axes", "proj_var_ok")
   }
 
-
+  /** The queries defined in this file, each with its DuckDB oracle. */
+  private[graft] lazy val maskDedupMediaQueries: Seq[QueryDef] = Seq(
+    QueryDef("mask_string_props", qMaskStringProps,
+      "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_len16, " +
+        "count(c_name) AS n_alpha, count(c_name) AS n_stable, count(c_name) AS n_numeric, " +
+        "count(DISTINCT c_name) AS n_distinct_in, count(DISTINCT c_name) AS n_distinct_out FROM customer", Set(Kdf)),
+    QueryDef("mask_format_props", qMaskFormatProps,
+      "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_formatted FROM customer", Set(Kdf)),
+    // Scale: round-16: FF1 format-preserving masking (per-row AES cipher work,
+    // zero shuffle beyond the final 1-row agg — scan-bound by construction); the
+    // DP count release (one counting shuffle with map-side combine + a per-row
+    // codegen'd CASE — the noise adds nothing to data movement); and the
+    // registrable-domain report (in-row codegen'd suffix walk + one domain-keyed
+    // aggregate whose output is the distinct-domain count, which the planted URL
+    // classes pin ~constant while the scan grows). image_phash_incremental /
+    // stream_sig_probe are NOT Scale-tagged: their output is image_phash_dedup's
+    // oracle-priced PAIR LIST, Θ(Σ group²) in duplicate mass by definition (the
+    // scaled corpus replants the same 385 texture classes, so pairs grow ~100×
+    // at 10× — the image_phash_report note); the store machinery's scale terms
+    // (build = one chunk-partitioned write, probe = batch-broadcast join with
+    // zero corpus shuffle) are plan-structural, asserted in PlanShapeSpec
+    // instead.
+    // FF1 FPE contract: every property holds for EVERY row (the cipher is
+    // a deterministic permutation of the 16-digit domain), so each count
+    // pins to the row count; injectivity pins distinct out == distinct in
+    QueryDef("mask_fpe_props", qMaskFpeProps,
+      "SELECT count(*) AS n, count(*) AS n_nonnull, count(*) AS n_format, " +
+        "count(*) AS n_stable, count(*) AS n_roundtrip, count(*) AS n_tweak_sep, " +
+        "count(DISTINCT c_custkey) AS n_distinct_in, count(DISTINCT c_custkey) AS n_distinct_out " +
+        "FROM customer", Set(Scale, Kdf)),
+    // Scale: see warc_charset.
+    // rank-then-encipher contract: every property holds for every row and
+    // masking is injective on the observed population (distinct-preserving)
+    QueryDef("mask_fpe_number", qMaskFpeNumber,
+      "SELECT count(*) AS n, count(*) AS n_nonnull, count(*) AS n_in_domain, " +
+        "count(*) AS n_stable, count(*) AS n_tweak_sep, count(*) AS n_roundtrip, " +
+        "count(DISTINCT round(c_acctbal * 100)) AS n_distinct_in, " +
+        "count(DISTINCT round(c_acctbal * 100)) AS n_distinct_out, " +
+        "count(*) AS n_d_in_domain, count(*) AS n_d_roundtrip FROM customer", Set(Scale, Kdf)),
+    QueryDef("mask_date_props", qMaskDateProps,
+      "SELECT count(*) AS n, count(o_orderdate) AS n_nonnull, count(o_orderdate) AS n_inbounds FROM orders", Set(Kdf)),
+    QueryDef("mask_timestamp_props", qMaskTimestampProps,
+      "SELECT count(*) AS n, count(l_shipdate) AS n_nonnull, count(l_shipdate) AS n_inbounds FROM lineitem", Set(Kdf)),
+    QueryDef("mask_decimal_props", qMaskDecimalProps,
+      "SELECT count(*) AS n, count(c_acctbal) AS n_nonnull, count(c_acctbal) AS n_inbounds FROM customer", Set(Kdf)),
+    QueryDef("mask_transform", qMaskTransform,
+      "SELECT count(*) AS n, count(c_name) AS n_name_masked, " +
+        "count(DISTINCT c_mktsegment) AS n_segments, count(c_acctbal) AS n_bal_inbounds FROM customer", Set(Kdf)),
+    QueryDef("mask_name_vocab", qMaskNameVocab,
+      "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_in_vocab, " +
+        "count(c_name) AS n_stable FROM customer", Set(Kdf)),
+    QueryDef("mask_email_vocab", qMaskEmailVocab,
+      "SELECT count(*) AS n, count(c_name) AS n_valid FROM customer", Set(Kdf)),
+    QueryDef("mask_argon2_rate", qMaskArgon2Rate,
+      "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_len16, " +
+        "count(DISTINCT c_name) AS n_distinct_out FROM customer", Set(Kdf)),
+    // Scale: see stream_join_outer.
+    QueryDef("mask_via_distinct", qMaskViaDistinct,
+      "SELECT count(*) AS n, count(c_name) AS n_nonnull, " +
+        "count(DISTINCT c_name) AS n_distinct_out FROM customer", Set(Scale, Kdf)),
+    QueryDef("stage_roundtrip", qStageRoundtrip,
+      "SELECT count(*) AS n, count(c_name) AS n_len16, count(*) AS records_detail, " +
+        "5::BIGINT AS out_cols FROM customer", Set(Kdf)),
+    QueryDef("fixture_e2e", qFixtureE2e,
+      "SELECT 100::BIGINT AS n, 95::BIGINT AS n_user_nonnull, 95::BIGINT AS n_user_len16, " +
+        "96::BIGINT AS n_birth_nonnull, 96::BIGINT AS n_birth_day1, " +
+        "100::BIGINT AS n_create_nonnull, 100::BIGINT AS n_create_min0, " +
+        "100::BIGINT AS n_create_inbounds", Set(Kdf)),
+    // the masked name stays 16 chars and non-null for every input row, and
+    // the production-gated stage must be skipped under the test environment
+    QueryDef("stage_pipeline", qStagePipeline,
+      "SELECT count(*) AS n, count(c_name) AS n_len16, sum(c_custkey)::BIGINT AS custkey_sum, " +
+        "1::BIGINT AS prod_stage_skipped FROM customer", Set(Kdf)),
+    QueryDef("stage_config_errors", qStageConfigErrors,
+      "SELECT 3::BIGINT AS n_errors_bad, 1::BIGINT AS n_unknown_bad, " +
+        "0::BIGINT AS good_failed, 1::BIGINT AS good_persist, " +
+        "0::BIGINT AS hocon_good_failed, 2::BIGINT AS hocon_n_errors_bad", Set(Kdf)),
+    QueryDef("dedup_exact", qDedupExact,
+      "SELECT count(DISTINCT text) AS n_clusters, count(*) AS n_rows FROM documents"),
+    // exact char-5-gram jaccard pairs; the LSH output is compared against the
+    // true pair set (32x4 banding => ~1e-15 miss probability at j>=0.9)
+    QueryDef("dedup_minhash", qDedupMinhash,
+      "WITH sh AS (SELECT doc_id, list_distinct([text[i:i+4] FOR i IN range(1, greatest(len(text)-3, 1))]) AS s FROM documents), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.s, b.s))::DOUBLE / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j " +
+        "FROM sh a JOIN sh b ON a.doc_id < b.doc_id) " +
+        "SELECT count(*) AS n_pairs, coalesce(sum(id_a + id_b), 0)::BIGINT AS pair_id_sum FROM p WHERE j >= 0.8", Set(Scale)),
+    QueryDef("dedup_ngram", qDedupNgram,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents), " +
+        "g AS (SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ') FOR i IN range(1, greatest(len(t)-1, 1))]) AS gr FROM toks), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.gr, b.gr))::DOUBLE / (len(a.gr) + len(b.gr) - len(list_intersect(a.gr, b.gr))) AS j " +
+        "FROM g a JOIN g b ON a.doc_id < b.doc_id) " +
+        "SELECT count(*) AS n_pairs, coalesce(sum(id_a + id_b), 0)::BIGINT AS pair_id_sum FROM p WHERE j >= 0.3"),
+    // Scale: see snapshot_diff.
+    QueryDef("dedup_ngram_hot", qDedupNgramHot,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents), " +
+        "g AS (SELECT doc_id, list_distinct([array_to_string(t[i:i+2], ' ') FOR i IN range(1, greatest(len(t)-1, 1))]) AS gr FROM toks), " +
+        "inv AS (SELECT doc_id, unnest(gr) AS gram FROM g), " +
+        "dfc AS (SELECT gram, count(*) AS df FROM inv GROUP BY gram) " +
+        "SELECT count(*)::BIGINT AS n_hot, coalesce(max(df), 0)::BIGINT AS max_df, " +
+        "coalesce(sum(df), 0)::BIGINT AS hot_gram_docs FROM dfc WHERE df > 5", Set(Scale)),
+    // Scale: see snapshot_diff.
+    // full per-document recompute: window occurrence counts -> covered
+    // token indices -> gaps-and-islands span merge -> clean-text rebuild
+    QueryDef("dedup_spans", qDedupSpans,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents WHERE text IS NOT NULL), " +
+        "wl AS (SELECT doc_id, [{'pos': i - 1, 'gram': array_to_string(t[i:i+7], ' ')} FOR i IN range(1, greatest(len(t) - 6, 1))] AS ws FROM toks), " +
+        "w AS (SELECT doc_id, u.pos AS pos, u.gram AS gram FROM wl, unnest(ws) AS s(u)), " +
+        "occ AS (SELECT gram FROM w GROUP BY gram HAVING count(*) > 1), " +
+        "d AS (SELECT w.doc_id, w.pos FROM w JOIN occ USING (gram)), " +
+        "cov AS (SELECT DISTINCT doc_id, pos + j AS idx FROM d, range(0, 8) r(j)), " +
+        "isl AS (SELECT doc_id, idx, idx - row_number() OVER (PARTITION BY doc_id ORDER BY idx) AS grp FROM cov), " +
+        "stats AS (SELECT doc_id, count(DISTINCT grp)::BIGINT AS n_spans, count(*)::BIGINT AS tokens_removed FROM isl GROUP BY doc_id), " +
+        "tp AS (SELECT doc_id, u.i AS i, u.tok AS tok FROM (SELECT doc_id, [{'i': i - 1, 'tok': t[i]} FOR i IN range(1, len(t) + 1)] AS pairs FROM toks), unnest(pairs) AS s(u)), " +
+        "kept AS (SELECT tp.doc_id, string_agg(tp.tok, ' ' ORDER BY tp.i) AS clean_text " +
+        "FROM tp LEFT JOIN cov ON tp.doc_id = cov.doc_id AND tp.i = cov.idx " +
+        "WHERE cov.idx IS NULL GROUP BY tp.doc_id) " +
+        "SELECT t.doc_id, len(t.t)::BIGINT AS n_tokens, coalesce(s.n_spans, 0)::BIGINT AS n_spans, " +
+        "coalesce(s.tokens_removed, 0)::BIGINT AS tokens_removed, coalesce(k.clean_text, '') AS clean_text " +
+        "FROM toks t LEFT JOIN stats s USING (doc_id) LEFT JOIN kept k USING (doc_id)", Set(Scale)),
+    // Scale: see snapshot_diff.
+    // exhaustive length-windowed levenshtein sweep as ground truth for the
+    // prefix-filtered similarity join
+    QueryDef("edit_pairs", qEditPairs,
+      "WITH u AS (SELECT doc_id, text FROM documents UNION ALL " +
+        "SELECT doc_id + 1000000000000, concat(substr(text, 1, 5), '#', substr(text, 7)) " +
+        "FROM documents WHERE doc_id % 10 = 0), " +
+        "p AS (SELECT a.doc_id AS ia, b.doc_id AS ib, levenshtein(a.text, b.text) AS dist " +
+        "FROM u a JOIN u b ON a.doc_id < b.doc_id " +
+        "AND abs(length(a.text) - length(b.text)) <= 2) " +
+        "SELECT count(*)::BIGINT AS n_pairs, coalesce(sum(ia + ib), 0)::BIGINT AS pair_id_sum, " +
+        "coalesce(sum(dist), 0)::BIGINT AS dist_sum FROM p WHERE dist <= 2", Set(Scale)),
+    // Scale: round-9 additions (documents-table operators).
+    // ground truth by direct null-safe value comparison (vs the operator's
+    // fingerprint-only comparison)
+    QueryDef("snapshot_diff", qSnapshotDiff,
+      "WITH v1 AS (SELECT doc_id, text, lang FROM documents WHERE doc_id % 11 != 3), " +
+        "v2 AS (SELECT doc_id, CASE WHEN doc_id % 17 = 2 THEN text || ' v2' ELSE text END AS text, " +
+        "CASE WHEN doc_id % 19 = 7 THEN NULL ELSE lang END AS lang FROM documents WHERE doc_id % 13 != 5), " +
+        "d AS (SELECT coalesce(a.doc_id, b.doc_id) AS doc_id, " +
+        "CASE WHEN a.doc_id IS NULL THEN 'added' WHEN b.doc_id IS NULL THEN 'removed' " +
+        "WHEN a.text IS NOT DISTINCT FROM b.text AND a.lang IS NOT DISTINCT FROM b.lang " +
+        "THEN 'unchanged' ELSE 'changed' END AS status " +
+        "FROM v1 a FULL JOIN v2 b ON a.doc_id = b.doc_id) " +
+        "SELECT status, count(*)::BIGINT AS n, sum(doc_id)::BIGINT AS id_sum " +
+        "FROM d WHERE status <> 'unchanged' GROUP BY status", Set(Scale)),
+    // Scale: see snapshot_diff.
+    // provenance split from the diff + scores from a fresh score(v2):
+    // the incremental result must be indistinguishable from full recompute
+    QueryDef("incremental_score", qIncrementalScore,
+      "WITH v1 AS (SELECT doc_id, text, lang FROM documents WHERE doc_id % 11 != 3), " +
+        "v2 AS (SELECT doc_id, CASE WHEN doc_id % 17 = 2 THEN text || ' v2' ELSE text END AS text, " +
+        "CASE WHEN doc_id % 19 = 7 THEN NULL ELSE lang END AS lang FROM documents WHERE doc_id % 13 != 5), " +
+        "d AS (SELECT coalesce(a.doc_id, b.doc_id) AS doc_id, " +
+        "CASE WHEN a.doc_id IS NULL THEN 'added' WHEN b.doc_id IS NULL THEN 'removed' " +
+        "WHEN a.text IS NOT DISTINCT FROM b.text AND a.lang IS NOT DISTINCT FROM b.lang " +
+        "THEN 'unchanged' ELSE 'changed' END AS status " +
+        "FROM v1 a FULL JOIN v2 b ON a.doc_id = b.doc_id), " +
+        "s AS (SELECT d.doc_id, CASE WHEN d.status = 'unchanged' THEN 'carried' ELSE 'recomputed' END AS provenance, " +
+        "b.text FROM d JOIN v2 b ON d.doc_id = b.doc_id WHERE d.status <> 'removed') " +
+        "SELECT provenance, count(*)::BIGINT AS n, sum(length(text))::BIGINT AS chars_sum, " +
+        "sum(len(string_split_regex(lower(trim(text)), '\\s+')))::BIGINT AS tokens_sum, " +
+        "sum(doc_id)::BIGINT AS id_sum FROM s GROUP BY provenance", Set(Scale)),
+    // Scale: see snapshot_diff.
+    // identical integer idf ((1000*N) // df), identical whitespace
+    // tokenization, identical (score desc, token asc) tie-break
+    QueryDef("keyword_tfidf", qKeywordTfidf,
+      "WITH d AS (SELECT doc_id, text FROM documents WHERE text IS NOT NULL), " +
+        "t AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok FROM d), " +
+        "tf AS (SELECT doc_id, tok, count(*)::BIGINT AS tf FROM t WHERE tok <> '' GROUP BY doc_id, tok), " +
+        "dfr AS (SELECT tok, count(*)::BIGINT AS df FROM tf GROUP BY tok), " +
+        "n AS (SELECT count(*)::BIGINT AS n_docs FROM d), " +
+        "s AS (SELECT tf.doc_id, tf.tok, tf.tf, dfr.df, " +
+        "tf.tf * ((1000 * n.n_docs) // dfr.df) AS score " +
+        "FROM tf JOIN dfr USING (tok) CROSS JOIN n), " +
+        "r AS (SELECT s.*, row_number() OVER (PARTITION BY doc_id ORDER BY score DESC, tok) AS rnk FROM s) " +
+        "SELECT doc_id, rnk::BIGINT AS rnk, tok, tf, df, score FROM r WHERE rnk <= 3", Set(Scale)),
+    // the identical strip chain (RE2-safe patterns, same entity order,
+    // &amp; last) replayed over the same synthetic HTML shell
+    QueryDef("text_strip_html", qTextStripHtml,
+      "WITH h AS (SELECT doc_id, " +
+        "'<html><head><style type=\"text/css\">p { color: red; }</style>" +
+        "<script>var x = 1 < 2;</script></head><body><!-- id: ' || doc_id::VARCHAR || " +
+        "' --><h1>Doc &amp; &quot;friends&quot;</h1><p>' || text || " +
+        "'</p><p>tail &lt;x&gt; &nbsp;end</p></body></html>' AS html FROM documents), " +
+        "s AS (SELECT doc_id, trim(regexp_replace(" +
+        "replace(replace(replace(replace(replace(replace(" +
+        "regexp_replace(regexp_replace(regexp_replace(regexp_replace(html, " +
+        "'(?is)<script[^>]*>.*?</script>', ' ', 'g'), " +
+        "'(?is)<style[^>]*>.*?</style>', ' ', 'g'), " +
+        "'(?s)<!--.*?-->', ' ', 'g'), " +
+        "'<[^>]+>', ' ', 'g'), " +
+        "'&lt;', '<'), '&gt;', '>'), '&quot;', '\"'), '&#39;', ''''), " +
+        "'&nbsp;', ' '), '&amp;', '&'), " +
+        "'\\s+', ' ', 'g')) AS clean FROM h) " +
+        "SELECT doc_id, clean, length(clean)::BIGINT AS n_chars FROM s"),
+    // Scale: see snapshot_diff.
+    // the same three synthetic annotators, reconciled with window SQL:
+    // same majority, same lexicographic tie-break, same integer agreement
+    QueryDef("label_vote", qLabelVote,
+      "WITH v AS (" +
+        "SELECT doc_id, lang AS label FROM documents " +
+        "UNION ALL SELECT doc_id, CASE WHEN doc_id % 7 = 0 THEN 'xx' ELSE lang END FROM documents " +
+        "UNION ALL SELECT doc_id, CASE WHEN doc_id % 21 = 0 THEN 'xx' " +
+        "WHEN doc_id % 13 = 0 THEN 'yy' ELSE lang END FROM documents), " +
+        "c AS (SELECT doc_id, label, count(*)::BIGINT AS n FROM v GROUP BY doc_id, label), " +
+        "t AS (SELECT *, max(n) OVER (PARTITION BY doc_id) AS top_n FROM c) " +
+        "SELECT doc_id, min(CASE WHEN n = top_n THEN label END) AS label, " +
+        "sum(n)::BIGINT AS n_votes, count(*)::BIGINT AS n_labels, " +
+        "max(top_n)::BIGINT AS top_n, " +
+        "sum(CASE WHEN n = top_n THEN 1 ELSE 0 END)::BIGINT AS n_top, " +
+        "((max(top_n) * 10000) // sum(n))::BIGINT AS agreement_x1e4 " +
+        "FROM t GROUP BY doc_id", Set(Scale)),
+    // Scale: see events_funnel.
+    // identical lag window (ts micros, event_id tie-break) and integer
+    // per-origin share
+    QueryDef("event_transitions", qEventTransitions,
+      "WITH o AS (SELECT user_id, epoch_us(ts) AS ts_us, event_id, event_type, " +
+        "lead(event_type) OVER (PARTITION BY user_id ORDER BY epoch_us(ts), event_id) AS next_type " +
+        "FROM events), " +
+        "p AS (SELECT event_type AS prev_type, next_type, count(*)::BIGINT AS n " +
+        "FROM o WHERE next_type IS NOT NULL GROUP BY 1, 2) " +
+        "SELECT prev_type, next_type, n, " +
+        "((n * 10000) // (sum(n) OVER (PARTITION BY prev_type)))::BIGINT AS share_x1e4 FROM p", Set(Scale)),
+    // exact per-group counts + the pinned all-pass contract verdict
+    // (values themselves are sketch-dependent; the contract is not)
+    QueryDef("group_percentiles", qGroupPercentiles,
+      "WITH g AS (SELECT source, count(*)::BIGINT AS n FROM documents GROUP BY source) " +
+        "SELECT g.source, t.q::BIGINT AS q, g.n, 1::BIGINT AS ok, 1::BIGINT AS ok_member " +
+        "FROM g CROSS JOIN (SELECT unnest([25, 50, 95]) AS q) t"),
+    // same fixture, per-annotator view: agreement with the reconciled
+    // majority, ties excluded on both sides
+    QueryDef("annotator_report", qAnnotatorReport,
+      "WITH v AS (" +
+        "SELECT doc_id, 0::BIGINT AS annotator, lang AS label FROM documents " +
+        "UNION ALL SELECT doc_id, 1, CASE WHEN doc_id % 7 = 0 THEN 'xx' ELSE lang END FROM documents " +
+        "UNION ALL SELECT doc_id, 2, CASE WHEN doc_id % 21 = 0 THEN 'xx' " +
+        "WHEN doc_id % 13 = 0 THEN 'yy' ELSE lang END FROM documents), " +
+        "c AS (SELECT doc_id, label, count(*)::BIGINT AS n FROM v GROUP BY doc_id, label), " +
+        "t AS (SELECT *, max(n) OVER (PARTITION BY doc_id) AS top_n FROM c), " +
+        "m AS (SELECT doc_id, min(CASE WHEN n = top_n THEN label END) AS maj, " +
+        "sum(CASE WHEN n = top_n THEN 1 ELSE 0 END) AS n_top FROM t GROUP BY doc_id), " +
+        "j AS (SELECT v.annotator, CASE WHEN v.label IS NOT DISTINCT FROM m.maj THEN 1 ELSE 0 END AS hit " +
+        "FROM v JOIN m ON v.doc_id = m.doc_id WHERE m.n_top = 1) " +
+        "SELECT annotator, count(*)::BIGINT AS n_votes, sum(hit)::BIGINT AS n_majority, " +
+        "((sum(hit) * 10000) // count(*))::BIGINT AS majority_x1e4 FROM j GROUP BY annotator"),
+    // Scale: see snapshot_diff.
+    // SCD2 merge recomputed with direct IS DISTINCT FROM logic: close the
+    // open row of every key whose incoming image differs, insert the new
+    // image, pass history and no-ops through verbatim
+    QueryDef("scd2_merge", qScd2Merge,
+      "WITH dim AS (" +
+        "SELECT doc_id, 'old ' || text AS text, lang, 0::BIGINT AS valid_from, 100::BIGINT AS valid_to " +
+        "FROM documents WHERE doc_id % 5 = 0 " +
+        "UNION ALL " +
+        "SELECT doc_id, text, lang, (CASE WHEN doc_id % 5 = 0 THEN 100 ELSE 0 END)::BIGINT, NULL::BIGINT " +
+        "FROM documents), " +
+        "ch AS (" +
+        "SELECT doc_id, CASE WHEN doc_id % 3 = 0 THEN text ELSE text || ' r2' END AS text, " +
+        "CASE WHEN doc_id % 11 = 0 THEN NULL ELSE lang END AS lang " +
+        "FROM documents WHERE doc_id % 7 = 0 " +
+        "UNION ALL " +
+        "SELECT doc_id + 5000000000000, text, lang FROM documents WHERE doc_id % 50 = 0), " +
+        "cur AS (SELECT * FROM dim WHERE valid_to IS NULL), " +
+        "amended AS (" +
+        "SELECT d.doc_id, d.text, d.lang, d.valid_from, " +
+        "CASE WHEN d.valid_to IS NULL AND c.doc_id IS NOT NULL " +
+        "AND (d.text IS DISTINCT FROM c.text OR d.lang IS DISTINCT FROM c.lang) " +
+        "THEN 200 ELSE d.valid_to END AS valid_to " +
+        "FROM dim d LEFT JOIN ch c ON d.doc_id = c.doc_id AND d.valid_to IS NULL), " +
+        "ins AS (" +
+        "SELECT c.doc_id, c.text, c.lang, 200::BIGINT AS valid_from, NULL::BIGINT AS valid_to " +
+        "FROM ch c LEFT JOIN cur ON c.doc_id = cur.doc_id " +
+        "WHERE cur.doc_id IS NULL OR c.text IS DISTINCT FROM cur.text OR c.lang IS DISTINCT FROM cur.lang), " +
+        "m AS (SELECT * FROM amended UNION ALL SELECT * FROM ins) " +
+        "SELECT valid_from, coalesce(valid_to, -1)::BIGINT AS valid_to_n, " +
+        "count(*)::BIGINT AS n, sum(doc_id)::BIGINT AS id_sum, " +
+        "sum(length(text))::BIGINT AS len_sum, " +
+        "sum(CASE WHEN lang IS NULL THEN 1 ELSE 0 END)::BIGINT AS null_langs " +
+        "FROM m GROUP BY 1, 2", Set(Scale)),
+    // Scale: see snapshot_diff.
+    // identical rank recompute: Knuth hash order inside each stratum
+    QueryDef("sample_fixed_k", qSampleFixedK,
+      "WITH h AS (SELECT doc_id, source, (doc_id * 2654435761) % 4294967296 AS h FROM documents), " +
+        "r AS (SELECT doc_id, source, row_number() OVER (PARTITION BY source ORDER BY h, doc_id) AS rn FROM h) " +
+        "SELECT source, count(*)::BIGINT AS n, sum(doc_id)::BIGINT AS id_sum " +
+        "FROM r WHERE rn <= 7 GROUP BY source", Set(Scale)),
+    // Scale: see snapshot_diff.
+    // replan the identical bucket layout: integer exclusive-cumsum in
+    // hash order, integer division by the target size
+    QueryDef("compaction_plan", qCompactionPlan,
+      "WITH h AS (SELECT source, doc_id, n_chars, (doc_id * 2654435761) % 4294967296 AS h FROM documents), " +
+        "c AS (SELECT source, doc_id, n_chars, " +
+        "sum(n_chars) OVER (PARTITION BY source ORDER BY h, doc_id ROWS UNBOUNDED PRECEDING) - n_chars AS excl FROM h), " +
+        "b AS (SELECT source, doc_id, n_chars, excl // 3000 AS bucket FROM c), " +
+        "g AS (SELECT source, bucket, count(*)::BIGINT AS n_rows, sum(n_chars)::BIGINT AS bucket_size FROM b GROUP BY source, bucket) " +
+        "SELECT source, count(*)::BIGINT AS n_buckets, sum(n_rows)::BIGINT AS n_rows, " +
+        "sum(bucket_size)::BIGINT AS chars_sum, max(bucket)::BIGINT AS max_bucket, " +
+        "sum(bucket * n_rows)::BIGINT AS bucket_weight FROM g GROUP BY source", Set(Scale)),
+    // Scale: round-10: the iterative operator — per-round driver synchronization
+    // is exactly where super-linear cost would hide (rounds must stay flat,
+    // per-round cost linear); graft.fixpoint round logs are enabled below.
+    QueryDef("dedup_components", qDedupComponents,
+      "WITH sh AS (SELECT doc_id, list_distinct([text[i:i+4] FOR i IN range(1, greatest(len(text)-3, 1))]) AS s FROM documents), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.s, b.s))::DOUBLE / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j " +
+        "FROM sh a JOIN sh b ON a.doc_id < b.doc_id), " +
+        "e AS (SELECT id_a AS a, id_b AS b FROM p WHERE j >= 0.8 UNION SELECT id_b, id_a FROM p WHERE j >= 0.8), " +
+        "reach AS (WITH RECURSIVE r(a, b) AS (SELECT a, b FROM e " +
+        "UNION SELECT r.a, e.b FROM r JOIN e ON r.b = e.a WHERE r.a <> e.b) SELECT * FROM r), " +
+        "comp AS (SELECT a AS doc_id, least(a, min(b)) AS component FROM reach GROUP BY a) " +
+        "SELECT count(DISTINCT component) AS n_components, count(*) AS n_clustered_docs, " +
+        "sum(DISTINCT component)::BIGINT AS rep_id_sum FROM comp", Set(Scale)),
+    // Scale: see hll_group_distinct.
+    // identical labels by contract (validate only adds checks) — same oracle
+    QueryDef("cc_chain_star_novalidate", qCcChainStarNoValidate, ccChainStarOracleSql, Set(Scale)),
+    // Scale: round-15 batch 3: incremental CC — the day-0 contraction carries
+    // the corpus-linear term; the merge itself is batch-shaped (supernode graph
+    // ≤ 2·|batch| nodes, label store rewritten through a broadcast remap, never
+    // shuffled).
+    // shared verbatim: the incremental merge must equal the full recompute
+    QueryDef("cc_incremental", qCcIncremental, ccChainStarOracleSql, Set(Scale)),
+    // Scale: see dedup_components.
+    QueryDef("dedup_drop", qDedupDrop,
+      "WITH sh AS (SELECT doc_id, list_distinct([text[i:i+4] FOR i IN range(1, greatest(len(text)-3, 1))]) AS s FROM documents), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.s, b.s))::DOUBLE / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j " +
+        "FROM sh a JOIN sh b ON a.doc_id < b.doc_id), " +
+        "e AS (SELECT id_a AS a, id_b AS b FROM p WHERE j >= 0.8 UNION SELECT id_b, id_a FROM p WHERE j >= 0.8), " +
+        "reach AS (WITH RECURSIVE r(a, b) AS (SELECT a, b FROM e " +
+        "UNION SELECT r.a, e.b FROM r JOIN e ON r.b = e.a WHERE r.a <> e.b) SELECT * FROM r), " +
+        "comp AS (SELECT a AS doc_id, least(a, min(b)) AS component FROM reach GROUP BY a) " +
+        "SELECT (SELECT count(*) FROM documents) - (SELECT count(*) FROM comp WHERE doc_id <> component) AS n_kept, " +
+        "((SELECT sum(doc_id) FROM documents) - (SELECT coalesce(sum(doc_id), 0) FROM comp WHERE doc_id <> component))::BIGINT AS kept_id_sum", Set(Scale)),
+    // golden at the gate SF (deterministic: fixed MurmurHash3 seeds over
+    // fixed data); recall/hamming flags are structural constants
+    QueryDef("dedup_simhash", qDedupSimhash,
+      "SELECT 20::BIGINT AS n_pairs, 1::BIGINT AS hamming_bound_ok, 1::BIGINT AS recall_ge_95"),
+    // the store cycle is invisible to the result: image_phash_dedup's
+    // full pixel->bits->pairs replay VERBATIM
+    QueryDef("image_phash_incremental", qImagePhashIncremental,
+      "WITH ids AS (SELECT doc_id AS id, doc_id // 2 AS k FROM documents), " +
+        "px AS (SELECT id, x, y, " +
+        "(x*x*(1 + k % 5) + y*y*(2 + k % 7) + x*y*(k % 11)) % 256 AS v " +
+        "FROM ids, (SELECT unnest(range(0, 18)) AS x), (SELECT unnest(range(0, 16)) AS y)), " +
+        "cells AS (SELECT id, y // 2 AS gy, x // 2 AS gx, sum(v) // 4 AS cell " +
+        "FROM px GROUP BY id, y // 2, x // 2), " +
+        "bits AS (SELECT a.id, a.gy, a.gx, CASE WHEN b.cell > a.cell THEN 1 ELSE 0 END AS bit " +
+        "FROM cells a JOIN cells b ON b.id = a.id AND b.gy = a.gy AND b.gx = a.gx + 1 " +
+        "WHERE a.gx < 8), " +
+        "sigs AS (SELECT id, list(bit ORDER BY gy * 8 + gx) AS bl FROM bits GROUP BY id), " +
+        "pairs AS (SELECT s1.id AS id_a, s2.id AS id_b, " +
+        "list_sum(list_transform(range(1, 65), i -> CASE WHEN s1.bl[i] <> s2.bl[i] THEN 1 ELSE 0 END))::BIGINT AS hamming " +
+        "FROM sigs s1 JOIN sigs s2 ON s1.id < s2.id) " +
+        "SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b"),
+    // streaming the probe must not change one pair: the cross-parity
+    // (day-0 x day-1) subset of the same replay
+    QueryDef("stream_sig_probe", qStreamSigProbe,
+      "WITH ids AS (SELECT doc_id AS id, doc_id // 2 AS k FROM documents), " +
+        "px AS (SELECT id, x, y, " +
+        "(x*x*(1 + k % 5) + y*y*(2 + k % 7) + x*y*(k % 11)) % 256 AS v " +
+        "FROM ids, (SELECT unnest(range(0, 18)) AS x), (SELECT unnest(range(0, 16)) AS y)), " +
+        "cells AS (SELECT id, y // 2 AS gy, x // 2 AS gx, sum(v) // 4 AS cell " +
+        "FROM px GROUP BY id, y // 2, x // 2), " +
+        "bits AS (SELECT a.id, a.gy, a.gx, CASE WHEN b.cell > a.cell THEN 1 ELSE 0 END AS bit " +
+        "FROM cells a JOIN cells b ON b.id = a.id AND b.gy = a.gy AND b.gx = a.gx + 1 " +
+        "WHERE a.gx < 8), " +
+        "sigs AS (SELECT id, list(bit ORDER BY gy * 8 + gx) AS bl FROM bits GROUP BY id), " +
+        "pairs AS (SELECT s1.id AS id_a, s2.id AS id_b, " +
+        "list_sum(list_transform(range(1, 65), i -> CASE WHEN s1.bl[i] <> s2.bl[i] THEN 1 ELSE 0 END))::BIGINT AS hamming " +
+        "FROM sigs s1 JOIN sigs s2 ON s1.id < s2.id) " +
+        "SELECT id_a, id_b, hamming FROM pairs " +
+        "WHERE hamming <= 3 AND (id_a % 2) <> (id_b % 2) ORDER BY id_a, id_b"),
+    // JPEG codec contract: decode fidelity + perceptual invariance hold
+    // for every row (the 385-class texture universe is exhaustively
+    // bound-checked in JpegSpec, so the pins are SF-independent)
+    QueryDef("jpeg_phash_props", qJpegPhashProps,
+      "SELECT count(*) AS n, count(*) AS n_decoded, count(*) AS n_dims_ok, " +
+        "count(*) AS n_close FROM documents"),
+    // full replay of the envelope-hash chain from the sample formula:
+    // |sample| window energies (650 frames / 65 windows of 10), adjacent-
+    // window comparison bits, all-pairs hamming <= 3 — through the
+    // engine's real WAV encode/decode round-trip
+    QueryDef("audio_fingerprint_dedup", qAudioFingerprintDedup,
+      "WITH ids AS (SELECT doc_id AS id, doc_id // 2 AS k FROM documents), " +
+        "sm AS (SELECT id, t, abs((t*t*(1 + k % 7) + t*(k % 13)) % 2001 - 1000) AS av " +
+        "FROM ids, (SELECT unnest(range(0, 650)) AS t)), " +
+        "en AS (SELECT id, t // 10 AS w, sum(av)::BIGINT AS e FROM sm GROUP BY id, t // 10), " +
+        "bits AS (SELECT a.id, a.w, CASE WHEN b.e > a.e THEN 1 ELSE 0 END AS bit " +
+        "FROM en a JOIN en b ON b.id = a.id AND b.w = a.w + 1 WHERE a.w < 64), " +
+        "sigs AS (SELECT id, list(bit ORDER BY w) AS bl FROM bits GROUP BY id), " +
+        "pairs AS (SELECT s1.id AS id_a, s2.id AS id_b, " +
+        "list_sum(list_transform(range(1, 65), i -> CASE WHEN s1.bl[i] <> s2.bl[i] THEN 1 ELSE 0 END))::BIGINT AS hamming " +
+        "FROM sigs s1 JOIN sigs s2 ON s1.id < s2.id) " +
+        "SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b"),
+    // Scale: see bm25_store_probe.
+    // the production twin replayed from the same pixel formula: identical
+    // signatures group identically, so the report is a pure function of
+    // the planted textures
+    QueryDef("image_phash_report", qImagePhashReport,
+      "WITH ids AS (SELECT doc_id AS id, doc_id // 2 AS k FROM documents), " +
+        "px AS (SELECT id, x, y, " +
+        "(x*x*(1 + k % 5) + y*y*(2 + k % 7) + x*y*(k % 11)) % 256 AS v " +
+        "FROM ids, (SELECT unnest(range(0, 18)) AS x), (SELECT unnest(range(0, 16)) AS y)), " +
+        "cells AS (SELECT id, y // 2 AS gy, x // 2 AS gx, sum(v) // 4 AS cell " +
+        "FROM px GROUP BY id, y // 2, x // 2), " +
+        "bits AS (SELECT a.id, a.gy, a.gx, CASE WHEN b.cell > a.cell THEN 1 ELSE 0 END AS bit " +
+        "FROM cells a JOIN cells b ON b.id = a.id AND b.gy = a.gy AND b.gx = a.gx + 1 " +
+        "WHERE a.gx < 8), " +
+        "sigs AS (SELECT id, list(bit ORDER BY gy * 8 + gx) AS bl FROM bits GROUP BY id), " +
+        "g AS (SELECT bl, count(*)::BIGINT AS sz, min(id) AS rep FROM sigs GROUP BY bl) " +
+        "SELECT sum(sz)::BIGINT AS n_images, count(*)::BIGINT AS n_distinct_hashes, " +
+        "count(CASE WHEN sz > 1 THEN 1 END)::BIGINT AS n_dup_groups, " +
+        "sum(CASE WHEN sz > 1 THEN sz - 1 ELSE 0 END)::BIGINT AS n_redundant, " +
+        "max(sz)::BIGINT AS max_group, sum(rep % 1000003)::BIGINT AS rep_checksum FROM g", Set(Scale)),
+    // full replay of the clip-fingerprint chain from the frame-byte
+    // formula: per-frame byte mass, 65 windows of 2 frames, adjacent-
+    // window comparison bits, all-pairs hamming <= 3 — through the
+    // engine's real AVI encode/decode round-trip
+    QueryDef("video_fingerprint_dedup", qVideoFingerprintDedup,
+      "WITH ids AS (SELECT doc_id AS id, doc_id // 2 AS k FROM documents), " +
+        "fb AS (SELECT id, f, (j*(1 + k % 5) + f*f*(2 + k % 7) + f*(k % 11)) % 256 AS v " +
+        "FROM ids, (SELECT unnest(range(0, 130)) AS f), (SELECT unnest(range(0, 32)) AS j)), " +
+        "en AS (SELECT id, f // 2 AS w, sum(v)::BIGINT AS e FROM fb GROUP BY id, f // 2), " +
+        "bits AS (SELECT a.id, a.w, CASE WHEN b.e > a.e THEN 1 ELSE 0 END AS bit " +
+        "FROM en a JOIN en b ON b.id = a.id AND b.w = a.w + 1 WHERE a.w < 64), " +
+        "sigs AS (SELECT id, list(bit ORDER BY w) AS bl FROM bits GROUP BY id), " +
+        "pairs AS (SELECT s1.id AS id_a, s2.id AS id_b, " +
+        "list_sum(list_transform(range(1, 65), i -> CASE WHEN s1.bl[i] <> s2.bl[i] THEN 1 ELSE 0 END))::BIGINT AS hamming " +
+        "FROM sigs s1 JOIN sigs s2 ON s1.id < s2.id) " +
+        "SELECT id_a, id_b, hamming FROM pairs WHERE hamming <= 3 ORDER BY id_a, id_b"),
+    QueryDef("embed_pairs_exact", qEmbedPairsExact,
+      "SELECT count(*) AS n_pairs, coalesce(sum(id_a + id_b), 0)::BIGINT AS pair_id_sum FROM (" +
+        "SELECT a.vec_id AS id_a, b.vec_id AS id_b, list_cosine_similarity(a.embedding, b.embedding) AS c " +
+        "FROM embeddings a JOIN embeddings b ON a.vec_id < b.vec_id) WHERE c >= 0.48"),
+    // Scale: embedding operators: the scaled table applies a per-copy diagonal
+    // +-1 sign flip (an orthogonal transform - within-copy cosines are preserved
+    // EXACTLY, cross-copy cosines decorrelate), so LSH bucket geometry sees 10x
+    // more of the same distribution.
+    // planted-cluster ground truth: 8 clusters x C(6,2) in-cluster pairs
+    QueryDef("embed_pairs_lsh", qEmbedPairsLsh,
+      "SELECT 120::BIGINT AS n_pairs, 120::BIGINT AS n_in_cluster, 0::BIGINT AS n_cross_cluster", Set(Scale)),
+    // Scale: see embed_pairs_lsh.
+    // exact-arithmetic recompute of the int8 quantization (same double
+    // widen/divide/floor-half-up), so q_sum pins every quantized element
+    QueryDef("embed_quantize", qEmbedQuantize,
+      "WITH v AS (SELECT vec_id, list_transform(embedding, x -> x::DOUBLE) AS e FROM embeddings), " +
+        "s AS (SELECT vec_id, e, list_max(list_transform(e, x -> abs(x))) / 127.0 AS scale FROM v), " +
+        "q AS (SELECT vec_id, e, scale, " +
+        "CASE WHEN scale <= 0 THEN list_transform(e, x -> 0::BIGINT) " +
+        "ELSE list_transform(e, x -> greatest(least(floor(x / scale + 0.5)::BIGINT, 127), -127)) END AS qs FROM s), " +
+        "m AS (SELECT vec_id, scale, qs, list_sum(qs)::BIGINT AS qsum, " +
+        "list_max(list_transform(range(1, len(e) + 1), i -> abs(qs[i] * scale - e[i]))) AS maxerr, " +
+        "len(list_filter(qs, x -> abs(x) = 127)) AS nsat FROM q) " +
+        "SELECT count(*)::BIGINT AS n, sum(qsum)::BIGINT AS q_sum, " +
+        "count(CASE WHEN maxerr <= scale / 2.0 THEN 1 END)::BIGINT AS n_err_in_bound, " +
+        "sum(nsat)::BIGINT AS n_saturated FROM m", Set(Scale)),
+    // Scale: see kcore_peel.
+    // same 1e6-grid quantize, same middle-hash-bit sign matrix, exact sums
+    QueryDef("embed_project", qEmbedProject,
+      "WITH qz AS (SELECT vec_id, unnest(range(0, len(embedding))) AS i, " +
+        "unnest(list_transform(embedding, e -> round(e::DOUBLE * 1000000)::BIGINT)) AS q FROM embeddings), " +
+        "js AS (SELECT unnest(range(0, 8)) AS j), " +
+        "s AS (SELECT qz.vec_id, js.j, sum(qz.q * (CASE WHEN ((qz.i * 2654435761 + js.j * 40503) // 65536) % 2 = 0 THEN 1 ELSE -1 END))::BIGINT AS y " +
+        "FROM qz CROSS JOIN js GROUP BY qz.vec_id, js.j) " +
+        "SELECT vec_id::BIGINT AS vec_id, (j + 1)::BIGINT AS pos, y FROM s ORDER BY vec_id, pos", Set(Scale)),
+    // Scale: see knn_incremental.
+    // Whitening contract: moment state replayed exactly; unit variance and
+    // decorrelation pinned at 1 (they hold only if moments, eigensolve,
+    // whitening scale, and projection all agree — the Spark side computes
+    // them honestly from the in-plan integer projections).
+    QueryDef("pca_whiten", qPcaWhiten,
+      pcaMomentsCte +
+        "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 8::BIGINT AS k_kept, " +
+        "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
+        "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum, " +
+        "1::BIGINT AS unit_var_ok, 1::BIGINT AS decorrelated_ok", Set(Scale)),
+    // Scale: see knn_incremental.
+    // Per-group moments replayed with the label riding every CTE key;
+    // eigensolver contract booleans pinned per group.
+    QueryDef("pca_by_group", qPcaByGroup,
+      "WITH v AS (SELECT label, list_transform(embedding, x -> round(x::DOUBLE * 1000)::BIGINT) AS q " +
+        "FROM embeddings WHERE label IS NOT NULL AND embedding IS NOT NULL AND len(embedding) >= 64 " +
+        "AND len(list_filter(embedding, x -> x IS NULL)) = 0), " +
+        "ij AS (SELECT a.i AS i, b.j AS j FROM (SELECT unnest(range(0, 64)) AS i) a, " +
+        "(SELECT unnest(range(0, 64)) AS j) b WHERE b.j >= a.i), " +
+        "g AS (SELECT label, i, j, sum(q[i + 1] * q[j + 1])::BIGINT AS gij FROM v, ij " +
+        "GROUP BY label, i, j), " +
+        "s AS (SELECT label, a.i AS i, sum(q[a.i + 1])::BIGINT AS si FROM v, " +
+        "(SELECT unnest(range(0, 64)) AS i) a GROUP BY label, a.i), " +
+        "n AS (SELECT label, count(*)::BIGINT AS n FROM v GROUP BY label), " +
+        "gc AS (SELECT label, sum(CASE WHEN i = j THEN gij ELSE 0 END)::BIGINT AS trace_q, " +
+        "(sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007)::BIGINT AS gram_checksum " +
+        "FROM g GROUP BY label), " +
+        "sc AS (SELECT label, (sum((i + 1) * (si % 1000003)) % 1000000007)::BIGINT AS sums_checksum " +
+        "FROM s GROUP BY label) " +
+        "SELECT n.label::BIGINT AS label, n.n, gc.trace_q, sc.sums_checksum, gc.gram_checksum, " +
+        "1::BIGINT AS eig_trace_ok, 1::BIGINT AS eig_dominates_axes " +
+        "FROM n JOIN gc USING (label) JOIN sc USING (label) ORDER BY label", Set(Scale)),
+    // Scale: see knn_incremental.
+    // Shard-built + stored + merged gram state == the single-pass state:
+    // the oracle replays the whole-corpus moments and pins n_mismatch = 0
+    // (any drifted element fails the compare Spark-side).
+    QueryDef("gram_store_merge", qGramStoreMerge,
+      pcaMomentsCte +
+        "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 2145::BIGINT AS state_len, " +
+        "0::BIGINT AS n_mismatch, " +
+        "(SELECT sum(CASE WHEN i = j THEN gij ELSE 0 END) FROM g)::BIGINT AS trace_q, " +
+        "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
+        "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum", Set(Scale)),
+    // Scale: see unigram_train.
+    // Drift-report oracle: shard sizes and exact integer traces replayed
+    // from the same planted generator arithmetic; the two angle verdicts
+    // pinned as contract booleans (measured cosines 0.99999995 aligned /
+    // 0.0126 rotated vs the 0.98 / 0.3 bars — ~50× margin each side).
+    QueryDef("pca_drift", qPcaDrift,
+      "WITH wa(d, w) AS (VALUES (0, 128), (1, 64), (2, 32), (3, 16), (4, 8), (5, 4), (6, 2), (7, 1)), " +
+        "wc(d, w) AS (VALUES (0, 1), (1, 64), (2, 32), (3, 16), (4, 8), (5, 4), (6, 2), (7, 128)), " +
+        "ii AS (SELECT unnest(range(0, 600)) AS i), " +
+        "qa AS (SELECT sum((w * (((i + 0) * 31 + d * 7) % 19 - 9)) * (w * (((i + 0) * 31 + d * 7) % 19 - 9)))::BIGINT AS t FROM ii, wa), " +
+        "qb AS (SELECT sum((w * (((i + 1000) * 31 + d * 7) % 19 - 9)) * (w * (((i + 1000) * 31 + d * 7) % 19 - 9)))::BIGINT AS t FROM ii, wa), " +
+        "qc AS (SELECT sum((w * (((i + 1000) * 31 + d * 7) % 19 - 9)) * (w * (((i + 1000) * 31 + d * 7) % 19 - 9)))::BIGINT AS t FROM ii, wc) " +
+        "SELECT 600::BIGINT AS n_a, 600::BIGINT AS n_b, 600::BIGINT AS n_c, " +
+        "(SELECT t FROM qa) AS trace_a, (SELECT t FROM qb) AS trace_b, (SELECT t FROM qc) AS trace_c, " +
+        "1::BIGINT AS aligned_ok, 1::BIGINT AS drift_detected", Set(Scale)),
+    // Scale: see stream_hll.
+    QueryDef("pca_project", qPcaProject,
+      pcaMomentsCte +
+        "SELECT (SELECT count(*) FROM v)::BIGINT AS n, 64::BIGINT AS d, " +
+        "(SELECT sum(CASE WHEN i = j THEN gij ELSE 0 END) FROM g)::BIGINT AS trace_q, " +
+        "(SELECT sum((i + 1) * (si % 1000003)) % 1000000007 FROM s)::BIGINT AS sums_checksum, " +
+        "(SELECT sum((i * 64 + j + 1) * (gij % 1000003)) % 1000000007 FROM g)::BIGINT AS gram_checksum, " +
+        "1::BIGINT AS eig_trace_ok, 1::BIGINT AS eig_sorted_ok, " +
+        "1::BIGINT AS eig_orthonormal_ok, 1::BIGINT AS eig_dominates_axes, " +
+        "1::BIGINT AS proj_var_ok", Set(Scale)))
 }

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.QueryDef.{Kdf, Scale}
 import graft.operators.MaskTransform
 
 /** Query registry: tokenizer family (BPE char/byte/unicode, unigram,
@@ -1757,5 +1758,650 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
       sum(col("event_id")).cast("long").as("id_sum"))
   }
 
-
+  /** The queries defined in this file, each with its DuckDB oracle. */
+  private[graft] lazy val tokenizerStreamQueries: Seq[QueryDef] = Seq(
+    // same integer counts -> H = ln(n) - (sum c ln c)/n on the 1e-4 grid
+    QueryDef("token_entropy", qTokenEntropy,
+      "WITH tok AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w FROM documents), " +
+        "pc AS (SELECT doc_id, w, count(*) AS c FROM tok WHERE w <> '' GROUP BY 1, 2), " +
+        "pd AS (SELECT doc_id, sum(c)::BIGINT AS n_tokens, " +
+        "floor((ln(sum(c)::DOUBLE) - sum(c::DOUBLE * ln(c::DOUBLE)) / sum(c)) * 10000 + 1e-6)::BIGINT AS entropy_x1e4 " +
+        "FROM pc GROUP BY 1) " +
+        "SELECT d.doc_id, coalesce(n_tokens, 0)::BIGINT AS n_tokens, " +
+        "coalesce(entropy_x1e4, 0)::BIGINT AS entropy_x1e4 " +
+        "FROM documents d LEFT JOIN pd ON d.doc_id = pd.doc_id"),
+    // identical pair stream (1-based lists, same window), divisions-first
+    // PMI on the 1e-4 floor grid with the bm25-style 1e-6 nudge
+    QueryDef("pmi_pairs", qPmiPairs,
+      "WITH t AS (SELECT list_filter(string_split_regex(lower(trim(text)), '\\s+'), w -> len(w) > 0) AS toks " +
+        "FROM documents WHERE text IS NOT NULL), " +
+        "tok AS (SELECT unnest(toks) AS w FROM t), " +
+        "uni AS (SELECT w, count(*) AS c FROM tok GROUP BY 1), " +
+        "n AS (SELECT sum(c)::BIGINT AS n_tok FROM uni), " +
+        "pos AS (SELECT toks, unnest(range(1, len(toks) + 1)) AS i FROM t WHERE len(toks) >= 2), " +
+        "pr AS (SELECT least(toks[i], toks[j]) AS x, greatest(toks[i], toks[j]) AS y " +
+        "FROM (SELECT toks, i, unnest(range(i + 1, least(i + 3, len(toks)) + 1)) AS j FROM pos) q), " +
+        "pcall AS (SELECT x, y, count(*) AS n_xy FROM pr GROUP BY 1, 2), " +
+        "p AS (SELECT sum(n_xy)::BIGINT AS n_pairs FROM pcall), " +
+        "s AS (SELECT x, y, n_xy, " +
+        "floor(ln((n_xy::DOUBLE / n_pairs) * (n_tok::DOUBLE / cx.c) * (n_tok::DOUBLE / cy.c)) * 10000 + 1e-6)::BIGINT AS pmi_x1e4 " +
+        "FROM pcall CROSS JOIN p CROSS JOIN n JOIN uni cx ON pcall.x = cx.w JOIN uni cy ON pcall.y = cy.w " +
+        "WHERE n_xy >= 5) " +
+        "SELECT x, y, n_xy, pmi_x1e4 FROM s ORDER BY pmi_x1e4 DESC, x, y LIMIT 20"),
+    // Scale: see weighted_sample.
+    // FIM: same ring-hash draws + substr algebra, replayed per document
+    QueryDef("fim_transform", qFimTransform,
+      "WITH c AS (SELECT doc_id, text, " +
+        "(doc_id * 2654435761) % 4294967296 % (length(text) + 1) AS c1 FROM documents), " +
+        "d AS (SELECT doc_id, text, c1, " +
+        "c1 + ((doc_id + 7919) * 2654435761) % 4294967296 % (length(text) - c1 + 1) AS c2 FROM c) " +
+        "SELECT doc_id, c1::BIGINT AS c1, c2::BIGINT AS c2, " +
+        "'<PRE>' || substr(text, 1, c1::INT) || '<SUF>' || substr(text, (c2 + 1)::INT) || " +
+        "'<MID>' || substr(text, (c1 + 1)::INT, (c2 - c1)::INT) AS fim_text FROM d", Set(Scale)),
+    // per-group clamp at exact percentiles; cent-grid floor kills float noise
+    QueryDef("winsorize_stats", qWinsorizeStats,
+      "WITH c AS (SELECT l_returnflag AS g, quantile_cont(l_extendedprice, 0.05) AS lo, " +
+        "quantile_cont(l_extendedprice, 0.95) AS hi FROM lineitem GROUP BY 1), " +
+        "w AS (SELECT l_returnflag, l_extendedprice, " +
+        "least(greatest(l_extendedprice, lo), hi) AS vw FROM lineitem JOIN c ON l_returnflag = c.g) " +
+        "SELECT l_returnflag AS rf, count(*) AS n, " +
+        "sum(floor(vw * 100)::BIGINT)::BIGINT AS w_cents_sum, " +
+        "min(floor(vw * 100)::BIGINT) AS w_cents_min, " +
+        "max(floor(vw * 100)::BIGINT) AS w_cents_max, " +
+        "count(CASE WHEN vw <> l_extendedprice THEN 1 END) AS n_clamped " +
+        "FROM w GROUP BY 1 ORDER BY 1"),
+    // Scale: see weighted_sample.
+    // same cutpoints + lower-bucket tie rule the operator compiles to
+    QueryDef("length_buckets", qLengthBuckets,
+      "WITH c AS (SELECT quantile_cont(n_chars, 0.125) AS q1, quantile_cont(n_chars, 0.25) AS q2, " +
+        "quantile_cont(n_chars, 0.375) AS q3, quantile_cont(n_chars, 0.5) AS q4, " +
+        "quantile_cont(n_chars, 0.625) AS q5, quantile_cont(n_chars, 0.75) AS q6, " +
+        "quantile_cont(n_chars, 0.875) AS q7 FROM documents), " +
+        "b AS (SELECT CASE WHEN n_chars <= q1 THEN 0 WHEN n_chars <= q2 THEN 1 " +
+        "WHEN n_chars <= q3 THEN 2 WHEN n_chars <= q4 THEN 3 WHEN n_chars <= q5 THEN 4 " +
+        "WHEN n_chars <= q6 THEN 5 WHEN n_chars <= q7 THEN 6 ELSE 7 END AS bucket, n_chars " +
+        "FROM documents, c) " +
+        "SELECT bucket::BIGINT AS bucket, count(*) AS n, min(n_chars)::BIGINT AS len_min, " +
+        "max(n_chars)::BIGINT AS len_max FROM b GROUP BY 1 ORDER BY 1", Set(Scale)),
+    // Scale: round-10 operators over the scaled documents table.
+    // A-ES weighted sample: u from the Knuth ring hash (exact in doubles),
+    // key floor-snapped to 2^20 so a sub-ULP pow() difference can't reorder
+    QueryDef("weighted_sample", qWeightedSample,
+      "WITH k AS (SELECT lang, doc_id, floor(pow((doc_id * 2654435761 % 4294967296 + 0.5) / 4294967296, " +
+        "1.0 / n_chars) * 1048576) AS key FROM documents WHERE n_chars > 0), " +
+        "r AS (SELECT lang, doc_id, row_number() OVER (PARTITION BY lang ORDER BY key DESC, doc_id) AS rank FROM k) " +
+        "SELECT lang, doc_id AS id, rank FROM r WHERE rank <= 5", Set(Scale)),
+    // solid-color PNG roundtrip: every field recomputable from doc_id
+    QueryDef("binary_ingest", qBinaryIngest,
+      "SELECT count(*) AS n_assets, sum(doc_id)::BIGINT AS id_sum, " +
+        "sum(1 + doc_id % 16)::BIGINT AS width_sum, sum(1 + doc_id % 12)::BIGINT AS height_sum, " +
+        "count(*) AS n_pixel_exact FROM documents WHERE doc_id % 50 = 0"),
+    QueryDef("sink_roundtrip", qSinkRoundtrip,
+      "SELECT lang, count(*)::BIGINT AS n, sum(doc_id)::BIGINT AS id_sum FROM documents GROUP BY lang ORDER BY lang"),
+    // same planted lines; first-occurrence keep order via index-aware filter
+    QueryDef("dedup_lines", qDedupLines,
+      "WITH t AS (SELECT doc_id, text || CASE WHEN doc_id % 3 = 0 THEN chr(10) || text ELSE '' END " +
+        "|| chr(10) || 'tail ' || doc_id AS text FROM documents), " +
+        "l AS (SELECT doc_id, string_split(text, chr(10)) AS lines FROM t) " +
+        "SELECT doc_id, len(lines)::BIGINT AS n_lines_before, " +
+        "len(list_filter(lines, (x, i) -> list_position(lines, x) = i))::BIGINT AS n_lines_after, " +
+        "array_to_string(list_filter(lines, (x, i) -> list_position(lines, x) = i), chr(10)) AS clean_text " +
+        "FROM l ORDER BY doc_id"),
+    // exact jaccard between the planted batch and the corpus
+    QueryDef("dedup_incremental", qDedupIncremental, incrementalOracleSql, Set(Scale)),
+    // same counts, same add-0.5 smoothing, same 1e-4 grid nudge
+    QueryDef("lm_score", qLmScore,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents), " +
+        "uni AS (SELECT w, count(*) AS c1 FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w), " +
+        "bg AS (SELECT bgk, count(*) AS c2 FROM (SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bgk " +
+        "FROM toks WHERE len(t) >= 2) GROUP BY bgk), " +
+        "v AS (SELECT count(*)::DOUBLE AS v FROM uni), " +
+        "e AS (SELECT doc_id, t[i] AS w1, t[i] || ' ' || t[i+1] AS b FROM " +
+        "(SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks WHERE len(t) >= 2)), " +
+        "s AS (SELECT doc_id, count(*)::BIGINT AS n_bigrams, " +
+        "floor(avg(ln((coalesce(c2, 0) + 0.5) / (coalesce(c1, 0) + 0.5 * v))) * 10000 + 0.000001)::BIGINT AS avg_logp_x1e4 " +
+        "FROM e LEFT JOIN bg ON e.b = bg.bgk LEFT JOIN uni ON e.w1 = uni.w CROSS JOIN v GROUP BY doc_id) " +
+        "SELECT d.doc_id, coalesce(s.n_bigrams, 0)::BIGINT AS n_bigrams, " +
+        "coalesce(s.avg_logp_x1e4, 0)::BIGINT AS avg_logp_x1e4 " +
+        "FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id"),
+    // merge == retrain: counts are additive, so the oracle replays the
+    // whole-corpus tables and the 20-doc probe scores from the corpus
+    // alone; audits are zero-by-construction
+    QueryDef("lm_store_roundtrip", qLmStoreRoundtrip,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t FROM documents), " +
+        "uni AS (SELECT w, count(*) AS c1 FROM (SELECT unnest(t) AS w FROM toks) GROUP BY w), " +
+        "bg AS (SELECT bgk, count(*) AS c2 FROM (SELECT unnest(list_transform(range(1, len(t)), i -> t[i] || ' ' || t[i+1])) AS bgk " +
+        "FROM toks WHERE len(t) >= 2) GROUP BY bgk), " +
+        "v AS (SELECT count(*)::DOUBLE AS v FROM uni), " +
+        "e AS (SELECT doc_id, t[i] AS w1, t[i] || ' ' || t[i+1] AS b FROM " +
+        "(SELECT doc_id, t, unnest(range(1, len(t))) AS i FROM toks WHERE len(t) >= 2 AND doc_id < 20)), " +
+        "s AS (SELECT doc_id, floor(avg(ln((coalesce(c2, 0) + 0.5) / (coalesce(c1, 0) + 0.5 * v))) * 10000 + 0.000001)::BIGINT AS sc " +
+        "FROM e LEFT JOIN bg ON e.b = bg.bgk LEFT JOIN uni ON e.w1 = uni.w CROSS JOIN v GROUP BY doc_id) " +
+        "SELECT (SELECT count(*) FROM bg)::BIGINT AS bg_rows, 0::BIGINT AS bg_mismatch, " +
+        "(SELECT count(*) FROM uni)::BIGINT AS uni_rows, 0::BIGINT AS uni_mismatch, " +
+        "(SELECT count(*) FROM documents WHERE doc_id < 20)::BIGINT AS scored_docs, 0::BIGINT AS score_mismatch, " +
+        "(SELECT sum(coalesce(s.sc, 0)) FROM documents d LEFT JOIN s ON d.doc_id = s.doc_id WHERE d.doc_id < 20)::BIGINT AS score_checksum"),
+    // same ring arithmetic: key = (id*2654435761 + mixedSeed) mod 2^32,
+    // mixedSeed = (7*2654435761) ^ (7 >>> 17) = 18581050327
+    QueryDef("epoch_shuffle", qEpochShuffle,
+      "SELECT doc_id, ((doc_id::HUGEINT * 2654435761 + 18581050327) % 4294967296)::BIGINT AS epoch_key " +
+        "FROM documents ORDER BY epoch_key, doc_id LIMIT 20"),
+    // full per-doc value compare: same regexp pipeline in the shared
+    // Java-regex/RE2 subset
+    QueryDef("text_normalize", qTextNormalize,
+      "SELECT doc_id, " +
+        "trim(regexp_replace(regexp_replace(lower(text), '[\\x00-\\x1f\\x7f]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm, " +
+        "trim(regexp_replace(regexp_replace(regexp_replace(lower(text), '[\\x00-\\x1f\\x7f]', ' ', 'g'), " +
+        "'[^\\p{L}\\p{N}\\s]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm_nopunct FROM documents"),
+    // full per-chunk value compare: same tokenize, same stride-24 starts,
+    // same keep-if-new-tokens filter (s=1 or s<=n-8), same 32-token slices
+    QueryDef("chunk_docs", qChunkDocs,
+      "WITH toks AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t " +
+        "FROM documents WHERE text IS NOT NULL), " +
+        "st AS (SELECT doc_id, t, list_filter(range(1, len(t) + 1, 24), s -> s = 1 OR s <= len(t) - 8) AS starts FROM toks), " +
+        "c AS (SELECT doc_id, unnest(range(1, len(starts) + 1)) AS k, t, starts FROM st) " +
+        "SELECT doc_id, (k - 1)::BIGINT AS chunk_idx, len(t[starts[k]:starts[k] + 31])::BIGINT AS n_tokens, " +
+        "array_to_string(t[starts[k]:starts[k] + 31], ' ') AS chunk_text FROM c"),
+    // exact-jaccard pair graph (as dedup_components) -> component key ->
+    // the same 2^32-ring hash assignment; cutoffs are cutoff(9000)/
+    // cutoff(9500) as Long arithmetic (bp * 2^32 / 10000, floor)
+    QueryDef("cluster_split", qClusterSplit,
+      "WITH sh AS (SELECT doc_id, list_distinct([text[i:i+4] FOR i IN range(1, greatest(len(text)-3, 1))]) AS s FROM documents), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.s, b.s))::DOUBLE / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j " +
+        "FROM sh a JOIN sh b ON a.doc_id < b.doc_id), " +
+        "e AS (SELECT id_a AS a, id_b AS b FROM p WHERE j >= 0.8 UNION SELECT id_b, id_a FROM p WHERE j >= 0.8), " +
+        "reach AS (WITH RECURSIVE r(a, b) AS (SELECT a, b FROM e " +
+        "UNION SELECT r.a, e.b FROM r JOIN e ON r.b = e.a WHERE r.a <> e.b) SELECT * FROM r), " +
+        "comp AS (SELECT a AS doc_id, least(a, min(b)) AS component FROM reach GROUP BY a), " +
+        "k AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS key FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id), " +
+        "asn AS (SELECT doc_id, key, CASE WHEN (key::HUGEINT * 2654435761) % 4294967296 < 3865470566 THEN 'train' " +
+        "WHEN (key::HUGEINT * 2654435761) % 4294967296 < 4080218931 THEN 'val' ELSE 'test' END AS split FROM k) " +
+        "SELECT split, count(*)::BIGINT AS n, sum(doc_id)::BIGINT AS id_sum, " +
+        "count(DISTINCT key)::BIGINT AS n_keys FROM asn GROUP BY split ORDER BY split"),
+    // Scale: the split-leakage audit composes the measured minhash + CC + hash
+    // assignment pipelines; its own term is the pair-sized split joins.
+    // same CC + assignment CTEs as cluster_split, extended with the naive
+    // id-hash split; n_leaky_stable = 0 is the oracle-asserted guarantee
+    QueryDef("split_leakage", qSplitLeakage,
+      "WITH sh AS (SELECT doc_id, list_distinct([text[i:i+4] FOR i IN range(1, greatest(len(text)-3, 1))]) AS s FROM documents), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.s, b.s))::DOUBLE / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j " +
+        "FROM sh a JOIN sh b ON a.doc_id < b.doc_id), " +
+        "e AS (SELECT id_a AS a, id_b AS b FROM p WHERE j >= 0.8 UNION SELECT id_b, id_a FROM p WHERE j >= 0.8), " +
+        "reach AS (WITH RECURSIVE r(a, b) AS (SELECT a, b FROM e " +
+        "UNION SELECT r.a, e.b FROM r JOIN e ON r.b = e.a WHERE r.a <> e.b) SELECT * FROM r), " +
+        "comp AS (SELECT a AS doc_id, least(a, min(b)) AS component FROM reach GROUP BY a), " +
+        "k AS (SELECT d.doc_id, coalesce(c.component, d.doc_id) AS key FROM documents d LEFT JOIN comp c ON d.doc_id = c.doc_id), " +
+        "asn AS (SELECT doc_id, CASE WHEN (key::HUGEINT * 2654435761) % 4294967296 < 3865470566 THEN 'train' " +
+        "WHEN (key::HUGEINT * 2654435761) % 4294967296 < 4080218931 THEN 'val' ELSE 'test' END AS split FROM k), " +
+        "nv AS (SELECT doc_id, CASE WHEN (doc_id::HUGEINT * 2654435761) % 4294967296 < 3865470566 THEN 'train' " +
+        "WHEN (doc_id::HUGEINT * 2654435761) % 4294967296 < 4080218931 THEN 'val' ELSE 'test' END AS naive FROM documents), " +
+        "pp AS (SELECT id_a, id_b FROM p WHERE j >= 0.8), " +
+        "lk AS (SELECT pp.id_a, pp.id_b, na.naive AS sa, nb.naive AS sb, ca.split AS ta, cb.split AS tb " +
+        "FROM pp JOIN nv na ON na.doc_id = pp.id_a JOIN nv nb ON nb.doc_id = pp.id_b " +
+        "JOIN asn ca ON ca.doc_id = pp.id_a JOIN asn cb ON cb.doc_id = pp.id_b) " +
+        "SELECT count(*)::BIGINT AS n_pairs, " +
+        "count(CASE WHEN sa <> sb THEN 1 END)::BIGINT AS n_leaky_naive, " +
+        "coalesce(sum(CASE WHEN sa <> sb THEN id_a + id_b END), 0)::BIGINT AS leaky_id_sum, " +
+        "count(CASE WHEN ta <> tb THEN 1 END)::BIGINT AS n_leaky_stable FROM lk", Set(Scale)),
+    // exact-jaccard component graph, histogram of component sizes
+    QueryDef("dedup_cluster_report", qDedupClusterReport,
+      "WITH sh AS (SELECT doc_id, list_distinct([text[i:i+4] FOR i IN range(1, greatest(len(text)-3, 1))]) AS s FROM documents), " +
+        "p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b, " +
+        "len(list_intersect(a.s, b.s))::DOUBLE / (len(a.s) + len(b.s) - len(list_intersect(a.s, b.s))) AS j " +
+        "FROM sh a JOIN sh b ON a.doc_id < b.doc_id), " +
+        "e AS (SELECT id_a AS a, id_b AS b FROM p WHERE j >= 0.8 UNION SELECT id_b, id_a FROM p WHERE j >= 0.8), " +
+        "reach AS (WITH RECURSIVE r(a, b) AS (SELECT a, b FROM e " +
+        "UNION SELECT r.a, e.b FROM r JOIN e ON r.b = e.a WHERE r.a <> e.b) SELECT * FROM r), " +
+        "comp AS (SELECT a AS doc_id, least(a, min(b)) AS component FROM reach GROUP BY a), " +
+        "sizes AS (SELECT component, count(*) AS sz FROM comp GROUP BY component) " +
+        "SELECT sz::BIGINT AS sz, count(*)::BIGINT AS n_clusters FROM sizes GROUP BY sz ORDER BY sz"),
+    // same normalization regexes, min doc_id per normalized-content group
+    QueryDef("dedup_normalized", qDedupNormalized,
+      "WITH allv AS (SELECT doc_id, text FROM documents " +
+        "UNION ALL SELECT doc_id + 4000000000000, upper(text) || '  ' FROM documents WHERE doc_id % 40 = 0), " +
+        "n AS (SELECT doc_id, trim(regexp_replace(regexp_replace(lower(text), '[\\x00-\\x1f\\x7f]', ' ', 'g'), '\\s+', ' ', 'g')) AS norm FROM allv), " +
+        "k AS (SELECT min(doc_id) AS keep FROM n GROUP BY norm) " +
+        "SELECT (SELECT count(*) FROM allv)::BIGINT AS n_total, " +
+        "(SELECT count(*) FROM k)::BIGINT AS n_kept, " +
+        "(SELECT sum(keep) FROM k)::BIGINT AS kept_id_sum"),
+    // and so must the STREAMING probe of the same planted batch
+    QueryDef("stream_dedup_probe", qStreamDedupProbe, incrementalOracleSql),
+    // Scale: see unigram_train.
+    // shared verbatim: streaming the probe must not change one edge
+    QueryDef("stream_knn_probe", qStreamKnnProbe, knnIncrementalOracleSql, Set(Scale)),
+    // truth by plain text-equality join; min matching corpus id per new doc
+    QueryDef("dedup_exact_incremental", qDedupExactIncremental,
+      "WITH newb AS (SELECT doc_id + 2000000000000 AS new_id, text AS t FROM documents WHERE doc_id % 25 = 0 " +
+        "UNION ALL SELECT doc_id + 3000000000000 AS new_id, text || ' changed' AS t FROM documents WHERE doc_id % 25 = 1), " +
+        "m AS (SELECT n.new_id, min(d.doc_id) AS corpus_id FROM newb n JOIN documents d ON n.t = d.text GROUP BY n.new_id) " +
+        "SELECT (SELECT count(*) FROM newb)::BIGINT AS n_new, " +
+        "(SELECT count(*) FROM m)::BIGINT AS n_flagged, " +
+        "(SELECT coalesce(sum(new_id + corpus_id), 0) FROM m)::BIGINT AS pair_id_sum"),
+    // the indexed variant must flag EXACTLY the same pairs - shared oracle
+    QueryDef("dedup_sig_reuse", qDedupSigReuse, incrementalOracleSql, Set(Scale)),
+    // same whitespace bigrams, same (count desc, pair) cutoff
+    QueryDef("bpe_pair_counts", qBpePairCounts,
+      "WITH t AS (SELECT string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents), " +
+        "bg AS (SELECT unnest(list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])) AS pair " +
+        "FROM t WHERE len(toks) >= 2) " +
+        "SELECT pair, count(*)::BIGINT AS n FROM bg GROUP BY pair ORDER BY n DESC, pair LIMIT 20"),
+    // ground-truth language labels for the planted held-out sentences —
+    // the classifier must reproduce them exactly (incl. es/pt and sv/da)
+    QueryDef("langid_profile", qLangidProfile,
+      "SELECT doc_id::BIGINT AS doc_id, lang FROM (VALUES " +
+        "(1, 'en'), (2, 'en'), (3, 'de'), (4, 'de'), (5, 'fr'), (6, 'fr'), " +
+        "(7, 'es'), (8, 'es'), (9, 'pt'), (10, 'pt'), (11, 'it'), (12, 'it'), " +
+        "(13, 'nl'), (14, 'nl'), (15, 'sv'), (16, 'sv'), (17, 'da'), (18, 'da'), " +
+        "(19, 'pl'), (20, 'pl'), (21, 'tr'), (22, 'tr'), " +
+        "(23, 'zh'), (24, 'zh'), (25, 'zh'), (26, 'ja'), (27, 'ja'), " +
+        "(28, 'ko'), (29, 'ko'), (30, 'ru'), (31, 'ru'), (32, 'ar'), " +
+        "(33, 'ar'), (34, 'hi'), (35, 'hi')) AS t(doc_id, lang) " +
+        "ORDER BY doc_id"),
+    // the full 20-round greedy trainer replayed in one recursive CTE
+    QueryDef("bpe_train", qBpeTrain,
+      s"WITH RECURSIVE $bpeTrainCte " +
+        "SELECT rank, a AS lhs, b AS rhs, n FROM merges ORDER BY rank"),
+    // the same replays over the planted multilingual VALUES rows with the
+    // \p{L} alphabet — accents survive training and segmentation
+    QueryDef("bpe_train_unicode", qBpeTrainUnicode,
+      s"WITH RECURSIVE ${bpeTrainCteFor(unicodeValuesSql, "\\p{L}+", 10)} " +
+        "SELECT rank, a AS lhs, b AS rhs, n FROM merges ORDER BY rank"),
+    QueryDef("segment_viterbi_unicode", qSegmentViterbiUnicode,
+      segmentViterbiOracleSqlFor(unicodeValuesSql, "\\p{L}+", 10)),
+    // trained merges re-applied to every document word by a second
+    // recursion over rank; ids = sorted chars then merge products
+    // (first occurrence wins); full per-token value compare
+    QueryDef("bpe_encode", qBpeEncode,
+      s"WITH RECURSIVE $bpeEncodeCte, " +
+        "chars AS (SELECT DISTINCT unnest(list_transform(range(1, len(word)+1), i -> word[i])) AS c FROM words), " +
+        "vocab0 AS (SELECT c AS token, (row_number() OVER (ORDER BY c)) - 1 AS ord FROM chars " +
+        "UNION ALL SELECT a || b, (SELECT count(*) FROM chars) + rank - 1 FROM merges), " +
+        "vocab AS (SELECT token, min(ord)::BIGINT AS token_id FROM vocab0 GROUP BY token), " +
+        "ex AS (SELECT doc_id, wpos, unnest(range(1, len(f.toks)+1)) AS tpos, unnest(f.toks) AS token " +
+        "FROM dw JOIN final f USING (word)) " +
+        "SELECT e.doc_id, (row_number() OVER (PARTITION BY e.doc_id ORDER BY e.wpos, e.tpos))::BIGINT AS pos, " +
+        "e.token, v.token_id FROM ex e JOIN vocab v USING (token) ORDER BY doc_id, pos"),
+    // Scale: see warc_charset.
+    // the byte arm's identical recursion over DuckDB's own UTF-8 byte
+    // dump (encode/hex/substr), raw case-preserved whitespace words
+    QueryDef("bpe_train_bytes", qBpeTrainBytes,
+      s"WITH RECURSIVE ${bpeByteTrainCteFor("documents", 12)} " +
+        "SELECT rank, a AS lhs, b AS rhs, n FROM merges ORDER BY rank", Set(Scale)),
+    // Scale: see warc_charset.
+    // byte-encode replay: fixed 256-symbol vocab head (printf hex) +
+    // merge products, per-doc token/byte counts and the order-sensitive
+    // sum(pos * token_id) checksum
+    QueryDef("bpe_encode_bytes", qBpeEncodeBytes,
+      s"WITH RECURSIVE ${bpeByteEncodeCteFor("documents", 12)}, " +
+        "vocab0 AS (SELECT printf('%02x', i) AS token, i::BIGINT AS ord FROM range(256) t(i) " +
+        "UNION ALL SELECT a || b, 256 + rank - 1 FROM merges), " +
+        "vocab AS (SELECT token, min(ord)::BIGINT AS token_id FROM vocab0 GROUP BY token), " +
+        "ex AS (SELECT doc_id, wpos, unnest(range(1, len(f.toks)+1)) AS tpos, unnest(f.toks) AS token " +
+        "FROM dw JOIN final f USING (word)), " +
+        "px AS (SELECT doc_id, (row_number() OVER (PARTITION BY doc_id ORDER BY wpos, tpos))::BIGINT AS pos, token FROM ex) " +
+        "SELECT doc_id, count(*)::BIGINT AS n_tokens, (sum(len(token)) // 2)::BIGINT AS n_bytes, " +
+        "sum(pos * v.token_id)::BIGINT AS checksum " +
+        "FROM px JOIN vocab v USING (token) GROUP BY doc_id ORDER BY doc_id", Set(Scale)),
+    // BPE-count-driven packing: per-doc token counts from the encode
+    // replay, then the pack_sequences prefix-sum arithmetic at capacity 512
+    QueryDef("bpe_pack", qBpePack,
+      s"WITH RECURSIVE $bpeEncodeCte, " +
+        "tc AS (SELECT doc_id, sum(len(f.toks))::BIGINT AS toks " +
+        "FROM dw JOIN final f USING (word) GROUP BY doc_id), " +
+        "s AS (SELECT doc_id, toks, sum(toks) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e FROM tc), " +
+        "b AS (SELECT doc_id, toks, (e - toks) // 512 AS bin FROM s), " +
+        "f2 AS (SELECT bin, count(*) AS bin_docs, sum(toks) AS fill FROM b GROUP BY bin) " +
+        "SELECT sum(bin_docs)::BIGINT AS n_docs, sum(fill)::BIGINT AS total_tokens, " +
+        "(max(bin) + 1)::BIGINT AS n_bins, max(fill)::BIGINT AS max_bin_fill FROM f2"),
+    // Scale: round-11 batch 2: the distinct-word DP (cost is vocabulary-shaped —
+    // scaled copies rotate the alphabet so distinct words grow ~SCALEx, the
+    // worst case for this operator), the heap-sampled language mixture, and the
+    // bounded-probe nested-loop miner.
+    QueryDef("segment_viterbi", qSegmentViterbi, segmentViterbiOracleSql, Set(Scale)),
+    // Scale: see vocab_drift.
+    // Both tokenizers' chars-per-token over the same corpus: the BPE
+    // encode recursion and the unigram chain's final segmentation, each
+    // joined onto the document word stream (`dw`).
+    QueryDef("tokenizer_eval", qTokenizerEval,
+      s"WITH RECURSIVE ${bpeEncodeCteFor("documents", "[a-z]+", 20)}, " +
+        unigramChainCtes + ", " +
+        "bstat AS (SELECT count(*)::BIGINT AS n_words FROM dw), " +
+        "btok AS (SELECT sum(len(f.toks))::BIGINT AS n_tokens, " +
+        "sum(len(word))::BIGINT AS n_chars FROM dw JOIN final f USING (word)), " +
+        "ustat AS (SELECT count(*)::BIGINT AS n_words FROM dw WHERE len(word) <= 20), " +
+        "utok AS (SELECT sum(len(s.toks))::BIGINT AS n_tokens, " +
+        "sum(len(word))::BIGINT AS n_chars FROM dw JOIN e2_seg s USING (word)) " +
+        "SELECT 'bpe' AS tokenizer, (SELECT n_words FROM bstat) AS n_words, " +
+        "(SELECT n_tokens FROM btok) AS n_tokens, (SELECT n_chars FROM btok) AS n_chars, " +
+        "((SELECT n_chars FROM btok) * 10000 // greatest((SELECT n_tokens FROM btok), 1))::BIGINT AS chars_per_token_x1e4 " +
+        "UNION ALL " +
+        "SELECT 'unigram', (SELECT n_words FROM ustat), " +
+        "(SELECT n_tokens FROM utok), (SELECT n_chars FROM utok), " +
+        "((SELECT n_chars FROM utok) * 10000 // greatest((SELECT n_tokens FROM utok), 1))::BIGINT " +
+        "ORDER BY tokenizer", Set(Scale)),
+    // shared verbatim: streaming the segmentation must not change a token
+    QueryDef("stream_segment", qStreamSegment, segmentViterbiOracleSql),
+    // Scale: round-15 batch 2: the token-distribution drift monitor (two
+    // map-side-combined histograms + one vocab-keyed join — vocab grows with the
+    // rotated copies, so bytes are Heaps'-shaped) and the two-tokenizer
+    // evaluation (both trainers + both in-row appliers — wall must track the
+    // distinct-word frame, not the corpus). stream_segment is NOT Scale-tagged: the
+    // operator is the in-row segmentation already measured via its batch twin;
+    // the QUERY's memory-sink harness would hold the 100× token stream on the
+    // driver, measuring the harness rather than the operator.
+    // the planted day-1 snapshot replayed: same subset, same appended
+    // boilerplate, same ppm integer grid, same (delta DESC, token) argmax
+    QueryDef("vocab_drift", qVocabDrift, vocabDriftOracleSql, Set(Scale)),
+    // shared verbatim: the histogram store cycle must not change one stat
+    QueryDef("vocab_drift_store", qVocabDriftStore, vocabDriftOracleSql),
+    // full per-doc recompute: same top-20 vocab (count DESC, token ASC),
+    // same integer-division OOV rate
+    QueryDef("vocab_coverage", qVocabCoverage,
+      "WITH toks AS (SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok FROM documents), " +
+        "tf AS (SELECT tok, count(*) AS n FROM toks WHERE tok != '' GROUP BY tok), " +
+        "v AS (SELECT tok FROM tf ORDER BY n DESC, tok LIMIT 20), " +
+        "pd AS (SELECT t.doc_id, count(*) AS n_tokens, count(CASE WHEN v.tok IS NULL THEN 1 END) AS n_oov " +
+        "FROM toks t LEFT JOIN v ON t.tok = v.tok WHERE t.tok != '' GROUP BY t.doc_id) " +
+        "SELECT d.doc_id, coalesce(pd.n_tokens, 0)::BIGINT AS n_tokens, " +
+        "coalesce(pd.n_oov, 0)::BIGINT AS n_oov, " +
+        "coalesce(pd.n_oov * 10000 // pd.n_tokens, 0)::BIGINT AS oov_x1e4 " +
+        "FROM documents d LEFT JOIN pd USING (doc_id)"),
+    // same pow/grid-snap/hash arithmetic replayed per epoch
+    QueryDef("curriculum_mix", qCurriculumMix,
+      "WITH e(epoch, alpha) AS (VALUES (1, 1.0), (2, 0.5), (3, 0.25)), " +
+        "c AS (SELECT source, count(*)::DOUBLE AS n FROM documents GROUP BY 1), " +
+        "w AS (SELECT e.epoch, c.source, c.n, pow(c.n, e.alpha) AS w FROM c CROSS JOIN e), " +
+        "t AS (SELECT epoch, sum(w) AS wsum, sum(n) AS total FROM w GROUP BY epoch), " +
+        "r AS (SELECT w.epoch, w.source, least(4096, floor(least(1.0, floor(0.3 * t.total) * (w.w / t.wsum) / w.n) * 4096))::BIGINT * 1048576 AS cutoff " +
+        "FROM w JOIN t ON w.epoch = t.epoch) " +
+        "SELECT r.epoch, d.source, count(*)::BIGINT AS n_sampled, sum(d.doc_id)::BIGINT AS id_sum " +
+        "FROM documents d JOIN r ON d.source = r.source " +
+        "WHERE (d.doc_id::HUGEINT * 2654435761) % 4294967296 < r.cutoff GROUP BY 1, 2"),
+    // every observed metric and pass bit recomputed (one failing check
+    // included by design: n_chars in [0,400] with long docs present)
+    QueryDef("quality_checks", qQualityChecks,
+      "SELECT 'not_null' AS \"check\", 'text' AS \"column\", " +
+        "count(CASE WHEN text IS NULL THEN 1 END)::BIGINT AS observed, 0::BIGINT AS expected_lo, 0::BIGINT AS expected_hi, " +
+        "(count(CASE WHEN text IS NULL THEN 1 END) = 0)::BIGINT AS pass FROM documents " +
+        "UNION ALL SELECT 'unique', 'doc_id', (count(doc_id) - count(DISTINCT doc_id))::BIGINT, 0, 0, " +
+        "(count(doc_id) = count(DISTINCT doc_id))::BIGINT FROM documents " +
+        "UNION ALL SELECT 'in_range', 'n_chars', count(CASE WHEN n_chars < 0 OR n_chars > 1000 THEN 1 END)::BIGINT, 0, 0, " +
+        "(count(CASE WHEN n_chars < 0 OR n_chars > 1000 THEN 1 END) = 0)::BIGINT FROM documents " +
+        "UNION ALL SELECT 'in_range', 'n_chars', count(CASE WHEN n_chars < 0 OR n_chars > 400 THEN 1 END)::BIGINT, 0, 0, " +
+        "(count(CASE WHEN n_chars < 0 OR n_chars > 400 THEN 1 END) = 0)::BIGINT FROM documents " +
+        "UNION ALL SELECT 'accepted_values', 'lang', count(CASE WHEN lang IS NOT NULL AND lang NOT IN ('de','en','es','fr','zh') THEN 1 END)::BIGINT, 0, 0, " +
+        "(count(CASE WHEN lang IS NOT NULL AND lang NOT IN ('de','en','es','fr','zh') THEN 1 END) = 0)::BIGINT FROM documents " +
+        "UNION ALL SELECT 'row_count', '*', count(*)::BIGINT, 1, 10000000, " +
+        "(count(*) BETWEEN 1 AND 10000000)::BIGINT FROM documents"),
+    // Scale: see events_funnel.
+    // same count/tie-break/integer-share arithmetic; keys compare as strings
+    QueryDef("skew_report", qSkewReport,
+      "WITH c AS (SELECT user_id::VARCHAR AS key, count(*) AS n FROM events GROUP BY 1), " +
+        "t AS (SELECT sum(n) AS total FROM c) " +
+        "SELECT key, n::BIGINT AS n, (n * 10000 // t.total)::BIGINT AS share_x1e4 " +
+        "FROM c, t ORDER BY n DESC, key LIMIT 10", Set(Scale)),
+    // identical piece strings, identical (us, event_id) ordering
+    QueryDef("assemble_docs", qAssembleDocs,
+      "SELECT user_id AS key, count(*) AS n_pieces, " +
+        "string_agg(event_type || ':' || epoch_us(ts), ' ' ORDER BY epoch_us(ts), event_id) AS doc " +
+        "FROM events GROUP BY 1 ORDER BY 1"),
+    // same pow(n, 1/T) weights, same 1/4096 rate grid, same integer hash
+    QueryDef("temperature_mix", qTemperatureMix,
+      "WITH s AS (SELECT doc_id, CASE WHEN doc_id % 7 < 4 THEN 'big' " +
+        "WHEN doc_id % 7 < 6 THEN 'mid' ELSE 'small' END AS stratum FROM documents), " +
+        "c AS (SELECT stratum, count(*)::DOUBLE AS n FROM s GROUP BY 1), " +
+        "w AS (SELECT stratum, n, pow(n, 0.5) AS w FROM c), " +
+        "t AS (SELECT sum(w) AS wsum, sum(n) AS total FROM w), " +
+        "r AS (SELECT stratum, least(4096, floor(least(1.0, floor(0.5 * t.total) * (w.w / t.wsum) / w.n) * 4096))::BIGINT * 1048576 AS cutoff " +
+        "FROM w CROSS JOIN t) " +
+        "SELECT s.stratum, count(*) AS n_sampled, sum(s.doc_id)::BIGINT AS id_sum " +
+        "FROM s JOIN r USING (stratum) " +
+        "WHERE (s.doc_id::HUGEINT * 2654435761) % 4294967296 < r.cutoff " +
+        "GROUP BY 1 ORDER BY 1"),
+    // old files read the evolved column as null; only odd doc_ids carry it
+    QueryDef("schema_evolution", qSchemaEvolution,
+      "SELECT count(*)::BIGINT AS n_rows, " +
+        "count(CASE WHEN doc_id % 2 = 1 THEN 1 END)::BIGINT AS n_evolved, " +
+        "coalesce(sum(CASE WHEN doc_id % 2 = 1 THEN doc_id * 7 END), 0)::BIGINT AS quality_sum, " +
+        "count(DISTINCT lang)::BIGINT AS n_langs FROM documents"),
+    QueryDef("json_roundtrip", qJsonRoundtrip,
+      "SELECT lang, count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS chars_sum, " +
+        "max(n_chars)::BIGINT AS chars_max FROM documents GROUP BY lang ORDER BY lang"),
+    QueryDef("orc_roundtrip", qOrcRoundtrip,
+      "SELECT lang, count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS chars_sum, " +
+        "sum(doc_id)::BIGINT AS id_sum FROM documents WHERE lang IN ('en', 'zh') " +
+        "GROUP BY lang ORDER BY lang"),
+    QueryDef("csv_roundtrip", qCsvRoundtrip,
+      "SELECT lang, count(*)::BIGINT AS n, sum(n_chars)::BIGINT AS chars_sum, " +
+        "sum(doc_id)::BIGINT AS id_sum FROM documents WHERE lang IN ('en', 'zh') " +
+        "GROUP BY lang ORDER BY lang"),
+    QueryDef("decontaminate", qDecontaminate,
+      "WITH t AS (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks FROM documents), " +
+        "g AS (SELECT doc_id, unnest(list_transform(range(1, len(toks) - 8 + 2), i -> array_to_string(toks[i:i+7], ' '))) AS gram " +
+        "FROM t WHERE len(toks) >= 8), " +
+        "bench AS (SELECT DISTINCT gram FROM g WHERE doc_id % 50 = 0), " +
+        "cont AS (SELECT DISTINCT g.doc_id FROM g JOIN bench USING (gram)) " +
+        "SELECT (SELECT count(*) FROM documents)::BIGINT AS n_docs, " +
+        "(SELECT count(*) FROM cont)::BIGINT AS n_contaminated, " +
+        "((SELECT count(*) FROM documents) - (SELECT count(*) FROM cont))::BIGINT AS n_kept, " +
+        "(SELECT coalesce(sum(doc_id), 0) FROM cont)::BIGINT AS cont_id_sum"),
+    QueryDef("hash_sample", qHashSample,
+      "SELECT source, count(*)::BIGINT AS n, sum(doc_id)::BIGINT AS id_sum FROM documents " +
+        "WHERE (doc_id::HUGEINT * 2654435761) % 4294967296 < " +
+        "(CASE source WHEN 'src0' THEN 4294967296 WHEN 'src1' THEN 2147483648 " +
+        "WHEN 'src2' THEN 858993459 WHEN 'src3' THEN 214748364 ELSE 0 END) " +
+        "GROUP BY source ORDER BY source"),
+    QueryDef("pack_sequences", qPackSequences,
+      "WITH t AS (SELECT doc_id, len(string_split_regex(lower(trim(text)), '\\s+'))::BIGINT AS toks FROM documents), " +
+        "s AS (SELECT doc_id, toks, sum(toks) OVER (ORDER BY doc_id ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS e FROM t), " +
+        "b AS (SELECT doc_id, toks, e, (e - toks) // 2048 AS bin, " +
+        "(e - 1) // 2048 - (e - toks) // 2048 + 1 AS n_chunks FROM s), " +
+        "f AS (SELECT bin, sum(toks) AS fill FROM b GROUP BY bin) " +
+        "SELECT (SELECT count(*) FROM b)::BIGINT AS n_docs, " +
+        "(SELECT sum(toks) FROM b)::BIGINT AS total_tokens, " +
+        "(SELECT (sum(toks) + 2047) // 2048 FROM b)::BIGINT AS n_seqs, " +
+        "(SELECT count(*) FROM b WHERE n_chunks > 1)::BIGINT AS n_straddlers, " +
+        "(SELECT max(bin) + 1 FROM b)::BIGINT AS n_bins, " +
+        "(SELECT max(fill) FROM f)::BIGINT AS max_bin_fill", Set(Scale)),
+    QueryDef("multimodal_resize", qMultimodalResize,
+      "SELECT count(*) AS n, count(*) AS n_png, " +
+        "sum(1 + doc_id % 16)::BIGINT AS width_sum, sum(1 + doc_id % 12)::BIGINT AS height_sum, " +
+        "count(*) AS n_mean_exact, count(*) AS n_std_zero FROM documents"),
+    QueryDef("multimodal_video", qMultimodalVideo,
+      "WITH t AS (SELECT doc_id, (3 + doc_id % 7 + 1) // 2 AS c FROM documents) " +
+        "SELECT sum(c)::BIGINT AS n_frames_sampled, count(*)::BIGINT AS n_videos, " +
+        "sum(c)::BIGINT AS n_real, sum(c * (c - 1))::BIGINT AS frame_index_sum, " +
+        "sum(c)::BIGINT AS n_payload_exact FROM t"),
+    QueryDef("multimodal_audio", qMultimodalAudio,
+      "SELECT count(*) AS n, count(*) AS n_wav, " +
+        "sum(64 + doc_id % 256)::BIGINT AS frames_sum, sum(1 + doc_id % 2)::BIGINT AS channels_sum, " +
+        "sum((64 + doc_id % 256) // 8)::BIGINT AS duration_sum, " +
+        "count(*) AS n_mean_exact, count(*) AS n_rms_exact, count(*) AS n_flat FROM documents"),
+    QueryDef("multimodal_audio_resample", qMultimodalAudioResample,
+      "SELECT count(*) AS n, count(*) AS n_wav, " +
+        "sum(((64 + doc_id % 256) * 12000) // 8000)::BIGINT AS frames_sum, " +
+        "sum(1 + doc_id % 2)::BIGINT AS channels_sum, " +
+        "count(*) AS n_dc_exact, count(*) AS n_flat FROM documents"),
+    QueryDef("curate_pipeline", qCuratePipeline,
+      "WITH q AS (SELECT doc_id, text, " +
+        "len(string_split_regex(lower(trim(text)), '\\s+')) AS ntok, " +
+        "length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS np, " +
+        "length(regexp_replace(text, '[0-9]', '', 'g')) AS nd FROM documents), " +
+        "s AS (SELECT doc_id, ntok AS toks, " +
+        "floor(least(length(text), 500) / 5.0 * 0.4 " +
+        "  + (CASE WHEN length(text)::DOUBLE / greatest(ntok, 1) BETWEEN 3 AND 12 THEN 100.0 ELSE 30.0 END) * 0.4 " +
+        "  - (floor((length(text) - np)::DOUBLE / greatest(length(text), 1) * 10000) / 100.0) * 0.1 " +
+        "  - (floor((length(text) - nd)::DOUBLE / greatest(length(text), 1) * 10000) / 100.0) * 0.1)::BIGINT AS quality, " +
+        "regexp_replace(trim(lower(text)), '\\s+', ' ', 'g') AS canon FROM q), " +
+        "f AS (SELECT * FROM s WHERE quality >= 40), " +
+        "d AS (SELECT f.* FROM f JOIN (SELECT canon, min(doc_id) AS m FROM f GROUP BY canon) r ON f.doc_id = r.m), " +
+        "h AS (SELECT * FROM d WHERE (doc_id::HUGEINT * 2654435761) % 4294967296 < 2147483648) " +
+        "SELECT count(*)::BIGINT AS n_curated, sum(doc_id)::BIGINT AS id_sum, sum(toks)::BIGINT AS token_sum FROM h"),
+    // bit-exact recompute of the 20-bit Morton interleave
+    QueryDef("zorder_cluster", qZorderCluster,
+      "WITH b AS (SELECT l_orderkey, l_partkey % 1024 AS x, l_suppkey % 1024 AS y FROM lineitem), " +
+        "z AS (SELECT l_orderkey, list_sum(list_transform(range(0, 10), " +
+        "i -> (((x >> i) & 1) << (2*i)) + (((y >> i) & 1) << (2*i+1)))) AS zv FROM b) " +
+        "SELECT count(*)::BIGINT AS n, sum(zv)::BIGINT AS z_sum, min(zv)::BIGINT AS z_min, " +
+        "max(zv)::BIGINT AS z_max, sum(l_orderkey)::BIGINT AS id_sum FROM z"),
+    QueryDef("moving_avg", qMovingAvg,
+      "WITH v AS (SELECT user_id, ts, event_id, round(value * 100)::BIGINT AS v100 FROM events), " +
+        "m AS (SELECT floor(sum(v100) OVER w::DOUBLE / count(*) OVER w)::BIGINT AS ma FROM v " +
+        "WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id ROWS BETWEEN 3 PRECEDING AND CURRENT ROW)) " +
+        "SELECT count(*)::BIGINT AS n, sum(ma)::BIGINT AS ma_sum, max(ma)::BIGINT AS ma_max FROM m"),
+    QueryDef("set_ops", qSetOps,
+      "WITH c AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'click'), " +
+        "p AS (SELECT DISTINCT user_id FROM events WHERE event_type = 'purchase'), " +
+        "b AS (SELECT user_id FROM c INTERSECT SELECT user_id FROM p), " +
+        "o AS (SELECT user_id FROM c EXCEPT SELECT user_id FROM p) " +
+        "SELECT (SELECT count(*) FROM b)::BIGINT AS n_both, " +
+        "(SELECT coalesce(sum(user_id), 0) FROM b)::BIGINT AS both_sum, " +
+        "(SELECT count(*) FROM o)::BIGINT AS n_only, " +
+        "(SELECT coalesce(sum(user_id), 0) FROM o)::BIGINT AS only_sum"),
+    QueryDef("topk_per_group", qTopkPerGroup,
+      "WITH q AS (SELECT doc_id, source, " +
+        "len(string_split_regex(lower(trim(text)), '\\s+')) AS ntok, " +
+        "length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS np, " +
+        "length(regexp_replace(text, '[0-9]', '', 'g')) AS nd, length(text) AS lc FROM documents), " +
+        "s AS (SELECT doc_id, source, " +
+        "floor(least(lc, 500) / 5.0 * 0.4 " +
+        "  + (CASE WHEN lc::DOUBLE / greatest(ntok, 1) BETWEEN 3 AND 12 THEN 100.0 ELSE 30.0 END) * 0.4 " +
+        "  - (floor((lc - np)::DOUBLE / greatest(lc, 1) * 10000) / 100.0) * 0.1 " +
+        "  - (floor((lc - nd)::DOUBLE / greatest(lc, 1) * 10000) / 100.0) * 0.1)::BIGINT AS quality FROM q), " +
+        "r AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY quality DESC, doc_id) AS rk FROM s) " +
+        "SELECT count(*)::BIGINT AS n_selected, count(DISTINCT source)::BIGINT AS n_sources, " +
+        "sum(doc_id)::BIGINT AS id_sum, sum(quality)::BIGINT AS quality_sum FROM r WHERE rk <= 3"),
+    QueryDef("topk_heap", qTopkHeap,
+      "WITH q AS (SELECT doc_id, source, " +
+        "len(string_split_regex(lower(trim(text)), '\\s+')) AS ntok, " +
+        "length(regexp_replace(text, '[[:punct:]]', '', 'g')) AS np, " +
+        "length(regexp_replace(text, '[0-9]', '', 'g')) AS nd, length(text) AS lc FROM documents), " +
+        "s AS (SELECT doc_id, source, " +
+        "floor(least(lc, 500) / 5.0 * 0.4 " +
+        "  + (CASE WHEN lc::DOUBLE / greatest(ntok, 1) BETWEEN 3 AND 12 THEN 100.0 ELSE 30.0 END) * 0.4 " +
+        "  - (floor((lc - np)::DOUBLE / greatest(lc, 1) * 10000) / 100.0) * 0.1 " +
+        "  - (floor((lc - nd)::DOUBLE / greatest(lc, 1) * 10000) / 100.0) * 0.1)::BIGINT AS quality FROM q), " +
+        "r AS (SELECT *, row_number() OVER (PARTITION BY source ORDER BY quality DESC, doc_id) AS rk FROM s) " +
+        "SELECT count(*)::BIGINT AS n_selected, count(DISTINCT source)::BIGINT AS n_sources, " +
+        "sum(doc_id)::BIGINT AS id_sum, sum(quality)::BIGINT AS quality_sum FROM r WHERE rk <= 3"),
+    QueryDef("latest_per_key", qLatestPerKey,
+      "WITH k AS (SELECT user_id, event_id, value, epoch_ms(ts) * 1048576 + event_id AS ord FROM events), " +
+        "l AS (SELECT user_id, arg_max(event_id, ord) AS last_id, arg_max(value, ord) AS last_value " +
+        "FROM k GROUP BY user_id) " +
+        "SELECT count(*)::BIGINT AS n_users, sum(last_id)::BIGINT AS id_sum, " +
+        "sum(round(last_value * 100))::BIGINT AS value_sum FROM l"),
+    QueryDef("window_lead_lag", qWindowLeadLag,
+      "WITH w AS (SELECT user_id, event_id, " +
+        "lag(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_id, " +
+        "lead(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS next_id, " +
+        "ntile(4) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS quartile FROM events) " +
+        "SELECT count(*)::BIGINT AS n, count(prev_id)::BIGINT AS n_prev, " +
+        "coalesce(sum(prev_id), 0)::BIGINT AS prev_sum, coalesce(sum(next_id), 0)::BIGINT AS next_sum, " +
+        "sum(quartile)::BIGINT AS quartile_sum FROM w"),
+    QueryDef("exact_percentile", qExactPercentile,
+      "SELECT l_returnflag AS rf, round(quantile_cont(l_quantity * 100, 0.5) * 2)::BIGINT AS med2, " +
+        "round(quantile_cont(l_quantity * 100, 0.9) * 10)::BIGINT AS p90x10 " +
+        "FROM lineitem GROUP BY 1 ORDER BY 1"),
+    QueryDef("pivot_agg", qPivotAgg,
+      "SELECT l_returnflag AS rf, " +
+        "count(*) FILTER (l_linestatus = 'F')::BIGINT AS n_f, " +
+        "count(*) FILTER (l_linestatus = 'O')::BIGINT AS n_o " +
+        "FROM lineitem GROUP BY l_returnflag ORDER BY rf"),
+    QueryDef("rollup_agg", qRollupAgg,
+      "SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls, " +
+        "count(*)::BIGINT AS n, sum(l_quantity)::BIGINT AS qty_sum " +
+        "FROM lineitem GROUP BY ROLLUP(l_returnflag, l_linestatus) ORDER BY rf, ls"),
+    QueryDef("grouping_sets_agg", qGroupingSets,
+      "SELECT coalesce(l_returnflag, 'ALL') AS rf, coalesce(l_linestatus, 'ALL') AS ls, " +
+        "GROUPING(l_returnflag, l_linestatus)::BIGINT AS gid, " +
+        "count(*)::BIGINT AS n, sum(l_quantity)::BIGINT AS qty_sum " +
+        "FROM lineitem GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), (l_linestatus)) " +
+        "ORDER BY gid, rf, ls"),
+    QueryDef("approx_agg", qApproxAgg,
+      "SELECT 1::BIGINT AS hll_in_bound, 1::BIGINT AS p50_in_range, 1::BIGINT AS one"),
+    QueryDef("asof_join", qAsofJoin,
+      "WITH s AS (SELECT user_id, ts, event_id FROM events WHERE event_type = 'signup') " +
+        "SELECT count(*)::BIGINT AS n, count(s.event_id)::BIGINT AS n_matched, " +
+        "coalesce(sum(s.event_id), 0)::BIGINT AS matched_id_sum " +
+        "FROM events e ASOF LEFT JOIN s ON e.user_id = s.user_id AND e.ts >= s.ts"),
+    QueryDef("range_join", qRangeJoin,
+      "SELECT count(*)::BIGINT AS n_pairs, coalesce(sum(l.l_orderkey), 0)::BIGINT AS order_sum, " +
+        "coalesce(sum(p.p_partkey), 0)::BIGINT AS part_sum " +
+        "FROM lineitem l JOIN part p ON l.l_extendedprice BETWEEN p.p_retailprice - 5 AND p.p_retailprice + 5"),
+    // brute-force overlap join the binned operator must reproduce exactly
+    QueryDef("interval_overlap_join", qIntervalOverlapJoin,
+      "WITH a AS (SELECT l_orderkey * 10 + l_linenumber AS a_id, " +
+        "epoch_us(l_shipdate) // 86400000000 AS a_lo, " +
+        "epoch_us(l_shipdate) // 86400000000 + l_quantity::BIGINT AS a_hi " +
+        "FROM lineitem WHERE l_orderkey % 97 = 0), " +
+        "b AS (SELECT l_orderkey * 10 + l_linenumber AS b_id, " +
+        "epoch_us(l_shipdate) // 86400000000 AS b_lo, " +
+        "epoch_us(l_shipdate) // 86400000000 + l_quantity::BIGINT AS b_hi " +
+        "FROM lineitem WHERE l_orderkey % 97 = 1) " +
+        "SELECT count(*)::BIGINT AS n_pairs, " +
+        "coalesce(sum(a_id + b_id), 0)::BIGINT AS id_sum, " +
+        "coalesce(sum(greatest(a_lo, b_lo)), 0)::BIGINT AS start_sum " +
+        "FROM a JOIN b ON a_lo <= b_hi AND b_lo <= a_hi"),
+    QueryDef("events_props", qEventsProps,
+      "SELECT event_type, count(*)::BIGINT AS n, " +
+        "sum(CAST(json_extract(props, '$.k') AS BIGINT))::BIGINT AS k_sum, " +
+        "count(CAST(json_extract(props, '$.k') AS BIGINT))::BIGINT AS n_k_nonnull " +
+        "FROM events GROUP BY event_type ORDER BY event_type"),
+    QueryDef("events_window", qEventsWindow,
+      "SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT AS ws_epoch, event_type, count(*) AS n " +
+        "FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
+    QueryDef("events_window_stream", qEventsWindowStream,
+      "SELECT epoch(time_bucket(INTERVAL '1 hour', ts))::BIGINT AS ws_epoch, event_type, count(*) AS n " +
+        "FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
+    QueryDef("mask_stream", qMaskStream,
+      "SELECT count(*) AS n, count(*) AS n_len16, count(*) AS n_match " +
+        "FROM customer WHERE c_custkey % 10 = 0", Set(Kdf)),
+    // session_window's half-open windows: a gap of EXACTLY the duration
+    // starts a new session, hence >= (vs the custom operator's >)
+    QueryDef("session_window_agg", qSessionWindowAgg,
+      "WITH l AS (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM events), " +
+        "f AS (SELECT *, CASE WHEN prev_ts IS NULL OR epoch_ms(ts) - epoch_ms(prev_ts) >= 1800000 THEN 1 ELSE 0 END AS ns FROM l), " +
+        "s AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid FROM f), " +
+        "g AS (SELECT user_id, sid, count(*) AS cnt FROM s GROUP BY 1, 2) " +
+        "SELECT count(*) AS n_sessions, sum(cnt)::BIGINT AS n_events_total, max(cnt)::BIGINT AS max_session_events FROM g"),
+    // batch equivalent of the stream-static broadcast join; per-row
+    // floor(value*100) makes the double sum integer-exact cross-engine
+    QueryDef("stream_static_join", qStreamStaticJoin,
+      "SELECT c_mktsegment, count(*)::BIGINT AS n, " +
+        "sum(floor(value * 100)::BIGINT)::BIGINT AS value_x100 " +
+        "FROM events JOIN customer ON user_id = c_custkey GROUP BY 1 ORDER BY 1"),
+    QueryDef("stream_foreach_batch", qStreamForeachBatch,
+      "SELECT count(*)::BIGINT AS n, sum(event_id)::BIGINT AS id_sum, " +
+        "sum(round(value * 100))::BIGINT AS value_sum FROM events WHERE event_type = 'purchase'"),
+    QueryDef("events_sessions_stream", qEventsSessionsStream,
+      "WITH l AS (SELECT user_id, ts, lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts FROM events), " +
+        "f AS (SELECT *, CASE WHEN prev_ts IS NULL OR epoch_ms(ts) - epoch_ms(prev_ts) > 1800000 THEN 1 ELSE 0 END AS ns FROM l), " +
+        "s AS (SELECT *, sum(ns) OVER (PARTITION BY user_id ORDER BY ts ROWS UNBOUNDED PRECEDING) AS sid FROM f), " +
+        "g AS (SELECT user_id, sid, count(*) AS cnt, max(ts) AS send FROM s GROUP BY 1, 2), " +
+        "e AS (SELECT *, max(sid) OVER (PARTITION BY user_id) AS last_sid FROM g), " +
+        "em AS (SELECT * FROM e WHERE sid < last_sid OR epoch_ms(send) + 1800000 <= (SELECT max(epoch_ms(ts)) - 600000 FROM events)) " +
+        "SELECT count(*) AS n_sessions, sum(cnt)::BIGINT AS n_events_total, max(cnt)::BIGINT AS max_session_events FROM em"),
+    // Scale: round-13 backfill (verdict ask #7): the outer interval join and the
+    // streaming CMS (state measured in StreamScaleCheck; THIS row is the
+    // batch-harness bytes view), the per-distinct-value KDF path, and the
+    // multi-pattern redaction scan.
+    // matched pairs = the batch interval join; unmatched = the batch
+    // anti-join restricted to the 2-day safety band before corpus end
+    QueryDef("stream_join_outer", qStreamJoinOuter,
+      "WITH c AS (SELECT event_id, ts, user_id FROM events WHERE event_type = 'click'), " +
+        "p AS (SELECT event_id, ts, user_id FROM events WHERE event_type = 'purchase'), " +
+        "m AS (SELECT c.event_id FROM c JOIN p ON c.user_id = p.user_id " +
+        "AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE), " +
+        "u AS (SELECT c.event_id FROM c WHERE NOT EXISTS (SELECT 1 FROM p " +
+        "WHERE p.user_id = c.user_id AND p.ts >= c.ts AND p.ts <= c.ts + INTERVAL 30 MINUTE) " +
+        "AND epoch_us(c.ts) < (SELECT max(epoch_us(ts)) FROM events) - 172800000000) " +
+        "SELECT (SELECT count(*) FROM m)::BIGINT AS n_pairs, " +
+        "(SELECT coalesce(sum(event_id), 0) FROM m)::BIGINT AS matched_click_id_sum, " +
+        "(SELECT count(*) FROM u)::BIGINT AS n_unconverted_old, " +
+        "(SELECT coalesce(sum(event_id), 0) FROM u)::BIGINT AS unconverted_id_sum", Set(Scale)),
+    QueryDef("events_dedup_stream", qEventsDedupStream,
+      "SELECT count(*)::BIGINT AS n_out, count(*)::BIGINT AS n_distinct, " +
+        "sum(event_id)::BIGINT AS id_sum FROM events"))
 }

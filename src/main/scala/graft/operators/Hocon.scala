@@ -13,7 +13,8 @@ import com.typesafe.config._
   * `MaskDataTransform.scala:52-59`), so graft accepts exactly the
   * documents the reference accepts. This object only adapts the result to
   * the plain tree [[StageConfig]] validates: objects become `Map`, lists
-  * `List`, whole numbers `Long`.
+  * `List`, whole numbers `Long`, and a number written otherwise than its
+  * value prints (`1.50`, `2.0`, `3.5e2`) a [[WrittenNumber]].
   *
   * Three policies sit on top of Typesafe's defaults:
   *  - [[parse]] has no file to resolve against, so any `include` there is
@@ -27,6 +28,12 @@ import com.typesafe.config._
   * Errors carry the line they come from.
   */
 object Hocon {
+
+  /** A number as written in the document. Typesafe's `getString` returns
+    * the written text (`1.50`, not `1.5`), and so does `toString`. */
+  final case class WrittenNumber(text: String, value: Double) {
+    override def toString: String = text
+  }
 
   def parse(text: String): Either[List[String], Map[String, Any]] =
     load(ConfigFactory.parseString(text, options(includes = false)))
@@ -67,7 +74,13 @@ object Hocon {
     case o: ConfigObject => o.asScala.map { case (k, x) => k -> toScala(x) }.toMap
     case l: ConfigList => l.asScala.map(toScala).toList
     case _ => v.unwrapped match {
-      case i: java.lang.Integer => i.toLong
+      case n: java.lang.Number =>
+        val text = v.atKey("n").getString("n")
+        if (text != n.toString) WrittenNumber(text, n.doubleValue)
+        else n match {
+          case i: java.lang.Integer => i.toLong
+          case other => other
+        }
       case other => other
     }
   }

@@ -149,6 +149,7 @@ object StageConfig {
       (v match {
         case Some(i: Int) => Right(Some(i))
         case Some(l: Long) if l.isValidInt => Right(Some(l.toInt))
+        case Some(Hocon.WrittenNumber(_, d)) if d.isValidInt => Right(Some(d.toInt))
         // all-digit strings can still overflow Int; an unguarded toInt
         // would escape as a raw NumberFormatException
         case Some(s: String) if s.forall(_.isDigit) && s.toIntOption.isDefined => Right(s.toIntOption)
@@ -158,13 +159,14 @@ object StageConfig {
     }
 
     /** HOCON types unquoted scalars (days = 14 -> Long); coerce scalars to
-      * strings like typesafe-config's getString so reference-style .conf
-      * files migrate unchanged — only nested objects/arrays/nulls reject. */
+      * strings like typesafe-config's getString (a number reads as written:
+      * `1.50` stays "1.50") so reference-style .conf files migrate
+      * unchanged — only nested objects/arrays/nulls reject. */
     def stringMap(key: String, ifEmpty: Option[String] = None): Map[String, String] =
       field(key, Map.empty[String, String]) { v =>
         (v match {
           case Some(m: Map[_, _]) if m.values.forall {
-            case _: String | _: Boolean | _: Long | _: Int | _: Double => true
+            case _: String | _: Boolean | _: Long | _: Int | _: Double | _: Hocon.WrittenNumber => true
             case _ => false
           } => Right(m.map { case (k, v) => k.toString -> v.toString })
           case Some(_) => Left(s"'$key' must be an object of scalar values.")

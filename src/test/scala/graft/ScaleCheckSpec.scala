@@ -2,16 +2,9 @@ package graft
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guards the measurement tooling against rot: ScaleCheck's query list must
-  * stay a subset of the driver contract, or the scaling artifact silently
-  * stops covering what SCALING.md claims. */
+/** The scaled corpus ScaleCheck measures on must grow like more of the
+  * same corpus, not like copies of it. */
 class ScaleCheckSpec extends AnyFunSuite {
-
-  test("every ScaleCheck query is a SparkEntry query") {
-    val missing = ScaleCheck.queriesUnderTest.filterNot(SparkEntry.queries.contains)
-    assert(missing.isEmpty, s"ScaleCheck references unknown queries: $missing")
-    assert(ScaleCheck.queriesUnderTest.nonEmpty)
-  }
 
   test("documentCopies at 104x: no cross-copy text collisions, lengths preserved") {
     val spark = SparkTestBase.spark

@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.scalatest.funsuite.AnyFunSuite
 
 class SparkEntrySpec extends AnyFunSuite {
@@ -16,38 +18,33 @@ class SparkEntrySpec extends AnyFunSuite {
     assert(df.schema("c_name").metadata.contains("mask"))
   }
 
-  test("every oracleSql key has a queries entry") {
-    val missing = SparkEntry.oracleSql.keySet.diff(SparkEntry.queries.keySet)
-    assert(missing.isEmpty, s"oracle entries without queries: $missing")
+  test("registry names are unique and every record has an oracle") {
+    // a Map literal keeps the last of two equal keys without a word, and a
+    // query with no oracle would drop to a weak rows-only check
+    val dups = SparkEntry.registry.groupBy(_.name).collect { case (n, qs) if qs.size > 1 => n }
+    assert(dups.isEmpty, s"names declared more than once: ${dups.mkString(", ")}")
+    val noOracle = SparkEntry.registry.filter(_.oracleSql.trim.isEmpty).map(_.name)
+    assert(noOracle.isEmpty, s"records without oracle SQL: ${noOracle.mkString(", ")}")
   }
 
-  test("all queries run at sf0.001 and return rows") {
-    SparkEntry.queries.foreach { case (name, fn) =>
-      val n = fn(spark, sf).count()
-      assert(n >= 0, name) // pair queries may legitimately return 0 rows at tiny sf
-    }
+  test("named() keeps the order given and names every unknown name") {
+    assert(SparkEntry.named("hll_distinct, dp_counts").map(_.name) === Seq("hll_distinct", "dp_counts"))
+    val e = intercept[IllegalArgumentException](SparkEntry.named("dp_counts,hll_distnct,no_such_query"))
+    assert(e.getMessage.contains("hll_distnct, no_such_query"))
   }
 
-  test("every queries entry has an oracle (no silent rows-only downgrades)") {
-    // the r9 gapfill regression hid because a query could drop out of the
-    // correctness report without anything failing; a query with no oracle
-    // gets only a weak rows-only check, so adding one must be a conscious,
-    // test-visible decision — via this allowlist, not an omission
-    val rowsOnlyAllowed = Set.empty[String]
-    val missing = SparkEntry.queries.keySet
-      .diff(SparkEntry.oracleSql.keySet).diff(rowsOnlyAllowed)
-    assert(missing.isEmpty, s"queries without an oracle: $missing")
-  }
-
-  test("no query emits unaliased aggregate column names") {
-    // the driver's compare sorts columns BY NAME before hashing values, so
-    // a Spark column named sum(l_quantity) against an oracle alias sum_qty
-    // hash-mismatches even with identical values. Unaliased aggregates are
-    // exactly the names containing parens/spaces — ban them structurally.
-    val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
-      val badCols = fn(spark, sf).schema.fieldNames
-        .filter(c => c.contains("(") || c.contains(" "))
-      if (badCols.isEmpty) Nil else Seq(s"$name: ${badCols.mkString(", ")}")
+  test("every query collects at sf0.001 and emits only aliased column names") {
+    // One build per query: construction alone runs jobs for some. collect,
+    // not count: count() lets Catalyst prune the work of columns it does not
+    // need. The driver's compare sorts columns BY NAME before hashing
+    // values, so a Spark column named sum(l_quantity) against an oracle
+    // alias sum_qty hash-mismatches even with identical values; unaliased
+    // aggregates are exactly the names containing parens/spaces.
+    val offenders = SparkEntry.registry.flatMap { q =>
+      val df = try { val df = q.run(spark, sf); df.collect(); df }
+      catch { case NonFatal(e) => fail(s"${q.name} failed", e) }
+      val badCols = df.schema.fieldNames.filter(c => c.contains("(") || c.contains(" "))
+      if (badCols.isEmpty) Nil else Seq(s"${q.name}: ${badCols.mkString(", ")}")
     }
     assert(offenders.isEmpty, offenders.mkString("\n"))
   }

@@ -174,4 +174,23 @@ class StageConfigSpec extends AnyFunSuite {
     assert(spark.table("sc_out").count() === 1)
     spark.catalog.dropTempView("sc_out")
   }
+
+  test("string maps read a number as written, as Typesafe's getString does; numPartitions reads its value") {
+    val Right(stages) = StageConfig.parsePipeline(
+      """stages = [
+        |  { name = m, inputView = a, outputView = b, params { f = 3.5e2, g = 1.50, h = 2.0, n = 32, r = 0.5 } }
+        |  { type = MetadataTransform, name = t, inputView = b, outputView = c, treatments { x = 1.50 } }
+        |  { type = SQLTransform, name = s, sql = "SELECT 1", outputView = d, sqlParams { k = 1e3 } }
+        |  { type = ParquetLoad, name = l, inputView = d, outputURI = out, numPartitions = 2.0 }
+        |]""".stripMargin): @unchecked
+    val List(m: StageConfig.MaskStage, t: StageConfig.MetadataStage, s: StageConfig.SqlStage,
+      l: StageConfig.LoadStage) = stages: @unchecked
+    assert(m.params === Map("f" -> "3.5e2", "g" -> "1.50", "h" -> "2.0", "n" -> "32", "r" -> "0.5"))
+    assert(t.treatments === Map("x" -> "1.50"))
+    assert(s.sqlParams === Map("k" -> "1e3"))
+    assert(l.numPartitions === Some(2))
+    assert(StageConfig.parsePipeline(
+      "stages = [ { type = ParquetLoad, name = l, inputView = d, outputURI = out, numPartitions = 2.5 } ]") ===
+      Left(List("stage 0 ('l'): 'numPartitions' must be an integer.")))
+  }
 }
