@@ -5,7 +5,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** One query of the registry, stated once: its name, how to build its
   * result over a scale-factor directory, the DuckDB SQL that computes the
   * same result over the same parquet tables, and the tags harnesses select
-  * it by. [[SparkEntry.registry]] lists every record. */
+  * it by. [[SparkEntry.registry]] lists every record; [[Bench]] runs all of
+  * them, and [[ScaleCheck]] the `Scale`-tagged ones. */
 final case class QueryDef(
     name: String,
     run: (SparkSession, String) => DataFrame,
@@ -17,8 +18,4 @@ object QueryDef {
 
   /** Measured by [[ScaleCheck]] at 1x and SCALEx. */
   case object Scale extends Tag
-
-  /** KDF-bound: [[Bench]] also reports its time divided by the KDF
-    * calibration constant (`queries_norm`). */
-  case object Kdf extends Tag
 }

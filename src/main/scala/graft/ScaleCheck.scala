@@ -23,6 +23,8 @@ import org.apache.spark.sql.functions._
   * Output: one JSON line (also target/scaling.json) with per-query seconds
   * at 1x and SCALEx plus the time ratio; a time ratio near the data ratio
   * (or below, when fixed startup dominates at 1x) means linear scaling.
+  * Each side also reports its shuffle bytes (read plus written), counted by
+  * [[Metrics.measure]], and the bytes ratio between them.
   *
   * The measured set is the [[QueryDef.Scale]]-tagged records of
   * [[SparkEntry.registry]]; each record carries the comment saying why its
@@ -30,35 +32,6 @@ import org.apache.spark.sql.functions._
   * `SPARK_GRAFT_SCALE_QUERIES=a,b` measures the named queries instead.
   */
 object ScaleCheck {
-
-  /** Total shuffle bytes written across all tasks, collected off the
-    * listener bus. Wall-clock ratios conflate CPU with data movement; the
-    * bytes ratio isolates the term that decides cluster behavior — a
-    * super-linear shuffle-bytes growth is a scale-killer even when CPU
-    * noise hides it in the timings. */
-  private class ShuffleBytesListener extends org.apache.spark.scheduler.SparkListener {
-    val written = new java.util.concurrent.atomic.AtomicLong()
-    val read = new java.util.concurrent.atomic.AtomicLong()
-    override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-      val m = te.taskMetrics
-      if (m != null) {
-        written.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def reset(): Unit = { written.set(0); read.set(0) }
-    /** The listener bus is async: poll until the counters stop moving so a
-      * query's last tasks are not attributed to the next query. */
-    def settle(): (Long, Long) = {
-      var last = (-1L, -1L)
-      var cur = (written.get(), read.get())
-      var spins = 0
-      while (cur != last && spins < 40) { // max ~2s
-        last = cur; Thread.sleep(50); cur = (written.get(), read.get()); spins += 1
-      }
-      cur
-    }
-  }
 
   /** The SCALEx measurement corpus: copy k of each document shifts doc_id
     * into a disjoint range and rewrites text through a per-copy character
@@ -169,31 +142,30 @@ object ScaleCheck {
         .write.mode("overwrite").parquet(s"$scaledDir/customer.parquet")
     }
 
-    val bytesListener = new ShuffleBytesListener
-    spark.sparkContext.addSparkListener(bytesListener)
-
     // (seconds, shuffle bytes written, shuffle bytes read) — time is min of
     // two passes (GC-spike noise); bytes come from the second pass alone
-    // (they are plan-deterministic, and the first pass includes cache fills)
+    // (the first pass includes cache fills). Bytes, not walls, decide
+    // cluster behavior: wall ratios conflate CPU with data movement, and
+    // super-linear shuffle growth is a scale-killer even when CPU noise
+    // hides it in the timings.
     def time(fn: (SparkSession, String) => DataFrame, dir: String): (Double, Long, Long) = {
-      var bytes = (0L, 0L)
-      val secs = (1 to 2).map { _ =>
-        bytesListener.settle()
-        bytesListener.reset()
-        val t0 = System.nanoTime()
-        // execute fully (every column materialized into UnsafeRows) but
-        // DISCARD on the executors: a collect() here capped the harness at
-        // spark.driver.maxResultSize — segment_viterbi's per-token result
-        // is ~1 GiB of driver traffic at 100x, and shipping results to the
-        // driver is harness cost, not operator cost
-        fn(spark, dir).queryExecution.toRdd.count()
-        val e = (System.nanoTime() - t0) / 1e9
-        bytes = bytesListener.settle()
+      val passes = (1 to 2).map { _ =>
+        val pass = Metrics.measure(spark) {
+          val t0 = System.nanoTime()
+          // execute fully (every column materialized into UnsafeRows) but
+          // DISCARD on the executors: a collect() here capped the harness at
+          // spark.driver.maxResultSize — segment_viterbi's per-token result
+          // is ~1 GiB of driver traffic at 100x, and shipping results to the
+          // driver is harness cost, not operator cost
+          fn(spark, dir).queryExecution.toRdd.count()
+          (System.nanoTime() - t0) / 1e9
+        }
         try { spark.catalog.clearCache() } catch { case _: Throwable => }
         System.gc()
-        e
-      }.min
-      (secs, bytes._1, bytes._2)
+        pass
+      }
+      val bytes = passes.last._2
+      (passes.map(_._1).min, bytes.shuffleWriteBytes, bytes.shuffleReadBytes)
     }
 
     val rows = measured.map { case QueryDef(name, fn, _, _) =>

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.QueryDef.{Kdf, Scale}
+import graft.QueryDef.Scale
 import graft.operators.MaskTransform
 
 /** Query registry: sketch stores, sessions/funnels, privacy/DP releases,
@@ -2896,7 +2896,7 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
         "sum(CASE WHEN cs < 5 THEN cs ELSE 0 END)::BIGINT AS rows_below_k, " +
         "(count(*) = sum(CASE WHEN cs >= 5 THEN 1 ELSE 0 END))::BIGINT AS all_k_ok, " +
         "(count(*) = sum(CASE WHEN ld >= 3 THEN 1 ELSE 0 END))::BIGINT AS all_l_ok " +
-        "FROM r GROUP BY phase ORDER BY phase", Set(Scale, Kdf)),
+        "FROM r GROUP BY phase ORDER BY phase", Set(Scale)),
     // ladder of balance-bucket widths; chosen = minimal width meeting k=10
     QueryDef("generalize_k_anon", qGeneralizeKAnon,
       "WITH c AS (SELECT c_mktsegment AS seg, round(c_acctbal * 100)::BIGINT AS cents FROM customer), " +

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.QueryDef.{Kdf, Scale}
+import graft.QueryDef.Scale
 import graft.operators.MaskTransform
 
 /** Query registry: masking/stage/FPE family, dedup core, multimodal
@@ -1228,9 +1228,9 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     QueryDef("mask_string_props", qMaskStringProps,
       "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_len16, " +
         "count(c_name) AS n_alpha, count(c_name) AS n_stable, count(c_name) AS n_numeric, " +
-        "count(DISTINCT c_name) AS n_distinct_in, count(DISTINCT c_name) AS n_distinct_out FROM customer", Set(Kdf)),
+        "count(DISTINCT c_name) AS n_distinct_in, count(DISTINCT c_name) AS n_distinct_out FROM customer"),
     QueryDef("mask_format_props", qMaskFormatProps,
-      "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_formatted FROM customer", Set(Kdf)),
+      "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_formatted FROM customer"),
     // Scale: round-16: FF1 format-preserving masking (per-row AES cipher work,
     // zero shuffle beyond the final 1-row agg — scan-bound by construction); the
     // DP count release (one counting shuffle with map-side combine + a per-row
@@ -1252,7 +1252,7 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
       "SELECT count(*) AS n, count(*) AS n_nonnull, count(*) AS n_format, " +
         "count(*) AS n_stable, count(*) AS n_roundtrip, count(*) AS n_tweak_sep, " +
         "count(DISTINCT c_custkey) AS n_distinct_in, count(DISTINCT c_custkey) AS n_distinct_out " +
-        "FROM customer", Set(Scale, Kdf)),
+        "FROM customer", Set(Scale)),
     // Scale: see warc_charset.
     // rank-then-encipher contract: every property holds for every row and
     // masking is injective on the observed population (distinct-preserving)
@@ -1261,45 +1261,45 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
         "count(*) AS n_stable, count(*) AS n_tweak_sep, count(*) AS n_roundtrip, " +
         "count(DISTINCT round(c_acctbal * 100)) AS n_distinct_in, " +
         "count(DISTINCT round(c_acctbal * 100)) AS n_distinct_out, " +
-        "count(*) AS n_d_in_domain, count(*) AS n_d_roundtrip FROM customer", Set(Scale, Kdf)),
+        "count(*) AS n_d_in_domain, count(*) AS n_d_roundtrip FROM customer", Set(Scale)),
     QueryDef("mask_date_props", qMaskDateProps,
-      "SELECT count(*) AS n, count(o_orderdate) AS n_nonnull, count(o_orderdate) AS n_inbounds FROM orders", Set(Kdf)),
+      "SELECT count(*) AS n, count(o_orderdate) AS n_nonnull, count(o_orderdate) AS n_inbounds FROM orders"),
     QueryDef("mask_timestamp_props", qMaskTimestampProps,
-      "SELECT count(*) AS n, count(l_shipdate) AS n_nonnull, count(l_shipdate) AS n_inbounds FROM lineitem", Set(Kdf)),
+      "SELECT count(*) AS n, count(l_shipdate) AS n_nonnull, count(l_shipdate) AS n_inbounds FROM lineitem"),
     QueryDef("mask_decimal_props", qMaskDecimalProps,
-      "SELECT count(*) AS n, count(c_acctbal) AS n_nonnull, count(c_acctbal) AS n_inbounds FROM customer", Set(Kdf)),
+      "SELECT count(*) AS n, count(c_acctbal) AS n_nonnull, count(c_acctbal) AS n_inbounds FROM customer"),
     QueryDef("mask_transform", qMaskTransform,
       "SELECT count(*) AS n, count(c_name) AS n_name_masked, " +
-        "count(DISTINCT c_mktsegment) AS n_segments, count(c_acctbal) AS n_bal_inbounds FROM customer", Set(Kdf)),
+        "count(DISTINCT c_mktsegment) AS n_segments, count(c_acctbal) AS n_bal_inbounds FROM customer"),
     QueryDef("mask_name_vocab", qMaskNameVocab,
       "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_in_vocab, " +
-        "count(c_name) AS n_stable FROM customer", Set(Kdf)),
+        "count(c_name) AS n_stable FROM customer"),
     QueryDef("mask_email_vocab", qMaskEmailVocab,
-      "SELECT count(*) AS n, count(c_name) AS n_valid FROM customer", Set(Kdf)),
+      "SELECT count(*) AS n, count(c_name) AS n_valid FROM customer"),
     QueryDef("mask_argon2_rate", qMaskArgon2Rate,
       "SELECT count(*) AS n, count(c_name) AS n_nonnull, count(c_name) AS n_len16, " +
-        "count(DISTINCT c_name) AS n_distinct_out FROM customer", Set(Kdf)),
+        "count(DISTINCT c_name) AS n_distinct_out FROM customer"),
     // Scale: see stream_join_outer.
     QueryDef("mask_via_distinct", qMaskViaDistinct,
       "SELECT count(*) AS n, count(c_name) AS n_nonnull, " +
-        "count(DISTINCT c_name) AS n_distinct_out FROM customer", Set(Scale, Kdf)),
+        "count(DISTINCT c_name) AS n_distinct_out FROM customer", Set(Scale)),
     QueryDef("stage_roundtrip", qStageRoundtrip,
       "SELECT count(*) AS n, count(c_name) AS n_len16, count(*) AS records_detail, " +
-        "5::BIGINT AS out_cols FROM customer", Set(Kdf)),
+        "5::BIGINT AS out_cols FROM customer"),
     QueryDef("fixture_e2e", qFixtureE2e,
       "SELECT 100::BIGINT AS n, 95::BIGINT AS n_user_nonnull, 95::BIGINT AS n_user_len16, " +
         "96::BIGINT AS n_birth_nonnull, 96::BIGINT AS n_birth_day1, " +
         "100::BIGINT AS n_create_nonnull, 100::BIGINT AS n_create_min0, " +
-        "100::BIGINT AS n_create_inbounds", Set(Kdf)),
+        "100::BIGINT AS n_create_inbounds"),
     // the masked name stays 16 chars and non-null for every input row, and
     // the production-gated stage must be skipped under the test environment
     QueryDef("stage_pipeline", qStagePipeline,
       "SELECT count(*) AS n, count(c_name) AS n_len16, sum(c_custkey)::BIGINT AS custkey_sum, " +
-        "1::BIGINT AS prod_stage_skipped FROM customer", Set(Kdf)),
+        "1::BIGINT AS prod_stage_skipped FROM customer"),
     QueryDef("stage_config_errors", qStageConfigErrors,
       "SELECT 3::BIGINT AS n_errors_bad, 1::BIGINT AS n_unknown_bad, " +
         "0::BIGINT AS good_failed, 1::BIGINT AS good_persist, " +
-        "0::BIGINT AS hocon_good_failed, 2::BIGINT AS hocon_n_errors_bad", Set(Kdf)),
+        "0::BIGINT AS hocon_good_failed, 2::BIGINT AS hocon_n_errors_bad"),
     QueryDef("dedup_exact", qDedupExact,
       "SELECT count(DISTINCT text) AS n_clusters, count(*) AS n_rows FROM documents"),
     // exact char-5-gram jaccard pairs; the LSH output is compared against the

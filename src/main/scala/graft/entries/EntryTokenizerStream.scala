@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.QueryDef.{Kdf, Scale}
+import graft.QueryDef.Scale
 import graft.operators.MaskTransform
 
 /** Query registry: tokenizer family (BPE char/byte/unicode, unigram,
@@ -2357,7 +2357,7 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
         "FROM events GROUP BY 1, 2 ORDER BY 1, 2"),
     QueryDef("mask_stream", qMaskStream,
       "SELECT count(*) AS n, count(*) AS n_len16, count(*) AS n_match " +
-        "FROM customer WHERE c_custkey % 10 = 0", Set(Kdf)),
+        "FROM customer WHERE c_custkey % 10 = 0"),
     // session_window's half-open windows: a gap of EXACTLY the duration
     // starts a new session, hence >= (vs the custom operator's >)
     QueryDef("session_window_agg", qSessionWindowAgg,

@@ -7,7 +7,8 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
 /** Bridge into `private[sql]` surface needed to lift a custom Catalyst
   * Expression into a public `Column` (standard extension-point technique —
   * the alternatives are registering a FunctionBuilder per session or string
-  * SQL, both heavier for a library-internal expression). */
+  * SQL, both heavier for a library-internal expression), and into the
+  * `private[spark]` listener bus that [[graft.Metrics]] drains. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -23,4 +24,9 @@ object GraftBridge {
   def registerFunction(spark: SparkSession,
                        f: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)): Unit =
     spark.asInstanceOf[classic.SparkSession].sessionState.functionRegistry.registerFunction(f._1, f._2, f._3)
+
+  /** Blocks until every event posted so far has reached every listener
+    * (`private[spark]` `listenerBus`). Events are delivered asynchronously,
+    * so a listener read without this can miss a job's last tasks. */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.GraftTestHooks
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{Metrics, SparkTestBase}
 
 class DedupSpec extends AnyFunSuite {
 
@@ -181,10 +181,10 @@ class DedupSpec extends AnyFunSuite {
     // shuffle stage as its own job, so the figure is a pin, not a formula —
     // any extra per-round action (a count() per round) raises it
     val chain = (0L until 9L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val (comp, jobs) = GraftTestHooks.countJobs(spark.sparkContext)(
+    val (comp, counters) = Metrics.measure(spark)(
       Dedup.connectedComponents(chain).collect())
     assert(comp.map(_.getLong(1)).distinct.toSeq === Seq(0L))
-    assert(jobs === 53)
+    assert(counters.jobs === 53)
   }
 
   test("incremental near-dedup flags exactly the new docs duplicating the corpus") {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.GraftTestHooks
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{Metrics, SparkTestBase}
 
 class KCoreSpec extends AnyFunSuite {
 
@@ -77,9 +77,9 @@ class KCoreSpec extends AnyFunSuite {
     // the live edge count rides each round's checkpoint; AQE runs each
     // shuffle stage as its own job, so the figure is a pin, not a formula —
     // any extra per-round action (a count() per round) raises it
-    val (got, jobs) = GraftTestHooks.countJobs(spark.sparkContext)(core(triangleChain, k = 3))
+    val (got, counters) = Metrics.measure(spark)(core(triangleChain, k = 3))
     assert(got.keySet === Set(0L, 1L, 2L, 3L))
-    assert(jobs === 16)
+    assert(counters.jobs === 16)
   }
 
   test("a peel cut short by maxIter fails loudly") {

@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.GraftTestHooks
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.SparkTestBase
+import graft.{Metrics, SparkTestBase}
 
 class LabelPropSpec extends AnyFunSuite {
 
@@ -107,13 +107,13 @@ class LabelPropSpec extends AnyFunSuite {
     // budget must therefore run ~2 rounds of jobs, not 50. Each round is
     // at least one job (the eager checkpoint), so an early exit is visible
     // as a job count far below the budget. Labels must match the full run.
-    val (got, jobs) = GraftTestHooks.countJobs(spark.sparkContext)(
+    val (got, counters) = Metrics.measure(spark)(
       labelsOf(twoTriangles, twoTriangleNodes, iters = 50))
     assert(got === scalarLpa(twoTriangles, twoTriangleNodes, iters = 50))
-    assert(jobs < 25, s"expected an early exit well under the 50-round budget, saw $jobs jobs")
+    assert(counters.jobs < 25, s"expected an early exit well under the 50-round budget, saw ${counters.jobs} jobs")
     // the exact count (AQE runs each shuffle stage as its own job, so this
     // is a pin, not a formula): any extra per-round action raises it
-    assert(jobs === 20)
+    assert(counters.jobs === 20)
   }
 
   test("checkpoints reliably under a checkpoint dir, same rows as the local run") {
