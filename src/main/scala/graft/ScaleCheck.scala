@@ -282,8 +282,12 @@ object StreamScaleCheck {
         .option("maxFilesPerTrigger", "1")
         .parquet(feedDir.getAbsolutePath)
       val out = build(src())
+      // a fresh checkpoint per operator: a reused one would replay from
+      // the committed offset and measure nothing
+      val ckpt = new java.io.File(s"target/streamscale$scale-$provider-ckpt-$name")
+      org.apache.commons.io.FileUtils.deleteQuietly(ckpt)
       val q = out.writeStream.format("noop")
-        .option("checkpointLocation", s"target/streamscale$scale-$provider-ckpt-$name")
+        .option("checkpointLocation", ckpt.getPath)
         .outputMode("append")
         .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -304,14 +308,6 @@ object StreamScaleCheck {
         s"""{"batch":$b,"input_rows":$in,"state_rows":$rows,"state_bytes":$bytes,"watermark":"$wm"}"""
       }.mkString("[", ",", "]")
       s""""$name":{"total_input":$totalIn,"max_state_rows":$maxState,"last_state_rows":$lastState,"batches":$rowsJson}"""
-    }
-    // fresh checkpoints per run: a reused checkpoint would replay from the
-    // committed offset and measure nothing
-    (0 until 1).foreach { _ =>
-      ops(spark).foreach { case (name, _) =>
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          new java.io.File(s"target/streamscale$scale-$provider-ckpt-$name"))
-      }
     }
     val json = s"""{"scale":$scale,"slices":$slices,"base":"$baseDir","queries":{${results.mkString(",")}}}"""
     println(json)

@@ -110,17 +110,10 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
     val rows = graft.operators.ProductQuant.quantizedRows(emb, "vec_id", "embedding", 8, subDim)
     val cb = graft.operators.ProductQuant.trainCodebooks(rows, m = 8, subDim = subDim,
       nCodes = 16, lloydIters = 1)
-    val schema = spark.read.parquet(s"$dir/embeddings.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "embeddings.parquet").parquet(dir)
+    val src = streamTable(spark, dir, "embeddings")
     val scored = graft.operators.ProductQuant.adcScores(src, "vec_id", "embedding", cb, q, m = 8)
       .where(col("vid") =!= 0L)
-    val sink = "graft_stream_pq_sink"
-    val sq = scored.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    sq.awaitTermination()
-    spark.table(sink).agg(
+    graft.streaming.Streaming.drain(scored, "stream_pq_probe", "append").agg(
       count(lit(1)).as("n"),
       sum(col("pq_dist")).cast("long").as("dist_sum"),
       min(col("pq_dist")).cast("long").as("dist_min"),
@@ -1235,14 +1228,9 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
       docs.where(col("doc_id") % 2 === 0), "text", "lang", nBuckets = 64)
     val model = Classifier.collectModel(counts, docCounts, nBuckets = 64)
     val preds = Classifier.predictNbInRow(
-      nbPlanted(streamDocuments(spark, dir)).where(col("doc_id") % 2 === 1),
+      nbPlanted(streamTable(spark, dir, "documents")).where(col("doc_id") % 2 === 1),
       "doc_id", "text", model, nBuckets = 64)
-    val sink = "graft_stream_nb_sink"
-    val q = preds.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink)
+    graft.streaming.Streaming.drain(preds, "stream_nb_classify", "append")
       .join(docs.where(col("doc_id") % 2 === 1).select(col("doc_id"), col("lang")), "doc_id")
       .groupBy(col("lang"), col("pred")).agg(count(lit(1)).as("n_docs"))
       .orderBy(col("lang"), col("pred"))

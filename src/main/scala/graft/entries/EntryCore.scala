@@ -17,17 +17,15 @@ private[graft] trait EntryCore {
     spark.read.parquet(s"$dir/$name.parquet")
 
 
-  /** App-id-suffixed temp-store directory, pre-cleaned (advisor r15 #4):
-    * the materialized-store queries used FIXED java.io.tmpdir paths with
-    * delete-then-rewrite, so two concurrent drivers on one host could
-    * delete each other's in-flight store mid-probe. The application id
-    * keys the path per driver; within one application the delete keeps
-    * the rerun-from-scratch contract (stale partition values from a
-    * previous run at a different scale factor must not survive into a
-    * rebuilt store). */
+  /** Temp-store directory under the application's own temp root
+    * (`SparkFiles.getRootDirectory()`), pre-cleaned: the root is per
+    * driver, so two concurrent drivers on one host never delete each
+    * other's in-flight store, and `spark.stop()` deletes it with the
+    * root. Within one application the delete keeps the rerun-from-scratch
+    * contract (stale partition values from a previous run at a different
+    * scale factor must not survive into a rebuilt store). */
   private[graft] def freshTmpStore(spark: SparkSession, name: String): java.io.File = {
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"${name}_${spark.sparkContext.applicationId}")
+    val f = new java.io.File(org.apache.spark.SparkFiles.getRootDirectory(), name)
     if (f.exists()) org.apache.commons.io.FileUtils.deleteDirectory(f)
     f
   }
@@ -375,6 +373,24 @@ private[graft] trait EntryCore {
   }
 
 
+  /** [[graft.streaming.Streaming.drain]] in append mode for a stream-stream
+    * join, under 8 shuffle partitions. Join state cost scales with
+    * state-store instance count (4 stores x shuffle partitions x commit
+    * per micro-batch), not data volume at this scale, so the state
+    * partitioning is bounded for the join and the session default restored
+    * afterwards (a stream copies the session conf when it starts, and the
+    * value is pinned in its checkpoint). Measured 6.8s -> 2.5s at
+    * sf0.1/32cpu. A production deployment sizes this to join-key
+    * cardinality, not to the session's CPU-count default. */
+  private[graft] def drainStreamJoin(joined: DataFrame, name: String): DataFrame = {
+    val conf = joined.sparkSession.conf
+    val prevParts = conf.get("spark.sql.shuffle.partitions")
+    conf.set("spark.sql.shuffle.partitions", "8")
+    try graft.streaming.Streaming.drain(joined, name, "append")
+    finally conf.set("spark.sql.shuffle.partitions", prevParts)
+  }
+
+
   /** Stream-stream interval join run as a REAL one-shot stream: clicks and
     * purchases are two independent streaming readers over the events file,
     * joined per user with purchase time in [click, click + 30 min]
@@ -384,69 +400,28 @@ private[graft] trait EntryCore {
     * immediately, so the emitted pair set is exactly the batch join,
     * which the oracle recomputes. */
   private[graft] def qStreamStreamJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def sideStream(eventType: String): DataFrame = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    def sideStream(eventType: String): DataFrame = streamTable(spark, dir, "events")
       .where(col("event_type") === eventType)
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"))
     val joined = graft.streaming.Streaming.intervalJoin(
       sideStream("click"), sideStream("purchase"), gapMinutes = 30)
-    val sink = "graft_stream_join_sink"
-    // stream-stream join state cost scales with state-store instance count
-    // (4 stores x shuffle partitions x commit per micro-batch), not data
-    // volume at this scale: bound the state partitioning for the join and
-    // restore the session default afterwards (the value is captured at
-    // query start and pinned in the checkpoint). Measured 6.8s -> 2.5s at
-    // sf0.1/32cpu. A production deployment sizes this to join-key
-    // cardinality, not to the session's CPU-count default.
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = try {
-      joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
-    spark.table(sink).agg(
+    drainStreamJoin(joined, "stream_stream_join").agg(
       count(lit(1)).as("n_pairs"),
       sum(col("left_id")).cast("long").as("click_id_sum"),
       sum(col("right_id")).cast("long").as("purchase_id_sum"))
   }
 
 
-  /** STREAMING Count-Min: the cell table as a complete-mode streaming
-    * aggregate over the document token stream — state is the sketch
-    * itself, 4×1024 rows BY CONSTRUCTION at any input volume (the
-    * sketch-family composition of the streaming-state story measured in
-    * SCALING.md). AvailableNow one-shot; the oracle is the batch cell
-    * replay, so stream and batch sketches must agree cell-for-cell,
-    * summarized as (n_cells, total_mass, max_cell, cell_checksum). */
-  /** Layout-sensitive streaming source for the documents table: the
-    * driver's testdata ships documents.parquet as a single FILE
-    * (FileStreamSource rejects a file path — "basePath must be a
-    * directory" — so that layout needs the parent dir + a leaf-file
+  /** Layout-sensitive streaming source for a table, the one streaming
+    * reader of the registry: the driver's testdata ships each table as a
+    * single FILE (FileStreamSource rejects a file path — "basePath must
+    * be a directory" — so that layout needs the parent dir + a leaf-file
     * glob), while any Spark-written copy, including the ScaleCheck
     * corpora, is a DIRECTORY of part files — where the same leaf glob
-    * matches NOTHING and the stream silently reads zero rows (the r13
-    * 10x ScaleCheck row caught exactly that: 0 shuffle bytes). One stat
-    * call picks the right form for both. */
-  private[graft] def streamDocuments(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val tablePath = new java.io.File(s"$dir/documents.parquet")
-    if (tablePath.isDirectory)
-      spark.readStream.schema(schema).parquet(tablePath.getPath)
-    else
-      spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet").parquet(dir)
-  }
-
-
-  /** Layout-sensitive streaming source for any table (the
-    * [[streamDocuments]] rule generalized): the driver's testdata ships
-    * single FILES, Spark-written copies (ScaleCheck corpora) are
-    * DIRECTORIES — each layout needs a different reader form, and the
-    * wrong one silently reads zero rows. */
+    * matches NOTHING and the stream silently reads zero rows (the r13 10x
+    * ScaleCheck row caught exactly that: 0 shuffle bytes). One stat call
+    * picks the right form for both. */
   private[graft] def streamTable(spark: SparkSession, dir: String, name: String): DataFrame = {
     val schema = spark.read.parquet(s"$dir/$name.parquet").schema
     val tablePath = new java.io.File(s"$dir/$name.parquet")
@@ -1163,7 +1138,7 @@ private[graft] trait EntryCore {
     // frame — rotation makes copies' vocabularies disjoint, so the distinct-word
     // term grows ~linearly and seeding/E-step cost must track IT, not the
     // corpus); the streaming kNN probe (fixed 50-vector stream against the grown
-    // stored index through foreachBatch — the knn_incremental law with trigger
+    // stored index through a per-batch sink — the knn_incremental law with trigger
     // machinery on top); and the drift report (planted fixed-size shards: cost
     // must be FLAT — the monitor never touches the corpus).
     // The unigram trainer's WHOLE trajectory replayed: word histogram,

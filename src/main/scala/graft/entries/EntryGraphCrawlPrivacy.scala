@@ -148,12 +148,7 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
         col("user_id").cast("string").as("uid"))
     val regs = graft.streaming.Streaming.windowedHllRegisters(
       ev, "ts", "uid", m = 256, windowLength = "1 hour", watermark = "10 minutes")
-    val sink = "graft_stream_hll_window_sink"
-    val q = regs.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink)
+    graft.streaming.Streaming.drain(regs, "stream_hll_window", "append")
       .groupBy(col("ws"))
       .agg(count(lit(1)).as("n_filled"),
         sum(col("rho")).cast("long").as("sum_rho"),
@@ -181,12 +176,8 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
       .where(e.isNotNull && size(e) >= dim && !exists(e, _.isNull))
       .select(graft.operators.Pca.quantize(e, dim, 1000L).as("q"))
       .agg(graft.plans.GramMatrixAgg.gramSketch(col("q"), dim).as("g"))
-    val sink = "graft_stream_gram_sink"
-    val q = state.writeStream.format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val flat = spark.table(sink).collect()(0).getSeq[Long](0)
+    val flat = graft.streaming.Streaming.drain(state, "stream_gram", "complete")
+      .collect()(0).getSeq[Long](0)
     val st = graft.operators.Pca.stateOf(flat, dim, 1000L)
     val mod = 1000000007L
     val sumsChecksum = st.sums.zipWithIndex
@@ -200,15 +191,17 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
   }
 
 
+  /** STREAMING Count-Min: the cell table as a complete-mode streaming
+    * aggregate over the document token stream — state is the sketch
+    * itself, 4×1024 rows BY CONSTRUCTION at any input volume (the
+    * sketch-family composition of the streaming-state story measured in
+    * SCALING.md). AvailableNow one-shot; the oracle is the batch cell
+    * replay, so stream and batch sketches must agree cell-for-cell,
+    * summarized as (n_cells, total_mass, max_cell, cell_checksum). */
   private[graft] def qStreamCms(spark: SparkSession, dir: String): DataFrame = {
-    val toks = sketchTokens(streamDocuments(spark, dir))
+    val toks = sketchTokens(streamTable(spark, dir, "documents"))
     val cells = graft.operators.Sketches.cmsAggregate(toks, "tok", depth = 4, width = 1024)
-    val sink = "graft_stream_cms_sink"
-    val q = cells.writeStream.format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink).agg(
+    graft.streaming.Streaming.drain(cells, "stream_cms", "complete").agg(
       count(lit(1)).as("n_cells"),
       coalesce(sum(col("cnt")), lit(0L)).cast("long").as("total_mass"),
       coalesce(max(col("cnt")), lit(0L)).cast("long").as("max_cell"),
@@ -226,16 +219,11 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * `quantile_bottomk` — the streamed sketch must land on exactly the
     * batch sketch's (prio, v) set, estimates included. */
   private[graft] def qStreamQuantile(spark: SparkSession, dir: String): DataFrame = {
-    val lens = streamDocuments(spark, dir)
+    val lens = streamTable(spark, dir, "documents")
       .where(col("text").isNotNull)
       .select(col("doc_id"), length(col("text")).cast("long").as("len"))
     val agg = graft.operators.QuantileSketch.buildAgg(lens, "doc_id", "len", k = 1024)
-    val sink = "graft_stream_quantile_sink"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    val sk = spark.table(sink)
+    val sk = graft.streaming.Streaming.drain(agg, "stream_quantile", "complete")
       .select(explode(col("sk")).as("p"))
       .select(col("p.key").as("prio"), col("p.value").as("v"))
     graft.operators.QuantileSketch.estimates(sk, Seq(2500, 5000, 7500, 9900))
@@ -254,14 +242,9 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * register table token-for-token, so stream and batch sketches must
     * agree register-for-register via the position-weighted checksum. */
   private[graft] def qStreamHll(spark: SparkSession, dir: String): DataFrame = {
-    val toks = sketchTokens(streamDocuments(spark, dir))
+    val toks = sketchTokens(streamTable(spark, dir, "documents"))
     val regs = graft.operators.Sketches.hllRegisters(toks, "tok", m = 1024)
-    val sink = "graft_stream_hll_sink"
-    val q = regs.writeStream.format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink).agg(
+    graft.streaming.Streaming.drain(regs, "stream_hll", "complete").agg(
         count(lit(1)).as("n_filled"),
         coalesce(sum(col("rho")), lit(0L)).cast("long").as("sum_rho"),
         coalesce(max(col("rho")), lit(0L)).cast("long").as("max_rho"),
@@ -785,16 +768,9 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * gating composes with ingestion unchanged); AvailableNow one-shot,
     * batch-equivalent aggregate oracle. */
   private[graft] def qStreamQualityFilter(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val src = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val src = streamTable(spark, dir, "documents")
     val rules = graft.operators.QualityRules.gopherRules(src, "doc_id", "text")
-    val sink = "graft_stream_quality_sink"
-    val q = rules.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink).agg(
+    graft.streaming.Streaming.drain(rules, "stream_quality_filter", "append").agg(
       count(lit(1)).as("n_docs"),
       sum(col("pass").cast("long")).as("n_pass"),
       sum(col("bullet_ok").cast("long")).as("n_bullet_ok"),
@@ -1430,12 +1406,8 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     val sink = freshTmpStore(spark, "graft_stream_warc_sink").getAbsolutePath
     val stream = streamTable(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("warc_id"), mkWarc(col("doc_id").cast("long")).as("content"))
-    val q = graft.sources.Warc.recordsDF(stream).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.Streaming.drainBatches(
+      graft.sources.Warc.recordsDF(stream), "stream_warc_ingest", sink)(identity)
     spark.read.parquet(sink).agg(
       countDistinct(col("warc_id")).as("n_files"),
       count(lit(1)).as("n_records"),
@@ -1558,21 +1530,16 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * `sitemap_frontier`'s oracle VERBATIM — the trigger machinery must
     * not change one count. */
   private[graft] def qStreamSitemap(spark: SparkSession, dir: String): DataFrame = {
-    val docs = streamDocuments(spark, dir)
+    val docs = streamTable(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("id"))
     val entries = sitemapFrontierEntries(docs)
-    // foreachBatch + per-batch overwrite + a FRESH (temp) checkpoint per
-    // invocation — the stream_warc_ingest harness. A persistent
-    // checkpoint next to a freshTmpStore sink breaks re-invocation in
-    // one JVM: the second run replays nothing into the re-deleted sink
-    // (caught by the full suite running every query twice per JVM).
+    // per-batch overwrite + a FRESH (temp) checkpoint per invocation —
+    // the drainBatches harness. A persistent checkpoint next to a
+    // freshTmpStore sink breaks re-invocation in one JVM: the second run
+    // replays nothing into the re-deleted sink (caught by the full suite
+    // running every query twice per JVM).
     val sink = freshTmpStore(spark, "graft_stream_sitemap_sink").getAbsolutePath
-    val q = entries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.Streaming.drainBatches(entries, "stream_sitemap", sink)(identity)
     sitemapFrontierAgg(spark.read.parquet(sink))
   }
 
@@ -1940,10 +1907,11 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
   /** The frontier novelty probe as a STRUCTURED STREAM — the shape a live
     * ingest runs: discovered urls arrive as micro-batches and each batch
     * is novelty-filtered against the static store via
-    * [[graft.operators.Frontier.novelUrls]] inside foreachBatch (the
-    * probe's broadcast-confirm join is batch machinery, so foreachBatch
-    * is the streaming-legal composition — the stream_foreach_batch
-    * harness). The union of per-batch novel sets equals the batch
+    * [[graft.operators.Frontier.novelUrls]] per micro-batch (the probe's
+    * broadcast-confirm join is batch machinery, so a per-batch sink is
+    * the streaming-legal composition — the stream_foreach_batch
+    * harness: each batch's novel set overwrites its own `batch=<id>`
+    * directory). The union of per-batch novel sets equals the batch
     * answer: the store is static and novelty is per-url, so batch
     * boundaries are invisible. Shares `frontier_incremental`'s oracle
     * VERBATIM. */
@@ -1955,19 +1923,15 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
         lit(".com/p/"), col("id")).as("url"))
     val storeDir = freshTmpStore(spark, "graft_stream_frontier_store").getAbsolutePath
     graft.operators.Frontier.writeSeenStore(seen, "url", storeDir, capacity = 1000000L)
-    val out = freshTmpStore(spark, "graft_stream_frontier_sink")
-    val stream = streamDocuments(spark, dir)
+    val out = freshTmpStore(spark, "graft_stream_frontier_sink").getAbsolutePath
+    val stream = streamTable(spark, dir, "documents")
       .select(col("doc_id").cast("long").as("id"))
       .select(concat(lit("HTTPS://WWW.Front"), pmod(col("id"), lit(20L)),
         lit(".COM:443/p/"), col("id"), lit("?utm_source=x&ref=z#frag")).as("url"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        graft.operators.Frontier.novelUrls(spark, storeDir, batch, "url")
-          .write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out.getAbsolutePath)
+    graft.streaming.Streaming.drainBatches(stream, "stream_frontier_probe", out) { batch =>
+      graft.operators.Frontier.novelUrls(spark, storeDir, batch, "url")
+    }
+    spark.read.parquet(out)
       .withColumn("domain", graft.operators.UrlDomain.urlDomain(col("canon")))
       .withColumn("nid", regexp_extract(col("canon"), "/p/(\\d+)$", 1).cast("long"))
       .groupBy(col("domain"))
@@ -2147,15 +2111,10 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * `feed_frontier`'s oracle VERBATIM — trigger machinery must not
     * change one count. */
   private[graft] def qStreamFeedPoll(spark: SparkSession, dir: String): DataFrame = {
-    val docs = streamDocuments(spark, dir).select(col("doc_id").cast("long").as("id"))
+    val docs = streamTable(spark, dir, "documents").select(col("doc_id").cast("long").as("id"))
     val entries = graft.sources.Feed.entriesDF(feedFiles(docs))
     val sink = freshTmpStore(spark, "graft_stream_feed_sink").getAbsolutePath
-    val q = entries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        batch.write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.Streaming.drainBatches(entries, "stream_feed_poll", sink)(identity)
     feedAgg(spark.read.parquet(sink))
   }
 
@@ -2421,8 +2380,8 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * micro-batches through the CAS ingest loop (the frontier-probe
     * pattern for chunk stores): the day-0 store builds batch-side, then
     * each micro-batch chunks in-row and [[graft.operators.Cdc
-    * .ingestNovel]] admits only never-seen chunks inside foreachBatch
-    * (novel frames land in a parquet sink). The pinned contract is
+    * .ingestNovel]] admits only never-seen chunks per micro-batch (novel
+    * frames land in a per-batch parquet sink). The pinned contract is
     * BATCHING-INVARIANT — re-arrived docs contribute zero novel chunks
     * and a post-stream re-probe finds zero novel no matter how the
     * micro-batches cut — so it shares `cdc_incremental`'s oracle
@@ -2445,16 +2404,12 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     graft.operators.Cdc.writeChunkStore(
       chunksOf(batchDocs.where(pmod(col("id"), lit(3L)) === 0)), storePath)
     val sink = freshTmpStore(spark, "graft_stream_cdc_sink").getAbsolutePath
-    val stream = streamDocuments(spark, dir).select(col("doc_id").cast("long").as("id"))
+    val stream = streamTable(spark, dir, "documents").select(col("doc_id").cast("long").as("id"))
       .where(pmod(col("id"), lit(4L)) === 1)
       .withColumn("blob", mkBlob(col("id")))
-    val q = chunksOf(stream).writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Cdc.ingestNovel(spark, storePath, batch)
-          .write.mode("overwrite").parquet(s"$sink/batch=$batchId")
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    graft.streaming.Streaming.drainBatches(chunksOf(stream), "stream_cdc_ingest", sink) { batch =>
+      graft.operators.Cdc.ingestNovel(spark, storePath, batch)
+    }
     val novel = spark.read.schema("hash LONG, size LONG").parquet(sink)
     val chunked = chunksOf(batchDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
@@ -3833,7 +3788,7 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     // Scale: round-18 batch 6: the keep-newest dedup (one bounded struct-max
     // aggregate per duplicate group — the dedup_keep_best class with the date
     // ladder in front). stream_cdc_ingest excluded: the
-    // foreachBatch/parquet-sink harness class, and its operator cost is
+    // per-batch parquet-sink harness class, and its operator cost is
     // cdc_incremental's, already measured.
     // keep-newest capture: winner ids and dates replay from the
     // permalink-date arithmetic; ISO strings order chronologically

@@ -790,8 +790,8 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
       plantedPngSigs(spark, docs).where(col("doc_id") % 2 === 0), store)
     val sigStream = plantedPngSigs(spark,
       streamTable(spark, dir, "documents").where(col("doc_id") % 2 === 1))
-    val q = graft.streaming.Streaming.signatureProbeStream(sigStream, store, sink)
-    q.awaitTermination()
+    graft.streaming.Streaming.awaitEnd(
+      graft.streaming.Streaming.signatureProbeStream(sigStream, store, sink), "stream_sig_probe")
     spark.read.parquet(sink)
       .select(least(col("new_id"), col("corpus_id")).as("id_a"),
         greatest(col("new_id"), col("corpus_id")).as("id_b"), col("hamming"))

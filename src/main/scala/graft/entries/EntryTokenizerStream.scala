@@ -382,9 +382,7 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * index + shingle table). Shares dedup_incremental's oracle verbatim —
     * running the probe as a stream must not change one flagged pair. */
   private[graft] def qStreamDedupProbe(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = streamTable(spark, dir, "documents")
       .where(col("doc_id") % 50 === 0)
       .select((col("doc_id") + 1000000000000L).as("doc_id"),
         concat(col("text"), lit(" appended tail")).as("text"))
@@ -393,13 +391,9 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     val shingles = graft.operators.Dedup.shingleTable(corpus, "doc_id", "text")
     val flagged = graft.operators.Dedup.incrementalNearDuplicatesStream(
       stream, index, shingles, "doc_id", "text", threshold = 0.8)
-    val sink = "graft_stream_dedup_probe_sink"
-    val q = flagged.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val pairs = graft.streaming.Streaming.drain(flagged, "stream_dedup_probe", "append")
     corpus.where(col("doc_id") % 50 === 0).agg(count(lit(1)).as("n_new"))
-      .crossJoin(spark.table(sink).agg( // 1x1 combine
+      .crossJoin(pairs.agg( // 1x1 combine
         count(lit(1)).as("n_pairs"),
         countDistinct(col("new_id")).as("n_flagged"),
         coalesce(sum(col("new_id") + col("corpus_id")), lit(0L)).cast("long").as("pair_id_sum")))
@@ -409,7 +403,7 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
   /** The incremental kNN probe as a STRUCTURED STREAM (r15 ask #7):
     * knn_incremental's batch (vec_id < 50) arrives via readStream and
     * probes the SAME materialized IVF store (quantizer sidecar included)
-    * per micro-batch through foreachBatch — the batch operator verbatim,
+    * per micro-batch through a per-batch sink — the batch operator verbatim,
     * integrity check and partition pruning intact. Shares
     * knn_incremental's oracle verbatim: running the probe as a stream
     * must not change one edge of the graph. */
@@ -426,10 +420,9 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     // corpora = Spark-written directories
     val stream = streamTable(spark, dir, "embeddings")
       .where(col("vec_id") < 50)
-    val q = graft.streaming.Streaming.knnProbeStream(
+    graft.streaming.Streaming.awaitEnd(graft.streaming.Streaming.knnProbeStream(
       stream, store.getAbsolutePath, "vec_id", "embedding",
-      k = 3, nProbe = 8, sinkPath = sink.getAbsolutePath)
-    q.awaitTermination()
+      k = 3, nProbe = 8, sinkPath = sink.getAbsolutePath), "stream_knn_probe")
     spark.read.parquet(sink.getAbsolutePath)
       .select(col("vec_id"), col("rank"), col("nbr_id"), col("cos_ppm"))
       .orderBy(col("vec_id"), col("rank"))
@@ -741,13 +734,9 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
       .distinct().collect().map(_.getString(0)).toSeq.sorted
     val vocab = chars ++ merges.map(m => m._1 + m._2)
     val seg = graft.operators.Segment.viterbiSegment(
-      streamDocuments(spark, dir), "doc_id", "text", vocab)
-    val sink = "graft_stream_segment_sink"
-    val q = seg.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink).select(col("doc_id"), col("pos"), col("token"))
+      streamTable(spark, dir, "documents"), "doc_id", "text", vocab)
+    graft.streaming.Streaming.drain(seg, "stream_segment", "append")
+      .select(col("doc_id"), col("pos"), col("token"))
   }
 
 
@@ -1526,19 +1515,12 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * must match the batch oracle exactly. Complete mode retains all window
     * state, so the single micro-batch aggregates every row. */
   private[graft] def qEventsWindowStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = streamTable(spark, dir, "events")
       .select(
         col("ts").cast("timestamp").as("ts"),
         col("event_type"), col("value"))
     val agg = graft.streaming.Streaming.windowedCounts(stream)
-    val sink = "graft_events_stream_sink"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink)
+    graft.streaming.Streaming.drain(agg, "events_window_stream", "complete")
       .select(unix_timestamp(col("ws")).as("ws_epoch"), col("event_type"), col("n"))
       .orderBy("ws_epoch", "event_type")
   }
@@ -1554,26 +1536,20 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * pins to the base-table count. */
   private[graft] def qMaskStream(spark: SparkSession, dir: String): DataFrame = {
     Defaults.registerAll(spark)
-    val schema = spark.read.parquet(s"$dir/customer.parquet").schema
     val treatments = MaskTransform.treatmentsMetadata("mask_string(16, true, upper(${value}))")
     def tag(df: DataFrame): DataFrame = df
       .where(col("c_custkey") % 10 === 0)
       .select(col("c_custkey"), col("c_name").as("c_name", treatments))
-    val stream = tag(spark.readStream.schema(schema)
-      .option("pathGlobFilter", "customer.parquet").parquet(dir))
+    val stream = tag(streamTable(spark, dir, "customer"))
     stream.createOrReplaceTempView("graft_mask_stream_in")
     val (maskedStream, detail) = MaskTransform.runStage(
       spark, "graft_mask_stream_in", "graft_mask_stream_out")
     require(maskedStream.isStreaming && !detail.contains("records"),
       "streaming stage must skip batch instrumentation")
-    val sink = "graft_mask_stream_sink"
-    val q = maskedStream.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
+    val streamed = graft.streaming.Streaming.drain(maskedStream, "mask_stream", "append")
     val batch = MaskTransform(tag(table(spark, dir, "customer")))
       .withColumnRenamed("c_name", "m_batch")
-    spark.table(sink).join(batch, "c_custkey")
+    streamed.join(batch, "c_custkey")
       .agg(
         count(lit(1)).as("n"),
         count(when(length(col("c_name")) === 16, 1)).as("n_len16"),
@@ -1605,9 +1581,7 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * equivalent batch join; per-row floor(value*100) keeps the double sum
     * integer-exact across engines. */
   private[graft] def qStreamStaticJoin(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = streamTable(spark, dir, "events")
       .select(col("user_id"), col("value"))
     val dim = spark.read.parquet(s"$dir/customer.parquet")
       .select(col("c_custkey"), col("c_mktsegment"))
@@ -1615,34 +1589,24 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
       .groupBy(col("c_mktsegment"))
       .agg(count(lit(1)).as("n"),
         sum(floor(col("value") * 100).cast("long")).cast("long").as("value_x100"))
-    val sink = "graft_stream_static_sink"
-    val q = agg.writeStream.format("memory").queryName(sink)
-      .outputMode("complete")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink).orderBy("c_mktsegment")
+    graft.streaming.Streaming.drain(agg, "stream_static_join", "complete").orderBy("c_mktsegment")
   }
 
 
-  /** Operational streaming sink: `foreachBatch` re-enters the BATCH writer
+  /** Operational streaming sink: a per-batch sink re-enters the BATCH writer
     * API per micro-batch (the pattern for upserts/merges into external
     * tables that have no streaming sink). The purchase slice lands in
-    * parquet via per-batch appends; the read-back aggregate equals the
-    * batch filter, which the oracle recomputes. */
+    * parquet, one `batch=<id>` directory per micro-batch, overwritten on
+    * replay ([[graft.streaming.Streaming.drainBatches]]); the read-back
+    * aggregate ignores the `batch` column and equals the batch filter,
+    * which the oracle recomputes. */
   private[graft] def qStreamForeachBatch(spark: SparkSession, dir: String): DataFrame = {
-    val out = freshTmpStore(spark, "graft_febatch_sink")
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val out = freshTmpStore(spark, "graft_febatch_sink").getAbsolutePath
+    val stream = streamTable(spark, dir, "events")
       .where(col("event_type") === "purchase")
       .select(col("event_id"), col("user_id"), col("value"))
-    val q = stream.writeStream
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        batch.write.mode("append").parquet(out.getAbsolutePath)
-      }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.read.parquet(out.getAbsolutePath).agg(
+    graft.streaming.Streaming.drainBatches(stream, "stream_foreach_batch", out)(identity)
+    spark.read.parquet(out).agg(
       count(lit(1)).as("n"),
       sum(col("event_id")).cast("long").as("id_sum"),
       sum(round(col("value") * 100)).cast("long").as("value_sum"))
@@ -1661,20 +1625,13 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * watermark timeout) are verified. */
   private[graft] def qEventsSessionsStream(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    val stream = streamTable(spark, dir, "events")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("event_type"), col("value"))
       .as[graft.streaming.Streaming.Event]
     val sessions = graft.streaming.Streaming.sessionize(stream, gapMinutes = 30,
       watermarkDelay = "10 minutes")
-    val sink = "graft_sessions_stream_sink"
-    val q = sessions.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink).agg(
+    graft.streaming.Streaming.drain(sessions.toDF(), "events_sessions_stream", "append").agg(
       count(lit(1)).as("n_sessions"),
       sum(col("n_events")).cast("long").as("n_events_total"),
       max(col("n_events")).cast("long").as("max_session_events"))
@@ -1708,22 +1665,13 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"), col("user_id"))
     val joined = graft.streaming.Streaming.intervalJoinLeftOuter(
       side("click"), side("purchase"), gapMinutes = 30, watermarkDelay = "10 minutes")
-    val sink = "graft_stream_join_outer_sink"
-    // same state-store partition bound as qStreamStreamJoin
-    val prevParts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    val q = try {
-      joined.writeStream.format("memory").queryName(sink)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    } finally spark.conf.set("spark.sql.shuffle.partitions", prevParts)
-    q.awaitTermination()
+    val joinedRows = drainStreamJoin(joined, "stream_join_outer")
     // exact microsecond band on both engines (unix_micros == epoch_us)
     val cutoffUs = spark.read.parquet(s"$dir/events.parquet")
       .agg(max(unix_micros(col("ts").cast("timestamp")))).head().getLong(0) -
       2L * 24 * 3600 * 1000000
     val old = unix_micros(col("left_ts")) < cutoffUs
-    spark.table(sink).agg(
+    joinedRows.agg(
       count(when(col("right_id").isNotNull, 1)).as("n_pairs"),
       sum(when(col("right_id").isNotNull, col("left_id"))).cast("long").as("matched_click_id_sum"),
       count(when(col("right_id").isNull && old, 1)).as("n_unconverted_old"),
@@ -1739,20 +1687,13 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * watermark horizon and the emitted set is exactly the distinct ids —
     * which the oracle recomputes along with the planted-input row count. */
   private[graft] def qEventsDedupStream(spark: SparkSession, dir: String): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    def source() = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+    def source() = streamTable(spark, dir, "events")
       .select(col("event_id"), col("ts").cast("timestamp").as("ts"),
         col("user_id"), col("value"))
     val withDups = source().unionAll(source().where(col("event_id") % 10 === 0))
     val deduped = graft.streaming.Streaming.dedupWithinWatermark(
       withDups, Seq("event_id"), "ts", "10 minutes")
-    val sink = "graft_events_dedup_sink"
-    val q = deduped.writeStream.format("memory").queryName(sink)
-      .outputMode("append")
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
-    q.awaitTermination()
-    spark.table(sink).agg(
+    graft.streaming.Streaming.drain(deduped, "events_dedup_stream", "append").agg(
       count(lit(1)).as("n_out"),
       countDistinct(col("event_id")).as("n_distinct"),
       sum(col("event_id")).cast("long").as("id_sum"))

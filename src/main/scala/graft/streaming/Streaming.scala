@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
 
 /** Structured Streaming surface: the reference passes streaming frames
   * through the same masking projection (MaskDataTransform.scala:158 only
@@ -16,8 +16,67 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * by user — the state store partitions on the grouping key, so skewed
   * users land in one partition; the session gap bounds per-key state to
   * one open session.
+  *
+  * Every one-shot stream runs through [[drain]] (a memory sink) or
+  * [[drainBatches]] (a per-batch parquet sink): both run under
+  * `Trigger.AvailableNow`, wait for the stream to end, leave no active
+  * query and no sink view behind, and log one line per run,
+  * `graft.stream op=<name> batches=N input_rows=R state_rows=S` followed
+  * by the summed `durationMs` phases in ms.
   */
 object Streaming {
+
+  private val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  private val phases = Seq("queryPlanning", "addBatch", "walCommit", "commitOffsets", "triggerExecution")
+
+  /** Runs `stream` once into the memory sink `graft_<name>_sink` and returns
+    * its rows. The sink's temp view is dropped before returning: the frame
+    * holds the sink's plan, so it and every frame derived from it still
+    * collect, and the rows live only as long as the frame does. */
+  def drain(stream: DataFrame, name: String, outputMode: String): DataFrame = {
+    val spark = stream.sparkSession
+    val sink = s"graft_${name}_sink"
+    val q = stream.writeStream.format("memory").queryName(sink)
+      .outputMode(outputMode).trigger(Trigger.AvailableNow()).start()
+    try {
+      awaitEnd(q, name)
+      spark.table(sink)
+    } finally spark.catalog.dropTempView(sink)
+  }
+
+  /** Runs `stream` once, writing `perBatch(batch)` of each micro-batch to
+    * `sinkPath/batch=<id>` with OVERWRITE, so a replayed micro-batch
+    * rewrites its own directory instead of appending duplicates —
+    * foreachBatch's documented idempotence recipe. Readers take
+    * `spark.read.parquet(sinkPath)`; the `batch` partition column rides
+    * along. */
+  def drainBatches(stream: DataFrame, name: String, sinkPath: String)
+                  (perBatch: DataFrame => DataFrame): Unit =
+    awaitEnd(startBatchSink(stream, sinkPath, None)(perBatch), name)
+
+  private def startBatchSink(stream: DataFrame, sinkPath: String, checkpointLocation: Option[String])
+                            (perBatch: DataFrame => DataFrame): StreamingQuery = {
+    val writer = stream.writeStream
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        perBatch(batch).write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
+      }
+      .trigger(Trigger.AvailableNow())
+    checkpointLocation.foreach(writer.option("checkpointLocation", _))
+    writer.start()
+  }
+
+  /** Waits for `q` to end (rethrowing its failure) and logs its progress
+    * line: batches, input rows, state rows at the last batch, and each
+    * phase's time summed over the batches. */
+  private[graft] def awaitEnd(q: StreamingQuery, name: String): Unit =
+    try q.awaitTermination() finally {
+      val ps = q.recentProgress
+      def ms(phase: String) = ps.map(p => Option(p.durationMs.get(phase)).fold(0L)(_.longValue)).sum
+      val stateRows = ps.lastOption.fold(0L)(_.stateOperators.map(_.numRowsTotal).sum)
+      log.info(s"graft.stream op=$name batches=${ps.length} input_rows=${ps.map(_.numInputRows).sum} " +
+        s"state_rows=$stateRows " + phases.map(p => s"${p}_ms=${ms(p)}").mkString(" "))
+    }
 
   case class Event(event_id: Long, ts: java.sql.Timestamp, user_id: Long, event_type: String, value: Double)
 
@@ -249,59 +308,36 @@ object Streaming {
     * top-k closes within its trigger (vectors are not deduplicated
     * across batches — the batch operator's contract).
     *
-    * Restart safety: results land under `sinkPath/batch=<id>` with
-    * per-batch OVERWRITE, so a replayed micro-batch (failure before the
-    * checkpoint committed) rewrites its own directory instead of
-    * appending duplicate edges — foreachBatch's documented idempotence
-    * recipe. Pass `checkpointLocation` for a restartable deployment; the
-    * default temp checkpoint suits one-shot AvailableNow runs only.
-    * Readers take `spark.read.parquet(sinkPath)` (the `batch` partition
-    * column rides along). */
+    * Results land under `sinkPath/batch=<id>` with per-batch OVERWRITE
+    * (the [[drainBatches]] sink). Pass `checkpointLocation` for a
+    * restartable deployment; the default temp checkpoint suits one-shot
+    * runs only. The caller waits for the returned query, e.g. with
+    * [[awaitEnd]]. */
   def knnProbeStream(stream: DataFrame, storePath: String, idCol: String,
                      embCol: String, k: Int, nProbe: Int, sinkPath: String,
                      maxBucket: Long = 1000000L,
-                     checkpointLocation: Option[String] = None,
-                     trigger: org.apache.spark.sql.streaming.Trigger =
-                       org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val spark = stream.sparkSession
-    val (index, cents) = graft.operators.Similarity.readIvfIndex(spark, storePath)
+                     checkpointLocation: Option[String] = None): StreamingQuery = {
+    val (index, cents) = graft.operators.Similarity.readIvfIndex(stream.sparkSession, storePath)
     val np = math.min(nProbe, cents.length)
-    val writer = stream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Similarity
-          .knnProbeStoredBatch(index, cents, batch, idCol, embCol, k, np, maxBucket)
-          .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-      }
-      .trigger(trigger)
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
+    startBatchSink(stream, sinkPath, checkpointLocation) { batch =>
+      graft.operators.Similarity
+        .knnProbeStoredBatch(index, cents, batch, idCol, embCol, k, np, maxBucket)
+    }
   }
 
   /** Perceptual-signature probe as a stream: each micro-batch of
     * (doc_id, sig) rows runs the BATCH store probe verbatim
     * ([[graft.operators.Dedup.probeSignatureStore]] — broadcast batch
     * pigeonhole rows, corpus store scanned, never shuffled) and lands
-    * its cross pairs under `batch=<id>` with per-batch OVERWRITE, so a
-    * redelivered micro-batch rewrites its own directory instead of
-    * duplicating pairs (the knnProbeStream idempotence rule). ZERO
-    * state store — the probe is stateless per batch by construction. */
+    * its cross pairs under `batch=<id>` with per-batch OVERWRITE (the
+    * [[drainBatches]] sink). ZERO state store — the probe is stateless
+    * per batch by construction. */
   def signatureProbeStream(sigStream: DataFrame, storePath: String, sinkPath: String,
                            maxHamming: Int = 3,
-                           checkpointLocation: Option[String] = None,
-                           trigger: org.apache.spark.sql.streaming.Trigger =
-                             org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val writer = sigStream.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.operators.Dedup
-          .probeSignatureStore(batch.sparkSession, storePath, batch, maxHamming)
-          .write.mode("overwrite").parquet(s"$sinkPath/batch=$batchId")
-      }
-      .trigger(trigger)
-    checkpointLocation.foreach(writer.option("checkpointLocation", _))
-    writer.start()
-  }
+                           checkpointLocation: Option[String] = None): StreamingQuery =
+    startBatchSink(sigStream, sinkPath, checkpointLocation) { batch =>
+      graft.operators.Dedup.probeSignatureStore(batch.sparkSession, storePath, batch, maxHamming)
+    }
 
   /** Batch-equivalent sessionization (same gap semantics) — lets the
     * streaming operator be cross-checked against a deterministic batch

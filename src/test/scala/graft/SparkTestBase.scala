@@ -11,4 +11,10 @@ object SparkTestBase {
 
   /** KDF cheap enough for tests while exercising the real code path. */
   def fastCodec: graft.codec.Codec = new graft.codec.Pbkdf2Codec(64, 64)
+
+  /** Runs `body` on a fresh directory `target/<prefix>*`, deleted afterwards. */
+  def withTargetDir[T](prefix: String)(body: String => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(java.nio.file.Paths.get("target"), prefix).toFile
+    try body(dir.getPath) finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
+  }
 }

@@ -155,31 +155,31 @@ class SketchesSpec extends AnyFunSuite {
   test("a partitioned store drops the CMS params stamp; stampCms restores the probe guard") {
     val cells = Sketches.cmsAggregate(keysDf((1 to 200).map(i => s"key$i")), "k",
       depth = 4, width = 512)
-    val dir = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "cms-store-").toString
-    // a PLAIN Spark parquet write keeps column metadata (Spark serializes
-    // its schema, stamp included, into the footer) — but that protection is
-    // an engine-private courtesy: it vanishes the moment the stamped column
-    // becomes a partition directory (rebuilt from path names, no footer) or
-    // the store is written/rewritten by any non-Spark engine. Pin the
-    // partitioned layout — the realistic store shape — as the dropping case.
-    graft.sources.Sinks.writePartitioned(cells, dir, Seq("r"), filesPerPartition = 1)
-    val reread = spark.read.parquet(dir)
-    val meta = reread.schema.find(_.name == "r").get.metadata
-    assert(!meta.contains("graft.cms.depth"),
-      "partition-encoded column unexpectedly kept its metadata stamp")
-    // re-stamped with the STORE's params, a mismatched probe throws again
-    val stamped = Sketches.stampCms(reread, depth = 4, width = 512)
-    val err = intercept[IllegalArgumentException] {
-      Sketches.cmsEstimates(stamped, keysDf(Seq("key1")), "k", depth = 4, width = 1024)
+    SparkTestBase.withTargetDir("cms-store-") { dir =>
+      // a PLAIN Spark parquet write keeps column metadata (Spark serializes
+      // its schema, stamp included, into the footer) — but that protection is
+      // an engine-private courtesy: it vanishes the moment the stamped column
+      // becomes a partition directory (rebuilt from path names, no footer) or
+      // the store is written/rewritten by any non-Spark engine. Pin the
+      // partitioned layout — the realistic store shape — as the dropping case.
+      graft.sources.Sinks.writePartitioned(cells, dir, Seq("r"), filesPerPartition = 1)
+      val reread = spark.read.parquet(dir)
+      val meta = reread.schema.find(_.name == "r").get.metadata
+      assert(!meta.contains("graft.cms.depth"),
+        "partition-encoded column unexpectedly kept its metadata stamp")
+      // re-stamped with the STORE's params, a mismatched probe throws again
+      val stamped = Sketches.stampCms(reread, depth = 4, width = 512)
+      val err = intercept[IllegalArgumentException] {
+        Sketches.cmsEstimates(stamped, keysDf(Seq("key1")), "k", depth = 4, width = 1024)
+      }
+      assert(err.getMessage.contains("width=512"))
+      // and a matched probe reads the same estimates as the pre-store cells
+      val a = Sketches.cmsEstimates(cells, keysDf(Seq("key1", "key2")), "k",
+        depth = 4, width = 512).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      val b = Sketches.cmsEstimates(stamped, keysDf(Seq("key1", "key2")), "k",
+        depth = 4, width = 512).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
+      assert(a === b)
     }
-    assert(err.getMessage.contains("width=512"))
-    // and a matched probe reads the same estimates as the pre-store cells
-    val a = Sketches.cmsEstimates(cells, keysDf(Seq("key1", "key2")), "k",
-      depth = 4, width = 512).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val b = Sketches.cmsEstimates(stamped, keysDf(Seq("key1", "key2")), "k",
-      depth = 4, width = 512).collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(a === b)
   }
 
   // ---- per-group CMS (round 14: the frequency sibling of hllGroupRegisters) ----

@@ -107,47 +107,47 @@ class CheckpointRecoverySpec extends AnyFunSuite {
   for ((label, providerClass) <- providers)
   test(s"a stream killed mid-run and resumed from its checkpoint loses and duplicates nothing [$label]") {
    withProvider(providerClass) {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ckpt-recovery-").toString
-    val inDir = s"$root/in"
-    writeInput(inDir)
+    SparkTestBase.withTargetDir("ckpt-recovery-") { root =>
+      val inDir = s"$root/in"
+      writeInput(inDir)
 
-    // ---- run A: uninterrupted reference ----
-    val stateA = runToEnd(inDir, s"$root/ckptA", s"$root/outA")
-    val a = multiset(s"$root/outA")
-    assert(a.size == nFiles * rowsPerFile, s"reference run emitted ${a.size} distinct ids")
-    assert(a.values.forall(_ == 1L), "reference run emitted a duplicate")
+      // ---- run A: uninterrupted reference ----
+      val stateA = runToEnd(inDir, s"$root/ckptA", s"$root/outA")
+      val a = multiset(s"$root/outA")
+      assert(a.size == nFiles * rowsPerFile, s"reference run emitted ${a.size} distinct ids")
+      assert(a.values.forall(_ == 1L), "reference run emitted a duplicate")
 
-    // ---- run B, phase 1: kill after a few committed batches ----
-    val q = start(inDir, s"$root/ckptB", s"$root/outB")
-    try {
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (q.isActive && Option(q.lastProgress).forall(_.batchId < 3) &&
-        System.nanoTime() < deadline) Thread.sleep(10)
-    } finally q.stop()
-    q.awaitTermination()
-    val killedBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
-    // the kill must land MID-stream for the test to mean anything: if the
-    // box ever processes all 20 single-file batches before a 10ms poll
-    // tick, lower the poll interval rather than letting this go vacuous
-    assert(killedBatches > 0 && killedBatches < nFiles,
-      s"kill landed after $killedBatches/$nFiles batches — not mid-stream")
+      // ---- run B, phase 1: kill after a few committed batches ----
+      val q = start(inDir, s"$root/ckptB", s"$root/outB")
+      try {
+        val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+        while (q.isActive && Option(q.lastProgress).forall(_.batchId < 3) &&
+          System.nanoTime() < deadline) Thread.sleep(10)
+      } finally q.stop()
+      q.awaitTermination()
+      val killedBatches = Option(q.lastProgress).map(_.batchId + 1).getOrElse(0L)
+      // the kill must land MID-stream for the test to mean anything: if the
+      // box ever processes all 20 single-file batches before a 10ms poll
+      // tick, lower the poll interval rather than letting this go vacuous
+      assert(killedBatches > 0 && killedBatches < nFiles,
+        s"kill landed after $killedBatches/$nFiles batches — not mid-stream")
 
-    // ---- run B, phase 2: resume from the SAME checkpoint and sink ----
-    val stateB = runToEnd(inDir, s"$root/ckptB", s"$root/outB")
-    val b = multiset(s"$root/outB")
-    assert(b == a,
-      s"resumed run diverged: ${b.size} ids vs ${a.size}, " +
-        s"dup ids = ${b.filter(_._2 > 1).keys.take(5).mkString(",")}")
+      // ---- run B, phase 2: resume from the SAME checkpoint and sink ----
+      val stateB = runToEnd(inDir, s"$root/ckptB", s"$root/outB")
+      val b = multiset(s"$root/outB")
+      assert(b == a,
+        s"resumed run diverged: ${b.size} ids vs ${a.size}, " +
+          s"dup ids = ${b.filter(_._2 > 1).keys.take(5).mkString(",")}")
 
-    // rows-in-state across the restart boundary: the resumed run ends
-    // holding every distinct key, exactly like the uninterrupted run —
-    // state reloaded from the checkpoint, none lost, none double-counted
-    assert(stateA == nFiles.toLong * rowsPerFile, s"reference end state $stateA")
-    assert(stateB == stateA, s"state after resume $stateB != reference $stateA")
-    info(s"[$label] killed after $killedBatches/$nFiles batches; " +
-      s"rows-in-state at end: reference=$stateA resumed=$stateB; " +
-      s"output multiset identical (${a.size} ids, all count=1)")
+      // rows-in-state across the restart boundary: the resumed run ends
+      // holding every distinct key, exactly like the uninterrupted run —
+      // state reloaded from the checkpoint, none lost, none double-counted
+      assert(stateA == nFiles.toLong * rowsPerFile, s"reference end state $stateA")
+      assert(stateB == stateA, s"state after resume $stateB != reference $stateA")
+      info(s"[$label] killed after $killedBatches/$nFiles batches; " +
+        s"rows-in-state at end: reference=$stateA resumed=$stateB; " +
+        s"output multiset identical (${a.size} ids, all count=1)")
+    }
    }
   }
 
@@ -156,15 +156,15 @@ class CheckpointRecoverySpec extends AnyFunSuite {
    withProvider(providerClass) {
     // idempotent restart: the no-new-data restart a scheduled pipeline
     // performs constantly — must commit zero new rows
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "ckpt-idem-").toString
-    val inDir = s"$root/in"
-    writeInput(inDir)
-    runToEnd(inDir, s"$root/ckpt", s"$root/out")
-    val first = multiset(s"$root/out")
-    runToEnd(inDir, s"$root/ckpt", s"$root/out")
-    val second = multiset(s"$root/out")
-    assert(second == first, "an idempotent restart changed the sink")
+    SparkTestBase.withTargetDir("ckpt-idem-") { root =>
+      val inDir = s"$root/in"
+      writeInput(inDir)
+      runToEnd(inDir, s"$root/ckpt", s"$root/out")
+      val first = multiset(s"$root/out")
+      runToEnd(inDir, s"$root/ckpt", s"$root/out")
+      val second = multiset(s"$root/out")
+      assert(second == first, "an idempotent restart changed the sink")
+    }
    }
   }
 }

@@ -94,71 +94,71 @@ class StateSchemaEvolutionSpec extends AnyFunSuite {
   }
 
   test("adding a state field and restarting the checkpoint is rejected LOUDLY (RocksDB + stateSchemaCheck)") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "state-evo-").toString
-    val inDir = s"$root/in"
-    val ckpt = s"$root/ckpt"
-    writeEvents(inDir, 0 until 30, minuteBase = 0)
+    SparkTestBase.withTargetDir("state-evo-") { root =>
+      val inDir = s"$root/in"
+      val ckpt = s"$root/ckpt"
+      writeEvents(inDir, 0 until 30, minuteBase = 0)
 
-    val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    spark.conf.set("spark.sql.streaming.stateStore.stateSchemaCheck", "true")
-    try {
-      // phase 1: V1 state schema populates the checkpoint (sessions stay
-      // OPEN — all events inside one gap window — so state is non-empty
-      // at stop and a restart MUST read it)
-      val q1 = Streaming.sessionize(eventsStream(inDir), gapMinutes = 30)
-        .writeStream.format("parquet").option("path", s"$root/out")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q1.awaitTermination()
-
-      // phase 2: same checkpoint, evolved state class → must throw at
-      // start, never half-read V1 bytes through the V2 deserializer
-      writeEvents(inDir, 30 until 60, minuteBase = 1)
-      val thrown = intercept[Exception] {
-        val q2 = sessionizeV2(eventsStream(inDir))
+      val prevProvider = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+      spark.conf.set("spark.sql.streaming.stateStore.stateSchemaCheck", "true")
+      try {
+        // phase 1: V1 state schema populates the checkpoint (sessions stay
+        // OPEN — all events inside one gap window — so state is non-empty
+        // at stop and a restart MUST read it)
+        val q1 = Streaming.sessionize(eventsStream(inDir), gapMinutes = 30)
           .writeStream.format("parquet").option("path", s"$root/out")
           .option("checkpointLocation", ckpt)
           .trigger(Trigger.AvailableNow()).start()
-        try q2.awaitTermination() finally q2.stop()
-      }
-      val msg = Option(thrown.getMessage).getOrElse("") +
-        Option(thrown.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
-      assert(msg.toLowerCase.contains("schema") || msg.contains("STATE_STORE"),
-        s"expected a state-schema incompatibility error, got: $msg")
+        q1.awaitTermination()
 
-      // phase 3: the documented migration path WORKS — V2 on a fresh
-      // checkpoint processes everything
-      val q3 = sessionizeV2(eventsStream(inDir))
-        .writeStream.format("parquet").option("path", s"$root/out2")
-        .option("checkpointLocation", s"$root/ckpt2")
-        .trigger(Trigger.AvailableNow()).start()
-      q3.awaitTermination() // runs clean end-to-end on the fresh checkpoint
-    } finally {
-      prevProvider match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        // phase 2: same checkpoint, evolved state class → must throw at
+        // start, never half-read V1 bytes through the V2 deserializer
+        writeEvents(inDir, 30 until 60, minuteBase = 1)
+        val thrown = intercept[Exception] {
+          val q2 = sessionizeV2(eventsStream(inDir))
+            .writeStream.format("parquet").option("path", s"$root/out")
+            .option("checkpointLocation", ckpt)
+            .trigger(Trigger.AvailableNow()).start()
+          try q2.awaitTermination() finally q2.stop()
+        }
+        val msg = Option(thrown.getMessage).getOrElse("") +
+          Option(thrown.getCause).flatMap(c => Option(c.getMessage)).getOrElse("")
+        assert(msg.toLowerCase.contains("schema") || msg.contains("STATE_STORE"),
+          s"expected a state-schema incompatibility error, got: $msg")
+
+        // phase 3: the documented migration path WORKS — V2 on a fresh
+        // checkpoint processes everything
+        val q3 = sessionizeV2(eventsStream(inDir))
+          .writeStream.format("parquet").option("path", s"$root/out2")
+          .option("checkpointLocation", s"$root/ckpt2")
+          .trigger(Trigger.AvailableNow()).start()
+        q3.awaitTermination() // runs clean end-to-end on the fresh checkpoint
+      } finally {
+        prevProvider match {
+          case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+          case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+        }
       }
     }
   }
 
   test("an UNCHANGED schema restarts the same checkpoint cleanly (the control)") {
-    val root = java.nio.file.Files.createTempDirectory(
-      java.nio.file.Paths.get("target"), "state-ctl-").toString
-    val inDir = s"$root/in"
-    val ckpt = s"$root/ckpt"
-    writeEvents(inDir, 0 until 30, minuteBase = 0)
-    def run(): Unit = {
-      val q = Streaming.sessionize(eventsStream(inDir), gapMinutes = 30)
-        .writeStream.format("parquet").option("path", s"$root/out")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
+    SparkTestBase.withTargetDir("state-ctl-") { root =>
+      val inDir = s"$root/in"
+      val ckpt = s"$root/ckpt"
+      writeEvents(inDir, 0 until 30, minuteBase = 0)
+      def run(): Unit = {
+        val q = Streaming.sessionize(eventsStream(inDir), gapMinutes = 30)
+          .writeStream.format("parquet").option("path", s"$root/out")
+          .option("checkpointLocation", ckpt)
+          .trigger(Trigger.AvailableNow()).start()
+        q.awaitTermination()
+      }
+      run()
+      writeEvents(inDir, 30 until 60, minuteBase = 1)
+      run() // same schema, same checkpoint: resumes without complaint
     }
-    run()
-    writeEvents(inDir, 30 until 60, minuteBase = 1)
-    run() // same schema, same checkpoint: resumes without complaint
   }
 }

@@ -2,9 +2,10 @@ package graft.streaming
 
 import java.sql.Timestamp
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.OutputMode
+import org.apache.spark.sql.functions.{col, count, lit, raise_error, sum, when}
+import org.apache.spark.sql.streaming.{OutputMode, StreamingQueryException}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkTestBase
@@ -349,6 +350,54 @@ class StreamingSpec extends AnyFunSuite {
     } finally q.stop()
   }
 
+  /** Asserts what every [[Streaming.drain]] run leaves behind: no sink view
+    * and no active stream, with `out` still collecting. */
+  private def assertDrained(name: String, out: DataFrame): Array[Row] = {
+    assert(!spark.catalog.tableExists(s"graft_${name}_sink"), "drain left its sink view")
+    assert(spark.streams.active.isEmpty, "drain left an active stream")
+    out.collect()
+  }
+
+  test("drain in append mode equals the batch computation of the same input") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Int]
+    input.addData(1 to 20: _*)
+    def evens(df: DataFrame) = df.where(col("value") % 2 === 0).select((col("value") * 10).as("v"))
+    val out = Streaming.drain(evens(input.toDF()), "spec_append", "append")
+    assert(assertDrained("spec_append", out).map(_.getInt(0)).sorted.toSeq ===
+      evens((1 to 20).toDF("value")).collect().map(_.getInt(0)).sorted.toSeq)
+  }
+
+  test("drain in complete mode equals the batch computation of the same input") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Int]
+    input.addData(1 to 20: _*)
+    def counts(df: DataFrame) = df.groupBy((col("value") % 3).as("k"))
+      .agg(count(lit(1)).as("n"), sum(col("value")).as("s"))
+    val out = Streaming.drain(counts(input.toDF()), "spec_complete", "complete")
+    // a frame derived from the drained one collects too
+    val derived = out.where(col("k") > 0)
+    assert(assertDrained("spec_complete", out).map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet ===
+      counts((1 to 20).toDF("value")).collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSet)
+    assert(derived.collect().map(_.getInt(0)).toSet === Set(1, 2))
+  }
+
+  test("a stream whose batch throws makes drain throw and leaves no active query") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val input = MemoryStream[Int]
+    input.addData(1 to 5: _*)
+    val failing = input.toDF()
+      .select(when(col("value") > 2, raise_error(lit("drain spec failure"))).otherwise(col("value")).as("v"))
+    intercept[StreamingQueryException] {
+      Streaming.drain(failing, "spec_failing", "append")
+    }
+    assert(!spark.catalog.tableExists("graft_spec_failing_sink"))
+    assert(spark.streams.active.isEmpty)
+  }
+
   test("knnProbeStream equals the batch probe edge-for-edge (MemoryStream agreement)") {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
@@ -385,10 +434,9 @@ class StreamingSpec extends AnyFunSuite {
       // must OVERWRITE its per-batch directory, not append duplicates
       val replay = MemoryStream[(Long, Array[Float])]
       replay.addData(batch: _*)
-      Streaming.knnProbeStream(
-        replay.toDF().toDF("vec_id", "embedding"), store,
-        "vec_id", "embedding", k = 2, nProbe = 4, sinkPath = sink)
-        .awaitTermination()
+      Streaming.drainBatches(replay.toDF().toDF("vec_id", "embedding"), "knn_replay", sink) { b =>
+        Similarity.knnProbeStored(spark, store, b, "vec_id", "embedding", k = 2, nProbe = 4)
+      }
       val replayed = spark.read.parquet(sink)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
         .sorted.toSeq
