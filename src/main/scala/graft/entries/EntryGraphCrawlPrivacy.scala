@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -2180,52 +2182,61 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * PINNED-CONTRACT oracle: re-arrived documents must contribute ZERO
     * novel chunks (store exactness), a re-probe after ingest must find
     * ZERO novel (append correctness), novel bytes are bounded by the
-    * new documents' bytes — plus the arithmetic doc counts. */
+    * new documents' bytes — plus the arithmetic doc counts, all read off
+    * the two ingests and one aggregate ([[cdcContract]]). */
   private[graft] def qCdcIncremental(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
       .select(col("doc_id").cast("long").as("id"))
       .withColumn("blob", mkBlob(col("id")))
-    val chunked = docs
-      .select(col("id"), length(col("blob")).cast("long").as("blen"),
-        explode(graft.plans.CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096)).as("c"))
-      .select(col("id"), col("blen"), col("c.hash").as("hash"), col("c.size").as("size"))
+    val chunked = chunkIndex(docs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val storePath = freshTmpStore(spark, "graft_cdc_store").getAbsolutePath
-    graft.operators.Cdc.writeChunkStore(
-      chunked.where(pmod(col("id"), lit(3L)) === 0), storePath)
-    // ingestNovel pins its novel set with an eager localCheckpoint, so
-    // the re-probe's append cannot retroactively empty it
-    val novel = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
-    val novelAfter = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
-    val rearrivedHit = chunked.where(pmod(col("id"), lit(3L)) === 0)
-      .select(col("hash")).distinct()
-      .join(novel.select(col("hash")).distinct(), Seq("hash"))
-      .agg(count(lit(1)).as("n_novel_from_rearrived"))
-    // new-doc bytes from the PERSISTED chunk index (blen rides every chunk
-    // row; max per id = the doc's length, every blob chunks to >= 1 row) —
-    // the old docs-side sum re-ran the full blob generation for a number
-    // the index already holds: a second complete data pass at 100 TB
-    // (guide §1.2: don't compute things twice)
-    val newBytes = chunked.where(pmod(col("id"), lit(3L)) =!= 0)
-      .groupBy(col("id")).agg(max(col("blen")).as("blen"))
-      .agg(sum(col("blen")).as("new_bytes"))
-    val counts = docs.agg(
-      count(when(pmod(col("id"), lit(3L)) === 0, 1)).as("n_day0_docs"),
-      count(lit(1)).as("n_batch_docs"))
-    val novelAgg = novel.agg(
-      count(lit(1)).as("n_novel_chunks"),
-      coalesce(sum(col("size")), lit(0L)).as("novel_bytes"))
-    val afterAgg = novelAfter.agg(count(lit(1)).as("n_novel_after_ingest"))
-    graft.operators.Partitioning.releaseAfterUse(
-      counts.crossJoin(rearrivedHit).crossJoin(novelAgg)
-        .crossJoin(afterAgg).crossJoin(newBytes)
-        .select(col("n_day0_docs"), col("n_batch_docs"),
-          col("n_novel_from_rearrived"),
-          when(col("n_novel_chunks") > 0, lit(1L)).otherwise(lit(0L)).as("has_novel"),
-          when(col("novel_bytes") <= col("new_bytes"), lit(1L)).otherwise(lit(0L))
-            .as("novel_bytes_le_new"),
-          col("n_novel_after_ingest")),
-      chunked, novel)
+    try {
+      val storePath = freshTmpStore(spark, "graft_cdc_store").getAbsolutePath
+      graft.operators.Cdc.writeChunkStore(
+        chunked.where(pmod(col("id"), lit(3L)) === 0), storePath)
+      // ingestNovel pins its novel set with an eager localCheckpoint, so
+      // the re-probe's append cannot retroactively empty it
+      val novel = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
+      val after = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
+      try cdcContract(spark, chunked, novel.novel, novel.chunks, novel.bytes, after.chunks)
+      finally Seq(novel, after).foreach(i => graft.operators.Fixpoint.release(i.novel))
+    } finally chunked.unpersist(blocking = false)
+  }
+
+  /** The chunk index of `docs` (id, blob): (id, blen, first, hash, size),
+    * one row per chunk. Every non-null id's blob is non-empty, so each
+    * document has exactly one `first` (offset 0) row, and `blen`, the
+    * document's length, rides every row. */
+  private def chunkIndex(docs: DataFrame): DataFrame = docs
+    .select(col("id"), length(col("blob")).cast("long").as("blen"),
+      explode(graft.plans.CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096)).as("c"))
+    .select(col("id"), col("blen"), (col("c.offset") === 0L).as("first"),
+      col("c.hash").as("hash"), col("c.size").as("size"))
+
+  /** The CAS ingest contract of `cdc_incremental` and `stream_cdc_ingest`
+    * as a one-row frame. The ingest counts come from the ingests'
+    * observations; the document counts, the new documents' bytes and the
+    * re-arrived documents' novel chunks come from ONE aggregate over the
+    * persisted chunk index with the novel hashes broadcast. `novelHashes`
+    * lists each hash once, so the join adds no row. */
+  private def cdcContract(spark: SparkSession, chunked: DataFrame, novelHashes: DataFrame,
+                          novelChunks: Long, novelBytes: Long, afterChunks: Long): DataFrame = {
+    import spark.implicits._
+    val day0 = pmod(col("id"), lit(3L)) === 0
+    val r = chunked
+      .join(broadcast(novelHashes.select(col("hash"), lit(true).as("__novel"))), Seq("hash"), "left")
+      .agg(
+        count(when(col("first") && day0, 1)),
+        count(when(col("first"), 1)),
+        countDistinct(when(day0 && col("__novel"), col("hash"))),
+        sum(when(col("first") && !day0, col("blen"))))
+      .head()
+    // with no new document the byte sum is NULL, and a NULL bound fails
+    val bytesLeNew = !r.isNullAt(3) && novelBytes <= r.getLong(3)
+    Seq((r.getLong(0), r.getLong(1), r.getLong(2), if (novelChunks > 0) 1L else 0L,
+        if (bytesLeNew) 1L else 0L, afterChunks))
+      .toDF("n_day0_docs", "n_batch_docs", "n_novel_from_rearrived", "has_novel",
+        "novel_bytes_le_new", "n_novel_after_ingest")
   }
 
   /** Publication-date extraction — [[graft.operators.PageDate]]'s
@@ -2387,7 +2398,6 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * micro-batches cut — so it shares `cdc_incremental`'s oracle
     * VERBATIM. */
   private[graft] def qStreamCdcIngest(spark: SparkSession, dir: String): DataFrame = {
-    import graft.plans.CdcExpressions
     // the twin runs on the id % 4 == 1 quarter: the contract under test
     // is BATCHING-invariance of the CAS loop, not corpus volume (the
     // batch query already prices the full corpus), and the blob
@@ -2396,47 +2406,33 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
       .select(col("doc_id").cast("long").as("id"))
       .where(pmod(col("id"), lit(4L)) === 1)
       .withColumn("blob", mkBlob(col("id")))
-    def chunksOf(d: DataFrame): DataFrame = d
-      .select(col("id"),
-        explode(CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096)).as("c"))
-      .select(col("id"), col("c.hash").as("hash"), col("c.size").as("size"))
-    val storePath = freshTmpStore(spark, "graft_stream_cdc_store").getAbsolutePath
-    graft.operators.Cdc.writeChunkStore(
-      chunksOf(batchDocs.where(pmod(col("id"), lit(3L)) === 0)), storePath)
-    val sink = freshTmpStore(spark, "graft_stream_cdc_sink").getAbsolutePath
-    val stream = streamTable(spark, dir, "documents").select(col("doc_id").cast("long").as("id"))
-      .where(pmod(col("id"), lit(4L)) === 1)
-      .withColumn("blob", mkBlob(col("id")))
-    graft.streaming.Streaming.drainBatches(chunksOf(stream), "stream_cdc_ingest", sink) { batch =>
-      graft.operators.Cdc.ingestNovel(spark, storePath, batch)
-    }
-    val novel = spark.read.schema("hash LONG, size LONG").parquet(sink)
-    val chunked = chunksOf(batchDocs)
+    val chunked = chunkIndex(batchDocs)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val novelAfter = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
-    val rearrivedHit = chunked.where(pmod(col("id"), lit(3L)) === 0)
-      .select(col("hash")).distinct()
-      .join(novel.select(col("hash")).distinct(), Seq("hash"))
-      .agg(count(lit(1)).as("n_novel_from_rearrived"))
-    val newBytes = batchDocs.where(pmod(col("id"), lit(3L)) =!= 0)
-      .agg(sum(length(col("blob")).cast("long")).as("new_bytes"))
-    val counts = batchDocs.agg(
-      count(when(pmod(col("id"), lit(3L)) === 0, 1)).as("n_day0_docs"),
-      count(lit(1)).as("n_batch_docs"))
-    val novelAgg = novel.agg(
-      count(lit(1)).as("n_novel_chunks"),
-      coalesce(sum(col("size")), lit(0L)).as("novel_bytes"))
-    val afterAgg = novelAfter.agg(count(lit(1)).as("n_novel_after_ingest"))
-    graft.operators.Partitioning.releaseAfterUse(
-      counts.crossJoin(rearrivedHit).crossJoin(novelAgg)
-        .crossJoin(afterAgg).crossJoin(newBytes)
-        .select(col("n_day0_docs"), col("n_batch_docs"),
-          col("n_novel_from_rearrived"),
-          when(col("n_novel_chunks") > 0, lit(1L)).otherwise(lit(0L)).as("has_novel"),
-          when(col("novel_bytes") <= col("new_bytes"), lit(1L)).otherwise(lit(0L))
-            .as("novel_bytes_le_new"),
-          col("n_novel_after_ingest")),
-      chunked)
+    val ingests = new java.util.concurrent.ConcurrentLinkedQueue[graft.operators.Cdc.Ingested]()
+    try {
+      val storePath = freshTmpStore(spark, "graft_stream_cdc_store").getAbsolutePath
+      graft.operators.Cdc.writeChunkStore(
+        chunked.where(pmod(col("id"), lit(3L)) === 0), storePath)
+      val sink = freshTmpStore(spark, "graft_stream_cdc_sink").getAbsolutePath
+      val stream = streamTable(spark, dir, "documents").select(col("doc_id").cast("long").as("id"))
+        .where(pmod(col("id"), lit(4L)) === 1)
+        .withColumn("blob", mkBlob(col("id")))
+      // a hash one micro-batch admits is in the store before the next
+      // batch probes, so the sink's per-batch novel sets are disjoint
+      graft.streaming.Streaming.drainBatches(chunkIndex(stream), "stream_cdc_ingest", sink) { batch =>
+        val in = graft.operators.Cdc.ingestNovel(spark, storePath, batch)
+        ingests.add(in)
+        in.novel
+      }
+      val batches = ingests.asScala.toSeq
+      val after = graft.operators.Cdc.ingestNovel(spark, storePath, chunked)
+      try cdcContract(spark, chunked, spark.read.schema("hash LONG, size LONG").parquet(sink),
+        batches.map(_.chunks).sum, batches.map(_.bytes).sum, after.chunks)
+      finally graft.operators.Fixpoint.release(after.novel)
+    } finally {
+      ingests.forEach(i => graft.operators.Fixpoint.release(i.novel))
+      chunked.unpersist(blocking = false)
+    }
   }
 
   /** Dated dedup — the keep-NEWEST-capture tie-break real url-level

@@ -1533,7 +1533,8 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * branch (`isStreaming` guard). Verified end to end: the stream output
     * is joined row-for-row against the BATCH mask of the same rows, and
     * determinism makes them identical — `n_match == n`, which the oracle
-    * pins to the base-table count. */
+    * pins to the base-table count. The stage's two temp views are dropped
+    * before the query returns. */
   private[graft] def qMaskStream(spark: SparkSession, dir: String): DataFrame = {
     Defaults.registerAll(spark)
     val treatments = MaskTransform.treatmentsMetadata("mask_string(16, true, upper(${value}))")
@@ -1541,12 +1542,16 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
       .where(col("c_custkey") % 10 === 0)
       .select(col("c_custkey"), col("c_name").as("c_name", treatments))
     val stream = tag(streamTable(spark, dir, "customer"))
-    stream.createOrReplaceTempView("graft_mask_stream_in")
-    val (maskedStream, detail) = MaskTransform.runStage(
-      spark, "graft_mask_stream_in", "graft_mask_stream_out")
-    require(maskedStream.isStreaming && !detail.contains("records"),
-      "streaming stage must skip batch instrumentation")
-    val streamed = graft.streaming.Streaming.drain(maskedStream, "mask_stream", "append")
+    val views = Seq("graft_mask_stream_in", "graft_mask_stream_out")
+    // the frames hold their analyzed plans, so the views go once the
+    // stream has drained
+    val streamed = try {
+      stream.createOrReplaceTempView(views.head)
+      val (maskedStream, detail) = MaskTransform.runStage(spark, views.head, views(1))
+      require(maskedStream.isStreaming && !detail.contains("records"),
+        "streaming stage must skip batch instrumentation")
+      graft.streaming.Streaming.drain(maskedStream, "mask_stream", "append")
+    } finally views.foreach(spark.catalog.dropTempView)
     val batch = MaskTransform(tag(table(spark, dir, "customer")))
       .withColumnRenamed("c_name", "m_batch")
     streamed.join(batch, "c_custkey")

@@ -2,7 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Content-defined chunking (FastCDC-style gear rolling hash — Xia et
@@ -37,7 +37,9 @@ import org.apache.spark.sql.functions._
   * the store key for a chunk-level CAS; collisions only weaken dedup,
   * never correctness, because a CAS confirm compares bytes. The CAS
   * index ([[writeChunkStore]], [[ingestNovel]]) is a flat parquet file
-  * set of distinct (hash, size) rows.
+  * set of distinct (hash, size) rows. An ingest's novel-chunk count and
+  * byte sum ride its checkpoint job, so a caller reads them with no
+  * further job.
   *
   * Scale shape: pure per-row kernel (no shuffle, no UDF — the codegen'd
   * [[graft.plans.CdcExpressions]] wraps it); the emitted rows are
@@ -130,33 +132,46 @@ object Cdc {
   def writeChunkStore(chunks: DataFrame, path: String): Unit =
     distinctChunks(chunks).write.mode("overwrite").parquet(path)
 
+  /** The novel (hash, size) rows of one [[ingestNovel]] call, already
+    * appended to the store and pinned by a local checkpoint (drop it with
+    * [[Fixpoint.release]]), with their count and byte sum. */
+  final case class Ingested(novel: DataFrame, chunks: Long, bytes: Long)
+
   /** EXACT novel chunks of a batch against the store, and append them —
     * the per-batch CAS ingest step: only bytes of never-seen chunks are
     * stored/shipped; re-arriving content costs index rows only. Plan
     * shape: the batch's DISTINCT (hash, size) set BROADCASTS against ONE
     * full store scan (inner join on hash, then left_anti of the batch
-    * against the hits); the store is never shuffled, never grouped, and
-    * novelty is exact. The novel rows are appended as they are
-    * partitioned, so an append writes at most one file per partition of
-    * the novel set; an all-seen batch writes none. Returns the novel
-    * (hash, size) frame AFTER appending it (eagerly materialized — the
-    * caller's counts and the store agree). */
+    * against the hits — an anti join ignores duplicate hits, so they are
+    * not deduplicated); the store is never shuffled, never grouped, and
+    * novelty is exact. The novel set is checkpointed eagerly, and its row
+    * count and byte sum ride that same job as an observed metric, so no
+    * job exists only to count. The novel rows are then appended as they
+    * are partitioned, one file at most per partition; an all-seen batch
+    * (count 0) writes none. */
   def ingestNovel(spark: SparkSession, path: String,
-                  batchChunks: DataFrame): DataFrame = {
+                  batchChunks: DataFrame): Ingested = {
     val b = distinctChunks(batchChunks)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val store = spark.read.schema("hash LONG, size LONG").parquet(path)
-    val seen = store.join(broadcast(b.select(col("hash"))), Seq("hash"))
-      .select(col("hash")).distinct()
-    // eager localCheckpoint BEFORE the append: the append refreshes any
-    // cache whose plan reads the store path (recacheByPath), which would
-    // re-execute a merely-persisted novel frame against the
-    // post-append listing and collapse it to empty; the checkpoint
-    // truncates lineage so the novel set is pinned
-    val novelExact = b.join(broadcast(seen), Seq("hash"), "left_anti")
-      .localCheckpoint(eager = true)
-    if (!novelExact.isEmpty) novelExact.write.mode("append").parquet(path)
-    Partitioning.releaseAfterUse(novelExact, b)
+    try {
+      val store = spark.read.schema("hash LONG, size LONG").parquet(path)
+      val seen = store.join(broadcast(b.select(col("hash"))), Seq("hash"))
+        .select(col("hash"))
+      val chunks = count(lit(1)).as("chunks")
+      val bytes = coalesce(sum(col("size")), lit(0L)).as("bytes")
+      val obs = Observation()
+      // eager localCheckpoint BEFORE the append: the append refreshes any
+      // cache whose plan reads the store path (recacheByPath), which would
+      // re-execute a merely-persisted novel frame against the
+      // post-append listing and collapse it to empty; the checkpoint
+      // truncates lineage so the novel set is pinned
+      val novel = b.join(broadcast(seen), Seq("hash"), "left_anti")
+        .observe(obs, chunks, bytes)
+        .localCheckpoint(eager = true)
+      val row = Fixpoint.awaitObserved(obs).getOrElse(novel.agg(chunks, bytes).head())
+      if (row.getLong(0) > 0) novel.write.mode("append").parquet(path)
+      Ingested(novel, row.getLong(0), row.getLong(1))
+    } finally b.unpersist(blocking = false)
   }
 
   /** Static entry point for generated code: array of (offset, size,

@@ -5,7 +5,8 @@ import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
 
-import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row}
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** The one driver for graft's convergence-checked graph loops
   * ([[Dedup.connectedComponents]], [[CcStar.connectedComponentsStar]],
@@ -26,6 +27,10 @@ import org.apache.spark.sql.{Column, DataFrame, Observation}
   * doubles its logical plan each round, and without truncation the driver
   * runs out of memory analyzing it. Local blocks die with their executor,
   * so a cluster run that must survive executor loss sets a dir.
+  *
+  * Once `stop` has read a round, the frame that round replaced is
+  * [[release]]d, so a run leaves one checkpoint behind: the frame it
+  * returns.
   *
   * Every round logs `graft.fixpoint op=<op> round=N metric=M ms=T`, and
   * the run closes with `graft.fixpoint op=<op> rounds=N converged=B`.
@@ -49,10 +54,26 @@ object Fixpoint {
     if (df.sparkSession.sparkContext.getCheckpointDir.isDefined) df.checkpoint(eager)
     else df.localCheckpoint(eager)
 
+  /** Drops the blocks of a frame made by [[checkpoint]] (or a
+    * `localCheckpoint`); a frame with any other plan is left alone. The
+    * frame must not be run again afterwards: a local checkpoint cannot be
+    * recomputed. */
+  def release(df: DataFrame): Unit = df.queryExecution.logical match {
+    case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+    case _ =>
+  }
+
+  /** The row `obs` observed, or None if it has not arrived within 10 s. */
+  private[operators] def awaitObserved(obs: Observation): Option[Row] =
+    try Some(Await.result(obs.future, 10.seconds)) catch {
+      case _: TimeoutException => None
+    }
+
   /** Runs `step` from `init` for at most `maxIter` rounds, stopping after
     * the first round where `stop(prevMetric, metric, prevFrame, frame)`
     * holds. `metric` is one count aggregate over `step`'s output columns;
-    * `initMetric` is the previous metric the first round sees.
+    * `initMetric` is the previous metric the first round sees. `run` owns
+    * `init`: a checkpointed `init` is released once round 1 replaces it.
     *
     * If a round's observation has not arrived within 10 s, the metric is
     * computed with an `agg` over the frame already checkpointed, and later
@@ -69,20 +90,21 @@ object Fixpoint {
       val t0 = System.nanoTime()
       val obs = Observation()
       val next = checkpoint(step(frame).observe(obs, metric.as("metric")))
-      val observed =
-        if (eventsMissing) None
-        else try Some(Await.result(obs.future, 10.seconds).getLong(0)) catch {
-          case _: TimeoutException =>
-            eventsMissing = true
-            log.warn(s"graft.fixpoint op=$op observation missing - " +
-              "computing the metric from the checkpoint for the rest of this run")
-            None
+      val observed = if (eventsMissing) None else {
+        val o = awaitObserved(obs)
+        if (o.isEmpty) {
+          eventsMissing = true
+          log.warn(s"graft.fixpoint op=$op observation missing - " +
+            "computing the metric from the checkpoint for the rest of this run")
         }
-      val m = observed.getOrElse(next.agg(metric).head().getLong(0))
+        o
+      }
+      val m = observed.fold(next.agg(metric).head().getLong(0))(_.getLong(0))
       converged = stop(prev, m, frame, next)
       rounds += 1
       log.info(s"graft.fixpoint op=$op round=$rounds metric=$m " +
         s"ms=${(System.nanoTime() - t0) / 1000000}")
+      release(frame)
       frame = next
       prev = m
     }

@@ -21,21 +21,26 @@ import org.apache.spark.sql.functions._
   * oscillate on bipartite structures instead of converging; a fixed round
   * budget makes that a documented property, not a hang.
   *
-  * Scale shape per round: one join of the (node, label) frame onto the
-  * symmetrized edge table (both sides hash on the node id — at 100 TB the
-  * edge table is repartitioned by neighbor once, persisted, and every
-  * round reuses that layout, so only the node-sized label frame moves),
-  * then one (node, label)-keyed count with map-side partial aggregation,
-  * then the argmax as a single lexicographic struct max — never a
-  * per-node window sort. Rounds run on [[Fixpoint]], the driver shared
-  * with [[Dedup.connectedComponents]]: each round eagerly checkpoints the
-  * node-sized label frame and the round's changed-label count rides that
-  * same job as an observed metric, so the loop EXITS EARLY at a fixed point:
-  * a synchronous round that changes zero labels is a fixed point of the
-  * update map, every later round is identical, and the stop round is a
-  * pure function of the edge set — determinism intact. Oscillating
-  * (e.g. bipartite swap) structures never hit zero and run the full
-  * `iters` budget, as documented above.
+  * Scale shape per round: one join and ONE aggregate exchange. The votes
+  * are the symmetrized edge table joined to the (node, label) frame on
+  * the neighbor (at 100 TB the edge table is laid out by neighbor once,
+  * checkpointed, and every round reuses that layout, so only the
+  * node-sized label frame moves, or is broadcast while it is small); each
+  * node adds one self row carrying its old label; then a single
+  * node-keyed aggregate takes the deterministic `mode` of the votes
+  * (most frequent label, ties to the smallest — partial counts merge
+  * exactly, so the winner is independent of partitioning) and the old
+  * label, which also drops vote-only nodes absent from `nodes`. No
+  * (node, label) count, no argmax pass, no join back. Rounds run on
+  * [[Fixpoint]], the driver shared with [[Dedup.connectedComponents]]:
+  * each round eagerly checkpoints the node-sized label frame and the
+  * round's changed-label count rides that same job as an observed metric,
+  * so the loop EXITS EARLY at a fixed point: a synchronous round that
+  * changes zero labels is a fixed point of the update map, every later
+  * round is identical, and the stop round is a pure function of the edge
+  * set — determinism intact. Oscillating (e.g. bipartite swap) structures
+  * never hit zero and run the full `iters` budget, as documented above.
+  * The edge checkpoint is released when the loop ends.
   */
 object LabelProp {
 
@@ -44,10 +49,10 @@ object LabelProp {
     * `edges` needs (src, dst) long columns and is treated as UNDIRECTED:
     * each edge votes in both directions, self-loops and duplicate edges
     * are dropped (a duplicate would double a neighbor's vote and make the
-    * result depend on upstream dedup discipline). Nodes absent from
-    * `nodes` are ignored; nodes with no surviving edge keep their own id
-    * as label. NULL ids/endpoints are dropped: an edge with no identity
-    * cannot vote. */
+    * result depend on upstream dedup discipline). `nodes` lists each id
+    * once; nodes absent from it are ignored; nodes with no surviving edge
+    * keep their own id as label. NULL ids/endpoints are dropped: an edge
+    * with no identity cannot vote. */
   def communities(edges: DataFrame, nodes: DataFrame, nodeCol: String = "node",
                   iters: Int = 5): DataFrame = {
     require(iters >= 0, "iters must be >= 0")
@@ -64,28 +69,24 @@ object LabelProp {
       .repartition(col("nbr")), eager = false)
 
     // an exhausted budget is the documented oscillation case, not an error
-    Fixpoint.run("lpa", n.select(col("node"), col("node").as("label")), iters,
+    try Fixpoint.run("lpa", n.select(col("node"), col("node").as("label")), iters,
       count(when(col("__changed"), 1))) { prev =>
       val labels = prev.select(col("node"), col("label"))
+      val none = lit(null).cast("long")
       val votes = sym.join(labels.withColumnRenamed("node", "nbr"), Seq("nbr"))
-        .groupBy(col("node"), col("label"))
-        .agg(count(lit(1)).as("cnt"))
-      // argmax by (cnt desc, label asc) as one lexicographic struct max:
-      // labels are non-negative, so max of -label is the smallest label
-      val winner = votes
+        .select(col("node"), col("label").as("vote"), none.as("old"))
+      // labels has n's node set as an invariant: the self rows keep every
+      // node of n (an isolated one has no vote and keeps its own id, its
+      // old label, so diffing against `old` is exact) and drop the rest
+      votes.unionByName(labels.select(col("node"), none.as("vote"), col("label").as("old")))
         .groupBy(col("node"))
-        .agg(max(struct(col("cnt"), (-col("label")).as("neg"))).as("w"))
-        .select(col("node"), (-col("w.neg")).as("label"))
-      // isolated nodes fall back to their OWN id (== their old label —
-      // they never change), so diffing against the previous round's label
-      // is exact; labels has n's node set as an invariant, so joining it
-      // instead of n is the same frame plus the old label
-      labels.select(col("node"), col("label").as("__old"))
-        .join(winner, Seq("node"), "left")
+        .agg(mode(col("vote"), deterministic = true).as("mode"), max(col("old")).as("old"))
+        .where(col("old").isNotNull)
         .select(col("node"),
-          coalesce(col("label"), col("node")).as("label"),
-          (coalesce(col("label"), col("node")) =!= col("__old")).as("__changed"))
+          coalesce(col("mode"), col("node")).as("label"),
+          (coalesce(col("mode"), col("node")) =!= col("old")).as("__changed"))
     } { (_, changed, _, _) => changed == 0 }.frame.select(col("node"), col("label"))
+    finally Fixpoint.release(sym)
   }
 
   /** EXACT integer Newman modularity of a labeling over an undirected

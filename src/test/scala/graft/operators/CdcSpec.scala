@@ -3,7 +3,7 @@ package graft.operators
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 
-import graft.SparkTestBase
+import graft.{Metrics, SparkTestBase}
 
 class CdcSpec extends AnyFunSuite {
 
@@ -102,13 +102,13 @@ class CdcSpec extends AnyFunSuite {
       // 65 % 64 == 1 % 64 (and 129 likewise): hashes that collide under a
       // modular bucketing must still be told apart
       val novel = sortedRows(Cdc.ingestNovel(spark, path,
-        frame(2L -> 200L, 3L -> 50L, 129L -> 70L)))
+        frame(2L -> 200L, 3L -> 50L, 129L -> 70L)).novel)
       assert(novel === Seq(3L -> 50L, 129L -> 70L)) // 2 was seen
       // re-ingesting the same batch finds nothing: the append landed, and
       // an all-seen batch writes no file
       val files = dataFiles(path)
       val again = Cdc.ingestNovel(spark, path, frame(2L -> 200L, 3L -> 50L, 129L -> 70L))
-      assert(again.count() === 0)
+      assert(again.novel.count() === 0 && again.chunks === 0 && again.bytes === 0)
       assert(dataFiles(path) === files)
       // a flat file set: no partition directories
       assert(new java.io.File(path).listFiles().forall(!_.isDirectory))
@@ -116,6 +116,39 @@ class CdcSpec extends AnyFunSuite {
       val store = spark.read.parquet(path)
       assert(store.select("hash").distinct().count() === 5)
       assert(store.count() === 5)
+    }
+  }
+
+  test("chunk store: the observed count and bytes are the novel set's") {
+    import spark.implicits._
+    withStore { path =>
+      Cdc.writeChunkStore((0L until 40L).map(h => h -> (h + 1)).toDF("hash", "size"), path)
+      // duplicate hashes in the batch and a seen-only half
+      val batch = (20L until 90L).flatMap(h => Seq(h -> (h + 1), h -> (h + 1))).toDF("hash", "size")
+      val in = Cdc.ingestNovel(spark, path, batch)
+      val r = in.novel.agg(count(lit(1)), sum(col("size"))).head()
+      assert(in.chunks === r.getLong(0) && in.chunks === 50L)
+      assert(in.bytes === r.getLong(1) && in.bytes === (40L until 90L).map(_ + 1).sum)
+      Fixpoint.release(in.novel)
+    }
+  }
+
+  test("chunk store: an all-seen batch runs a fixed number of jobs and writes no file") {
+    import spark.implicits._
+    withStore { path =>
+      val rows = (0L until 30L).map(h => h -> h).toDF("hash", "size")
+      Cdc.writeChunkStore(rows, path)
+      val files = dataFiles(path)
+      val (in, counters) = Metrics.measure(spark)(Cdc.ingestNovel(spark, path, rows))
+      assert(in.chunks === 0 && in.bytes === 0)
+      assert(dataFiles(path) === files)
+      // a pin, not a formula (AQE runs each exchange, broadcast and cache
+      // build as its own job): a count job or a write of the empty set
+      // would raise it
+      assert(counters.jobs === 6)
+      // the batch's cache is released; only the novel set's checkpoint stays
+      assert(counters.cachedRddsLeft === 1)
+      Fixpoint.release(in.novel)
     }
   }
 
@@ -139,7 +172,7 @@ class CdcSpec extends AnyFunSuite {
       withStore { path =>
         spark.conf.set(key, partitions.toLong)
         Cdc.writeChunkStore(day0, path)
-        val novel = sortedRows(Cdc.ingestNovel(spark, path, batch))
+        val novel = sortedRows(Cdc.ingestNovel(spark, path, batch).novel)
         (novel, sortedRows(spark.read.parquet(path)))
       }
     try {

@@ -464,4 +464,17 @@ class StreamingSpec extends AnyFunSuite {
       assert(out.forall(_.length === 16))
     } finally q.stop()
   }
+
+  test("mask_stream leaves the session's temp views as it found them") {
+    import spark.implicits._
+    def views = spark.catalog.listTables().collect().filter(_.isTemporary).map(_.name).toSet
+    SparkTestBase.withTargetDir("graft_mask_stream") { dir =>
+      Seq(10L -> "Ada", 11L -> "Bo", 20L -> "Cy").toDF("c_custkey", "c_name")
+        .write.parquet(s"$dir/customer.parquet")
+      val before = views
+      val row = graft.SparkEntry.named("mask_stream").head.run(spark, dir).head()
+      assert(row.getLong(0) === 2L && row.getLong(2) === 2L) // both streamed rows match the batch mask
+      assert(views === before)
+    }
+  }
 }
