@@ -787,8 +787,8 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
   private[graft] def qKnnGraph(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Similarity.knnJoin(
       table(spark, dir, "embeddings"), "vec_id", "embedding", k = 3,
-      nLists = 8, nProbe = 8)
-      .orderBy(col("vec_id"), col("rank"))
+      nLists = 8, nProbe = 8)(graph =>
+      graft.operators.Fixpoint.cached(graph.orderBy(col("vec_id"), col("rank"))))
 
 
   /** Pruned-probe kNN graph, contract-oracled: IVF routing is
@@ -804,36 +804,35 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
     * honest story to pin). */
   private[graft] def qKnnGraphPruned(spark: SparkSession, dir: String): DataFrame = {
     val emb = table(spark, dir, "embeddings")
-    val exact = graft.operators.Similarity.knnJoin(
-      emb, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 8)
-      .select(col("vec_id"), col("nbr_id"))
     val cents = graft.operators.Similarity.kmeansCentroids(
       emb, "vec_id", "embedding", 8, iters = 3)
-    // the pruned graph is <= 3 rows/vector — persist it and take every
-    // structural count in ONE aggregate pass. The old shape ran FOUR
-    // separate actions (count / distinct-count / self-count / recall
-    // join), each re-executing the whole IVF bucket join because
-    // knnJoin's internal cache releases after the first action — 4x the
-    // dominant cost for numbers one pass produces (guide §1.2/§5).
-    val pruned = graft.operators.Similarity.knnJoin(
-      emb, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 4,
-      centroids = Some(cents))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val structRow = pruned.agg(
-      count(lit(1)).as("n"),
-      countDistinct(col("vec_id")).as("served"),
-      count(when(col("vec_id") === col("nbr_id"), 1)).as("self")).collect()(0)
-    val (prunedN, served, selfEdges) =
-      (structRow.getLong(0), structRow.getLong(1), structRow.getLong(2))
     val nVec = emb.count()
-    val hit = pruned.select(col("vec_id"), col("nbr_id"))
-      .join(exact, Seq("vec_id", "nbr_id")).count()
-    pruned.unpersist(false)
-    val exactN = nVec * 3
-    val recallOk = if (hit.toDouble / exactN >= 0.6) 1L else 0L
-    import spark.implicits._
-    Seq((nVec, 3L, prunedN, served, selfEdges, recallOk))
-      .toDF("n_vectors", "k", "n_edges", "n_served", "n_self_edges", "recall_ok")
+    graft.operators.Similarity.knnJoin(
+        emb, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 8) { exact =>
+      graft.operators.Similarity.knnJoin(
+          emb, "vec_id", "embedding", k = 3, nLists = 8, nProbe = 4,
+          centroids = Some(cents)) { graph =>
+        // the pruned graph is <= 3 rows/vector: persisted, so the structural
+        // counts (ONE aggregate pass) and the recall join, two actions that
+        // each read it once, run the IVF bucket join once between them
+        // instead of once each; released once both have run
+        val pruned = graph.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        try {
+          val structRow = pruned.agg(
+            count(lit(1)).as("n"),
+            countDistinct(col("vec_id")).as("served"),
+            count(when(col("vec_id") === col("nbr_id"), 1)).as("self")).collect()(0)
+          val (prunedN, served, selfEdges) =
+            (structRow.getLong(0), structRow.getLong(1), structRow.getLong(2))
+          val hit = pruned.select(col("vec_id"), col("nbr_id"))
+            .join(exact.select(col("vec_id"), col("nbr_id")), Seq("vec_id", "nbr_id")).count()
+          val recallOk = if (hit.toDouble / (nVec * 3) >= 0.6) 1L else 0L
+          import spark.implicits._
+          Seq((nVec, 3L, prunedN, served, selfEdges, recallOk))
+            .toDF("n_vectors", "k", "n_edges", "n_served", "n_self_edges", "recall_ok")
+        } finally pruned.unpersist(blocking = false)
+      }
+    }
   }
 
 
@@ -877,41 +876,35 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
     * Full-probe kNN so DuckDB replays the whole pipeline: brute-force
     * graph → mutual filter → recursive-CTE closure → min-label
     * components. Spark runs the same composition at scale shape:
-    * bucketed kNN join → one self-join on the ≤ k·n edge set →
+    * bucketed kNN join → one pair-keyed count over the ≤ k·n edge set →
     * star-contraction CC — mutual-kNN graphs chain through neighbor
     * links (this corpus's graph exceeds a 20-hop min-label budget at
     * sf0.01), exactly the deep-graph regime `connectedComponentsStar`'s
     * O(log² n) rounds exist for. */
   private[graft] def qKnnClusters(spark: SparkSession, dir: String): DataFrame = {
-    // persist the <= 3n-row edge set before the mutual self-join: the two
-    // join branches are the SAME subtree, and without the cache each
-    // branch re-executed the full IVF bucket join (the dominant cost,
-    // ~4M candidate pairs) — plus the CC validation re-reads the edges.
-    // One bucket-join execution instead of two+ (guide §5: reuse).
-    val edges = graft.operators.Similarity.knnJoin(
-      table(spark, dir, "embeddings"), "vec_id", "embedding", k = 3,
-      nLists = 8, nProbe = 8)
-      .select(col("vec_id"), col("nbr_id"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val mutual = edges.as("x").join(edges.as("y"),
-        col("x.vec_id") === col("y.nbr_id") && col("x.nbr_id") === col("y.vec_id"))
-      .select(col("x.vec_id").as("id_a"), col("x.nbr_id").as("id_b"))
-      .where(col("id_a") < col("id_b"))
-    // unpersist EXPLICITLY, not via releaseAfterUse (advisor r18):
-    // connectedComponentsStar returns a checkpoint-truncated frame, so
-    // the final agg's analyzed plan is an Aggregate over LogicalRDD with no
-    // subtree matching the persisted edges — a listener keyed on the result
-    // can never fire, and every action that DOES read the edges runs inside
-    // connectedComponentsStar, before the listener registers. The labels
-    // are already materialized by the validation collect, so the edge cache
-    // is dead weight the moment the call returns.
-    val labels = graft.operators.CcStar.connectedComponentsStar(mutual)
-    edges.unpersist(false)
-    labels.agg(
-      count(lit(1)).as("n_nodes"),
-      countDistinct(col("component")).as("n_clusters"),
-      coalesce(sum(col("component") % 1000003), lit(0L)).cast("long").as("comp_checksum"),
-      coalesce(sum(col("id")), lit(0L)).cast("long").as("node_id_sum"))
+    graft.operators.Similarity.knnJoin(
+        table(spark, dir, "embeddings"), "vec_id", "embedding", k = 3,
+        nLists = 8, nProbe = 8) { graph =>
+      // a pair is mutual when both of its directions are kNN edges (edges
+      // are unique per (vec_id, nbr_id)): one pass over the edge set, not a
+      // self-join that read it once per side. The CC edge build and the CC
+      // validation, two actions that each read the mutual pairs once, share
+      // this cache; released once the result is in
+      val mutual = graph
+        .select(least(col("vec_id"), col("nbr_id")).as("id_a"),
+          greatest(col("vec_id"), col("nbr_id")).as("id_b"))
+        .where(col("id_a") < col("id_b"))
+        .groupBy(col("id_a"), col("id_b")).count()
+        .where(col("count") === 2)
+        .select(col("id_a"), col("id_b"))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try collected(graft.operators.CcStar.connectedComponentsStar(mutual).agg(
+        count(lit(1)).as("n_nodes"),
+        countDistinct(col("component")).as("n_clusters"),
+        coalesce(sum(col("component") % 1000003), lit(0L)).cast("long").as("comp_checksum"),
+        coalesce(sum(col("id")), lit(0L)).cast("long").as("node_id_sum")))
+      finally mutual.unpersist(blocking = false)
+    }
   }
 
 
@@ -954,21 +947,22 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
     val expected = supply.agg(
       sum(least(col("n_cand"), lit(3L))).as("exp_edges"),
       count(when(col("n_cand") >= 1, 1)).as("exp_served"))
-    val g = Similarity.knnJoin(
-      emb, "vec_id", "embedding", k = 3, nLists = nLists, nProbe = 2,
-      centroids = Some(cents))
-    g.agg(
-        countDistinct(col("vec_id")).as("n_served"),
-        count(lit(1)).as("n_edges"),
-        count(when(col("vec_id") === col("nbr_id"), 1)).as("n_self_edges"),
-        coalesce(max(col("rank")), lit(0L)).cast("long").as("max_rank"))
-      .crossJoin(expected)
-      .select(
-        lit(n).cast("long").as("n_vectors"),
-        when(col("n_served") === col("exp_served"), 1L).otherwise(0L).as("served_ok"),
-        when(col("n_edges") === col("exp_edges"), 1L).otherwise(0L).as("edges_ok"),
-        col("n_self_edges").cast("long").as("n_self_edges"),
-        when(col("max_rank") <= 3, 1L).otherwise(0L).as("rank_ok"))
+    Similarity.knnJoin(
+        emb, "vec_id", "embedding", k = 3, nLists = nLists, nProbe = 2,
+        centroids = Some(cents)) { g =>
+      collected(g.agg(
+          countDistinct(col("vec_id")).as("n_served"),
+          count(lit(1)).as("n_edges"),
+          count(when(col("vec_id") === col("nbr_id"), 1)).as("n_self_edges"),
+          coalesce(max(col("rank")), lit(0L)).cast("long").as("max_rank"))
+        .crossJoin(expected)
+        .select(
+          lit(n).cast("long").as("n_vectors"),
+          when(col("n_served") === col("exp_served"), 1L).otherwise(0L).as("served_ok"),
+          when(col("n_edges") === col("exp_edges"), 1L).otherwise(0L).as("edges_ok"),
+          col("n_self_edges").cast("long").as("n_self_edges"),
+          when(col("max_rank") <= 3, 1L).otherwise(0L).as("rank_ok")))
+    }
   }
 
 
@@ -1068,17 +1062,18 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
     import graft.operators.Decontamination
     val docs = table(spark, dir, "documents")
     val bench = docs.where(col("doc_id") % 50 === 0).select(col("text"))
-    val bloomIds = Decontamination.contaminatedIdsBloom(docs, "doc_id", "text", bench, "text", n = 8)
     val exactIds = Decontamination.contaminatedIds(docs, "doc_id", "text", bench, "text", n = 8)
-    val diff = bloomIds.withColumnRenamed("doc_id", "b")
-      .join(exactIds.withColumnRenamed("doc_id", "e"), col("b") === col("e"), "full_outer")
-      .where(col("b").isNull || col("e").isNull)
-      .agg(count(lit(1)).as("n_mismatch"))
-    docs.agg(count(lit(1)).as("n_docs"))
-      .crossJoin(bloomIds.agg( // 1x1 combines
-        count(lit(1)).as("n_contaminated"),
-        coalesce(sum(col("doc_id")), lit(0L)).cast("long").as("cont_id_sum")))
-      .crossJoin(diff)
+    Decontamination.contaminatedIdsBloom(docs, "doc_id", "text", bench, "text", n = 8) { bloomIds =>
+      val diff = bloomIds.withColumnRenamed("doc_id", "b")
+        .join(exactIds.withColumnRenamed("doc_id", "e"), col("b") === col("e"), "full_outer")
+        .where(col("b").isNull || col("e").isNull)
+        .agg(count(lit(1)).as("n_mismatch"))
+      collected(docs.agg(count(lit(1)).as("n_docs"))
+        .crossJoin(bloomIds.agg( // 1x1 combines
+          count(lit(1)).as("n_contaminated"),
+          coalesce(sum(col("doc_id")), lit(0L)).cast("long").as("cont_id_sum")))
+        .crossJoin(diff))
+    }
   }
 
 
@@ -1423,7 +1418,7 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
     graft.operators.Similarity.marginMine(
       emb.where(pmod(col("vec_id"), lit(2L)) === 0 && col("vec_id") < 400),
       emb.where(pmod(col("vec_id"), lit(2L)) === 1),
-      "vec_id", "embedding", k = 4)
+      "vec_id", "embedding", k = 4)(collected)
   }
 
   // ---------------------------------------------------------------------
@@ -1518,45 +1513,45 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
         lit("هذه وثيقة باللغة العربية عن الأخبار والطقس في المساء اليوم"))
 
   private[graft] def qLmQualityBuckets(spark: SparkSession, dir: String): DataFrame = {
+    import graft.operators.Fixpoint.{cached, materialized}
     val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
     val planted = langArmOf(col("doc_id"))
-    val composed = docs.select(col("doc_id"),
-      concat(planted, lit(" "), substring(col("text"), 1, 40)).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val langs = composed.select(col("doc_id"),
-      graft.operators.LangId.langid(col("t")).as("lang"))
-    val (bg, uni) = graft.operators.LanguageModel.trainBigramCounts(composed, "t")
-    // persist the model tables and the per-doc scored frame: uni's subtree
-    // is referenced three times (unigram join, vocab constant, and again
-    // through the second perDoc use), and perDoc feeds BOTH the histogram
-    // and the final bucket join — unpersisted, the whole train+score
-    // pipeline executed twice (59 Exchanges in the before-plan,
-    // plans/r18/lm_quality_buckets_before.txt)
-    bg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    uni.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val scored = graft.operators.LanguageModel
-      .scoreBigrams(composed, "doc_id", "t", bg, uni)
-    val perDoc = langs.join(scored, "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val hist = perDoc.groupBy("lang", "avg_logp_x1e4")
-      .agg(count(lit(1)).as("cnt"))
-    val wDesc = Window.partitionBy("lang").orderBy(col("avg_logp_x1e4").desc)
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val cutoffs = hist
-      .withColumn("cum", sum(col("cnt")).over(wDesc))
-      .withColumn("n", sum(col("cnt")).over(Window.partitionBy("lang")))
-      .withColumn("start", col("cum") - col("cnt"))
-      .withColumn("bucket",
-        when(col("start") < floor((col("n") + 2) / lit(3.0)).cast("long"), lit("head"))
-          .when(col("start") < floor((col("n") * 2 + 2) / lit(3.0)).cast("long"),
-            lit("middle"))
-          .otherwise(lit("tail")))
-      .select(col("lang"), col("avg_logp_x1e4"), col("bucket"))
-    graft.operators.Partitioning.releaseAfterUse(
-      perDoc.join(broadcast(cutoffs), Seq("lang", "avg_logp_x1e4"))
-        .select(col("doc_id"), col("lang"), col("n_bigrams"),
-          col("avg_logp_x1e4"), col("bucket")),
-      composed, bg, uni, perDoc)
+    // the composed text, both model tables and the per-doc scored frame are
+    // each read more than once: uni's subtree three times (unigram join,
+    // vocab constant, and again through the second perDoc use), and perDoc
+    // by BOTH the histogram and the final bucket join — uncached, the whole
+    // train+score pipeline executed twice (59 Exchanges in the before-plan,
+    // plans/r18/lm_quality_buckets_before.txt). Each is built once and
+    // released once the result is in.
+    materialized(docs.select(col("doc_id"),
+        concat(planted, lit(" "), substring(col("text"), 1, 40)).as("t"))) { composed =>
+      val langs = composed.select(col("doc_id"),
+        graft.operators.LangId.langid(col("t")).as("lang"))
+      val (bigrams, unigrams) = graft.operators.LanguageModel.trainBigramCounts(composed, "t")
+      materialized(bigrams) { bg => materialized(unigrams) { uni =>
+        val scored = graft.operators.LanguageModel
+          .scoreBigrams(composed, "doc_id", "t", bg, uni)
+        materialized(langs.join(scored, "doc_id")) { perDoc =>
+          val hist = perDoc.groupBy("lang", "avg_logp_x1e4")
+            .agg(count(lit(1)).as("cnt"))
+          val wDesc = Window.partitionBy("lang").orderBy(col("avg_logp_x1e4").desc)
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+          val cutoffs = hist
+            .withColumn("cum", sum(col("cnt")).over(wDesc))
+            .withColumn("n", sum(col("cnt")).over(Window.partitionBy("lang")))
+            .withColumn("start", col("cum") - col("cnt"))
+            .withColumn("bucket",
+              when(col("start") < floor((col("n") + 2) / lit(3.0)).cast("long"), lit("head"))
+                .when(col("start") < floor((col("n") * 2 + 2) / lit(3.0)).cast("long"),
+                  lit("middle"))
+                .otherwise(lit("tail")))
+            .select(col("lang"), col("avg_logp_x1e4"), col("bucket"))
+          cached(perDoc.join(broadcast(cutoffs), Seq("lang", "avg_logp_x1e4"))
+            .select(col("doc_id"), col("lang"), col("n_bigrams"),
+              col("avg_logp_x1e4"), col("bucket")))
+        }
+      }}
+    }
   }
 
   /** Interpolated Kneser–Ney trigram scoring
@@ -1572,29 +1567,32 @@ private[graft] trait EntryAnnSketchText { this: EntryCore =>
     * log-grid. */
   private[graft] def qLmKnScore(spark: SparkSession, dir: String): DataFrame = {
     val docs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
-    val composed = docs.select(col("doc_id"), concat(
+    // the composed text feeds training and scoring: built once, released
+    // once the result is in
+    graft.operators.Fixpoint.materialized(docs.select(col("doc_id"), concat(
       substring(col("text"), 1, 60), lit(" "),
       when(pmod(col("doc_id"), lit(4L)) === 0, lit("alpha beta gamma"))
         .when(pmod(col("doc_id"), lit(4L)) === 1,
           concat(lit("alpha beta r"), col("doc_id")))
         .when(pmod(col("doc_id"), lit(4L)) === 2, lit("delta epsilon"))
-        .otherwise(lit(""))).as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val model = graft.operators.LanguageModel.trainKneserNey(
-      composed.where(pmod(col("doc_id"), lit(3L)) =!= 0), "t")
-    // persist the two root model tables: tri's trigram explode+count
-    // subtree is referenced by FOUR scoring branches (tri/bi/cont/contAgg
-    // all derive from it) and uniCont's bigram-type distinct by two —
-    // unpersisted, each branch replayed the full training pass (58
-    // Exchanges in the before-plan, plans/r18/lm_kn_score_before.txt).
-    // The model tables are vocabulary-shaped (the operator's documented
-    // materialize-once story); derived aggregates stay lazy on top.
-    model.tri.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    model.uniCont.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.operators.Partitioning.releaseAfterUse(
-      graft.operators.LanguageModel.scoreKneserNey(
-        composed, "doc_id", "t", model),
-      composed, model.tri, model.uniCont)
+        .otherwise(lit(""))).as("t"))) { composed =>
+      val model = graft.operators.LanguageModel.trainKneserNey(
+        composed.where(pmod(col("doc_id"), lit(3L)) =!= 0), "t")
+      // persist the two root model tables: tri's trigram explode+count
+      // subtree is referenced by FOUR scoring branches (tri/bi/cont/contAgg
+      // all derive from it) and uniCont's bigram-type distinct by two —
+      // unpersisted, each branch replayed the full training pass (58
+      // Exchanges in the before-plan, plans/r18/lm_kn_score_before.txt).
+      // The model tables are vocabulary-shaped (the operator's documented
+      // materialize-once story); the derived aggregates are built on their
+      // lineage, so only an in-place persist reaches them. Released once
+      // the result is in.
+      model.tri.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      model.uniCont.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try graft.operators.Fixpoint.cached(
+        graft.operators.LanguageModel.scoreKneserNey(composed, "doc_id", "t", model))
+      finally { model.tri.unpersist(blocking = false); model.uniCont.unpersist(blocking = false) }
+    }
   }
 
   /** Flesch Reading Ease over composed multi-sentence documents — the

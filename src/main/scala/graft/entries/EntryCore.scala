@@ -16,6 +16,13 @@ private[graft] trait EntryCore {
   private[graft] def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 
+  /** `df` run now into a local frame: the small result (an aggregate or a
+    * bounded report) of a query that releases what its plan reads. A
+    * per-document or per-vector result stays off the driver instead, built
+    * into executor blocks by [[graft.operators.Fixpoint.cached]]; a run
+    * leaves that frame, freed by the context cleaner once unreachable. */
+  private[graft] def collected(df: DataFrame): DataFrame =
+    df.sparkSession.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
 
   /** Temp-store directory under the application's own temp root
     * (`SparkFiles.getRootDirectory()`), pre-cleaned: the root is per

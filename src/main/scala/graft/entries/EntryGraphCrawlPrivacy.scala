@@ -866,34 +866,31 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     val ord = table(spark, dir, "orders").select(col("o_orderkey").cast("string").as("k"))
     val w = 4096
     // ONE sketch build for the self-join estimate: both arguments are the
-    // same CMS, and passing two fresh cmsAggregate frames executed the full
-    // lineitem aggregation twice (the sketch is a 1-row, 128 KiB frame —
-    // persisting it is free; the scan it saves is corpus-sized)
-    val selfCms = Sketches.cmsAggregate(liPart, "k", 4, w)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val selfEst = Sketches.cmsJoinSizeEstimate(selfCms, selfCms, 4, w)
-      .select(col("join_size_est").as("est_self"))
-    val olEst = Sketches.cmsJoinSizeEstimate(
-      Sketches.cmsAggregate(liOrd, "k", 4, w), Sketches.cmsAggregate(ord, "k", 4, w), 4, w)
-      .select(col("join_size_est").as("est_ol"))
-    val exactSelf = liPart.groupBy(col("k")).agg(count(lit(1)).as("c"))
-      .agg(sum(col("c") * col("c")).as("exact_self"), sum(col("c")).as("n_li_part"))
-    val exactOl = liOrd.groupBy(col("k")).agg(count(lit(1)).as("ca"))
-      .join(ord.groupBy(col("k")).agg(count(lit(1)).as("cb")), Seq("k"))
-      .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("exact_ol"))
-    val nOrd = ord.agg(count(lit(1)).as("n_ord"))
-    graft.operators.Partitioning.releaseAfterUse(
-      selfEst.crossJoin(olEst).crossJoin(exactSelf).crossJoin(exactOl).crossJoin(nOrd)
-      .select(
-        col("est_self"), col("exact_self"),
-        when(col("est_self") >= col("exact_self"), 1L).otherwise(0L).as("self_ge_ok"),
-        when(col("est_self") <= col("exact_self") +
-          expr(s"(3 * n_li_part * n_li_part) div $w"), 1L).otherwise(0L).as("self_bound_ok"),
-        col("est_ol"), col("exact_ol"),
-        when(col("est_ol") >= col("exact_ol"), 1L).otherwise(0L).as("ol_ge_ok"),
-        when(col("est_ol") <= col("exact_ol") +
-          expr(s"(3 * n_li_part * n_ord) div $w"), 1L).otherwise(0L).as("ol_bound_ok")),
-      selfCms)
+    // same CMS (a 1-row, 128 KiB frame built once; the scan it saves is
+    // corpus-sized), released once the 1-row result is in
+    graft.operators.Fixpoint.materialized(Sketches.cmsAggregate(liPart, "k", 4, w)) { selfCms =>
+      val selfEst = Sketches.cmsJoinSizeEstimate(selfCms, selfCms, 4, w)
+        .select(col("join_size_est").as("est_self"))
+      val olEst = Sketches.cmsJoinSizeEstimate(
+        Sketches.cmsAggregate(liOrd, "k", 4, w), Sketches.cmsAggregate(ord, "k", 4, w), 4, w)
+        .select(col("join_size_est").as("est_ol"))
+      val exactSelf = liPart.groupBy(col("k")).agg(count(lit(1)).as("c"))
+        .agg(sum(col("c") * col("c")).as("exact_self"), sum(col("c")).as("n_li_part"))
+      val exactOl = liOrd.groupBy(col("k")).agg(count(lit(1)).as("ca"))
+        .join(ord.groupBy(col("k")).agg(count(lit(1)).as("cb")), Seq("k"))
+        .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("exact_ol"))
+      val nOrd = ord.agg(count(lit(1)).as("n_ord"))
+      collected(selfEst.crossJoin(olEst).crossJoin(exactSelf).crossJoin(exactOl).crossJoin(nOrd)
+        .select(
+          col("est_self"), col("exact_self"),
+          when(col("est_self") >= col("exact_self"), 1L).otherwise(0L).as("self_ge_ok"),
+          when(col("est_self") <= col("exact_self") +
+            expr(s"(3 * n_li_part * n_li_part) div $w"), 1L).otherwise(0L).as("self_bound_ok"),
+          col("est_ol"), col("exact_ol"),
+          when(col("est_ol") >= col("exact_ol"), 1L).otherwise(0L).as("ol_ge_ok"),
+          when(col("est_ol") <= col("exact_ol") +
+            expr(s"(3 * n_li_part * n_ord) div $w"), 1L).otherwise(0L).as("ol_bound_ok")))
+    }
   }
 
 
@@ -975,19 +972,20 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * the (id, source) projection; the corpus itself never joins. */
   private[graft] def qDedupCrossSource(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val pairs = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8)
     val src = docs.select(col("doc_id").cast("long"), col("source"))
-    // the PAIR side broadcasts (duplicate-mass-sized); the corpus-sized
-    // (id, source) projection is scanned, never shuffled or broadcast
-    val withA = src.toDF("__ida", "src_a")
-      .join(broadcast(pairs), col("id_a") === col("__ida"))
-    src.toDF("__idb", "src_b")
-      .join(broadcast(withA), col("id_b") === col("__idb"))
-      .groupBy(least(col("src_a"), col("src_b")).as("src_lo"),
-        greatest(col("src_a"), col("src_b")).as("src_hi"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("id_a") + col("id_b")).cast("long").as("pair_id_sum"))
-      .orderBy("src_lo", "src_hi")
+    graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8) { pairs =>
+      // the PAIR side broadcasts (duplicate-mass-sized); the corpus-sized
+      // (id, source) projection is scanned, never shuffled or broadcast
+      val withA = src.toDF("__ida", "src_a")
+        .join(broadcast(pairs), col("id_a") === col("__ida"))
+      collected(src.toDF("__idb", "src_b")
+        .join(broadcast(withA), col("id_b") === col("__idb"))
+        .groupBy(least(col("src_a"), col("src_b")).as("src_lo"),
+          greatest(col("src_a"), col("src_b")).as("src_hi"))
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(col("id_a") + col("id_b")).cast("long").as("pair_id_sum"))
+        .orderBy("src_lo", "src_hi"))
+    }
   }
 
 
@@ -1792,11 +1790,13 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * a dedup cutoff (where does the pair mass sit?). */
   private[graft] def qPairSimilarityHist(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.ngramJaccardPairs(
-      table(spark, dir, "documents"), "doc_id", "text", threshold = 0.2, n = 3)
-      .groupBy(least(floor(col("jaccard") * 20).cast("long"), lit(19L)).as("bucket"))
-      .agg(count(lit(1)).as("n_pairs"),
-        sum(col("id_a") + col("id_b")).cast("long").as("pair_id_sum"))
-      .orderBy("bucket")
+        table(spark, dir, "documents"), "doc_id", "text", threshold = 0.2, n = 3) { pairs =>
+      collected(pairs
+        .groupBy(least(floor(col("jaccard") * 20).cast("long"), lit(19L)).as("bucket"))
+        .agg(count(lit(1)).as("n_pairs"),
+          sum(col("id_a") + col("id_b")).cast("long").as("pair_id_sum"))
+        .orderBy("bucket"))
+    }
 
 
   /** Triangle count over the same planted 3-out-regular doc graph as
@@ -1826,8 +1826,8 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     * detector; full per-doc value oracle. */
   private[graft] def qNgramNovelty(spark: SparkSession, dir: String): DataFrame =
     graft.operators.TextAnalysis.ngramNovelty(
-      table(spark, dir, "documents"), "doc_id", "text", n = 3)
-      .orderBy("doc_id")
+      table(spark, dir, "documents"), "doc_id", "text", n = 3)(novelty =>
+      graft.operators.Fixpoint.cached(novelty.orderBy("doc_id")))
 
 
   /** Containment dedup on planted embedded docs: every 20th doc is
@@ -1844,9 +1844,6 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
       (col("doc_id") + 2000000000000L).as("doc_id"),
       concat(col("text"), lit(" "), translate(col("text"), alpha, rot13)).as("text"))
     val all = docs.unionByName(planted)
-    // BOTH measures from ONE pair-counts pass (same tokenize/persist/
-    // self-join; only the final comparisons differ)
-    val pc = graft.operators.Dedup.ngramPairCounts(all, "doc_id", "text", n = 3)
     // containment over the POST-CUTOFF denominators, mirroring
     // ngramContainmentPairs; the DuckDB oracle computes full-set la/lb,
     // which coincide here because no 3-gram's df approaches maxDf=1000 at
@@ -1854,11 +1851,15 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     val cont = greatest(col("common").cast("double") / col("na_cut"),
       col("common").cast("double") / col("nb_cut"))
     val jac = col("common").cast("double") / (col("na") + col("nb") - col("common"))
-    pc.agg(
-      coalesce(sum(when(cont >= 0.9, 1L).otherwise(0L)), lit(0L)).as("n_containment"),
-      coalesce(sum(when(cont >= 0.9, col("id_a") + col("id_b"))), lit(0L))
-        .cast("long").as("pair_id_sum"),
-      coalesce(sum(when(jac >= 0.9, 1L).otherwise(0L)), lit(0L)).as("n_jaccard"))
+    // BOTH measures from ONE pair-counts pass (same tokenize/self-join;
+    // only the final comparisons differ)
+    graft.operators.Dedup.ngramPairCounts(all, "doc_id", "text", n = 3) { pc =>
+      collected(pc.agg(
+        coalesce(sum(when(cont >= 0.9, 1L).otherwise(0L)), lit(0L)).as("n_containment"),
+        coalesce(sum(when(cont >= 0.9, col("id_a") + col("id_b"))), lit(0L))
+          .cast("long").as("pair_id_sum"),
+        coalesce(sum(when(jac >= 0.9, 1L).otherwise(0L)), lit(0L)).as("n_jaccard")))
+    }
   }
 
   // ---------------------------------------------------------------------
@@ -2359,32 +2360,35 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     val files = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
       .select(col("doc_id").cast("long").as("warc_id"))
       .withColumn("content", mkWarc(col("warc_id")))
-    val recs = graft.sources.Warc.recordsDF(files)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val chains = graft.operators.Redirects.resolveChains(recs)
-      .withColumn("aid", nullif(regexp_extract(col("url"),
-        "^https://chain\\.example\\.com/[ab]/(\\d+)$", 1), lit("")).cast("long"))
-      .withColumn("exp_final", when(col("aid").isNotNull,
-        concat(lit("https://final.example.com/p/"), pmod(col("aid"), lit(20L)))))
-      .agg(
-        count(lit(1)).as("n_chains"),
-        count(when(col("resolved"), 1)).as("n_resolved"),
-        count(when(col("resolved") && col("hops") === 1, 1)).as("n_hop1"),
-        count(when(col("resolved") && col("hops") === 2, 1)).as("n_hop2"),
-        count(when(!col("resolved"), 1)).as("n_unresolved"),
-        count(when(col("final_url") === col("exp_final"), 1)).as("n_final_ok"),
-        countDistinct(when(col("resolved"), col("final_url"))).as("n_distinct_final"))
-    val revisits = recs.where(col("warc_type") === "revisit")
-      .withColumn("vid", nullif(regexp_extract(col("target_uri"), "/dup/(\\d+)$", 1),
-        lit("")).cast("long"))
-      .agg(
-        count(lit(1)).as("n_revisit"),
-        count(when(col("refers_to_uri") === concat(
-          lit("https://final.example.com/p/"), pmod(col("vid"), lit(20L))), 1))
-          .as("n_refers_ok"),
-        countDistinct(col("revisit_profile")).as("n_profiles"))
-    graft.operators.Partitioning.releaseAfterUse(
-      chains.crossJoin(revisits), recs) // two 1-row frames
+    // both aggregates read the parsed records: built once, released once
+    // the 1-row result is in
+    graft.operators.Fixpoint.materialized(graft.sources.Warc.recordsDF(files)) { recs =>
+      val revisits = recs.where(col("warc_type") === "revisit")
+        .withColumn("vid", nullif(regexp_extract(col("target_uri"), "/dup/(\\d+)$", 1),
+          lit("")).cast("long"))
+        .agg(
+          count(lit(1)).as("n_revisit"),
+          count(when(col("refers_to_uri") === concat(
+            lit("https://final.example.com/p/"), pmod(col("vid"), lit(20L))), 1))
+            .as("n_refers_ok"),
+          countDistinct(col("revisit_profile")).as("n_profiles"))
+      graft.operators.Redirects.resolveChains(recs) { resolved =>
+        val chains = resolved
+          .withColumn("aid", nullif(regexp_extract(col("url"),
+            "^https://chain\\.example\\.com/[ab]/(\\d+)$", 1), lit("")).cast("long"))
+          .withColumn("exp_final", when(col("aid").isNotNull,
+            concat(lit("https://final.example.com/p/"), pmod(col("aid"), lit(20L)))))
+          .agg(
+            count(lit(1)).as("n_chains"),
+            count(when(col("resolved"), 1)).as("n_resolved"),
+            count(when(col("resolved") && col("hops") === 1, 1)).as("n_hop1"),
+            count(when(col("resolved") && col("hops") === 2, 1)).as("n_hop2"),
+            count(when(!col("resolved"), 1)).as("n_unresolved"),
+            count(when(col("final_url") === col("exp_final"), 1)).as("n_final_ok"),
+            countDistinct(when(col("resolved"), col("final_url"))).as("n_distinct_final"))
+        collected(chains.crossJoin(revisits)) // two 1-row frames
+      }
+    }
   }
 
   /** Streaming twin of `cdc_incremental` — blobs arriving as
@@ -2521,37 +2525,38 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
     val blobs = graft.operators.Partitioning.spread(table(spark, dir, "documents"))
       .select(col("doc_id").cast("long").as("id"))
       .withColumn("blob", mkBlob(col("id")))
-    val chunked = blobs.select(col("id"), length(col("blob")).cast("long").as("blen"),
-        graft.plans.CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val perDoc = chunked
-      .withColumn("roundtrip_ok", aggregate(col("c"),
-        struct(lit(0L).as("off"), lit(true).as("ok")),
-        (acc, x) => struct((acc.getField("off") + x.getField("size")).as("off"),
-          (acc.getField("ok") && x.getField("offset") === acc.getField("off")).as("ok")),
-        acc => acc.getField("ok") && acc.getField("off") === col("blen")))
-      .withColumn("over_max", exists(col("c"), x => x.getField("size") > 4096))
-      .withColumn("under_min_nonlast",
-        exists(slice(col("c"), lit(1), size(col("c")) - 1),
-          x => x.getField("size") <= 256))
-      .withColumn("tail_hash", element_at(col("c"), -1).getField("hash"))
-      .agg(
-        count(lit(1)).as("n_docs"),
-        sum(col("blen")).as("total_bytes"),
-        count(when(col("over_max"), 1)).as("over_max"),
-        count(when(col("under_min_nonlast"), 1)).as("under_min_nonlast"),
-        count(when(!col("roundtrip_ok"), 1)).as("roundtrip_violations"),
-        countDistinct(col("tail_hash")).as("n_distinct_tail_hash"))
-    val chunkLevel = chunked
-      .select(explode(col("c")).as("x"))
-      .select(col("x.hash").as("hash"), col("x.size").as("sz"))
-      .agg(sum(col("sz")).as("tot"), count(lit(1)).as("n_chunks"))
-    val distinctLevel = chunked
-      .select(explode(col("c")).as("x"))
-      .groupBy(col("x.hash")).agg(max(col("x.size")).as("sz"))
-      .agg(sum(col("sz")).as("dtot"))
-    graft.operators.Partitioning.releaseAfterUse(
-      perDoc.crossJoin(chunkLevel).crossJoin(distinctLevel)
+    // three aggregates read the chunk arrays: built once, released once the
+    // 1-row result is in
+    graft.operators.Fixpoint.materialized(
+      blobs.select(col("id"), length(col("blob")).cast("long").as("blen"),
+        graft.plans.CdcExpressions.cdcChunks(col("blob"), 256, 1024, 4096).as("c"))) { chunked =>
+      val perDoc = chunked
+        .withColumn("roundtrip_ok", aggregate(col("c"),
+          struct(lit(0L).as("off"), lit(true).as("ok")),
+          (acc, x) => struct((acc.getField("off") + x.getField("size")).as("off"),
+            (acc.getField("ok") && x.getField("offset") === acc.getField("off")).as("ok")),
+          acc => acc.getField("ok") && acc.getField("off") === col("blen")))
+        .withColumn("over_max", exists(col("c"), x => x.getField("size") > 4096))
+        .withColumn("under_min_nonlast",
+          exists(slice(col("c"), lit(1), size(col("c")) - 1),
+            x => x.getField("size") <= 256))
+        .withColumn("tail_hash", element_at(col("c"), -1).getField("hash"))
+        .agg(
+          count(lit(1)).as("n_docs"),
+          sum(col("blen")).as("total_bytes"),
+          count(when(col("over_max"), 1)).as("over_max"),
+          count(when(col("under_min_nonlast"), 1)).as("under_min_nonlast"),
+          count(when(!col("roundtrip_ok"), 1)).as("roundtrip_violations"),
+          countDistinct(col("tail_hash")).as("n_distinct_tail_hash"))
+      val chunkLevel = chunked
+        .select(explode(col("c")).as("x"))
+        .select(col("x.hash").as("hash"), col("x.size").as("sz"))
+        .agg(sum(col("sz")).as("tot"), count(lit(1)).as("n_chunks"))
+      val distinctLevel = chunked
+        .select(explode(col("c")).as("x"))
+        .groupBy(col("x.hash")).agg(max(col("x.size")).as("sz"))
+        .agg(sum(col("sz")).as("dtot"))
+      collected(perDoc.crossJoin(chunkLevel).crossJoin(distinctLevel)
         .select(col("n_docs"), col("total_bytes"), col("over_max"),
           col("under_min_nonlast"), col("roundtrip_violations"),
           col("n_distinct_tail_hash"),
@@ -2559,8 +2564,8 @@ private[graft] trait EntryGraphCrawlPrivacy { this: EntryCore =>
             .otherwise(lit(0L)).as("dedup_saved_ge_half"),
           when(col("tot") / col("n_chunks") >= 384 &&
             col("tot") / col("n_chunks") <= 3072, lit(1L))
-            .otherwise(lit(0L)).as("avg_size_in_range")),
-      chunked)
+            .otherwise(lit(0L)).as("avg_size_in_range")))
+    }
   }
 
   /** Frontier replay, shared VERBATIM by `sitemap_frontier` and its

@@ -396,16 +396,19 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
 
 
   private[graft] def qDedupMinhash(spark: SparkSession, dir: String): DataFrame =
-    graft.operators.Dedup.minhashPairs(table(spark, dir, "documents"), "doc_id", "text", threshold = 0.8)
-      .agg(count(lit(1)).as("n_pairs"),
-        coalesce(sum(col("id_a") + col("id_b")), lit(0L)).cast("long").as("pair_id_sum"))
+    graft.operators.Dedup.minhashPairs(table(spark, dir, "documents"), "doc_id", "text",
+        threshold = 0.8) { pairs =>
+      collected(pairs.agg(count(lit(1)).as("n_pairs"),
+        coalesce(sum(col("id_a") + col("id_b")), lit(0L)).cast("long").as("pair_id_sum")))
+    }
 
 
   private[graft] def qDedupNgram(spark: SparkSession, dir: String): DataFrame =
     graft.operators.Dedup.ngramJaccardPairs(table(spark, dir, "documents"), "doc_id", "text",
-      threshold = 0.3, n = 3)
-      .agg(count(lit(1)).as("n_pairs"),
-        coalesce(sum(col("id_a") + col("id_b")), lit(0L)).cast("long").as("pair_id_sum"))
+        threshold = 0.3, n = 3) { pairs =>
+      collected(pairs.agg(count(lit(1)).as("n_pairs"),
+        coalesce(sum(col("id_a") + col("id_b")), lit(0L)).cast("long").as("pair_id_sum")))
+    }
 
 
   /** The exact hot-gram report behind [[graft.operators.Dedup.ngramHotGrams]]
@@ -422,7 +425,7 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     * occurrence counts, merged spans, and the reconstructed clean text. */
   private[graft] def qDedupSpans(spark: SparkSession, dir: String): DataFrame =
     graft.operators.SpanDedup.removeDuplicatedSpans(
-      table(spark, dir, "documents"), "doc_id", "text", spanTokens = 8)
+      table(spark, dir, "documents"), "doc_id", "text", spanTokens = 8)(graft.operators.Fixpoint.cached(_))
 
 
   /** Exact edit-distance similarity join over documents + planted 1-edit
@@ -437,10 +440,11 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
       (col("doc_id") + 1000000000000L).as("doc_id"),
       expr("concat(substr(text, 1, 5), '#', substr(text, 7))").as("text"))
     graft.operators.EditDistance.editDistancePairs(
-        docs.unionByName(planted), "doc_id", "text", maxDistance = 2)
-      .agg(count(lit(1)).as("n_pairs"),
+        docs.unionByName(planted), "doc_id", "text", maxDistance = 2) { pairs =>
+      collected(pairs.agg(count(lit(1)).as("n_pairs"),
         coalesce(sum(col("id_a") + col("id_b")), lit(0L)).cast("long").as("pair_id_sum"),
-        coalesce(sum(col("dist")), lit(0L)).cast("long").as("dist_sum"))
+        coalesce(sum(col("dist")), lit(0L)).cast("long").as("dist_sum")))
+    }
   }
 
 
@@ -486,11 +490,12 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
       length(col("text")).cast("long").as("n_chars_scored"),
       size(split(lower(trim(col("text"))), "\\s+")).cast("long").as("n_tokens"))
     graft.operators.Versioning.incrementalRecompute(
-        score(v1), v1, v2, "doc_id", Seq("text", "lang"), score)
-      .groupBy(col("provenance"))
-      .agg(count(lit(1)).as("n"), sum(col("n_chars_scored")).cast("long").as("chars_sum"),
-        sum(col("n_tokens")).cast("long").as("tokens_sum"),
-        sum(col("doc_id")).cast("long").as("id_sum"))
+        score(v1), v1, v2, "doc_id", Seq("text", "lang"), score) { scored =>
+      collected(scored.groupBy(col("provenance"))
+        .agg(count(lit(1)).as("n"), sum(col("n_chars_scored")).cast("long").as("chars_sum"),
+          sum(col("n_tokens")).cast("long").as("tokens_sum"),
+          sum(col("doc_id")).cast("long").as("id_sum")))
+    }
   }
 
 
@@ -676,13 +681,14 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     * pair set here (checked by dedup_minhash), so DuckDB recomputes the
     * same components via exact pairs + a recursive closure. */
   private[graft] def qDedupComponents(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = graft.operators.Dedup.minhashPairs(
-      table(spark, dir, "documents"), "doc_id", "text", threshold = 0.8)
-    graft.operators.Dedup.connectedComponents(pairs)
-      .agg(
-        countDistinct(col("component")).as("n_components"),
-        count(lit(1)).as("n_clustered_docs"),
-        sum_distinct(col("component")).cast("long").as("rep_id_sum"))
+    graft.operators.Dedup.minhashPairs(
+        table(spark, dir, "documents"), "doc_id", "text", threshold = 0.8) { pairs =>
+      collected(graft.operators.Dedup.connectedComponents(pairs)
+        .agg(
+          countDistinct(col("component")).as("n_components"),
+          count(lit(1)).as("n_clustered_docs"),
+          sum_distinct(col("component")).cast("long").as("rep_id_sum")))
+    }
   }
 
 
@@ -721,9 +727,10 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     * set (count + id sum) from the exact pair closure in DuckDB. */
   private[graft] def qDedupDrop(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val pairs = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8)
-    graft.operators.Dedup.dropNearDuplicates(docs, "doc_id", pairs)
-      .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).cast("long").as("kept_id_sum"))
+    graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8) { pairs =>
+      collected(graft.operators.Dedup.dropNearDuplicates(docs, "doc_id", pairs)
+        .agg(count(lit(1)).as("n_kept"), sum(col("doc_id")).cast("long").as("kept_id_sum")))
+    }
   }
 
 
@@ -940,11 +947,12 @@ private[graft] trait EntryMaskDedupMedia { this: EntryCore =>
     val augmented = base.unionByName(plantedCopies(emb, 1L, 8L, 5, 2000000L))
     val cluster = (id: Column) => when(id >= 2000000L, ((id - 2000000L) / 100).cast("long"))
       .otherwise(id)
-    graft.operators.Similarity.cosinePairsLsh(augmented, "vec_id", "embedding", 0.95)
-      .agg(
+    graft.operators.Similarity.cosinePairsLsh(augmented, "vec_id", "embedding", 0.95) { pairs =>
+      collected(pairs.agg(
         count(lit(1)).as("n_pairs"),
         count(when(cluster(col("id_a")) === cluster(col("id_b")), 1)).as("n_in_cluster"),
-        count(when(cluster(col("id_a")) =!= cluster(col("id_b")), 1)).as("n_cross_cluster"))
+        count(when(cluster(col("id_a")) =!= cluster(col("id_b")), 1)).as("n_cross_cluster")))
+    }
   }
 
 

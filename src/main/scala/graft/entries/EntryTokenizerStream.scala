@@ -104,11 +104,10 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
       val px = Array.tabulate[Byte](w * h * 3)(i => rgb(i % 3).toByte)
       graft.operators.Multimodal.pngEncode(w, h, 2, px)
     })
-    // PID-suffixed: a fixed shared path would let two concurrent driver
-    // JVMs (e.g. Bench and Verify on one host) overwrite each other's
-    // files mid-scan and produce flaky compares unrelated to the operator
-    val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_binary_ingest_${ProcessHandle.current().pid()}").getAbsolutePath
+    // under the application's own temp root: concurrent driver JVMs (e.g.
+    // Bench and Verify on one host) never share it, and spark.stop()
+    // deletes it
+    val out = freshTmpStore(spark, "graft_binary_ingest").getAbsolutePath
     val assets = table(spark, dir, "documents").where(col("doc_id") % 50 === 0)
       .select(col("doc_id"), mkPng(col("doc_id").cast("long")).as("content"))
     graft.sources.BinaryIngest.writeFiles(assets, "doc_id", "content", out, ".png")
@@ -181,13 +180,14 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     val batch = docs.where(col("doc_id") % 50 === 0).select(
       (col("doc_id") + 1000000000000L).as("doc_id"),
       concat(col("text"), lit(" appended tail")).as("text"))
-    val flagged = graft.operators.Dedup.incrementalNearDuplicates(
-      docs.select(col("doc_id"), col("text")), batch, "doc_id", "text", threshold = 0.8)
-    batch.agg(count(lit(1)).as("n_new"))
-      .crossJoin(flagged.agg( // 1x1 combines
-        count(lit(1)).as("n_pairs"),
-        countDistinct(col("new_id")).as("n_flagged"),
-        coalesce(sum(col("new_id") + col("corpus_id")), lit(0L)).cast("long").as("pair_id_sum")))
+    graft.operators.Dedup.incrementalNearDuplicates(
+        docs.select(col("doc_id"), col("text")), batch, "doc_id", "text", threshold = 0.8) { flagged =>
+      collected(batch.agg(count(lit(1)).as("n_new"))
+        .crossJoin(flagged.agg( // 1x1 combines
+          count(lit(1)).as("n_pairs"),
+          countDistinct(col("new_id")).as("n_flagged"),
+          coalesce(sum(col("new_id") + col("corpus_id")), lit(0L)).cast("long").as("pair_id_sum"))))
+    }
   }
 
 
@@ -298,13 +298,14 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * with hardcoded cumulative cutoffs — every step integer-exact. */
   private[graft] def qClusterSplit(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val pairs = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8)
-    graft.operators.Splits.clusterStableSplit(docs, "doc_id", pairs,
-      Seq(("train", 9000), ("val", 500), ("test", 500)))
-      .groupBy(col("split"))
-      .agg(count(lit(1)).as("n"), sum(col("doc_id")).cast("long").as("id_sum"),
-        countDistinct(col("split_key")).as("n_keys"))
-      .orderBy("split")
+    graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8) { pairs =>
+      collected(graft.operators.Splits.clusterStableSplit(docs, "doc_id", pairs,
+          Seq(("train", 9000), ("val", 500), ("test", 500)))
+        .groupBy(col("split"))
+        .agg(count(lit(1)).as("n"), sum(col("doc_id")).cast("long").as("id_sum"),
+          countDistinct(col("split_key")).as("n_keys"))
+        .orderBy("split"))
+    }
   }
 
 
@@ -318,30 +319,26 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
   private[graft] def qSplitLeakage(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
     val splits = Seq(("train", 9000), ("val", 500), ("test", 500))
-    // persisted: the pair frame (duplicate-mass-sized, small) feeds the CC
-    // rounds AND the final straddle join — unpersisted, the whole LSH
-    // pipeline would re-run per consumer. Release is registered AFTER the
-    // eager CC rounds inside clusterStableSplit have consumed the cache,
-    // and fires on the caller's first action over the returned aggregate
-    // (verdict r12: this was one of two genuinely never-released persists)
-    val pairs = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val stable = graft.operators.Splits.clusterStableSplit(docs, "doc_id", pairs, splits)
-      .select(col("doc_id"), col("split").as("stable"))
-    val naive = graft.operators.Splits.clusterStableSplit(docs, "doc_id", pairs.limit(0), splits)
-      .select(col("doc_id"), col("split").as("naive"))
-    graft.operators.Partitioning.releaseAfterUse(
-      pairs.select(col("id_a"), col("id_b"))
-        .join(naive.as("na"), col("id_a") === col("na.doc_id"))
-        .join(naive.as("nb"), col("id_b") === col("nb.doc_id"))
-        .join(stable.as("sa"), col("id_a") === col("sa.doc_id"))
-        .join(stable.as("sb"), col("id_b") === col("sb.doc_id"))
-        .agg(count(lit(1)).as("n_pairs"),
-          count(when(col("na.naive") =!= col("nb.naive"), 1)).as("n_leaky_naive"),
-          coalesce(sum(when(col("na.naive") =!= col("nb.naive"), col("id_a") + col("id_b"))),
-            lit(0L)).cast("long").as("leaky_id_sum"),
-          count(when(col("sa.stable") =!= col("sb.stable"), 1)).as("n_leaky_stable")),
-      pairs)
+    graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8) { lazyPairs =>
+      // the pair frame (duplicate-mass-sized, small) feeds the CC rounds AND
+      // the final straddle join: built once, released once the result is in
+      graft.operators.Fixpoint.materialized(lazyPairs) { pairs =>
+        val stable = graft.operators.Splits.clusterStableSplit(docs, "doc_id", pairs, splits)
+          .select(col("doc_id"), col("split").as("stable"))
+        val naive = graft.operators.Splits.clusterStableSplit(docs, "doc_id", pairs.limit(0), splits)
+          .select(col("doc_id"), col("split").as("naive"))
+        collected(pairs.select(col("id_a"), col("id_b"))
+          .join(naive.as("na"), col("id_a") === col("na.doc_id"))
+          .join(naive.as("nb"), col("id_b") === col("nb.doc_id"))
+          .join(stable.as("sa"), col("id_a") === col("sa.doc_id"))
+          .join(stable.as("sb"), col("id_b") === col("sb.doc_id"))
+          .agg(count(lit(1)).as("n_pairs"),
+            count(when(col("na.naive") =!= col("nb.naive"), 1)).as("n_leaky_naive"),
+            coalesce(sum(when(col("na.naive") =!= col("nb.naive"), col("id_a") + col("id_b"))),
+              lit(0L)).cast("long").as("leaky_id_sum"),
+            count(when(col("sa.stable") =!= col("sb.stable"), 1)).as("n_leaky_stable")))
+      }
+    }
   }
 
 
@@ -350,8 +347,9 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     * histograms the same sizes. */
   private[graft] def qDedupClusterReport(spark: SparkSession, dir: String): DataFrame = {
     val docs = table(spark, dir, "documents")
-    val pairs = graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8)
-    graft.operators.Dedup.clusterSizeReport(pairs).orderBy("sz")
+    graft.operators.Dedup.minhashPairs(docs, "doc_id", "text", threshold = 0.8) { pairs =>
+      collected(graft.operators.Dedup.clusterSizeReport(pairs).orderBy("sz"))
+    }
   }
 
 
@@ -469,15 +467,16 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
       val batch = docs.where(col("doc_id") % 50 === 0).select(
         (col("doc_id") + 1000000000000L).as("doc_id"),
         concat(col("text"), lit(" appended tail")).as("text"))
-      val flagged = graft.operators.Dedup.incrementalNearDuplicatesIndexed(
-        docs.select(col("doc_id"), col("text")), index, batch, "doc_id", "text", threshold = 0.8)
-      val result = batch.agg(count(lit(1)).as("n_new"))
-        .crossJoin(flagged.agg( // 1x1 combines
-          count(lit(1)).as("n_pairs"),
-          countDistinct(col("new_id")).as("n_flagged"),
-          coalesce(sum(col("new_id") + col("corpus_id")), lit(0L)).cast("long").as("pair_id_sum")))
-      // materialize before deleting the index files under the lazy plan
-      spark.createDataFrame(java.util.Arrays.asList(result.collect(): _*), result.schema)
+      graft.operators.Dedup.incrementalNearDuplicatesIndexed(
+          docs.select(col("doc_id"), col("text")), index, batch, "doc_id", "text",
+          threshold = 0.8) { flagged =>
+        // collected before the index files under the lazy plan are deleted
+        collected(batch.agg(count(lit(1)).as("n_new"))
+          .crossJoin(flagged.agg( // 1x1 combines
+            count(lit(1)).as("n_pairs"),
+            countDistinct(col("new_id")).as("n_flagged"),
+            coalesce(sum(col("new_id") + col("corpus_id")), lit(0L)).cast("long").as("pair_id_sum"))))
+      }
     } finally deleteRecursively(out)
   }
 
@@ -648,15 +647,16 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     val merges = trainedMerges(spark, dir)
     val counts = graft.operators.Bpe.encode(docs, "doc_id", "text", merges)
       .groupBy("doc_id").agg(count(lit(1)).as("toks"))
-    val spans = graft.operators.Packing.chunkSpans(counts, "doc_id", "toks", capacity)
-      .withColumn("bin", floor(col("token_start") / capacity).cast("long"))
-    spans.groupBy(col("bin"))
-      .agg(count(lit(1)).as("bin_docs"), sum(col("toks")).as("fill"))
-      .agg(
-        sum(col("bin_docs")).cast("long").as("n_docs"),
-        sum(col("fill")).cast("long").as("total_tokens"),
-        (max(col("bin")) + 1).cast("long").as("n_bins"),
-        max(col("fill")).cast("long").as("max_bin_fill"))
+    graft.operators.Packing.chunkSpans(counts, "doc_id", "toks", capacity) { chunked =>
+      collected(chunked.withColumn("bin", floor(col("token_start") / capacity).cast("long"))
+        .groupBy(col("bin"))
+        .agg(count(lit(1)).as("bin_docs"), sum(col("toks")).as("fill"))
+        .agg(
+          sum(col("bin_docs")).cast("long").as("n_docs"),
+          sum(col("fill")).cast("long").as("total_tokens"),
+          (max(col("bin")) + 1).cast("long").as("n_bins"),
+          max(col("fill")).cast("long").as("max_bin_fill")))
+    }
   }
 
 
@@ -888,10 +888,9 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
           count(col("quality")).as("n_evolved"),
           coalesce(sum(col("quality")), lit(0L)).cast("long").as("quality_sum"),
           countDistinct(col("lang")).as("n_langs"))
-      // materialize (4 scalar columns, 1 row) so the backing files can be
-      // deleted before returning; the lifecycle under test - write, append,
-      // mergeSchema read - has fully run by this point
-      spark.createDataFrame(java.util.Arrays.asList(result.collect(): _*), result.schema)
+      // 1 row, run before the backing files are deleted; the lifecycle under
+      // test - write, append, mergeSchema read - has fully run by this point
+      collected(result)
     } finally deleteRecursively(out)
   }
 
@@ -997,23 +996,24 @@ private[graft] trait EntryTokenizerStream { this: EntryCore =>
     val base = table(spark, dir, "documents").select(
       col("doc_id").cast("long").as("doc_id"),
       graft.operators.TextAnalysis.tokenCount(col("text")).cast("long").as("toks"))
-    val spans = graft.operators.Packing.chunkSpans(base, "doc_id", "toks", capacity)
-      .withColumn("bin", floor(col("token_start") / capacity).cast("long"))
-    // ONE aggregation tree (per-bin partial, then global) so the spans
-    // subtree — and its range shuffle — is consumed exactly once
-    spans.groupBy(col("bin"))
-      .agg(
-        count(lit(1)).as("bin_docs"),
-        sum(col("toks")).as("fill"),
-        sum(when(col("n_chunks") > 1, 1L).otherwise(0L)).as("bin_straddlers"),
-        max(col("chunk_last")).as("bin_chunk_last"))
-      .agg(
-        sum(col("bin_docs")).cast("long").as("n_docs"),
-        sum(col("fill")).cast("long").as("total_tokens"),
-        (max(col("bin_chunk_last")) + 1).cast("long").as("n_seqs"),
-        sum(col("bin_straddlers")).cast("long").as("n_straddlers"),
-        (max(col("bin")) + 1).cast("long").as("n_bins"),
-        max(col("fill")).cast("long").as("max_bin_fill"))
+    graft.operators.Packing.chunkSpans(base, "doc_id", "toks", capacity) { chunked =>
+      // ONE aggregation tree (per-bin partial, then global) so the spans
+      // subtree is consumed exactly once
+      collected(chunked.withColumn("bin", floor(col("token_start") / capacity).cast("long"))
+        .groupBy(col("bin"))
+        .agg(
+          count(lit(1)).as("bin_docs"),
+          sum(col("toks")).as("fill"),
+          sum(when(col("n_chunks") > 1, 1L).otherwise(0L)).as("bin_straddlers"),
+          max(col("chunk_last")).as("bin_chunk_last"))
+        .agg(
+          sum(col("bin_docs")).cast("long").as("n_docs"),
+          sum(col("fill")).cast("long").as("total_tokens"),
+          (max(col("bin_chunk_last")) + 1).cast("long").as("n_seqs"),
+          sum(col("bin_straddlers")).cast("long").as("n_straddlers"),
+          (max(col("bin")) + 1).cast("long").as("n_bins"),
+          max(col("fill")).cast("long").as("max_bin_fill")))
+    }
   }
 
 

@@ -64,30 +64,29 @@ object Decontamination {
     * ([[graft.plans.BloomMightContain]]) hashing the UTF-8 bytes in place —
     * no UDF boxing on the corpus-sized path; the confirm join then touches
     * ~fpp of the corpus grams. */
-  def contaminatedIdsBloom(docs: DataFrame, idCol: String, textCol: String,
-                           benchmark: DataFrame, benchTextCol: String, n: Int = 8,
-                           fpp: Double = 0.01): DataFrame = {
+  def contaminatedIdsBloom[T](docs: DataFrame, idCol: String, textCol: String,
+                              benchmark: DataFrame, benchTextCol: String, n: Int = 8,
+                              fpp: Double = 0.01)(use: DataFrame => T): T = {
     require(n >= 2, "n-gram decontamination needs n >= 2")
-    // persisted: three consumers (count, Bloom build, confirm join) must
-    // not each re-run the tokenize/explode/distinct over the benchmark
-    val benchGrams = explodedGrams(benchmark, benchTextCol, n, None).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    val expected = benchGrams.count() // small side; one tiny job
-    if (expected == 0L) { // bloom_filter_agg yields null on empty input (NPE in readFrom)
-      benchGrams.unpersist(blocking = false)
-      return docs.sparkSession.emptyDataFrame
-        .select(lit(0L).as("doc_id")).where(lit(false))
+    // three consumers (count, Bloom build, confirm join) read the benchmark
+    // grams: built once, released when `use`, which runs every action over
+    // the lazy id frame, returns
+    Fixpoint.materialized(explodedGrams(benchmark, benchTextCol, n, None).distinct()) { benchGrams =>
+      val expected = benchGrams.count() // small side; one tiny job
+      if (expected == 0L) // bloom_filter_agg yields null on empty input (NPE in readFrom)
+        use(docs.sparkSession.emptyDataFrame.select(lit(0L).as("doc_id")).where(lit(false)))
+      else {
+        val bloom = benchGrams.stat.bloomFilter("gram", expected, fpp)
+        val candidates = explodedGrams(docs, textCol, n, Some(idCol))
+          .where(graft.plans.BloomExpression.mightContain(col("gram"), bloom))
+        // NO broadcast hint on the confirm: the whole point of this path is
+        // a benchmark too big to ship as raw strings. Post-prefilter the
+        // candidate side is ~fpp of the corpus grams, so Spark's stats
+        // (AQE) pick the broadcast side — usually the candidates — on their
+        // own.
+        use(candidates.join(benchGrams, "gram").select(col("doc_id")).distinct())
+      }
     }
-    val bloom = benchGrams.stat.bloomFilter("gram", expected, fpp)
-    val candidates = explodedGrams(docs, textCol, n, Some(idCol))
-      .where(graft.plans.BloomExpression.mightContain(col("gram"), bloom))
-    // NO broadcast hint on the confirm: the whole point of this path is a
-    // benchmark too big to ship as raw strings. Post-prefilter the
-    // candidate side is ~fpp of the corpus grams, so Spark's stats (AQE)
-    // pick the broadcast side — usually the candidates — on their own.
-    Partitioning.releaseAfterUse(
-      candidates.join(benchGrams, "gram").select(col("doc_id")).distinct(),
-      benchGrams)
   }
 
   /** Graded contamination: per document, the share of its DISTINCT word

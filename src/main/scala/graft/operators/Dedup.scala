@@ -227,25 +227,24 @@ object Dedup {
     effBands
   }
 
-  /** (doc_id, sh, shx): shingle sets + their hashes, PERSISTED — the chain
-    * feeds the signature stage and the verification join (serialized,
-    * spills to disk at scale; ~5x text bytes). Caller releases.
-    *
-    * Storage level, measured (r8): at sf0.1 MEMORY_AND_DISK_SER and
-    * MEMORY_AND_DISK are indistinguishable (dedup_minhash ~1.4 s min-of-4
-    * over 3 JVMs either way) — the r7 bench regression attributed to this
-    * persist was actually boxing in the UDF pair expansion (now the
-    * codegen'd [[Pairs]] comprehension) plus 2-pass min noise. SER is kept
-    * for the 100 TB shape: shingle arrays are the largest intermediate in
-    * the operator and the serialized form is several times smaller in the
-    * block store, which is what decides whether the cache spills. */
-  private def shingledHashed(df: DataFrame, idCol: String, textCol: String,
-                             shingleSize: Int): DataFrame =
+  /** (doc_id, sh, shx): shingle sets + their hashes (~5x text bytes).
+    * [[minhashPairs]] and the incremental operators read it twice (the
+    * signature stage and the verification join), so they build it with
+    * [[Fixpoint.materialized]] at [[ShingleLevel]] before the plan that
+    * reads it: a lazy cache there was first built concurrently by two AQE
+    * stages, and `dedup_minhash`'s jobs and shuffle bytes differed between
+    * runs. */
+  private def shingled(df: DataFrame, idCol: String, textCol: String,
+                       shingleSize: Int): DataFrame =
     Partitioning.spread(df.select(
       col(s"`$idCol`").cast("long").as("doc_id"), col(s"`$textCol`").as("__text")))
       .select(col("doc_id"), shingleArr("__text", shingleSize).as("sh"))
       .withColumn("shx", transform(col("sh"), s => xxhash64(s)))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+
+  /** Serialized, unlike graft's other caches: shingle arrays are the
+    * largest intermediate, several times smaller serialized, which decides
+    * whether the cache spills at 100 TB (at sf0.1 both levels time the same). */
+  private val ShingleLevel = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER
 
   /** (doc_id, band, bucket) LSH band keys of the shingle-hash frame. Empty
     * shingle sets (short/empty docs) all share the degenerate all-MaxValue
@@ -260,29 +259,28 @@ object Dedup {
       .select(col("doc_id"), col("pos").as("band"), col("col").as("bucket"))
   }
 
-  def minhashPairs(df: DataFrame, idCol: String, textCol: String,
-                   threshold: Double = 0.8, shingleSize: Int = 5,
-                   numHashes: Int = 256, bands: Int = 0, maxBucket: Int = 64): DataFrame = {
+  /** The verified near-duplicate pairs (id_a, id_b, jaccard), passed to
+    * `use`. They are lazy over the shingle cache, which is built before
+    * `use` runs and released when it returns, so `use` runs every action
+    * over them; a frame over the pairs that escapes it fails when run
+    * ([[Fixpoint.materialized]]). */
+  def minhashPairs[T](df: DataFrame, idCol: String, textCol: String,
+                      threshold: Double = 0.8, shingleSize: Int = 5,
+                      numHashes: Int = 256, bands: Int = 0, maxBucket: Int = 64)
+                     (use: DataFrame => T): T = {
     val effBands = effectiveBands(numHashes, bands, threshold)
-    val spark = df.sparkSession
-    import spark.implicits._
-
-    val withShingles = shingledHashed(df, idCol, textCol, shingleSize)
-    val banded = bandKeys(withShingles, numHashes, effBands)
-
-    val buckets = banded.groupBy("band", "bucket")
-      .agg(collect_list("doc_id").as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
-
-    val candidatePairs = buckets
-      .select(array_sort(array_distinct(col("ids"))).as("s"))
-      .select(explode(Pairs.fromSortedLongs(col("s"))).as("pair"))
-      .select(col("pair._1").as("id_a"), col("pair._2").as("id_b"))
-      .distinct()
-
-    Partitioning.releaseAfterUse(
-      verifyJaccard(candidatePairs, withShingles.select(col("doc_id"), col("sh")), threshold),
-      withShingles)
+    Fixpoint.materialized(shingled(df, idCol, textCol, shingleSize), ShingleLevel) { withShingles =>
+      val buckets = bandKeys(withShingles, numHashes, effBands)
+        .groupBy("band", "bucket")
+        .agg(collect_list("doc_id").as("ids"))
+        .where(size(col("ids")) > 1 && size(col("ids")) <= maxBucket)
+      val candidatePairs = buckets
+        .select(array_sort(array_distinct(col("ids"))).as("s"))
+        .select(explode(Pairs.fromSortedLongs(col("s"))).as("pair"))
+        .select(col("pair._1").as("id_a"), col("pair._2").as("id_b"))
+        .distinct()
+      use(verifyJaccard(candidatePairs, withShingles.select(col("doc_id"), col("sh")), threshold))
+    }
   }
 
   /** Incremental near-dedup — the production shape for a 100 TB corpus
@@ -300,31 +298,34 @@ object Dedup {
     * Jaccard verification then touches only candidate pairs. Recall
     * follows the same S-curve as the batch operator (32 bands × 8 rows:
     * a true pair at j=0.89 is missed with ~2e-7 probability). */
-  def incrementalNearDuplicates(corpus: DataFrame, newDocs: DataFrame,
-                                idCol: String, textCol: String,
-                                threshold: Double = 0.8, shingleSize: Int = 5,
-                                numHashes: Int = 256, bands: Int = 0,
-                                maxBucket: Int = 64): DataFrame = {
+  def incrementalNearDuplicates[T](corpus: DataFrame, newDocs: DataFrame,
+                                   idCol: String, textCol: String,
+                                   threshold: Double = 0.8, shingleSize: Int = 5,
+                                   numHashes: Int = 256, bands: Int = 0,
+                                   maxBucket: Int = 64)(use: DataFrame => T): T = {
     val effBands = effectiveBands(numHashes, bands, threshold)
-    val corpusSh = shingledHashed(corpus, idCol, textCol, shingleSize)
-    val newSh = shingledHashed(newDocs, idCol, textCol, shingleSize)
-    // one corpus shuffle; degenerate buckets capped exactly like the batch op
-    val corpusBuckets = bandKeys(corpusSh, numHashes, effBands).groupBy("band", "bucket")
-      .agg(collect_list("doc_id").as("cids"))
-      .where(size(col("cids")) <= maxBucket)
-    val candidates = corpusBuckets
-      .join(broadcast(bandKeys(newSh, numHashes, effBands).withColumnRenamed("doc_id", "new_id")),
-        Seq("band", "bucket"))
-      .select(col("new_id").as("id_a"), explode(col("cids")).as("id_b"))
-      .where(col("id_a") =!= col("id_b"))
-      .distinct()
-    // two-sided verify: new ids resolve only against batch shingles, corpus
-    // ids only against corpus shingles — correct even when id spaces overlap
-    Partitioning.releaseAfterUse(
-      verifyJaccardSides(candidates, newSh.select(col("doc_id"), col("sh")),
-        corpusSh.select(col("doc_id"), col("sh")), threshold, broadcastProbes = true)
-        .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"), col("jaccard")),
-      corpusSh, newSh)
+    // (new_id, corpus_id, jaccard) is lazy over both shingle caches: `use`
+    // runs every action over it before they are released
+    Fixpoint.materialized(shingled(corpus, idCol, textCol, shingleSize), ShingleLevel) { corpusSh =>
+      Fixpoint.materialized(shingled(newDocs, idCol, textCol, shingleSize), ShingleLevel) { newSh =>
+        // one corpus shuffle; degenerate buckets capped exactly like the batch op
+        val corpusBuckets = bandKeys(corpusSh, numHashes, effBands).groupBy("band", "bucket")
+          .agg(collect_list("doc_id").as("cids"))
+          .where(size(col("cids")) <= maxBucket)
+        val candidates = corpusBuckets
+          .join(broadcast(bandKeys(newSh, numHashes, effBands).withColumnRenamed("doc_id", "new_id")),
+            Seq("band", "bucket"))
+          .select(col("new_id").as("id_a"), explode(col("cids")).as("id_b"))
+          .where(col("id_a") =!= col("id_b"))
+          .distinct()
+        // two-sided verify: new ids resolve only against batch shingles,
+        // corpus ids only against corpus shingles — correct even when id
+        // spaces overlap
+        use(verifyJaccardSides(candidates, newSh.select(col("doc_id"), col("sh")),
+          corpusSh.select(col("doc_id"), col("sh")), threshold, broadcastProbes = true)
+          .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"), col("jaccard")))
+      }
+    }
   }
 
   /** Exact incremental dedup — the cheap first pass of the daily-batch
@@ -358,12 +359,8 @@ object Dedup {
   def bandIndex(df: DataFrame, idCol: String, textCol: String,
                 threshold: Double = 0.8, shingleSize: Int = 5,
                 numHashes: Int = 256, bands: Int = 0): DataFrame = {
-    val effBands = effectiveBands(numHashes, bands, threshold)
-    val sh = Partitioning.spread(df.select(
-      col(s"`$idCol`").cast("long").as("doc_id"), col(s"`$textCol`").as("__text")))
-      .select(col("doc_id"), shingleArr("__text", shingleSize).as("sh"))
-      .withColumn("shx", transform(col("sh"), s => xxhash64(s)))
-    bandKeys(sh, numHashes, effBands)
+    bandKeys(shingled(df, idCol, textCol, shingleSize), numHashes,
+      effectiveBands(numHashes, bands, threshold))
   }
 
   /** Incremental near-dedup against a PRECOMPUTED [[bandIndex]] — the
@@ -376,35 +373,36 @@ object Dedup {
     * The corpus TEXT is touched only for candidates; nothing corpus-sized
     * is shingled, signed or shuffled. Same parameters => same S-curve as
     * [[minhashPairs]]/[[incrementalNearDuplicates]] by construction. */
-  def incrementalNearDuplicatesIndexed(corpus: DataFrame, corpusIndex: DataFrame,
-                                       newDocs: DataFrame,
-                                       idCol: String, textCol: String,
-                                       threshold: Double = 0.8, shingleSize: Int = 5,
-                                       numHashes: Int = 256, bands: Int = 0,
-                                       maxBucket: Int = 64): DataFrame = {
+  def incrementalNearDuplicatesIndexed[T](corpus: DataFrame, corpusIndex: DataFrame,
+                                          newDocs: DataFrame,
+                                          idCol: String, textCol: String,
+                                          threshold: Double = 0.8, shingleSize: Int = 5,
+                                          numHashes: Int = 256, bands: Int = 0,
+                                          maxBucket: Int = 64)(use: DataFrame => T): T = {
     val effBands = effectiveBands(numHashes, bands, threshold)
-    val newSh = shingledHashed(newDocs, idCol, textCol, shingleSize)
-    val corpusBuckets = corpusIndex.groupBy("band", "bucket")
-      .agg(collect_list("doc_id").as("cids"))
-      .where(size(col("cids")) <= maxBucket)
-    val candidates = corpusBuckets
-      .join(broadcast(bandKeys(newSh, numHashes, effBands).withColumnRenamed("doc_id", "new_id")),
-        Seq("band", "bucket"))
-      .select(col("new_id").as("id_a"), explode(col("cids")).as("id_b"))
-      .where(col("id_a") =!= col("id_b"))
-      .distinct()
-    // re-shingle only the candidate corpus docs: semi-join by id, then the
-    // same shingle builtin as the index build (no persist - the frame is
-    // candidate-sized and used once)
-    val candCorpusSh = corpus
-      .select(col(s"`$idCol`").cast("long").as("doc_id"), col(s"`$textCol`").as("__text"))
-      .join(candidates.select(col("id_b").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
-      .select(col("doc_id"), shingleArr("__text", shingleSize).as("sh"))
-    Partitioning.releaseAfterUse(
-      verifyJaccardSides(candidates, newSh.select(col("doc_id"), col("sh")),
+    // the batch's shingles feed its band keys and the verify join: built
+    // once, released when `use` returns
+    Fixpoint.materialized(shingled(newDocs, idCol, textCol, shingleSize), ShingleLevel) { newSh =>
+      val corpusBuckets = corpusIndex.groupBy("band", "bucket")
+        .agg(collect_list("doc_id").as("cids"))
+        .where(size(col("cids")) <= maxBucket)
+      val candidates = corpusBuckets
+        .join(broadcast(bandKeys(newSh, numHashes, effBands).withColumnRenamed("doc_id", "new_id")),
+          Seq("band", "bucket"))
+        .select(col("new_id").as("id_a"), explode(col("cids")).as("id_b"))
+        .where(col("id_a") =!= col("id_b"))
+        .distinct()
+      // re-shingle only the candidate corpus docs: semi-join by id, then the
+      // same shingle builtin as the index build (no cache - the frame is
+      // candidate-sized and used once)
+      val candCorpusSh = corpus
+        .select(col(s"`$idCol`").cast("long").as("doc_id"), col(s"`$textCol`").as("__text"))
+        .join(candidates.select(col("id_b").as("doc_id")).distinct(), Seq("doc_id"), "left_semi")
+        .select(col("doc_id"), shingleArr("__text", shingleSize).as("sh"))
+      use(verifyJaccardSides(candidates, newSh.select(col("doc_id"), col("sh")),
         candCorpusSh, threshold, broadcastProbes = true)
-        .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"), col("jaccard")),
-      newSh)
+        .select(col("id_a").as("new_id"), col("id_b").as("corpus_id"), col("jaccard")))
+    }
   }
 
   /** Streaming near-dup probe — [[incrementalNearDuplicatesIndexed]] as a
@@ -555,34 +553,39 @@ object Dedup {
     * ratio stays internally consistent — it IS exact containment over the
     * rare-gram subsets, and equals full-set containment whenever no gram
     * exceeds `maxDf`. */
-  def ngramContainmentPairs(df: DataFrame, idCol: String, textCol: String,
-                            threshold: Double = 0.8, n: Int = 3, maxDf: Int = 1000): DataFrame =
-    ngramPairCounts(df, idCol, textCol, n, maxDf)
-      .withColumn("containment",
-        greatest(col("common").cast("double") / col("na_cut"),
-          col("common").cast("double") / col("nb_cut")))
-      .where(col("containment") >= threshold)
-      .select(col("id_a"), col("id_b"), col("containment"))
+  def ngramContainmentPairs[T](df: DataFrame, idCol: String, textCol: String,
+                               threshold: Double = 0.8, n: Int = 3, maxDf: Int = 1000)
+                              (use: DataFrame => T): T =
+    ngramPairCounts(df, idCol, textCol, n, maxDf) { pc =>
+      use(pc.withColumn("containment",
+          greatest(col("common").cast("double") / col("na_cut"),
+            col("common").cast("double") / col("nb_cut")))
+        .where(col("containment") >= threshold)
+        .select(col("id_a"), col("id_b"), col("containment")))
+    }
 
   /** Word n-gram Jaccard near-dup via inverted-index join (no minhash
     * approximation in candidate generation; exactness bounded only by the
     * hot-shingle cutoff; what the cutoff discards is measurable exactly
     * via [[ngramHotGrams]]). */
-  def ngramJaccardPairs(df: DataFrame, idCol: String, textCol: String,
-                        threshold: Double = 0.5, n: Int = 3, maxDf: Int = 1000): DataFrame =
+  def ngramJaccardPairs[T](df: DataFrame, idCol: String, textCol: String,
+                           threshold: Double = 0.5, n: Int = 3, maxDf: Int = 1000)
+                          (use: DataFrame => T): T =
     // full-set denominators only — skip the cut-count pass entirely (an
     // unused inner join is NOT pruned by Catalyst; it must not be planned)
-    ngramPairCounts(df, idCol, textCol, n, maxDf, withCutCounts = false)
-      .withColumn("jaccard", col("common").cast("double") / (col("na") + col("nb") - col("common")))
-      .where(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    ngramPairCounts(df, idCol, textCol, n, maxDf, withCutCounts = false) { pc =>
+      use(pc.withColumn("jaccard",
+          col("common").cast("double") / (col("na") + col("nb") - col("common")))
+        .where(col("jaccard") >= threshold)
+        .select(col("id_a"), col("id_b"), col("jaccard")))
+    }
 
   /** Shared inverted-index pair pipeline:
     * (id_a, id_b, common, na, nb[, na_cut, nb_cut when `withCutCounts`])
     * for every pair sharing at least one rare gram — public so a caller
     * needing SEVERAL similarity measures (jaccard AND containment, or a
     * custom overlap rule) derives them all from ONE pass instead of
-    * re-running the tokenize/persist/self-join per measure. `na`/`nb` are
+    * re-running the tokenize/self-join per measure. `na`/`nb` are
     * the FULL distinct-gram-set sizes; `na_cut`/`nb_cut` count only grams
     * surviving the df <= maxDf cutoff — the consistent denominator when
     * the numerator (`common`) is itself cutoff-bounded (see
@@ -600,59 +603,61 @@ object Dedup {
     * discriminative signal — standard practice) -> self-join the inverted
     * index on the n-gram (shuffle on short string keys) -> count common
     * n-grams per pair -> attach per-doc distinct gram counts. */
-  def ngramPairCounts(df: DataFrame, idCol: String, textCol: String,
-                      n: Int = 3, maxDf: Int = 1000,
-                      withCutCounts: Boolean = true): DataFrame = {
-    // Tokenize ONCE per row, spread partitions for the CPU-bound gramming,
-    // and persist the gram arrays. Writing split() inline in the gram lambda
-    // re-evaluates the regex split per gram index (O(tokens^2) splits per
-    // document), and a single input file would run it all on one task.
-    val toks = Partitioning.spread(df.select(
+  def ngramPairCounts[T](df: DataFrame, idCol: String, textCol: String,
+                         n: Int = 3, maxDf: Int = 1000,
+                         withCutCounts: Boolean = true)(use: DataFrame => T): T = {
+    // Tokenize ONCE per row and spread partitions for the CPU-bound
+    // gramming. Writing split() inline in the gram lambda re-evaluates the
+    // regex split per gram index (O(tokens^2) splits per document), and a
+    // single input file would run it all on one task. The gram arrays feed
+    // the counts, the df aggregate, both self-join sides and the cut counts,
+    // so they are built once before that plan and released when `use`
+    // returns; the pair frame is lazy over them.
+    Fixpoint.materialized(Partitioning.spread(df.select(
       col(s"`$idCol`").cast("long").as("doc_id"), col(s"`$textCol`").as("__text")))
       .select(col("doc_id"), split(lower(trim(col("__text"))), "\\s+").as("t"))
       // gram identity MUST stay byte-identical across the gram operators
       // (novelty/decontamination cross-checks) — one shared builder
       .select(col("doc_id"),
-        array_distinct(TextAnalysis.wordGrams(col("t"), n)).as("grams"))
-    val cached = toks.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val counts = cached.select(col("doc_id"), size(col("grams")).as("n_grams"))
-    val inv = cached.select(col("doc_id"), explode(col("grams")).as("gram"))
-    // Recall lost to the maxDf cutoff is surfaced by [[ngramHotGrams]] — an
-    // exact aggregate over the same inverted index — NOT by a side-effecting
-    // accumulator here: an accumulator ticked inside a transformation UDF
-    // over-counts on task retry (Spark guarantees exactly-once accumulator
-    // updates only inside actions) and the UDF blocked codegen of the
-    // document-frequency aggregate.
-    val dfs = inv.groupBy("gram").agg(count(lit(1)).as("df"))
-    // the cutoff set: every gram a containment denominator may count.
-    // df=1 grams stay IN this set (a gram unique to one doc is part of
-    // that doc's identity, it just cannot produce a pair) — only the
-    // pair-generating self-join below additionally drops them.
-    val kept = dfs.where(col("df") <= maxDf)
-    // both self-join sides re-derive this from the cached gram arrays - an
-    // explode over the cache is cheaper than persisting a second copy
-    val filtered = inv.join(kept.where(col("df") > 1).select("gram"), "gram")
-    val pairsCommon = filtered.as("x").join(filtered.as("y"), "gram")
-      .where(col("x.doc_id") < col("y.doc_id"))
-      .groupBy(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
-      .agg(count(lit(1)).as("common"))
-    val withFull = pairsCommon
-      .join(counts.select(col("doc_id").as("id_a"), col("n_grams").as("na")), "id_a")
-      .join(counts.select(col("doc_id").as("id_b"), col("n_grams").as("nb")), "id_b")
-    val out =
-      if (!withCutCounts) withFull
-      else {
-        // per-doc size of the post-cutoff gram set — one extra
-        // vocabulary-keyed join + doc-keyed aggregate over the already-
-        // built inverted index. Every doc in a pair shares >= 1 rare gram,
-        // so it is guaranteed present here (inner join loses nothing).
-        val cutCounts = inv.join(kept.select("gram"), "gram")
-          .groupBy("doc_id").agg(count(lit(1)).as("n_cut"))
-        withFull
-          .join(cutCounts.select(col("doc_id").as("id_a"), col("n_cut").as("na_cut")), "id_a")
-          .join(cutCounts.select(col("doc_id").as("id_b"), col("n_cut").as("nb_cut")), "id_b")
-      }
-    Partitioning.releaseAfterUse(out, cached)
+        array_distinct(TextAnalysis.wordGrams(col("t"), n)).as("grams"))) { toks =>
+      val counts = toks.select(col("doc_id"), size(col("grams")).as("n_grams"))
+      val inv = toks.select(col("doc_id"), explode(col("grams")).as("gram"))
+      // Recall lost to the maxDf cutoff is surfaced by [[ngramHotGrams]] — an
+      // exact aggregate over the same inverted index — NOT by a side-effecting
+      // accumulator here: an accumulator ticked inside a transformation UDF
+      // over-counts on task retry (Spark guarantees exactly-once accumulator
+      // updates only inside actions) and the UDF blocked codegen of the
+      // document-frequency aggregate.
+      val dfs = inv.groupBy("gram").agg(count(lit(1)).as("df"))
+      // the cutoff set: every gram a containment denominator may count.
+      // df=1 grams stay IN this set (a gram unique to one doc is part of
+      // that doc's identity, it just cannot produce a pair) — only the
+      // pair-generating self-join below additionally drops them.
+      val kept = dfs.where(col("df") <= maxDf)
+      // both self-join sides re-derive this from the gram arrays - an explode
+      // over them is cheaper than building a second copy
+      val filtered = inv.join(kept.where(col("df") > 1).select("gram"), "gram")
+      val pairsCommon = filtered.as("x").join(filtered.as("y"), "gram")
+        .where(col("x.doc_id") < col("y.doc_id"))
+        .groupBy(col("x.doc_id").as("id_a"), col("y.doc_id").as("id_b"))
+        .agg(count(lit(1)).as("common"))
+      val withFull = pairsCommon
+        .join(counts.select(col("doc_id").as("id_a"), col("n_grams").as("na")), "id_a")
+        .join(counts.select(col("doc_id").as("id_b"), col("n_grams").as("nb")), "id_b")
+      use(
+        if (!withCutCounts) withFull
+        else {
+          // per-doc size of the post-cutoff gram set — one extra
+          // vocabulary-keyed join + doc-keyed aggregate over the already-
+          // built inverted index. Every doc in a pair shares >= 1 rare gram,
+          // so it is guaranteed present here (inner join loses nothing).
+          val cutCounts = inv.join(kept.select("gram"), "gram")
+            .groupBy("doc_id").agg(count(lit(1)).as("n_cut"))
+          withFull
+            .join(cutCounts.select(col("doc_id").as("id_a"), col("n_cut").as("na_cut")), "id_a")
+            .join(cutCounts.select(col("doc_id").as("id_b"), col("n_cut").as("nb_cut")), "id_b")
+        })
+    }
   }
 
   /** The hot grams [[ngramJaccardPairs]]'s `maxDf` cutoff discards, with
@@ -667,9 +672,9 @@ object Dedup {
                     n: Int = 3, maxDf: Int = 1000): DataFrame = {
     // evalBarrier between the gram projection and the explode: fused, the
     // generator re-evaluates the tokenize/gram lambda per output element
-    // (~15x at sf0.1). The sibling pair operator persists this projection
-    // (it has multiple consumers); this one-shot aggregate only needs the
-    // streaming barrier.
+    // (~15x at sf0.1). The sibling pair operator builds this projection
+    // once (it has multiple consumers); this one-shot aggregate only needs
+    // the streaming barrier.
     val inv = Partitioning.evalBarrier(
       Partitioning.spread(df.select(
         col(s"`$idCol`").cast("long").as("doc_id"), col(s"`$textCol`").as("__text")))

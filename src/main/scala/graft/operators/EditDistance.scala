@@ -44,8 +44,8 @@ object EditDistance {
 
   private val log = org.slf4j.LoggerFactory.getLogger(getClass)
 
-  def editDistancePairs(df: DataFrame, idCol: String, textCol: String,
-      maxDistance: Int, q: Int = 3, maxShortBucket: Long = 100000L): DataFrame = {
+  def editDistancePairs[T](df: DataFrame, idCol: String, textCol: String,
+      maxDistance: Int, q: Int = 3, maxShortBucket: Long = 100000L)(use: DataFrame => T): T = {
     require(maxDistance >= 1, "maxDistance must be >= 1")
     require(q >= 2, "q must be >= 2")
     require(maxShortBucket >= 1, "maxShortBucket must be >= 1")
@@ -81,65 +81,68 @@ object EditDistance {
     // candidate pair, and every candidate is levenshtein-verified, so the
     // result stays exact. (For large q over wide alphabets swap the
     // broadcast for a shuffle join.)
-    // persisted: the df-count aggregate and the prefix join both consume
-    // this frame; without the persist the CPU-heavy gram pipeline above
-    // (tokenize + per-window substr + hash) evaluates twice per call
-    val hashedInv = inv.select(col("doc_id"), col("len"), xxhash64(col("gram")).as("gh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val dfCounts = hashedInv.groupBy(col("gh")).agg(count(lit(1)).as("gdf"))
-    // rarest-prefix selection through the bounded-heap aggregate: the
-    // previous collect_list + array_sort + slice shuffled EVERY gram row
-    // into the doc group (measured: the 8.8 GB exchange dominating
-    // edit_pairs at 100x) just to keep q*d+1 of them; the heap keeps
-    // (q*d+1) candidates per doc per map partition, so the exchange
-    // carries ~prefixLen rows per doc. Selection and order are identical:
-    // top-k by (-gdf DESC, gh ASC) == ascending (gdf, gh) prefix, with
-    // duplicate-hash rows surviving in both formulations.
-    val prefixInv = hashedInv.join(broadcast(dfCounts), "gh")
-      .groupBy(col("doc_id"))
-      .agg(first(col("len")).as("len"),
-        graft.plans.TopKAggregate.topKByScore(
-          -col("gdf").cast("double"), col("gh"), prefixLen).as("pref"))
-      .select(col("doc_id"), col("len"), explode(col("pref.id")).as("gh"))
+    // the df-count aggregate and the prefix join both read this frame in
+    // one plan; uncached, the CPU-heavy gram pipeline above (tokenize +
+    // per-window substr + hash) evaluates twice per call. Built once, and
+    // released when `use`, which runs every action over the lazy pairs,
+    // returns
+    Fixpoint.materialized(
+        inv.select(col("doc_id"), col("len"), xxhash64(col("gram")).as("gh"))) { hashedInv =>
+      val dfCounts = hashedInv.groupBy(col("gh")).agg(count(lit(1)).as("gdf"))
+      // rarest-prefix selection through the bounded-heap aggregate: the
+      // previous collect_list + array_sort + slice shuffled EVERY gram row
+      // into the doc group (measured: the 8.8 GB exchange dominating
+      // edit_pairs at 100x) just to keep q*d+1 of them; the heap keeps
+      // (q*d+1) candidates per doc per map partition, so the exchange
+      // carries ~prefixLen rows per doc. Selection and order are identical:
+      // top-k by (-gdf DESC, gh ASC) == ascending (gdf, gh) prefix, with
+      // duplicate-hash rows surviving in both formulations.
+      val prefixInv = hashedInv.join(broadcast(dfCounts), "gh")
+        .groupBy(col("doc_id"))
+        .agg(first(col("len")).as("len"),
+          graft.plans.TopKAggregate.topKByScore(
+            -col("gdf").cast("double"), col("gh"), prefixLen).as("pref"))
+        .select(col("doc_id"), col("len"), explode(col("pref.id")).as("gh"))
 
-    val cand = prefixInv.as("a").join(prefixInv.as("b"),
-        col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id") &&
-          abs(col("a.len") - col("b.len")) <= d)
-      .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
-      .distinct()
+      val cand = prefixInv.as("a").join(prefixInv.as("b"),
+          col("a.gh") === col("b.gh") && col("a.doc_id") < col("b.doc_id") &&
+            abs(col("a.len") - col("b.len")) <= d)
+        .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"))
+        .distinct()
 
-    val verified = cand
-      .join(longs.select(col("doc_id").as("id_a"), col("text").as("ta")), "id_a")
-      .join(longs.select(col("doc_id").as("id_b"), col("text").as("tb")), "id_b")
-      .select(col("id_a"), col("id_b"),
-        levenshtein(col("ta"), col("tb"), d).as("dist"))
-      .where(col("dist") >= 0) // threshold form returns -1 past the bound
+      val verified = cand
+        .join(longs.select(col("doc_id").as("id_a"), col("text").as("ta")), "id_a")
+        .join(longs.select(col("doc_id").as("id_b"), col("text").as("tb")), "id_b")
+        .select(col("id_a"), col("id_b"),
+          levenshtein(col("ta"), col("tb"), d).as("dist"))
+        .where(col("dist") >= 0) // threshold form returns -1 past the bound
 
-    // short strings: too few grams for the bound — pair by exact length
-    // bucket (a true pair's lengths differ by <= d, so each bucket joins
-    // its 2d+1 neighbors), then verify identically. The short set is NOT
-    // inherently bounded (a names/queries corpus can be ALL short), so a
-    // skew cap bounds the per-bucket quadratic exactly like the LSH
-    // operators' maxBucket: a length bucket over `maxShortBucket` rows is
-    // dropped from the probe side with a warning — a documented recall
-    // cap, never a silent quadratic task
-    val lenCounts = shorts.groupBy(length(col("text")).as("lb")).agg(count(lit(1)).as("n"))
-    val hot = lenCounts.where(col("n") > maxShortBucket).collect()
-    if (hot.nonEmpty) log.warn(
-      s"graft.edit short-length buckets over cap $maxShortBucket dropped: " +
-        hot.map(r => s"len=${r.getInt(0)} n=${r.getLong(1)}").mkString(", "))
-    val okLens = lenCounts.where(col("n") <= maxShortBucket).select(col("lb"))
-    val shortPairs = shorts.select(col("doc_id").as("id_a"), col("text").as("ta"),
-        col("core").as("core_a"),
-        explode(sequence(length(col("text")) - d, length(col("text")) + d)).as("lb"))
-      .join(shorts.select(col("doc_id").as("id_b"), col("text").as("tb"),
-        col("core").as("core_b"), length(col("text")).as("lb"))
-        .join(broadcast(okLens), "lb"), "lb")
-      .where(col("id_a") < col("id_b") && (col("core_a") || col("core_b")))
-      .select(col("id_a"), col("id_b"),
-        levenshtein(col("ta"), col("tb"), d).as("dist"))
-      .where(col("dist") >= 0)
+      // short strings: too few grams for the bound — pair by exact length
+      // bucket (a true pair's lengths differ by <= d, so each bucket joins
+      // its 2d+1 neighbors), then verify identically. The short set is NOT
+      // inherently bounded (a names/queries corpus can be ALL short), so a
+      // skew cap bounds the per-bucket quadratic exactly like the LSH
+      // operators' maxBucket: a length bucket over `maxShortBucket` rows is
+      // dropped from the probe side with a warning — a documented recall
+      // cap, never a silent quadratic task
+      val lenCounts = shorts.groupBy(length(col("text")).as("lb")).agg(count(lit(1)).as("n"))
+      val hot = lenCounts.where(col("n") > maxShortBucket).collect()
+      if (hot.nonEmpty) log.warn(
+        s"graft.edit short-length buckets over cap $maxShortBucket dropped: " +
+          hot.map(r => s"len=${r.getInt(0)} n=${r.getLong(1)}").mkString(", "))
+      val okLens = lenCounts.where(col("n") <= maxShortBucket).select(col("lb"))
+      val shortPairs = shorts.select(col("doc_id").as("id_a"), col("text").as("ta"),
+          col("core").as("core_a"),
+          explode(sequence(length(col("text")) - d, length(col("text")) + d)).as("lb"))
+        .join(shorts.select(col("doc_id").as("id_b"), col("text").as("tb"),
+          col("core").as("core_b"), length(col("text")).as("lb"))
+          .join(broadcast(okLens), "lb"), "lb")
+        .where(col("id_a") < col("id_b") && (col("core_a") || col("core_b")))
+        .select(col("id_a"), col("id_b"),
+          levenshtein(col("ta"), col("tb"), d).as("dist"))
+        .where(col("dist") >= 0)
 
-    Partitioning.releaseAfterUse(verified.unionByName(shortPairs), hashedInv)
+      use(verified.unionByName(shortPairs))
+    }
   }
 }

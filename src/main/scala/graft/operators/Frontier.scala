@@ -183,19 +183,16 @@ object Frontier {
                 urlCol: String): DataFrame = {
     val images = (0 until Chunks).map(readChunkBloomBytes(spark, path, _))
     val b = canonChunks(batch, urlCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val hit = graft.plans.BloomExpression.mightContainSharded(
       col("chunk"), col("canon"), images)
-    val definitelyNovel = b.where(!hit).select(col("canon"))
-    val maybeSeen = b.where(hit)
     // explicit schema: a store written from zero urls has no parquet
     // files to infer from, and an empty frontier is a legal day-0 state
     val store = spark.read.schema("canon STRING, chunk BIGINT").parquet(path)
-    val confirmedSeen = store.join(broadcast(maybeSeen), Seq("chunk", "canon"))
+    val confirmedSeen = store.join(broadcast(b.where(hit)), Seq("chunk", "canon"))
       .select(col("canon")).distinct()
-    val novelOfMaybe = maybeSeen.select(col("canon"))
-      .join(broadcast(confirmedSeen), Seq("canon"), "left_anti")
-    Partitioning.releaseAfterUse(
-      definitelyNovel.unionByName(novelOfMaybe), b)
+    // confirmed urls are all bloom hits, so the bloom-negatives pass this
+    // anti-join untouched: the batch is read twice, through the one
+    // exchange of its distinct, and nothing is cached
+    b.select(col("canon")).join(broadcast(confirmedSeen), Seq("canon"), "left_anti")
   }
 }

@@ -32,18 +32,19 @@ import org.apache.spark.sql.functions._
   */
 object Packing {
 
-  /** (token_start, token_end] span of every row along the global token axis
-    * ordered by `orderCol`, which MUST be unique — duplicates would make
-    * span assignment order-dependent, so they raise an error mid-job
-    * rather than emit overlapping spans. Adds `token_start`, `token_end`. */
-  def tokenSpans(df: DataFrame, orderCol: String, tokensCol: String): DataFrame = {
-    val pid = "__graft_pid"
+  private val Pid = "__graft_pid"
+
+  /** `df` with its range-partition id (`__graft_pid`) and each row's
+    * running token total within that partition (`__local_end`): the
+    * data-sized half of [[tokenSpans]], a window partitioned by the range
+    * partition, never one global-order window. */
+  private[operators] def localSpans(df: DataFrame, orderCol: String, tokensCol: String): DataFrame = {
     // range partition => partition i holds an orderCol range entirely below
     // partition i+1, so (pid, orderCol) sorts identically to orderCol alone
     val parallelism = df.sparkSession.sparkContext.defaultParallelism
     val ranged = df.repartitionByRange(parallelism, col(s"`$orderCol`"))
-      .withColumn(pid, spark_partition_id())
-    val localW = Window.partitionBy(pid).orderBy(col(s"`$orderCol`"))
+      .withColumn(Pid, spark_partition_id())
+    val localW = Window.partitionBy(Pid).orderBy(col(s"`$orderCol`"))
     // ROWS frame, not the default RANGE: RANGE includes orderCol PEERS, so
     // two rows tied on orderCol would both receive the combined end and
     // their spans would OVERLAP. With a ROWS frame ties would instead be
@@ -56,47 +57,54 @@ object Packing {
       lag(col(s"`$orderCol`"), 1).over(localW) === col(s"`$orderCol`"),
       raise_error(concat(lit("tokenSpans requires a UNIQUE orderCol; duplicate value: "),
         col(s"`$orderCol`").cast("string"))).cast("long")).otherwise(lit(0L))
-    // persisted: both the offsets branch and the result consume this frame —
-    // without the persist each consumer re-runs the scan + range shuffle +
-    // window (the plan tree duplicates the whole subtree); released lazily
-    // after the caller's first action
-    val local = ranged.withColumn("__local_end", cum + dupGuard)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // one row per partition; the offset window runs over <=parallelism rows
-    val offsetW = Window.orderBy(pid).rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = local.groupBy(col(pid))
-      .agg(max(col("__local_end")).as("__ptotal"))
-      .withColumn("__offset", coalesce(sum(col("__ptotal")).over(offsetW), lit(0L)))
-      .select(col(pid), col("__offset"))
-    Partitioning.releaseAfterUse(
-      local.join(broadcast(offsets), pid)
+    ranged.withColumn("__local_end", cum + dupGuard)
+  }
+
+  /** (token_start, token_end] span of every row along the global token axis
+    * ordered by `orderCol`, which MUST be unique — duplicates would make
+    * span assignment order-dependent, so they raise an error rather than
+    * emit overlapping spans. Adds `token_start`, `token_end` and passes the
+    * lazy result to `use`, which runs every action over it: the per-partition
+    * totals feed both the offsets and the result, so they are built once
+    * before `use` runs and released when it returns. */
+  def tokenSpans[T](df: DataFrame, orderCol: String, tokensCol: String)(use: DataFrame => T): T = {
+    Fixpoint.materialized(localSpans(df, orderCol, tokensCol)) { local =>
+      // one row per partition; the offset window runs over <=parallelism rows
+      val offsetW = Window.orderBy(Pid).rowsBetween(Window.unboundedPreceding, -1)
+      val offsets = local.groupBy(col(Pid))
+        .agg(max(col("__local_end")).as("__ptotal"))
+        .withColumn("__offset", coalesce(sum(col("__ptotal")).over(offsetW), lit(0L)))
+        .select(col(Pid), col("__offset"))
+      use(local.join(broadcast(offsets), Pid)
         .withColumn("token_end", col("__local_end") + col("__offset"))
         .withColumn("token_start", col("token_end") - col(s"`$tokensCol`"))
-        .drop(pid, "__local_end", "__offset"),
-      local)
+        .drop(Pid, "__local_end", "__offset"))
+    }
   }
 
   /** Contiguous greedy packing: adds `bin` = floor(token_start / capacity).
     * Every bin holds consecutive documents; fill is in
     * (capacity - max_doc_tokens, capacity + max_doc_tokens). */
-  def assignBins(df: DataFrame, orderCol: String, tokensCol: String, capacity: Long): DataFrame = {
+  def assignBins[T](df: DataFrame, orderCol: String, tokensCol: String, capacity: Long)
+                   (use: DataFrame => T): T = {
     require(capacity > 0, "capacity must be positive")
-    tokenSpans(df, orderCol, tokensCol)
-      .withColumn("bin", floor(col("token_start") / capacity).cast("long"))
+    tokenSpans(df, orderCol, tokensCol)(spans =>
+      use(spans.withColumn("bin", floor(col("token_start") / capacity).cast("long"))))
   }
 
   /** Concat-and-chunk spans: adds `chunk_first`, `chunk_last`, `n_chunks`
     * (how many capacity-sized training sequences this document's tokens
     * touch). Zero-token documents touch zero chunks. */
-  def chunkSpans(df: DataFrame, orderCol: String, tokensCol: String, capacity: Long): DataFrame = {
+  def chunkSpans[T](df: DataFrame, orderCol: String, tokensCol: String, capacity: Long)
+                   (use: DataFrame => T): T = {
     require(capacity > 0, "capacity must be positive")
     val first = floor(col("token_start") / capacity).cast("long")
     val last = floor((col("token_end") - 1) / capacity).cast("long")
-    tokenSpans(df, orderCol, tokensCol)
+    tokenSpans(df, orderCol, tokensCol)(spans => use(spans
       .withColumn("chunk_first", when(col(s"`$tokensCol`") > 0, first))
       .withColumn("chunk_last", when(col(s"`$tokensCol`") > 0, last))
       .withColumn("n_chunks",
-        when(col(s"`$tokensCol`") > 0, last - first + 1).otherwise(lit(0L)))
+        when(col(s"`$tokensCol`") > 0, last - first + 1).otherwise(lit(0L)))))
   }
 
   /** Length-bucketed padding report — the batching-efficiency audit run

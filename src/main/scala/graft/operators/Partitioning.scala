@@ -61,58 +61,4 @@ object Partitioning {
     * BEFORE the explode. */
   def evalBarrier(df: DataFrame): DataFrame =
     df.mapPartitions(it => it)(org.apache.spark.sql.Encoders.row(df.schema))
-
-  /** Return `result` LAZY, releasing the expensive `intermediates` caches as
-    * soon as the first action over `result` completes.
-    *
-    * Operators whose plan reuses a heavy intermediate (shingle sets, gram
-    * arrays, signature bases) persist it for the duration of one execution
-    * only — a long-lived session running many such operators must not
-    * accumulate storage blocks until eviction (advisor finding r2). The
-    * previous design persisted the FULL result and forced a `count()`; at
-    * scale the near-dup pair set itself can be enormous, and forcing it
-    * through the block store (plus an extra full run when the caller
-    * discards the result) is a scale-killer (judge finding r3).
-    *
-    * Mechanism: a [[QueryExecutionListener]] that fires only for executions
-    * whose analyzed plan contains one of the intermediates as a subtree
-    * (`qe.analyzed` is captured BEFORE cache substitution, so the original
-    * subtree is still present), unpersists them, and unregisters itself.
-    * Listener callbacks are async on the listener bus — `unpersist(false)`
-    * is non-blocking and safe there.
-    *
-    * Contract: if the caller re-executes the returned frame after the first
-    * action, intermediates are recomputed from lineage (correct, slower).
-    * If the caller never executes it, the lazy persists never materialize —
-    * no storage leaks (the registered listener itself lives until fired or
-    * session stop; a session constructing unbounded never-executed operator
-    * results would accumulate listeners, a few hundred bytes each). */
-  def releaseAfterUse(result: DataFrame, intermediates: DataFrame*): DataFrame = {
-    val spark = result.sparkSession
-    val targets = intermediates.map(_.queryExecution.analyzed)
-    val released = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
-      private def usesIntermediate(qe: org.apache.spark.sql.execution.QueryExecution): Boolean =
-        // fastEquals catches the direct-reference case cheaply; sameResult
-        // (canonicalized compare) catches subtrees the analyzer REWROTE —
-        // when an intermediate feeds a plan twice (self-join, union of two
-        // derivations), deduplicateRelations assigns fresh attribute ids
-        // to the second occurrence, and reference equality never matches
-        // (caught by CacheDisciplineSpec: incrementalRecompute's diff
-        // cache was never released)
-        targets.exists(t => qe.analyzed.exists(p =>
-          p.fastEquals(t) || (p.schema.length == t.schema.length && p.sameResult(t))))
-      private def cleanup(qe: org.apache.spark.sql.execution.QueryExecution): Unit =
-        if (usesIntermediate(qe) && released.compareAndSet(false, true)) {
-          intermediates.foreach(_.unpersist(false))
-          spark.listenerManager.unregister(this)
-        }
-      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             durationNs: Long): Unit = cleanup(qe)
-      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
-                             exception: Exception): Unit = cleanup(qe)
-    }
-    spark.listenerManager.register(listener)
-    result
-  }
 }

@@ -34,11 +34,12 @@ import org.apache.spark.sql.functions._
   * of the still-active chains against the edge frame, both sides hashed
   * on the url key; active strictly shrinks (resolved chains leave the
   * loop), real chains are 1–3 hops, and the loop exits early the first
-  * hop nothing advances. The edge frame is materialized once with an
-  * eager `localCheckpoint` and reused `maxHops` times; each hop's join
-  * is checkpointed the same way so per-hop lineage stays flat and the
-  * blocks free themselves when unreferenced (the [[CcStar]]/[[KCore]]
-  * iterative idiom). No driver-side iteration over rows, no collect. */
+  * hop nothing advances. The edge frame is built once by
+  * [[Fixpoint.cached]] and reused `maxHops` times; each hop's join
+  * is built the same way so per-hop lineage stays flat. The lazy
+  * result reads those checkpoints, so [[resolveChains]] passes it to the
+  * caller's `use` and releases them when that returns. No driver-side
+  * iteration over rows, no collect. */
 object Redirects {
 
   /** Resolve an HTTP Location header against the url it was served from.
@@ -103,51 +104,55 @@ object Redirects {
     * (null for non-redirects), i.e. [[graft.sources.Warc.recordsDF]]
     * output. Urls canonicalize through [[UrlDomain.urlCanonical]] — the
     * same key every other url operator joins on. */
-  def resolveChains(records: DataFrame, urlCol: String = "target_uri",
-                    statusCol: String = "http_status",
-                    locationCol: String = "location",
-                    maxHops: Int = 8): DataFrame = {
+  def resolveChains[T](records: DataFrame, urlCol: String = "target_uri",
+                       statusCol: String = "http_status",
+                       locationCol: String = "location",
+                       maxHops: Int = 8)(use: DataFrame => T): T = {
     require(maxHops >= 1 && maxHops <= 64, s"maxHops out of range: $maxHops")
     // the resolver is per-row bounded string work on the (small) 3xx
     // subset only — a UDF is fine off the hot path, and the edge build
     // runs once per call
     val resolveU = udf((b: String, l: String) => resolveUrl(b, l))
-    val edges = records
-      .where(col(statusCol).between(300, 399) && col(locationCol).isNotNull)
-      .select(UrlDomain.urlCanonical(col(s"`$urlCol`")).as("src"),
-        UrlDomain.urlCanonical(
-          resolveU(col(s"`$urlCol`"), col(s"`$locationCol`"))).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull &&
-        col("src") =!= col("dst"))
-      .groupBy(col("src")).agg(min(col("dst")).as("dst"))
-      .localCheckpoint(eager = true)
-    val hopEdges = edges.withColumnRenamed("src", "cur").withColumnRenamed("dst", "nxt")
-    var active = edges.select(col("src").as("url"), col("dst").as("cur"),
-      lit(1).as("hops"))
-    var resolvedParts = List.empty[DataFrame]
-    var hop = 1
-    var exhausted = false
-    while (hop < maxHops && !exhausted) {
-      val step = active.join(hopEdges, Seq("cur"), "left")
-        .localCheckpoint(eager = true)
-      resolvedParts ::= step.where(col("nxt").isNull)
+    // the edge frame and every hop's frame sit under the lazy result:
+    // released when `use`, which runs every action over it, returns
+    var built = List.empty[DataFrame]
+    def cached(df: DataFrame): DataFrame = { built ::= Fixpoint.cached(df); built.head }
+    try {
+      val edges = cached(records
+        .where(col(statusCol).between(300, 399) && col(locationCol).isNotNull)
+        .select(UrlDomain.urlCanonical(col(s"`$urlCol`")).as("src"),
+          UrlDomain.urlCanonical(
+            resolveU(col(s"`$urlCol`"), col(s"`$locationCol`"))).as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull &&
+          col("src") =!= col("dst"))
+        .groupBy(col("src")).agg(min(col("dst")).as("dst")))
+      val hopEdges = edges.withColumnRenamed("src", "cur").withColumnRenamed("dst", "nxt")
+      var active = edges.select(col("src").as("url"), col("dst").as("cur"),
+        lit(1).as("hops"))
+      var resolvedParts = List.empty[DataFrame]
+      var hop = 1
+      var exhausted = false
+      while (hop < maxHops && !exhausted) {
+        val step = cached(active.join(hopEdges, Seq("cur"), "left"))
+        resolvedParts ::= step.where(col("nxt").isNull)
+          .select(col("url"), col("cur").as("final_url"), col("hops"),
+            lit(true).as("resolved"))
+        active = step.where(col("nxt").isNotNull)
+          .select(col("url"), col("nxt").as("cur"), (col("hops") + 1).as("hops"))
+        exhausted = active.isEmpty // one cheap job per hop; real chains are 1-3
+        hop += 1
+      }
+      // leftovers after maxHops-1 advances: one final terminal check — a cur
+      // that is no redirect source resolved at exactly maxHops hops; the
+      // rest are loops/over-deep chains, reported unresolved
+      val last = active.join(hopEdges, Seq("cur"), "left")
+      resolvedParts ::= last.where(col("nxt").isNull)
         .select(col("url"), col("cur").as("final_url"), col("hops"),
           lit(true).as("resolved"))
-      active = step.where(col("nxt").isNotNull)
-        .select(col("url"), col("nxt").as("cur"), (col("hops") + 1).as("hops"))
-      exhausted = active.isEmpty // one cheap job per hop; real chains are 1-3
-      hop += 1
-    }
-    // leftovers after maxHops-1 advances: one final terminal check — a cur
-    // that is no redirect source resolved at exactly maxHops hops; the
-    // rest are loops/over-deep chains, reported unresolved
-    val last = active.join(hopEdges, Seq("cur"), "left")
-    resolvedParts ::= last.where(col("nxt").isNull)
-      .select(col("url"), col("cur").as("final_url"), col("hops"),
-        lit(true).as("resolved"))
-    resolvedParts ::= last.where(col("nxt").isNotNull)
-      .select(col("url"), lit(null).cast("string").as("final_url"),
-        col("hops"), lit(false).as("resolved"))
-    resolvedParts.reduce(_ unionByName _)
+      resolvedParts ::= last.where(col("nxt").isNotNull)
+        .select(col("url"), lit(null).cast("string").as("final_url"),
+          col("hops"), lit(false).as("resolved"))
+      use(resolvedParts.reduce(_ unionByName _))
+    } finally built.foreach(Fixpoint.release)
   }
 }

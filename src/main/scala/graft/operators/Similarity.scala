@@ -341,29 +341,28 @@ object Similarity {
         s"raise nLists (buckets must shrink as the corpus grows) or the budget")
   }
 
-  def knnJoin(df: DataFrame, idCol: String, embCol: String, k: Int,
-              nLists: Int = 16, nProbe: Int = 4,
-              centroids: Option[Array[Array[Double]]] = None,
-              maxBucket: Long = 1000000L): DataFrame = {
+  def knnJoin[T](df: DataFrame, idCol: String, embCol: String, k: Int,
+                 nLists: Int = 16, nProbe: Int = 4,
+                 centroids: Option[Array[Array[Double]]] = None,
+                 maxBucket: Long = 1000000L)(use: DataFrame => T): T = {
     require(k >= 1 && nLists >= 1 && nProbe >= 1 && nProbe <= nLists)
     val cents = centroids.getOrElse(sampleCentroids(df, idCol, embCol, nLists))
-    val assigned = ivfAssign(df, idCol, embCol, cents)
+    // the bucket guard and both bucket-join sides read the assignment: built
+    // once, released when `use`, which runs every action over the lazy kNN
+    // frame, returns (also when the guard throws)
+    Fixpoint.materialized(ivfAssign(df, idCol, embCol, cents)
       .where(col("list_id") >= 0)
       .withColumn("probes", probeListsCol(cents, nProbe))
       // vector norm computed ONCE per row here (8 bytes carried) instead
       // of once per candidate pair in the bucket join — see bucketTopK
-      .withColumn("nrm", norm(col("emb")))
-      .persist()
-    // the guard THROWS on oversized buckets (documented, expected) — on
-    // that path the persisted assignment must not outlive the call
-    // (advisor r14: cached blocks leaked for the session)
-    try requireBucketsBounded(assigned, maxBucket, "knnJoin")
-    catch { case t: Throwable => assigned.unpersist(false); throw t }
-    val queries = assigned.select(col("vec_id"), col("emb"), col("nrm"),
-      explode(col("probes")).as("list_id"))
-    val members = assigned.select(col("list_id"), col("vec_id").as("nbr_id"),
-      col("emb").as("nbr_emb"), col("nrm").as("nbr_nrm"))
-    graft.operators.Partitioning.releaseAfterUse(bucketTopK(queries, members, k), assigned)
+      .withColumn("nrm", norm(col("emb")))) { assigned =>
+      requireBucketsBounded(assigned, maxBucket, "knnJoin")
+      val queries = assigned.select(col("vec_id"), col("emb"), col("nrm"),
+        explode(col("probes")).as("list_id"))
+      val members = assigned.select(col("list_id"), col("vec_id").as("nbr_id"),
+        col("emb").as("nbr_emb"), col("nrm").as("nbr_nrm"))
+      use(bucketTopK(queries, members, k))
+    }
   }
 
   /** Incremental kNN: probe a MATERIALIZED IVF index with a fresh batch —
@@ -534,98 +533,101 @@ object Similarity {
     *     (for billion-vector corpora prefer [[ivfTopK]]'s inverted-file
     *     shape; hyperplane LSH pair mining is for the <=hundreds-of-
     *     millions dedup sweep). */
-  def cosinePairsLsh(df: DataFrame, idCol: String, embCol: String, threshold: Double,
-                     maxBucket: Int = 1024, targetOccupancy: Int = 4,
-                     missTarget: Double = 1e-4): DataFrame = {
+  def cosinePairsLsh[T](df: DataFrame, idCol: String, embCol: String, threshold: Double,
+                        maxBucket: Int = 1024, targetOccupancy: Int = 4,
+                        missTarget: Double = 1e-4)(use: DataFrame => T): T = {
     val spark = df.sparkSession
 
+    // the tuning aggregate, the band keys, the sketch and both verify sides
+    // read `base`: persisted, built whole by the tuning aggregate (an action
+    // of its own) before the pair plan reads it three times, and released
+    // when `use`, which runs every action over the lazy pair frame, returns
     val base = Partitioning.spread(
       df.select(col(s"`$idCol`").cast("long").as("vec_id"), col(s"`$embCol`").as("emb")))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
+    try {
+      // one bounded action for the tuning inputs (dim was always read here;
+      // the row count rides the same small aggregate). ignoreNulls: a null
+      // first-seen embedding (nulls are supported — signatures coalesce them
+      // away) or an empty frame would otherwise NPE the driver on getInt
+      val head = base.agg(count(lit(1)),
+        first(size(col("emb")), ignoreNulls = true)).head()
+      val nRows = head.getLong(0)
+      if (nRows == 0 || head.isNullAt(1))
+        use(spark.emptyDataFrame.select(
+          lit(0L).as("id_a"), lit(0L).as("id_b"), lit(0.0).as("cosine")).limit(0))
+      else {
+        val dim = head.getInt(1)
 
-    // one bounded action for the tuning inputs (dim was always read here;
-    // the row count rides the same small aggregate). ignoreNulls: a null
-    // first-seen embedding (nulls are supported — signatures coalesce them
-    // away) or an empty frame would otherwise NPE the driver on getInt
-    val head = base.agg(count(lit(1)),
-      first(size(col("emb")), ignoreNulls = true)).head()
-    val nRows = head.getLong(0)
-    if (nRows == 0 || head.isNullAt(1)) {
-      base.unpersist(false)
-      return spark.emptyDataFrame.select(
-        lit(0L).as("id_a"), lit(0L).as("id_b"), lit(0.0).as("cosine")).limit(0)
-    }
-    val dim = head.getInt(1)
+        val bits = math.max(8, math.min(48,
+          math.ceil(math.log(math.max(nRows.toDouble / targetOccupancy, 2.0)) / math.log(2.0)).toInt))
+        val pBit = 1.0 - math.acos(math.min(threshold, 0.9999)) / math.Pi
+        val pBand = math.pow(pBit, bits)
+        val bands = math.max(4, math.min(64,
+          math.ceil(math.log(missTarget) / math.log(1.0 - pBand)).toInt))
+        log.info(s"graft.embed_lsh n=$nRows bits=$bits bands=$bands pBand=$pBand")
+        // independent hyperplane set per band, all signatures in ONE narrow
+        // projection (an array of codegen'd sign-projection expressions)
+        val sigCols = (0 until bands).map { b =>
+          signatureCol(hyperplanes(bits, dim, 0x9E3779B97F4A7C15L * (b + 1)), col("emb"))
+        }
+        val bandedAll = base.select(col("vec_id"), posexplode(array(sigCols: _*)))
+          .select(col("vec_id"), col("pos").as("band"), col("col").as("bucket"))
 
-    val bits = math.max(8, math.min(48,
-      math.ceil(math.log(math.max(nRows.toDouble / targetOccupancy, 2.0)) / math.log(2.0)).toInt))
-    val pBit = 1.0 - math.acos(math.min(threshold, 0.9999)) / math.Pi
-    val pBand = math.pow(pBit, bits)
-    val bands = math.max(4, math.min(64,
-      math.ceil(math.log(missTarget) / math.log(1.0 - pBand)).toInt))
-    log.info(s"graft.embed_lsh n=$nRows bits=$bits bands=$bands pBand=$pBand")
-    // independent hyperplane set per band, all signatures in ONE narrow
-    // projection (an array of codegen'd sign-projection expressions)
-    val sigCols = (0 until bands).map { b =>
-      signatureCol(hyperplanes(bits, dim, 0x9E3779B97F4A7C15L * (b + 1)), col("emb"))
-    }
-    val bandedAll = base.select(col("vec_id"), posexplode(array(sigCols: _*)))
-      .select(col("vec_id"), col("pos").as("band"), col("col").as("bucket"))
+        // Skew guard. Real embedding distributions concentrate in a few hub
+        // directions, so bucket sizes are heavy-tailed no matter how many
+        // hyperplane bits slice the space — and candidate pairs grow with the
+        // SQUARE of bucket size (measured before this cap was tightened: 30x
+        // data -> 500x verify bytes, all from a handful of near-cap buckets).
+        // The cap follows the tuned occupancy: a bucket tens of times over the
+        // expected occupancy is a hub direction whose pairs are overwhelmingly
+        // below threshold; a true near-dup pair inside one still has every
+        // OTHER band to surface through, the standard multi-band recall
+        // argument (same shape as Dedup.minhashPairs).
+        val effMaxBucket = math.min(maxBucket, 32 * targetOccupancy)
+        val candidates = bandedAll.groupBy("band", "bucket")
+          .agg(collect_list("vec_id").as("ids"))
+          .where(size(col("ids")) > 1 && size(col("ids")) <= effMaxBucket)
+          .select(array_sort(array_distinct(col("ids"))).as("s"))
+          .select(explode(Pairs.fromSortedLongs(col("s"))).as("p"))
+          .select(col("p._1").as("id_a"), col("p._2").as("id_b"))
+          .distinct()
 
-    // Skew guard. Real embedding distributions concentrate in a few hub
-    // directions, so bucket sizes are heavy-tailed no matter how many
-    // hyperplane bits slice the space — and candidate pairs grow with the
-    // SQUARE of bucket size (measured before this cap was tightened: 30x
-    // data -> 500x verify bytes, all from a handful of near-cap buckets).
-    // The cap follows the tuned occupancy: a bucket tens of times over the
-    // expected occupancy is a hub direction whose pairs are overwhelmingly
-    // below threshold; a true near-dup pair inside one still has every
-    // OTHER band to surface through, the standard multi-band recall
-    // argument (same shape as Dedup.minhashPairs).
-    val effMaxBucket = math.min(maxBucket, 32 * targetOccupancy)
-    val candidates = bandedAll.groupBy("band", "bucket")
-      .agg(collect_list("vec_id").as("ids"))
-      .where(size(col("ids")) > 1 && size(col("ids")) <= effMaxBucket)
-      .select(array_sort(array_distinct(col("ids"))).as("s"))
-      .select(explode(Pairs.fromSortedLongs(col("s"))).as("p"))
-      .select(col("p._1").as("id_a"), col("p._2").as("id_b"))
-      .distinct()
+        // TWO-STAGE VERIFY — the byte cut that makes hubby corpora survivable.
+        // On real embedding distributions most candidates are hub-bucket
+        // background that exact verification REJECTS; shipping two full
+        // vectors per candidate pays ~0.5 KB to discard a pair. Stage 1 joins
+        // an 8-BYTE 64-bit hyperplane sketch per side and filters on hamming
+        // distance: h/64 estimates angle/pi with sd ~ sqrt(p(1-p)/64), so the
+        // cut at +3 sd keeps a true pair at `threshold` with probability
+        // ~1-1e-4 (inside missTarget's envelope) while a background pair at
+        // cosine ~0 (h ~ 32) survives with probability ~1e-5. Stage 2 ships
+        // full embeddings ONLY for sketch survivors — in SOURCE float32
+        // precision (the dot accumulates in double; a pre-cast to
+        // array<double> would double the payload for zero information).
+        val hCut = {
+          val pB = math.acos(math.min(threshold, 0.9999)) / math.Pi
+          math.ceil(64 * pB + 3 * math.sqrt(64 * pB * (1 - pB))).toInt
+        }
+        val sketch = base.select(col("vec_id"),
+          signatureCol(hyperplanes(64, dim, 0x51D5EEDA110DEAL), col("emb")).as("s64"))
+        val survivors = candidates
+          .join(sketch.select(col("vec_id").as("id_a"), col("s64").as("s_a")), "id_a")
+          .join(sketch.select(col("vec_id").as("id_b"), col("s64").as("s_b")), "id_b")
+          .where(bit_count(col("s_a").bitwiseXOR(col("s_b"))) <= hCut)
+          .select("id_a", "id_b")
 
-    // TWO-STAGE VERIFY — the byte cut that makes hubby corpora survivable.
-    // On real embedding distributions most candidates are hub-bucket
-    // background that exact verification REJECTS; shipping two full
-    // vectors per candidate pays ~0.5 KB to discard a pair. Stage 1 joins
-    // an 8-BYTE 64-bit hyperplane sketch per side and filters on hamming
-    // distance: h/64 estimates angle/pi with sd ~ sqrt(p(1-p)/64), so the
-    // cut at +3 sd keeps a true pair at `threshold` with probability
-    // ~1-1e-4 (inside missTarget's envelope) while a background pair at
-    // cosine ~0 (h ~ 32) survives with probability ~1e-5. Stage 2 ships
-    // full embeddings ONLY for sketch survivors — in SOURCE float32
-    // precision (the dot accumulates in double; a pre-cast to
-    // array<double> would double the payload for zero information).
-    val hCut = {
-      val pB = math.acos(math.min(threshold, 0.9999)) / math.Pi
-      math.ceil(64 * pB + 3 * math.sqrt(64 * pB * (1 - pB))).toInt
-    }
-    val sketch = base.select(col("vec_id"),
-      signatureCol(hyperplanes(64, dim, 0x51D5EEDA110DEAL), col("emb")).as("s64"))
-    val survivors = candidates
-      .join(sketch.select(col("vec_id").as("id_a"), col("s64").as("s_a")), "id_a")
-      .join(sketch.select(col("vec_id").as("id_b"), col("s64").as("s_b")), "id_b")
-      .where(bit_count(col("s_a").bitwiseXOR(col("s_b"))) <= hCut)
-      .select("id_a", "id_b")
-
-    val e = base.select(col("vec_id"), col("emb").as("embd"))
-      .withColumn("nrm", norm(col("embd")))
-    val a = e.select(col("vec_id").as("id_a"), col("embd").as("emb_a"), col("nrm").as("nrm_a"))
-    val b = e.select(col("vec_id").as("id_b"), col("embd").as("emb_b"), col("nrm").as("nrm_b"))
-    Partitioning.releaseAfterUse(
-      survivors.join(a, "id_a").join(b, "id_b")
-        .withColumn("cosine",
-          graft.plans.VectorExpressions.dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
-        .where(col("cosine") >= threshold)
-        .select(col("id_a"), col("id_b"), col("cosine")),
-      base)
+        val e = base.select(col("vec_id"), col("emb").as("embd"))
+          .withColumn("nrm", norm(col("embd")))
+        val a = e.select(col("vec_id").as("id_a"), col("embd").as("emb_a"), col("nrm").as("nrm_a"))
+        val b = e.select(col("vec_id").as("id_b"), col("embd").as("emb_b"), col("nrm").as("nrm_b"))
+        use(survivors.join(a, "id_a").join(b, "id_b")
+          .withColumn("cosine",
+            graft.plans.VectorExpressions.dot(col("emb_a"), col("emb_b")) / (col("nrm_a") * col("nrm_b")))
+          .where(col("cosine") >= threshold)
+          .select(col("id_a"), col("id_b"), col("cosine")))
+      }
+    } finally base.unpersist(blocking = false)
   }
 
   /** Per-group elementwise embedding centroid on an EXACT integer grid —
@@ -824,8 +826,8 @@ object Similarity {
     * [[knnJoin]] guard discipline). The corpus-scale path shortlists
     * with [[ivfTopK]]-style probes per source and applies the same
     * margin to the shortlist. */
-  def marginMine(src: DataFrame, tgt: DataFrame, idCol: String, embCol: String,
-                 k: Int = 4, maxSrc: Int = 4096): DataFrame = {
+  def marginMine[T](src: DataFrame, tgt: DataFrame, idCol: String, embCol: String,
+                    k: Int = 4, maxSrc: Int = 4096)(use: DataFrame => T): T = {
     require(k >= 1, "margin neighborhood needs k >= 1")
     val nSrc = src.count()
     require(nSrc <= maxSrc,
@@ -841,34 +843,34 @@ object Similarity {
     // their groups map-side — the shuffle carries k pairs per group,
     // never the cross frame (a window formulation shuffled the full
     // |src|·|tgt| frame TWICE; the 100x ScaleCheck read 3899x bytes)
-    val x = t.crossJoin(broadcast(s))
-      .select(col("sid"), col("tid"), cos)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
-    def avgTop(top: Column): Column =
-      aggregate(top, lit(0.0), (acc, p) => acc + p.getField("score")) / size(top)
-    // forward: each source's k nearest targets ARE its candidate set
-    // (the paper's retrieve-then-margin practice) plus its neighborhood
-    // average
-    val fwdArr = x.groupBy("sid")
-      .agg(graft.plans.TopKAggregate.topKByScore(col("c"), col("tid"), k).as("top"))
-    val cands = fwdArr
-      .select(col("sid"), avgTop(col("top")).as("fk"), explode(col("top")).as("p"))
-      .select(col("sid"), col("fk"), col("p.id").as("tid"), col("p.score").as("c"))
-    val bwd = x.groupBy("tid")
-      .agg(graft.plans.TopKAggregate.topKByScore(col("c"), col("sid"), k).as("btop"))
-      .select(col("tid"), avgTop(col("btop")).as("bk"))
-    val margins = bwd.join(broadcast(cands), "tid")
-      .select(col("sid"), col("tid"),
-        (col("c") / ((col("fk") + col("bk")) / 2)).as("margin"))
-    val best = margins.groupBy("sid")
-      .agg(max(struct(col("margin"), (-col("tid")).as("negTid"))).as("m"))
-      .select(col("sid").as("src_id"), (-col("m.negTid")).as("tgt_id"),
-        col("m.margin").as("margin"))
-    Partitioning.releaseAfterUse(
-      best.withColumn("rank", row_number().over(
+    // both aggregates read the cross frame: built once, released when
+    // `use`, which runs every action over the lazy ranking, returns
+    Fixpoint.materialized(t.crossJoin(broadcast(s))
+      .select(col("sid"), col("tid"), cos)) { x =>
+      def avgTop(top: Column): Column =
+        aggregate(top, lit(0.0), (acc, p) => acc + p.getField("score")) / size(top)
+      // forward: each source's k nearest targets ARE its candidate set
+      // (the paper's retrieve-then-margin practice) plus its neighborhood
+      // average
+      val fwdArr = x.groupBy("sid")
+        .agg(graft.plans.TopKAggregate.topKByScore(col("c"), col("tid"), k).as("top"))
+      val cands = fwdArr
+        .select(col("sid"), avgTop(col("top")).as("fk"), explode(col("top")).as("p"))
+        .select(col("sid"), col("fk"), col("p.id").as("tid"), col("p.score").as("c"))
+      val bwd = x.groupBy("tid")
+        .agg(graft.plans.TopKAggregate.topKByScore(col("c"), col("sid"), k).as("btop"))
+        .select(col("tid"), avgTop(col("btop")).as("bk"))
+      val margins = bwd.join(broadcast(cands), "tid")
+        .select(col("sid"), col("tid"),
+          (col("c") / ((col("fk") + col("bk")) / 2)).as("margin"))
+      val best = margins.groupBy("sid")
+        .agg(max(struct(col("margin"), (-col("tid")).as("negTid"))).as("m"))
+        .select(col("sid").as("src_id"), (-col("m.negTid")).as("tgt_id"),
+          col("m.margin").as("margin"))
+      use(best.withColumn("rank", row_number().over(
           org.apache.spark.sql.expressions.Window
             .orderBy(col("margin").desc, col("src_id").asc)))
-        .select(col("src_id"), col("tgt_id"), col("rank").cast("long").as("rank")),
-      x)
+        .select(col("src_id"), col("tgt_id"), col("rank").cast("long").as("rank")))
+    }
   }
 }

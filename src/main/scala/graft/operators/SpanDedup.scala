@@ -51,28 +51,27 @@ import org.apache.spark.sql.functions._
   */
 object SpanDedup {
 
-  def removeDuplicatedSpans(df: DataFrame, idCol: String, textCol: String,
-      spanTokens: Int): DataFrame = {
+  def removeDuplicatedSpans[T](df: DataFrame, idCol: String, textCol: String,
+      spanTokens: Int)(use: DataFrame => T): T = {
     require(spanTokens >= 2, s"spanTokens must be >= 2, got $spanTokens")
     val L = spanTokens
 
-    // persisted: three consumers (dup-key counts, the semi-join probe, and
-    // the final toks join) would each recompute the tokenize + per-window
-    // slice/concat + double-hash projection — the dominant CPU of the
-    // operator — because the probe side's exchange (raw wins rows) differs
-    // from the aggregate side's (partial-agg rows) and ReuseExchange never
-    // fires. Released after the caller's first action.
     val toks = df
       .filter(col(s"`$textCol`").isNotNull && col(s"`$idCol`").isNotNull)
       .select(
         col(s"`$idCol`").as("doc_id"),
         split(lower(trim(col(s"`$textCol`"))), "\\s+").as("t"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
 
     // (doc_id, pos, 128-bit window fingerprint); docs shorter than L emit
     // no windows. sequence(0, size-L) is ascending only when size >= L —
     // the guard is load-bearing (sequence descends for inverted bounds).
-    val wins = toks
+    // Built once: the dup-key counts and the semi-join probe would each
+    // recompute the per-window slice/concat + double-hash projection — the
+    // dominant CPU of the operator — because the probe side's exchange (raw
+    // wins rows) differs from the aggregate side's (partial-agg rows) and
+    // ReuseExchange never fires. Released when `use`, which runs every
+    // action over the lazy result, returns.
+    Fixpoint.materialized(toks
       .select(col("doc_id"),
         posexplode(
           when(size(col("t")) >= L,
@@ -80,42 +79,40 @@ object SpanDedup {
             .otherwise(array().cast("array<string>")))
           .as(Seq("pos", "gram")))
       .select(col("doc_id"), col("pos"),
-        xxhash64(col("gram")).as("k1"), xxhash64(lit(1), col("gram")).as("k2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        xxhash64(col("gram")).as("k1"), xxhash64(lit(1), col("gram")).as("k2"))) { wins =>
+      val dupKeys = wins.groupBy("k1", "k2").count().filter(col("count") > 1)
+        .select("k1", "k2")
 
-    val dupKeys = wins.groupBy("k1", "k2").count().filter(col("count") > 1)
-      .select("k1", "k2")
+      val dupPos = wins.join(dupKeys, Seq("k1", "k2"), "left_semi")
+        .select("doc_id", "pos")
 
-    val dupPos = wins.join(dupKeys, Seq("k1", "k2"), "left_semi")
-      .select("doc_id", "pos")
+      // Per doc: sorted duplicated window starts -> merged [s, e] token spans.
+      // Windows [p, p+L-1]; a new window merges into the open span when it
+      // starts at or before end+1 (overlap or adjacency).
+      val spansDf = dupPos.groupBy("doc_id")
+        .agg(sort_array(collect_list(col("pos"))).as("ps"))
+        .select(col("doc_id"),
+          expr(
+            s"""aggregate(ps, cast(array() as array<struct<s:int,e:int>>),
+               |  (acc, p) -> CASE
+               |    WHEN size(acc) > 0 AND p <= element_at(acc, -1).e + 1
+               |      THEN concat(slice(acc, 1, size(acc) - 1),
+               |                  array(named_struct('s', element_at(acc, -1).s, 'e', p + ${L - 1})))
+               |    ELSE concat(acc, array(named_struct('s', p, 'e', p + ${L - 1})))
+               |  END)""".stripMargin).as("spans"))
 
-    // Per doc: sorted duplicated window starts -> merged [s, e] token spans.
-    // Windows [p, p+L-1]; a new window merges into the open span when it
-    // starts at or before end+1 (overlap or adjacency).
-    val spansDf = dupPos.groupBy("doc_id")
-      .agg(sort_array(collect_list(col("pos"))).as("ps"))
-      .select(col("doc_id"),
-        expr(
-          s"""aggregate(ps, cast(array() as array<struct<s:int,e:int>>),
-             |  (acc, p) -> CASE
-             |    WHEN size(acc) > 0 AND p <= element_at(acc, -1).e + 1
-             |      THEN concat(slice(acc, 1, size(acc) - 1),
-             |                  array(named_struct('s', element_at(acc, -1).s, 'e', p + ${L - 1})))
-             |    ELSE concat(acc, array(named_struct('s', p, 'e', p + ${L - 1})))
-             |  END)""".stripMargin).as("spans"))
-
-    val out = toks.join(spansDf, Seq("doc_id"), "left")
-      .select(
-        col("doc_id"),
-        size(col("t")).cast("long").as("n_tokens"),
-        coalesce(size(col("spans")), lit(0)).cast("long").as("n_spans"),
-        coalesce(
-          expr("aggregate(spans, 0, (acc, sp) -> acc + sp.e - sp.s + 1)"), lit(0))
-          .cast("long").as("tokens_removed"),
-        when(col("spans").isNull, concat_ws(" ", col("t")))
-          .otherwise(concat_ws(" ",
-            expr("filter(t, (tok, i) -> NOT exists(spans, sp -> i >= sp.s AND i <= sp.e))")))
-          .as("clean_text"))
-    Partitioning.releaseAfterUse(out, toks, wins)
+      use(toks.join(spansDf, Seq("doc_id"), "left")
+        .select(
+          col("doc_id"),
+          size(col("t")).cast("long").as("n_tokens"),
+          coalesce(size(col("spans")), lit(0)).cast("long").as("n_spans"),
+          coalesce(
+            expr("aggregate(spans, 0, (acc, sp) -> acc + sp.e - sp.s + 1)"), lit(0))
+            .cast("long").as("tokens_removed"),
+          when(col("spans").isNull, concat_ws(" ", col("t")))
+            .otherwise(concat_ws(" ",
+              expr("filter(t, (tok, i) -> NOT exists(spans, sp -> i >= sp.s AND i <= sp.e))")))
+            .as("clean_text")))
+    }
   }
 }

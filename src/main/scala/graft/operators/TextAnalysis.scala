@@ -700,30 +700,30 @@ object TextAnalysis {
     *
     * Output: (doc_id, n_grams, n_unique, novelty_x1e4) for every document
     * with at least one n-gram; shorter documents are absent. */
-  def ngramNovelty(df: DataFrame, idCol: String, textCol: String, n: Int = 3): DataFrame = {
+  def ngramNovelty[T](df: DataFrame, idCol: String, textCol: String, n: Int = 3)
+                     (use: DataFrame => T): T = {
     require(n >= 2, "n-gram novelty needs n >= 2")
     // the gram-array projection is CPU-bound (regex split + window
     // transform) and feeds TWO consumers (the df aggregate and the join
-    // probe) — persist it like the sibling Dedup pair pipeline does, or
-    // the whole gramming stage executes twice
+    // probe): built once, like the sibling Dedup pair pipeline's, and
+    // released when `use`, which runs every action over the lazy result,
+    // returns
     val projected = df.select(col(s"`$idCol`").cast("long").as("doc_id"),
         tokens(col(s"`$textCol`")).as("__t"))
       .select(col("doc_id"), array_distinct(wordGrams(col("__t"), n)).as("__grams"))
-    val cached = Partitioning.spread(projected)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    def exploded = cached.select(col("doc_id"), explode(col("__grams")).as("gram"))
-    // document frequency = DISTINCT DOCUMENTS per gram: duplicate doc_id
-    // rows must not inflate a gram's df (a self-duplicate is not "another
-    // document"), so the aggregate is count_distinct over the doc id
-    val dfreq = exploded.groupBy(col("gram"))
-      .agg(countDistinct(col("doc_id")).as("__df"))
-    Partitioning.releaseAfterUse(
-      exploded.join(dfreq, Seq("gram"))
+    Fixpoint.materialized(Partitioning.spread(projected)) { grams =>
+      def exploded = grams.select(col("doc_id"), explode(col("__grams")).as("gram"))
+      // document frequency = DISTINCT DOCUMENTS per gram: duplicate doc_id
+      // rows must not inflate a gram's df (a self-duplicate is not "another
+      // document"), so the aggregate is count_distinct over the doc id
+      val dfreq = exploded.groupBy(col("gram"))
+        .agg(countDistinct(col("doc_id")).as("__df"))
+      use(exploded.join(dfreq, Seq("gram"))
         .groupBy(col("doc_id"))
         .agg(countDistinct(col("gram")).as("n_grams"),
           countDistinct(when(col("__df") === 1L, col("gram"))).as("n_unique"))
-        .withColumn("novelty_x1e4", expr("n_unique * 10000 div n_grams")),
-      cached)
+        .withColumn("novelty_x1e4", expr("n_unique * 10000 div n_grams")))
+    }
   }
 
   /** Per-document DEFLATE compression ratio (verdict r13 ask #6) — the

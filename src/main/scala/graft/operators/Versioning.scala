@@ -154,29 +154,30 @@ object Versioning {
     * anti-join (evict stale rows from the carried cache) broadcast the id
     * list; the corpus sides never shuffle. A full-rebuild-sized churn
     * would blow the broadcast — at that point run `score(v2)` directly. */
-  def incrementalRecompute(prior: DataFrame, v1: DataFrame, v2: DataFrame,
+  def incrementalRecompute[T](prior: DataFrame, v1: DataFrame, v2: DataFrame,
       idCol: String, compareCols: Seq[String],
-      score: DataFrame => DataFrame): DataFrame = {
-    // persisted: churnNew and churnOld both read this frame, and without
-    // the persist the full-outer fingerprint join over BOTH corpus-sized
-    // snapshots — the dominant cost — executes twice per call
-    val diff = snapshotDiff(v1, v2, idCol, compareCols) // churn rows only
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val churnNew = diff.where(col("status").isin("added", "changed"))
-      .select(col(s"`$idCol`"))
-    val churnOld = diff.where(col("status").isin("removed", "changed"))
-      .select(col(s"`$idCol`"))
-    // null-id rows have no identity for snapshotDiff to see: v2's are
-    // always RECOMPUTED (they cannot match a prior row) and prior's are
-    // always evicted — keeping the score(v2) equivalence exactly
-    val recomputed = score(
-      v2.where(col(s"`$idCol`").isNotNull).join(broadcast(churnNew), Seq(idCol), "left_semi")
-        .unionByName(v2.where(col(s"`$idCol`").isNull)))
-      .withColumn("provenance", lit("recomputed"))
-    val carried = prior.where(col(s"`$idCol`").isNotNull)
-      .join(broadcast(churnOld), Seq(idCol), "left_anti")
-      .withColumn("provenance", lit("carried"))
-    Partitioning.releaseAfterUse(carried.unionByName(recomputed), diff)
+      score: DataFrame => DataFrame)(use: DataFrame => T): T = {
+    // churnNew and churnOld both read the diff, the full-outer fingerprint
+    // join over BOTH corpus-sized snapshots — the dominant cost. It is built
+    // once, before the plan that reads it twice, and released when `use`,
+    // which runs every action over the lazy result, returns.
+    Fixpoint.materialized(snapshotDiff(v1, v2, idCol, compareCols)) { diff => // churn rows only
+      val churnNew = diff.where(col("status").isin("added", "changed"))
+        .select(col(s"`$idCol`"))
+      val churnOld = diff.where(col("status").isin("removed", "changed"))
+        .select(col(s"`$idCol`"))
+      // null-id rows have no identity for snapshotDiff to see: v2's are
+      // always RECOMPUTED (they cannot match a prior row) and prior's are
+      // always evicted — keeping the score(v2) equivalence exactly
+      val recomputed = score(
+        v2.where(col(s"`$idCol`").isNotNull).join(broadcast(churnNew), Seq(idCol), "left_semi")
+          .unionByName(v2.where(col(s"`$idCol`").isNull)))
+        .withColumn("provenance", lit("recomputed"))
+      val carried = prior.where(col(s"`$idCol`").isNotNull)
+        .join(broadcast(churnOld), Seq(idCol), "left_anti")
+        .withColumn("provenance", lit("carried"))
+      use(carried.unionByName(recomputed))
+    }
   }
 
   /** Latest K records per key — the generalization of latest-per-key

@@ -71,26 +71,22 @@ object Winnow {
       .groupBy(col("fp"))
       .agg(sort_array(collect_set(col("id"))).as("members"))
       .where(size(col("members")) <= maxDf)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK_SER)
     val sizes = buckets.select(explode(col("members")).as("id"))
       .groupBy(col("id")).agg(count(lit(1)).as("n_fp"))
     val shared = buckets.where(size(col("members")) >= 2)
       .select(explode(Pairs.fromSortedLongs(col("members"))).as("p"))
       .groupBy(col("p._1").as("id_a"), col("p._2").as("id_b"))
       .agg(count(lit(1)).as("n_shared"))
+    // the size and shared branches both read the bucket frame through its
+    // one aggregate exchange, so caching it saves no work: measured, a
+    // cache adds jobs and shuffle bytes
     val sz = broadcast(sizes)
-    // the bucket frame feeds both the size and shared branches; released
-    // after the caller's first action like every other pair operator
-    // (verdict r12: this was the one pair family still leaving its cache
-    // to LRU eviction)
-    Partitioning.releaseAfterUse(
-      shared
-        .join(sz.select(col("id").as("id_a"), col("n_fp").as("n_a")), Seq("id_a"))
-        .join(sz.select(col("id").as("id_b"), col("n_fp").as("n_b")), Seq("id_b"))
-        .withColumn("sim",
-          col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared")))
-        .where(col("sim") >= threshold)
-        .select(col("id_a"), col("id_b"), col("n_shared"), col("sim")),
-      buckets)
+    shared
+      .join(sz.select(col("id").as("id_a"), col("n_fp").as("n_a")), Seq("id_a"))
+      .join(sz.select(col("id").as("id_b"), col("n_fp").as("n_b")), Seq("id_b"))
+      .withColumn("sim",
+        col("n_shared").cast("double") / (col("n_a") + col("n_b") - col("n_shared")))
+      .where(col("sim") >= threshold)
+      .select(col("id_a"), col("id_b"), col("n_shared"), col("sim"))
   }
 }

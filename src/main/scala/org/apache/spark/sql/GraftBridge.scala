@@ -8,7 +8,8 @@ import org.apache.spark.sql.classic.{ColumnNodeToExpressionConverter, Expression
   * Expression into a public `Column` (standard extension-point technique —
   * the alternatives are registering a FunctionBuilder per session or string
   * SQL, both heavier for a library-internal expression), and into the
-  * `private[spark]` listener bus that [[graft.Metrics]] drains. */
+  * `private[spark]` listener bus that [[graft.Metrics]] drains, and the SQL
+  * status store whose executed plans [[graft.PlanDump]] writes. */
 object GraftBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
@@ -29,4 +30,12 @@ object GraftBridge {
     * (`private[spark]` `listenerBus`). Events are delivered asynchronously,
     * so a listener read without this can miss a job's last tasks. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** (id, formatted physical plan) of each SQL execution the session's
+    * status store holds, oldest first: what the UI's SQL tab shows. */
+  def executedPlans(spark: SparkSession): Seq[(Long, String)] = {
+    drainListenerBus(spark.sparkContext)
+    spark.asInstanceOf[classic.SparkSession].sharedState.statusStore.executionsList()
+      .map(e => (e.executionId, e.physicalPlanDescription)).sortBy(_._1)
+  }
 }

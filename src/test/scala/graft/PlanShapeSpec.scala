@@ -262,25 +262,26 @@ class PlanShapeSpec extends AnyFunSuite with PredicateHelper {
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import org.apache.spark.sql.functions.col
     import spark.implicits._
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_planshape_sigstore")
-    if (path.exists()) org.apache.commons.io.FileUtils.deleteDirectory(path)
-    graft.operators.Dedup.writeSignatureStore(
-      (1L to 100L).map(i => (i, i * 0x9E3779B97F4A7C15L)).toDF("doc_id", "sig"),
-      path.getAbsolutePath)
-    val batch = Seq((1000L, 42L)).toDF("doc_id", "sig")
-    val plan = graft.operators.Dedup
-      .probeSignatureStore(spark, path.getAbsolutePath, batch)
-      .queryExecution.sparkPlan
-    val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
-    assert(bhj.nonEmpty, "expected the batch pigeonhole rows to broadcast")
-    // the only exchange allowed is the final pair-sized distinct — the
-    // store scan below the join must reach the join without shuffling
-    val joinNode = bhj.head
-    val storeSide = Seq(joinNode.left, joinNode.right)
-      .find(_.collectLeaves().exists(_.toString.contains("parquet")))
-    assert(storeSide.isDefined)
-    assert(storeSide.get.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-      "store side of the probe join must not shuffle")
+    SparkTestBase.withTargetDir("graft_planshape_sigstore") { dir =>
+      val path = new java.io.File(dir, "store")
+      graft.operators.Dedup.writeSignatureStore(
+        (1L to 100L).map(i => (i, i * 0x9E3779B97F4A7C15L)).toDF("doc_id", "sig"),
+        path.getAbsolutePath)
+      val batch = Seq((1000L, 42L)).toDF("doc_id", "sig")
+      val plan = graft.operators.Dedup
+        .probeSignatureStore(spark, path.getAbsolutePath, batch)
+        .queryExecution.sparkPlan
+      val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
+      assert(bhj.nonEmpty, "expected the batch pigeonhole rows to broadcast")
+      // the only exchange allowed is the final pair-sized distinct — the
+      // store scan below the join must reach the join without shuffling
+      val joinNode = bhj.head
+      val storeSide = Seq(joinNode.left, joinNode.right)
+        .find(_.collectLeaves().exists(_.toString.contains("parquet")))
+      assert(storeSide.isDefined)
+      assert(storeSide.get.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        "store side of the probe join must not shuffle")
+    }
   }
 
   test("frontier probe: confirm join broadcasts the batch; the store side never shuffles") {
@@ -291,24 +292,24 @@ class PlanShapeSpec extends AnyFunSuite with PredicateHelper {
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
     import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     import spark.implicits._
-    val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_planshape_frontier_${spark.sparkContext.applicationId}")
-    if (path.exists()) org.apache.commons.io.FileUtils.deleteDirectory(path)
-    graft.operators.Frontier.writeSeenStore(
-      (1 to 200).map(i => s"https://p.io/$i").toDF("url"), "url",
-      path.getAbsolutePath, capacity = 10000)
-    val batch = Seq("https://p.io/5", "https://p.io/9999").toDF("url")
-    val plan = graft.operators.Frontier
-      .novelUrls(spark, path.getAbsolutePath, batch, "url")
-      .queryExecution.sparkPlan
-    val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
-    assert(bhj.nonEmpty, "expected the maybe-seen batch rows to broadcast")
-    val storeSide = bhj.flatMap(j => Seq(j.left, j.right))
-      .find(_.collectLeaves().exists(_.toString.contains("parquet")))
-    assert(storeSide.isDefined, "a confirm-join side must scan the store parquet")
-    assert(storeSide.get.collect { case e: ShuffleExchangeExec => e }.isEmpty,
-      "store side of the confirm join must not shuffle")
-    org.apache.commons.io.FileUtils.deleteDirectory(path)
+    SparkTestBase.withTargetDir("graft_planshape_frontier") { dir =>
+      val path = new java.io.File(dir, "store")
+      graft.operators.Frontier.writeSeenStore(
+        (1 to 200).map(i => s"https://p.io/$i").toDF("url"), "url",
+        path.getAbsolutePath, capacity = 10000)
+      val batch = Seq("https://p.io/5", "https://p.io/9999").toDF("url")
+      val plan = graft.operators.Frontier
+        .novelUrls(spark, path.getAbsolutePath, batch, "url")
+        .queryExecution.sparkPlan
+      val bhj = plan.collect { case j: BroadcastHashJoinExec => j }
+      assert(bhj.nonEmpty, "expected the maybe-seen batch rows to broadcast")
+      val storeSide = bhj.flatMap(j => Seq(j.left, j.right))
+        .find(_.collectLeaves().exists(_.toString.contains("parquet")))
+      assert(storeSide.isDefined, "a confirm-join side must scan the store parquet")
+      assert(storeSide.get.collect { case e: ShuffleExchangeExec => e }.isEmpty,
+        "store side of the confirm join must not shuffle")
+      org.apache.commons.io.FileUtils.deleteDirectory(path)
+    }
   }
 
   test("allowlist entries are live (no stale exemptions)") {

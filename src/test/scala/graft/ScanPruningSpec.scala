@@ -36,6 +36,26 @@ class ScanPruningSpec extends AnyFunSuite {
     collectScans(df.queryExecution.sparkPlan, tableFile)
   }
 
+  /** The scans of every plan `query` executes while it runs to a result: a
+    * query that builds a cache and releases it runs its plans inside the
+    * query, so the frame it returns no longer scans anything. */
+  private def scansRun(query: String, tableFile: String): Seq[FileSourceScanExec] = {
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.execution.SparkPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             durationNs: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(funcName: String, qe: org.apache.spark.sql.execution.QueryExecution,
+                             exception: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      SparkEntry.queries(query)(spark, sf).collect()
+      org.apache.spark.sql.GraftBridge.drainListenerBus(spark.sparkContext)
+    } finally spark.listenerManager.unregister(listener)
+    import scala.jdk.CollectionConverters._
+    plans.asScala.toSeq.flatMap(collectScans(_, tableFile))
+  }
+
   /** All matching parquet scans, including those buried inside persisted
     * subtrees (InMemoryRelation) — pruning BEFORE a cache decides what the
     * cache materializes, so those scans are exactly the ones to guard. */
@@ -53,7 +73,7 @@ class ScanPruningSpec extends AnyFunSuite {
 
   test("column pruning reaches the parquet scan (ReadSchema is a strict subset)") {
     val violations = pruned.flatMap { case (query, tableFile, forbidden) =>
-      val scans = scansOf(query, tableFile)
+      val scans = scansRun(query, tableFile)
       if (scans.isEmpty) Seq(s"$query: no FileSourceScanExec over $tableFile found")
       else scans.flatMap { f =>
         val read = f.requiredSchema.fieldNames.toSet
@@ -103,30 +123,31 @@ class ScanPruningSpec extends AnyFunSuite {
     val corpus = emb.where(col("vec_id") >= 50)
     val batch = emb.where(col("vec_id") < 3)
     val cents = graft.operators.Similarity.sampleCentroids(corpus, "vec_id", "embedding", 8)
-    val store = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_knn_prune_store")
-    if (store.exists()) org.apache.commons.io.FileUtils.deleteDirectory(store)
-    graft.sources.Sinks.writePartitioned(
-      graft.operators.Similarity.ivfAssign(corpus, "vec_id", "embedding", cents)
-        .where(col("list_id") >= 0),
-      store.getAbsolutePath, Seq("list_id"), filesPerPartition = 1)
-    val index = spark.read.parquet(store.getAbsolutePath)
-      .select(col("vec_id").cast("long").as("vec_id"), col("emb"),
-        col("list_id").cast("int").as("list_id"))
-    val df = graft.operators.Similarity.knnProbeIndexed(
-      index, batch, "vec_id", "embedding", cents, k = 2, nProbe = 2)
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.mkString(",").contains("graft_knn_prune_store") => f
+    SparkTestBase.withTargetDir("graft_knn_prune_store") { dir =>
+      val store = new java.io.File(dir, "store")
+      graft.sources.Sinks.writePartitioned(
+        graft.operators.Similarity.ivfAssign(corpus, "vec_id", "embedding", cents)
+          .where(col("list_id") >= 0),
+        store.getAbsolutePath, Seq("list_id"), filesPerPartition = 1)
+      val index = spark.read.parquet(store.getAbsolutePath)
+        .select(col("vec_id").cast("long").as("vec_id"), col("emb"),
+          col("list_id").cast("int").as("list_id"))
+      val df = graft.operators.Similarity.knnProbeIndexed(
+        index, batch, "vec_id", "embedding", cents, k = 2, nProbe = 2)
+      val scans = df.queryExecution.sparkPlan.collect {
+        case f: FileSourceScanExec
+          if f.relation.location.rootPaths.mkString(",").contains("graft_knn_prune_store") => f
+      }
+      assert(scans.nonEmpty, "no scan over the index store found")
+      val scan = scans.head
+      assert(scan.partitionFilters.nonEmpty,
+        s"probe IN did not become a partition filter: ${scan.metadata.get("PartitionFilters")}")
+      val listed = scan.selectedPartitions.partitionCount
+      // 3 batch vectors x 2 probes overlap heavily; must list at most 6 of
+      // the 8 directories, and strictly fewer than all of them
+      assert(listed <= 6 && listed < 8,
+        s"scan lists $listed of 8 partitions — the store was not pruned")
     }
-    assert(scans.nonEmpty, "no scan over the index store found")
-    val scan = scans.head
-    assert(scan.partitionFilters.nonEmpty,
-      s"probe IN did not become a partition filter: ${scan.metadata.get("PartitionFilters")}")
-    val listed = scan.selectedPartitions.partitionCount
-    // 3 batch vectors x 2 probes overlap heavily; must list at most 6 of
-    // the 8 directories, and strictly fewer than all of them
-    assert(listed <= 6 && listed < 8,
-      s"scan lists $listed of 8 partitions — the store was not pruned")
   }
 
   test("literal predicates push down to the scan (query-vector probe)") {
@@ -145,26 +166,27 @@ class ScanPruningSpec extends AnyFunSuite {
     // become a partition filter over the tb= layout
     import org.apache.spark.sql.functions.col
     val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val store = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_ii_prune_store")
-    if (store.exists()) org.apache.commons.io.FileUtils.deleteDirectory(store)
-    graft.operators.InvertedIndex.writeIndex(
-      docs, "doc_id", "text", store.getAbsolutePath, nBuckets = 16)
-    val written = store.listFiles().count(_.getName.startsWith("tb="))
-    val q = Seq("hash", "join")
-    val buckets = q.map(graft.operators.InvertedIndex.termBucketScala(_, 16)).distinct
-    val df = graft.operators.InvertedIndex.probeStored(
-      spark, store.getAbsolutePath, q, k = 5, nBuckets = 16)
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.mkString(",").contains("graft_ii_prune_store") => f
+    SparkTestBase.withTargetDir("graft_ii_prune_store") { dir =>
+      val store = new java.io.File(dir, "store")
+      graft.operators.InvertedIndex.writeIndex(
+        docs, "doc_id", "text", store.getAbsolutePath, nBuckets = 16)
+      val written = store.listFiles().count(_.getName.startsWith("tb="))
+      val q = Seq("hash", "join")
+      val buckets = q.map(graft.operators.InvertedIndex.termBucketScala(_, 16)).distinct
+      val df = graft.operators.InvertedIndex.probeStored(
+        spark, store.getAbsolutePath, q, k = 5, nBuckets = 16)
+      val scans = df.queryExecution.sparkPlan.collect {
+        case f: FileSourceScanExec
+          if f.relation.location.rootPaths.mkString(",").contains("graft_ii_prune_store") => f
+      }
+      assert(scans.nonEmpty, "no scan over the index store found")
+      val scan = scans.head
+      assert(scan.partitionFilters.nonEmpty,
+        s"probe IN did not become a partition filter: ${scan.metadata.get("PartitionFilters")}")
+      val listed = scan.selectedPartitions.partitionCount
+      assert(listed <= buckets.size && listed < written,
+        s"scan lists $listed of $written partitions for ${buckets.size} probed buckets — not pruned")
     }
-    assert(scans.nonEmpty, "no scan over the index store found")
-    val scan = scans.head
-    assert(scan.partitionFilters.nonEmpty,
-      s"probe IN did not become a partition filter: ${scan.metadata.get("PartitionFilters")}")
-    val listed = scan.selectedPartitions.partitionCount
-    assert(listed <= buckets.size && listed < written,
-      s"scan lists $listed of $written partitions for ${buckets.size} probed buckets — not pruned")
   }
 
   test("signature-store reload prunes the chunk= layout to one of four directories") {
@@ -172,23 +194,24 @@ class ScanPruningSpec extends AnyFunSuite {
     // with the store partitioned by chunk that filter must prune the scan
     // to ONE directory, or every reload pays 4x the store I/O
     import spark.implicits._
-    val store = new java.io.File(System.getProperty("java.io.tmpdir"), "graft_sig_prune_store")
-    if (store.exists()) org.apache.commons.io.FileUtils.deleteDirectory(store)
-    graft.operators.Dedup.writeSignatureStore(
-      (1L to 200L).map(i => (i, i * 0x9E3779B97F4A7C15L)).toDF("doc_id", "sig"),
-      store.getAbsolutePath)
-    val written = store.listFiles().count(_.getName.startsWith("chunk="))
-    assert(written === 4, s"expected 4 chunk directories, found $written")
-    val df = graft.operators.Dedup.readSignatureStore(spark, store.getAbsolutePath)
-    val scans = df.queryExecution.sparkPlan.collect {
-      case f: FileSourceScanExec
-        if f.relation.location.rootPaths.mkString(",").contains("graft_sig_prune_store") => f
+    SparkTestBase.withTargetDir("graft_sig_prune_store") { dir =>
+      val store = new java.io.File(dir, "store")
+      graft.operators.Dedup.writeSignatureStore(
+        (1L to 200L).map(i => (i, i * 0x9E3779B97F4A7C15L)).toDF("doc_id", "sig"),
+        store.getAbsolutePath)
+      val written = store.listFiles().count(_.getName.startsWith("chunk="))
+      assert(written === 4, s"expected 4 chunk directories, found $written")
+      val df = graft.operators.Dedup.readSignatureStore(spark, store.getAbsolutePath)
+      val scans = df.queryExecution.sparkPlan.collect {
+        case f: FileSourceScanExec
+          if f.relation.location.rootPaths.mkString(",").contains("graft_sig_prune_store") => f
+      }
+      assert(scans.nonEmpty, "no scan over the signature store found")
+      val scan = scans.head
+      assert(scan.partitionFilters.nonEmpty,
+        s"chunk = 0 did not become a partition filter: ${scan.metadata.get("PartitionFilters")}")
+      assert(scan.selectedPartitions.partitionCount === 1,
+        s"reload lists ${scan.selectedPartitions.partitionCount} of 4 chunk directories — not pruned")
     }
-    assert(scans.nonEmpty, "no scan over the signature store found")
-    val scan = scans.head
-    assert(scan.partitionFilters.nonEmpty,
-      s"chunk = 0 did not become a partition filter: ${scan.metadata.get("PartitionFilters")}")
-    assert(scan.selectedPartitions.partitionCount === 1,
-      s"reload lists ${scan.selectedPartitions.partitionCount} of 4 chunk directories — not pruned")
   }
 }

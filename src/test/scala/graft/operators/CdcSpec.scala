@@ -81,12 +81,8 @@ class CdcSpec extends AnyFunSuite {
     assert(sizes(bytes(257, 9L)).sum === 257)
   }
 
-  private def withStore[A](body: String => A): A = {
-    val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"cdc_store_spec_${System.nanoTime()}")
-    try body(dir.getAbsolutePath)
-    finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
-  }
+  private def withStore[A](body: String => A): A =
+    SparkTestBase.withTargetDir("cdc_store_spec")(dir => body(s"$dir/store"))
 
   private def sortedRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long)] =
     df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted

@@ -58,13 +58,13 @@ class DecontaminationSpec extends AnyFunSuite {
     val bench = Seq(s"intro $eight outro").toDF("text")
     val exact = Decontamination.contaminatedIds(docs, "doc_id", "text", bench, "text")
       .collect().map(_.getLong(0)).toSet
-    val bloom = Decontamination.contaminatedIdsBloom(docs, "doc_id", "text", bench, "text")
-      .collect().map(_.getLong(0)).toSet
+    val bloom = Decontamination.contaminatedIdsBloom(docs, "doc_id", "text", bench, "text")(_.collect())
+      .map(_.getLong(0)).toSet
     assert(bloom === exact)
     assert(bloom === Set(1L, 3L))
     // empty benchmark: no grams, nothing flagged, no crash building the filter
     val empty = Seq.empty[String].toDF("text")
-    assert(Decontamination.contaminatedIdsBloom(docs, "doc_id", "text", empty, "text").count() === 0L)
+    assert(Decontamination.contaminatedIdsBloom(docs, "doc_id", "text", empty, "text")(_.count()) === 0L)
   }
 
   test("corpus side never shuffles before the broadcast probe") {

@@ -71,8 +71,8 @@ class DedupSpec extends AnyFunSuite {
     val nearDup = base.replace("quick", "quik") // tiny edit, high jaccard
     val far = "completely different content about spark query engines and columnar execution at scale"
     val df = docs(1L -> base, 2L -> nearDup, 3L -> far, 4L -> base) // 4 = exact dup of 1
-    val pairs = Dedup.minhashPairs(df, "doc_id", "text", threshold = 0.7)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val pairs = Dedup.minhashPairs(df, "doc_id", "text", threshold = 0.7)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(pairs.contains((1L, 4L)), "exact duplicate must be found")
     assert(pairs.contains((1L, 2L)), "near duplicate must be found")
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L), "unrelated doc must not pair")
@@ -93,9 +93,22 @@ class DedupSpec extends AnyFunSuite {
       i <- variants.indices; j <- variants.indices if i < j
       jac = exactJaccard(variants(i), variants(j)) if jac >= 0.5
     } yield (i.toLong, j.toLong)).toSet
-    val got = Dedup.minhashPairs(df, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val got = Dedup.minhashPairs(df, "doc_id", "text", threshold = 0.5)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(got === expected)
+  }
+
+  test("minhash pairs run the same jobs and shuffle bytes on every run of one input") {
+    import org.apache.spark.sql.functions._
+    // the shingle cache feeds two stages of one plan; built lazily, the two
+    // stages could both start building it and the counters varied by run
+    val df = docs((0L until 400L).map(i => i -> s"$base ${i % 37} tail ${i % 11}"): _*)
+    val runs = (1 to 3).map(_ => Metrics.measure(spark)(
+      Dedup.minhashPairs(df, "doc_id", "text", threshold = 0.8)(
+        _.agg(count(lit(1)), sum(col("id_a") + col("id_b"))).collect()))._2)
+    assert(runs.map(_.jobs).distinct.size === 1, s"jobs per run: ${runs.map(_.jobs)}")
+    assert(runs.map(_.shuffleBytes).distinct.size === 1,
+      s"shuffle bytes per run: ${runs.map(_.shuffleBytes)}")
   }
 
   test("ngram jaccard inverted-index pairs match brute force") {
@@ -103,8 +116,8 @@ class DedupSpec extends AnyFunSuite {
     val b = "spark makes distributed data processing simple and fast for most people"
     val c = "flink handles streaming state management with exactly once guarantees always"
     val df = docs(1L -> a, 2L -> b, 3L -> c)
-    val out = Dedup.ngramJaccardPairs(df, "doc_id", "text", threshold = 0.3, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val out = Dedup.ngramJaccardPairs(df, "doc_id", "text", threshold = 0.3, n = 3)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out === Set((1L, 2L)))
   }
 
@@ -130,12 +143,12 @@ class DedupSpec extends AnyFunSuite {
   test("short and empty documents neither crash nor fake-pair (descending-sequence guard)") {
     val df = docs(1L -> "", 2L -> "", 3L -> "ab", 4L -> "xy z", 5L -> base)
     // minhash: empty/short docs have empty shingle sets -> no pairs, no crash
-    val mh = Dedup.minhashPairs(df, "doc_id", "text", threshold = 0.5)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val mh = Dedup.minhashPairs(df, "doc_id", "text", threshold = 0.5)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(mh.isEmpty, s"short docs must not pair: $mh")
     // ngram: docs with < n tokens -> empty gram sets, no slice(t, 0, n) crash
-    val ng = Dedup.ngramJaccardPairs(df, "doc_id", "text", threshold = 0.3, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val ng = Dedup.ngramJaccardPairs(df, "doc_id", "text", threshold = 0.3, n = 3)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(ng.isEmpty, s"short docs must not pair: $ng")
   }
 
@@ -195,15 +208,15 @@ class DedupSpec extends AnyFunSuite {
     val batch = docs(
       100L -> (base + " x"), // near-dup of corpus 1 (and 3)
       101L -> "fresh new content that matches nothing in the existing corpus at all today")
-    val out = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text", threshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val out = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text", threshold = 0.8)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1)))
     assert(out.map(_._1).toSet === Set(100L), s"got ${out.toSeq}")
     assert(out.map(_._2).toSet.subsetOf(Set(1L, 3L)))
     // never pairs corpus docs with each other, never pairs batch with itself
     assert(out.forall { case (n, c) => n >= 100L && c < 100L })
     // plan: the batch side broadcasts; no cartesian product
-    val plan = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text")
-      .queryExecution.executedPlan.toString
+    val plan = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text")(
+      _.queryExecution.executedPlan.toString)
     assert(!plan.contains("CartesianProduct"))
     assert(plan.contains("BroadcastHashJoin"), "batch band keys must broadcast")
   }
@@ -219,12 +232,13 @@ class DedupSpec extends AnyFunSuite {
     val batch = docs(
       1L -> (base + " x"), // same id as corpus 1, but near-dups corpus 2
       3L -> "fresh new content that matches nothing in the existing corpus at all today")
-    val direct = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text", threshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val direct = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text", threshold = 0.8)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(direct === Set((1L, 2L)), s"got $direct")
     val index = Dedup.bandIndex(corpus, "doc_id", "text", threshold = 0.8)
-    val indexed = Dedup.incrementalNearDuplicatesIndexed(corpus, index, batch, "doc_id", "text", threshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val indexed = Dedup.incrementalNearDuplicatesIndexed(corpus, index, batch, "doc_id", "text",
+        threshold = 0.8)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(indexed === direct)
   }
 
@@ -277,15 +291,16 @@ class DedupSpec extends AnyFunSuite {
     val index = Dedup.bandIndex(corpus, "doc_id", "text", threshold = 0.8)
     // index schema is the compact materializable shape
     assert(index.columns.toSeq === Seq("doc_id", "band", "bucket"))
-    val direct = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text", threshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-    val indexed = Dedup.incrementalNearDuplicatesIndexed(corpus, index, batch, "doc_id", "text", threshold = 0.8)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val direct = Dedup.incrementalNearDuplicates(corpus, batch, "doc_id", "text", threshold = 0.8)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val indexed = Dedup.incrementalNearDuplicatesIndexed(corpus, index, batch, "doc_id", "text",
+        threshold = 0.8)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     assert(indexed === direct)
     assert(indexed.map(_._1) === Set(100L))
     // plan: batch band keys broadcast; candidate re-shingle is a semi-join
-    val plan = Dedup.incrementalNearDuplicatesIndexed(corpus, index, batch, "doc_id", "text")
-      .queryExecution.executedPlan.toString
+    val plan = Dedup.incrementalNearDuplicatesIndexed(corpus, index, batch, "doc_id", "text")(
+      _.queryExecution.executedPlan.toString)
     assert(!plan.contains("CartesianProduct"))
     assert(plan.contains("LeftSemi"), "candidate corpus docs must semi-join")
   }
@@ -293,9 +308,9 @@ class DedupSpec extends AnyFunSuite {
   test("dedup plans contain no cartesian product") {
     val df = docs(1L -> base, 2L -> (base + " x"))
     for (plan <- Seq(
-      Dedup.minhashPairs(df, "doc_id", "text").queryExecution.executedPlan.toString,
+      Dedup.minhashPairs(df, "doc_id", "text")(_.queryExecution.executedPlan.toString),
       Dedup.simhashPairs(df, "doc_id", "text").queryExecution.executedPlan.toString,
-      Dedup.ngramJaccardPairs(df, "doc_id", "text").queryExecution.executedPlan.toString)) {
+      Dedup.ngramJaccardPairs(df, "doc_id", "text")(_.queryExecution.executedPlan.toString))) {
       assert(!plan.contains("CartesianProduct"), "bucketed dedup must not cross-join")
       assert(!plan.contains("BroadcastNestedLoopJoin"), "bucketed dedup must not nested-loop-join")
     }
@@ -331,13 +346,12 @@ class DedupSpec extends AnyFunSuite {
     val other = "completely different words with no shared trigram content here"
     val docs = Seq((1L, short), (2L, long), (3L, other)).toDF("doc_id", "text")
     // short: 4 grams, all inside long (prefix) -> containment 1.0
-    val c = Dedup.ngramContainmentPairs(docs, "doc_id", "text", threshold = 0.9, n = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+    val c = Dedup.ngramContainmentPairs(docs, "doc_id", "text", threshold = 0.9, n = 3)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(c.toSeq.map(t => (t._1, t._2)) === Seq((1L, 2L)))
     assert(c.head._3 === 1.0)
     // symmetric jaccard on the same pair: 4 / (4 + 14 - 4) ~ 0.29 -> missed
-    val j = Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.9, n = 3)
-    assert(j.count() === 0L)
+    assert(Dedup.ngramJaccardPairs(docs, "doc_id", "text", threshold = 0.9, n = 3)(_.count()) === 0L)
   }
 
   test("ngramContainmentPairs denominators use the post-cutoff gram sets") {
@@ -353,12 +367,12 @@ class DedupSpec extends AnyFunSuite {
       (10L to 12L).map(_ -> "a b c d"))       // fillers make [a b c],[b c d] hot
       .toDF("doc_id", "text")
     val pairs = Dedup.ngramContainmentPairs(docs, "doc_id", "text",
-        threshold = 0.9, n = 3, maxDf = 2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+        threshold = 0.9, n = 3, maxDf = 2)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(pairs.toSeq === Seq((1L, 2L, 1.0)))
     // the raw pipeline exposes both denominator families
-    val pc = Dedup.ngramPairCounts(docs, "doc_id", "text", n = 3, maxDf = 2)
-      .where("id_a = 1 and id_b = 2").collect().head
+    val pc = Dedup.ngramPairCounts(docs, "doc_id", "text", n = 3, maxDf = 2)(
+      _.where("id_a = 1 and id_b = 2").collect().head)
     assert(pc.getAs[Long]("na") === 4L && pc.getAs[Long]("na_cut") === 2L)
     assert(pc.getAs[Long]("nb") === 8L && pc.getAs[Long]("nb_cut") === 6L)
     assert(pc.getAs[Long]("common") === 2L)

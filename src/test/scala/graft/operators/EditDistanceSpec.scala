@@ -26,8 +26,8 @@ class EditDistanceSpec extends AnyFunSuite {
 
   private def run(rows: Seq[(Long, String)], d: Int, q: Int = 3): Set[(Long, Long, Int)] = {
     import spark.implicits._
-    EditDistance.editDistancePairs(rows.toDF("doc_id", "text"), "doc_id", "text", d, q)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
+    EditDistance.editDistancePairs(rows.toDF("doc_id", "text"), "doc_id", "text", d, q)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
   }
 
   test("matches brute force on a mixed corpus (long, short, boundary lengths)") {
@@ -75,9 +75,9 @@ class EditDistanceSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, Some("abcdefghijkl")), (2L, None: Option[String]))
       .toDF("doc_id", "text")
-    assert(EditDistance.editDistancePairs(df, "doc_id", "text", 2).count() === 0L)
+    assert(EditDistance.editDistancePairs(df, "doc_id", "text", 2)(_.count()) === 0L)
     intercept[IllegalArgumentException] {
-      EditDistance.editDistancePairs(df, "doc_id", "text", 0)
+      EditDistance.editDistancePairs(df, "doc_id", "text", 0)(_.count())
     }
   }
 
@@ -86,9 +86,9 @@ class EditDistanceSpec extends AnyFunSuite {
     // 50 identical-length short strings -> one hot bucket of 50
     val hot = (0 until 50).map(i => (i.toLong, f"aa$i%03d")) // length 5, all distinct
     val df = hot.toDF("doc_id", "text")
-    val capped = EditDistance.editDistancePairs(df, "doc_id", "text", 1, maxShortBucket = 10)
-    assert(capped.count() === 0) // bucket over cap -> dropped, documented recall cap
-    val uncapped = EditDistance.editDistancePairs(df, "doc_id", "text", 1)
-    assert(uncapped.count() > 0) // default cap keeps the bucket
+    // bucket over cap -> dropped, documented recall cap
+    assert(EditDistance.editDistancePairs(df, "doc_id", "text", 1, maxShortBucket = 10)(_.count()) === 0)
+    // default cap keeps the bucket
+    assert(EditDistance.editDistancePairs(df, "doc_id", "text", 1)(_.count()) > 0)
   }
 }

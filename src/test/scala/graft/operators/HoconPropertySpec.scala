@@ -117,32 +117,32 @@ class HoconPropertySpec extends AnyFunSuite {
       val ownMap = own.toMap ++ Map("nest" -> Map("y" -> nested2))
       (inc, ownMap)
     }
-    val dir = java.nio.file.Files.createTempDirectory("hocon-prop-inc")
-    def write(name: String, text: String): java.nio.file.Path =
-      java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
-    try samples(docGen, 0xCAFE03L, 80).foreach { case (inc, own) =>
-      val incText = inc.map { case (k, v) => s"$k = ${render(v)}" }.mkString("\n")
-      write("inc.conf", incText)
-      val ownText = own.map { case (k, v) => s"$k = ${render(v)}" }.mkString("\n")
-      val text = "include \"inc.conf\"\n" + ownText
-      // expected: include merges into an empty doc, then the includer's own
-      // entries merge on top — objects deep-merge, scalars last-win
-      val expected = (inc.keySet ++ own.keySet).map { k =>
-        k -> ((inc.get(k), own.get(k)) match {
-          case (Some(m1: Map[_, _]), Some(m2: Map[_, _])) =>
-            m1.asInstanceOf[Map[String, Any]] ++ m2.asInstanceOf[Map[String, Any]]
-          case (_, Some(v2)) => v2
-          case (Some(v1), _) => v1
-          case _ => throw new IllegalStateException
-        })
-      }.toMap
-      Hocon.parseFile(write("main.conf", text).toString) match {
-        case Right(m) => assert(m === expected, s"for document:\n$text\n--- include:\n$incText")
-        case Left(errs) => fail(s"valid include doc rejected ($errs):\n$text")
+    graft.SparkTestBase.withTargetDir("hocon-prop-inc") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      def write(name: String, text: String): java.nio.file.Path =
+        java.nio.file.Files.write(dir.resolve(name), text.getBytes("UTF-8"))
+      samples(docGen, 0xCAFE03L, 80).foreach { case (inc, own) =>
+        val incText = inc.map { case (k, v) => s"$k = ${render(v)}" }.mkString("\n")
+        write("inc.conf", incText)
+        val ownText = own.map { case (k, v) => s"$k = ${render(v)}" }.mkString("\n")
+        val text = "include \"inc.conf\"\n" + ownText
+        // expected: include merges into an empty doc, then the includer's own
+        // entries merge on top — objects deep-merge, scalars last-win
+        val expected = (inc.keySet ++ own.keySet).map { k =>
+          k -> ((inc.get(k), own.get(k)) match {
+            case (Some(m1: Map[_, _]), Some(m2: Map[_, _])) =>
+              m1.asInstanceOf[Map[String, Any]] ++ m2.asInstanceOf[Map[String, Any]]
+            case (_, Some(v2)) => v2
+            case (Some(v1), _) => v1
+            case _ => throw new IllegalStateException
+          })
+        }.toMap
+        Hocon.parseFile(write("main.conf", text).toString) match {
+          case Right(m) => assert(m === expected, s"for document:\n$text\n--- include:\n$incText")
+          case Left(errs) => fail(s"valid include doc rejected ($errs):\n$text")
+        }
       }
     }
-    finally Seq(dir.resolve("inc.conf"), dir.resolve("main.conf"), dir)
-      .foreach(java.nio.file.Files.deleteIfExists)
   }
 
   test("error accumulation: every missing required substitution is reported, none throws") {

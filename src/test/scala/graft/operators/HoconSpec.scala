@@ -257,15 +257,8 @@ class HoconSpec extends AnyFunSuite {
 
   // ---- include directives (verdict r7 "what's missing" #1) ----
 
-  private def withTempDir[A](f: java.nio.file.Path => A): A = {
-    val dir = java.nio.file.Files.createTempDirectory("hocon-inc")
-    try f(dir)
-    finally {
-      import scala.jdk.CollectionConverters._
-      java.nio.file.Files.walk(dir).iterator().asScala.toList.reverse
-        .foreach(java.nio.file.Files.deleteIfExists(_))
-    }
-  }
+  private def withTempDir[A](f: java.nio.file.Path => A): A =
+    graft.SparkTestBase.withTargetDir("hocon-inc")(dir => f(java.nio.file.Paths.get(dir)))
 
   private def put(dir: java.nio.file.Path, name: String, text: String): java.nio.file.Path = {
     val p = dir.resolve(name)

@@ -111,14 +111,15 @@ class MaskTransformSpec extends AnyFunSuite {
   test("masked output round-trips through parquet with treatments metadata intact") {
     val df = fixture()
     val out = MaskTransform(df)
-    val dir = java.nio.file.Files.createTempDirectory("graft_rt").toString
-    out.write.mode("overwrite").parquet(dir)
-    val back = spark.read.parquet(dir)
-    assert(back.count() === 3)
-    val meta = back.schema("first_name").metadata
-    assert(meta.contains(MaskTransform.MaskKey),
-      "treatments metadata must survive a parquet round trip")
-    assert(back.schema.map(_.dataType) === out.schema.map(_.dataType))
+    SparkTestBase.withTargetDir("graft_rt") { dir =>
+      out.write.mode("overwrite").parquet(dir)
+      val back = spark.read.parquet(dir)
+      assert(back.count() === 3)
+      val meta = back.schema("first_name").metadata
+      assert(meta.contains(MaskTransform.MaskKey),
+        "treatments metadata must survive a parquet round trip")
+      assert(back.schema.map(_.dataType) === out.schema.map(_.dataType))
+    }
   }
 
   test("maskViaDistinct agrees with direct masking and preserves nulls") {

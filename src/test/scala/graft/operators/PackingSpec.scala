@@ -18,21 +18,21 @@ class PackingSpec extends AnyFunSuite {
     import spark.implicits._
     val df = Seq((1L, 5L), (1L, 7L), (2L, 3L)).toDF("doc_id", "toks")
     val e = intercept[Exception] {
-      Packing.tokenSpans(df, "doc_id", "toks").collect()
+      Packing.tokenSpans(df, "doc_id", "toks")(_.collect())
     }
     assert(e.getMessage != null)
   }
 
   test("tokenSpans output carries no internal working columns") {
-    val cols = Packing.tokenSpans(docs(50), "doc_id", "toks").columns.toSet
+    val cols = Packing.tokenSpans(docs(50), "doc_id", "toks")(_.columns.toSet)
     assert(cols === Set("doc_id", "toks", "token_start", "token_end"))
   }
 
   test("tokenSpans computes the exact global prefix sum in doc_id order") {
     val df = docs(500)
-    val spans = Packing.tokenSpans(df, "doc_id", "toks")
-      .select("doc_id", "toks", "token_start", "token_end")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+    val spans = Packing.tokenSpans(df, "doc_id", "toks")(
+        _.select("doc_id", "toks", "token_start", "token_end").collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(_._1)
     var expectStart = 0L
     spans.foreach { case (id, toks, start, end) =>
@@ -43,18 +43,20 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("tokenSpans does not funnel the data through one global-order window") {
-    val plan = Packing.tokenSpans(docs(500), "doc_id", "toks")
-      .queryExecution.executedPlan.toString
     // the data-sized window must be partitioned (by the range-partition id);
-    // the only unpartitioned window runs over <=parallelism offset rows
+    // the only unpartitioned window runs over <=parallelism offset rows.
+    // tokenSpans builds that window's frame before its result runs, so the
+    // plan checked is the frame's own
+    val plan = Packing.localSpans(docs(500), "doc_id", "toks")
+      .queryExecution.executedPlan.toString
     assert(plan.contains("rangepartitioning"), "expected a range repartition of the data")
   }
 
   test("assignBins: contiguous bins with bounded overflow") {
     val capacity = 256L
-    val out = Packing.assignBins(docs(400), "doc_id", "toks", capacity)
-      .select("doc_id", "toks", "token_start", "token_end", "bin")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
+    val out = Packing.assignBins(docs(400), "doc_id", "toks", capacity)(
+        _.select("doc_id", "toks", "token_start", "token_end", "bin").collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
       .sortBy(_._1)
     // bin is floor(start/capacity), non-decreasing in doc order
     out.foreach { case (_, _, start, _, bin) => assert(bin === start / capacity) }
@@ -77,9 +79,10 @@ class PackingSpec extends AnyFunSuite {
 
   test("chunkSpans: straddlers touch every crossed chunk; totals agree") {
     val capacity = 100L
-    val out = Packing.chunkSpans(docs(300), "doc_id", "toks", capacity)
-      .select("doc_id", "toks", "token_start", "token_end", "chunk_first", "chunk_last", "n_chunks")
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
+    val out = Packing.chunkSpans(docs(300), "doc_id", "toks", capacity)(
+        _.select("doc_id", "toks", "token_start", "token_end", "chunk_first", "chunk_last", "n_chunks")
+          .collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4), r.getLong(5), r.getLong(6)))
     val totalTokens = out.map(_._2).sum
     val nChunksGlobal = (totalTokens + capacity - 1) / capacity
     assert(out.map(_._6).max + 1 === nChunksGlobal, "last touched chunk = ceil(total/capacity)")
@@ -93,10 +96,10 @@ class PackingSpec extends AnyFunSuite {
   }
 
   test("deterministic across runs (same data, same spans)") {
-    val a = Packing.assignBins(docs(200), "doc_id", "toks", 128)
-      .select("doc_id", "bin").collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    val b = Packing.assignBins(docs(200), "doc_id", "toks", 128)
-      .select("doc_id", "bin").collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    def bins = Packing.assignBins(docs(200), "doc_id", "toks", 128)(_.select("doc_id", "bin").collect())
+      .map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
+    val a = bins
+    val b = bins
     assert(a === b)
   }
 

@@ -10,31 +10,33 @@ class PartitioningSpec extends AnyFunSuite {
 
   test("spread widens a single-file parquet scan to default parallelism") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread").toString
-    (1 to 1000).map(i => (i.toLong, s"row $i")).toDF("id", "txt")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    val df = spark.read.parquet(dir)
-    val out = Partitioning.spread(df)
-    assert(out.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
+    SparkTestBase.withTargetDir("graft_spread") { dir =>
+      (1 to 1000).map(i => (i.toLong, s"row $i")).toDF("id", "txt")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      val df = spark.read.parquet(dir)
+      val out = Partitioning.spread(df)
+      assert(out.rdd.getNumPartitions === spark.sparkContext.defaultParallelism)
+    }
   }
 
   test("spread is an identity (same plan, no physical planning) on a wide input") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_spread_wide").toString
-    (1 to 2000).map(i => (i.toLong, "x" * 64)).toDF("id", "txt")
-      .coalesce(1).write.mode("overwrite").parquet(dir)
-    // force the byte-stats estimate above parallelism: tiny split targets
-    val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes", "4m")
-    spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
-    spark.conf.set("spark.sql.files.openCostInBytes", "1")
-    try {
-      val df = spark.read.parquet(dir)
-      // estimate = bytes / min(1k, max(1, bytes/4)) >= 4 = parallelism -> no-op
-      assert(Partitioning.spread(df) eq df, "wide input must pass through untouched")
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+    SparkTestBase.withTargetDir("graft_spread_wide") { dir =>
+      (1 to 2000).map(i => (i.toLong, "x" * 64)).toDF("id", "txt")
+        .coalesce(1).write.mode("overwrite").parquet(dir)
+      // force the byte-stats estimate above parallelism: tiny split targets
+      val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes", "128m")
+      val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes", "4m")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "1k")
+      spark.conf.set("spark.sql.files.openCostInBytes", "1")
+      try {
+        val df = spark.read.parquet(dir)
+        // estimate = bytes / min(1k, max(1, bytes/4)) >= 4 = parallelism -> no-op
+        assert(Partitioning.spread(df) eq df, "wide input must pass through untouched")
+      } finally {
+        spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
+        spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
+      }
     }
   }
 

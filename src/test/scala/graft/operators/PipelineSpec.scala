@@ -133,25 +133,27 @@ class PipelineSpec extends AnyFunSuite {
   }
 
   test("extract and load stages round-trip files (delimited in, parquet out)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_pl").toFile
-    val csv = new java.io.File(dir, "in.csv")
-    val pw = new java.io.PrintWriter(csv)
-    pw.println("id,word"); pw.println("1,hello"); pw.println("2,world"); pw.close()
-    val outDir = new java.io.File(dir, "out.parquet").getAbsolutePath
-    val conf =
-      s"""stages = [
-         |  { type = DelimitedExtract, name = extract, inputURI = "${csv.getAbsolutePath}",
-         |    outputView = pl5_csv, header = true, numPartitions = 2 }
-         |  { type = SQLTransform, name = upper,
-         |    sql = "SELECT id, upper(word) AS word FROM pl5_csv", outputView = pl5_up }
-         |  { type = ParquetLoad, name = load, inputView = pl5_up, outputURI = "$outDir" }
-         |]""".stripMargin
-    val Right(Some(_)) = StageConfig.runPipeline(spark, conf, "test"): @unchecked
-    val back = spark.read.parquet(outDir).collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(back === Set(("1", "HELLO"), ("2", "WORLD")))
-    // the extract honored numPartitions (spreads a one-split file)
-    assert(spark.table("pl5_csv").rdd.getNumPartitions === 2)
-    Seq("pl5_csv", "pl5_up").foreach(spark.catalog.dropTempView)
+    SparkTestBase.withTargetDir("graft_pl") { d =>
+      val dir = new java.io.File(d)
+      val csv = new java.io.File(dir, "in.csv")
+      val pw = new java.io.PrintWriter(csv)
+      pw.println("id,word"); pw.println("1,hello"); pw.println("2,world"); pw.close()
+      val outDir = new java.io.File(dir, "out.parquet").getAbsolutePath
+      val conf =
+        s"""stages = [
+           |  { type = DelimitedExtract, name = extract, inputURI = "${csv.getAbsolutePath}",
+           |    outputView = pl5_csv, header = true, numPartitions = 2 }
+           |  { type = SQLTransform, name = upper,
+           |    sql = "SELECT id, upper(word) AS word FROM pl5_csv", outputView = pl5_up }
+           |  { type = ParquetLoad, name = load, inputView = pl5_up, outputURI = "$outDir" }
+           |]""".stripMargin
+      val Right(Some(_)) = StageConfig.runPipeline(spark, conf, "test"): @unchecked
+      val back = spark.read.parquet(outDir).collect().map(r => (r.getString(0), r.getString(1))).toSet
+      assert(back === Set(("1", "HELLO"), ("2", "WORLD")))
+      // the extract honored numPartitions (spreads a one-split file)
+      assert(spark.table("pl5_csv").rdd.getNumPartitions === 2)
+      Seq("pl5_csv", "pl5_up").foreach(spark.catalog.dropTempView)
+    }
   }
 
   test("MetadataTransform adds the mask key on top of a column's other metadata") {
@@ -179,58 +181,61 @@ class PipelineSpec extends AnyFunSuite {
 
   test("rerunning a persist = true pipeline releases the frames it persisted before") {
     graft.functions.MaskUdfs.register(spark, SparkTestBase.fastCodec, SparkTestBase.passphrase)
-    val dir = java.nio.file.Files.createTempDirectory("graft_plr")
-    // two inputs, so the second run's frames are new plans, not cache hits
-    val inputs = Seq("alice", "bob").map { who =>
-      val path = dir.resolve(who).toString
-      spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L, who))),
-        StructType(Seq(StructField("id", LongType), StructField("secret", StringType))))
-        .write.parquet(path)
-      path
+    SparkTestBase.withTargetDir("graft_plr") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      // two inputs, so the second run's frames are new plans, not cache hits
+      val inputs = Seq("alice", "bob").map { who =>
+        val path = dir.resolve(who).toString
+        spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row(1L, who))),
+          StructType(Seq(StructField("id", LongType), StructField("secret", StringType))))
+          .write.parquet(path)
+        path
+      }
+      def run(input: String): Int = {
+        val conf =
+          s"""stages = [
+             |  { type = ParquetExtract, name = extract, inputURI = "$input",
+             |    outputView = plr_raw, persist = true }
+             |  { type = MetadataTransform, name = meta, inputView = plr_raw, outputView = plr_typed,
+             |    treatments { secret = "mask_string(16, true, $${value})" } }
+             |  { type = MaskDataTransform, name = mask, inputView = plr_typed, outputView = plr_masked,
+             |    persist = true }
+             |]""".stripMargin
+        val Right(Some(df)) = StageConfig.runPipeline(spark, conf, "test"): @unchecked
+        assert(df.collect().map(_.getString(1)).forall(_.length === 16))
+        spark.sparkContext.getPersistentRDDs.size
+      }
+      val afterFirst = run(inputs(0))
+      assert(run(inputs(1)) === afterFirst, "the first run's persisted frames must be released")
+      Seq("plr_raw", "plr_masked").foreach(v => spark.table(v).unpersist())
+      Seq("plr_raw", "plr_typed", "plr_masked").foreach(spark.catalog.dropTempView)
     }
-    def run(input: String): Int = {
-      val conf =
-        s"""stages = [
-           |  { type = ParquetExtract, name = extract, inputURI = "$input",
-           |    outputView = plr_raw, persist = true }
-           |  { type = MetadataTransform, name = meta, inputView = plr_raw, outputView = plr_typed,
-           |    treatments { secret = "mask_string(16, true, $${value})" } }
-           |  { type = MaskDataTransform, name = mask, inputView = plr_typed, outputView = plr_masked,
-           |    persist = true }
-           |]""".stripMargin
-      val Right(Some(df)) = StageConfig.runPipeline(spark, conf, "test"): @unchecked
-      assert(df.collect().map(_.getString(1)).forall(_.length === 16))
-      spark.sparkContext.getPersistentRDDs.size
-    }
-    val afterFirst = run(inputs(0))
-    assert(run(inputs(1)) === afterFirst, "the first run's persisted frames must be released")
-    Seq("plr_raw", "plr_masked").foreach(v => spark.table(v).unpersist())
-    Seq("plr_raw", "plr_typed", "plr_masked").foreach(spark.catalog.dropTempView)
   }
 
   test("file entry points: a .conf including a shared stage fragment runs end to end") {
     publishRaw("plf_raw")
-    val dir = java.nio.file.Files.createTempDirectory("graft_plf")
-    val fragment = java.nio.file.Files.writeString(dir.resolve("mask_stage.conf"),
-      """type = MaskDataTransform
-        |name = "shared mask"
-        |inputView = plf_typed
-        |outputView = plf_masked
-        |""".stripMargin)
-    val main = java.nio.file.Files.writeString(dir.resolve("pipeline.conf"),
-      """stages = [
-        |  { type = MetadataTransform, name = meta, inputView = plf_raw, outputView = plf_typed,
-        |    treatments { secret = "mask_string(16, true, ${value})" } }
-        |  { include "mask_stage.conf" }
-        |]""".stripMargin)
-    val Right(stage) = StageConfig.parseHoconFile(fragment.toString): @unchecked
-    assert(stage.name === "shared mask" && stage.outputView === "plf_masked")
-    val Right(stages) = StageConfig.parsePipelineFile(main.toString): @unchecked
-    assert(stages.map(_.stageType) === List("MetadataTransform", "MaskDataTransform"))
-    val Right(Some(df)) = StageConfig.runPipelineFile(spark, main.toString, "test"): @unchecked
-    val masked = df.collect().map(_.getString(1))
-    assert(masked.length === 3 && masked.forall(_.length === 16) && !masked.contains("alice"))
-    Seq("plf_raw", "plf_typed", "plf_masked").foreach(spark.catalog.dropTempView)
-    Seq(fragment, main, dir).foreach(java.nio.file.Files.delete)
+    SparkTestBase.withTargetDir("graft_plf") { d =>
+      val dir = java.nio.file.Paths.get(d)
+      val fragment = java.nio.file.Files.writeString(dir.resolve("mask_stage.conf"),
+        """type = MaskDataTransform
+          |name = "shared mask"
+          |inputView = plf_typed
+          |outputView = plf_masked
+          |""".stripMargin)
+      val main = java.nio.file.Files.writeString(dir.resolve("pipeline.conf"),
+        """stages = [
+          |  { type = MetadataTransform, name = meta, inputView = plf_raw, outputView = plf_typed,
+          |    treatments { secret = "mask_string(16, true, ${value})" } }
+          |  { include "mask_stage.conf" }
+          |]""".stripMargin)
+      val Right(stage) = StageConfig.parseHoconFile(fragment.toString): @unchecked
+      assert(stage.name === "shared mask" && stage.outputView === "plf_masked")
+      val Right(stages) = StageConfig.parsePipelineFile(main.toString): @unchecked
+      assert(stages.map(_.stageType) === List("MetadataTransform", "MaskDataTransform"))
+      val Right(Some(df)) = StageConfig.runPipelineFile(spark, main.toString, "test"): @unchecked
+      val masked = df.collect().map(_.getString(1))
+      assert(masked.length === 3 && masked.forall(_.length === 16) && !masked.contains("alice"))
+      Seq("plf_raw", "plf_typed", "plf_masked").foreach(spark.catalog.dropTempView)
+    }
   }
 }

@@ -41,8 +41,8 @@ class RedirectsSpec extends AnyFunSuite {
       ("https://c.com/a", 301, "/b"),
       ("https://c.com/b", 302, "https://final.com/p"),
       ("https://final.com/p", 200, null)))
-    val got = Redirects.resolveChains(recs).orderBy("url")
-      .collect().map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getBoolean(3)))
+    val got = Redirects.resolveChains(recs)(_.orderBy("url").collect())
+      .map(r => (r.getString(0), r.getString(1), r.getInt(2), r.getBoolean(3)))
     assert(got.toSeq === Seq(
       ("https://c.com/a", "https://final.com/p", 2, true),
       ("https://c.com/b", "https://final.com/p", 1, true)))
@@ -56,16 +56,16 @@ class RedirectsSpec extends AnyFunSuite {
       ("https://d.com/1", 301, "/2"), ("https://d.com/2", 301, "/3"),
       ("https://d.com/3", 301, "/4"), ("https://d.com/4", 301, "/5"),
       ("https://d.com/5", 301, "/6")))
-    val tight = Redirects.resolveChains(recs, maxHops = 4)
-      .where(!col("resolved")).collect()
+    val tight = Redirects.resolveChains(recs, maxHops = 4)(_.where(!col("resolved")).collect())
     // both loop urls + the deep chain's FIRST source exceed 4 hops
     // (/2 reaches /6 at exactly 4 hops and resolves)
     assert(tight.length === 3)
     assert(tight.forall(r => r.isNullAt(1) && r.getInt(2) === 4))
-    val wide = Redirects.resolveChains(recs, maxHops = 8)
-    assert(wide.where(!col("resolved")).count() === 2) // only the loop
-    val deep = wide.where(col("url") === "https://d.com/1").collect()(0)
-    assert(deep.getString(1) === "https://d.com/6" && deep.getInt(2) === 5)
+    Redirects.resolveChains(recs, maxHops = 8) { wide =>
+      assert(wide.where(!col("resolved")).count() === 2) // only the loop
+      val deep = wide.where(col("url") === "https://d.com/1").collect()(0)
+      assert(deep.getString(1) === "https://d.com/6" && deep.getInt(2) === 5)
+    }
   }
 
   test("resolveChains: canonicalization joins messy spellings; drift picks min dst") {
@@ -76,14 +76,14 @@ class RedirectsSpec extends AnyFunSuite {
       // same src seen redirecting two ways -> deterministic min(dst)
       ("https://drift.com/s", 301, "https://t2.com/"),
       ("https://drift.com/s", 301, "https://t1.com/")))
-    val got = Redirects.resolveChains(recs)
-      .collect().map(r => (r.getString(0), r.getString(1))).toMap
+    val got = Redirects.resolveChains(recs)(_.collect())
+      .map(r => (r.getString(0), r.getString(1))).toMap
     assert(got("https://c.com/a") === "https://final.com/p")
     assert(got("https://drift.com/s") === "https://t1.com/")
   }
 
   test("resolveChains: empty edge set yields an empty frame, no job failure") {
     val recs = records(Seq(("https://c.com/a", 200, null)))
-    assert(Redirects.resolveChains(recs).count() === 0)
+    assert(Redirects.resolveChains(recs)(_.count()) === 0)
   }
 }

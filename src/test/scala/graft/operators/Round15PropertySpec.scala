@@ -139,10 +139,9 @@ class Round15PropertySpec extends AnyFunSuite {
     for ((rows, i) <- samples(vecsGen, 4).zipWithIndex) {
       val df = rows.toDF("vec_id", "embedding")
       val cents = Similarity.sampleCentroids(df, "vec_id", "embedding", 3)
-      val dir = java.nio.file.Files.createTempDirectory(s"r15_ivf_$i").toFile
-      try {
-        Similarity.writeIvfIndex(df, "vec_id", "embedding", cents, dir.getAbsolutePath)
-        val (index, stored) = Similarity.readIvfIndex(spark, dir.getAbsolutePath)
+      SparkTestBase.withTargetDir(s"r15_ivf_$i") { dir =>
+        Similarity.writeIvfIndex(df, "vec_id", "embedding", cents, s"$dir/idx")
+        val (index, stored) = Similarity.readIvfIndex(spark, s"$dir/idx")
         assert(stored.zip(cents).forall { case (x, y) => x.sameElements(y) })
         val direct = Similarity.ivfAssign(df, "vec_id", "embedding", cents)
           .where(col("list_id") >= 0)
@@ -151,7 +150,7 @@ class Round15PropertySpec extends AnyFunSuite {
         val reloaded = index.select(col("vec_id"), col("list_id")).collect()
           .map(r => (r.getLong(0), r.getInt(1))).sorted.toSeq
         assert(reloaded === direct, s"case $i: store changed the assignment")
-      } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+      }
     }
   }
 
@@ -185,25 +184,26 @@ class Round15PropertySpec extends AnyFunSuite {
       val docs = rows.toDF("doc_id", "text")
       val d0 = docs.where(col("doc_id") % 2 === 0)
       val d1 = docs.where(col("doc_id") % 2 === 1)
-      val dir = new java.io.File(System.getProperty("java.io.tmpdir"), s"graft_r15p_ii_$i")
-      if (dir.exists()) org.apache.commons.io.FileUtils.deleteDirectory(dir)
-      InvertedIndex.writeIndex(d0, "doc_id", "text", dir.getAbsolutePath, nBuckets = 16)
-      InvertedIndex.addBatch(spark, dir.getAbsolutePath, d1, "doc_id", "text", nBuckets = 16)
-      val merged = spark.read.parquet(dir.getAbsolutePath)
-        .select(col("tok"), col("doc_id"), col("dl"), col("tf"))
-      val rebuilt = InvertedIndex.postings(docs, "doc_id", "text", nBuckets = 16)
-      val mismatch = merged.as("m").join(rebuilt.as("r"), Seq("tok", "doc_id"), "full_outer")
-        .where(!(col("m.tf") <=> col("r.tf")) || !(col("m.dl") <=> col("r.dl"))).count()
-      assert(mismatch === 0L, s"corpus $i: merged store != rebuild")
-      // probe any term present in the corpus: store == direct
-      val term = rebuilt.select(col("tok")).where(length(col("tok")) > 0)
-        .orderBy(col("tok")).limit(1).collect().headOption.map(_.getString(0))
-      term.foreach { t =>
-        val direct = Ranking.bm25TopK(docs, "doc_id", "text", Seq(t), k = 5)
-          .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
-        val stored = InvertedIndex.probeStored(spark, dir.getAbsolutePath, Seq(t), k = 5, nBuckets = 16)
-          .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
-        assert(stored === direct, s"corpus $i term '$t': store probe != direct")
+      SparkTestBase.withTargetDir(s"graft_r15p_ii_$i") { d =>
+        val dir = new java.io.File(d, "store")
+        InvertedIndex.writeIndex(d0, "doc_id", "text", dir.getAbsolutePath, nBuckets = 16)
+        InvertedIndex.addBatch(spark, dir.getAbsolutePath, d1, "doc_id", "text", nBuckets = 16)
+        val merged = spark.read.parquet(dir.getAbsolutePath)
+          .select(col("tok"), col("doc_id"), col("dl"), col("tf"))
+        val rebuilt = InvertedIndex.postings(docs, "doc_id", "text", nBuckets = 16)
+        val mismatch = merged.as("m").join(rebuilt.as("r"), Seq("tok", "doc_id"), "full_outer")
+          .where(!(col("m.tf") <=> col("r.tf")) || !(col("m.dl") <=> col("r.dl"))).count()
+        assert(mismatch === 0L, s"corpus $i: merged store != rebuild")
+        // probe any term present in the corpus: store == direct
+        val term = rebuilt.select(col("tok")).where(length(col("tok")) > 0)
+          .orderBy(col("tok")).limit(1).collect().headOption.map(_.getString(0))
+        term.foreach { t =>
+          val direct = Ranking.bm25TopK(docs, "doc_id", "text", Seq(t), k = 5)
+            .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
+          val stored = InvertedIndex.probeStored(spark, dir.getAbsolutePath, Seq(t), k = 5, nBuckets = 16)
+            .collect().map(r => (r.getLong(0), r.getLong(2))).toSeq
+          assert(stored === direct, s"corpus $i term '$t': store probe != direct")
+        }
       }
     }
   }

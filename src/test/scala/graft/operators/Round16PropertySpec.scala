@@ -165,21 +165,20 @@ class Round16PropertySpec extends AnyFunSuite {
     } yield sigs.zipWithIndex.map { case (s, i) => (i.toLong, s) }
     samples(sigGen, 6).foreach { rows =>
       val df = rows.toDF("doc_id", "sig")
-      val path = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_prop_sigstore_${rows.hashCode}")
-      if (path.exists()) org.apache.commons.io.FileUtils.deleteDirectory(path)
-      Dedup.writeSignatureStore(df.where(col("doc_id") =!= 0L), path.getAbsolutePath)
-      val probe = Dedup.probeSignatureStore(spark, path.getAbsolutePath,
-          df.where(col("doc_id") === 0L))
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      val direct = Dedup.pairsFromSignatures64(df, maxBucket = Int.MaxValue)
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-        .filter(p => p._1 == 0L || p._2 == 0L)
-        .map(p => if (p._1 == 0L) (0L, p._2) else (0L, p._1)).toSet
-      assert(probe.map(p => (p._1, p._2)).map { case (a, b) => (math.min(a, b), math.max(a, b)) } ===
-        direct.map { case (a, b) => (math.min(a, b), math.max(a, b)) },
-        s"probe != restricted pairs for ${rows.take(5)}…")
-      org.apache.commons.io.FileUtils.deleteDirectory(path)
+      graft.SparkTestBase.withTargetDir("graft_prop_sigstore") { dir =>
+        val path = new java.io.File(dir, "store")
+        Dedup.writeSignatureStore(df.where(col("doc_id") =!= 0L), path.getAbsolutePath)
+        val probe = Dedup.probeSignatureStore(spark, path.getAbsolutePath,
+            df.where(col("doc_id") === 0L))
+          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        val direct = Dedup.pairsFromSignatures64(df, maxBucket = Int.MaxValue)
+          .collect().map(r => (r.getLong(0), r.getLong(1)))
+          .filter(p => p._1 == 0L || p._2 == 0L)
+          .map(p => if (p._1 == 0L) (0L, p._2) else (0L, p._1)).toSet
+        assert(probe.map(p => (p._1, p._2)).map { case (a, b) => (math.min(a, b), math.max(a, b)) } ===
+          direct.map { case (a, b) => (math.min(a, b), math.max(a, b)) },
+          s"probe != restricted pairs for ${rows.take(5)}…")
+      }
     }
   }
 

@@ -136,10 +136,10 @@ class SimilaritySpec extends AnyFunSuite {
     }.flatten
     val noise = (1000L until 1200L).map(i => i -> randUnit(64))
     val df = vecs((planted ++ noise): _*)
-    val out = Similarity.cosinePairsLsh(df, "vec_id", "embedding", 0.95)
-    val plan = out.queryExecution.executedPlan.toString
+    val (plan, got) = Similarity.cosinePairsLsh(df, "vec_id", "embedding", 0.95)(out =>
+      (out.queryExecution.executedPlan.toString,
+        out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet))
     assert(!plan.contains("CartesianProduct"))
-    val got = out.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val expected = (0L until 20L).map(i => (i * 2, i * 2 + 1)).toSet
     val recall = expected.count(got.contains).toDouble / expected.size
     assert(recall >= 0.9, s"LSH recall $recall below 0.9; got ${got.size} pairs")
@@ -191,9 +191,9 @@ class SimilaritySpec extends AnyFunSuite {
   test("cosinePairsLsh: empty frame and null-first embedding return empty, not NPE") {
     import spark.implicits._
     val empty = Seq.empty[(Long, Array[Float])].toDF("vec_id", "embedding")
-    assert(Similarity.cosinePairsLsh(empty, "vec_id", "embedding", 0.9).count() === 0)
+    assert(Similarity.cosinePairsLsh(empty, "vec_id", "embedding", 0.9)(_.count()) === 0)
     val allNull = Seq((1L, Option.empty[Array[Float]]), (2L, None)).toDF("vec_id", "embedding")
-    assert(Similarity.cosinePairsLsh(allNull, "vec_id", "embedding", 0.9).count() === 0)
+    assert(Similarity.cosinePairsLsh(allNull, "vec_id", "embedding", 0.9)(_.count()) === 0)
   }
 
   test("sampleCentroids skips null embeddings instead of NPE-ing the driver") {
@@ -309,8 +309,8 @@ class SimilaritySpec extends AnyFunSuite {
   test("knnJoin at full probe equals the brute-force kNN graph exactly") {
     val rows = (0L until 60L).map(i => i -> randUnit(16))
     val got = Similarity.knnJoin(vecs(rows: _*), "vec_id", "embedding", k = 3,
-        nLists = 4, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
+        nLists = 4, nProbe = 4)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
       .sortBy(t => (t._1, t._2)).toSeq
     assert(got === bruteKnn(rows, 3).sortBy(t => (t._1, t._2)))
   }
@@ -321,11 +321,12 @@ class SimilaritySpec extends AnyFunSuite {
     val centers = (0 until 4).map(_ => randUnit(16))
     val rows = (0L until 120L).map(i => i -> jitter(centers((i % 4).toInt), 0.05f))
     val df = vecs(rows: _*)
-    val exact = Similarity.knnJoin(df, "vec_id", "embedding", k = 3, nLists = 4, nProbe = 4)
-      .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    val exact = Similarity.knnJoin(df, "vec_id", "embedding", k = 3, nLists = 4, nProbe = 4)(
+        _.collect())
+      .map(r => (r.getLong(0), r.getLong(2))).toSet
     val pruned = Similarity.knnJoin(df, "vec_id", "embedding", k = 3, nLists = 4, nProbe = 1,
-        centroids = Some(centers.map(_.map(_.toDouble)).toArray))
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
+        centroids = Some(centers.map(_.map(_.toDouble)).toArray))(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     assert(pruned.forall { case (v, _, n) => v != n }, "self edge")
     assert(pruned.groupBy(_._1).forall(_._2.length <= 3), "more than k per vector")
     val recall = pruned.map(t => (t._1, t._3)).count(exact.contains).toDouble / exact.size
@@ -371,8 +372,8 @@ class SimilaritySpec extends AnyFunSuite {
     val batch = (0L until 10L).map(i => i -> randUnit(16))
     val corpusDf = vecs(corpus: _*)
     val cents = Similarity.sampleCentroids(corpusDf, "vec_id", "embedding", 4)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_store_spec").toFile
-    try {
+    SparkTestBase.withTargetDir("ivf_store_spec") { d =>
+      val dir = new java.io.File(d)
       val path = new java.io.File(dir, "idx").getAbsolutePath
       Similarity.writeIvfIndex(corpusDf, "vec_id", "embedding", cents, path)
       // the sidecar reloads the quantizer bit-for-bit, in list order
@@ -401,14 +402,14 @@ class SimilaritySpec extends AnyFunSuite {
           foreign, k = 2, nProbe = 4).collect()
       }
       assert(err.getMessage.contains("different quantizer"))
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("knnJoin maxBucket guard throws before a quadratic bucket job") {
     val rows = (0L until 50L).map(i => i -> randUnit(8))
     val err = intercept[IllegalArgumentException] {
       Similarity.knnJoin(vecs(rows: _*), "vec_id", "embedding", k = 2,
-        nLists = 2, nProbe = 1, maxBucket = 5L)
+        nLists = 2, nProbe = 1, maxBucket = 5L)(_.collect())
     }
     assert(err.getMessage.contains("maxBucket"))
   }
@@ -430,8 +431,8 @@ class SimilaritySpec extends AnyFunSuite {
     val tgtRows = base.zipWithIndex.map { case (v, i) => (i * 2 + 11).toLong -> jitter(v, 0.02f) } :+
       (99L -> hub)
     val out = Similarity.marginMine(
-      vecs(srcRows: _*), vecs(tgtRows: _*), "vec_id", "embedding", k = 3)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toMap
+      vecs(srcRows: _*), vecs(tgtRows: _*), "vec_id", "embedding", k = 3)(_.collect())
+      .map(r => (r.getLong(0), r.getLong(1))).toMap
     (0 until 6).foreach { i =>
       assert(out((i * 2).toLong) === (i * 2 + 11).toLong,
         s"src ${i * 2} should mine its planted pair, got ${out((i * 2).toLong)}")
@@ -441,7 +442,7 @@ class SimilaritySpec extends AnyFunSuite {
   test("marginMine: bounded-src guard throws on an oversized source side") {
     val big = vecs((0L until 50L).map(i => i -> randUnit(8)): _*)
     val err = intercept[IllegalArgumentException] {
-      Similarity.marginMine(big, big, "vec_id", "embedding", k = 2, maxSrc = 10)
+      Similarity.marginMine(big, big, "vec_id", "embedding", k = 2, maxSrc = 10)(_.collect())
     }
     assert(err.getMessage.contains("maxSrc"))
   }

@@ -18,8 +18,7 @@ class SpanDedupSpec extends AnyFunSuite {
   }
 
   private def run(df: org.apache.spark.sql.DataFrame, L: Int = 4) =
-    SpanDedup.removeDuplicatedSpans(df, "doc_id", "text", L)
-      .collect()
+    SpanDedup.removeDuplicatedSpans(df, "doc_id", "text", L)(_.collect())
       .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3), r.getString(4))))
       .toMap
 
@@ -85,8 +84,8 @@ class SpanDedupSpec extends AnyFunSuite {
     val t = "alpha beta gamma delta"
     val df = Seq((Option(1L), Option(s"$t x")), (Option.empty[Long], Option(s"$t y")))
       .toDF("doc_id", "text")
-    val out = SpanDedup.removeDuplicatedSpans(df, "doc_id", "text", 4)
-      .collect().map(_.getLong(0)).toSeq
+    val out = SpanDedup.removeDuplicatedSpans(df, "doc_id", "text", 4)(_.collect())
+      .map(_.getLong(0)).toSeq
     assert(out === Seq(1L)) // null-id row absent, not passed through uncut
   }
 }

@@ -417,8 +417,8 @@ class TextAnalysisSpec extends AnyFunSuite {
       (3L, "p q r s"),  // both grams unique corpus-wide
       (4L, "x y")       // too short: no grams, absent
     ).toDF("doc_id", "text")
-    val out = TextAnalysis.ngramNovelty(docs, "doc_id", "text", n = 3)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val out = TextAnalysis.ngramNovelty(docs, "doc_id", "text", n = 3)(_.collect())
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(out(1L) === ((2L, 1L, 5000L)))
     assert(out(2L) === ((2L, 1L, 5000L)))
     assert(out(3L) === ((2L, 2L, 10000L)))
@@ -430,8 +430,8 @@ class TextAnalysisSpec extends AnyFunSuite {
     // the same doc id twice with the same text: df of its gram must stay
     // 1 (a self-duplicate is not "another document"), novelty 10000
     val docs = Seq((1L, "a b c"), (1L, "a b c"), (2L, "x y z w")).toDF("doc_id", "text")
-    val out = TextAnalysis.ngramNovelty(docs, "doc_id", "text", n = 3)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
+    val out = TextAnalysis.ngramNovelty(docs, "doc_id", "text", n = 3)(_.collect())
+      .map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2), r.getLong(3)))).toMap
     assert(out(1L) === ((1L, 1L, 10000L)))
     assert(out(2L) === ((2L, 2L, 10000L)))
   }
@@ -440,8 +440,8 @@ class TextAnalysisSpec extends AnyFunSuite {
     import spark.implicits._
     // "m n o" occurs twice in doc 1 and nowhere else: df must be 1
     val docs = Seq((1L, "m n o z m n o"), (2L, "j k l w")).toDF("doc_id", "text")
-    val out = TextAnalysis.ngramNovelty(docs, "doc_id", "text", n = 3)
-      .collect().map(r => r.getLong(0) -> r.getLong(3)).toMap
+    val out = TextAnalysis.ngramNovelty(docs, "doc_id", "text", n = 3)(_.collect())
+      .map(r => r.getLong(0) -> r.getLong(3)).toMap
     assert(out(1L) === 10000L)
     assert(out(2L) === 10000L)
   }

@@ -92,8 +92,9 @@ class VersioningSpec extends AnyFunSuite {
     val v2 = Seq((1L, "same"), (2L, "newer"), (4L, "fresh")).toDF("doc_id", "text")
     def score(df: DataFrame): DataFrame =
       df.select(col("doc_id"), length(col("text")).cast("long").as("n"))
-    val out = Versioning.incrementalRecompute(score(v1), v1, v2, "doc_id", Seq("text"), score)
-      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
+    val out = Versioning.incrementalRecompute(score(v1), v1, v2, "doc_id", Seq("text"), score)(
+        _.collect())
+      .map(r => r.getLong(0) -> (r.getLong(1), r.getString(2))).toMap
     // same values as score(v2), removed doc absent
     assert(out.view.mapValues(_._1).toMap === Map(1L -> 4L, 2L -> 5L, 4L -> 5L))
     // unchanged carried from the cache, churn recomputed
@@ -214,8 +215,8 @@ class VersioningSpec extends AnyFunSuite {
     val v2 = Seq((Option(1L), "a"), (Option.empty[Long], "new")).toDF("id", "t")
     val prior = Seq((Option(1L), "a", 1L), (Option.empty[Long], "old", 3L)).toDF("id", "t", "score")
     def score(df: org.apache.spark.sql.DataFrame) = df.withColumn("score", length(col("t")).cast("long"))
-    val out = Versioning.incrementalRecompute(prior, v1, v2, "id", Seq("t"), score)
-      .collect().map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
+    val out = Versioning.incrementalRecompute(prior, v1, v2, "id", Seq("t"), score)(_.collect())
+      .map(r => (if (r.isNullAt(0)) None else Some(r.getLong(0)),
         r.getString(1), r.getLong(2), r.getString(3))).toSet
     // equals score(v2): the null-id row is recomputed from v2, never carried stale
     assert(out === Set((Some(1L), "a", 1L, "carried"), (None, "new", 3L, "recomputed")))

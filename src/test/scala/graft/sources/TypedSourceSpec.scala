@@ -57,37 +57,41 @@ class TypedSourceSpec extends AnyFunSuite {
   }
 
   test("readCsv: delimited extract + typing in one step") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_csv").toFile
-    val f = new java.io.File(dir, "data.csv")
-    java.nio.file.Files.writeString(f.toPath,
-      "first_name,registered,created_at,balance,visits,active\n" +
-        "  Avery ,18/12/2016,2016-12-18 21:46:54, 96.37,42,true\n" +
-        "NULL,,,,7,TRUE\n")
-    val out = TypedSource.readCsv(spark, f.getAbsolutePath, specs)
-    val rows = out.orderBy(org.apache.spark.sql.functions.col("visits")).collect()
-    assert(rows.length === 2)
-    assert(rows(1).getString(0) === "Avery")
-    assert(rows(0).isNullAt(0))
-    assert(out.schema("first_name").metadata.contains("mask"))
+    SparkTestBase.withTargetDir("graft_csv") { d =>
+      val dir = new java.io.File(d)
+      val f = new java.io.File(dir, "data.csv")
+      java.nio.file.Files.writeString(f.toPath,
+        "first_name,registered,created_at,balance,visits,active\n" +
+          "  Avery ,18/12/2016,2016-12-18 21:46:54, 96.37,42,true\n" +
+          "NULL,,,,7,TRUE\n")
+      val out = TypedSource.readCsv(spark, f.getAbsolutePath, specs)
+      val rows = out.orderBy(org.apache.spark.sql.functions.col("visits")).collect()
+      assert(rows.length === 2)
+      assert(rows(1).getString(0) === "Avery")
+      assert(rows(0).isNullAt(0))
+      assert(out.schema("first_name").metadata.contains("mask"))
+    }
   }
 
   test("readJson: json-lines extract + typing, same rules as delimited") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_json").toFile
-    val f = new java.io.File(dir, "data.json")
-    java.nio.file.Files.writeString(f.toPath,
-      """{"first_name": "  Avery ", "registered": "18/12/2016", "created_at": "2016-12-18 21:46:54", "balance": "96.37", "visits": "42", "active": "true"}
-        |{"first_name": "NULL", "registered": "", "created_at": null, "balance": "1e3", "visits": "7", "active": "TRUE"}
-        |""".stripMargin)
-    val out = TypedSource.readJson(spark, f.getAbsolutePath, specs)
-    assert(out.schema.map(_.dataType) === Seq(StringType, DateType, TimestampType,
-      DecimalType(12, 2), IntegerType, BooleanType))
-    val rows = out.orderBy(org.apache.spark.sql.functions.col("visits")).collect()
-    assert(rows.length === 2)
-    assert(rows(1).getString(0) === "Avery") // trimmed
-    assert(rows(1).getAs[java.sql.Date](1).toString === "2016-12-18")
-    assert(rows(0).isNullAt(0), "'NULL' marker applies to JSON too")
-    assert(rows(0).getAs[java.math.BigDecimal](3).toString === "1000.00") // scientific -> decimal
-    assert(out.schema("first_name").metadata.contains("mask"))
+    SparkTestBase.withTargetDir("graft_json") { d =>
+      val dir = new java.io.File(d)
+      val f = new java.io.File(dir, "data.json")
+      java.nio.file.Files.writeString(f.toPath,
+        """{"first_name": "  Avery ", "registered": "18/12/2016", "created_at": "2016-12-18 21:46:54", "balance": "96.37", "visits": "42", "active": "true"}
+          |{"first_name": "NULL", "registered": "", "created_at": null, "balance": "1e3", "visits": "7", "active": "TRUE"}
+          |""".stripMargin)
+      val out = TypedSource.readJson(spark, f.getAbsolutePath, specs)
+      assert(out.schema.map(_.dataType) === Seq(StringType, DateType, TimestampType,
+        DecimalType(12, 2), IntegerType, BooleanType))
+      val rows = out.orderBy(org.apache.spark.sql.functions.col("visits")).collect()
+      assert(rows.length === 2)
+      assert(rows(1).getString(0) === "Avery") // trimmed
+      assert(rows(1).getAs[java.sql.Date](1).toString === "2016-12-18")
+      assert(rows(0).isNullAt(0), "'NULL' marker applies to JSON too")
+      assert(rows(0).getAs[java.math.BigDecimal](3).toString === "1000.00") // scientific -> decimal
+      assert(out.schema("first_name").metadata.contains("mask"))
+    }
   }
 
   test("multi-formatter fallback and malformed values survive ANSI mode") {

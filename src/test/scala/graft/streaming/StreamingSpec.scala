@@ -124,8 +124,8 @@ class StreamingSpec extends AnyFunSuite {
       val batchTruth = Dedup.incrementalNearDuplicates(corpus,
         Seq(100L -> (base + " x"), 101L -> "fresh new content matching nothing at all",
           102L -> (base + " yz")).toDF("doc_id", "text"),
-        "doc_id", "text", threshold = 0.8)
-        .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+        "doc_id", "text", threshold = 0.8)(_.collect())
+        .map(r => (r.getLong(0), r.getLong(1))).toSet
       assert(got === batchTruth)
       assert(got.map(_._1) === Set(100L, 102L))
     } finally q.stop()
@@ -408,8 +408,8 @@ class StreamingSpec extends AnyFunSuite {
     val corpus = (100L until 160L).map(i => (i, vec(i))).toDF("vec_id", "embedding")
     val batch = (0L until 10L).map(i => (i, vec(i * 13 + 3))).toSeq
     val cents = Similarity.sampleCentroids(corpus, "vec_id", "embedding", 4)
-    val dir = java.nio.file.Files.createTempDirectory("knn_stream_spec").toFile
-    try {
+    graft.SparkTestBase.withTargetDir("knn_stream_spec") { d =>
+      val dir = new java.io.File(d)
       val store = new java.io.File(dir, "store").getAbsolutePath
       val sink = new java.io.File(dir, "sink").getAbsolutePath
       Similarity.writeIvfIndex(corpus, "vec_id", "embedding", cents, store)
@@ -442,7 +442,7 @@ class StreamingSpec extends AnyFunSuite {
         .sorted.toSeq
       assert(replayed === streamed,
         "a replayed micro-batch duplicated edges in the sink")
-    } finally org.apache.commons.io.FileUtils.deleteDirectory(dir)
+    }
   }
 
   test("the masking projection passes streaming frames through (reference parity)") {

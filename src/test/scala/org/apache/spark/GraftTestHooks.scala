@@ -8,19 +8,17 @@ package org.apache.spark
   * JVM onto them. */
 object GraftTestHooks {
 
-  /** Runs `body` with a fresh temp dir as the context's checkpoint dir,
-    * then unsets the dir and deletes it. `body` receives the temp dir
-    * (Spark writes under a random subdirectory of it). */
-  def withCheckpointDir[T](sc: SparkContext)(body: java.io.File => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt-").toFile
-    try {
-      sc.setCheckpointDir(dir.getAbsolutePath)
-      body(dir)
-    } finally {
-      sc.checkpointDir = None
-      org.apache.spark.util.Utils.deleteRecursively(dir)
+  /** Runs `body` with a fresh dir under `target/` as the context's
+    * checkpoint dir, then unsets the dir and deletes it. `body` receives
+    * the dir (Spark writes under a random subdirectory of it). */
+  def withCheckpointDir[T](sc: SparkContext)(body: java.io.File => T): T =
+    graft.SparkTestBase.withTargetDir("graft-ckpt-") { path =>
+      val dir = new java.io.File(path).getAbsoluteFile
+      try {
+        sc.setCheckpointDir(dir.getAbsolutePath)
+        body(dir)
+      } finally sc.checkpointDir = None
     }
-  }
 
   /** Regular files anywhere under `dir`. */
   def filesUnder(dir: java.io.File): Long = {
